@@ -21,8 +21,7 @@ default keeps tests fast.
 
 Deployments flip the mode session-wide with
 ``spark.graft.durableCheckpoint=true`` instead of threading a flag
-through every operator (the round-5 ``spark.dedupClusters.
-durableCheckpoint`` key is honored as an alias).
+through every operator.
 """
 
 from __future__ import annotations
@@ -30,25 +29,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 DURABLE_CONF = "spark.graft.durableCheckpoint"
-# round-5 introduced the switch on dedup_clusters only, under this key;
-# kept as an alias so existing deployments don't silently lose the mode
-LEGACY_DURABLE_CONF = "spark.dedupClusters.durableCheckpoint"
 
 
 def materialize(df: DataFrame, durable: bool | None = None) -> DataFrame:
     """Materialize ``df`` and truncate its lineage.
 
-    ``durable=None`` (the default) reads the session confs above
+    ``durable=None`` (the default) reads the session conf above
     (``"true"``/``"false"``, absent = false). ``durable=True`` requires
     ``spark.sparkContext.setCheckpointDir(<fault-tolerant dir>)`` and
     refuses loudly without it — a silent localCheckpoint fallback would
     defeat the reason a deployment set the conf.
     """
     if durable is None:
-        conf = df.sparkSession.conf
         durable = (
-            conf.get(DURABLE_CONF, conf.get(LEGACY_DURABLE_CONF, "false"))
-            or "false"
+            df.sparkSession.conf.get(DURABLE_CONF, "false") or "false"
         ).lower() == "true"
     if durable:
         sc = df.sparkSession.sparkContext

@@ -637,8 +637,7 @@ def dedup_clusters(
     ``_materialize_rounds``): False = executor-local blocks (fast,
     dies with an executor), True = reliable ``checkpoint()`` to the
     fault-tolerant checkpoint dir (the cluster posture). Default reads
-    the ``spark.graft.durableCheckpoint`` session conf (or its
-    ``spark.dedupClusters.durableCheckpoint`` alias; ``"true"``/
+    the ``spark.graft.durableCheckpoint`` session conf (``"true"``/
     ``"false"``, absent = false) so deployments flip the mode — for
     EVERY materializing operator, not just this one — without threading
     a flag through call sites.

@@ -22,10 +22,13 @@ answer-preserving by construction: bucket ids prune, never score.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
+from ..memo import build_once
 from ..sinks.warehouse import ParquetWarehouse
 
 
@@ -34,35 +37,25 @@ def postings_table(table: str, gen: int = 0) -> str:
     return f"{table}__postings" if not gen else f"{table}__postings_g{gen}"
 
 
-# (root, meta_table, committed version) -> (n_buckets, postings_gen).
-# The key's version component comes from the warehouse's _MANIFEST
-# pointer — a plain filesystem read, no Spark job — and every write
-# path (ingest, tombstone fold, rebuild publish) commits a new version,
-# so a hit can never serve stale meta. This removes the repeated
-# one-row-scan Spark job every bm25_query/trgm_query paid during plan
-# construction (the round-9 VERDICT watch item; same memoization
-# discipline as operators/bloom.py's per-(sf_dir, mtime) bitmaps).
-_META_CACHE: dict[tuple[str, str, str], tuple[int, int]] = {}
-
-
 def read_meta(wh: ParquetWarehouse, meta_table: str) -> tuple[int, int]:
     """(n_buckets, postings_gen) from the one-row ``__meta`` table.
     ``postings_gen`` is absent on pre-rebuild indexes — read as 0.
-    Memoized per committed version (see ``_META_CACHE``)."""
+
+    Memoized per committed version directory: every write path (ingest,
+    tombstone fold, rebuild publish) commits a new one, so a hit never
+    serves stale meta and plan construction skips the one-row scan
+    job."""
+
+    def _scan() -> tuple[int, int]:
+        row = wh.read(meta_table).collect()[0].asDict()
+        return int(row["n_buckets"]), int(row.get("postings_gen") or 0)
+
     version = wh._latest_version(meta_table)
     if version is None:
         # no committed snapshot — let wh.read raise its own loud error
-        row = wh.read(meta_table).collect()[0].asDict()
-        return int(row["n_buckets"]), int(row.get("postings_gen") or 0)
-    key = (wh.root, meta_table, version)
-    hit = _META_CACHE.get(key)
-    if hit is None:
-        if len(_META_CACHE) > 512:  # bounded across long test sessions
-            _META_CACHE.clear()
-        row = wh.read(meta_table).collect()[0].asDict()
-        hit = (int(row["n_buckets"]), int(row.get("postings_gen") or 0))
-        _META_CACHE[key] = hit
-    return hit
+        return _scan()
+    vdir = os.path.join(wh.table_path(meta_table), version)
+    return build_once(("index_meta",), (vdir,), _scan)
 
 
 def sweep_generations(

@@ -7,8 +7,6 @@ LSH step itself (not just the verified output) is correctness-gated.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +28,7 @@ from ..functions.text import (
     tokens,
 )
 from ..functions.quality_model import quality_scores
+from ..memo import build_once
 from ..operators.asof import asof_join
 from ..operators.chunking import chunk_documents
 from ..operators.contamination import (
@@ -880,55 +879,31 @@ FROM bsym_{n_merges}"""
 
 
 _BPE_MERGES = 6
-_BPE_RULES_MEMO: dict = {}
-_MG_LAWS_MEMO: dict = {}
-_LM_STATE_MEMO: dict = {}
-
-# Build-once memos are keyed on (sf_dir, mtime), so a long-lived
-# session that appends to a source table strands one entry per
-# superseded version. Bound every memo-put (round-11): 8 generations
-# is far beyond what any bench or driver run cycles through, and
-# evicting a warehouse handle only drops the in-process pointer — the
-# scratch reaper owns the on-disk lifetime, and a later miss simply
-# rebuilds.
-_MEMO_CAP = 8
-
-
-def _memo_put(memo: dict, key, value) -> None:
-    memo[key] = value
-    while len(memo) > _MEMO_CAP:
-        memo.pop(next(iter(memo)))
 
 
 def _lm_state_warehouse(spark, sf_dir: str, docs):
     """Ingest the two doc_id-median-split batches into the persisted LM
-    state warehouse, memoized per process per (sf_dir, documents mtime)
-    — the _ann_incremental_index treatment (round-10 opt): persisted
-    index/model state is a build-once artifact whose ingest cost real
-    deployments amortize across every scoring pass, so repeat
-    executions in one session score from the stored epochs (2.2 s of
-    re-ingest off every steady build) while every fresh process (the
-    driver's correctness run, each check_oracle invocation) still
-    executes the full two-batch ingest chain the lm_state arm gates."""
+    state warehouse, built once per documents parquet state: persisted
+    model state is an artifact whose ingest cost real deployments
+    amortize across every scoring pass, so repeat executions in one
+    session score from the stored epochs while every fresh process (the
+    driver's correctness run, each check_oracle invocation) still runs
+    the full two-batch ingest chain the lm_state arm gates."""
     import os
 
     from ..operators.lm_state import ingest_lm_batch
 
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    wh = _LM_STATE_MEMO.get(key)
-    if wh is not None and os.path.isdir(wh.root):
-        # mtime refresh: scratch_warehouse's 30-min age-gated reaper in
-        # a CONCURRENT process judges liveness by dir mtime (see
-        # _ann_incremental_index)
-        os.utime(wh.root, None)
+    def _build():
+        wh = scratch_warehouse(spark, "lm_state_rows")
+        lm_docs = docs.select("doc_id", "text")
+        lm_half = lm_docs.agg(F.expr("percentile(doc_id, 0.5D)")).first()[0]
+        ingest_lm_batch(wh, lm_docs.filter(F.col("doc_id") <= lm_half))
+        ingest_lm_batch(wh, lm_docs.filter(F.col("doc_id") > lm_half))
         return wh
-    wh = scratch_warehouse(spark, "lm_state_rows")
-    lm_docs = docs.select("doc_id", "text")
-    lm_half = lm_docs.agg(F.expr("percentile(doc_id, 0.5D)")).first()[0]
-    ingest_lm_batch(wh, lm_docs.filter(F.col("doc_id") <= lm_half))
-    ingest_lm_batch(wh, lm_docs.filter(F.col("doc_id") > lm_half))
-    _memo_put(_LM_STATE_MEMO, key, wh)
-    return wh
+
+    return build_once(
+        ("lm_state",), (os.path.join(sf_dir, "documents.parquet"),), _build
+    )
 
 
 @register(
@@ -1213,23 +1188,16 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(tokens(F.lower(F.col("text")))).alias("token")
     ).filter(F.col("token") != "")
     _MG_K = 64
-    _memo_key = (
-        sf_dir,
-        _os.path.getmtime(_os.path.join(sf_dir, "documents.parquet")),
-    )
+    docs_path = _os.path.join(sf_dir, "documents.parquet")
 
     def _mg_flags_for(counts):
         # the MG sketch run + its law evaluation is a build-once
-        # verification artifact, memoized per (sf_dir, mtime) like the
-        # classifier's train_laws — every fresh process still runs the
-        # full sketch pass it gates, repeat executions (bench steady
-        # runs) skip the per-execution corpus re-sketch. Laws (heavy.py
+        # verification artifact like the classifier's train_laws: every
+        # fresh process still runs the full sketch pass it gates, repeat
+        # executions skip the corpus re-sketch. Laws (heavy.py
         # docstring): superset (every exact heavy hitter survives the
         # merge), bounds (lo <= true <= lo + total decrement budget),
         # bounded per-partition summary size.
-        mg_flags = _MG_LAWS_MEMO.get(_memo_key)
-        if mg_flags is not None:
-            return mg_flags
         total_row = counts.agg(F.sum("n").alias("t"))
         exact_hh = (
             counts.crossJoin(F.broadcast(total_row))
@@ -1242,8 +1210,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The four law probes are mutually independent driver jobs over
         # the materialized summaries/counts (bad_bounds additionally
         # waits on the 1-row budget read), so they overlap from a small
-        # pool (guide §2.6) instead of serializing four stage floors
-        # (round-11 opt).
+        # pool (guide §2.6) instead of serializing four stage floors.
         def _bad_bounds():
             total_d = budget.first().total_d
             return (
@@ -1272,24 +1239,24 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             missing = missing_f.result()
             bad_bounds = bad_f.result()
             oversized = over_f.result()
-        mg_flags = (
+        return (
             1.0 if missing == 0 else 0.0,
             1.0 if bad_bounds == 0 else 0.0,
             1.0 if oversized == 0 else 0.0,
         )
-        _memo_put(_MG_LAWS_MEMO, _memo_key, mg_flags)
-        return mg_flags
 
     def _counts_chain():
         counts = materialize(counts_plan)
-        return counts, _mg_flags_for(counts)
+        return counts, build_once(
+            ("mg_laws",), (docs_path,), lambda: _mg_flags_for(counts)
+        )
 
     def _bpe_rules():
-        rules = _BPE_RULES_MEMO.get(_memo_key)
-        if rules is None:
-            rules = train_bpe(docs, n_merges=_BPE_MERGES)
-            _memo_put(_BPE_RULES_MEMO, _memo_key, rules)
-        return rules
+        return build_once(
+            ("bpe_rules",),
+            (docs_path,),
+            lambda: train_bpe(docs, n_merges=_BPE_MERGES),
+        )
 
     # The suite's build-once artifacts are mutually independent eager
     # chains — (a) the materialized wordcount + the MG laws that consume
@@ -1417,8 +1384,8 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wordcount above already holds (same lower+split tokenization,
     # same empty filter, same groupBy-count — word_counts docstring),
     # so the encode arm reads the checkpoint instead of re-running a
-    # corpus tokenize+agg pass inside every execution (guide §6,
-    # round-11 opt; `counts` becomes the eighth consumer).
+    # corpus tokenize+agg pass inside every execution (guide §6;
+    # `counts` becomes the eighth consumer).
     encoded = bpe_segment(
         counts.select(F.col("token").alias("word"), "n"), rules
     )
@@ -1523,7 +1490,6 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRAIN_LAWS_MEMO: dict = {}
 _TRAIN_LAW_NAMES = (
     "init_loss_ln2",
     "loss_monotone",
@@ -1549,37 +1515,36 @@ def _classifier_train_laws(spark, sf_dir: str, docs) -> list[tuple[str, float]]:
         train_quality_classifier,
     )
 
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    cached = _TRAIN_LAWS_MEMO.get(key)
-    if cached is not None:
-        return cached
-    label = F.array_contains(
-        F.split(F.lower(F.col("text")), " "), "slow"
-    ).cast("double")
-    d = docs.select("doc_id", "text", label.alias("label"))
-    stats: dict = {}
-    weights = train_quality_classifier(
-        d, "label", n_iters=8, lr=16.0, stats=stats
+    def _build():
+        label = F.array_contains(
+            F.split(F.lower(F.col("text")), " "), "slow"
+        ).cast("double")
+        d = docs.select("doc_id", "text", label.alias("label"))
+        stats: dict = {}
+        weights = train_quality_classifier(
+            d, "label", n_iters=8, lr=16.0, stats=stats
+        )
+        losses = stats["loss"]
+        sep = (
+            score_with_weights(d, weights)
+            .join(d.select("doc_id", "label"), "doc_id")
+            .groupBy("label")
+            .agg(F.avg("qscore").alias("mp"))
+            .collect()
+        )
+        mp = {r.label: r.mp for r in sep}
+        tol = 1.0 + 1e-9
+        flags = [
+            float(abs(losses[0] - math.log(2.0)) <= 1e-12),
+            float(all(b <= a * tol for a, b in zip(losses, losses[1:]))),
+            float(losses[-1] <= 0.8 * losses[0]),
+            float(mp.get(1.0, 0.0) - mp.get(0.0, 1.0) >= 0.1),
+        ]
+        return list(zip(_TRAIN_LAW_NAMES, flags))
+
+    return build_once(
+        ("train_laws",), (os.path.join(sf_dir, "documents.parquet"),), _build
     )
-    losses = stats["loss"]
-    sep = (
-        score_with_weights(d, weights)
-        .join(d.select("doc_id", "label"), "doc_id")
-        .groupBy("label")
-        .agg(F.avg("qscore").alias("mp"))
-        .collect()
-    )
-    mp = {r.label: r.mp for r in sep}
-    tol = 1.0 + 1e-9
-    flags = [
-        float(abs(losses[0] - math.log(2.0)) <= 1e-12),
-        float(all(b <= a * tol for a, b in zip(losses, losses[1:]))),
-        float(losses[-1] <= 0.8 * losses[0]),
-        float(mp.get(1.0, 0.0) - mp.get(0.0, 1.0) >= 0.1),
-    ]
-    out = list(zip(_TRAIN_LAW_NAMES, flags))
-    _memo_put(_TRAIN_LAWS_MEMO, key, out)
-    return out
 
 
 # calendar_features was consolidated into p1_rename_project (its date-
@@ -2854,100 +2819,72 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Exact brute-force top-10 cosine replay (the 'brute' arm of
-# ann_topk_suite): corpus joined against the 5 query vectors,
-# deterministic (cos, id) ranking.
-_ANN_INDEX_MEMO: dict = {}
-
-# One lock PER persisted-index family: the suite rows overlap their
-# independent eager build chains from a small driver thread pool
-# (guide §2.6 — concurrent jobs backfill executor tails), so each
-# check-then-build memo must not race two threads into building the
-# same index twice — but DIFFERENT indexes (bm25 vs trgm inside
-# q_bm25_topk's pool) are independent artifacts whose cold builds
-# should overlap, not serialize on a shared mutex (round-11 opt: the
-# shared lock put both ~6 s builds on the cold critical path).
-_ANN_INDEX_LOCK = threading.Lock()
-_BM25_INDEX_LOCK = threading.Lock()
-_TRGM_INDEX_LOCK = threading.Lock()
-_ANN_TRAINED_MEMO: dict = {}
-
-
 def _ann_trained_laws(spark, sf_dir: str, emb, queries, brute) -> list[float]:
     """Run the scale-path k-means training loop and evaluate its law
-    flags (see q_ann_suite's docstring); memoized per process per
-    (sf_dir, embeddings mtime) — flags are plain floats, so unlike the
-    index memo there is no on-disk artifact to race over."""
+    flags (see q_ann_suite's docstring), built once per embeddings
+    parquet state."""
     import os
-
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    cached = _ANN_TRAINED_MEMO.get(key)
-    if cached is not None:
-        return cached
 
     from ..materialize import materialize
 
-    seed = emb.filter(F.col("vec_id") % 125 == 0).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    # i0/i1 ride the two training iterations' own shuffles
-    # (kmeans_refine stats) — only the POST-training inertia needs a
-    # standalone assignment probe
-    s_train: dict = {}
-    c2 = kmeans_refine(emb, seed, n_iters=2, stats=s_train)
-    i0, i1 = s_train["inertia_in"]
-    i2 = kmeans_inertia(emb, c2)
-    trained = materialize(ivf_topk(emb, queries, k=10, centroids=c2))
+    def _build():
+        seed = emb.filter(F.col("vec_id") % 125 == 0).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+        )
+        # i0/i1 ride the two training iterations' own shuffles
+        # (kmeans_refine stats) — only the POST-training inertia needs a
+        # standalone assignment probe
+        s_train: dict = {}
+        c2 = kmeans_refine(emb, seed, n_iters=2, stats=s_train)
+        i0, i1 = s_train["inertia_in"]
+        i2 = kmeans_inertia(emb, c2)
+        trained = materialize(ivf_topk(emb, queries, k=10, centroids=c2))
 
-    n_lists = seed.count()
-    nprobe = 4
-    exact_keys = brute.select("query_id", "vec_id")
-    n_exact = exact_keys.count()
-    # ONE per-query aggregation feeds recall AND the shape law (it was
-    # a semi-join count + two shape counts = three driver jobs)
-    per_q = (
-        trained.join(
-            exact_keys.withColumn("_hit", F.lit(1)),
-            on=["query_id", "vec_id"],
-            how="left",
+        n_lists = seed.count()
+        nprobe = 4
+        exact_keys = brute.select("query_id", "vec_id")
+        n_exact = exact_keys.count()
+        # ONE per-query aggregation feeds recall AND the shape law
+        per_q = (
+            trained.join(
+                exact_keys.withColumn("_hit", F.lit(1)),
+                on=["query_id", "vec_id"],
+                how="left",
+            )
+            .groupBy("query_id")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.min("rank").alias("lo"),
+                F.max("rank").alias("hi"),
+                F.sum("_hit").alias("hits"),
+            )
+            .collect()
         )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("rank").alias("lo"),
-            F.max("rank").alias("hi"),
-            F.sum("_hit").alias("hits"),
-        )
-        .collect()
+        n_hit = sum(r.hits or 0 for r in per_q)
+        recall = n_hit / n_exact if n_exact else 0.0
+        recall_floor = 0.5 * min(1.0, nprobe / n_lists)
+        shape_bad = sum(1 for r in per_q if r.n != 10 or r.lo != 1 or r.hi != 10)
+        n_queries = queries.count()
+        tol = 1.0 + 1e-9
+        return [
+            float(i1 <= i0 * tol),
+            float(i2 <= i1 * tol),
+            float(recall >= recall_floor),
+            float(shape_bad == 0 and len(per_q) == n_queries),
+        ]
+
+    return build_once(
+        ("ann_trained_laws",), (os.path.join(sf_dir, "embeddings.parquet"),), _build
     )
-    n_hit = sum(r.hits or 0 for r in per_q)
-    recall = n_hit / n_exact if n_exact else 0.0
-    recall_floor = 0.5 * min(1.0, nprobe / n_lists)
-    shape_bad = sum(1 for r in per_q if r.n != 10 or r.lo != 1 or r.hi != 10)
-    n_queries = queries.count()
-    tol = 1.0 + 1e-9
-    flags = [
-        float(i1 <= i0 * tol),
-        float(i2 <= i1 * tol),
-        float(recall >= recall_floor),
-        float(shape_bad == 0 and len(per_q) == n_queries),
-    ]
-    _memo_put(_ANN_TRAINED_MEMO, key, flags)
-    return flags
 
 
 def _ann_incremental_index(spark, sf_dir: str, emb):
     """Build+ingest the persisted IVF index for the 'incremental' arm,
-    memoized per process per (sf_dir, embeddings mtime). The build is
-    the amortized part of an index's lifecycle; memoizing it in-process
-    keeps the chain fully exercised once per process (the driver's
-    correctness pass, every check_oracle run) while repeat executions
-    in one session probe the stored lists like a real deployment."""
-    with _ANN_INDEX_LOCK:
-        return _ann_incremental_index_impl(spark, sf_dir, emb)
-
-
-def _ann_incremental_index_impl(spark, sf_dir: str, emb):
+    built once per embeddings parquet state. The build is the amortized
+    part of an index's lifecycle; building it once per process keeps
+    the chain fully exercised (the driver's correctness pass, every
+    check_oracle run) while repeat executions in one session probe the
+    stored lists like a real deployment."""
     import os
 
     from ..operators.incremental_ann import (
@@ -2956,41 +2893,38 @@ def _ann_incremental_index_impl(spark, sf_dir: str, emb):
         ingest_vectors,
     )
 
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet")))
-    wh = _ANN_INDEX_MEMO.get(key)
-    if wh is not None and os.path.isdir(wh.root):
-        # refresh the dir's mtime on every reuse: scratch_warehouse's
-        # 30-minute age-gated reaper (in ANY concurrent process) judges
-        # liveness by mtime, which is otherwise frozen at build time —
-        # an index a long bench session is actively probing must not
-        # age into reap eligibility under a concurrently-running
-        # pytest/check_oracle
-        os.utime(wh.root, None)
+    def _build():
+        wh = scratch_warehouse(spark, "ann_incremental_rows")
+        build_ann_index(
+            wh,
+            emb.filter(F.col("vec_id") % 2 == 0),
+            table="ann_idx",
+            centroid_stride=100,
+            refine_iters=0,
+        )
+        ingest_vectors(wh, emb.filter(F.col("vec_id") % 2 == 1), table="ann_idx")
+        # delete wave: tombstone the ids-ending-in-3 slice (never
+        # centroid seeds, so the frozen quantizer is untouched); every
+        # subsequent probe anti-joins them out, which the oracle replays
+        # as a candidate-side exclusion (_IVF_INCREMENTAL_SQL's
+        # cand_filter)
+        delete_vectors(
+            wh,
+            emb.filter(
+                F.col("vec_id") % _ANN_DELETED_MOD == _ANN_DELETED_REM
+            ).select("vec_id"),
+            table="ann_idx",
+        )
         return wh
-    wh = scratch_warehouse(spark, "ann_incremental_rows")
-    build_ann_index(
-        wh,
-        emb.filter(F.col("vec_id") % 2 == 0),
-        table="ann_idx",
-        centroid_stride=100,
-        refine_iters=0,
+
+    return build_once(
+        ("ann_index",), (os.path.join(sf_dir, "embeddings.parquet"),), _build
     )
-    ingest_vectors(wh, emb.filter(F.col("vec_id") % 2 == 1), table="ann_idx")
-    # round-9 delete wave: tombstone the ids-ending-in-3 slice (never
-    # centroid seeds, so the frozen quantizer is untouched); every
-    # subsequent probe anti-joins them out, which the oracle replays as
-    # a candidate-side exclusion (_IVF_INCREMENTAL_SQL's cand_filter)
-    delete_vectors(
-        wh,
-        emb.filter(
-            F.col("vec_id") % _ANN_DELETED_MOD == _ANN_DELETED_REM
-        ).select("vec_id"),
-        table="ann_idx",
-    )
-    _memo_put(_ANN_INDEX_MEMO, key, wh)
-    return wh
 
 
+# Exact brute-force top-10 cosine replay (the 'brute' arm of
+# ann_topk_suite): corpus joined against the 5 query vectors,
+# deterministic (cos, id) ranking.
 _BRUTE_SQL = f"""
 WITH pairs AS (
     SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
@@ -4417,10 +4351,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # They overlap from a 3-thread pool (guide §2.6 — Spark runs
     # driver-submitted jobs concurrently, FIFO backfills the tail)
     # instead of serializing ~6 driver jobs; plans and values are
-    # identical, only the eager-build wall shrinks. The index memos are
-    # lock-guarded per family (_BM25_INDEX_LOCK / _TRGM_INDEX_LOCK), so
-    # chains (a) and (b) sharing _bm25_index cannot race a double build
-    # while the bm25 and trgm builds still overlap each other.
+    # identical, only the eager-build wall shrinks. build_once locks per
+    # index, so chains (a) and (b) sharing _bm25_index cannot race a
+    # double build while the bm25 and trgm builds still overlap.
     patterns = docs.filter(F.col("doc_id").isin(1, 7, 13, 19)).select(
         F.col("doc_id").alias("pattern_id"),
         F.substring("text", 11, 12).alias("pattern"),
@@ -4432,7 +4365,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialized: the lexical ranking feeds BOTH its own arm and
         # the rrf fusion AND the prf feedback pick — without this the
         # whole bm25 pipeline replays per consumer. The 1-row corpus
-        # stats are NOT materialized separately (round-10 opt): inside
+        # stats are NOT materialized separately: inside
         # this one job the stats scan runs as an independent stage
         # CONCURRENTLY with the doc-terms stages, where a standalone
         # eager materialize serialized a whole extra job of it on the
@@ -4530,19 +4463,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_INDEX_MEMO: dict = {}
-_TRGM_INDEX_MEMO: dict = {}
-
-
 def _trgm_index(spark, sf_dir: str, corpus):
     """Build (even ids) + ingest (odd ids) the persisted trigram index,
-    memoized per process per (sf_dir, documents mtime) — the
-    _bm25_index discipline verbatim."""
-    with _TRGM_INDEX_LOCK:
-        return _trgm_index_impl(spark, sf_dir, corpus)
-
-
-def _trgm_index_impl(spark, sf_dir: str, corpus):
+    built once per documents parquet state like ``_bm25_index``."""
     import os
 
     from ..operators.incremental_trgm import (
@@ -4551,51 +4474,43 @@ def _trgm_index_impl(spark, sf_dir: str, corpus):
         ingest_docs,
     )
 
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    wh = _TRGM_INDEX_MEMO.get(key)
-    if wh is not None and os.path.isdir(wh.root):
-        os.utime(wh.root, None)
+    def _build():
+        wh = scratch_warehouse(spark, "trgm_index_rows")
+        build_trgm_index(
+            wh, corpus.filter(F.col("doc_id") % 2 == 0), table="trgm_idx"
+        )
+        ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="trgm_idx")
+        # delete wave: tombstone the corpus ids ending in 3 — every
+        # probe anti-joins them out, replayed in the oracle as a
+        # survivor filter on the full contains() scan
+        delete_docs(
+            wh,
+            corpus.filter(F.col("doc_id") % 10 == 3).select("doc_id"),
+            table="trgm_idx",
+        )
         return wh
-    wh = scratch_warehouse(spark, "trgm_index_rows")
-    build_trgm_index(
-        wh, corpus.filter(F.col("doc_id") % 2 == 0), table="trgm_idx"
+
+    return build_once(
+        ("trgm_index",), (os.path.join(sf_dir, "documents.parquet"),), _build
     )
-    ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="trgm_idx")
-    # round-9 delete wave: tombstone the corpus ids ending in 3 — every
-    # probe anti-joins them out, replayed in the oracle as a survivor
-    # filter on the full contains() scan
-    delete_docs(
-        wh,
-        corpus.filter(F.col("doc_id") % 10 == 3).select("doc_id"),
-        table="trgm_idx",
-    )
-    _memo_put(_TRGM_INDEX_MEMO, key, wh)
-    return wh
 
 
 def _bm25_index(spark, sf_dir: str, corpus):
     """Build (even ids) + ingest (odd ids) the persisted BM25 index,
-    memoized per process per (sf_dir, documents mtime) — the
-    _ann_incremental_index discipline, including the mtime refresh
-    that keeps the concurrent scratch reaper off a live index."""
-    with _BM25_INDEX_LOCK:
-        return _bm25_index_impl(spark, sf_dir, corpus)
-
-
-def _bm25_index_impl(spark, sf_dir: str, corpus):
+    built once per documents parquet state like
+    ``_ann_incremental_index``."""
     import os
 
     from ..operators.incremental_retrieval import build_bm25_index, ingest_docs
 
-    key = (sf_dir, os.path.getmtime(os.path.join(sf_dir, "documents.parquet")))
-    wh = _BM25_INDEX_MEMO.get(key)
-    if wh is not None and os.path.isdir(wh.root):
-        os.utime(wh.root, None)
+    def _build():
+        wh = scratch_warehouse(spark, "bm25_index_rows")
+        build_bm25_index(
+            wh, corpus.filter(F.col("doc_id") % 2 == 0), table="bm25_idx"
+        )
+        ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="bm25_idx")
         return wh
-    wh = scratch_warehouse(spark, "bm25_index_rows")
-    build_bm25_index(
-        wh, corpus.filter(F.col("doc_id") % 2 == 0), table="bm25_idx"
+
+    return build_once(
+        ("bm25_index",), (os.path.join(sf_dir, "documents.parquet"),), _build
     )
-    ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="bm25_idx")
-    _memo_put(_BM25_INDEX_MEMO, key, wh)
-    return wh

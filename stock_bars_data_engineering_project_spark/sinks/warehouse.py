@@ -43,12 +43,13 @@ import contextlib
 import os
 import shutil
 import tempfile
-import threading
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..memo import build_once
 
 _POINTER = "_LATEST"
 _MANIFEST = "_MANIFEST"
@@ -56,47 +57,17 @@ _LAYOUT = "_LAYOUT"
 _STATS = "_STATS"
 _CLUSTER = "_CLUSTER"
 
-# Version dirs are immutable once written (module contract above), so
-# the spark.read.parquet of one — file listing + parquet schema
-# inference, ~70 ms per member — is memoizable per process (round-10
-# opt: every index probe re-paid it per member per plan build). Keyed
-# on (session, absolute path, dir mtime): the mtime guards the one
-# path that can legitimately reuse a version path with new content
-# (drop_table + recreate restarting the version counter), because
-# replacing a version dir replaces its direct entries and bumps its
-# mtime. DataFrames are immutable plans, so sharing one object across
-# consumers is safe.
-# Bounded LRU (round-11): mtime-keyed entries go stale when a table is
-# appended to, so a long-lived session would otherwise leak one
-# DataFrame plan per superseded version; 512 plan objects (a few KB
-# each) comfortably covers every live version dir of every table in a
-# run while capping the leak.
-_VERSION_READ_CACHE: dict = {}
-_VERSION_READ_CACHE_CAP = 512
-_VERSION_READ_CACHE_LOCK = threading.Lock()
-
 
 def _read_version_dir(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        mt = os.path.getmtime(path)
-    except OSError:
-        # path not yet visible (or raced away) — fall through to the
-        # plain read so the caller surfaces the real error
-        return spark.read.parquet(path)
-    key = (id(spark), os.path.abspath(path), mt)
-    with _VERSION_READ_CACHE_LOCK:
-        df = _VERSION_READ_CACHE.pop(key, None)
-        if df is not None:
-            # re-insert at the tail: plain dicts iterate in insertion
-            # order, so the head is always the least recently used
-            _VERSION_READ_CACHE[key] = df
-            return df
-    df = spark.read.parquet(path)
-    with _VERSION_READ_CACHE_LOCK:
-        _VERSION_READ_CACHE[key] = df
-        while len(_VERSION_READ_CACHE) > _VERSION_READ_CACHE_CAP:
-            _VERSION_READ_CACHE.pop(next(iter(_VERSION_READ_CACHE)))
-    return df
+    # Version dirs are immutable once written (module contract above),
+    # so the read of one (file listing + parquet schema inference) is
+    # memoizable per session. The path's stat in the key guards the one
+    # path that can reuse a version dir with new content: drop_table +
+    # recreate restarts the version counter. DataFrames are immutable
+    # plans, so consumers can share one.
+    return build_once(
+        ("version_read", id(spark)), (path,), lambda: spark.read.parquet(path)
+    )
 
 
 def _local_path(p: str) -> str:

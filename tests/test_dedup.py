@@ -185,6 +185,7 @@ def test_dedup_clusters_durable_checkpoint_mode(spark):
     without a fault-tolerant checkpoint dir, (b) produce identical
     clusters to the local mode once one is set, (c) be selectable via
     the session conf instead of the parameter."""
+    from stock_bars_data_engineering_project_spark.materialize import DURABLE_CONF
     from stock_bars_data_engineering_project_spark.operators.dedup import dedup_clusters
 
     pairs = spark.createDataFrame(
@@ -216,12 +217,12 @@ def test_dedup_clusters_durable_checkpoint_mode(spark):
     got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs, durable=True).collect()}
     assert got == want
 
-    spark.conf.set("spark.dedupClusters.durableCheckpoint", "true")
+    spark.conf.set(DURABLE_CONF, "true")
     try:
         got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs).collect()}
         assert got == want
     finally:
-        spark.conf.unset("spark.dedupClusters.durableCheckpoint")
+        spark.conf.unset(DURABLE_CONF)
 
 
 def test_dedup_clusters_raises_when_unconverged(spark):

@@ -808,7 +808,9 @@ def test_compact_reapplies_zorder_layout(spark, tmp_path):
     )
     wh.overwrite(df, "t", zorder_by=("x", "y"), n_files=16)
     wh.append(df.withColumn("x", F.col("x")), "t")  # unclustered member
-    wh.compact("t", target_file_bytes=1 << 15)
+    # ~32 KB of input: a target well below it keeps the file count off
+    # the ceil(total / target) boundary whatever the exact byte total
+    wh.compact("t", target_file_bytes=1 << 13)
     n = len(wh.data_files("t"))
     assert n > 1
     # second-dimension pruning survives the compaction (z-order restored)

@@ -1,5 +1,5 @@
-"""Shared cluster-safe materialization switch: conf resolution (new key
-+ round-5 alias), refusal without a checkpoint dir, value preservation."""
+"""Shared cluster-safe materialization switch: conf resolution,
+refusal without a checkpoint dir, value preservation."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 
 from stock_bars_data_engineering_project_spark.materialize import (
     DURABLE_CONF,
-    LEGACY_DURABLE_CONF,
     materialize,
 )
 
@@ -37,7 +36,7 @@ def test_durable_param(spark):
     _durable_behaves(spark, _df(spark))
 
 
-@pytest.mark.parametrize("key", [DURABLE_CONF, LEGACY_DURABLE_CONF])
+@pytest.mark.parametrize("key", [DURABLE_CONF])
 def test_durable_via_session_conf(spark, key):
     spark.conf.set(key, "true")
     try:

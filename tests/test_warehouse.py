@@ -438,42 +438,3 @@ def test_merge_compact_overwrite_inherit_layout(spark, wh):
     vdir = os.path.join(wh.table_path("p"), latest)
     assert not any(d.startswith("dt=") for d in os.listdir(vdir))
     assert wh._layout("p", latest) == ()
-
-
-def test_version_read_cache_is_bounded_lru(spark, tmp_path, monkeypatch):
-    """The per-process version-dir plan cache must not grow without
-    bound: with the cap at 2, reading three distinct dirs evicts the
-    least recently used one, and a hit refreshes recency."""
-    from stock_bars_data_engineering_project_spark.sinks import warehouse as W
-
-    paths = []
-    for i in range(3):
-        p = str(tmp_path / f"v{i}")
-        spark.range(i + 1).write.parquet(p)
-        paths.append(p)
-    monkeypatch.setattr(W, "_VERSION_READ_CACHE", {})
-    monkeypatch.setattr(W, "_VERSION_READ_CACHE_CAP", 2)
-    W._read_version_dir(spark, paths[0])
-    W._read_version_dir(spark, paths[1])
-    assert len(W._VERSION_READ_CACHE) == 2
-    # hit on paths[0] moves it to most-recent; paths[1] becomes LRU
-    d0 = W._read_version_dir(spark, paths[0])
-    assert W._read_version_dir(spark, paths[0]) is d0
-    W._read_version_dir(spark, paths[2])
-    assert len(W._VERSION_READ_CACHE) == 2
-    cached = {k[1] for k in W._VERSION_READ_CACHE}
-    import os
-
-    assert os.path.abspath(paths[1]) not in cached
-    assert {os.path.abspath(paths[0]), os.path.abspath(paths[2])} == cached
-
-
-def test_build_memo_put_is_bounded():
-    from stock_bars_data_engineering_project_spark.plans import extensions as X
-
-    memo: dict = {}
-    for i in range(X._MEMO_CAP + 3):
-        X._memo_put(memo, ("k", i), i)
-    assert len(memo) == X._MEMO_CAP
-    # oldest insertions evicted first
-    assert ("k", 0) not in memo and ("k", X._MEMO_CAP + 2) in memo
