@@ -147,6 +147,14 @@ def main() -> None:
         "queries": times,
         "sf": sf,
     }
+    # the cores this run had, so a reading is never compared across
+    # machines by accident (get_spark returns the benched session)
+    from stock_bars_data_engineering_project_spark.session import get_spark
+
+    out["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    out["default_parallelism"] = (
+        get_spark("bench").sparkContext.defaultParallelism
+    )
     if steady:
         out["value_steady"] = round(sum(steady_times.values()), 3)
         out["queries_steady"] = steady_times

@@ -24,20 +24,14 @@ disk, not just nprobe/K of the rows.
 Drift contract: centroids are frozen between rebuilds, so heavy
 ingestion skews list occupancy and degrades recall gradually (the
 standard IVF operational trade — FAISS retrains on the same signal).
-``list_occupancy`` exposes the skew metric; rebuild with
-``build_ann_index`` when its max/mean ratio drifts past policy.
+``index_occupancy`` exposes the skew metric; :func:`maintain_ann_index`
+rebuilds when its max/mean ratio drifts past policy.
 
-Deletes are TOMBSTONES — the exact mutation contract of the BM25 index
-(``incremental_retrieval.delete_docs``): :func:`delete_vectors` appends
-ids to ``<table>__deleted`` and every query anti-joins them out, so a
-delete is O(ids) however large the lists (physically rewriting would
-touch the cid partition each vector lives in — for a retraction stream
-from the dedup pipeline, most partitions most days).
-:func:`apply_deletes` folds the tombstones into the files at
-compaction, preserving the cid hive layout. ``vec_id`` identifies
-immutable content: a tombstoned id stays dead to both queries and
-re-ingest until apply_deletes physically drops it; delete-then-reinsert
-of CHANGED content is apply_deletes-then-ingest.
+Deletes, the layout-preserving tombstone fold and the occupancy metric
+are the shared index lifecycle (``operators/index_maint.py``, layout
+:data:`~.index_maint.IVF`: ids in ``vec_id``, lists partitioned by
+``cid``); centroids are untouched by a fold and retrained only by
+:func:`maintain_ann_index`.
 """
 
 from __future__ import annotations
@@ -47,19 +41,20 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import round_half_up
 from ..functions.vectors import cosine
-from ..materialize import materialize
 from ..sinks.warehouse import ParquetWarehouse
-from .index_maint import log_maintenance
+from .index_maint import (
+    IVF,
+    apply_deletes,
+    index_occupancy,
+    log_maintenance,
+    not_deleted,
+)
 from .similarity import ivf_assign, kmeans_refine, l2sq
 from .skew import salted_topk
 
 
 def _centroids_table(table: str) -> str:
     return f"{table}__centroids"
-
-
-def _deleted_table(table: str) -> str:
-    return f"{table}__deleted"
 
 
 def build_ann_index(
@@ -85,20 +80,10 @@ def build_ann_index(
     # K files suffice (the small-files problem that makes list scans
     # metadata-bound at scale)
     assigned = ivf_assign(corpus, cent, vec_col, id_col).repartition("cid")
-    # kmeans_refine returns a materialized centroid table, so the two
-    # writes are independent jobs and overlap (guide §2.6). The
-    # centroids→lists window was never crash-atomic (see
-    # maintain_ann_index's docstring) — a crashed build is rebuilt from
-    # scratch either way.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cent = pool.submit(wh.overwrite, cent, _centroids_table(table))
-        f_lists = pool.submit(
-            wh.overwrite, assigned, table, partition_by=("cid",)
-        )
-        f_cent.result()
-        f_lists.result()
+    # a crashed build (centroids written, lists not) is rebuilt from
+    # scratch: the centroids→lists window was never crash-atomic
+    wh.overwrite(cent, _centroids_table(table))
+    wh.overwrite(assigned, table, partition_by=("cid",))
 
 
 def ingest_vectors(
@@ -115,11 +100,10 @@ def ingest_vectors(
     partitions — idempotent."""
     cent = wh.read(_centroids_table(table))
     # tombstoned ids are dead to re-ingest until apply_deletes drops
-    # them physically (the shared immutable-id contract with the BM25
-    # index) — without this anti-join the merge would rewrite a row the
-    # query path anti-joins out anyway, paying a partition rewrite for
-    # a vector that stays invisible
-    live_batch = _not_deleted(wh, table, batch, id_col)
+    # them physically — without this anti-join the merge would rewrite
+    # a row the query path anti-joins out anyway, paying a partition
+    # rewrite for a vector that stays invisible
+    live_batch = not_deleted(wh, table, batch, id_col)
     # same list co-location as the build write (see build_ann_index)
     assigned = ivf_assign(live_batch, cent, vec_col, id_col).repartition("cid")
     wh.merge(assigned, table, keys=("cid", "vec_id"), partition_by=("cid",))
@@ -164,8 +148,8 @@ def ann_query(
     )
     probed_cids = [r["cid"] for r in qc.select("cid").distinct().collect()]
     # tombstones anti-join out on the already-pruned probe slice, not
-    # the whole index (the bm25_query discipline)
-    index = _not_deleted(
+    # the whole index
+    index = not_deleted(
         wh, table, wh.read(table).filter(F.col("cid").isin(probed_cids)), "vec_id"
     )
     cand = index.join(F.broadcast(qc), "cid").filter(
@@ -176,90 +160,6 @@ def ann_query(
     )
     return salted_topk(scored, ("query_id",), "cos", "vec_id", k).select(
         "query_id", "vec_id", "cos", "rank"
-    )
-
-
-def delete_vectors(
-    wh: ParquetWarehouse, vec_ids, table: str = "ann_index"
-) -> None:
-    """Delete vectors from the index as TOMBSTONES — the BM25 index's
-    ``delete_docs`` contract verbatim (incremental_retrieval.py): ids
-    append to ``__deleted`` and every query anti-joins them out, so a
-    delete is O(ids) however large the lists. Idempotent by
-    construction (duplicate tombstones change nothing). ``vec_ids`` is
-    a 1-column DataFrame or an iterable of ids. A tombstoned id stays
-    dead to both queries and re-ingest until :func:`apply_deletes`
-    physically drops it — delete-then-reinsert of CHANGED content is
-    apply_deletes-then-ingest (the shared immutable-id contract)."""
-    if not isinstance(vec_ids, DataFrame):
-        spark = wh.read(_centroids_table(table)).sparkSession
-        vec_ids = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], "vec_id long"
-        )
-    ids = vec_ids.select(F.col(vec_ids.columns[0]).alias("vec_id")).filter(
-        F.when(
-            F.col("vec_id").isNull(),
-            F.raise_error(F.lit("ann index: NULL vec_id tombstone")).cast(
-                "boolean"
-            ),
-        ).otherwise(F.lit(True))
-    )
-    if wh.exists(_deleted_table(table)):
-        wh.append(ids, _deleted_table(table))
-    else:
-        wh.overwrite(ids, _deleted_table(table))
-
-
-def _not_deleted(
-    wh: ParquetWarehouse, table: str, df: DataFrame, id_col: str
-) -> DataFrame:
-    """Anti-join the tombstone set out of any frame carrying vector ids."""
-    if not wh.exists(_deleted_table(table)):
-        return df
-    dead = wh.read(_deleted_table(table)).select("vec_id").distinct()
-    return df.join(
-        dead, df[id_col] == dead["vec_id"], "left_anti"
-    )
-
-
-def apply_deletes(wh: ParquetWarehouse, table: str = "ann_index") -> None:
-    """Compaction: physically drop tombstoned vectors from the inverted
-    lists, preserving the cid hive layout (so probe-time static
-    partition pruning survives the rewrite), then clear the tombstones.
-    Afterwards a previously deleted id may be re-ingested as a new
-    vector. Centroids are untouched — they were trained on the corpus
-    as it stood at build time, and retraining is ``build_ann_index``'s
-    job when ``list_occupancy`` says so."""
-    if not wh.exists(_deleted_table(table)):
-        return
-    live = materialize(
-        _not_deleted(wh, table, wh.read(table), "vec_id").repartition("cid")
-    )
-    wh.overwrite(live, table, partition_by=("cid",))
-    wh.drop(_deleted_table(table))
-
-
-def list_occupancy(
-    wh: ParquetWarehouse, table: str = "ann_index", live: bool = False
-) -> DataFrame:
-    """Per-list row counts plus the global max/mean skew ratio — the
-    rebuild trigger metric. One partial-aggregating pass over the
-    (skinny) index. ``live=True`` anti-joins tombstones first: the
-    recall-drift policy should see the lists queries actually probe,
-    while the default physical count is the storage/compaction view
-    (a heavily tombstoned list is a reason to run apply_deletes, not
-    to retrain)."""
-    index = wh.read(table)
-    if live:
-        index = _not_deleted(wh, table, index, "vec_id")
-    counts = index.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vecs"))
-    stats = counts.agg(
-        F.max("n_vecs").alias("_mx"), F.avg("n_vecs").alias("_mean")
-    )
-    return counts.crossJoin(F.broadcast(stats)).select(
-        "cid",
-        "n_vecs",
-        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
     )
 
 
@@ -276,10 +176,10 @@ def maintain_ann_index(
     operational loop FAISS users run by hand (the drift contract in
     the module docstring), made explicit:
 
-    1. fold tombstones into the files (:func:`apply_deletes` — always,
+    1. fold tombstones into the files (``apply_deletes`` — always,
        it is a no-op without tombstones and a heavily tombstoned index
        both wastes probe work and skews the occupancy signal);
-    2. read the LIVE skew ratio (:func:`list_occupancy`);
+    2. read the skew ratio (``index_occupancy``);
     3. if it exceeds ``max_skew``, RETRAIN: rebuild the quantizer and
        re-assign the surviving corpus (:func:`build_ann_index` on the
        stored vectors — the one corpus-sized pass, paid only when
@@ -290,8 +190,10 @@ def maintain_ann_index(
     (apply_deletes is); a rebuild changes list membership (new
     centroids) but not the exact-cosine ranking within probed lists —
     recall is what it repairs."""
-    apply_deletes(wh, table)
-    occ = list_occupancy(wh, table).select("skew_ratio").limit(1).collect()
+    apply_deletes(wh, table, IVF)
+    occ = (
+        index_occupancy(wh, table, IVF).select("skew_ratio").limit(1).collect()
+    )
     skew = float(occ[0]["skew_ratio"]) if occ else 0.0
     rebuilt = False
     if skew > max_skew:

@@ -8,42 +8,20 @@ against a 100 TB corpus. This module is the lexical analog of
 new document batches fold in at O(batch) cost, and a query touches
 only the postings partitions its own tokens hash into.
 
-Warehouse tables (``table`` = the index name):
-
-- ``<table>__postings`` — (bkt, token, doc_id, tf, dl), the inverted
-  index, hive-partitioned by ``bkt`` = the shared 48-bit md5 bucket of
-  the token (``n_buckets`` dirs). A query's probe set is the bucket
-  ids of ITS OWN tokens — a driver-side literal IN list bounded by the
-  query vocabulary, so the scan is statically partition-pruned the
-  same way ann_query prunes cid lists. ``dl`` is denormalized onto
-  each posting so scoring never joins a doc-stats table.
-- ``<table>__docs`` — (doc_id, dl): membership (the replay-idempotence
-  anti-join target, the same at-least-once discipline as
-  incremental_dedup's ingest) plus exact per-doc lengths.
-- ``<table>__meta`` — ONE row (n_buckets, postings_gen): the hashing
-  config plus the postings GENERATION pointer. n_buckets is immutable
-  between rebuilds; :func:`maintain_bm25_index`'s re-bucketing rebuild
-  writes the next generation's postings cold and publishes both fields
-  in one atomic snapshot swap (the pointer protocol that makes the
-  rebuild crash-atomic). Corpus scalars (n_docs, sum_dl, n_dl) are
-  DERIVED from
-  ``__docs`` at query time with one skinny partial-agg — deriving
-  rather than incrementally maintaining them removes the crash window
-  in which a half-committed ingest would leave scalar state
-  permanently out of step with the tables it summarizes. dl is
-  integral, so the sums are exact and avgdl = sum_dl / n_dl is one
-  double division however the corpus was batched (``bm25_topk``'s
-  F.avg over the same rows agrees to the ulp absorbed by the ranking
-  round).
-
-Crash consistency: an ingest commits postings first, then ``__docs``.
-A crash between the two leaves orphan postings whose doc is not yet a
-member — redelivery (anti-join sees no membership) appends the same
-postings again and then the docs rows; the query path deduplicates
-postings on their full row (tf/dl are deterministic per doc, so the
-duplicates are identical), which heals the overlap exactly. NULL doc
-ids are rejected loudly — they can neither be replay-deduped nor
-counted.
+Tables, build/ingest/delete/maintenance and the crash contract are the
+shared lexical lifecycle (``operators/index_maint.py``); this module
+supplies the BM25 batch transforms (:data:`BM25`) and the query. The
+postings carry (token, doc_id, tf, dl): ``dl`` is denormalized onto
+each posting so scoring never joins a doc-stats table. A query's probe
+set is the bucket ids of ITS OWN tokens, a driver-side literal IN list
+bounded by the query vocabulary, so the scan is statically
+partition-pruned. The membership carries (doc_id, dl). Corpus scalars
+(n_docs, avgdl) are DERIVED from the live membership at query time with
+one skinny partial-agg, never maintained incrementally, so no crash
+window can leave them out of step with the tables they summarize. dl is
+integral, so the sums are exact and avgdl = sum_dl / n_dl is one double
+division however the corpus was batched (``bm25_topk``'s F.avg over the
+same rows agrees to the ulp absorbed by the ranking round).
 
 Equivalence contract: tf/dl/df are per-doc or per-token integer counts
 — batch-invariant — so ``bm25_query`` over a built+ingested index
@@ -58,39 +36,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
-from ..materialize import materialize
 from ..sinks.warehouse import ParquetWarehouse
-from .index_maint import maintain_bucketed_index, postings_table, read_meta
+from .index_maint import (
+    LexicalFamily,
+    docs_table,
+    not_deleted,
+    postings_table,
+    read_meta,
+)
 from .retrieval import _term_counts, score_topk
-
-
-def _postings_table(table: str, gen: int = 0) -> str:
-    """Generation-addressed postings name — the atomic-rebuild pointer
-    protocol shared with the trigram index (operators/index_maint.py,
-    where the addressing, policy loop, and orphan sweep live once)."""
-    return postings_table(table, gen)
-
-
-def _meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
-    """(n_buckets, postings_gen) — index_maint.read_meta on this
-    index's ``__meta`` table."""
-    return read_meta(wh, _meta_table(table))
-
-
-def _docs_table(table: str) -> str:
-    return f"{table}__docs"
-
-
-def _meta_table(table: str) -> str:
-    return f"{table}__meta"
 
 
 def _batch_postings(
     batch: DataFrame, n_buckets: int, id_col: str, text_col: str
 ) -> DataFrame:
     # repartition by bkt before the hive-partitioned write: without it
-    # every shuffle partition writes a sliver into every bucket dir —
-    # the same small-files discipline as build_ann_index
+    # every shuffle partition writes a sliver into every bucket dir
     return (
         _term_counts(batch, id_col, text_col)
         .select(
@@ -107,110 +68,17 @@ def _batch_postings(
 def _batch_doc_stats(
     batch: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
+    # zero-token docs have no postings but are still members, so the
+    # membership cannot be derived from the postings
     from ..functions.text import tokens
 
     dl = F.size(
         F.filter(tokens(F.lower(F.col(text_col))), lambda t: t != F.lit(""))
     )
-    # loud NULL-id guard (md5_bucket48's documented caller obligation,
-    # and the replay anti-join can never match a NULL): a filter-borne
-    # raise_error survives any downstream projection
-    guarded = batch.filter(
-        F.when(
-            F.col(id_col).isNull(),
-            F.raise_error(
-                F.lit(
-                    f"bm25 index: NULL {id_col} — ids must be non-NULL for "
-                    "replay-idempotent ingest"
-                )
-            ).cast("boolean"),
-        ).otherwise(F.lit(True))
-    )
-    return guarded.select(F.col(id_col).alias("doc_id"), dl.alias("dl"))
+    return batch.select(F.col(id_col).alias("doc_id"), dl.alias("dl"))
 
 
-def build_bm25_index(
-    wh: ParquetWarehouse,
-    docs: DataFrame,
-    table: str = "bm25_index",
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Materialize the index from scratch: one tokenize+count pass for
-    the postings plus one skinny doc-length pass (zero-token docs have
-    no postings rows but must still be members, so __docs cannot be
-    derived from the postings)."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    spark = docs.sparkSession
-    # The postings and __docs writes are independent jobs over the same
-    # input, so a fresh build overlaps them (guide §2.6) — ``__meta``
-    # commits LAST as the publish barrier: every reader resolves the
-    # index through read_meta, so a crash before the meta write leaves
-    # an unpublished directory a rebuild simply overwrites. (The
-    # postings-before-membership ordering contract applies to INGEST,
-    # where membership already published by a prior commit gates the
-    # replay anti-join; a from-scratch build has no reader until meta.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(
-            wh.overwrite,
-            _batch_postings(docs, n_buckets, id_col, text_col),
-            _postings_table(table),
-            partition_by=("bkt",),
-        )
-        f_docs = pool.submit(
-            wh.overwrite,
-            _batch_doc_stats(docs, id_col, text_col),
-            _docs_table(table),
-        )
-        f_post.result()
-        f_docs.result()
-    wh.overwrite(
-        spark.createDataFrame(
-            [(n_buckets, 0)], "n_buckets int, postings_gen int"
-        ),
-        _meta_table(table),
-    )
-
-
-def ingest_docs(
-    wh: ParquetWarehouse,
-    batch: DataFrame,
-    table: str = "bm25_index",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> int:
-    """Fold a new document batch into the index at O(batch) cost:
-    already-indexed doc_ids anti-join away first (an at-least-once
-    redelivery of a COMMITTED batch therefore appends nothing — the
-    exactly-once-by-idempotence discipline of
-    incremental_dedup.ingest_batch), then the survivors' postings and
-    membership rows APPEND, postings first (see the module docstring's
-    crash-consistency contract: a crash between the two appends is
-    healed by redelivery plus the query path's full-row dedup; corpus
-    scalars are derived from __docs at query time, so there is no
-    scalar state to drift). Returns the number of newly indexed
-    documents. Documents are immutable under their id (the
-    index-module contract shared with incremental_ann): re-ingesting a
-    changed text under an old id is ignored, not merged."""
-    n_buckets, gen = _meta(wh, table)
-    known = wh.read(_docs_table(table)).select("doc_id")
-    new_docs = materialize(
-        batch.join(known, batch[id_col] == known["doc_id"], "left_anti")
-    )  # consumed three times below; anti-join runs once
-    doc_stats = _batch_doc_stats(new_docs, id_col, text_col)
-    n_new = int(doc_stats.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
-    if n_new == 0:
-        return 0
-    wh.append(
-        _batch_postings(new_docs, n_buckets, id_col, text_col),
-        _postings_table(table, gen),
-    )
-    wh.append(doc_stats, _docs_table(table))
-    return n_new
+BM25 = LexicalFamily(_batch_postings, _batch_doc_stats)
 
 
 def bm25_query(
@@ -235,17 +103,14 @@ def bm25_query(
         raise ValueError(f"k must be positive, got {k}")
     if k1 < 0 or not 0 <= b <= 1:
         raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got k1={k1}, b={b}")
-    n_buckets, gen = _meta(wh, table)
+    n_buckets, gen = read_meta(wh, table)
 
-    # ONE driver job for the whole query side (round-10 opt): collect
-    # the (query_id, token) pairs — query-set-sized by module contract
-    # — and derive the probe-bucket literal in Python (md5_bucket48's
+    # ONE driver job for the whole query side: collect the
+    # (query_id, token) pairs — query-set-sized by module contract — and
+    # derive the probe-bucket literal in Python (md5_bucket48's
     # first-12-hex-chars arithmetic is byte-exact over the same UTF-8).
     # Tokenization itself stays in the JVM via _term_counts, so the
     # probe vocabulary can never diverge from the postings' tokens.
-    # The former shape paid a distinct-shuffle collect AND re-ran the
-    # query tokenization subtree inside the final action; qterms is now
-    # a local relation on both paths.
     import hashlib
 
     qrows = [
@@ -278,10 +143,10 @@ def bm25_query(
         [(t,) for t in sorted({t for _, t in qrows})],
         T.StructType([T.StructField("token", T.StringType())]),
     )
-    postings = _live(
+    postings = not_deleted(
         wh,
         table,
-        wh.read(_postings_table(table, gen))
+        wh.read(postings_table(table, gen))
         .filter(F.col("bkt").isin(probe_bkts))
         .join(F.broadcast(qvocab), "token", "left_semi")
         # full-row dedup: heals the duplicated postings a crashed-and-
@@ -289,6 +154,7 @@ def bm25_query(
         # per doc, so duplicates are identical rows); runs on the
         # already-pruned probe slice, not the corpus
         .dropDuplicates(["token", "doc_id"]),
+        "doc_id",
     )
     dfreq = postings.groupBy("token").agg(
         F.countDistinct("doc_id").alias("df")
@@ -299,7 +165,7 @@ def bm25_query(
     # the same rows to the ulp the ranking round absorbs (NULL-text
     # docs have NULL dl — skipped by sum/count(dl), counted by n_docs —
     # on both paths)
-    stats = _live(wh, table, wh.read(_docs_table(table))).agg(
+    stats = not_deleted(wh, table, wh.read(docs_table(table)), "doc_id").agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         (F.sum("dl") / F.count("dl")).alias("avgdl"),
     )
@@ -307,147 +173,3 @@ def bm25_query(
         F.col("doc_id").alias("id"), "dl", "token", "tf"
     )
     return score_topk(doc_terms, qterms, dfreq, stats, k, k1, b, n_salt)
-
-
-def index_occupancy(
-    wh: ParquetWarehouse, table: str = "bm25_index", live: bool = False
-) -> DataFrame:
-    """Per-bucket posting counts plus the global max/mean skew ratio —
-    the rebuild/re-bucket trigger metric (incremental_ann's
-    list_occupancy for the lexical index: a Zipf-head token inflating
-    one bucket makes that bucket's probe cost the index's worst case).
-    One partial-aggregating pass over the skinny postings.
-    ``live=True`` anti-joins tombstones first (probe-cost view); the
-    physical default is the storage/compaction view — occupancy parity
-    across all three persisted indexes (round 9)."""
-    postings = wh.read(_postings_table(table, _meta(wh, table)[1]))
-    if live:
-        postings = _live(wh, table, postings)
-    counts = postings.groupBy("bkt").agg(
-        F.count(F.lit(1)).alias("n_postings")
-    )
-    stats = counts.agg(
-        F.max("n_postings").alias("_mx"), F.avg("n_postings").alias("_mean")
-    )
-    return counts.crossJoin(F.broadcast(stats)).select(
-        "bkt",
-        "n_postings",
-        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
-    )
-
-
-def _deleted_table(table: str) -> str:
-    return f"{table}__deleted"
-
-
-def delete_docs(
-    wh: ParquetWarehouse, doc_ids, table: str = "bm25_index"
-) -> None:
-    """Delete documents from the index as TOMBSTONES: the ids append to
-    ``__deleted`` and every query anti-joins them out (postings,
-    membership, and the corpus scalars all exclude tombstoned docs), so
-    a delete is O(ids) however large the index — physically rewriting
-    the postings would touch every bucket partition the doc's tokens
-    hash into, which for ordinary text is most of them.
-    :func:`apply_deletes` folds tombstones into the files at
-    compaction. Idempotent by construction (duplicate tombstones
-    change nothing). ``doc_ids`` is a 1-column DataFrame or an iterable
-    of ids. A tombstoned id stays dead to both queries and re-ingest
-    until apply_deletes physically drops it — delete-then-reinsert of
-    CHANGED content is apply_deletes-then-ingest (the immutable-id
-    contract shared with incremental_ann)."""
-    if not isinstance(doc_ids, DataFrame):
-        spark = wh.read(_meta_table(table)).sparkSession
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).filter(
-        F.when(
-            F.col("doc_id").isNull(),
-            F.raise_error(F.lit("bm25 index: NULL doc_id tombstone")).cast(
-                "boolean"
-            ),
-        ).otherwise(F.lit(True))
-    )
-    if wh.exists(_deleted_table(table)):
-        wh.append(ids, _deleted_table(table))
-    else:
-        wh.overwrite(ids, _deleted_table(table))
-
-
-def _live(wh: ParquetWarehouse, table: str, df: DataFrame) -> DataFrame:
-    """Anti-join the tombstone set out of any frame carrying doc_id."""
-    if not wh.exists(_deleted_table(table)):
-        return df
-    dead = wh.read(_deleted_table(table)).select("doc_id").distinct()
-    return df.join(dead, "doc_id", "left_anti")
-
-
-def apply_deletes(wh: ParquetWarehouse, table: str = "bm25_index") -> None:
-    """Compaction: physically drop tombstoned docs from the postings
-    and membership tables, then clear the tombstones. Run at the same
-    delivery barrier as any compaction; afterwards a previously deleted
-    id may be re-ingested as a new document."""
-    if not wh.exists(_deleted_table(table)):
-        return
-    gen = _meta(wh, table)[1]
-    # bkt hive layout preserved (+ list co-location against small
-    # files), so probe-time static partition pruning survives the
-    # compaction rewrite — the ann apply_deletes discipline
-    wh.overwrite(
-        materialize(
-            _live(wh, table, wh.read(_postings_table(table, gen)))
-            .repartition("bkt")
-        ),
-        _postings_table(table, gen),
-        partition_by=("bkt",),
-    )
-    wh.overwrite(
-        materialize(_live(wh, table, wh.read(_docs_table(table)))),
-        _docs_table(table),
-    )
-    wh.drop(_deleted_table(table))
-
-
-def maintain_bm25_index(
-    wh: ParquetWarehouse,
-    table: str = "bm25_index",
-    max_skew: float = 4.0,
-    rebucket_factor: int = 2,
-) -> dict:
-    """The index lifecycle's maintenance policy in one call — the port
-    of ``incremental_ann.maintain_ann_index`` (round-9) to the lexical
-    index, same three-step contract:
-
-    1. fold tombstones into the files (:func:`apply_deletes` — always;
-       no-op without tombstones, and a heavily tombstoned index both
-       wastes probe work and skews the occupancy signal);
-    2. read the LIVE bucket skew (:func:`index_occupancy`);
-    3. past ``max_skew``, REBUILD — for a lexical index that means
-       RE-BUCKETING: tokens re-hash into ``rebucket_factor`` × more
-       buckets, splitting colliding-token hotspots. (A single Zipf-head
-       token's posting list is irreducible by any bucketing — that cost
-       is the token's document frequency, not a maintenance defect.)
-
-    Unlike the ANN rebuild (new centroids change list membership and
-    repair recall), re-bucketing is ANSWER-PRESERVING by construction:
-    bucket ids never enter scoring, only pruning. The rebuild is also
-    CRASH-ATOMIC, which the ANN centroids→lists window is not: the
-    re-bucketed postings are written COLD to the next generation table
-    (``__postings_g{n}`` — no reader resolves it), and the ONE
-    ``__meta`` snapshot swap publishes (new n_buckets, new generation)
-    together. A crash before the swap leaves every reader on the old
-    generation, fully consistent; the orphan generation is swept by the
-    next maintenance call. Returns ``{"skew_ratio", "rebuilt",
-    "n_buckets"}`` for run-logging."""
-    return maintain_bucketed_index(
-        wh,
-        table,
-        _meta_table(table),
-        apply_deletes_fn=apply_deletes,
-        occupancy_fn=index_occupancy,
-        hash_col="token",
-        carry_cols=("token", "doc_id", "tf", "dl"),
-        max_skew=max_skew,
-        rebucket_factor=rebucket_factor,
-    )

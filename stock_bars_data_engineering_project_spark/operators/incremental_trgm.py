@@ -7,42 +7,20 @@ against a 100 TB corpus. This module is the substring analog of
 ``incremental_retrieval.py`` (same warehouse discipline, same crash
 contract):
 
-- ``<table>__postings`` — (bkt, trigram, doc_id), hive-partitioned by
-  ``bkt`` = the 48-bit md5 bucket of the trigram. A probe's scan set
-  is the buckets of the PATTERN's own trigrams — a driver-side
-  literal IN bounded by the (small, broadcast-contract) pattern set,
-  so the read is statically partition-pruned like bm25_query /
-  ann_query.
-- ``<table>__docs`` — (doc_id): membership, the replay-idempotence
-  anti-join target (at-least-once redelivery of a committed batch
-  appends nothing).
-- ``<table>__meta`` — ONE row (n_buckets, postings_gen): the hashing
-  config plus the postings generation pointer;
-  :func:`maintain_trgm_index`'s re-bucketing rebuild publishes both
-  atomically (the BM25 index's pointer protocol verbatim).
-
-Crash consistency is inherited verbatim from the BM25 index: ingest
-appends postings FIRST, then membership; a crash in between leaves
-orphan postings a redelivery re-appends, and the query path's
-full-row ``dropDuplicates`` (postings are deterministic per doc) heals
-the overlap on the already-pruned probe slice. The index stores NO
-text — the ``contains`` verify joins candidates back to the corpus
-table by id, reading only the text column of matching rows.
+Tables, build/ingest/delete/maintenance and the crash contract are the
+shared lexical lifecycle (``operators/index_maint.py``); this module
+supplies the trigram batch transforms (:data:`TRGM`) and the query.
+The postings carry (trigram, doc_id); the membership carries (doc_id).
+A probe's scan set is the buckets of the PATTERN's own trigrams, a
+driver-side literal IN bounded by the broadcast-small pattern set, so
+the read is statically partition-pruned. The index stores NO text: the
+``contains`` verify joins candidates back to the corpus table by id,
+reading only the text column of matching rows.
 
 Equivalence contract: postings are per-doc DISTINCT trigram sets —
 batch-invariant — so ``trgm_query`` over a built+ingested index equals
 ``substring_search`` (and the plain scan) over the union corpus,
 pinned in tests/test_trigram.py.
-
-Deletes are TOMBSTONES, the mutation contract shared by all three
-persisted indexes (BM25 ``delete_docs``, ANN ``delete_vectors``):
-:func:`delete_docs` appends ids to ``<table>__deleted`` and every
-query anti-joins them out (candidate postings AND the sub-3-char scan
-fallback), so a delete is O(ids) — physically rewriting would touch
-every bucket partition the doc's trigrams hash into, which for
-ordinary text is most of them. :func:`apply_deletes` folds tombstones
-into the files at compaction, preserving the bkt hive layout; a
-tombstoned id stays dead to both queries and re-ingest until then.
 """
 
 from __future__ import annotations
@@ -51,102 +29,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
-from ..materialize import materialize
 from ..sinks.warehouse import ParquetWarehouse
-from .index_maint import maintain_bucketed_index, postings_table, read_meta
+from .index_maint import (
+    LexicalFamily,
+    docs_table,
+    not_deleted,
+    postings_table,
+    read_meta,
+)
 from .trigram import substring_scan, trigram_postings
-
-
-def _postings_table(table: str, gen: int = 0) -> str:
-    """Generation-addressed postings name — the atomic-rebuild pointer
-    protocol shared with the BM25 index (operators/index_maint.py,
-    where the addressing, policy loop, and orphan sweep live once)."""
-    return postings_table(table, gen)
-
-
-def _meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
-    """(n_buckets, postings_gen) — index_maint.read_meta on this
-    index's ``__meta`` table."""
-    return read_meta(wh, _meta_table(table))
-
-
-def _docs_table(table: str) -> str:
-    return f"{table}__docs"
-
-
-def _meta_table(table: str) -> str:
-    return f"{table}__meta"
-
-
-def _deleted_table(table: str) -> str:
-    return f"{table}__deleted"
-
-
-def delete_docs(wh: ParquetWarehouse, doc_ids, table: str = "trgm_index") -> None:
-    """Tombstone-delete documents: O(ids) append to ``__deleted``,
-    anti-joined out of every probe until :func:`apply_deletes` folds
-    them physically. Idempotent (duplicate tombstones change nothing);
-    ``doc_ids`` is a 1-column DataFrame or an iterable of ids. The
-    BM25/ANN delete contract verbatim (incremental_retrieval.py:279)."""
-    if not isinstance(doc_ids, DataFrame):
-        spark = wh.read(_meta_table(table)).sparkSession
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id long"
-        )
-    ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).filter(
-        F.when(
-            F.col("doc_id").isNull(),
-            F.raise_error(F.lit("trgm index: NULL doc_id tombstone")).cast(
-                "boolean"
-            ),
-        ).otherwise(F.lit(True))
-    )
-    if wh.exists(_deleted_table(table)):
-        wh.append(ids, _deleted_table(table))
-    else:
-        wh.overwrite(ids, _deleted_table(table))
-
-
-def _live(wh: ParquetWarehouse, table: str, df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Anti-join the tombstone set out of any frame carrying doc ids."""
-    if not wh.exists(_deleted_table(table)):
-        return df
-    dead = wh.read(_deleted_table(table)).select(
-        F.col("doc_id").alias("__dead_id")
-    ).distinct()
-    return df.join(
-        dead, df[id_col] == dead["__dead_id"], "left_anti"
-    )
-
-
-def apply_deletes(wh: ParquetWarehouse, table: str = "trgm_index") -> None:
-    """Compaction: physically drop tombstoned docs from the postings
-    (bkt hive layout preserved, so probe-time static pruning survives)
-    and membership, then clear the tombstones; afterwards a previously
-    deleted id may be re-ingested as a new document."""
-    if not wh.exists(_deleted_table(table)):
-        return
-    gen = _meta(wh, table)[1]
-    wh.overwrite(
-        materialize(
-            _live(wh, table, wh.read(_postings_table(table, gen)))
-            .repartition("bkt")
-        ),
-        _postings_table(table, gen),
-        partition_by=("bkt",),
-    )
-    wh.overwrite(
-        materialize(_live(wh, table, wh.read(_docs_table(table)))),
-        _docs_table(table),
-    )
-    wh.drop(_deleted_table(table))
 
 
 def _batch_postings(
     batch: DataFrame, n_buckets: int, id_col: str, text_col: str
 ) -> DataFrame:
-    # repartition by bkt before the hive-partitioned write (the
-    # small-files discipline shared by every index builder here)
+    # repartition by bkt before the hive-partitioned write (small files)
     return (
         trigram_postings(batch, id_col=id_col, text_col=text_col)
         .select(
@@ -158,114 +55,11 @@ def _batch_postings(
     )
 
 
-def _batch_members(batch: DataFrame, id_col: str) -> DataFrame:
-    guarded = batch.filter(
-        F.when(
-            F.col(id_col).isNull(),
-            F.raise_error(
-                F.lit(
-                    f"trgm index: NULL {id_col} — ids must be non-NULL "
-                    "for replay-idempotent ingest"
-                )
-            ).cast("boolean"),
-        ).otherwise(F.lit(True))
-    )
-    return guarded.select(F.col(id_col).alias("doc_id"))
+def _batch_members(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return batch.select(F.col(id_col).alias("doc_id"))
 
 
-def build_trgm_index(
-    wh: ParquetWarehouse,
-    docs: DataFrame,
-    table: str = "trgm_index",
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Materialize the index from scratch. ``__meta`` commits LAST as
-    the publish barrier (no reader resolves the index before it, so a
-    crashed build is an unpublished directory a rebuild overwrites);
-    the postings and membership writes are independent jobs over the
-    same input and overlap (guide §2.6). The postings-before-membership
-    crash contract applies to INGEST, where prior-commit membership
-    gates the replay anti-join."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    spark = docs.sparkSession
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_post = pool.submit(
-            wh.overwrite,
-            _batch_postings(docs, n_buckets, id_col, text_col),
-            _postings_table(table),
-            partition_by=("bkt",),
-        )
-        f_docs = pool.submit(
-            wh.overwrite, _batch_members(docs, id_col), _docs_table(table)
-        )
-        f_post.result()
-        f_docs.result()
-    wh.overwrite(
-        spark.createDataFrame(
-            [(n_buckets, 0)], "n_buckets int, postings_gen int"
-        ),
-        _meta_table(table),
-    )
-
-
-def ingest_docs(
-    wh: ParquetWarehouse,
-    batch: DataFrame,
-    table: str = "trgm_index",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> int:
-    """Fold a new batch in at O(batch) cost — anti-join away known ids,
-    append survivors' postings then membership. Returns the number of
-    newly indexed documents; documents are immutable under their id
-    (the shared index-module contract)."""
-    n_buckets, gen = _meta(wh, table)
-    known = wh.read(_docs_table(table)).select("doc_id")
-    new_docs = materialize(
-        batch.join(known, batch[id_col] == known["doc_id"], "left_anti")
-    )
-    members = _batch_members(new_docs, id_col)
-    n_new = int(members.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
-    if n_new == 0:
-        return 0
-    wh.append(
-        _batch_postings(new_docs, n_buckets, id_col, text_col),
-        _postings_table(table, gen),
-    )
-    wh.append(members, _docs_table(table))
-    return n_new
-
-
-def index_occupancy(
-    wh: ParquetWarehouse, table: str = "trgm_index", live: bool = False
-) -> DataFrame:
-    """Per-bucket posting counts plus the global max/mean skew ratio —
-    the rebuild/re-bucket trigger metric, completing occupancy parity
-    across the three persisted indexes (BM25 ``index_occupancy``, ANN
-    ``list_occupancy``). A hot trigram (whitespace runs, markup
-    residue) inflating one bucket makes that bucket's probe cost the
-    index's worst case. ``live=True`` anti-joins tombstones first
-    (the probe-cost view); the physical default is the
-    storage/compaction view."""
-    postings = wh.read(_postings_table(table, _meta(wh, table)[1]))
-    if live:
-        postings = _live(wh, table, postings)
-    counts = postings.groupBy("bkt").agg(
-        F.count(F.lit(1)).alias("n_postings")
-    )
-    stats = counts.agg(
-        F.max("n_postings").alias("_mx"), F.avg("n_postings").alias("_mean")
-    )
-    return counts.crossJoin(F.broadcast(stats)).select(
-        "bkt",
-        "n_postings",
-        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
-    )
+TRGM = LexicalFamily(_batch_postings, _batch_members)
 
 
 def trgm_query(
@@ -288,15 +82,12 @@ def trgm_query(
     broadcast-small by module contract; ``max_pattern_trigrams`` makes
     that contract LOUD — an oversized pattern frame fails fast instead
     of silently building a huge broadcast + driver literal."""
-    n_buckets, gen = _meta(wh, table)
+    n_buckets, gen = read_meta(wh, table)
     # Patterns are broadcast-small by module contract, so the WHOLE
-    # pattern side runs on the driver from ONE collect (round-10 opt):
-    # the previous shape paid three serialized driver jobs per call
-    # (materialize the trigram expansion, count it for the cap guard,
-    # collect the probe buckets) before the probe plan even existed.
-    # The Python trigram expansion replicates char_ngrams exactly
-    # (both Java's regex split("") and Python strings walk code
-    # points) and md5_bucket48's first-12-hex-chars mod arithmetic.
+    # pattern side runs on the driver from ONE collect. The Python
+    # trigram expansion replicates char_ngrams exactly (both Java's
+    # regex split("") and Python strings walk code points) and
+    # md5_bucket48's first-12-hex-chars mod arithmetic.
     import hashlib
 
     pats_rows = [
@@ -306,8 +97,7 @@ def trgm_query(
             F.col(pattern_col).alias("pattern"),
         ).collect()
     ]
-    # NULL patterns fall out of BOTH arms, as with the former
-    # F.length() filters (NULL comparison is never true)
+    # NULL patterns fall out of BOTH arms
     short_rows = [
         (pid, p) for pid, p in pats_rows if p is not None and len(p) < 3
     ]
@@ -353,19 +143,20 @@ def trgm_query(
     # tombstones anti-join out on the already-pruned probe slice, not
     # the whole postings table (the bm25_query/ann_query discipline)
     postings = (
-        _live(
+        not_deleted(
             wh,
             table,
-            wh.read(_postings_table(table, gen))
+            wh.read(postings_table(table, gen))
             .filter(F.col("bkt").isin(probe_bkts))
             .join(
                 F.broadcast(pat_tri.select("trigram").distinct()),
                 "trigram",
                 "left_semi",
             ),
+            "doc_id",
         )
         # heals crashed-and-redelivered ingest duplicates on the pruned
-        # probe slice (module docstring, "Crash consistency")
+        # probe slice (index_maint's Ingest contract)
         .dropDuplicates(["trigram", "doc_id"])
         .select("trigram", F.col("doc_id").alias("id"))
     )
@@ -403,7 +194,7 @@ def trgm_query(
     # members, and the fallback must match it — otherwise a deleted or
     # never-ingested doc would match sub-3-char patterns while being
     # invisible to every indexed probe
-    members = _live(wh, table, wh.read(_docs_table(table)))
+    members = not_deleted(wh, table, wh.read(docs_table(table)), "doc_id")
     live_docs = docs.join(
         members, docs[id_col] == members["doc_id"], "left_semi"
     )
@@ -416,43 +207,3 @@ def trgm_query(
         pattern_col="pattern",
     )
     return verified.unionByName(fallback)
-
-
-def maintain_trgm_index(
-    wh: ParquetWarehouse,
-    table: str = "trgm_index",
-    max_skew: float = 4.0,
-    rebucket_factor: int = 2,
-) -> dict:
-    """The index lifecycle's maintenance policy in one call — the
-    third port of ``incremental_ann.maintain_ann_index``'s contract
-    (see ``incremental_retrieval.maintain_bm25_index`` for the lexical
-    rationale shared verbatim here):
-
-    1. fold tombstones (:func:`apply_deletes` — always, no-op clean);
-    2. read the LIVE bucket skew (:func:`index_occupancy`);
-    3. past ``max_skew``, RE-BUCKET the postings into
-       ``rebucket_factor`` × more buckets — splits colliding-trigram
-       hotspots; a single hot trigram's posting list (whitespace runs,
-       markup residue) is irreducible by bucketing and is the
-       pattern-side ``max_pattern_trigrams`` contract's concern, not
-       maintenance's.
-
-    Re-bucketing is answer-preserving (bucket ids only prune, never
-    score) and crash-atomic: the new generation's postings are written
-    COLD under ``__postings_g{n}`` and ONE ``__meta`` snapshot swap
-    publishes (n_buckets, generation) together; a crash before the
-    swap leaves readers on the old generation and the orphan is swept
-    by the next call. Returns ``{"skew_ratio", "rebuilt", "n_buckets"}``
-    for run-logging."""
-    return maintain_bucketed_index(
-        wh,
-        table,
-        _meta_table(table),
-        apply_deletes_fn=apply_deletes,
-        occupancy_fn=index_occupancy,
-        hash_col="trigram",
-        carry_cols=("trigram", "doc_id"),
-        max_skew=max_skew,
-        rebucket_factor=rebucket_factor,
-    )

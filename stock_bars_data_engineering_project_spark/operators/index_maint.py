@@ -1,69 +1,302 @@
-"""Shared maintenance machinery for the persisted indexes.
+"""The persisted-index lifecycle, defined once for the IVF ANN index
+(``incremental_ann``) and the two lexical indexes (BM25,
+``incremental_retrieval``; trigram, ``incremental_trgm``).
 
-The three index modules (``incremental_ann``, ``incremental_retrieval``,
-``incremental_trgm``) share one lifecycle contract — O(batch) ingest,
-O(ids) tombstones, fold-read-rebuild maintenance. The ANN rebuild is
-geometric (retrain the quantizer) and stays in its module; the two
-LEXICAL rebuilds are the SAME operation — re-hash postings into
-factor× more buckets and publish atomically via the ``__meta``
-generation pointer — so the generation addressing, the policy loop,
-and the orphan sweep live here once (round-10 review: the two modules
-had byte-identical 80-line copies that had to evolve in lockstep).
+Tables (``table`` = the index name):
 
-Atomic-publish protocol (shared wording of both module docstrings):
-generation 0 is the plain ``<table>__postings``; a rebuild writes
-generation g+1 COLD under ``<table>__postings_g{g+1}`` — no reader
-resolves it — and ONE ``__meta`` snapshot swap publishes
-(n_buckets, postings_gen) together. A crash before the swap leaves
-every reader on the old generation, fully consistent; orphan
-generations are swept by the next maintenance call. Re-bucketing is
-answer-preserving by construction: bucket ids prune, never score.
+- lexical: ``<table>__postings`` (generation g > 0:
+  ``<table>__postings_g{g}``), hive-partitioned by ``bkt`` = the 48-bit
+  md5 bucket of the term; ``<table>__docs``, the membership (doc_id
+  plus family columns); ``<table>__meta``, ONE row
+  (n_buckets, postings_gen).
+- ANN: ``<table>`` (the inverted lists, hive-partitioned by ``cid``)
+  and ``<table>__centroids``.
+- all three: ``<table>__deleted``, the tombstones (one id column).
+
+Contract:
+
+- **Build** (lexical: :func:`build_lexical_index`) writes postings and
+  membership as two overlapped jobs and commits ``__meta`` LAST: every
+  reader resolves the index through it, so a crashed build is an
+  unpublished directory the next build overwrites.
+- **Ingest** (lexical: :func:`ingest_docs`) is O(batch) and
+  replay-idempotent: ids already in the membership anti-join away, then
+  the survivors' postings append BEFORE their membership rows. A crash
+  between the two appends leaves orphan postings; redelivery appends
+  them again, and the queries' full-row dedup on the pruned probe slice
+  heals the overlap. Ids are non-NULL (a NULL can neither be
+  replay-deduped nor tombstoned) and immutable: a changed text under an
+  old id is ignored, not merged.
+- **Delete** (:func:`delete_ids`) appends ids to ``__deleted``, O(ids);
+  every query anti-joins them (:func:`not_deleted`) out of its pruned
+  probe slice. A tombstoned id stays dead to queries and re-ingest until
+  :func:`apply_deletes` rewrites the row tables without it (keeping
+  their hive layout) and clears the tombstones. Duplicate tombstones
+  change nothing.
+- **Maintain** folds tombstones, reads the occupancy skew
+  (:func:`index_occupancy`) and rebuilds past a threshold. The ANN
+  rebuild retrains the quantizer (``maintain_ann_index``). The lexical
+  rebuild (:func:`maintain_bucketed_index`) re-hashes the postings into
+  more buckets, writes them COLD as generation g+1, and publishes
+  (n_buckets, postings_gen) in ONE ``__meta`` snapshot swap, so a crash
+  before the swap leaves every reader on the old generation; orphan
+  generations are swept by the next call. Bucket ids prune, never
+  score, so re-bucketing preserves answers.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
+from ..materialize import materialize
 from ..memo import build_once
 from ..sinks.warehouse import ParquetWarehouse
 
 
 def postings_table(table: str, gen: int = 0) -> str:
-    """Generation-addressed postings table name (module docstring)."""
+    """Generation-addressed postings table name."""
     return f"{table}__postings" if not gen else f"{table}__postings_g{gen}"
 
 
-def read_meta(wh: ParquetWarehouse, meta_table: str) -> tuple[int, int]:
-    """(n_buckets, postings_gen) from the one-row ``__meta`` table.
-    ``postings_gen`` is absent on pre-rebuild indexes — read as 0.
+def docs_table(table: str) -> str:
+    return f"{table}__docs"
 
-    Memoized per committed version directory: every write path (ingest,
-    tombstone fold, rebuild publish) commits a new one, so a hit never
-    serves stale meta and plan construction skips the one-row scan
-    job."""
+
+def meta_table(table: str) -> str:
+    return f"{table}__meta"
+
+
+def deleted_table(table: str) -> str:
+    return f"{table}__deleted"
+
+
+def read_meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
+    """(n_buckets, postings_gen) of a lexical index.
+
+    Memoized per committed ``__meta`` version directory: every write
+    path commits a new one, so a hit never serves stale meta and plan
+    construction skips the one-row scan job."""
+    meta = meta_table(table)
 
     def _scan() -> tuple[int, int]:
-        row = wh.read(meta_table).collect()[0].asDict()
+        row = wh.read(meta).collect()[0].asDict()
         return int(row["n_buckets"]), int(row.get("postings_gen") or 0)
 
-    version = wh._latest_version(meta_table)
+    version = wh._latest_version(meta)
     if version is None:
-        # no committed snapshot — let wh.read raise its own loud error
+        # no committed snapshot: let wh.read raise its own loud error
         return _scan()
-    vdir = os.path.join(wh.table_path(meta_table), version)
+    vdir = os.path.join(wh.table_path(meta), version)
     return build_once(("index_meta",), (vdir,), _scan)
+
+
+class Layout(NamedTuple):
+    """What the tombstone path needs to know about an index layout."""
+
+    id_col: str  # the id column of the row tables and the tombstones
+    hive_col: str  # the partition column apply_deletes preserves
+    # the tables holding index rows, the hive-partitioned one first
+    row_tables: Callable[[ParquetWarehouse, str], list[str]]
+
+
+BUCKETED = Layout(
+    "doc_id",
+    "bkt",
+    lambda wh, table: [
+        postings_table(table, read_meta(wh, table)[1]),
+        docs_table(table),
+    ],
+)
+IVF = Layout("vec_id", "cid", lambda wh, table: [table])
+
+
+def _reject_nulls(df: DataFrame, col: str, message: str) -> DataFrame:
+    """Raise ``message`` when a row with a NULL ``col`` is evaluated; a
+    filter-borne raise_error survives any downstream projection."""
+    return df.filter(
+        F.when(
+            F.col(col).isNull(), F.raise_error(F.lit(message)).cast("boolean")
+        ).otherwise(F.lit(True))
+    )
+
+
+def delete_ids(
+    wh: ParquetWarehouse, ids, table: str, layout: Layout
+) -> None:
+    """Tombstone ``ids`` (a 1-column DataFrame or an iterable of ints)
+    in the ``table`` index. Raises FileNotFoundError when the index was
+    never built, and on evaluation of a NULL id."""
+    for t in layout.row_tables(wh, table):
+        if not wh.exists(t):
+            raise FileNotFoundError(
+                f"no such table: {t} (build index {table!r} first)"
+            )
+    if not isinstance(ids, DataFrame):
+        ids = wh.spark.createDataFrame(
+            [(int(i),) for i in ids], f"{layout.id_col} long"
+        )
+    ids = _reject_nulls(
+        ids.select(F.col(ids.columns[0]).alias(layout.id_col)),
+        layout.id_col,
+        f"{table} index: NULL {layout.id_col} tombstone",
+    )
+    if wh.exists(deleted_table(table)):
+        wh.append(ids, deleted_table(table))
+    else:
+        wh.overwrite(ids, deleted_table(table))
+
+
+def not_deleted(
+    wh: ParquetWarehouse, table: str, df: DataFrame, id_col: str
+) -> DataFrame:
+    """``df`` without the rows whose ``id_col`` is tombstoned."""
+    if not wh.exists(deleted_table(table)):
+        return df
+    dead = wh.read(deleted_table(table))
+    dead = dead.select(F.col(dead.columns[0]).alias("__dead_id")).distinct()
+    return df.join(dead, df[id_col] == dead["__dead_id"], "left_anti")
+
+
+def apply_deletes(wh: ParquetWarehouse, table: str, layout: Layout) -> None:
+    """Compaction: rewrite every row table without the tombstoned ids,
+    re-partitioned by ``layout.hive_col`` where the table carries it
+    (so probe-time static partition pruning survives), then clear the
+    tombstones. Afterwards a deleted id may be re-ingested."""
+    if not wh.exists(deleted_table(table)):
+        return
+    hive = layout.hive_col
+    for t in layout.row_tables(wh, table):
+        rows = not_deleted(wh, table, wh.read(t), layout.id_col)
+        if hive in rows.columns:
+            wh.overwrite(
+                materialize(rows.repartition(hive)), t, partition_by=(hive,)
+            )
+        else:
+            wh.overwrite(materialize(rows), t)
+    wh.drop(deleted_table(table))
+
+
+def index_occupancy(
+    wh: ParquetWarehouse, table: str, layout: Layout, live: bool = False
+) -> DataFrame:
+    """Rows per hive partition (``bkt`` or ``cid``) as ``n_rows``, plus
+    the global max/mean ``skew_ratio``: the rebuild trigger. A hot
+    partition makes its probe cost the index's worst case. ``live=True``
+    excludes tombstones (the probe-cost view); the default counts the
+    stored rows (the compaction view)."""
+    rows = wh.read(layout.row_tables(wh, table)[0])
+    if live:
+        rows = not_deleted(wh, table, rows, layout.id_col)
+    counts = rows.groupBy(layout.hive_col).agg(
+        F.count(F.lit(1)).alias("n_rows")
+    )
+    stats = counts.agg(
+        F.max("n_rows").alias("_mx"), F.avg("n_rows").alias("_mean")
+    )
+    return counts.crossJoin(F.broadcast(stats)).select(
+        layout.hive_col,
+        "n_rows",
+        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
+    )
+
+
+class LexicalFamily(NamedTuple):
+    """The batch transforms that make a lexical index BM25 or trigram.
+
+    ``postings(batch, n_buckets, id_col, text_col)`` returns
+    (bkt, term, doc_id, ...), term first after bkt; ``members(batch,
+    id_col, text_col)`` returns (doc_id, ...)."""
+
+    postings: Callable[[DataFrame, int, str, str], DataFrame]
+    members: Callable[[DataFrame, str, str], DataFrame]
+
+
+def _require_ids(batch: DataFrame, id_col: str, table: str) -> DataFrame:
+    return _reject_nulls(
+        batch,
+        id_col,
+        f"{table} index: NULL {id_col} — ids must be non-NULL for "
+        "replay-idempotent ingest",
+    )
+
+
+def build_lexical_index(
+    wh: ParquetWarehouse,
+    docs: DataFrame,
+    table: str,
+    family: LexicalFamily,
+    n_buckets: int = 64,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> None:
+    """Build a lexical index from scratch (module docstring, Build)."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    docs = _require_ids(docs, id_col, table)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(
+                wh.overwrite,
+                family.postings(docs, n_buckets, id_col, text_col),
+                postings_table(table),
+                partition_by=("bkt",),
+            ),
+            pool.submit(
+                wh.overwrite,
+                family.members(docs, id_col, text_col),
+                docs_table(table),
+            ),
+        ]
+        for f in futures:
+            f.result()
+    wh.overwrite(
+        wh.spark.createDataFrame(
+            [(n_buckets, 0)], "n_buckets int, postings_gen int"
+        ),
+        meta_table(table),
+    )
+
+
+def ingest_docs(
+    wh: ParquetWarehouse,
+    batch: DataFrame,
+    table: str,
+    family: LexicalFamily,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> int:
+    """Fold ``batch`` into a lexical index (module docstring, Ingest).
+    Returns the number of newly indexed documents."""
+    n_buckets, gen = read_meta(wh, table)
+    batch = _require_ids(batch, id_col, table)
+    known = wh.read(docs_table(table)).select("doc_id")
+    new_docs = materialize(
+        batch.join(known, batch[id_col] == known["doc_id"], "left_anti")
+    )  # consumed twice below; the anti-join runs once
+    members = family.members(new_docs, id_col, text_col)
+    n_new = int(members.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
+    if n_new == 0:
+        return 0
+    wh.append(
+        family.postings(new_docs, n_buckets, id_col, text_col),
+        postings_table(table, gen),
+    )
+    wh.append(members, docs_table(table))
+    return n_new
 
 
 def sweep_generations(
     wh: ParquetWarehouse, table: str, current_gen: int
 ) -> None:
-    """Drop every postings generation except the published one — the
-    GC half of the atomic-publish protocol (superseded generations
-    after a successful rebuild, cold orphans after a crashed one)."""
+    """Drop every postings generation except the published one:
+    superseded generations after a rebuild, cold orphans after a
+    crashed one."""
     prefix = f"{table}__postings_g"
     for t in wh.tables():
         if t == f"{table}__postings":
@@ -77,11 +310,8 @@ def sweep_generations(
 
 
 def log_maintenance(wh: ParquetWarehouse, table: str, decision: dict) -> None:
-    """K6 run-log line for an index-maintenance decision — the
-    operational record the reference keeps for every pipeline run
-    (log_metadata.py), applied to the maintenance loop so drift policy
-    firings are auditable after the fact. Shared by all three index
-    policies; one append-only row per call."""
+    """One append-only K6 run-log row per maintenance decision, so
+    policy firings are auditable after the fact."""
     wh.log(
         f"{table}_maintenance",
         "maintain " + " ".join(f"{k}:{v}" for k, v in sorted(decision.items())),
@@ -91,55 +321,49 @@ def log_maintenance(wh: ParquetWarehouse, table: str, decision: dict) -> None:
 def maintain_bucketed_index(
     wh: ParquetWarehouse,
     table: str,
-    meta_table: str,
-    apply_deletes_fn,
-    occupancy_fn,
-    hash_col: str,
-    carry_cols: tuple[str, ...],
-    max_skew: float,
-    rebucket_factor: int,
+    max_skew: float = 4.0,
+    rebucket_factor: int = 2,
 ) -> dict:
-    """The lexical index maintenance policy (maintain_ann_index's
-    three-step contract, re-bucket instead of retrain):
-
-    1. fold tombstones (``apply_deletes_fn`` — always, no-op clean);
-    2. read the LIVE bucket skew (``occupancy_fn``);
-    3. past ``max_skew``, re-hash ``hash_col`` into ``rebucket_factor``
-       × more buckets (splits colliding-term hotspots; a single hot
-       term's posting list is irreducible by any bucketing) and
-       publish atomically via the generation pointer.
-
-    ``carry_cols`` are the postings columns copied through the rebuild
-    (hash_col first). Returns ``{"skew_ratio", "rebuilt", "n_buckets"}``
-    after writing the K6 audit row."""
+    """The lexical maintenance policy (module docstring, Maintain):
+    fold tombstones, then past ``max_skew`` re-hash the postings into
+    ``rebucket_factor`` × more buckets. That splits colliding-term
+    hotspots; a single hot term's posting list is irreducible by any
+    bucketing. Returns ``{"skew_ratio", "rebuilt", "n_buckets"}`` after
+    writing the K6 audit row."""
     if rebucket_factor < 2:
         raise ValueError(
             f"rebucket_factor must be >= 2, got {rebucket_factor}"
         )
-    apply_deletes_fn(wh, table)
-    n_buckets, gen = read_meta(wh, meta_table)
-    occ = occupancy_fn(wh, table=table).select("skew_ratio").limit(1).collect()
+    apply_deletes(wh, table, BUCKETED)
+    n_buckets, gen = read_meta(wh, table)
+    occ = (
+        index_occupancy(wh, table, BUCKETED)
+        .select("skew_ratio")
+        .limit(1)
+        .collect()
+    )
     skew = float(occ[0]["skew_ratio"]) if occ else 0.0
     rebuilt = False
     if skew > max_skew:
         new_n = n_buckets * rebucket_factor
         new_gen = gen + 1
         old = wh.read(postings_table(table, gen))
+        # the stored columns, term first (LexicalFamily.postings); the
+        # hive read appends bkt last
+        carry = [c for c in old.columns if c != "bkt"]
         rebucketed = old.select(
-            md5_bucket48(F.col(hash_col), new_n).alias("bkt"),
-            *[F.col(c) for c in carry_cols],
+            md5_bucket48(F.col(carry[0]), new_n).alias("bkt"), *carry
         ).repartition("bkt")
         wh.overwrite(
             rebucketed, postings_table(table, new_gen), partition_by=("bkt",)
         )
-        spark = old.sparkSession
         # the atomic publish: one snapshot swap flips n_buckets and the
         # postings generation together
         wh.overwrite(
-            spark.createDataFrame(
+            wh.spark.createDataFrame(
                 [(new_n, new_gen)], "n_buckets int, postings_gen int"
             ),
-            meta_table,
+            meta_table(table),
         )
         n_buckets, gen, rebuilt = new_n, new_gen, True
     sweep_generations(wh, table, gen)

@@ -2887,11 +2887,8 @@ def _ann_incremental_index(spark, sf_dir: str, emb):
     stored lists like a real deployment."""
     import os
 
-    from ..operators.incremental_ann import (
-        build_ann_index,
-        delete_vectors,
-        ingest_vectors,
-    )
+    from ..operators.incremental_ann import build_ann_index, ingest_vectors
+    from ..operators.index_maint import IVF, delete_ids
 
     def _build():
         wh = scratch_warehouse(spark, "ann_incremental_rows")
@@ -2908,12 +2905,13 @@ def _ann_incremental_index(spark, sf_dir: str, emb):
         # subsequent probe anti-joins them out, which the oracle replays
         # as a candidate-side exclusion (_IVF_INCREMENTAL_SQL's
         # cand_filter)
-        delete_vectors(
+        delete_ids(
             wh,
             emb.filter(
                 F.col("vec_id") % _ANN_DELETED_MOD == _ANN_DELETED_REM
             ).select("vec_id"),
-            table="ann_idx",
+            "ann_idx",
+            IVF,
         )
         return wh
 
@@ -3406,8 +3404,8 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       even-id half (frozen stride-100 quantizer), ingest the odd-id
       half against the STORED centroids (map-only assign, merge pruned
       to the touched cid partitions), TOMBSTONE-delete the
-      ids-ending-in-3 slice (round 9: O(ids) delete, never a physical
-      rewrite — the BM25 delete_docs contract ported to vectors), then
+      ids-ending-in-3 slice (O(ids) delete, never a physical rewrite;
+      the shared lifecycle in operators/index_maint.py), then
       probe the index with a bounded literal cid set (static partition
       pruning) with the tombstones anti-joined out of the pruned probe
       slice. The oracle replays the equivalent one-shot stride-100 IVF
@@ -3417,7 +3415,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       build+ingest ≡ one-shot, replay-idempotent ingest, idempotent
       re-delete, dead-to-reingest, and the hive-layout-preserving
       apply_deletes compaction stay pinned in
-      tests/test_incremental_ann.py.
+      tests/test_incremental_ann.py and tests/test_index_lifecycle.py.
     - `contrastive_pos` / `contrastive_hard` / `contrastive_rand`:
       training-pair mining (operators/contrastive.py) melted onto the
       suite schema — positives are brute ranks 1..3, hard negatives
@@ -4311,9 +4309,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       bm25-index maintenance chain; probed via static bucket partition
       filters) — 12-char patterns cut from four query docs, candidate
       docs gated on containing ALL pattern trigrams, then
-      contains()-verified. Round 9 adds a TOMBSTONE-delete wave
-      (corpus ids ending in 3, delete_docs — the shared O(ids) index
-      mutation contract): the probe anti-joins tombstones on the
+      contains()-verified, after a TOMBSTONE-delete wave (corpus
+      ids ending in 3, index_maint.delete_ids — the shared O(ids)
+      index mutation contract): the probe anti-joins tombstones on the
       pruned slice, and the oracle is the plain full contains() scan
       over the SURVIVORS, so the hash match pins
       index+ingest+delete ≡ scan — the law that makes a pg_trgm-style
@@ -4468,25 +4466,28 @@ def _trgm_index(spark, sf_dir: str, corpus):
     built once per documents parquet state like ``_bm25_index``."""
     import os
 
-    from ..operators.incremental_trgm import (
-        build_trgm_index,
-        delete_docs,
+    from ..operators.incremental_trgm import TRGM
+    from ..operators.index_maint import (
+        BUCKETED,
+        build_lexical_index,
+        delete_ids,
         ingest_docs,
     )
 
     def _build():
         wh = scratch_warehouse(spark, "trgm_index_rows")
-        build_trgm_index(
-            wh, corpus.filter(F.col("doc_id") % 2 == 0), table="trgm_idx"
+        build_lexical_index(
+            wh, corpus.filter(F.col("doc_id") % 2 == 0), "trgm_idx", TRGM
         )
-        ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="trgm_idx")
+        ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "trgm_idx", TRGM)
         # delete wave: tombstone the corpus ids ending in 3 — every
         # probe anti-joins them out, replayed in the oracle as a
         # survivor filter on the full contains() scan
-        delete_docs(
+        delete_ids(
             wh,
             corpus.filter(F.col("doc_id") % 10 == 3).select("doc_id"),
-            table="trgm_idx",
+            "trgm_idx",
+            BUCKETED,
         )
         return wh
 
@@ -4501,14 +4502,15 @@ def _bm25_index(spark, sf_dir: str, corpus):
     ``_ann_incremental_index``."""
     import os
 
-    from ..operators.incremental_retrieval import build_bm25_index, ingest_docs
+    from ..operators.incremental_retrieval import BM25
+    from ..operators.index_maint import build_lexical_index, ingest_docs
 
     def _build():
         wh = scratch_warehouse(spark, "bm25_index_rows")
-        build_bm25_index(
-            wh, corpus.filter(F.col("doc_id") % 2 == 0), table="bm25_idx"
+        build_lexical_index(
+            wh, corpus.filter(F.col("doc_id") % 2 == 0), "bm25_idx", BM25
         )
-        ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="bm25_idx")
+        ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "bm25_idx", BM25)
         return wh
 
     return build_once(

@@ -275,113 +275,34 @@ def pca_ingest_stream(
     return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
 
 
-def ann_ingest_stream(
+def index_ingest_stream(
     spark: SparkSession,
     src_dir: str,
     schema,
-    wh: ParquetWarehouse,
     checkpoint_dir: str,
-    table: str = "ann_index",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    ingest,
     available_now: bool = True,
 ):
-    """Streaming ingest for the persisted IVF ANN index — the last
-    asymmetry in the incremental family closed (round 10): vectors
-    landing as files fold into the stored inverted lists exactly as
-    ``incremental_ann.ingest_vectors`` batches do (frozen-centroid
-    map-only assignment + cid-pruned keyed merge), so a serving index
-    tracks an arriving corpus without any batch scheduler.
+    """Streaming ingest for a persisted index: ``ingest(batch)`` per
+    non-empty micro-batch, e.g. ``lambda b: ingest_docs(wh, b, "bm",
+    BM25)`` for a lexical index (operators/index_maint.py) or
+    ``lambda b: ingest_vectors(wh, b, "idx")`` for the IVF index.
 
-    The index must already exist (``build_ann_index`` trains the
-    quantizer; a stream cannot — centroids are frozen state by the
-    module's drift contract). Exactly-once composition, the
-    dedup_ingest_stream argument: the file-source offset checkpoint
-    gives at-least-once micro-batches, and a replayed batch re-assigns
-    to identical (cid, vec_id) rows whose merge rewrites identical
-    partitions — a no-op. Batch-split invariance is structural:
-    assignment is per-vector against frozen centroids, so ANY
-    micro-batching of the same files yields the same lists.
-
-    Empty micro-batches are skipped — no version churn from a trigger
-    that found no files."""
-    from ..operators.incremental_ann import ingest_vectors
+    The index must already exist: a stream cannot fix n_buckets or
+    train the frozen centroids. Exactly-once composition: the
+    file-source offset checkpoint gives at-least-once micro-batches,
+    and every index ingest is replay-idempotent (a lexical replay
+    anti-joins to nothing; an IVF replay merges identical (cid, vec_id)
+    rows). Ingest is per document or per vector, so ANY micro-batching
+    of the same files yields an index that answers like the one-shot
+    build. Empty micro-batches are skipped, so a trigger that found no
+    files adds no version."""
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_vectors(wh, batch, table=table, vec_col=vec_col, id_col=id_col)
+        if not batch.isEmpty():
+            ingest(batch)
 
     return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
-
-
-def bm25_ingest_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    wh: ParquetWarehouse,
-    checkpoint_dir: str,
-    table: str = "bm25_index",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Streaming ingest for the persisted BM25 index: document files
-    fold into the postings/membership tables exactly as
-    ``incremental_retrieval.ingest_docs`` batches do — the membership
-    anti-join makes a replayed micro-batch append nothing, so the
-    at-least-once file-source delivery degrades to exactly-once state
-    (the shared composition contract of every drain in this module).
-    tf/dl/df are per-doc or per-token integer counts — batch-invariant
-    — so any micro-batching of the same files yields an index that
-    answers exactly like the one-shot build (the law
-    ``test_incremental_retrieval.py`` pins for the batch path and
-    ``test_streaming_index_ingest.py`` pins for this drain).
-
-    The index must already exist (``build_bm25_index`` fixes
-    n_buckets); empty micro-batches are skipped."""
-    from ..operators.incremental_retrieval import ingest_docs
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_docs(wh, batch, table=table, id_col=id_col, text_col=text_col)
-
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
-
-
-def trgm_ingest_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    wh: ParquetWarehouse,
-    checkpoint_dir: str,
-    table: str = "trgm_index",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    available_now: bool = True,
-):
-    """Streaming ingest for the persisted trigram substring index —
-    ``incremental_trgm.ingest_docs`` per micro-batch, with the same
-    replay-idempotence (membership anti-join), batch-split invariance
-    (postings are per-doc distinct trigram sets), and
-    already-built-index precondition as :func:`bm25_ingest_stream`.
-    Empty micro-batches are skipped."""
-    from ..operators.incremental_trgm import ingest_docs
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ingest_docs(wh, batch, table=table, id_col=id_col, text_col=text_col)
-
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
-
-
-_INDEX_DELETE_FNS = {
-    "ann": ("..operators.incremental_ann", "delete_vectors", "ann_index"),
-    "bm25": ("..operators.incremental_retrieval", "delete_docs", "bm25_index"),
-    "trgm": ("..operators.incremental_trgm", "delete_docs", "trgm_index"),
-}
 
 
 def index_delete_stream(
@@ -394,39 +315,35 @@ def index_delete_stream(
     table: str | None = None,
     available_now: bool = True,
 ):
-    """Streaming TOMBSTONE drain — the retraction half of the index
-    lifecycle (round 10): id files land (a dedup pipeline's retraction
-    feed, a GDPR erasure queue) and each micro-batch appends them to
-    the index's ``__deleted`` table through the module's own
-    ``delete_docs``/``delete_vectors``, so queries exclude them from
+    """Streaming TOMBSTONE drain: id files land (a dedup pipeline's
+    retraction feed, a GDPR erasure queue) and each micro-batch goes
+    through ``index_maint.delete_ids``, so queries exclude the ids from
     the next probe onward at O(ids) cost. ``kind`` picks the index
-    family (``'ann' | 'bm25' | 'trgm'``); ``schema`` is the id-file
-    schema (first column = the id).
+    family (``'ann' | 'bm25' | 'trgm'``; default table
+    ``<kind>_index``); ``schema`` is the id-file schema (first column =
+    the id).
 
-    Exactly-once is WEAKER here than the ingest drains' and that is
-    fine by design: tombstone appends are idempotent in EFFECT
-    (duplicate tombstones change no query answer and compact away at
-    the next apply_deletes/maintenance fold), so an at-least-once
-    replay costs duplicate rows in the O(ids) tombstone table, never a
-    wrong answer. Empty micro-batches are skipped."""
-    if kind not in _INDEX_DELETE_FNS:
+    Exactly-once is WEAKER here than the ingest drain's, by design:
+    duplicate tombstones change no query answer and compact away at the
+    next apply_deletes, so an at-least-once replay costs duplicate rows
+    in the O(ids) tombstone table, never a wrong answer."""
+    from ..operators.index_maint import BUCKETED, IVF, delete_ids
+
+    kinds = ("ann", "bm25", "trgm")
+    if kind not in kinds:
         raise ValueError(
-            f"unknown index kind {kind!r}; expected one of "
-            f"{sorted(_INDEX_DELETE_FNS)}"
+            f"unknown index kind {kind!r}; expected one of {list(kinds)}"
         )
-    mod_name, fn_name, default_table = _INDEX_DELETE_FNS[kind]
-    import importlib
-
-    mod = importlib.import_module(mod_name, package=__package__)
-    delete_fn = getattr(mod, fn_name)
-    target = table or default_table
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        delete_fn(wh, batch, table=target)
-
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
+    layout = IVF if kind == "ann" else BUCKETED
+    target = table or f"{kind}_index"
+    return index_ingest_stream(
+        spark,
+        src_dir,
+        schema,
+        checkpoint_dir,
+        lambda batch: delete_ids(wh, batch, target, layout),
+        available_now,
+    )
 
 
 def decontam_gate_stream(

@@ -12,7 +12,13 @@ from stock_bars_data_engineering_project_spark.operators.incremental_ann import 
     ann_query,
     build_ann_index,
     ingest_vectors,
-    list_occupancy,
+    maintain_ann_index,
+)
+from stock_bars_data_engineering_project_spark.operators.index_maint import (
+    IVF,
+    apply_deletes,
+    delete_ids,
+    index_occupancy,
 )
 from stock_bars_data_engineering_project_spark.operators.similarity import ivf_topk
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
@@ -57,25 +63,19 @@ def test_ingest_idempotent_and_occupancy(spark, emb, tmp_path):
     ingest_vectors(wh, second, "idx")  # replay
     assert _rows(wh.read("idx").select("vec_id", "cid")) == before
     # every corpus vector is in exactly one list; skew metric present
-    occ = list_occupancy(wh, "idx")
-    total = occ.agg(F.sum("n_vecs")).first()[0]
+    occ = index_occupancy(wh, "idx", IVF)
+    total = occ.agg(F.sum("n_rows")).first()[0]
     assert total == emb.count()
     assert occ.select("skew_ratio").first()[0] >= 1.0
 
 
 def test_tombstone_delete_and_apply(spark, emb, tmp_path):
-    """delete_vectors tombstones: queries immediately equal the
+    """delete_ids tombstones: queries immediately equal the
     one-shot ivf_topk over the surviving corpus with the same frozen
     centroids; deletion is idempotent; a tombstoned id is dead to
     re-ingest; apply_deletes folds the tombstones physically (cid hive
     layout preserved) with answers unchanged, after which the id may be
-    re-ingested — delete-coverage parity with the BM25 index
-    (test_incremental_retrieval.py::test_tombstone_delete_and_apply)."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_ann import (
-        apply_deletes,
-        delete_vectors,
-    )
-
+    re-ingested."""
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     build_ann_index(wh, emb.filter(F.col("vec_id") % 2 == 0), "idx",
                     centroid_stride=40, refine_iters=1)
@@ -84,8 +84,8 @@ def test_tombstone_delete_and_apply(spark, emb, tmp_path):
     dead_ids = [r.vec_id for r in
                 emb.filter(F.col("vec_id") % 10 == 3).limit(30).collect()]
     survivors = emb.filter(~F.col("vec_id").isin(dead_ids))
-    delete_vectors(wh, dead_ids, table="idx")
-    delete_vectors(wh, dead_ids[:5], table="idx")  # idempotent re-delete
+    delete_ids(wh, dead_ids, "idx", IVF)
+    delete_ids(wh, dead_ids[:5], "idx", IVF)  # idempotent re-delete
 
     queries = emb.filter(F.col("vec_id") < 5)
     cent = wh.read("idx__centroids")
@@ -98,7 +98,7 @@ def test_tombstone_delete_and_apply(spark, emb, tmp_path):
     assert wh.read("idx").count() == n_before
     assert _rows(ann_query(wh, queries, "idx", k=5, nprobe=3)) == want
 
-    apply_deletes(wh, table="idx")
+    apply_deletes(wh, "idx", IVF)
     assert _rows(ann_query(wh, queries, "idx", k=5, nprobe=3)) == want
     assert not wh.exists("idx__deleted")
     assert wh.read("idx").filter(F.col("vec_id").isin(dead_ids)).count() == 0
@@ -134,15 +134,9 @@ def test_maintain_index_policy(spark, emb, tmp_path):
     """maintain_ann_index: applies tombstones, reads LIVE skew, and
     retrains only past the policy threshold — the explicit form of the
     module's drift contract."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_ann import (
-        delete_vectors,
-        list_occupancy,
-        maintain_ann_index,
-    )
-
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     build_ann_index(wh, emb, "idx", centroid_stride=40, refine_iters=1)
-    delete_vectors(wh, [r.vec_id for r in emb.limit(5).collect()], table="idx")
+    delete_ids(wh, [r.vec_id for r in emb.limit(5).collect()], "idx", IVF)
 
     # lenient policy: tombstones fold, no retrain, answers preserved
     queries = emb.filter(F.col("vec_id") >= 5).limit(3)
@@ -158,11 +152,11 @@ def test_maintain_index_policy(spark, emb, tmp_path):
                               centroid_stride=40, refine_iters=1)
     if res2["rebuilt"]:
         assert wh.read("idx").count() == emb.count() - 5
-        occ = list_occupancy(wh, "idx").select("skew_ratio").first()[0]
+        occ = index_occupancy(wh, "idx", IVF).select("skew_ratio").first()[0]
         assert occ >= 1.0
     # live vs physical occupancy: tombstones shrink the live view only
-    delete_vectors(wh, [r.vec_id for r in emb.limit(20).collect()][5:10],
-                   table="idx")
-    phys = list_occupancy(wh, "idx").agg(F.sum("n_vecs")).first()[0]
-    live = list_occupancy(wh, "idx", live=True).agg(F.sum("n_vecs")).first()[0]
+    delete_ids(wh, [r.vec_id for r in emb.limit(20).collect()][5:10],
+               "idx", IVF)
+    phys = index_occupancy(wh, "idx", IVF).agg(F.sum("n_rows")).first()[0]
+    live = index_occupancy(wh, "idx", IVF, live=True).agg(F.sum("n_rows")).first()[0]
     assert phys - live == 5

@@ -10,9 +10,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
+    BM25,
     bm25_query,
-    build_bm25_index,
+)
+from stock_bars_data_engineering_project_spark.operators.index_maint import (
+    BUCKETED,
+    apply_deletes,
+    build_lexical_index,
+    delete_ids,
+    index_occupancy,
     ingest_docs,
+    maintain_bucketed_index,
+    postings_table,
 )
 from stock_bars_data_engineering_project_spark.operators.retrieval import bm25_topk
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
@@ -42,8 +51,8 @@ def test_build_ingest_query_matches_one_shot(spark, tmp_path):
     answer queries exactly like bm25_topk over the full corpus."""
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), table="bm")
-    n = ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="bm")
+    build_lexical_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), "bm", BM25)
+    n = ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "bm", BM25)
     assert n == corpus.filter(F.col("doc_id") % 2 == 1).count()
 
     got = _rows(bm25_query(wh, queries, table="bm", k=10))
@@ -58,9 +67,9 @@ def test_ingest_replay_is_noop(spark, tmp_path):
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     half = corpus.filter(F.col("doc_id") % 2 == 0)
-    build_bm25_index(wh, half, table="bm")
+    build_lexical_index(wh, half, "bm", BM25)
     before = _rows(bm25_query(wh, queries, table="bm", k=10))
-    assert ingest_docs(wh, half, table="bm") == 0
+    assert ingest_docs(wh, half, "bm", BM25) == 0
     assert wh.read("bm__docs").count() == half.count()
     assert _rows(bm25_query(wh, queries, table="bm", k=10)) == before
 
@@ -71,7 +80,7 @@ def test_probe_scan_is_bucket_pruned(spark, tmp_path):
     strictly fewer partitions than exist."""
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus, table="bm", n_buckets=16)
+    build_lexical_index(wh, corpus, "bm", BM25, n_buckets=16)
     one_q = queries.limit(1).select(
         "query_id", F.lit("scan").alias("text")
     )
@@ -92,8 +101,8 @@ def test_guards(spark, tmp_path):
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     with pytest.raises(ValueError):
-        build_bm25_index(wh, corpus, table="bm", n_buckets=0)
-    build_bm25_index(wh, corpus.limit(10), table="bm")
+        build_lexical_index(wh, corpus, "bm", BM25, n_buckets=0)
+    build_lexical_index(wh, corpus.limit(10), "bm", BM25)
     with pytest.raises(ValueError):
         bm25_query(wh, queries, table="bm", k=0)
 
@@ -103,20 +112,15 @@ def test_crash_window_duplicate_postings_heal(spark, tmp_path):
     append: the batch's postings are on disk but its docs rows are not.
     Redelivery re-appends the postings (duplicates) plus the docs rows;
     the query path's full-row dedup must heal to the one-shot answer."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        _batch_postings,
-        _postings_table,
-    )
-
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     even = corpus.filter(F.col("doc_id") % 2 == 0)
     odd = corpus.filter(F.col("doc_id") % 2 == 1)
-    build_bm25_index(wh, even, table="bm")
+    build_lexical_index(wh, even, "bm", BM25)
     # crash simulation: postings landed, membership did not
-    wh.append(_batch_postings(odd, 64, "doc_id", "text"), _postings_table("bm"))
+    wh.append(BM25.postings(odd, 64, "doc_id", "text"), postings_table("bm"))
     # redelivery: anti-join sees no membership, ingests the whole batch
-    assert ingest_docs(wh, odd, table="bm") == odd.count()
+    assert ingest_docs(wh, odd, "bm", BM25) == odd.count()
 
     got = _rows(bm25_query(wh, queries, table="bm", k=10))
     want = _rows(bm25_topk(corpus, queries, k=10))
@@ -126,12 +130,12 @@ def test_crash_window_duplicate_postings_heal(spark, tmp_path):
 def test_null_doc_id_rejected_loudly(spark, tmp_path):
     corpus, _ = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus.limit(20), table="bm")
+    build_lexical_index(wh, corpus.limit(20), "bm", BM25)
     bad = spark.createDataFrame(
         [(None, "some text with tokens")], "doc_id long, text string"
     )
     with pytest.raises(Exception, match="NULL doc_id"):
-        ingest_docs(wh, bad, table="bm")
+        ingest_docs(wh, bad, "bm", BM25)
     with pytest.raises(Exception, match="k1"):
         bm25_query(wh, corpus.limit(1).select(
             F.col("doc_id").alias("query_id"), "text"), table="bm", b=1.5)
@@ -141,17 +145,13 @@ def test_occupancy_and_compaction_preserve_answers(spark, tmp_path):
     """index_occupancy covers every bucket; warehouse compaction of the
     append-accumulated postings (the small-files bound for a
     long-lived index) must not change any answer."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        index_occupancy,
-    )
-
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), table="bm")
-    ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), table="bm")
+    build_lexical_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), "bm", BM25)
+    ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "bm", BM25)
 
-    occ = index_occupancy(wh, table="bm").collect()
-    assert sum(r.n_postings for r in occ) == wh.read("bm__postings").count()
+    occ = index_occupancy(wh, "bm", BUCKETED).collect()
+    assert sum(r.n_rows for r in occ) == wh.read("bm__postings").count()
     assert all(r.skew_ratio >= 1.0 for r in occ)
 
     before = _rows(bm25_query(wh, queries, table="bm", k=10))
@@ -160,32 +160,27 @@ def test_occupancy_and_compaction_preserve_answers(spark, tmp_path):
 
 
 def test_tombstone_delete_and_apply(spark, tmp_path):
-    """delete_docs tombstones: queries immediately equal the one-shot
+    """delete_ids tombstones: queries immediately equal the one-shot
     over the surviving corpus (scores, df, and avgdl all exclude the
     deleted docs); deletion is idempotent; apply_deletes folds the
     tombstones physically (bkt layout preserved) with answers
     unchanged, after which the id may be re-ingested."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        apply_deletes,
-        delete_docs,
-    )
-
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus, table="bm")
+    build_lexical_index(wh, corpus, "bm", BM25)
 
     dead_ids = [r.doc_id for r in corpus.limit(40).collect()][:25]
     survivors = corpus.filter(~F.col("doc_id").isin(dead_ids))
-    delete_docs(wh, dead_ids, table="bm")
-    delete_docs(wh, dead_ids[:5], table="bm")  # idempotent re-delete
+    delete_ids(wh, dead_ids, "bm", BUCKETED)
+    delete_ids(wh, dead_ids[:5], "bm", BUCKETED)  # idempotent re-delete
 
     want = _rows(bm25_topk(survivors, queries, k=10))
     assert _rows(bm25_query(wh, queries, table="bm", k=10)) == want
     # tombstoned ids are dead to re-ingest until physically applied
     assert ingest_docs(wh, corpus.filter(F.col("doc_id").isin(dead_ids[:3])),
-                       table="bm") == 0
+                       "bm", BM25) == 0
 
-    apply_deletes(wh, table="bm")
+    apply_deletes(wh, "bm", BUCKETED)
     assert _rows(bm25_query(wh, queries, table="bm", k=10)) == want
     assert not wh.exists("bm__deleted")
     # physical apply preserved the hive layout: a single-token probe
@@ -200,31 +195,24 @@ def test_tombstone_delete_and_apply(spark, tmp_path):
     assert re.search(r"PartitionFilters: \[isnotnull\(bkt#\d+\)", plan)
     # after apply, a deleted id re-ingests as a fresh document
     assert ingest_docs(wh, corpus.filter(F.col("doc_id") == dead_ids[0]),
-                       table="bm") == 1
+                       "bm", BM25) == 1
 
 
 def test_maintain_bm25_policy(spark, tmp_path):
-    """maintain_bm25_index: folds tombstones, reads LIVE skew, and
-    re-buckets only past the policy threshold — the maintain_ann_index
-    contract ported to the lexical index, with the stronger law the
-    lexical rebuild affords: re-bucketing is ANSWER-PRESERVING (bucket
+    """maintain_bucketed_index on BM25: folds tombstones, reads the
+    skew, and re-buckets only past the policy threshold, with the
+    stronger law the lexical rebuild affords over the ANN retrain: re-bucketing is ANSWER-PRESERVING (bucket
     ids prune, never score) and publishes atomically via the __meta
     generation pointer."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        delete_docs,
-        index_occupancy,
-        maintain_bm25_index,
-    )
-
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus, table="bm", n_buckets=16)
+    build_lexical_index(wh, corpus, "bm", BM25, n_buckets=16)
     dead = [r.doc_id for r in corpus.limit(5).collect()]
-    delete_docs(wh, dead, table="bm")
+    delete_ids(wh, dead, "bm", BUCKETED)
     before = _rows(bm25_query(wh, queries, table="bm", k=10))
 
     # lenient policy: tombstones fold, no rebuild, answers preserved
-    res = maintain_bm25_index(wh, "bm", max_skew=1e9)
+    res = maintain_bucketed_index(wh, "bm", max_skew=1e9)
     assert res["rebuilt"] is False and res["skew_ratio"] >= 1.0
     assert res["n_buckets"] == 16
     assert not wh.exists("bm__deleted")
@@ -235,17 +223,17 @@ def test_maintain_bm25_policy(spark, tmp_path):
 
     # strict policy: any skew > 1 re-buckets into factor x more buckets;
     # generation advances, the old table is swept, answers are EQUAL
-    res2 = maintain_bm25_index(wh, "bm", max_skew=1.0000001)
+    res2 = maintain_bucketed_index(wh, "bm", max_skew=1.0000001)
     assert res2["rebuilt"] is True and res2["n_buckets"] == 32
     assert wh.exists("bm__postings_g1") and not wh.exists("bm__postings")
     assert _rows(bm25_query(wh, queries, table="bm", k=10)) == before
-    occ = index_occupancy(wh, table="bm").collect()
-    assert sum(r.n_postings for r in occ) == wh.read("bm__postings_g1").count()
+    occ = index_occupancy(wh, "bm", BUCKETED).collect()
+    assert sum(r.n_rows for r in occ) == wh.read("bm__postings_g1").count()
 
     # ingest after a rebuild lands in the NEW generation at the new
     # bucketing, and the index answers like the one-shot over the union
     refreshed = corpus.filter(F.col("doc_id").isin(dead))
-    assert ingest_docs(wh, refreshed, table="bm") == len(dead)
+    assert ingest_docs(wh, refreshed, "bm", BM25) == len(dead)
     got = _rows(bm25_query(wh, queries, table="bm", k=10))
     want = _rows(bm25_topk(corpus, queries, k=10))
     assert got == want
@@ -255,9 +243,9 @@ def test_maintain_bm25_policy(spark, tmp_path):
     # next maintenance call
     wh.overwrite(wh.read("bm__postings_g1"), "bm__postings_g7")
     assert _rows(bm25_query(wh, queries, table="bm", k=10)) == got
-    maintain_bm25_index(wh, "bm", max_skew=1e9)
+    maintain_bucketed_index(wh, "bm", max_skew=1e9)
     assert not wh.exists("bm__postings_g7")
     assert wh.exists("bm__postings_g1")
 
     with pytest.raises(ValueError, match="rebucket_factor"):
-        maintain_bm25_index(wh, "bm", rebucket_factor=1)
+        maintain_bucketed_index(wh, "bm", rebucket_factor=1)

@@ -1,6 +1,6 @@
 """Streaming ingest drains for the three persisted indexes
-(streaming/incremental.py round 10): each drain must be stream ≡ batch
-— two file waves through one checkpoint answer exactly like the batch
+(streaming/incremental.py): each drain must be stream ≡ batch — two
+file waves through one checkpoint answer exactly like the batch
 ingest path — and exactly-once under checkpoint replay, mirroring
 test_dedup_ingest_stream_matches_batch_path."""
 
@@ -9,7 +9,31 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from stock_bars_data_engineering_project_spark.operators.incremental_ann import (
+    ann_query,
+    build_ann_index,
+    ingest_vectors,
+)
+from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
+    BM25,
+    bm25_query,
+)
+from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
+    TRGM,
+    trgm_query,
+)
+from stock_bars_data_engineering_project_spark.operators.index_maint import (
+    build_lexical_index,
+    ingest_docs,
+    maintain_bucketed_index,
+)
+from stock_bars_data_engineering_project_spark.operators.retrieval import bm25_topk
+from stock_bars_data_engineering_project_spark.operators.trigram import substring_scan
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
+from stock_bars_data_engineering_project_spark.streaming.incremental import (
+    index_delete_stream,
+    index_ingest_stream,
+)
 from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -30,18 +54,10 @@ def _rows(df):
 
 
 def test_ann_ingest_stream_matches_batch_path(spark, emb, tmp_path):
-    """Two embedding file waves drained through ann_ingest_stream land
+    """Two embedding file waves drained through index_ingest_stream land
     the same inverted lists as two ingest_vectors calls, answer queries
     identically, and a replay run with the drained checkpoint changes
     nothing."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_ann import (
-        ann_query,
-        build_ann_index,
-        ingest_vectors,
-    )
-    from stock_bars_data_engineering_project_spark.streaming.incremental import (
-        ann_ingest_stream,
-    )
 
     base = emb.filter(F.col("vec_id") % 3 == 0)
     wave1 = emb.filter(F.col("vec_id") % 3 == 1)
@@ -56,9 +72,15 @@ def test_ann_ingest_stream_matches_batch_path(spark, emb, tmp_path):
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     wave1.write.mode("append").parquet(src)
-    ann_ingest_stream(spark, src, emb.schema, wh_s, ckpt, table="idx")
+    index_ingest_stream(
+        spark, src, emb.schema, ckpt,
+        lambda b: ingest_vectors(wh_s, b, "idx"),
+    )
     wave2.write.mode("append").parquet(src)
-    ann_ingest_stream(spark, src, emb.schema, wh_s, ckpt, table="idx")
+    index_ingest_stream(
+        spark, src, emb.schema, ckpt,
+        lambda b: ingest_vectors(wh_s, b, "idx"),
+    )
 
     ingest_vectors(wh_b, wave1, "idx")
     ingest_vectors(wh_b, wave2, "idx")
@@ -72,24 +94,19 @@ def test_ann_ingest_stream_matches_batch_path(spark, emb, tmp_path):
 
     # replay with the fully-drained checkpoint: no new rows, same answers
     v = wh_s._latest_version("idx")
-    ann_ingest_stream(spark, src, emb.schema, wh_s, ckpt, table="idx")
+    index_ingest_stream(
+        spark, src, emb.schema, ckpt,
+        lambda b: ingest_vectors(wh_s, b, "idx"),
+    )
     assert wh_s._latest_version("idx") == v
     assert _rows(ann_query(wh_s, queries, "idx", k=5, nprobe=3)) == got
 
 
 def test_bm25_ingest_stream_matches_batch_path(spark, docs, tmp_path):
-    """Two document file waves through bm25_ingest_stream answer
+    """Two BM25 document file waves through index_ingest_stream answer
     queries exactly like the one-shot index over the union corpus
     (which the batch law already equates to build+ingest); replay with
     the drained checkpoint appends nothing."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        bm25_query,
-        build_bm25_index,
-    )
-    from stock_bars_data_engineering_project_spark.operators.retrieval import bm25_topk
-    from stock_bars_data_engineering_project_spark.streaming.incremental import (
-        bm25_ingest_stream,
-    )
 
     corpus = docs.filter(F.col("doc_id") >= 25)
     queries = docs.filter(F.col("doc_id") < 25).select(
@@ -100,14 +117,20 @@ def test_bm25_ingest_stream_matches_batch_path(spark, docs, tmp_path):
     wave2 = corpus.filter(F.col("doc_id") % 3 == 2)
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, base, table="bm")
+    build_lexical_index(wh, base, "bm", BM25)
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     wave1.write.mode("append").parquet(src)
-    bm25_ingest_stream(spark, src, corpus.schema, wh, ckpt, table="bm")
+    index_ingest_stream(
+        spark, src, corpus.schema, ckpt,
+        lambda b: ingest_docs(wh, b, "bm", BM25),
+    )
     wave2.write.mode("append").parquet(src)
-    bm25_ingest_stream(spark, src, corpus.schema, wh, ckpt, table="bm")
+    index_ingest_stream(
+        spark, src, corpus.schema, ckpt,
+        lambda b: ingest_docs(wh, b, "bm", BM25),
+    )
 
     def _hits(df):
         return sorted(
@@ -122,26 +145,19 @@ def test_bm25_ingest_stream_matches_batch_path(spark, docs, tmp_path):
     # replay: membership anti-join leaves the index untouched
     n_docs = wh.read("bm__docs").count()
     v = wh._latest_version("bm__postings")
-    bm25_ingest_stream(spark, src, corpus.schema, wh, ckpt, table="bm")
+    index_ingest_stream(
+        spark, src, corpus.schema, ckpt,
+        lambda b: ingest_docs(wh, b, "bm", BM25),
+    )
     assert wh.read("bm__docs").count() == n_docs
     assert wh._latest_version("bm__postings") == v
     assert _hits(bm25_query(wh, queries, table="bm", k=10)) == got
 
 
 def test_trgm_ingest_stream_matches_batch_path(spark, tmp_path):
-    """Two document file waves through trgm_ingest_stream answer
+    """Two trigram document file waves through index_ingest_stream answer
     substring probes exactly like the scan over the union corpus;
     replay with the drained checkpoint appends nothing."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        trgm_query,
-    )
-    from stock_bars_data_engineering_project_spark.operators.trigram import (
-        substring_scan,
-    )
-    from stock_bars_data_engineering_project_spark.streaming.incremental import (
-        trgm_ingest_stream,
-    )
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -161,14 +177,20 @@ def test_trgm_ingest_stream_matches_batch_path(spark, tmp_path):
     wave2 = docs.filter(F.col("doc_id").isin([5, 6]))
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_trgm_index(wh, base, table="tg")
+    build_lexical_index(wh, base, "tg", TRGM)
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     wave1.write.mode("append").parquet(src)
-    trgm_ingest_stream(spark, src, docs.schema, wh, ckpt, table="tg")
+    index_ingest_stream(
+        spark, src, docs.schema, ckpt,
+        lambda b: ingest_docs(wh, b, "tg", TRGM),
+    )
     wave2.write.mode("append").parquet(src)
-    trgm_ingest_stream(spark, src, docs.schema, wh, ckpt, table="tg")
+    index_ingest_stream(
+        spark, src, docs.schema, ckpt,
+        lambda b: ingest_docs(wh, b, "tg", TRGM),
+    )
 
     def _got():
         return sorted(
@@ -183,7 +205,10 @@ def test_trgm_ingest_stream_matches_batch_path(spark, tmp_path):
 
     # replay: nothing appends, answers unchanged
     n = wh.read("tg__postings").count()
-    trgm_ingest_stream(spark, src, docs.schema, wh, ckpt, table="tg")
+    index_ingest_stream(
+        spark, src, docs.schema, ckpt,
+        lambda b: ingest_docs(wh, b, "tg", TRGM),
+    )
     assert wh.read("tg__postings").count() == n
     assert _got() == want
 
@@ -193,21 +218,6 @@ def test_index_delete_stream_tombstones_all_three(spark, emb, docs, tmp_path):
     checkpoint tombstone the target index exactly like batch
     delete calls — queries exclude them immediately — for all three
     index kinds; an unknown kind refuses loudly."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_ann import (
-        ann_query,
-        build_ann_index,
-    )
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        bm25_query,
-        build_bm25_index,
-    )
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        trgm_query,
-    )
-    from stock_bars_data_engineering_project_spark.streaming.incremental import (
-        index_delete_stream,
-    )
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     build_ann_index(wh, emb, "idx", centroid_stride=40, refine_iters=1)
@@ -215,8 +225,8 @@ def test_index_delete_stream_tombstones_all_three(spark, emb, docs, tmp_path):
     queries = docs.filter(F.col("doc_id") < 25).select(
         F.col("doc_id").alias("query_id"), "text"
     )
-    build_bm25_index(wh, corpus, table="bm")
-    build_trgm_index(wh, corpus, table="tg")
+    build_lexical_index(wh, corpus, "bm", BM25)
+    build_lexical_index(wh, corpus, "tg", TRGM)
 
     dead_vecs = [r.vec_id for r in emb.limit(4).collect()]
     dead_docs = [r.doc_id for r in corpus.limit(4).collect()]
@@ -268,29 +278,21 @@ def test_index_lifecycle_end_to_end(spark, docs, tmp_path):
     ingest -> streaming tombstone retraction -> maintenance (tombstone
     fold + strict re-bucket with atomic generation publish) -> answers
     equal the one-shot index over the surviving corpus throughout."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_retrieval import (
-        bm25_query,
-        build_bm25_index,
-        maintain_bm25_index,
-    )
-    from stock_bars_data_engineering_project_spark.operators.retrieval import bm25_topk
-    from stock_bars_data_engineering_project_spark.streaming.incremental import (
-        bm25_ingest_stream,
-        index_delete_stream,
-    )
 
     corpus = docs.filter(F.col("doc_id") >= 25)
     queries = docs.filter(F.col("doc_id") < 25).select(
         F.col("doc_id").alias("query_id"), "text"
     )
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_bm25_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), table="bm")
+    build_lexical_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), "bm", BM25)
 
     # streaming ingest of the other half
     src = str(tmp_path / "src")
     corpus.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(src)
-    bm25_ingest_stream(spark, src, corpus.schema, wh, str(tmp_path / "ck1"),
-                       table="bm")
+    index_ingest_stream(
+        spark, src, corpus.schema, str(tmp_path / "ck1"),
+        lambda b: ingest_docs(wh, b, "bm", BM25),
+    )
 
     # streaming retraction of a handful of ids
     dead = [r.doc_id for r in corpus.limit(5).collect()]
@@ -313,7 +315,7 @@ def test_index_lifecycle_end_to_end(spark, docs, tmp_path):
 
     # maintenance: folds the streamed tombstones, then a strict policy
     # re-buckets with the atomic generation publish — answers unchanged
-    res = maintain_bm25_index(wh, "bm", max_skew=1.0000001)
+    res = maintain_bucketed_index(wh, "bm", max_skew=1.0000001)
     assert not wh.exists("bm__deleted")
     assert res["rebuilt"] is True and wh.exists("bm__postings_g1")
     assert _hits(bm25_query(wh, queries, table="bm", k=10)) == want

@@ -11,6 +11,20 @@ from stock_bars_data_engineering_project_spark.operators.trigram import (
     trigram_postings,
 )
 
+from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
+    TRGM,
+    trgm_query,
+)
+from stock_bars_data_engineering_project_spark.operators.index_maint import (
+    BUCKETED,
+    apply_deletes,
+    build_lexical_index,
+    delete_ids,
+    index_occupancy,
+    ingest_docs,
+    maintain_bucketed_index,
+)
+
 import pyspark.sql.functions as F
 
 DOCS = [
@@ -118,17 +132,11 @@ def test_persisted_index_build_ingest_equals_scan(spark, tmp_path):
     """Index built on even ids + odd ids ingested must answer exactly
     like the scan (and substring_search) over the union corpus —
     including the short-pattern fallback and the trigram decoy."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        ingest_docs,
-        trgm_query,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(PATTERNS, ["pattern_id", "pattern"])
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs.filter(F.col("doc_id") % 2 == 0), table="tg")
-    n = ingest_docs(wh, docs.filter(F.col("doc_id") % 2 == 1), table="tg")
+    build_lexical_index(wh, docs.filter(F.col("doc_id") % 2 == 0), "tg", TRGM)
+    n = ingest_docs(wh, docs.filter(F.col("doc_id") % 2 == 1), "tg", TRGM)
     assert n == 3
     got = sorted(
         (r.pattern_id, r.id)
@@ -138,24 +146,18 @@ def test_persisted_index_build_ingest_equals_scan(spark, tmp_path):
 
 
 def test_persisted_index_replay_is_noop(spark, tmp_path):
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        ingest_docs,
-        trgm_query,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(
         [(101, "abcdef")], ["pattern_id", "pattern"]
     )
     wh = _wh(spark, tmp_path)
     half = docs.filter(F.col("doc_id") % 2 == 1)
-    build_trgm_index(wh, half, table="tg")
+    build_lexical_index(wh, half, "tg", TRGM)
     before = sorted(
         (r.pattern_id, r.id)
         for r in trgm_query(wh, docs, pats, table="tg").collect()
     )
-    assert ingest_docs(wh, half, table="tg") == 0
+    assert ingest_docs(wh, half, "tg", TRGM) == 0
     assert wh.read("tg__docs").count() == half.count()
     after = sorted(
         (r.pattern_id, r.id)
@@ -167,32 +169,22 @@ def test_persisted_index_replay_is_noop(spark, tmp_path):
 def test_persisted_index_short_doc_is_member(spark, tmp_path):
     """Doc 6 ('ab') posts no trigram but must be a member, so its
     re-ingest is a no-op rather than a perpetual re-append."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        ingest_docs,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs, table="tg")
-    assert ingest_docs(wh, docs.filter(F.col("doc_id") == 6), table="tg") == 0
+    build_lexical_index(wh, docs, "tg", TRGM)
+    assert ingest_docs(wh, docs.filter(F.col("doc_id") == 6), "tg", TRGM) == 0
 
 
 def test_probe_scans_only_pattern_buckets(spark, tmp_path):
     """The postings read must carry the probe-bucket partition filter —
     at 100 TB this is the difference between touching the pattern's
     buckets and the whole index."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        trgm_query,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(
         [(101, "abcdef")], ["pattern_id", "pattern"]
     )
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs, table="tg")
+    build_lexical_index(wh, docs, "tg", TRGM)
     plan = (
         trgm_query(wh, docs, pats, table="tg")
         ._jdf.queryExecution()
@@ -208,30 +200,22 @@ def test_probe_scans_only_pattern_buckets(spark, tmp_path):
                       for ln in pf), plan
 
 def test_persisted_index_tombstone_delete_and_apply(spark, tmp_path):
-    """delete_docs tombstones: indexed probes AND the short-pattern scan
+    """delete_ids tombstones: indexed probes AND the short-pattern scan
     fallback immediately answer over survivors only; deletion is
     idempotent; a tombstoned id is dead to re-ingest; apply_deletes
     folds tombstones physically (bkt hive layout preserved) with
     answers unchanged, after which the id re-ingests fresh — delete
     parity with the BM25/ANN indexes."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        apply_deletes,
-        build_trgm_index,
-        delete_docs,
-        ingest_docs,
-        trgm_query,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(PATTERNS, ["pattern_id", "pattern"])
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs.filter(F.col("doc_id") % 2 == 0), table="tg")
-    ingest_docs(wh, docs.filter(F.col("doc_id") % 2 == 1), table="tg")
+    build_lexical_index(wh, docs.filter(F.col("doc_id") % 2 == 0), "tg", TRGM)
+    ingest_docs(wh, docs.filter(F.col("doc_id") % 2 == 1), "tg", TRGM)
 
     # delete docs 1 (matches 'quick brown' + the 'ox' fallback) and 5
     # (the only true 'abcdef' match)
-    delete_docs(wh, [1, 5], table="tg")
-    delete_docs(wh, [1], table="tg")  # idempotent re-delete
+    delete_ids(wh, [1, 5], "tg", BUCKETED)
+    delete_ids(wh, [1], "tg", BUCKETED)  # idempotent re-delete
     want = sorted(
         (pid, did)
         for pid, pat in PATTERNS
@@ -249,10 +233,10 @@ def test_persisted_index_tombstone_delete_and_apply(spark, tmp_path):
     assert (103, 1) not in _got()  # fallback arm also excludes tombstones
 
     # tombstoned ids are dead to re-ingest until physically applied
-    assert ingest_docs(wh, docs.filter(F.col("doc_id") == 1), table="tg") == 0
+    assert ingest_docs(wh, docs.filter(F.col("doc_id") == 1), "tg", TRGM) == 0
     assert _got() == want
 
-    apply_deletes(wh, table="tg")
+    apply_deletes(wh, "tg", BUCKETED)
     assert _got() == want
     assert not wh.exists("tg__deleted")
     assert wh.read("tg__postings").filter(F.col("doc_id").isin([1, 5])).count() == 0
@@ -264,7 +248,7 @@ def test_persisted_index_tombstone_delete_and_apply(spark, tmp_path):
     )
     assert any("bkt" in ln for ln in plan.splitlines() if "PartitionFilters" in ln)
     # after apply, a deleted id re-ingests as a fresh document
-    assert ingest_docs(wh, docs.filter(F.col("doc_id") == 1), table="tg") == 1
+    assert ingest_docs(wh, docs.filter(F.col("doc_id") == 1), "tg", TRGM) == 1
     assert (100, 1) in _got() and (103, 1) in _got()
 
 
@@ -273,15 +257,10 @@ def test_trgm_query_pattern_size_cap_is_loud(spark, tmp_path):
     guard, not silently build a huge broadcast."""
     import pytest
 
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        trgm_query,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(PATTERNS, ["pattern_id", "pattern"])
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs, table="tg")
+    build_lexical_index(wh, docs, "tg", TRGM)
     with pytest.raises(ValueError, match="max_pattern_trigrams"):
         trgm_query(wh, docs, pats, table="tg", max_pattern_trigrams=3)
 
@@ -289,47 +268,31 @@ def test_trgm_query_pattern_size_cap_is_loud(spark, tmp_path):
 def test_trgm_index_occupancy(spark, tmp_path):
     """Occupancy parity with the BM25/ANN indexes: totals match the
     postings, skew >= 1, and the live view shrinks under tombstones."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        delete_docs,
-        index_occupancy,
-    )
-
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs, table="tg")
-    occ = index_occupancy(wh, "tg").collect()
-    assert sum(r.n_postings for r in occ) == wh.read("tg__postings").count()
+    build_lexical_index(wh, docs, "tg", TRGM)
+    occ = index_occupancy(wh, "tg", BUCKETED).collect()
+    assert sum(r.n_rows for r in occ) == wh.read("tg__postings").count()
     assert all(r.skew_ratio >= 1.0 for r in occ)
-    delete_docs(wh, [1], table="tg")
-    phys = sum(r.n_postings for r in index_occupancy(wh, "tg").collect())
+    delete_ids(wh, [1], "tg", BUCKETED)
+    phys = sum(r.n_rows for r in index_occupancy(wh, "tg", BUCKETED).collect())
     live = sum(
-        r.n_postings for r in index_occupancy(wh, "tg", live=True).collect()
+        r.n_rows for r in index_occupancy(wh, "tg", BUCKETED, live=True).collect()
     )
     n_doc1 = wh.read("tg__postings").filter(F.col("doc_id") == 1).count()
     assert phys - live == n_doc1 > 0
 
 
 def test_maintain_trgm_policy(spark, tmp_path):
-    """maintain_trgm_index: fold-only under a lenient threshold with
-    answers preserved; strict threshold re-buckets ANSWER-PRESERVINGLY
-    with an atomic generation publish — completing maintenance-policy
-    parity across the three persisted indexes (ANN round 9, BM25 and
-    trigram round 10)."""
-    from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
-        build_trgm_index,
-        delete_docs,
-        index_occupancy,
-        ingest_docs,
-        maintain_trgm_index,
-        trgm_query,
-    )
-
+    """maintain_bucketed_index on the trigram index: fold-only under a
+    lenient threshold with answers preserved; strict threshold
+    re-buckets ANSWER-PRESERVINGLY with an atomic generation
+    publish."""
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(PATTERNS, ["pattern_id", "pattern"])
     wh = _wh(spark, tmp_path)
-    build_trgm_index(wh, docs, table="tg", n_buckets=8)
-    delete_docs(wh, [1, 5], table="tg")
+    build_lexical_index(wh, docs, "tg", TRGM, n_buckets=8)
+    delete_ids(wh, [1, 5], "tg", BUCKETED)
 
     def _got():
         return sorted(
@@ -346,7 +309,7 @@ def test_maintain_trgm_policy(spark, tmp_path):
     )
 
     # lenient: tombstones fold physically, no rebuild, answers preserved
-    res = maintain_trgm_index(wh, "tg", max_skew=1e9)
+    res = maintain_bucketed_index(wh, "tg", max_skew=1e9)
     assert res["rebuilt"] is False and res["skew_ratio"] >= 1.0
     assert res["n_buckets"] == 8
     assert not wh.exists("tg__deleted")
@@ -354,23 +317,23 @@ def test_maintain_trgm_policy(spark, tmp_path):
 
     # strict: re-bucket into 2x buckets; generation advances atomically,
     # answers EQUAL (bucket ids prune, never match)
-    res2 = maintain_trgm_index(wh, "tg", max_skew=1.0000001)
+    res2 = maintain_bucketed_index(wh, "tg", max_skew=1.0000001)
     assert res2["rebuilt"] is True and res2["n_buckets"] == 16
     assert wh.exists("tg__postings_g1") and not wh.exists("tg__postings")
     assert _got() == before
-    occ = index_occupancy(wh, table="tg").collect()
-    assert sum(r.n_postings for r in occ) == wh.read("tg__postings_g1").count()
+    occ = index_occupancy(wh, "tg", BUCKETED).collect()
+    assert sum(r.n_rows for r in occ) == wh.read("tg__postings_g1").count()
 
     # ingest after the rebuild lands in the new generation; the full
     # answer set is restored
     assert ingest_docs(
-        wh, docs.filter(F.col("doc_id").isin([1, 5])), table="tg"
+        wh, docs.filter(F.col("doc_id").isin([1, 5])), "tg", TRGM
     ) == 2
     assert _got() == _expected()
 
     # crash-atomicity: a cold orphan generation is invisible and swept
     wh.overwrite(wh.read("tg__postings_g1"), "tg__postings_g3")
     assert _got() == _expected()
-    maintain_trgm_index(wh, "tg", max_skew=1e9)
+    maintain_bucketed_index(wh, "tg", max_skew=1e9)
     assert not wh.exists("tg__postings_g3")
     assert wh.exists("tg__postings_g1")
