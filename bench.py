@@ -14,6 +14,14 @@ therefore carries ``duckdb_total`` + ``queries_duckdb`` +
 ``ratio_steady_vs_duckdb`` computed from this run's numbers only.
 ``--duckdb`` still runs the oracle sweep alone; ``--no-duckdb`` skips
 it (iteration mode).
+
+``python bench.py [row ...]``: positional registry row names run only
+those rows (default: ``BENCH_QUERIES``). Each row's cold run and best
+steady run are also split into build seconds (plan construction:
+Python, py4j and the eager build chains) and exec seconds (the noop
+write) under ``queries_build`` / ``queries_exec`` /
+``queries_steady_build`` / ``queries_steady_exec``; ``memo_counts``
+carries ``memo.counts()``, the build-once hits and misses of the run.
 """
 
 from __future__ import annotations
@@ -70,14 +78,29 @@ METHODOLOGY = (
 )
 
 
-def bench_spark(sf_dir: str, steady: bool = False) -> tuple[dict[str, float], dict[str, float]]:
+def _run(q, spark, sf_dir: str) -> tuple[float, float]:
+    """(build, exec) seconds of one run: plan construction (Python,
+    py4j and the eager build chains) apart from the noop-sink write."""
+    t0 = time.time()
+    df = q(spark, sf_dir)
+    t1 = time.time()
+    df.write.mode("overwrite").format("noop").save()
+    return t1 - t0, time.time() - t1
+
+
+def bench_spark(
+    sf_dir: str, steady: bool = False, names: list[str] = BENCH_QUERIES
+) -> tuple[dict[str, float], dict[str, float], dict[str, dict]]:
     """Cold times always; with ``steady``, the min of two further runs
     per query after whole-stage codegen/plan caches are warm — the
     number that predicts cluster-scale throughput, where the
     ~0.3-0.8 s first-run compile amortizes to ~0. A System.gc() fence
     before each query keeps cross-query GC pollution out of the
     timings (see METHODOLOGY, carried in the output payload).
-    Round-over-round comparisons should use the steady column."""
+    Round-over-round comparisons should use the steady column.
+
+    The third value splits the cold run and the best steady run into
+    build and exec seconds per query."""
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entrymod
     from stock_bars_data_engineering_project_spark.session import get_spark
@@ -89,23 +112,24 @@ def bench_spark(sf_dir: str, steady: bool = False) -> tuple[dict[str, float], di
 
     times: dict[str, float] = {}
     steady_times: dict[str, float] = {}
-    for name in BENCH_QUERIES:
+    split: dict[str, dict] = {"build": {}, "exec": {}, "steady_build": {}, "steady_exec": {}}
+    for name in names:
         spark.sparkContext._jvm.System.gc()
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        times[name] = round(time.time() - t0, 3)
+        build, run = _run(qs[name], spark, sf_dir)
+        times[name] = round(build + run, 3)
+        split["build"][name], split["exec"][name] = round(build, 3), round(run, 3)
         if steady:
-            best = None
-            for _ in range(STEADY_REPEATS):
-                t1 = time.time()
-                qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-                t = time.time() - t1
-                best = t if best is None else min(best, t)
-            steady_times[name] = round(best, 3)
-    return times, steady_times
+            best = min(
+                (_run(qs[name], spark, sf_dir) for _ in range(STEADY_REPEATS)),
+                key=sum,
+            )
+            steady_times[name] = round(sum(best), 3)
+            split["steady_build"][name] = round(best[0], 3)
+            split["steady_exec"][name] = round(best[1], 3)
+    return times, steady_times, split
 
 
-def bench_duckdb(sf_dir: str) -> dict[str, float]:
+def bench_duckdb(sf_dir: str, names: list[str] = BENCH_QUERIES) -> dict[str, float]:
     import duckdb
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -119,7 +143,7 @@ def bench_duckdb(sf_dir: str) -> dict[str, float]:
     ).split():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     times: dict[str, float] = {}
-    for name in BENCH_QUERIES:
+    for name in names:
         if name not in oracles:
             continue
         t0 = time.time()
@@ -131,15 +155,17 @@ def bench_duckdb(sf_dir: str) -> dict[str, float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # positional row names restrict the run to those registry rows
+    names = [a for a in sys.argv[1:] if not a.startswith("--")] or BENCH_QUERIES
     if "--duckdb" in sys.argv:
-        times = bench_duckdb(sf_dir)
+        times = bench_duckdb(sf_dir, names)
         print(json.dumps({"engine": "duckdb", "queries": times, "sf": sf}))
         return
     # steady (second-run, codegen amortized) is ON by default so every
     # driver-recorded BENCH file carries the signal round-over-round
     # comparisons should use; --cold-only restores the single-run mode.
     steady = "--cold-only" not in sys.argv
-    times, steady_times = bench_spark(sf_dir, steady=steady)
+    times, steady_times, split = bench_spark(sf_dir, steady=steady, names=names)
     out = {
         "metric": "headline query wall-clock, engine total",
         "value": round(sum(times.values()), 3),
@@ -159,6 +185,12 @@ def main() -> None:
         out["value_steady"] = round(sum(steady_times.values()), 3)
         out["queries_steady"] = steady_times
         out["methodology"] = METHODOLOGY
+    for part, secs in split.items():
+        if secs:
+            out[f"queries_{part}"] = secs
+    from stock_bars_data_engineering_project_spark import memo
+
+    out["memo_counts"] = memo.counts()
     if "--no-duckdb" not in sys.argv:
         # same-session oracle denominator — AFTER the Spark timings
         # (reading the parquet warms the page cache either way, but the
@@ -167,7 +199,7 @@ def main() -> None:
         from stock_bars_data_engineering_project_spark.session import get_spark
 
         get_spark("bench").stop()
-        duck = bench_duckdb(sf_dir)
+        duck = bench_duckdb(sf_dir, names)
         out["queries_duckdb"] = duck
         out["duckdb_total"] = round(sum(duck.values()), 3)
         if steady and out["duckdb_total"] > 0:

@@ -1,4 +1,5 @@
-"""Process-wide build-once memo: the one cache policy in the package.
+"""Process-wide build-once memo and the eager build-chain runner: every
+thread and lock in the package lives here.
 
 ``build_once(key, paths, builder)`` returns ``builder()``'s value,
 building it at most once per key and source-file state:
@@ -22,6 +23,9 @@ building it at most once per key and source-file state:
   age-gated reaper, possibly in another process, judges liveness by it.
 
 ``counts()`` reports hits and misses per cache name.
+
+``run_chains(**chains)`` overlaps a query's independent eager build
+chains (docstring there).
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from __future__ import annotations
 import os
 import threading
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable, TypeVar
 
 T = TypeVar("T")
@@ -117,3 +122,41 @@ def counts() -> dict[str, dict[str, int]]:
     """``{cache name: {"hits": n, "misses": n}}`` since process start."""
     with _lock:
         return {name: dict(c) for name, c in _counts.items()}
+
+
+def run_chains(**chains: Callable[[], object]) -> tuple:
+    """Run zero-argument build chains on one thread each; return their
+    results in keyword order.
+
+    Each chain keeps the caller's Spark local properties (job group,
+    scheduler pool, tags) through ``pyspark.inheritable_thread_target``,
+    and its jobs' description is the caller's with `` / <chain name>``
+    appended, so the event log attributes every job to its chain. All
+    chains finish before the first failure, in keyword order, is
+    re-raised.
+
+    An overlap is kept only while a same-machine A/B justifies it: at
+    least 5 alternating fresh-process pairs with only the row that uses
+    it, serial slower in at least 4 of 5 on cold build time, and a gap
+    between medians larger than the overlapped arm's quartile spread.
+    Otherwise its chains are plain serial code. The tables, one per
+    overlap kept or inlined, are in BASELINE.md "Build-chain overlaps
+    on 4 CPUs".
+    """
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.active()
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+
+    def labelled(name: str, chain: Callable[[], object]) -> Callable[[], object]:
+        def run():
+            sc.setJobDescription(f"{caller} / {name}" if caller else name)
+            return chain()
+
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = [pool.submit(labelled(n, c)) for n, c in chains.items()]
+    return tuple(f.result() for f in futures)

@@ -47,7 +47,6 @@ Contract:
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame
@@ -55,7 +54,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
 from ..materialize import materialize
-from ..memo import build_once
+from ..memo import build_once, run_chains
 from ..sinks.warehouse import ParquetWarehouse
 
 
@@ -239,22 +238,16 @@ def build_lexical_index(
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     docs = _require_ids(docs, id_col, table)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [
-            pool.submit(
-                wh.overwrite,
-                family.postings(docs, n_buckets, id_col, text_col),
-                postings_table(table),
-                partition_by=("bkt",),
-            ),
-            pool.submit(
-                wh.overwrite,
-                family.members(docs, id_col, text_col),
-                docs_table(table),
-            ),
-        ]
-        for f in futures:
-            f.result()
+    run_chains(
+        postings=lambda: wh.overwrite(
+            family.postings(docs, n_buckets, id_col, text_col),
+            postings_table(table),
+            partition_by=("bkt",),
+        ),
+        members=lambda: wh.overwrite(
+            family.members(docs, id_col, text_col), docs_table(table)
+        ),
+    )
     wh.overwrite(
         wh.spark.createDataFrame(
             [(n_buckets, 0)], "n_buckets int, postings_gen int"

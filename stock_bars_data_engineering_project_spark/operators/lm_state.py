@@ -95,26 +95,16 @@ def ingest_lm_batch(
     # manifest commit). The previous keyed merge re-derived the same
     # no-op at the cost of reading the target and anti-joining every
     # epoch — O(state) jobs per ingest for a write that is O(batch) by
-    # construction (round-10 opt). The two appends target DIFFERENT
-    # tables and the crash-heal is order-independent (redelivery
+    # construction. The crash-heal is order-independent: redelivery
     # recomputes the same epoch and appends only the missing table's
-    # partition), so they run as overlapped jobs (guide §2.6,
-    # round-11 opt) instead of serializing two corpus-batch passes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _append(df, table):
+    # partition.
+    for df, table in ((uni, uni_table), (bi, bi_table)):
         if not _epoch_present(wh, table, epoch):
             wh.append(
                 df.withColumn("_epoch", F.lit(epoch)),
                 table,
                 partition_by=("_epoch",),
             )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_uni = pool.submit(_append, uni, uni_table)
-        f_bi = pool.submit(_append, bi, bi_table)
-        f_uni.result()
-        f_bi.result()
     return epoch
 
 

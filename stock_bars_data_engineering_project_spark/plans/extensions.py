@@ -28,7 +28,7 @@ from ..functions.text import (
     tokens,
 )
 from ..functions.quality_model import quality_scores
-from ..memo import build_once
+from ..memo import build_once, run_chains
 from ..operators.asof import asof_join
 from ..operators.chunking import chunk_documents
 from ..operators.contamination import (
@@ -1163,8 +1163,6 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
         )
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..materialize import materialize
     from ..operators.bpe import bpe_segment, train_bpe
     from ..operators.heavy import merged_heavy_hitters, mg_summaries
@@ -1206,39 +1204,25 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         summaries = materialize(mg_summaries(tok_stream, "token", k=_MG_K))
         cand, budget = merged_heavy_hitters(summaries)
-
-        # The four law probes are mutually independent driver jobs over
-        # the materialized summaries/counts (bad_bounds additionally
-        # waits on the 1-row budget read), so they overlap from a small
-        # pool (guide §2.6) instead of serializing four stage floors.
-        def _bad_bounds():
-            total_d = budget.first().total_d
-            return (
-                cand.join(counts, cand["item"] == counts["token"])
-                .filter(
-                    (F.col("lo") > F.col("n"))
-                    | (F.col("n") > F.col("lo") + F.lit(int(total_d)))
-                )
-                .count()
+        missing = exact_hh.join(
+            cand, exact_hh["token"] == cand["item"], "left_anti"
+        ).count()
+        total_d = budget.first().total_d
+        bad_bounds = (
+            cand.join(counts, cand["item"] == counts["token"])
+            .filter(
+                (F.col("lo") > F.col("n"))
+                | (F.col("n") > F.col("lo") + F.lit(int(total_d)))
             )
-
-        with ThreadPoolExecutor(max_workers=3) as law_pool:
-            missing_f = law_pool.submit(
-                lambda: exact_hh.join(
-                    cand, exact_hh["token"] == cand["item"], "left_anti"
-                ).count()
-            )
-            bad_f = law_pool.submit(_bad_bounds)
-            over_f = law_pool.submit(
-                lambda: summaries.filter(F.col("item").isNotNull())
-                .groupBy("pid")
-                .count()
-                .filter(F.col("count") > _MG_K)
-                .count()
-            )
-            missing = missing_f.result()
-            bad_bounds = bad_f.result()
-            oversized = over_f.result()
+            .count()
+        )
+        oversized = (
+            summaries.filter(F.col("item").isNotNull())
+            .groupBy("pid")
+            .count()
+            .filter(F.col("count") > _MG_K)
+            .count()
+        )
         return (
             1.0 if missing == 0 else 0.0,
             1.0 if bad_bounds == 0 else 0.0,
@@ -1258,22 +1242,14 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: train_bpe(docs, n_merges=_BPE_MERGES),
         )
 
-    # The suite's build-once artifacts are mutually independent eager
-    # chains — (a) the materialized wordcount + the MG laws that consume
-    # it, (b) the persisted-LM two-batch ingest, (c) BPE training,
-    # (d) classifier training — so a cold build overlaps them from a
-    # 4-thread pool (guide §2.6) instead of serializing ~12 driver
-    # jobs; steady builds hit the memos and pay only the wordcount job.
-    # Plans and values are identical either way.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        counts_f = pool.submit(_counts_chain)
-        lm_f = pool.submit(_lm_state_warehouse, spark, sf_dir, docs)
-        bpe_f = pool.submit(_bpe_rules)
-        train_f = pool.submit(_classifier_train_laws, spark, sf_dir, docs)
-        counts, mg_flags = counts_f.result()
-        lm_wh = lm_f.result()
-        rules = bpe_f.result()
-        classifier_laws = train_f.result()
+    # four independent eager chains (memo.run_chains); steady builds
+    # hit the memos and pay only the wordcount job
+    (counts, mg_flags), lm_wh, rules, classifier_laws = run_chains(
+        counts=_counts_chain,
+        lm=lambda: _lm_state_warehouse(spark, sf_dir, docs),
+        bpe=_bpe_rules,
+        classifier=lambda: _classifier_train_laws(spark, sf_dir, docs),
+    )
     # Distributed top-k FIRST (TakeOrderedAndProject: per-partition
     # top-100 then a 100-row merge on the driver side of the exchange),
     # then rank the surviving 100 rows. Ranking the full vocabulary
@@ -2673,8 +2649,6 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_corpus_pipeline.py.
     import os as _os
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..streaming.incremental import corpus_refresh_stream
 
     def _refresh_chain():
@@ -2693,19 +2667,14 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_refresh_stream(spark, src_r, docs.schema, wh_r, ckpt_r, bench)
         return wh_r
 
-    # The one-shot 'pipeline' arm (prepare_corpus, ~14 s of eager stage
-    # counts) and the two-wave 'refresh' drain chain (~30 s) are fully
-    # independent — separate scratch warehouses, no shared state beyond
-    # the immutable docs frame — so a build overlaps them (guide §2.6,
-    # round-11 opt); they previously serialized ~44 s of driver-side
-    # build. The refresh chain keeps its internal order (wave 2 is
-    # written only after drain 1 commits — the restart contract under
-    # test).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        pipe_f = pool.submit(prepare_corpus, docs)
-        wh_f = pool.submit(_refresh_chain)
-        pipe_corpus, _pipe_counts = pipe_f.result()
-        wh_r = wh_f.result()
+    # The one-shot 'pipeline' arm and the two-wave 'refresh' drain
+    # chain share nothing but the immutable docs frame, so they run as
+    # independent eager chains (memo.run_chains). The refresh chain
+    # keeps its internal order: wave 2 is written only after drain 1
+    # commits, the restart contract under test.
+    (pipe_corpus, _pipe_counts), wh_r = run_chains(
+        pipeline=lambda: prepare_corpus(docs), refresh=_refresh_chain
+    )
     pipe_arm = _pipe_label(pipe_corpus, "pipeline")
     refresh_arm = _pipe_label(wh_r.read("training_corpus"), "refresh")
     return (
@@ -3455,16 +3424,9 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
 
-    # The row's eager build-time work forms two INDEPENDENT chains —
-    # (a) materialize the brute ranking, then the memoized trained-laws
-    # flags that consume it, and (b) the memoized incremental-index
-    # build + its probe-set collect. They overlap from a 2-thread pool
-    # (guide §2.6: Spark happily runs driver-submitted jobs
-    # concurrently and FIFO backfills the tail) instead of serializing
-    # ~4 driver jobs; results and plans are identical — only the
-    # wall-clock of the eager build shrinks.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # two independent eager chains (memo.run_chains): the brute
+    # ranking + the trained-laws flags that consume it, and the
+    # incremental-index build + its probe-set collect
     from ..operators.incremental_ann import ann_query as _ann_query
 
     def _brute_chain():
@@ -3485,11 +3447,9 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         wh = _ann_incremental_index(spark, sf_dir, emb)
         return _ann_query(wh, queries, table="ann_idx", k=10, nprobe=3)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        brute_f = pool.submit(_brute_chain)
-        index_f = pool.submit(_index_chain)
-        brute, flags = brute_f.result()
-        incremental = index_f.result()
+    (brute, flags), incremental = run_chains(
+        brute=_brute_chain, index=_index_chain
+    )
     from ..functions.vectors import dequantize_int8, quantize_int8_sql
 
     corpus_dq = emb.select(
@@ -4337,21 +4297,13 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..materialize import materialize
 
-    # The row's eager build-time work forms three INDEPENDENT driver
-    # chains — (a) materialize the lexical ranking, then the PRF
-    # expansion + second-pass probe that consume it, (b) the memoized
-    # BM25 index build + the 'index' arm's probe collect, (c) the
-    # memoized trigram index build + the 'trgm' arm's pattern collect.
-    # They overlap from a 3-thread pool (guide §2.6 — Spark runs
-    # driver-submitted jobs concurrently, FIFO backfills the tail)
-    # instead of serializing ~6 driver jobs; plans and values are
-    # identical, only the eager-build wall shrinks. build_once locks per
-    # index, so chains (a) and (b) sharing _bm25_index cannot race a
-    # double build while the bm25 and trgm builds still overlap.
+    # three independent eager chains (memo.run_chains): the lexical
+    # ranking + the PRF probe that consumes it, the BM25 index + the
+    # 'index' probe, the trigram index + the 'trgm' probe. build_once
+    # locks per entry, so the two chains asking for _bm25_index share
+    # one build.
     patterns = docs.filter(F.col("doc_id").isin(1, 7, 13, 19)).select(
         F.col("doc_id").alias("pattern_id"),
         F.substring("text", 11, 12).alias("pattern"),
@@ -4395,13 +4347,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             table="trgm_idx",
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        lex_f = pool.submit(_lex_chain)
-        index_f = pool.submit(_index_chain)
-        trgm_f = pool.submit(_trgm_chain)
-        lex, prf = lex_f.result()
-        index = index_f.result()
-        matches = trgm_f.result()
+    (lex, prf), index, matches = run_chains(
+        lex=_lex_chain, index=_index_chain, trgm=_trgm_chain
+    )
     recompute = _round(lex, "recompute")
 
     emb = load_table(spark, sf_dir, "embeddings")

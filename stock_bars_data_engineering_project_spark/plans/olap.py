@@ -665,11 +665,9 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref_counts = ev.groupBy("event_type", bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    # ONE narrow projection write feeds BOTH streaming arms (round-11
-    # opt, guide §6): arms (h) and (j) read the identical
-    # (event_id, ts, event_type, value) slice, so the second write job
-    # and its scratch dir were pure duplication. The two drains are
-    # submitted together further down (guide §2.6).
+    # ONE narrow projection write feeds BOTH streaming arms: arms (h)
+    # and (j) read the identical (event_id, ts, event_type, value)
+    # slice. The two drains run together further down.
     sub = ev.select("event_id", "ts", "event_type", "value")
     root = scratch_warehouse(spark, "psi_stream_rows").root
     src = os.path.join(root, "_src")
@@ -682,12 +680,10 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type"), day_idx.alias("day_idx"), bucket.alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n"))
     # Arm (j)'s stream (docstring below, at its arm) is built HERE so
-    # the two availableNow drains — the suite's only eager build jobs —
-    # run concurrently from a 2-thread pool (guide §2.6) instead of
-    # serializing two stream-start floors. ``out_stats`` is shared with
-    # arm (i) below.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the two availableNow drains, the suite's only eager build jobs,
+    # run as independent chains (memo.run_chains). ``out_stats`` is
+    # shared with arm (i) below.
+    from ..memo import run_chains
     from ..operators.drift import mad_outliers
 
     out_stats = mad_outliers(ev, "value", keys=("event_type",))
@@ -723,15 +719,12 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("n_outliers"),
     )
-    with ThreadPoolExecutor(max_workers=2) as drain_pool:
-        f_psi = drain_pool.submit(
-            run_stream_to_memory, cur, "stats_psi_stream", "complete"
-        )
-        f_out = drain_pool.submit(
-            run_stream_to_memory, cur_o, "stats_outlier_stream", "complete"
-        )
-        f_psi.result()
-        f_out.result()
+    run_chains(
+        psi=lambda: run_stream_to_memory(cur, "stats_psi_stream", "complete"),
+        outliers=lambda: run_stream_to_memory(
+            cur_o, "stats_outlier_stream", "complete"
+        ),
+    )
     psi_stream_arm = (
         psi_vs_reference(
             spark.table("stats_psi_stream"),

@@ -1,6 +1,8 @@
 """The package's one build-once memo (``memo.build_once``): key, bound,
-per-entry locking, warehouse liveness and hit/miss counts. Pure-Python
-builders; no Spark session."""
+per-entry locking, warehouse liveness and hit/miss counts, with
+pure-Python builders; and its one build-chain runner
+(``memo.run_chains``): order, overlap, inherited local properties and
+failure, on the session ``spark`` fixture."""
 
 from __future__ import annotations
 
@@ -191,6 +193,7 @@ def test_raising_builder_caches_nothing(name):
 
 
 _MEMO_NAME = ("_MEMO", "_CACHE")
+_THREADING = ("Lock", "RLock", "ThreadPoolExecutor", "Thread", "InheritableThread")
 
 
 def _hand_rolled(tree: ast.Module) -> list[str]:
@@ -210,16 +213,20 @@ def _hand_rolled(tree: ast.Module) -> list[str]:
         if isinstance(node, ast.Call):
             f = node.func
             called = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
-            if called in ("Lock", "RLock"):
+            if called in _THREADING:
                 found.append(f"{called}() (line {node.lineno})")
     return found
 
 
 def test_no_hand_rolled_memos_outside_memo_module():
-    """Process-wide caches and locks go through memo.build_once, so the
-    key, bound, locking and liveness policy is decided in one place."""
-    sample = "import threading\n_X_MEMO: dict = {}\nL = threading.RLock()\n"
-    assert len(_hand_rolled(ast.parse(sample))) == 2
+    """Process-wide caches and locks go through memo.build_once, and
+    threads through memo.run_chains, so the key, bound, locking,
+    liveness and overlap policy is decided in one place."""
+    sample = (
+        "import threading\n_X_MEMO: dict = {}\nL = threading.RLock()\n"
+        "T = ThreadPoolExecutor(max_workers=2)\n"
+    )
+    assert len(_hand_rolled(ast.parse(sample))) == 3
     offenders = {
         str(p.relative_to(PACKAGE)): hits
         for p in sorted(PACKAGE.rglob("*.py"))
@@ -227,3 +234,72 @@ def test_no_hand_rolled_memos_outside_memo_module():
         if (hits := _hand_rolled(ast.parse(p.read_text())))
     }
     assert offenders == {}
+
+
+def test_run_chains_returns_results_in_keyword_order(spark):
+    def late():
+        time.sleep(0.2)
+        return "b"
+
+    assert memo.run_chains(b=late, a=lambda: "a", c=lambda: "c") == ("b", "a", "c")
+
+
+def test_run_chains_overlaps_its_chains(spark):
+    # each chain waits for the other to start: run one after the other,
+    # the first would time out and return False
+    a, b = threading.Event(), threading.Event()
+
+    def chain(mine, other):
+        def run():
+            mine.set()
+            return other.wait(timeout=10)
+
+        return run
+
+    assert memo.run_chains(a=chain(a, b), b=chain(b, a)) == (True, True)
+
+
+def test_chain_inherits_local_properties_and_names_its_jobs(spark):
+    sc = spark.sparkContext
+    group = "test-run-chains"
+    sc.setLocalProperty("test.run_chains", "caller")
+    sc.setJobGroup(group, "suite")
+
+    def probe():
+        spark.range(3).count()
+        return sc.getLocalProperty("test.run_chains")
+
+    try:
+        (seen,) = memo.run_chains(probe=probe)
+    finally:
+        for key in (
+            "test.run_chains",
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert seen == "caller"
+    # the status store is fed by the listener bus, asynchronously
+    deadline = time.time() + 10
+    while not (jobs := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.time() < deadline, "the chain's job lost the caller's group"
+        time.sleep(0.05)
+    store = sc._jsc.sc().statusStore()
+    assert {store.job(j).description().get() for j in jobs} == {"suite / probe"}
+
+
+def test_run_chains_raises_after_every_chain_finishes(spark):
+    done = []
+
+    def slow():
+        time.sleep(0.3)
+        done.append("slow")
+        raise KeyError("second in keyword order")
+
+    def boom():
+        raise ValueError("first in keyword order")
+
+    with pytest.raises(ValueError, match="first in keyword order"):
+        memo.run_chains(boom=boom, slow=slow)
+    assert done == ["slow"]
