@@ -74,7 +74,9 @@ METHODOLOGY = (
     "before each query's runs, so one query's heap garbage cannot land "
     "as a full-GC pause inside another's timing — the min-of-N + gc "
     "fence is what makes round-over-round steady deltas decision-grade "
-    "on a long-lived 48 GiB local[32] JVM"
+    "on a long-lived "
+    f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}] JVM with a "
+    f"{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '48g')} driver heap"
 )
 
 

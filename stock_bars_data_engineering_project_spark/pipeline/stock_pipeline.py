@@ -13,7 +13,9 @@ stock_bars.py:33-134) re-expressed over Spark primitives:
 
 Every stage is a pure DataFrame transform — the driver only ever
 collects the one watermark scalar (A1), so the pipeline's scale ceiling
-is the cluster's, not the driver's.
+is the cluster's, not the driver's. The dim's symbol list that ``run()``
+collects is not data it pulls back: ``default_dim`` is a JVM-local
+frame, and collecting it starts no Spark job.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.analysis import bars_analysis
+from ..session import local_frame
 from ..sinks.checkpoint import get_checkpoint, save_checkpoint
 from ..sinks.warehouse import ParquetWarehouse
 from ..sources.bars_source import register as register_bars_source
@@ -231,7 +234,9 @@ def run(
 
 def default_dim(spark: SparkSession) -> DataFrame:
     """The 10-ticker dimension (reference CSV
-    etl_project/data/top_tech_stock_symbol.csv) as an inline frame."""
+    etl_project/data/top_tech_stock_symbol.csv) as an inline frame,
+    planned as a JVM ``LocalTableScan``: ``run()``'s symbol collect runs
+    no Spark job, and the broadcast join starts no Python worker."""
     rows = [
         ("Apple", "AAPL", "NASDAQ"),
         ("Microsoft", "MSFT", "NASDAQ"),
@@ -244,4 +249,4 @@ def default_dim(spark: SparkSession) -> DataFrame:
         ("Salesforce", "CRM", "NYSE"),
         ("Intel", "INTC", "NASDAQ"),
     ]
-    return spark.createDataFrame(rows, "Company string, Symbol string, Exchange string")
+    return local_frame(spark, rows, "Company string, Symbol string, Exchange string")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .warehouse import ParquetWarehouse
 
 CHECKPOINT_TABLE = "check_points"
@@ -34,7 +35,9 @@ def get_checkpoint(wh: ParquetWarehouse, table_name: str) -> str | None:
 def save_checkpoint(wh: ParquetWarehouse, table_name: str, latest_timestamp: str) -> None:
     """C2: upsert (table_name, latest_timestamp) — the reference's raw
     ON CONFLICT DO UPDATE (utilities.py:24-49) as a keyed merge."""
-    row = wh.spark.createDataFrame(
-        [(table_name, latest_timestamp)], "table_name string, latest_timestamp string"
+    row = local_frame(
+        wh.spark,
+        [(table_name, latest_timestamp)],
+        "table_name string, latest_timestamp string",
     )
     wh.merge(row, CHECKPOINT_TABLE, keys=("table_name",))

@@ -49,7 +49,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from ..memo import build_once
+from ..session import local_frame
 
 _POINTER = "_LATEST"
 _MANIFEST = "_MANIFEST"
@@ -646,6 +648,15 @@ class ParquetWarehouse:
         statement touches a PK twice (SURVEY Q6), so unique-by-key is part
         of the operation's contract, made explicit here.
 
+        The deduped batch is evaluated exactly once, through
+        ``materialize``, before the writer lock is taken; the partition
+        probe, the anti-join, the union and a first write all read that
+        one result. A live source (a REST API, a stream) can return
+        different rows to two evaluations, and the merge would then
+        write a duplicate key or drop a row; and a slow source evaluated
+        under the lock would hold every other writer of the table off
+        while it runs.
+
         new = source ∪ (target ⟕anti source on keys) — one shuffle each
         side on the key columns. When the table is hive-partitioned on a
         prefix of the merge key, the rewrite is pruned to the partitions
@@ -674,7 +685,7 @@ class ParquetWarehouse:
                 return df.repartition(*[F.col(c) for c in partition_by])
             return df
 
-        src = source.dropDuplicates(list(keys))
+        src = materialize(source.dropDuplicates(list(keys)))
         with self._write_lock(table):
             if not self.exists(table):
                 version = self._write_snapshot(
@@ -1713,8 +1724,8 @@ class ParquetWarehouse:
     def log(self, table: str, message: str) -> None:
         """K6: append-only (timestamp, log_message) run log
         (log_metadata.py:34-38)."""
-        row = self.spark.createDataFrame(
-            [(time.time(), message)], "unix_ts double, log_message string"
+        row = local_frame(
+            self.spark, [(time.time(), message)], "unix_ts double, log_message string"
         ).select(
             F.timestamp_seconds(F.col("unix_ts")).alias("timestamp"), "log_message"
         )

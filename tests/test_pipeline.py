@@ -6,6 +6,9 @@ reference's analysis SQL
 
 from __future__ import annotations
 
+import contextlib
+import time
+
 import duckdb
 import pytest
 
@@ -16,6 +19,7 @@ from stock_bars_data_engineering_project_spark.pipeline.stock_pipeline import (
     run,
     transform_bars,
 )
+from stock_bars_data_engineering_project_spark.session import local_frame
 from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse, get_checkpoint
 
 # The reference SQL with :: casts spelled as CAST and rounding routed
@@ -137,3 +141,56 @@ def test_load_method_dispatch_overwrite(spark, wh):
     info = run(spark, wh, cfg, default_dim(spark))
     assert "error" not in info
     assert wh.read(cfg.table).count() == 220
+
+
+def _leaves(df) -> set[str]:
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_local_frames_run_no_python_jobs(spark, wh):
+    """default_dim and the checkpoint/log rows are JVM-local frames:
+    their plans scan a LocalTableScan, collecting the dim's symbols
+    (the one collect run() makes besides the watermark) submits no Spark
+    job, and the run and checkpoint tables keep their schemas."""
+    dim = default_dim(spark)
+    row = local_frame(spark, [(1.5, "x")], "unix_ts double, log_message string")
+    assert _leaves(dim) == _leaves(row) == {"LocalTableScan"}
+    assert row.dtypes == [("unix_ts", "double"), ("log_message", "string")]
+
+    sc = spark.sparkContext
+    with _job_group(sc, "local-frame-dim"):
+        symbols = dim.select("Symbol").collect()
+    # a Python-RDD frame does submit a job; the status store is fed in
+    # event order, so once the control job shows, the dim's would too
+    with _job_group(sc, "local-frame-control"):
+        spark.createDataFrame([("a",)], "s string").collect()
+    deadline = time.time() + 10
+    while not sc.statusTracker().getJobIdsForGroup("local-frame-control"):
+        assert time.time() < deadline, "the control job never reached the status store"
+        time.sleep(0.05)
+    assert len(symbols) == 10
+    assert list(sc.statusTracker().getJobIdsForGroup("local-frame-dim")) == []
+
+    cfg = PipelineConfig()
+    assert run(spark, wh, cfg, dim)["mode"] == "full"
+    info = run(spark, wh, cfg, dim)
+    assert info["mode"] == "incremental" and "error" not in info, info
+    assert wh.read(cfg.log_table).dtypes == [
+        ("timestamp", "timestamp"),
+        ("log_message", "string"),
+    ]
+    assert wh.read("check_points").dtypes == [
+        ("table_name", "string"),
+        ("latest_timestamp", "string"),
+    ]

@@ -121,6 +121,30 @@ def test_log_appends(spark, wh):
     assert sorted(msgs) == ["run one", "run two"]
 
 
+def test_merge_evaluates_batch_once(spark, wh):
+    """The batch feeds both the anti-join and the union; a source that
+    is evaluated once per consumer (a live API can answer differently
+    each time) would run twice and could write a duplicate key."""
+    from pyspark.sql import functions as F
+
+    wh.append(_df(spark, [(f"S{i}", "x", 1.0) for i in range(5)]), "t")
+    evals = spark.sparkContext.accumulator(0)
+
+    def key(i):
+        evals.add(1)
+        return f"S{i}"
+
+    batch = spark.range(10).select(
+        F.udf(key, "string")("id").alias("stock"),
+        F.lit("x").alias("timestamp"),
+        F.lit(2.0).alias("close"),
+    )
+    wh.merge(batch, "t", keys=("stock", "timestamp"))
+    assert evals.value == 10
+    keys = [(r.stock, r.timestamp) for r in wh.read("t").collect()]
+    assert len(keys) == len(set(keys)) == 10
+
+
 def test_merge_key_moving_partitions_does_not_duplicate(spark, wh):
     """A key whose partition value changes between batches must end up
     with exactly ONE row (source wins): the partition-pruned rewrite is
