@@ -152,7 +152,7 @@ def rebuild_analysis(wh: ParquetWarehouse, cfg: PipelineConfig) -> None:
             "moving_stddev": "stddev_5_day",
         }
     )
-    wh.create_as(out, cfg.analysis_table)
+    wh.overwrite(out, cfg.analysis_table)
 
 
 def run(

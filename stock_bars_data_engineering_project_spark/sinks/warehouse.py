@@ -35,6 +35,15 @@ source batch — at 100 TB with date-partitioned facts an incremental
 upsert rewrites a handful of date partitions, not the table. The
 unpartitioned fallback is a full anti-join rewrite, which is what
 MERGE degenerates to on any engine when the target isn't partitioned.
+
+Layout rule (every write verb): a new table takes the caller's
+``partition_by`` (none if omitted); an existing table keeps the layout
+its live snapshot recorded (``_LAYOUT``) when ``partition_by`` is
+``None`` or equal to it. A different layout is a full rewrite, so only
+``overwrite`` and ``compact`` accept it; ``append`` and ``merge`` raise
+``ValueError`` — their batch members and pruned rewrites share the
+live snapshot's files, which a second layout would make unreadable or
+silently drop. ``delete_where`` always keeps the recorded layout.
 """
 
 from __future__ import annotations
@@ -135,7 +144,8 @@ def _types_compatible(a: str, b: str) -> bool:
 
 def _partition_values_pred(parts: list[tuple], partition_by) -> "Column":
     """Static partition-pruning predicate from a bounded list of touched
-    partition-value tuples (NULL-safe): OR over per-partition AND terms."""
+    partition-value tuples (NULL-safe): OR over per-partition AND terms;
+    false for no tuples."""
     pred = None
     for vals in parts:
         conj = None
@@ -143,7 +153,26 @@ def _partition_values_pred(parts: list[tuple], partition_by) -> "Column":
             term = F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
             conj = term if conj is None else (conj & term)
         pred = conj if pred is None else (pred | conj)
-    return pred
+    return F.lit(False) if pred is None else pred
+
+
+def _colocated(df: DataFrame, partition_by: tuple[str, ...]) -> DataFrame:
+    """Co-locate each hive partition before a write: without it each of
+    the upstream shuffle's N partitions writes a sliver into every
+    partition dir — N×P files where P suffice, and every later read of
+    the table pays for listing them."""
+    if partition_by:
+        return df.repartition(*[F.col(c) for c in partition_by])
+    return df
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    """unionByName of snapshot-member reads, aligning drift-appended
+    members the way ``append(allow_schema_drift=True)`` aligned them."""
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
+    return out
 
 
 def _file_bloom(
@@ -215,8 +244,8 @@ def _py_bloom_positions(value, m_bits: int, n_hashes: int) -> list[int]:
 class ParquetWarehouse:
     spark: SparkSession
     root: str
-    # Writer-lock contention policy (round 9): transient contention —
-    # another pipeline step holding the same table's lock for the
+    # Writer-lock contention policy: transient contention — another
+    # pipeline step holding the same table's lock for the
     # read->snapshot->commit span — retries with exponential backoff
     # before failing. 0 attempts restores the fail-fast posture.
     lock_retries: int = 5
@@ -259,7 +288,7 @@ class ParquetWarehouse:
         transactional here). An ``O_CREAT|O_EXCL`` lock file makes the
         claim atomic on POSIX filesystems.
 
-        Contention policy (round 9): TRANSIENT contention is legitimate
+        Contention policy: TRANSIENT contention is legitimate
         concurrency — two pipeline steps appending different batches to
         the same table are both correct, just serialized — so a failed
         claim retries ``lock_retries`` times with exponential backoff
@@ -313,6 +342,36 @@ class ParquetWarehouse:
         except FileNotFoundError:
             return None
 
+    def _version(self, table: str, version: str | None = None) -> str:
+        """``version``, or the live one; raises for a missing table."""
+        v = version or self._latest_version(table)
+        if v is None:
+            raise FileNotFoundError(f"no such table: {table}")
+        return v
+
+    def _resolve_layout(
+        self,
+        table: str,
+        partition_by: tuple[str, ...] | None,
+        relayout: bool = False,
+    ) -> tuple[str, ...]:
+        """The hive layout a write commits, by the module's layout rule;
+        ``relayout`` marks the full rewrites that may change it. Call
+        under the table's writer lock."""
+        cur = self._latest_version(table)
+        if cur is None:
+            return tuple(partition_by or ())
+        live = self._layout(table, cur)
+        if partition_by is None:
+            return live
+        if tuple(partition_by) != live and not relayout:
+            raise ValueError(
+                f"{table!r} is laid out by partition_by={live!r}, not "
+                f"{tuple(partition_by)!r}; only overwrite and compact may "
+                "change a table's layout"
+            )
+        return tuple(partition_by)
+
     def _next_version(self, table: str) -> str:
         # Allocate past the max ON-DISK version, not the _LATEST pointer:
         # after restore() the pointer points backwards, and pointer-based
@@ -350,10 +409,8 @@ class ParquetWarehouse:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         if partition_by:
-            # record the hive layout so append can INHERIT it (a caller
-            # appending without partition_by must not silently flatten a
-            # partitioned table — especially the every-manifest_limit-th
-            # materializing append, where the rewrite would be invisible)
+            # the recorded layout is what later writes resolve against
+            # (module docstring, layout rule)
             with open(os.path.join(path, _LAYOUT), "w") as f:
                 f.write(",".join(partition_by))
         return version
@@ -400,27 +457,13 @@ class ParquetWarehouse:
         survive); ``allowMissingColumns`` aligns drift-appended members
         the same way ``append(allow_schema_drift=True)`` aligned them at
         write time."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
-        members = self._manifest_members(table, v)
-        parts = [
+        v = self._version(table, version)
+        return _union([
             _read_version_dir(
                 self.spark, os.path.join(self.table_path(table), m)
             )
-            for m in members
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
-
-    def sql(self, query: str, **views: str) -> DataFrame:
-        """S6: ad-hoc SQL over warehouse tables (extract_from_query,
-        assets.py:146-147). ``views`` maps view-name -> table-name."""
-        for view, table in views.items():
-            self.read(table).createOrReplaceTempView(view)
-        return self.spark.sql(query)
+            for m in self._manifest_members(table, v)
+        ])
 
     # -- writes (K1/K2/K3/K4) ----------------------------------------------
 
@@ -428,7 +471,7 @@ class ParquetWarehouse:
         self,
         df: DataFrame,
         table: str,
-        partition_by: tuple[str, ...] = (),
+        partition_by: tuple[str, ...] | None = None,
         allow_schema_drift: bool = False,
         manifest_limit: int = 64,
     ) -> None:
@@ -453,16 +496,12 @@ class ParquetWarehouse:
         drifted append forever.
         """
         with self._write_lock(table):
-            if not self.exists(table):
+            partition_by = self._resolve_layout(table, partition_by)
+            prev = self._latest_version(table)
+            if prev is None:
                 version = self._write_snapshot(df, table, partition_by)
                 self._commit(table, version)
                 return
-            prev = self._latest_version(table)
-            # an append never intends a layout change: inherit the live
-            # snapshot's recorded hive layout when the caller omits it,
-            # so batch members AND the limit-triggered materialization
-            # keep the table partitioned
-            partition_by = partition_by or self._layout(table, prev)
             existing = None
             if not allow_schema_drift:
                 existing = self.read(table)
@@ -536,10 +575,9 @@ class ParquetWarehouse:
     ) -> None:
         """K2: drop-and-replace (postgresql.py:75-77) as a snapshot flip.
 
-        ``partition_by=None`` (the default) INHERITS the live snapshot's
-        recorded hive layout — overwriting the data must not silently
-        flatten a partitioned table. Pass an explicit ``()`` to
-        intentionally rewrite unpartitioned.
+        ``partition_by=None`` (the default) keeps the live snapshot's
+        recorded hive layout; an explicit layout, ``()`` included,
+        re-lays the table out (module docstring, layout rule).
 
         ``cluster_by`` range-partitions and sorts the snapshot on the
         given columns before writing: every data file then covers a
@@ -576,32 +614,31 @@ class ParquetWarehouse:
             args = ([n_files] if n_files else []) + [F.col(c) for c in cluster_by]
             df = df.repartitionByRange(*args).sortWithinPartitions(*cluster_by)
         with self._write_lock(table):
-            if partition_by is None:
-                cur = self._latest_version(table)
-                partition_by = self._layout(table, cur) if cur else ()
+            partition_by = self._resolve_layout(
+                table, partition_by, relayout=True
+            )
             version = self._write_snapshot(df, table, partition_by)
-            if cluster_by or zorder_by:
-                # record the layout INTENT beside the snapshot, so
-                # compact can re-apply it instead of silently degrading
-                # every stats-skipping property the layout bought
+            # record the layout INTENT beside the snapshot, so compact
+            # can re-apply it instead of silently degrading every
+            # stats-skipping property the layout bought
+            if zorder_by:
                 self._record_cluster(
-                    table, version, cluster_by, zorder_by, zorder_scaler
+                    table, version, "zorder", zorder_by, zorder_scaler
+                )
+            elif cluster_by:
+                self._record_cluster(
+                    table, version, "cluster", cluster_by, "minmax"
                 )
             self._commit(table, version)
 
     def _record_cluster(
-        self,
-        table: str,
-        version: str,
-        cluster_by: tuple[str, ...],
-        zorder_by: tuple[str, ...],
-        zorder_scaler: str = "minmax",
+        self, table: str, version: str, kind: str, cols, scaler: str
     ) -> None:
-        spec = (
-            f"zorder:{','.join(zorder_by)}:{zorder_scaler}"
-            if zorder_by
-            else f"cluster:{','.join(cluster_by)}"
-        )
+        """Write a (kind, cols, scaler) cluster intent, the triple
+        :meth:`_cluster_spec` reads back; only z-order has a scaler."""
+        spec = f"{kind}:{','.join(cols)}"
+        if kind == "zorder":
+            spec += f":{scaler}"
         with open(
             os.path.join(self.table_path(table), version, _CLUSTER), "w"
         ) as f:
@@ -622,16 +659,9 @@ class ParquetWarehouse:
                     spec = f.read().strip()
             except FileNotFoundError:
                 continue
-            if spec.startswith("zorder:"):
-                _, cols, scaler = spec.split(":")
-                return "zorder", tuple(cols.split(",")), scaler
-            return "cluster", tuple(spec.split(":")[1].split(",")), "minmax"
+            kind, cols, *scaler = spec.split(":")
+            return kind, tuple(cols.split(",")), (scaler or ["minmax"])[0]
         return None
-
-    def create_as(self, df: DataFrame, table: str) -> None:
-        """K4: CTAS — the analysis table's drop+create
-        (stock_bars_analysis.sql:2-3) is exactly overwrite."""
-        self.overwrite(df, table)
 
     def merge(
         self,
@@ -658,120 +688,63 @@ class ParquetWarehouse:
         while it runs.
 
         new = source ∪ (target ⟕anti source on keys) — one shuffle each
-        side on the key columns. When the table is hive-partitioned on a
-        prefix of the merge key, the rewrite is pruned to the partitions
-        the source touches — and since round 10 that pruning is PHYSICAL:
-        only the touched partitions' merged rows are written; every
-        untouched partition's immutable parquet files carry into the new
-        snapshot as hardlinks (the local-filesystem form of Iceberg/
-        Delta's file-reference manifests — zero data bytes moved, and
-        vacuum of the old version cannot strand the new one because the
-        inodes are shared). Merge I/O is then O(touched + batch) however
-        large the table — the property the x64 refresh soak showed the
-        previous join-only pruning did NOT have (it still rewrote every
-        row of the merged frame).
+        side on the key columns. When the table is hive-partitioned on
+        columns of the merge key, the rewrite is pruned PHYSICALLY to
+        the partitions the source touches (:meth:`_rewrite_partitions`):
+        only their merged rows are written and every untouched
+        partition's files carry over as hardlinks, so merge I/O is
+        O(touched + batch) however large the table.
         """
         from ..operators.merge import upsert_frames
 
-        def _colocated(df: DataFrame) -> DataFrame:
-            # co-locate each hive partition before the write (the
-            # build_ann_index small-files discipline, enforced HERE so
-            # every merge inherits it): without this each of the
-            # upsert's N shuffle partitions writes a sliver into every
-            # touched partition dir — N×P files where P suffice, and at
-            # x128 the refresh soak measured the resulting file LISTING
-            # dominating every subsequent skinny read of the table
-            if partition_by:
-                return df.repartition(*[F.col(c) for c in partition_by])
-            return df
-
         src = materialize(source.dropDuplicates(list(keys)))
         with self._write_lock(table):
-            if not self.exists(table):
+            partition_by = self._resolve_layout(table, partition_by)
+            prev = self._latest_version(table)
+            if prev is None:
                 version = self._write_snapshot(
-                    _colocated(src), table, partition_by or ()
+                    _colocated(src, partition_by), table, partition_by
                 )
                 self._commit(table, version)
                 return
-            prev = self._latest_version(table)
-            if partition_by is None:
-                # a merge never intends a layout change (same contract as
-                # append): inherit the live snapshot's recorded hive
-                # layout so an upsert cannot silently flatten the table
-                partition_by = self._layout(table, prev)
+
+            def upsert(target: DataFrame) -> DataFrame:
+                return upsert_frames(
+                    target, src, keys, allow_schema_drift, source_unique=True
+                )
 
             target = self.read(table)
             if (
                 partition_by
                 and set(partition_by) <= set(src.columns)
                 and set(partition_by) <= set(keys)
-                and tuple(partition_by) == self._layout(table, prev)
                 and not allow_schema_drift
                 and self._members_schema_consistent(table, prev)
             ):
-                # Partition-pruned rewrite: only partitions in the batch.
-                # SOUND ONLY when (a) the partition columns are part of
-                # the merge key — otherwise a key whose partition value
-                # changed (id=1 moving from date D1 to D2) leaves its old
-                # row in an untouched partition the anti-join cannot
-                # evict; (b) the live snapshot is ACTUALLY laid out this
-                # way — the carry-over references its partition dirs;
-                # (c) no schema drift — linked files collapse into one
-                # dir, and a single-dir read does not name-align drifted
-                # schemas the way the manifest union does. Anything else
-                # falls through to the full-table merge.
-                # the touched values are batch-derived and bounded, so
-                # they collect to a driver literal and the target read
-                # STATICALLY partition-prunes — without this the semi
-                # join scans every partition (all columns) just to
-                # discover which rows it keeps, an O(table) read that
-                # defeats the O(touched) write
-                parts = [
-                    tuple(r) for r in
-                    src.select(*partition_by).distinct().collect()
-                ]
-                if not parts:
-                    touched = target.filter(F.lit(False))
-                elif len(parts) > 1000:
-                    # a batch touching >1000 partitions would blow the
-                    # literal predicate up; the broadcast semi join is
-                    # the right shape there (and such a batch rewrites
-                    # most of the table anyway)
-                    touched = target.join(
-                        F.broadcast(
-                            src.select(*partition_by).distinct()
-                        ),
-                        on=list(partition_by),
-                        how="left_semi",
-                    )
-                else:
-                    touched = target.filter(
-                        _partition_values_pred(parts, partition_by)
-                    )
-                merged_touched = upsert_frames(
-                    touched, src, keys, allow_schema_drift, source_unique=True
-                )
-                version = self._write_snapshot(
-                    _colocated(merged_touched), table, partition_by
-                )
-                self._link_untouched_partitions(
-                    table, prev, version, partition_by
+                # The pruned rewrite is SOUND ONLY when (a) the partition
+                # columns are part of the merge key — otherwise a key
+                # whose partition value changed (id=1 moving from date
+                # D1 to D2) leaves its old row in an untouched partition
+                # the anti-join cannot evict; (b) no schema drift —
+                # linked files collapse into one dir, and a single-dir
+                # read does not name-align drifted schemas the way the
+                # manifest union does. Anything else takes the full
+                # rewrite. The touched values are batch-derived and
+                # bounded, so they collect to driver literals.
+                values = src.select(*partition_by).distinct()
+                parts = [tuple(r) for r in values.collect()]
+                version = self._rewrite_partitions(
+                    table, prev, target, partition_by, parts, values, upsert
                 )
             else:
-                merged = upsert_frames(
-                    target, src, keys, allow_schema_drift, source_unique=True
-                )
                 version = self._write_snapshot(
-                    _colocated(merged), table, partition_by
+                    _colocated(upsert(target), partition_by),
+                    table,
+                    partition_by,
                 )
             self._commit(table, version)
 
-    def delete_where(
-        self,
-        table: str,
-        predicate,
-        partition_by: tuple[str, ...] | None = None,
-    ) -> int:
+    def delete_where(self, table: str, predicate) -> int:
         """DML DELETE as a snapshot write — the verb the append/merge
         pair was missing, and the one GDPR/right-to-be-forgotten makes
         mandatory at 100 TB. ``predicate`` (a Column or SQL string)
@@ -779,14 +752,14 @@ class ParquetWarehouse:
         (SQL DELETE semantics — a NULL condition deletes nothing).
 
         On a hive-partitioned, schema-consistent table the rewrite is
-        PHYSICAL-partition-pruned, the merge discipline reused verbatim:
-        one pushdown-filtered scan finds the touched partition values
-        (bounded driver metadata), only those partitions' SURVIVORS are
-        rewritten, and every untouched partition's immutable files
-        hardlink-carry into the new snapshot — I/O is O(touched),
-        however large the table. Unlike merge's pruned path this needs
-        no key/partition containment condition: deletes never move a
-        row between partitions.
+        merge's physical partition-pruned rewrite
+        (:meth:`_rewrite_partitions`): one pushdown-filtered scan finds
+        the touched partition values (bounded driver metadata), only
+        those partitions' SURVIVORS are rewritten, and every untouched
+        partition's immutable files hardlink-carry into the new
+        snapshot — I/O is O(touched), however large the table. Unlike
+        merge's pruned path this needs no key/partition containment
+        condition: deletes never move a row between partitions.
 
         Returns the number of touched partitions (0 = nothing matched,
         in which case NO new version is committed — so replaying a
@@ -797,11 +770,8 @@ class ParquetWarehouse:
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(pred.cast("boolean"), F.lit(False))
         with self._write_lock(table):
-            prev = self._latest_version(table)
-            if prev is None:
-                raise FileNotFoundError(f"no such table: {table}")
-            if partition_by is None:
-                partition_by = self._layout(table, prev)
+            prev = self._version(table)
+            partition_by = self._layout(table, prev)
             target = self.read(table)
             if partition_by and self._members_schema_consistent(table, prev):
                 # ONE pushdown-filtered scan per member finds both the
@@ -833,37 +803,21 @@ class ParquetWarehouse:
                         touched_vals.add(tuple(r[c] for c in partition_by))
                         leaf = os.path.dirname(_local_path(r["__fp"]))
                         touched_rel.add(os.path.relpath(leaf, mdir))
-                parts = sorted(
-                    touched_vals, key=lambda t: tuple(str(x) for x in t)
-                )
-                if not parts:
+                if not touched_vals:
                     return 0
-                if len(parts) > 1000:
-                    touched = target.join(
-                        F.broadcast(
-                            target.filter(hit).select(*partition_by).distinct()
-                        ),
-                        on=list(partition_by),
-                        how="left_semi",
-                    )
-                else:
-                    touched = target.filter(
-                        _partition_values_pred(parts, partition_by)
-                    )
-                survivors = touched.filter(~hit).repartition(
-                    *[F.col(c) for c in partition_by]
-                )
-                version = self._write_snapshot(survivors, table, partition_by)
-                self._link_untouched_partitions(
-                    table, prev, version, partition_by, exclude=touched_rel
+                values = target.filter(hit).select(*partition_by).distinct()
+                version = self._rewrite_partitions(
+                    table, prev, target, partition_by, list(touched_vals),
+                    values, lambda touched: touched.filter(~hit),
+                    exclude=touched_rel,
                 )
                 self._commit(table, version)
-                return len(parts)
+                return len(touched_vals)
             # full-rewrite fallback; commit only if something matched
             if target.filter(hit).limit(1).count() == 0:
                 return 0
             version = self._write_snapshot(
-                target.filter(~hit), table, partition_by or ()
+                target.filter(~hit), table, partition_by
             )
             self._commit(table, version)
             return 1
@@ -909,16 +863,32 @@ class ParquetWarehouse:
         walk(base, "", depth)
         return out
 
-    def _link_untouched_partitions(
+    def _rewrite_partitions(
         self,
         table: str,
         prev: str,
-        version: str,
+        target: DataFrame,
         partition_by: tuple[str, ...],
+        parts: list[tuple],
+        values: DataFrame,
+        rewrite,
         exclude: set[str] = frozenset(),
-    ) -> None:
-        """Carry every partition NOT rewritten by this merge into the
-        new snapshot by hardlinking its parquet files — data files are
+    ) -> str:
+        """Partition-pruned rewrite of snapshot ``prev`` (read as
+        ``target``), shared by merge and delete_where; returns the new,
+        uncommitted version.
+
+        The touched partitions are ``parts``, their value tuples; the
+        target read is STATICALLY partition-pruned to them with a
+        literal predicate (without it a semi join scans every partition
+        just to discover which rows it keeps, an O(table) read that
+        defeats the O(touched) write). Above 1000 tuples the literal
+        predicate would blow up, so a broadcast semi join against
+        ``values`` (the same tuples as a frame) selects them instead.
+        ``rewrite(touched)`` is written co-located; every partition leaf
+        dir it did not write — and that is not in ``exclude``, the
+        touched dirs a rewrite may leave empty — carries into the new
+        snapshot by hardlinking its parquet files. Data files are
         immutable once written (the snapshot contract), so sharing
         inodes is safe, O(files) metadata, and vacuum-proof (deleting
         the old version dir unlinks names, never shared inodes). At
@@ -926,17 +896,23 @@ class ParquetWarehouse:
         manifest (Iceberg/Delta); hardlinks are its exact local-FS
         realization. Falls back to a physical copy per file where the
         filesystem refuses links — still correct, just not free."""
+        if len(parts) > 1000:
+            touched = target.join(
+                F.broadcast(values), on=list(partition_by), how="left_semi"
+            )
+        else:
+            touched = target.filter(_partition_values_pred(parts, partition_by))
+        version = self._write_snapshot(
+            _colocated(rewrite(touched), partition_by), table, partition_by
+        )
         tdir = self.table_path(table)
         new_dir = os.path.join(tdir, version)
         depth = len(partition_by)
-        # `exclude` is for rewrites that may produce NO leaf dir for a
-        # touched partition (a delete emptying it) — the new snapshot's
-        # dirs alone cannot reveal those
-        touched = set(self._partition_leaf_dirs(new_dir, depth)) | set(exclude)
+        rewritten = set(self._partition_leaf_dirs(new_dir, depth)) | set(exclude)
         for member in self._manifest_members(table, prev):
             mdir = os.path.join(tdir, member)
             for rel, absd in self._partition_leaf_dirs(mdir, depth).items():
-                if rel in touched:
+                if rel in rewritten:
                     continue
                 dest = os.path.join(new_dir, rel)
                 os.makedirs(dest, exist_ok=True)
@@ -952,15 +928,14 @@ class ParquetWarehouse:
                         os.link(os.path.join(absd, name), target_path)
                     except OSError:
                         shutil.copy2(os.path.join(absd, name), target_path)
+        return version
 
     # -- table maintenance (beyond the reference; required at 100 TB) -------
 
     def data_files(self, table: str, version: str | None = None) -> list[str]:
         """Data files of a snapshot (manifest members included) — the
         observable compaction metric."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         out: list[str] = []
         for member in self._manifest_members(table, v):
             for dirpath, dirs, names in os.walk(
@@ -996,9 +971,7 @@ class ParquetWarehouse:
         describes — immutable because the snapshot dir is; pass
         ``dest`` to export elsewhere. O(files) driver metadata, no data
         movement."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         files = self.data_files(table, v)
         out = dest or os.path.join(self.table_path(table), v, "_FILELIST")
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(out), prefix="._fl")
@@ -1044,9 +1017,7 @@ class ParquetWarehouse:
         (explode k positions -> per-(file, word) bit_or -> word-array
         assembly), all bounded by files x bloom_bits/32.
         """
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         if bloom_bits <= 0 or bloom_bits % 32 != 0:
             raise ValueError(f"bloom_bits must be a positive multiple of 32")
         want = list(dict.fromkeys([*cols, *bloom_cols]))
@@ -1069,9 +1040,7 @@ class ParquetWarehouse:
                 f"file_stats({table!r}): no snapshot member has column(s) "
                 f"{missing}"
             )
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p, allowMissingColumns=True)
+        rows = _union(parts)
         # bloom columns get min/max too ('want', not 'cols'): skip_files'
         # persisted-stats gate requires {c}__min for EVERY predicate
         # column, so a bloom-only column would silently demote every
@@ -1094,9 +1063,7 @@ class ParquetWarehouse:
         ``OPTIMIZE``/checkpoint loop. Immutable because snapshot
         members are: a version's file set never changes, so its stats
         never go stale. Returns the manifest path."""
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         vdir = os.path.join(self.table_path(table), v)
         tmp = os.path.join(vdir, f"._stats_tmp_{os.getpid()}")
         # Spark writes the tmp dir (type-exact for timestamps/decimals,
@@ -1139,9 +1106,7 @@ class ParquetWarehouse:
         is the O(new) claim, observable."""
         import pyarrow.parquet as pq
 
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         vdir = os.path.join(self.table_path(table), v)
         donor = None
         # newest manifest wins, the target version's own included — a
@@ -1205,11 +1170,8 @@ class ParquetWarehouse:
                         *present,
                     )
                 )
-            rows = parts[0]
-            for p in parts[1:]:
-                rows = rows.unionByName(p, allowMissingColumns=True)
             stats = _stats_of_rows(
-                rows, cols, bloom_cols, bloom_bits, bloom_hashes
+                _union(parts), cols, bloom_cols, bloom_bits, bloom_hashes
             )
             computed = [
                 {**r.asDict(), "file_path": _local_path(r["file_path"])}
@@ -1256,9 +1218,7 @@ class ParquetWarehouse:
         semantics); the residual filter owns row truth."""
         ranges = ranges or {}
         equals = equals or {}
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         if not ranges and not equals:
             raise ValueError(
                 f"skip_files({table!r}): no predicate — pass ranges and/or "
@@ -1416,9 +1376,7 @@ class ParquetWarehouse:
         thousands before Spark plans a single task."""
         ranges = ranges or {}
         equals = equals or {}
-        v = version or self._latest_version(table)
-        if v is None:
-            raise FileNotFoundError(f"no such table: {table}")
+        v = self._version(table, version)
         pred = None
         for c, (lo, hi) in ranges.items():
             for bound, op in ((lo, "ge"), (hi, "le")):
@@ -1441,10 +1399,7 @@ class ParquetWarehouse:
                 parts.append(
                     self.spark.read.option("basePath", base).parquet(*mine)
                 )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out.where(pred)
+        return _union(parts).where(pred)
 
     def compact(
         self,
@@ -1470,65 +1425,41 @@ class ParquetWarehouse:
         applies within each partition's files.
         """
         with self._write_lock(table):
-            if partition_by is None:
-                # compact collapses the manifest chain — the one write the
-                # append-inheritance comment warns about: it MUST keep the
-                # live layout unless the caller explicitly changes it
-                cur = self._latest_version(table)
-                partition_by = self._layout(table, cur) if cur else ()
+            partition_by = self._resolve_layout(
+                table, partition_by, relayout=True
+            )
             df = self.read(table)
             spec = self._cluster_spec(table)
-            if spec and spec[0] == "zorder":
-                from ..functions.zorder import with_zorder_key
+            sort_cols: list[str] = []
+            if spec:
+                kind, cols, scaler = spec
+                sort_cols = list(cols)
+                if kind == "zorder":
+                    from ..functions.zorder import with_zorder_key
 
-                df = with_zorder_key(df, spec[1], scaler=spec[2])
-                if partition_by:
-                    df = df.repartition(
-                        *[F.col(c) for c in partition_by]
-                    ).sortWithinPartitions("_zorder")
-                else:
-                    total = sum(
-                        os.path.getsize(f) for f in self.data_files(table)
-                    )
-                    n = max(1, -(-total // target_file_bytes))
-                    df = df.repartitionByRange(
-                        n, F.col("_zorder")
-                    ).sortWithinPartitions("_zorder")
-                df = df.drop("_zorder")
-            elif spec and spec[0] == "cluster":
-                ccols = [F.col(c) for c in spec[1]]
-                if partition_by:
-                    df = df.repartition(
-                        *[F.col(c) for c in partition_by]
-                    ).sortWithinPartitions(*spec[1])
-                else:
-                    total = sum(
-                        os.path.getsize(f) for f in self.data_files(table)
-                    )
-                    n = max(1, -(-total // target_file_bytes))
-                    df = df.repartitionByRange(n, *ccols).sortWithinPartitions(
-                        *spec[1]
-                    )
-            elif partition_by:
-                df = df.repartition(*[F.col(c) for c in partition_by])
+                    df = with_zorder_key(df, cols, scaler=scaler)
+                    sort_cols = ["_zorder"]
+            if partition_by:
+                df = _colocated(df, partition_by)
             else:
-                # size the file count from actual bytes — only needed on
-                # this branch; stat-walking a large snapshot while
-                # holding the writer lock is not free
+                # size the file count from actual bytes; stat-walking a
+                # large snapshot while holding the writer lock is not
+                # free, and a partitioned table does not need it
                 total = sum(os.path.getsize(f) for f in self.data_files(table))
                 n = max(1, -(-total // target_file_bytes))  # ceil div
-                df = df.repartition(n)
+                df = (
+                    df.repartitionByRange(n, *sort_cols)
+                    if sort_cols
+                    else df.repartition(n)
+                )
+            if sort_cols:
+                df = df.sortWithinPartitions(*sort_cols)
+            if spec and kind == "zorder":
+                df = df.drop("_zorder")
             version = self._write_snapshot(df, table, partition_by)
             if spec:
                 # carry the intent forward so the NEXT compact sees it
-                kind, cols, scaler = spec
-                self._record_cluster(
-                    table,
-                    version,
-                    cols if kind == "cluster" else (),
-                    cols if kind == "zorder" else (),
-                    scaler,
-                )
+                self._record_cluster(table, version, *spec)
             self._commit(table, version)
 
     def maintain_table(

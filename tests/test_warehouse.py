@@ -393,6 +393,42 @@ def test_manifest_append_preserves_hive_layout(spark, wh):
     assert {r.stock for r in wh.read("p").collect()} == {"A", "B", "C", "D"}
 
 
+def test_append_and_merge_refuse_a_second_layout(spark, wh):
+    """append and merge never change a table's hive layout: an explicit,
+    different partition_by raises before anything is written, so the
+    version pointer and the rows stay as they were, and a later merge
+    keeps every untouched row. Letting a second layout in made the next
+    merge drop the unpartitioned rows (its pruned rewrite carries only
+    ``col=value`` dirs) or, on a table partitioned by another column,
+    commit an unreadable snapshot."""
+    sch = "x string, y string, v double"
+
+    def state(t):
+        rows = wh.read(t).select("x", "y", "v").collect()
+        return wh._latest_version(t), sorted(tuple(r) for r in rows)
+
+    for table, layout in (("flat", None), ("by_y", ("y",))):
+        wh.append(
+            spark.createDataFrame([("a", "p", 1.0), ("b", "q", 2.0)], sch),
+            table,
+            partition_by=layout,
+        )
+        before = state(table)
+        with pytest.raises(ValueError, match="layout"):
+            wh.append(
+                spark.createDataFrame([("c", "p", 3.0)], sch),
+                table,
+                partition_by=("x",),
+            )
+        assert state(table) == before
+        update = spark.createDataFrame([("a", "p", 9.0)], sch)
+        with pytest.raises(ValueError, match="layout"):
+            wh.merge(update, table, keys=("x", "y"), partition_by=("x",))
+        assert state(table) == before
+        wh.merge(update, table, keys=("x", "y"))
+        assert state(table)[1] == [("a", "p", 9.0), ("b", "q", 2.0)]
+
+
 def test_append_after_restore_does_not_clobber(spark, wh):
     """Version allocation after restore(): the next write must get a FRESH
     version number (max on-disk + 1), not pointer+1 — pointer-based
@@ -417,10 +453,10 @@ def test_append_after_restore_does_not_clobber(spark, wh):
 
 
 def test_merge_compact_overwrite_inherit_layout(spark, wh):
-    """compact()/merge()/overwrite() default partition_by=None inherits
-    the live snapshot's hive layout — collapsing a manifest chain or
-    upserting must not silently flatten a partitioned table. An explicit
-    () still flattens intentionally."""
+    """merge()/append()/compact()/overwrite() default partition_by=None
+    inherits the live snapshot's hive layout — upserting, appending or
+    collapsing a manifest chain must not silently flatten a partitioned
+    table. An explicit () on overwrite still flattens intentionally."""
     import os
 
     sch = "stock string, dt string, close double"
@@ -449,6 +485,11 @@ def test_merge_compact_overwrite_inherit_layout(spark, wh):
         ("B", 2.0),
         ("C", 3.0),
     }
+
+    wh.append(
+        spark.createDataFrame([("F", "d6", 6.0)], sch), "p", partition_by=None
+    )
+    assert _latest_is_partitioned()
 
     wh.compact("p")
     assert _latest_is_partitioned()
