@@ -76,7 +76,7 @@ METHODOLOGY = (
     "fence is what makes round-over-round steady deltas decision-grade "
     "on a long-lived "
     f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}] JVM with a "
-    f"{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '48g')} driver heap"
+    "{driver_memory} driver heap"
 )
 
 
@@ -179,14 +179,15 @@ def main() -> None:
     # machines by accident (get_spark returns the benched session)
     from stock_bars_data_engineering_project_spark.session import get_spark
 
+    sc = get_spark("bench").sparkContext
     out["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    out["default_parallelism"] = (
-        get_spark("bench").sparkContext.defaultParallelism
-    )
+    out["default_parallelism"] = sc.defaultParallelism
     if steady:
         out["value_steady"] = round(sum(steady_times.values()), 3)
         out["queries_steady"] = steady_times
-        out["methodology"] = METHODOLOGY
+        out["methodology"] = METHODOLOGY.format(
+            driver_memory=sc.getConf().get("spark.driver.memory")
+        )
     for part, secs in split.items():
         if secs:
             out[f"queries_{part}"] = secs

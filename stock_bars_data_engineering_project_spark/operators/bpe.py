@@ -257,7 +257,7 @@ def bpe_segment(
     if checkpoint_every <= 0:
         raise ValueError(f"checkpoint_every must be positive, got {checkpoint_every}")
     if "pieces" in df.columns:
-        # same collision discipline as salted_topk / with_zorder_key:
+        # same collision discipline as salted_topk:
         # silently overwriting a caller's column is a data bug, not a
         # convenience
         raise ValueError("bpe_segment writes a 'pieces' column; input already has one")

@@ -173,7 +173,7 @@ def ingest_batch(
         wh.overwrite(band_index(survivors, k=k), index_table)
         _mark_synced(
             spark, wh, f"{index_table}__sync",
-            wh._latest_version(corpus_table),
+            wh.latest_version(corpus_table),
         )
         return (counts, survivors) if return_survivors else counts
     # Self-heal: the corpus and index commit as two warehouse
@@ -189,7 +189,7 @@ def ingest_batch(
     # crash, corpus-sized only in the missing-table case (a full index
     # rebuild, which is exactly first-batch cost).
     sync_table = f"{index_table}__sync"
-    corpus_v = wh._latest_version(corpus_table)
+    corpus_v = wh.latest_version(corpus_table)
     in_sync = (
         wh.exists(sync_table)
         and wh.read(sync_table).first()["corpus_version"] == corpus_v
@@ -273,7 +273,7 @@ def ingest_batch(
         # marker commits LAST: a crash anywhere above leaves it stale,
         # which is exactly what re-arms the heal on the next ingest
         _mark_synced(
-            spark, wh, sync_table, wh._latest_version(corpus_table)
+            spark, wh, sync_table, wh.latest_version(corpus_table)
         )
     return (counts, survivors) if return_survivors else counts
 

@@ -87,7 +87,7 @@ def read_meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
         row = wh.read(meta).collect()[0].asDict()
         return int(row["n_buckets"]), int(row.get("postings_gen") or 0)
 
-    version = wh._latest_version(meta)
+    version = wh.latest_version(meta)
     if version is None:
         # no committed snapshot: let wh.read raise its own loud error
         return _scan()

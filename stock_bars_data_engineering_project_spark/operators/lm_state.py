@@ -99,29 +99,13 @@ def ingest_lm_batch(
     # recomputes the same epoch and appends only the missing table's
     # partition.
     for df, table in ((uni, uni_table), (bi, bi_table)):
-        if not _epoch_present(wh, table, epoch):
+        if not wh.has_partition(table, "_epoch", epoch):
             wh.append(
                 df.withColumn("_epoch", F.lit(epoch)),
                 table,
                 partition_by=("_epoch",),
             )
     return epoch
-
-
-def _epoch_present(wh, table: str, epoch: str) -> bool:
-    """True iff the live snapshot already carries this epoch partition —
-    a pure manifest/directory probe (no Spark job): epoch ids are
-    filesystem-safe hex+count strings, so the hive segment is literal."""
-    import os
-
-    if not wh.exists(table):
-        return False
-    seg = f"_epoch={epoch}"
-    v = wh._latest_version(table)
-    return any(
-        os.path.isdir(os.path.join(wh.table_path(table), m, seg))
-        for m in wh._manifest_members(table, v)
-    )
 
 
 def lm_state(

@@ -342,7 +342,7 @@ def _mark_refresh_synced(
     anti-join (see refresh_corpus's reconcile-gate comment). Skips the
     write when the marker already records this version: a no-op replay
     must not churn a snapshot version per redelivery."""
-    v = wh._latest_version(corpus_table)
+    v = wh.latest_version(corpus_table)
     if v is None:
         return
     if (
@@ -450,7 +450,7 @@ def refresh_corpus(
     # reconcile (an O(corpus-ids) anti-join per refresh — the x64
     # soak's replay floor) collapses to this 1-row read.
     sync_t = f"{table}__sync"
-    pre_v = wh._latest_version(corpus_table)
+    pre_v = wh.latest_version(corpus_table)
     reconcile_needed = not (
         pre_v is not None
         and wh.exists(sync_t)

@@ -21,6 +21,16 @@ from pyspark.sql.types import StructType
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else half of physical RAM: the
+    JVM grows its heap toward this bound, so it must fit the machine."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "stock_bars_data_engineering_project_spark",
     shuffle_partitions: int | None = None,
@@ -40,7 +50,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.shuffle.spill.compress", "true")
     )

@@ -49,6 +49,7 @@ silently drop. ``delete_where`` always keeps the recorded layout.
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
 import shutil
 import tempfile
@@ -65,8 +66,6 @@ from ..session import local_frame
 _POINTER = "_LATEST"
 _MANIFEST = "_MANIFEST"
 _LAYOUT = "_LAYOUT"
-_STATS = "_STATS"
-_CLUSTER = "_CLUSTER"
 
 
 def _read_version_dir(spark: SparkSession, path: str) -> DataFrame:
@@ -89,43 +88,6 @@ def _local_path(p: str) -> str:
 
         return unquote(urlparse(p).path)
     return p
-
-
-def _stats_of_rows(
-    rows: DataFrame,
-    cols: list[str],
-    bloom_cols: tuple[str, ...],
-    bloom_bits: int,
-    bloom_hashes: int,
-) -> DataFrame:
-    """Per-file stats aggregation over a (file_path, *cols) frame —
-    shared by the full-snapshot scan (`file_stats`) and the new-files-
-    only incremental path (`refresh_stats`)."""
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs += [
-            F.min(c).alias(f"{c}__min"),
-            F.max(c).alias(f"{c}__max"),
-            F.count(c).alias(f"{c}__nonnull"),
-        ]
-    out = rows.groupBy("file_path").agg(*aggs)
-    for c in bloom_cols:
-        out = out.join(
-            _file_bloom(rows, c, bloom_bits, bloom_hashes),
-            "file_path",
-            "left",
-        ).withColumn(
-            f"{c}__bloom",
-            # a file with zero non-NULL values gets the empty bitmap
-            # (all zeros) — correctly skippable for any equality
-            F.coalesce(
-                F.col(f"{c}__bloom"),
-                F.array_repeat(F.lit(0).cast("long"), bloom_bits // 32),
-            ),
-        ).withColumn(
-            f"{c}__bloom_m", F.lit(bloom_bits)
-        ).withColumn(f"{c}__bloom_k", F.lit(bloom_hashes))
-    return out
 
 
 _NUMERIC_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double"}
@@ -175,71 +137,6 @@ def _union(parts: list[DataFrame]) -> DataFrame:
     return out
 
 
-def _file_bloom(
-    rows: DataFrame, col: str, m_bits: int, n_hashes: int
-) -> DataFrame:
-    """(file_path, {col}__bloom) — per-file bloom word arrays on
-    operators/bloom.py's hash family and word layout (its `_positions`
-    and `_WORD` are imported, not re-derived, so a change there cannot
-    silently diverge from these bitmaps); the driver-side probe
-    (:func:`_py_bloom_positions`) is the pure-Python twin of the same
-    positions. NULL values contribute nothing (equality never matches
-    NULL)."""
-    from ..operators.bloom import _WORD, _positions
-
-    n_words = m_bits // _WORD
-    pos = F.explode(
-        F.array(*_positions(F.col(col), m_bits, n_hashes))
-    ).alias("pos")
-    words = (
-        rows.filter(F.col(col).isNotNull())
-        .select("file_path", pos)
-        .select(
-            "file_path",
-            (F.col("pos") / _WORD).cast("int").alias("w"),
-            F.pow(F.lit(2.0), F.col("pos") % _WORD).cast("long").alias("b"),
-        )
-        .groupBy("file_path", "w")
-        .agg(F.bit_or("b").alias("bits"))
-    )
-    assemble = F.transform(
-        F.sequence(F.lit(0), F.lit(n_words - 1)),
-        lambda i: F.coalesce(
-            F.element_at(F.col("_wmap"), i.cast("int")), F.lit(0).cast("long")
-        ),
-    )
-    return (
-        words.groupBy("file_path")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("w", "bits"))
-            ).alias("_wmap")
-        )
-        .select("file_path", assemble.alias(f"{col}__bloom"))
-    )
-
-
-def _py_bloom_positions(value, m_bits: int, n_hashes: int) -> list[int]:
-    """Driver-side twin of the md5_bucket48 bloom positions. The value
-    is stringified the way Spark's string cast renders it — exact for
-    strings and integers (the sane equality-skipping key types; float
-    equality pruning is a bug farm and deliberately unsupported)."""
-    import hashlib as _hashlib
-
-    if isinstance(value, bool) or not isinstance(value, (str, int)):
-        raise ValueError(
-            f"equality skipping supports string/integer values, got "
-            f"{type(value).__name__}"
-        )
-    return [
-        int(
-            _hashlib.md5(f"bloom{i}:{value}".encode()).hexdigest()[:12], 16
-        )
-        % m_bits
-        for i in range(n_hashes)
-    ]
-
-
 @dataclass
 class ParquetWarehouse:
     spark: SparkSession
@@ -273,6 +170,30 @@ class ParquetWarehouse:
             return []
         return sorted(
             t for t in os.listdir(self.root) if self.exists(t)
+        )
+
+    def latest_version(self, table: str) -> str | None:
+        """The live snapshot's version id (``None`` for a missing table);
+        it changes on every committed write."""
+        try:
+            with open(os.path.join(self.table_path(table), _POINTER)) as f:
+                return f.read().strip()
+        except FileNotFoundError:
+            return None
+
+    def has_partition(self, table: str, column: str, value) -> bool:
+        """True iff the live snapshot holds the hive partition
+        ``column=value`` — a filesystem probe of its member dirs, no
+        Spark job. ``str(value)`` must be a literal dir name (nothing
+        Spark would escape)."""
+        v = self.latest_version(table)
+        layout = self._layout(table, v) if v else ()
+        if column not in layout:
+            return False
+        seg = ["*"] * layout.index(column) + [glob.escape(f"{column}={value}")]
+        return any(
+            glob.glob(os.path.join(self.table_path(table), m, *seg))
+            for m in self._manifest_members(table, v)
         )
 
     # -- snapshot machinery -------------------------------------------------
@@ -335,16 +256,9 @@ class ParquetWarehouse:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(lock)
 
-    def _latest_version(self, table: str) -> str | None:
-        try:
-            with open(os.path.join(self.table_path(table), _POINTER)) as f:
-                return f.read().strip()
-        except FileNotFoundError:
-            return None
-
     def _version(self, table: str, version: str | None = None) -> str:
         """``version``, or the live one; raises for a missing table."""
-        v = version or self._latest_version(table)
+        v = version or self.latest_version(table)
         if v is None:
             raise FileNotFoundError(f"no such table: {table}")
         return v
@@ -358,7 +272,7 @@ class ParquetWarehouse:
         """The hive layout a write commits, by the module's layout rule;
         ``relayout`` marks the full rewrites that may change it. Call
         under the table's writer lock."""
-        cur = self._latest_version(table)
+        cur = self.latest_version(table)
         if cur is None:
             return tuple(partition_by or ())
         live = self._layout(table, cur)
@@ -497,7 +411,7 @@ class ParquetWarehouse:
         """
         with self._write_lock(table):
             partition_by = self._resolve_layout(table, partition_by)
-            prev = self._latest_version(table)
+            prev = self.latest_version(table)
             if prev is None:
                 version = self._write_snapshot(df, table, partition_by)
                 self._commit(table, version)
@@ -568,100 +482,19 @@ class ParquetWarehouse:
         df: DataFrame,
         table: str,
         partition_by: tuple[str, ...] | None = None,
-        cluster_by: tuple[str, ...] = (),
-        zorder_by: tuple[str, ...] = (),
-        zorder_scaler: str = "minmax",
-        n_files: int | None = None,
     ) -> None:
         """K2: drop-and-replace (postgresql.py:75-77) as a snapshot flip.
 
         ``partition_by=None`` (the default) keeps the live snapshot's
         recorded hive layout; an explicit layout, ``()`` included,
         re-lays the table out (module docstring, layout rule).
-
-        ``cluster_by`` range-partitions and sorts the snapshot on the
-        given columns before writing: every data file then covers a
-        disjoint range, so a pushed-down predicate on the cluster key
-        skips whole files/row-groups via parquet min/max stats — the
-        single biggest read-amplification lever for time-filtered scans
-        at 100 TB. Lexicographic, so only the LEADING column's file
-        stats stay tight.
-
-        ``zorder_by`` (mutually exclusive) clusters on the Morton
-        interleaving of 2-3 columns instead: each file covers a small
-        hyper-rectangle of the key space, so min/max skipping works for
-        predicates on ANY of the z-dimensions (functions/zorder.py).
-        ``zorder_scaler="quantile"`` swaps the min/max grid for
-        equal-mass approx-quantile cells — the layout that keeps
-        skipping effective under value skew (Zipf heads, outlier
-        tails).
         """
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are mutually exclusive")
-        if zorder_by:
-            from ..functions.zorder import with_zorder_key
-
-            df = with_zorder_key(df, zorder_by, scaler=zorder_scaler)
-            args = ([n_files] if n_files else []) + [F.col("_zorder")]
-            df = (
-                df.repartitionByRange(*args)
-                .sortWithinPartitions("_zorder")
-                .drop("_zorder")
-            )
-        if cluster_by:
-            # explicit n_files pins the range-split width (AQE otherwise
-            # coalesces small data to one file, defeating the layout)
-            args = ([n_files] if n_files else []) + [F.col(c) for c in cluster_by]
-            df = df.repartitionByRange(*args).sortWithinPartitions(*cluster_by)
         with self._write_lock(table):
             partition_by = self._resolve_layout(
                 table, partition_by, relayout=True
             )
             version = self._write_snapshot(df, table, partition_by)
-            # record the layout INTENT beside the snapshot, so compact
-            # can re-apply it instead of silently degrading every
-            # stats-skipping property the layout bought
-            if zorder_by:
-                self._record_cluster(
-                    table, version, "zorder", zorder_by, zorder_scaler
-                )
-            elif cluster_by:
-                self._record_cluster(
-                    table, version, "cluster", cluster_by, "minmax"
-                )
             self._commit(table, version)
-
-    def _record_cluster(
-        self, table: str, version: str, kind: str, cols, scaler: str
-    ) -> None:
-        """Write a (kind, cols, scaler) cluster intent, the triple
-        :meth:`_cluster_spec` reads back; only z-order has a scaler."""
-        spec = f"{kind}:{','.join(cols)}"
-        if kind == "zorder":
-            spec += f":{scaler}"
-        with open(
-            os.path.join(self.table_path(table), version, _CLUSTER), "w"
-        ) as f:
-            f.write(spec)
-
-    def _cluster_spec(
-        self, table: str
-    ) -> tuple[str, tuple[str, ...], str] | None:
-        """The table's most recent recorded cluster intent: walk
-        versions newest-first (appends between clusterings record no
-        spec — their members stay unclustered until the next compact,
-        the Delta OPTIMIZE contract). Returns (kind, cols, scaler)."""
-        for v in reversed(self.versions(table)):
-            try:
-                with open(
-                    os.path.join(self.table_path(table), v, _CLUSTER)
-                ) as f:
-                    spec = f.read().strip()
-            except FileNotFoundError:
-                continue
-            kind, cols, *scaler = spec.split(":")
-            return kind, tuple(cols.split(",")), (scaler or ["minmax"])[0]
-        return None
 
     def merge(
         self,
@@ -700,7 +533,7 @@ class ParquetWarehouse:
         src = materialize(source.dropDuplicates(list(keys)))
         with self._write_lock(table):
             partition_by = self._resolve_layout(table, partition_by)
-            prev = self._latest_version(table)
+            prev = self.latest_version(table)
             if prev is None:
                 version = self._write_snapshot(
                     _colocated(src, partition_by), table, partition_by
@@ -941,9 +774,7 @@ class ParquetWarehouse:
             for dirpath, dirs, names in os.walk(
                 os.path.join(self.table_path(table), member)
             ):
-                # prune metadata/hidden DIRS too (Spark's listing rule):
-                # a crashed ._stats_tmp dir must not leak its part files
-                # into the data set
+                # prune metadata/hidden DIRS too (Spark's listing rule)
                 dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
                 out.extend(
                     os.path.join(dirpath, n)
@@ -951,455 +782,6 @@ class ParquetWarehouse:
                     if n.endswith(".parquet") and not n.startswith(("_", "."))
                 )
         return sorted(out)
-
-    def export_manifest(
-        self, table: str, version: str | None = None, dest: str | None = None
-    ) -> str:
-        """Write a snapshot's data-file list as ONE newline-delimited
-        text file of absolute parquet paths and return its path — the
-        symlink-format-manifest idiom (what Delta emits for Presto/
-        Trino/Athena), making any table version directly readable by an
-        EXTERNAL engine without implementing the ``_MANIFEST`` pointer
-        protocol: the files are plain immutable parquet, so
-        ``duckdb.read_parquet(<the list>, hive_partitioning=true,
-        union_by_name=true)`` reconstructs exactly what :meth:`read`
-        returns (hive_partitioning recovers the directory-encoded
-        partition columns of partitioned snapshots; union_by_name
-        aligns drift-appended manifest members the way ``read``'s
-        allowMissingColumns does). Defaults to
-        ``<table>/<version>/_FILELIST`` next to the snapshot it
-        describes — immutable because the snapshot dir is; pass
-        ``dest`` to export elsewhere. O(files) driver metadata, no data
-        movement."""
-        v = self._version(table, version)
-        files = self.data_files(table, v)
-        out = dest or os.path.join(self.table_path(table), v, "_FILELIST")
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(out), prefix="._fl")
-        with os.fdopen(fd, "w") as f:
-            f.write("\n".join(os.path.abspath(p) for p in files) + "\n")
-        os.replace(tmp, out)
-        return out
-
-    # -- file-level data skipping (Delta stats / Iceberg manifest idiom) ----
-
-    def file_stats(
-        self,
-        table: str,
-        cols: list[str],
-        version: str | None = None,
-        bloom_cols: tuple[str, ...] = (),
-        bloom_bits: int = 1024,
-        bloom_hashes: int = 4,
-    ) -> DataFrame:
-        """Per-data-file column statistics (row count, min, max,
-        non-null count) for a snapshot — the metadata Delta keeps in
-        its transaction log and Iceberg in manifest files, so the
-        PLANNER can drop files from the read set without opening a
-        single parquet footer. Computed as ONE distributed scan per
-        manifest member grouped on the ``_metadata.file_path`` hidden
-        column, column-pruned to the requested stat columns.
-
-        Drift-appended members that lack a requested column contribute
-        NULL min/max for it (union alignment) — exactly right for
-        skipping, because a range predicate can never match NULL.
-        Hive partition columns are fair stat targets too (Spark
-        synthesizes them from the directory, so min==max per file).
-
-        ``bloom_cols`` additionally builds a PER-FILE bloom bitmap
-        (``{c}__bloom``: array<long> of ``bloom_bits/32`` words, the
-        operators/bloom.py word layout on the same md5_bucket48 hash
-        family) — what min/max cannot give you: pruning for an
-        EQUALITY predicate on a high-cardinality column in an
-        unclustered layout, where every file's [min, max] spans the
-        whole domain. The parquet-bloom-filter idea lifted to the
-        planner's metadata, so membership is testable without opening
-        a footer. One partial-aggregable pass per bloom column
-        (explode k positions -> per-(file, word) bit_or -> word-array
-        assembly), all bounded by files x bloom_bits/32.
-        """
-        v = self._version(table, version)
-        if bloom_bits <= 0 or bloom_bits % 32 != 0:
-            raise ValueError(f"bloom_bits must be a positive multiple of 32")
-        want = list(dict.fromkeys([*cols, *bloom_cols]))
-        parts = []
-        seen: set[str] = set()
-        for m in self._manifest_members(table, v):
-            df = _read_version_dir(
-                self.spark, os.path.join(self.table_path(table), m)
-            )
-            present = [c for c in want if c in df.columns]
-            seen.update(present)
-            parts.append(
-                df.select(
-                    F.col("_metadata.file_path").alias("file_path"), *present
-                )
-            )
-        missing = [c for c in want if c not in seen]
-        if missing:
-            raise ValueError(
-                f"file_stats({table!r}): no snapshot member has column(s) "
-                f"{missing}"
-            )
-        rows = _union(parts)
-        # bloom columns get min/max too ('want', not 'cols'): skip_files'
-        # persisted-stats gate requires {c}__min for EVERY predicate
-        # column, so a bloom-only column would silently demote every
-        # equality plan to a live full scan
-        return _stats_of_rows(rows, want, bloom_cols, bloom_bits, bloom_hashes)
-
-    def write_stats(
-        self,
-        table: str,
-        cols: list[str],
-        version: str | None = None,
-        bloom_cols: tuple[str, ...] = (),
-        bloom_bits: int = 1024,
-        bloom_hashes: int = 4,
-    ) -> str:
-        """Materialize :meth:`file_stats` as ONE immutable parquet file
-        (``_STATS``) next to the snapshot it describes, so subsequent
-        :meth:`skip_files` calls are pure O(files) metadata reads with
-        no data scan at all — the stats-collection half of Delta's
-        ``OPTIMIZE``/checkpoint loop. Immutable because snapshot
-        members are: a version's file set never changes, so its stats
-        never go stale. Returns the manifest path."""
-        v = self._version(table, version)
-        vdir = os.path.join(self.table_path(table), v)
-        tmp = os.path.join(vdir, f"._stats_tmp_{os.getpid()}")
-        # Spark writes the tmp dir (type-exact for timestamps/decimals,
-        # unlike a pandas round-trip); the single part file is then
-        # atomically renamed to _STATS. Underscore-prefixed, so data
-        # listings (Spark's and data_files') never mistake it for data.
-        self.file_stats(
-            table,
-            cols,
-            v,
-            bloom_cols=bloom_cols,
-            bloom_bits=bloom_bits,
-            bloom_hashes=bloom_hashes,
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dest = os.path.join(vdir, _STATS)
-        os.replace(os.path.join(tmp, part), dest)
-        shutil.rmtree(tmp)
-        return dest
-
-    def refresh_stats(self, table: str, version: str | None = None) -> dict:
-        """Bring a snapshot's ``_STATS`` current at O(new files) — the
-        per-commit stats-maintenance discipline (Delta writes stats in
-        the transaction log at commit time; here the equivalent is a
-        refresh after each append/merge/delete that REUSES every prior
-        row instead of rescanning the table).
-
-        Identity is the file INODE ``(st_dev, st_ino)``: manifest-
-        chain members keep their paths, and merge/delete carry
-        untouched partitions as hardlinks — both share inodes with the
-        prior version's files, and immutability is the snapshot
-        contract, so a prior stats row is exact for the same inode.
-        Only files with no donor row (the new batch / the rewritten
-        partitions) are scanned, per member with ``basePath`` so hive
-        partition stats survive. Stat/bloom columns and bloom sizing
-        are inherited from the newest prior ``_STATS`` manifest
-        (raises if none exists — seed with :meth:`write_stats` once).
-
-        Returns ``{"path", "reused", "computed"}`` — the reuse count
-        is the O(new) claim, observable."""
-        import pyarrow.parquet as pq
-
-        v = self._version(table, version)
-        vdir = os.path.join(self.table_path(table), v)
-        donor = None
-        # newest manifest wins, the target version's own included — a
-        # refresh of an already-statsed version is a pure-reuse no-op
-        for prior in reversed(self.versions(table)):
-            p = os.path.join(self.table_path(table), prior, _STATS)
-            if os.path.exists(p):
-                donor = p
-                break
-        if donor is None:
-            raise ValueError(
-                f"refresh_stats({table!r}): no prior _STATS manifest to "
-                "inherit columns from — seed with write_stats() once"
-            )
-        donor_tbl = pq.read_table(donor)
-        names = donor_tbl.column_names
-        cols = [n[: -len("__min")] for n in names if n.endswith("__min")]
-        bloom_cols = tuple(
-            n[: -len("__bloom")] for n in names if n.endswith("__bloom")
-        )
-        donor_rows = donor_tbl.to_pylist()
-        bloom_bits, bloom_hashes = 1024, 4
-        if bloom_cols and donor_rows:
-            bloom_bits = donor_rows[0][f"{bloom_cols[0]}__bloom_m"]
-            bloom_hashes = donor_rows[0][f"{bloom_cols[0]}__bloom_k"]
-        by_inode = {}
-        for r in donor_rows:
-            p = _local_path(r["file_path"])
-            try:
-                st = os.stat(p)
-            except FileNotFoundError:
-                continue  # vacuumed since
-            by_inode[(st.st_dev, st.st_ino)] = r
-        reused, new_by_member = [], {}
-        tdir = self.table_path(table)
-        members = self._manifest_members(table, v)
-        for f in self.data_files(table, v):
-            st = os.stat(f)
-            prior = by_inode.get((st.st_dev, st.st_ino))
-            if prior is not None:
-                reused.append({**prior, "file_path": os.path.abspath(f)})
-                continue
-            member = next(
-                m
-                for m in members
-                if os.path.abspath(f).startswith(
-                    os.path.abspath(os.path.join(tdir, m)) + os.sep
-                )
-            )
-            new_by_member.setdefault(member, []).append(f)
-        computed = []
-        if new_by_member:
-            parts = []
-            for m, files in new_by_member.items():
-                base = os.path.abspath(os.path.join(tdir, m))
-                df = self.spark.read.option("basePath", base).parquet(*files)
-                present = [c for c in {*cols, *bloom_cols} if c in df.columns]
-                parts.append(
-                    df.select(
-                        F.col("_metadata.file_path").alias("file_path"),
-                        *present,
-                    )
-                )
-            stats = _stats_of_rows(
-                _union(parts), cols, bloom_cols, bloom_bits, bloom_hashes
-            )
-            computed = [
-                {**r.asDict(), "file_path": _local_path(r["file_path"])}
-                for r in stats.collect()
-            ]
-        import pyarrow as pa
-
-        merged = pa.Table.from_pylist(
-            [*reused, *computed], schema=donor_tbl.schema
-        )
-        dest = os.path.join(vdir, _STATS)
-        fd, tmp = tempfile.mkstemp(dir=vdir, prefix="._stats")
-        os.close(fd)
-        pq.write_table(merged, tmp)
-        os.replace(tmp, dest)
-        return {"path": dest, "reused": len(reused), "computed": len(computed)}
-
-    def skip_files(
-        self,
-        table: str,
-        ranges: dict[str, tuple] | None = None,
-        version: str | None = None,
-        equals: dict[str, object] | None = None,
-    ) -> list[str]:
-        """File-skipping plan: the data files of a snapshot whose
-        [min, max] stats intersect EVERY predicate range in ``ranges``
-        (``{col: (lo, hi)}``, closed intervals, ``None`` = unbounded on
-        that side). Uses the persisted ``_STATS`` manifest when it
-        covers the predicate columns (pure metadata read), else
-        computes stats live. Driver-side O(files) — this IS the
-        planner's job, the same loop Delta/Iceberg run over their
-        logs. All-NULL files are skipped: a range predicate never
-        matches NULL. Skipping is a pure file-set reduction — callers
-        must still apply the predicate to the surviving rows (stats
-        prune files, never rows), which :meth:`read_skipped` does.
-
-        ``equals`` (``{col: value}`` or ``{col: [values]}`` for an IN
-        predicate — a file survives if ANY candidate might be present;
-        string/integer values) prunes by min/max AND — when the stats
-        carry a ``{col}__bloom`` bitmap — by per-file bloom membership:
-        the pruning that works for an equality on a high-cardinality
-        column in an UNCLUSTERED layout, where [min, max] never
-        excludes anything. False positives keep a file (bloom
-        semantics); the residual filter owns row truth."""
-        ranges = ranges or {}
-        equals = equals or {}
-        v = self._version(table, version)
-        if not ranges and not equals:
-            raise ValueError(
-                f"skip_files({table!r}): no predicate — pass ranges and/or "
-                "equals (an unpredicated read is just read())"
-            )
-        overlap = set(ranges) & set(equals)
-        if overlap:
-            raise ValueError(
-                f"skip_files({table!r}): column(s) {sorted(overlap)} in both "
-                "ranges and equals — express each predicate once"
-            )
-        for c, (lo, hi) in ranges.items():
-            if lo is None and hi is None:
-                raise ValueError(
-                    f"skip_files({table!r}): range for {c!r} is unbounded on "
-                    "both sides — drop the column from the predicate instead"
-                )
-        equals = {
-            c: list(v) if isinstance(v, (list, tuple, set)) else [v]
-            for c, v in equals.items()
-        }  # a list is an IN predicate: keep a file if ANY value might be in it
-        for c, vals in equals.items():
-            if not vals:
-                raise ValueError(
-                    f"skip_files({table!r}): equals on {c!r} is an empty "
-                    "list — IN () matches nothing, the result is empty"
-                )
-            for val in vals:
-                if val is None:
-                    raise ValueError(
-                        f"skip_files({table!r}): equals on {c!r} is NULL — "
-                        "equality never matches NULL, the result is empty"
-                    )
-                if isinstance(val, bool) or not isinstance(val, (str, int)):
-                    raise ValueError(
-                        f"skip_files({table!r}): equals on {c!r} must be "
-                        f"string/integer value(s), got {type(val).__name__} — "
-                        "float equality pruning is deliberately unsupported"
-                    )
-        cols = [*ranges, *equals]
-        stats_path = os.path.join(self.table_path(table), v, _STATS)
-        rows = None
-        if os.path.exists(stats_path):
-            # driver-side pyarrow read: the persisted plan input is pure
-            # metadata, so planning runs ZERO Spark jobs (also: Spark's
-            # file source ignores underscore-prefixed paths by design).
-            # Column-pruned to the predicate's stats — a range-only plan
-            # must not materialize other columns' bloom word arrays
-            # (measured: 512 files x 2048-word blooms made to_pylist the
-            # whole planning cost)
-            import pyarrow.parquet as pq
-
-            names = set(pq.read_schema(stats_path).names)
-            if all(f"{c}__min" in names for c in cols):
-                want = ["file_path"]
-                for c in cols:
-                    want += [f"{c}__min", f"{c}__max"]
-                blooms = {}
-                for c in equals:
-                    trio = [f"{c}__bloom", f"{c}__bloom_m", f"{c}__bloom_k"]
-                    if all(t in names for t in trio):
-                        want += trio[1:]
-                        blooms[c] = trio[0]
-                tbl = pq.read_table(stats_path, columns=want + list(blooms.values()))
-                # bloom word arrays stay in Arrow buffers, probed via
-                # numpy views — to_pylist on files x words ints IS the
-                # planning cost at scale (measured 0.5 s at just
-                # 512 files x 2048 words)
-                rows = tbl.select(want).to_pylist()
-                for c, name in blooms.items():
-                    arr = tbl[name].combine_chunks()
-                    off = arr.offsets.to_numpy()
-                    flat = arr.values.to_numpy(zero_copy_only=False)
-                    valid = arr.is_valid().to_numpy(zero_copy_only=False)
-                    for i, r in enumerate(rows):
-                        r[f"{c}__bloom"] = (
-                            flat[off[i] : off[i + 1]] if valid[i] else None
-                        )
-        if rows is None:
-            rows = [
-                r.asDict()
-                for r in self.file_stats(
-                    table, cols, v, bloom_cols=tuple(equals)
-                ).collect()
-            ]
-        out = []
-        for r in rows:  # O(files) metadata rows
-            keep = True
-            for c, (lo, hi) in ranges.items():
-                mn, mx = r[f"{c}__min"], r[f"{c}__max"]
-                try:
-                    if (
-                        mn is None
-                        or (lo is not None and mx < lo)
-                        or (hi is not None and mn > hi)
-                    ):
-                        keep = False
-                        break
-                except TypeError:
-                    raise ValueError(
-                        f"skip_files({table!r}): range bound for {c!r} "
-                        f"({type((lo if lo is not None else hi)).__name__}) "
-                        f"does not compare with the column's stats "
-                        f"({type(mn).__name__}) — pass a bound of the "
-                        "column's type"
-                    ) from None
-            if keep:
-                for c, vals in equals.items():
-                    mn, mx = r[f"{c}__min"], r[f"{c}__max"]
-                    words = r.get(f"{c}__bloom")
-                    any_possible = False
-                    for val in vals:
-                        try:
-                            if mn is None or mn > val or mx < val:
-                                continue
-                        except TypeError:
-                            raise ValueError(
-                                f"skip_files({table!r}): equals value for "
-                                f"{c!r} ({type(val).__name__}) does not "
-                                f"compare with the column's stats "
-                                f"({type(mn).__name__}) — pass a value of "
-                                "the column's type"
-                            ) from None
-                        if words is not None:
-                            m, k = r[f"{c}__bloom_m"], r[f"{c}__bloom_k"]
-                            if any(
-                                not (int(words[p // 32]) >> (p % 32)) & 1
-                                for p in _py_bloom_positions(val, m, k)
-                            ):
-                                continue
-                        any_possible = True
-                        break
-                    if not any_possible:
-                        keep = False
-                        break
-            if keep:
-                out.append(_local_path(r["file_path"]))
-        return sorted(out)
-
-    def read_skipped(
-        self,
-        table: str,
-        ranges: dict[str, tuple] | None = None,
-        version: str | None = None,
-        equals: dict[str, object] | None = None,
-    ) -> DataFrame:
-        """Stats-pruned read: :meth:`skip_files` drops files whose
-        stats cannot satisfy the ranges, the survivors are read with
-        each manifest member's own ``basePath`` (so hive partition
-        columns survive a file-list read), and the range predicate is
-        re-applied as a residual filter — correctness never depends on
-        the stats, they only shrink I/O. On a ``cluster_by``/
-        ``zorder_by`` layout this is the end-to-end data-skipping
-        path: a selective range touches a handful of files out of
-        thousands before Spark plans a single task."""
-        ranges = ranges or {}
-        equals = equals or {}
-        v = self._version(table, version)
-        pred = None
-        for c, (lo, hi) in ranges.items():
-            for bound, op in ((lo, "ge"), (hi, "le")):
-                if bound is None:
-                    continue
-                e = F.col(c) >= F.lit(bound) if op == "ge" else F.col(c) <= F.lit(bound)
-                pred = e if pred is None else pred & e
-        for c, val in equals.items():
-            vals = list(val) if isinstance(val, (list, tuple, set)) else [val]
-            e = F.col(c).isin(vals)
-            pred = e if pred is None else pred & e
-        files = set(self.skip_files(table, ranges, v, equals=equals))
-        if not files:
-            return self.read(table, v).where(pred).limit(0)
-        parts = []
-        for m in self._manifest_members(table, v):
-            base = os.path.abspath(os.path.join(self.table_path(table), m))
-            mine = [f for f in sorted(files) if f.startswith(base + os.sep)]
-            if mine:
-                parts.append(
-                    self.spark.read.option("basePath", base).parquet(*mine)
-                )
-        return _union(parts).where(pred)
 
     def compact(
         self,
@@ -1415,30 +797,12 @@ class ParquetWarehouse:
         sweet spot (~128 MB), exactly Delta OPTIMIZE / Iceberg rewrite.
         Runs as an ordinary snapshot write + pointer flip, so readers
         see either the old or the compacted snapshot, never a mix.
-
-        A recorded ``cluster_by``/``zorder_by`` intent (written by
-        ``overwrite``) is RE-APPLIED: compaction is exactly when
-        append-accreted unclustered members get folded back into the
-        layout (Delta's OPTIMIZE ZORDER), and a plain repartition here
-        would silently destroy every stats-skipping property the
-        layout bought. On a hive-partitioned table the cluster sort
-        applies within each partition's files.
         """
         with self._write_lock(table):
             partition_by = self._resolve_layout(
                 table, partition_by, relayout=True
             )
             df = self.read(table)
-            spec = self._cluster_spec(table)
-            sort_cols: list[str] = []
-            if spec:
-                kind, cols, scaler = spec
-                sort_cols = list(cols)
-                if kind == "zorder":
-                    from ..functions.zorder import with_zorder_key
-
-                    df = with_zorder_key(df, cols, scaler=scaler)
-                    sort_cols = ["_zorder"]
             if partition_by:
                 df = _colocated(df, partition_by)
             else:
@@ -1446,78 +810,9 @@ class ParquetWarehouse:
                 # large snapshot while holding the writer lock is not
                 # free, and a partitioned table does not need it
                 total = sum(os.path.getsize(f) for f in self.data_files(table))
-                n = max(1, -(-total // target_file_bytes))  # ceil div
-                df = (
-                    df.repartitionByRange(n, *sort_cols)
-                    if sort_cols
-                    else df.repartition(n)
-                )
-            if sort_cols:
-                df = df.sortWithinPartitions(*sort_cols)
-            if spec and kind == "zorder":
-                df = df.drop("_zorder")
+                df = df.repartition(max(1, -(-total // target_file_bytes)))
             version = self._write_snapshot(df, table, partition_by)
-            if spec:
-                # carry the intent forward so the NEXT compact sees it
-                self._record_cluster(table, version, *spec)
             self._commit(table, version)
-
-    def maintain_table(
-        self,
-        table: str,
-        max_files_per_partition: int = 8,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        stats: bool = True,
-    ) -> dict:
-        """Table-lifecycle maintenance policy in one call — the
-        `maintain_ann_index` contract (read the health signal, act only
-        past the threshold, return the decision for run-logging)
-        applied to the table itself, closing the symmetry between the
-        three persisted indexes and the warehouse that stores them:
-
-        1. read the small-file signal: data files per hive partition
-           (per table when unpartitioned) — what micro-batch appends
-           and merges accrete;
-        2. past ``max_files_per_partition``, :meth:`compact` (the
-           Delta OPTIMIZE step — the one table-sized rewrite, paid
-           only when the policy says so);
-        3. if a ``_STATS`` manifest lineage exists and ``stats``,
-           :meth:`refresh_stats` the live version — O(new files)
-           normally, O(table) right after a compaction (every inode is
-           new; that cost is the compaction's, not the refresh's).
-
-        Returns ``{"files", "partitions", "max_per_partition",
-        "compacted", "stats"}``."""
-        files = self.data_files(table)
-        layout = self._layout(table, self._latest_version(table))
-        if layout:
-            per: dict[str, int] = {}
-            depth = len(layout)
-            for f in files:
-                leaf = os.path.dirname(f)
-                rel = os.path.relpath(leaf, start=self.table_path(table))
-                key = os.sep.join(rel.split(os.sep)[-depth:])
-                per[key] = per.get(key, 0) + 1
-            n_parts, worst = len(per), max(per.values())
-        else:
-            n_parts, worst = 1, len(files)
-        compacted = False
-        if worst > max_files_per_partition:
-            self.compact(table, target_file_bytes=target_file_bytes)
-            compacted = True
-        refreshed = None
-        if stats:
-            try:
-                refreshed = self.refresh_stats(table)
-            except ValueError:
-                refreshed = None  # no seed manifest — stats not in use
-        return {
-            "files": len(files),
-            "partitions": n_parts,
-            "max_per_partition": worst,
-            "compacted": compacted,
-            "stats": refreshed,
-        }
 
     def changes(
         self,
@@ -1638,7 +933,7 @@ class ParquetWarehouse:
         version fail loudly on next read rather than seeing partial
         data.
         """
-        current = self._latest_version(table)
+        current = self.latest_version(table)
         tdir = self.table_path(table)
         versions = self.versions(table)
         keep = set(versions[-keep_last:]) | ({current} if current else set())

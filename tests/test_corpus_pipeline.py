@@ -511,8 +511,8 @@ def test_noop_replay_churns_no_versions(spark, tmp_path):
         "training_corpus__sync", "corpus_docs", "corpus_bands",
         "corpus_bands__sync",
     ]
-    before = {t: wh._latest_version(t) for t in tables if wh.exists(t)}
+    before = {t: wh.latest_version(t) for t in tables if wh.exists(t)}
     c = refresh_corpus(spark, wh, batch, benchmark)  # second replay
     assert c["delta"] == 0
-    after = {t: wh._latest_version(t) for t in before}
+    after = {t: wh.latest_version(t) for t in before}
     assert after == before

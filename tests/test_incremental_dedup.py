@@ -149,11 +149,11 @@ def test_sub_k_word_doc_does_not_churn_index_versions(spark, tmp_path):
     ingest_batch(
         spark, wh, _docs(spark, [(1, BASE_TEXT), (2, "hi")])
     )  # doc 2: 1 word -> no shingles, unindexable
-    v1 = wh._latest_version("corpus_bands")
+    v1 = wh.latest_version("corpus_bands")
     # a batch that adds nothing new to the index
     c = ingest_batch(spark, wh, _docs(spark, [(3, BASE_TEXT)]))
     assert c["survivors"] == 0
-    assert wh._latest_version("corpus_bands") == v1
+    assert wh.latest_version("corpus_bands") == v1
 
 
 def test_dedup_ingest_stream_matches_batch_path(spark, tmp_path):

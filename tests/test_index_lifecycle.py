@@ -125,13 +125,13 @@ def test_iterable_and_dataframe_ids_tombstone_alike(family):
 def test_apply_deletes_drops_rows_keeps_layout(family):
     wh, build, layout = family
     row_tables = build(wh, "ix")
-    layouts = {t: wh._layout(t, wh._latest_version(t)) for t in row_tables}
+    layouts = {t: wh._layout(t, wh.latest_version(t)) for t in row_tables}
     delete_ids(wh, [2, 3], "ix", layout)
     delete_ids(wh, [3], "ix", layout)  # duplicate tombstones change nothing
     apply_deletes(wh, "ix", layout)
     assert not wh.exists(deleted_table("ix"))
     for t in row_tables:
         assert sorted(r[layout.id_col] for r in wh.read(t).collect()) == [1, 4]
-        assert wh._layout(t, wh._latest_version(t)) == layouts[t]
+        assert wh._layout(t, wh.latest_version(t)) == layouts[t]
     assert layouts[row_tables[0]] == (layout.hive_col,)
     apply_deletes(wh, "ix", layout)  # no tombstones: a no-op

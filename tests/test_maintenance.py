@@ -114,36 +114,6 @@ def test_merge_strict_rejects_drift(spark, tmp_path):
         pass  # analysis error from unionByName, as intended
 
 
-def test_cluster_by_yields_disjoint_file_ranges(spark, tmp_path):
-    """Range-clustered snapshots: each parquet file covers a disjoint
-    span of the cluster key, so min/max stats can skip whole files for
-    a key-range predicate."""
-    import pyarrow.parquet as pq
-
-    from stock_bars_data_engineering_project_spark.sources.readers import load_table
-
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    events = load_table(spark, SF_SMALL, "events")
-    wh.overwrite(
-        events.select("event_id", "value"), "t", cluster_by=("event_id",), n_files=4
-    )
-    ranges = []
-    for f in wh.data_files("t"):
-        meta = pq.ParquetFile(f).metadata
-        los, his = [], []
-        for rg in range(meta.num_row_groups):
-            col = meta.row_group(rg).column(0)  # event_id
-            los.append(col.statistics.min)
-            his.append(col.statistics.max)
-        ranges.append((min(los), max(his)))
-    ranges.sort()
-    assert len(ranges) > 1  # actually range-split into multiple files
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint (at most touching) spans
-    # and the data survived intact
-    assert wh.read("t").count() == events.count()
-
-
 def test_crashed_write_leaves_readers_unaffected(spark, tmp_path):
     """The commit protocol: a snapshot written but never committed (a
     crashed writer) must be invisible — readers keep seeing the old
@@ -169,57 +139,6 @@ def test_reader_pinned_before_overwrite_survives_flip(spark, tmp_path):
     wh.overwrite(spark.range(1000, 1010), "t")  # v000002 commits
     assert pinned.count() == 50  # old snapshot intact
     assert wh.read("t").count() == 10  # new readers see the flip
-
-
-def test_export_manifest_duckdb_reads_snapshot(spark, tmp_path):
-    """export_manifest (round 10): the per-version file list lets an
-    EXTERNAL engine read a table version directly — DuckDB
-    read_parquet over the exported list (hive_partitioning +
-    union_by_name, per the docstring recipe) must return exactly what
-    wh.read returns, for a partitioned table grown by appends AND for a
-    pinned historical version after further writes."""
-    import duckdb
-
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    docs = spark.read.parquet(SF_SMALL + "/documents.parquet").select(
-        "doc_id", "source", "text"
-    )
-    wh.overwrite(docs.filter(F.col("doc_id") % 2 == 0), "t",
-                 partition_by=("source",))
-    wh.append(docs.filter(F.col("doc_id") % 2 == 1), "t")
-    v1 = wh._latest_version("t")
-    mf = wh.export_manifest("t")
-    assert mf.endswith("_FILELIST")
-
-    def _duck(manifest_path):
-        with open(manifest_path) as f:
-            files = [ln.strip() for ln in f if ln.strip()]
-        assert files and all(p.endswith(".parquet") for p in files)
-        con = duckdb.connect()
-        rows = con.execute(
-            "SELECT doc_id, source, md5(text) FROM read_parquet("
-            "?, hive_partitioning=true, union_by_name=true) ORDER BY doc_id",
-            [files],
-        ).fetchall()
-        con.close()
-        return rows
-
-    want = sorted(
-        (r.doc_id, r.source, r.h)
-        for r in wh.read("t").select(
-            "doc_id", "source", F.md5("text").alias("h")
-        ).collect()
-    )
-    assert _duck(mf) == want
-
-    # a pinned historical version stays externally readable after the
-    # table moves on (snapshot dirs are immutable)
-    wh.overwrite(docs.limit(10), "t")
-    mf1 = wh.export_manifest("t", version=v1)
-    assert _duck(mf1) == want
-    # and the new current version exports its own (different) list
-    mf2 = wh.export_manifest("t")
-    assert len(_duck(mf2)) == 10
 
 
 def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
@@ -317,204 +236,6 @@ def test_merge_on_drift_appended_history_falls_back_to_full(spark, tmp_path):
     assert len(got) == 22
 
 
-# -- file-level data skipping (stats manifest + pruned reads) ---------------
-
-
-def _sorted_rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_read_skipped_equals_filtered_read_unclustered(spark, tmp_path):
-    # correctness never depends on stats: unclustered layout (every file
-    # spans the whole value range) must return exactly the filtered read
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 4000).withColumn(
-        "v", (F.col("id") * 2654435761 % 1000).cast("long")
-    )
-    wh.overwrite(df.repartition(8), "t")
-    ranges = {"v": (100, 299), "id": (None, 3500)}
-    expect = wh.read("t").where((F.col("v").between(100, 299)) & (F.col("id") <= 3500))
-    got = wh.read_skipped("t", ranges)
-    assert _sorted_rows(got) == _sorted_rows(expect)
-
-
-def test_read_skipped_prunes_clustered_files(spark, tmp_path):
-    # cluster_by gives disjoint per-file ranges -> a selective range
-    # predicate must drop most files at PLAN time (the 100 TB lever)
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 8000).withColumn("v", F.col("id") % 800)
-    wh.overwrite(df, "t", cluster_by=("v",), n_files=8)
-    assert len(wh.data_files("t")) == 8
-    survivors = wh.skip_files("t", {"v": (100, 199)})
-    # ~1/8th of the key space; sampled range boundaries can straddle an
-    # extra file run to run
-    assert 1 <= len(survivors) <= 3
-    got = wh.read_skipped("t", {"v": (100, 199)})
-    expect = wh.read("t").where(F.col("v").between(100, 199))
-    assert _sorted_rows(got) == _sorted_rows(expect)
-
-
-def test_read_skipped_zorder_prunes_on_second_dimension(spark, tmp_path):
-    # the z-order promise: skipping bites on a NON-leading dimension too
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 16384).select(
-        (F.col("id") % 128).alias("x"), (F.col("id") / 128).cast("long").alias("y")
-    )
-    wh.overwrite(df, "t", zorder_by=("x", "y"), n_files=16)
-    n = len(wh.data_files("t"))
-    survivors = wh.skip_files("t", {"y": (0, 15)})
-    assert len(survivors) < n  # second dimension still prunes
-    got = wh.read_skipped("t", {"y": (0, 15)})
-    expect = wh.read("t").where(F.col("y").between(0, 15))
-    assert _sorted_rows(got) == _sorted_rows(expect)
-
-
-def test_skip_files_uses_persisted_stats_and_skips_all_null_member(spark, tmp_path):
-    # manifest-chain table where one member is all-NULL in the stat
-    # column: a range predicate can never match NULL, so the planner
-    # must drop that member's files entirely; _STATS makes the plan a
-    # pure metadata read (pinned by stats-file existence + mtime)
-    import os
-
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.append(spark.range(0, 100).withColumn("v", F.col("id") % 10), "t")
-    wh.append(
-        spark.range(100, 200).withColumn("v", F.lit(None).cast("long")), "t"
-    )
-    stats_path = wh.write_stats("t", ["v"])
-    assert os.path.basename(stats_path) == "_STATS"
-    mtime = os.path.getmtime(stats_path)
-    survivors = wh.skip_files("t", {"v": (0, 9)})
-    assert len(survivors) >= 1
-    assert all("v000001" in f for f in survivors)  # null member dropped
-    got = wh.read_skipped("t", {"v": (3, 5)})
-    expect = wh.read("t").where(F.col("v").between(3, 5))
-    assert _sorted_rows(got) == _sorted_rows(expect)
-    assert os.path.getmtime(stats_path) == mtime  # reused, not rewritten
-
-
-def test_read_skipped_partitioned_members_keep_partition_columns(spark, tmp_path):
-    # survivors are read per-member with basePath so hive partition
-    # columns survive a file-list read; drift-appended members align
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 1000).withColumn("bucket", (F.col("id") % 4).cast("int"))
-    wh.append(df, "t", partition_by=("bucket",))
-    wh.append(
-        df.withColumn("id", F.col("id") + 1000).withColumn("extra", F.lit("x")),
-        "t",
-        allow_schema_drift=True,
-    )
-    got = wh.read_skipped("t", {"bucket": (1, 2)})
-    assert set(got.columns) == {"id", "bucket", "extra"}
-    expect = wh.read("t").where(F.col("bucket").between(1, 2))
-    assert sorted(r["id"] for r in got.collect()) == sorted(
-        r["id"] for r in expect.collect()
-    )
-    # partition-column stats prune: bucket=0/bucket=3 dirs never read
-    survivors = wh.skip_files("t", {"bucket": (1, 2)})
-    assert survivors and all(
-        "bucket=1" in f or "bucket=2" in f for f in survivors
-    )
-
-
-def test_read_skipped_empty_survivor_set_keeps_schema(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(spark.range(0, 100).withColumn("v", F.col("id") % 10), "t")
-    got = wh.read_skipped("t", {"v": (1000, 2000)})
-    assert got.count() == 0
-    assert set(got.columns) == {"id", "v"}
-
-
-def test_skip_files_rejects_doubly_unbounded_range(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(spark.range(0, 10), "t")
-    try:
-        wh.skip_files("t", {"id": (None, None)})
-        raise AssertionError("doubly-unbounded range must refuse")
-    except ValueError as e:
-        assert "unbounded" in str(e)
-
-
-def test_file_stats_missing_column_refuses_loudly(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(spark.range(0, 10), "t")
-    try:
-        wh.file_stats("t", ["nope"])
-        raise AssertionError("unknown stat column must refuse")
-    except ValueError as e:
-        assert "nope" in str(e)
-
-
-def test_equality_bloom_skips_unclustered_files(spark, tmp_path):
-    # high-cardinality string equality on an UNCLUSTERED layout: every
-    # file's [min, max] spans the domain (hash-partitioned tokens), so
-    # min/max prunes nothing — the per-file bloom does the work
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 3200).select(
-        F.col("id"), F.concat(F.lit("tok"), F.col("id")).alias("val")
-    )
-    wh.overwrite(df.repartition(8, "val"), "t")
-    assert len(wh.data_files("t")) == 8
-    wh.write_stats("t", ["val"], bloom_cols=("val",), bloom_bits=32768)
-    survivors = wh.skip_files("t", equals={"val": "tok123"})
-    assert 1 <= len(survivors) <= 2  # the owning file (+ rare bloom FP)
-    got = wh.read_skipped("t", equals={"val": "tok123"}).collect()
-    assert [r["id"] for r in got] == [123]
-    # absent value: bloom can prove absence -> zero files planned
-    assert wh.skip_files("t", equals={"val": "tok99999"}) == []
-    assert wh.read_skipped("t", equals={"val": "tok99999"}).count() == 0
-
-
-def test_equality_and_range_compose(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 4000).select(
-        F.col("id"),
-        (F.col("id") % 40).alias("bucket"),
-        F.concat(F.lit("u"), (F.col("id") % 500)).alias("user"),
-    )
-    wh.overwrite(df, "t", cluster_by=("bucket",), n_files=8)
-    wh.write_stats("t", ["bucket", "user"], bloom_cols=("user",), bloom_bits=32768)
-    got = wh.read_skipped("t", {"bucket": (10, 19)}, equals={"user": "u123"})
-    expect = wh.read("t").where(
-        F.col("bucket").between(10, 19) & (F.col("user") == "u123")
-    )
-    assert sorted(r["id"] for r in got.collect()) == sorted(
-        r["id"] for r in expect.collect()
-    )
-    # the range alone prunes the clustered dimension (<=3 of 8: the
-    # range-partitioner's sampled boundaries can straddle one extra file)
-    assert len(wh.skip_files("t", {"bucket": (10, 19)})) <= 3
-
-
-def test_equals_guards(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(spark.range(0, 10).withColumn("v", F.col("id") % 3), "t")
-    for bad, match in [
-        (dict(equals={"v": None}), "NULL"),
-        (dict(equals={"v": 1.5}), "float"),
-        (dict(ranges={"v": (0, 1)}, equals={"v": 2}), "once"),
-        (dict(), "no predicate"),
-    ]:
-        try:
-            wh.skip_files("t", bad.get("ranges"), equals=bad.get("equals"))
-            raise AssertionError(f"{bad} must refuse")
-        except ValueError as e:
-            assert match in str(e)
-
-
-def test_equality_minmax_prunes_without_bloom(spark, tmp_path):
-    # no bloom in the persisted stats: equality still prunes via the
-    # clustered min/max (lo = hi = v), silently skipping the bloom test
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 8000).withColumn("v", F.col("id") % 800)
-    wh.overwrite(df, "t", cluster_by=("v",), n_files=8)
-    wh.write_stats("t", ["v"])
-    survivors = wh.skip_files("t", equals={"v": 42})
-    assert 1 <= len(survivors) <= 2
-    got = wh.read_skipped("t", equals={"v": 42})
-    assert got.count() == 10 and all(r["v"] == 42 for r in got.collect())
-
-
 # -- DML DELETE -------------------------------------------------------------
 
 
@@ -586,87 +307,6 @@ def test_delete_where_sql_string_and_unpartitioned_fallback(spark, tmp_path):
     assert got == [i for i in range(50) if i % 10 != 0]
 
 
-def test_refresh_stats_appends_compute_only_new_files(spark, tmp_path):
-    import os
-
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.append(
-        spark.range(0, 1000).withColumn("v", F.col("id") % 100).repartition(4), "t"
-    )
-    wh.write_stats("t", ["v"], bloom_cols=("v",), bloom_bits=8192)
-    n_v1 = len(wh.data_files("t"))
-    wh.append(
-        spark.range(1000, 1500).withColumn("v", F.col("id") % 100).repartition(2), "t"
-    )
-    out = wh.refresh_stats("t")
-    assert out["reused"] == n_v1  # prior member's files never rescanned
-    assert out["computed"] == len(wh.data_files("t")) - n_v1
-    assert os.path.dirname(out["path"]).endswith("v000002")
-    # refreshed manifest answers both predicate kinds over ALL files
-    got = wh.read_skipped("t", {"id": (0, 10)})
-    assert got.count() == 11
-    assert sorted(r["id"] for r in wh.read_skipped("t", equals={"v": 7}).collect()) == [
-        i for i in range(1500) if i % 100 == 7
-    ]
-
-
-def test_refresh_stats_after_delete_reuses_hardlinked_partitions(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 2000).withColumn("bucket", (F.col("id") % 4).cast("int"))
-    wh.overwrite(df, "t", partition_by=("bucket",))
-    wh.compact("t", partition_by=("bucket",))
-    wh.write_stats("t", ["bucket", "id"])
-    wh.delete_where("t", (F.col("bucket") == 2) & (F.col("id") < 100))
-    out = wh.refresh_stats("t")
-    assert out["reused"] == 3  # untouched buckets: shared inodes
-    assert out["computed"] >= 1  # rewritten bucket 2
-    # stats reflect the delete: bucket-2 min id is now >= 100
-    survivors = wh.read_skipped("t", {"id": (0, 99)}, equals={"bucket": 2})
-    assert survivors.count() == 0
-    assert wh.read_skipped("t", {"id": (0, 99)}).count() == 75
-
-
-def test_refresh_stats_without_seed_refuses(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(spark.range(10), "t")
-    try:
-        wh.refresh_stats("t")
-        raise AssertionError("refresh without a seed manifest must refuse")
-    except ValueError as e:
-        assert "write_stats" in str(e)
-
-
-def test_maintain_table_policy(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    # healthy table: no compaction, decision logged
-    wh.overwrite(
-        spark.range(0, 100).withColumn("v", F.col("id") % 10).coalesce(2), "t"
-    )
-    wh.write_stats("t", ["v"])
-    out = wh.maintain_table("t", max_files_per_partition=8)
-    assert out["compacted"] is False
-    assert out["stats"]["computed"] == 0  # same inodes: pure reuse
-    versions_before = wh.versions("t")
-    # accrete small files past the threshold -> compact fires
-    for i in range(3):
-        wh.append(
-            spark.range(100 * (i + 1), 100 * (i + 2))
-            .withColumn("v", F.col("id") % 10)
-            .repartition(4),
-            "t",
-        )
-    out = wh.maintain_table("t", max_files_per_partition=8)
-    assert out["max_per_partition"] > 8 and out["compacted"] is True
-    assert len(wh.data_files("t")) <= 2  # post-compact
-    assert wh.read("t").count() == 400
-    # stats refreshed onto the compacted version: pruning still works
-    assert wh.read_skipped("t", equals={"v": 3}).count() == 40
-    assert len(wh.versions("t")) > len(versions_before)
-    # stats lineage absent: policy reports stats None, never raises
-    wh.overwrite(spark.range(5), "u")
-    assert wh.maintain_table("u")["stats"] is None
-
-
 def test_delete_where_emptying_whole_partition_is_not_resurrected(spark, tmp_path):
     # the review-confirmed hole: survivors of an emptied partition write
     # NO leaf dir, and a dir-presence-inferred carry-over would hardlink
@@ -681,45 +321,12 @@ def test_delete_where_emptying_whole_partition_is_not_resurrected(spark, tmp_pat
     assert sorted(r["bucket"] for r in got.select("bucket").distinct().collect()) == [0, 1, 3]
 
 
-def test_write_stats_bloom_only_column_gets_minmax(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(
-        spark.range(0, 200).withColumn("user", F.concat(F.lit("u"), F.col("id"))), "t"
-    )
-    path = wh.write_stats("t", ["id"], bloom_cols=("user",), bloom_bits=4096)
-    names = set(pq.read_schema(path).names)
-    # a bloom-only column must still carry min/max, else the persisted-
-    # stats gate demotes every equality plan to a live full scan
-    assert {"user__min", "user__max", "user__bloom"} <= names
-    assert [r["id"] for r in wh.read_skipped("t", equals={"user": "u7"}).collect()] == [7]
-
-
-def test_skip_files_type_mismatch_refuses_loudly(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    wh.overwrite(
-        spark.range(0, 10).withColumn("user", F.concat(F.lit("u"), F.col("id"))), "t"
-    )
-    wh.write_stats("t", ["user"])
-    for kwargs in [dict(equals={"user": 123}), dict(ranges={"user": (0, 5)})]:
-        try:
-            wh.skip_files("t", kwargs.get("ranges"), equals=kwargs.get("equals"))
-            raise AssertionError(f"{kwargs} must refuse")
-        except ValueError as e:
-            assert "user" in str(e) and "type" in str(e)
-
-
 def test_warehouse_lifecycle_end_to_end(spark, tmp_path):
-    """The round-10 lakehouse loop in one pass: micro-batch appends
-    accrete -> maintain_table compacts + refreshes stats -> a GDPR
-    delete prunes physically -> refresh_stats stays O(new) -> the
-    version exports to an external engine byte-equal."""
+    """The maintenance loop in one pass: micro-batch appends accrete ->
+    compact folds them to one file per partition -> a GDPR delete
+    prunes physically -> an external engine reads the final version's
+    data files and sees the same rows."""
     import duckdb
-
-    from stock_bars_data_engineering_project_spark.operators.validation import (
-        pseudonymize,
-    )
 
     wh = ParquetWarehouse(spark, str(tmp_path))
     for wave in range(3):
@@ -728,93 +335,17 @@ def test_warehouse_lifecycle_end_to_end(spark, tmp_path):
             (F.col("id") % 4).cast("int").alias("bucket"),
             F.concat(F.lit("user"), F.col("id") % 100).alias("owner"),
         )
-        wh.append(pseudonymize(batch, ("owner",), "k1"), "t", partition_by=("bucket",))
-    wh.write_stats("t", ["id"], bloom_cols=("owner",), bloom_bits=32768)
-    out = wh.maintain_table("t", max_files_per_partition=2)
-    assert out["compacted"] is True
-    # point lookup through the refreshed stats: one owner token, pruned
-    import hashlib
-
-    tok = "pid_" + hashlib.sha256(b"k1:user7").hexdigest()[:16]
-    hits = wh.read_skipped("t", equals={"owner": tok})
-    assert sorted(r["id"] % 100 for r in hits.collect()) == [7] * 30
-    # the delete: one owner's rows leave, physically partition-pruned
-    assert wh.delete_where("t", F.col("owner") == tok) >= 1
-    ref = wh.refresh_stats("t")
-    assert ref["reused"] >= 1  # untouched partitions rode their inodes
-    assert wh.read_skipped("t", equals={"owner": tok}).count() == 0
+        wh.append(batch, "t", partition_by=("bucket",))
+    wh.compact("t")
+    assert len(wh.data_files("t")) == 4  # one per hive partition
+    # user7 owns ids == 7 mod 100, all in bucket 3: one partition touched
+    assert wh.delete_where("t", F.col("owner") == "user7") == 1
     assert wh.read("t").count() == 3000 - 30
-    # external engine reads the final version byte-equal
-    manifest = wh.export_manifest("t")
-    with open(manifest) as f:
-        files = [line.strip() for line in f if line.strip()]
+    files = wh.data_files("t")
     n = duckdb.sql(
-        f"select count(*) from read_parquet({files!r}, hive_partitioning=true, union_by_name=true)"
+        f"select count(*) from read_parquet({files!r}, hive_partitioning=true)"
     ).fetchone()[0]
     assert n == 3000 - 30
-
-
-def test_equality_in_list_pruning(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 3200).select(
-        F.col("id"), F.concat(F.lit("tok"), F.col("id")).alias("val")
-    )
-    wh.overwrite(df.repartition(8, "val"), "t")
-    wh.write_stats("t", ["val"], bloom_cols=("val",), bloom_bits=32768)
-    # IN over two present values + one absent: union of owning files
-    survivors = wh.skip_files("t", equals={"val": ["tok123", "tok999", "tok99999"]})
-    assert 1 <= len(survivors) <= 4
-    got = wh.read_skipped("t", equals={"val": ["tok123", "tok999", "tok99999"]})
-    assert sorted(r["id"] for r in got.collect()) == [123, 999]
-    # all-absent IN proves empty at plan time
-    assert wh.skip_files("t", equals={"val": ["tokA", "tokB"]}) == []
-    try:
-        wh.skip_files("t", equals={"val": []})
-        raise AssertionError("empty IN must refuse")
-    except ValueError as e:
-        assert "empty" in str(e)
-
-
-def test_compact_reapplies_recorded_cluster_layout(spark, tmp_path):
-    # append-accreted members are unclustered; compact must fold them
-    # back into the recorded layout instead of destroying it
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 8000).withColumn("v", F.col("id") % 800)
-    wh.overwrite(df, "t", cluster_by=("v",), n_files=8)
-    wh.append(
-        spark.range(8000, 12000).withColumn("v", F.col("id") % 800).repartition(4),
-        "t",
-    )
-    # pre-compact: the appended member spans the whole v-range, so the
-    # range predicate keeps its files — pruning partially degraded
-    before = wh.skip_files("t", {"v": (100, 199)})
-    wh.compact("t", target_file_bytes=1 << 15)
-    after = wh.skip_files("t", {"v": (100, 199)})
-    n_files = len(wh.data_files("t"))
-    assert n_files > 1
-    assert len(after) < n_files  # clustering restored: pruning works
-    assert len(after) <= len(before)
-    got = wh.read_skipped("t", {"v": (100, 199)})
-    expect = wh.read("t").where(F.col("v").between(100, 199))
-    assert sorted(r["id"] for r in got.collect()) == sorted(
-        r["id"] for r in expect.collect()
-    )
-
-
-def test_compact_reapplies_zorder_layout(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    df = spark.range(0, 16384).select(
-        (F.col("id") % 128).alias("x"), (F.col("id") / 128).cast("long").alias("y")
-    )
-    wh.overwrite(df, "t", zorder_by=("x", "y"), n_files=16)
-    wh.append(df.withColumn("x", F.col("x")), "t")  # unclustered member
-    # ~32 KB of input: a target well below it keeps the file count off
-    # the ceil(total / target) boundary whatever the exact byte total
-    wh.compact("t", target_file_bytes=1 << 13)
-    n = len(wh.data_files("t"))
-    assert n > 1
-    # second-dimension pruning survives the compaction (z-order restored)
-    assert len(wh.skip_files("t", {"y": (0, 15)})) < n
 
 
 def test_append_type_drift_refuses_at_write_time(spark, tmp_path):

@@ -127,13 +127,13 @@ def test_inner_join_drops_unknown_tickers_q7(spark):
 def test_analysis_rebuild_runs_even_when_load_fails_q8(spark, wh):
     cfg = PipelineConfig()
     run(spark, wh, cfg, default_dim(spark))
-    v_before = wh._latest_version(cfg.analysis_table)
+    v_before = wh.latest_version(cfg.analysis_table)
     # break the load half: invalid load_method -> K5 dispatch raises
     bad = PipelineConfig(load_method="explode")
     info = run(spark, wh, bad, default_dim(spark))
     assert "error" in info
     # ...but the analysis table was still rebuilt (a NEW version exists)
-    assert wh._latest_version(cfg.analysis_table) > v_before
+    assert wh.latest_version(cfg.analysis_table) > v_before
 
 
 def test_load_method_dispatch_overwrite(spark, wh):

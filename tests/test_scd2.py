@@ -233,7 +233,7 @@ def test_store_history_is_append_only_o_batch(spark, tmp_path):
     # history grew file-monotonically (append-only manifest chain): each
     # batch ADDED files, never rewrote the accumulated set
     assert hist_members == sorted(hist_members)
-    latest = wh._latest_version(store.hist_table)
+    latest = wh.latest_version(store.hist_table)
     chain = wh._manifest_members(store.hist_table, latest)
     # one member per history-writing batch (batch 2's base + 3 appends)
     assert len(chain) == 4

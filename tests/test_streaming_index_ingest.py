@@ -93,12 +93,12 @@ def test_ann_ingest_stream_matches_batch_path(spark, emb, tmp_path):
     assert len(got) > 0
 
     # replay with the fully-drained checkpoint: no new rows, same answers
-    v = wh_s._latest_version("idx")
+    v = wh_s.latest_version("idx")
     index_ingest_stream(
         spark, src, emb.schema, ckpt,
         lambda b: ingest_vectors(wh_s, b, "idx"),
     )
-    assert wh_s._latest_version("idx") == v
+    assert wh_s.latest_version("idx") == v
     assert _rows(ann_query(wh_s, queries, "idx", k=5, nprobe=3)) == got
 
 
@@ -144,13 +144,13 @@ def test_bm25_ingest_stream_matches_batch_path(spark, docs, tmp_path):
 
     # replay: membership anti-join leaves the index untouched
     n_docs = wh.read("bm__docs").count()
-    v = wh._latest_version("bm__postings")
+    v = wh.latest_version("bm__postings")
     index_ingest_stream(
         spark, src, corpus.schema, ckpt,
         lambda b: ingest_docs(wh, b, "bm", BM25),
     )
     assert wh.read("bm__docs").count() == n_docs
-    assert wh._latest_version("bm__postings") == v
+    assert wh.latest_version("bm__postings") == v
     assert _hits(bm25_query(wh, queries, table="bm", k=10)) == got
 
 

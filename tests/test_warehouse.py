@@ -278,6 +278,25 @@ def test_append_empty_partitioned_batch_is_noop_read(spark, wh):
     assert {r.stock for r in wh.read("t").collect()} == {"TSLA", "AAPL"}
 
 
+def test_has_partition_probes_every_live_member(spark, wh):
+    """has_partition sees a partition in any manifest member of the
+    live snapshot, at any level of the layout, and nothing else."""
+    assert not wh.has_partition("t", "stock", "TSLA")  # no table yet
+    wh.append(_df(spark, [("TSLA", "t1", 1.0)]), "t", partition_by=("stock",))
+    wh.append(_df(spark, [("AAPL", "t2", 2.0)]), "t")  # second member
+    assert wh.has_partition("t", "stock", "TSLA")
+    assert wh.has_partition("t", "stock", "AAPL")
+    assert not wh.has_partition("t", "stock", "MSFT")
+    assert not wh.has_partition("t", "timestamp", "t1")  # not a layout column
+    wh.overwrite(
+        _df(spark, [("TSLA", "t1", 1.0)]), "u", partition_by=("stock", "timestamp")
+    )
+    assert wh.has_partition("u", "timestamp", "t1")
+    assert not wh.has_partition("u", "timestamp", "t2")
+    wh.overwrite(_df(spark, [("MSFT", "t3", 3.0)]), "t")  # keeps the layout
+    assert not wh.has_partition("t", "stock", "TSLA")
+
+
 def test_vacuum_keeps_referenced_manifest_members(spark, wh):
     """vacuum must not delete a version dir that a retained manifest
     snapshot references — and must still drop truly dead versions."""
@@ -319,7 +338,7 @@ def test_compact_collapses_manifest_chain(spark, wh):
     wh.append(_df(spark, [("B", "t2", 2.0)]), "t")
     assert len(wh._manifest_members("t", "v000002")) == 2
     wh.compact("t")
-    latest = wh._latest_version("t")
+    latest = wh.latest_version("t")
     assert wh._manifest_members("t", latest) == [latest]
     assert {r.stock for r in wh.read("t").collect()} == {"A", "B"}
 
@@ -385,7 +404,7 @@ def test_manifest_append_preserves_hive_layout(spark, wh):
         "p",
         manifest_limit=2,
     )
-    latest = wh._latest_version("p")
+    latest = wh.latest_version("p")
     assert wh._manifest_members("p", latest) == [latest]  # materialized
     vdir = os.path.join(wh.table_path("p"), latest)
     assert any(d.startswith("dt=") for d in os.listdir(vdir))
@@ -405,7 +424,7 @@ def test_append_and_merge_refuse_a_second_layout(spark, wh):
 
     def state(t):
         rows = wh.read(t).select("x", "y", "v").collect()
-        return wh._latest_version(t), sorted(tuple(r) for r in rows)
+        return wh.latest_version(t), sorted(tuple(r) for r in rows)
 
     for table, layout in (("flat", None), ("by_y", ("y",))):
         wh.append(
@@ -448,8 +467,8 @@ def test_append_after_restore_does_not_clobber(spark, wh):
     # the live table is the restored v1 plus the new batch, nothing else
     assert {r.stock for r in wh.read("t").collect()} == {"A", "Z"}
     # and the new write landed in a brand-new version directory
-    assert wh._latest_version("t") not in (v1, v3)
-    assert wh.versions("t")[-1] == wh._latest_version("t")
+    assert wh.latest_version("t") not in (v1, v3)
+    assert wh.versions("t")[-1] == wh.latest_version("t")
 
 
 def test_merge_compact_overwrite_inherit_layout(spark, wh):
@@ -467,7 +486,7 @@ def test_merge_compact_overwrite_inherit_layout(spark, wh):
     )
 
     def _latest_is_partitioned():
-        latest = wh._latest_version("p")
+        latest = wh.latest_version("p")
         vdir = os.path.join(wh.table_path("p"), latest)
         return (
             any(d.startswith("dt=") for d in os.listdir(vdir))
@@ -499,7 +518,7 @@ def test_merge_compact_overwrite_inherit_layout(spark, wh):
 
     # explicit () = intentional flatten
     wh.overwrite(spark.createDataFrame([("E", "d5", 5.0)], sch), "p", partition_by=())
-    latest = wh._latest_version("p")
+    latest = wh.latest_version("p")
     vdir = os.path.join(wh.table_path("p"), latest)
     assert not any(d.startswith("dt=") for d in os.listdir(vdir))
     assert wh._layout("p", latest) == ()
