@@ -8,7 +8,7 @@ API so Catalyst + Tungsten pick the physical strategy, and the design
 holds from ``local[*]`` to a 1000-executor cluster.
 
 Layout:
-    sources/    file + API sources, nested-JSON flatten (SURVEY §2.1 S1-S8)
+    sources/    file + API sources (SURVEY §2.1 S1-S8)
     sinks/      append / overwrite / keyed-merge / checkpoint / log sinks (K1-K7, C1-C2)
     functions/  scalar & column expression helpers (X1-X8) + text/hash/vector fns
     operators/  relational operators: windows, joins, dedup, similarity, top-k

@@ -26,7 +26,7 @@ materialized.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MINHASH_SIGS = 16
@@ -45,6 +45,27 @@ def md5_bucket48(key: Column, n_buckets: int, salt: str = "") -> Column:
         F.concat(F.lit(f"{salt}:"), key.cast("string")) if salt else key.cast("string")
     )
     return F.conv(F.substring(F.md5(keyed), 1, 12), 16, 10).cast("long") % n_buckets
+
+
+def content_epoch(batch: DataFrame, id_col: str) -> str:
+    """Deterministic content-addressed epoch id for a batch: two
+    independent order-free 48-bit xor folds over the ids plus the row
+    count. One aggregate job (no driver-side id list), identical for a
+    redelivered batch, and loudly NULL-guarded: a NULL id cannot be
+    content-addressed or replay-deduped."""
+    span = 1 << 48
+    row = batch.agg(
+        F.bit_xor(md5_bucket48(F.col(id_col), span, salt="e1")).alias("x1"),
+        F.bit_xor(md5_bucket48(F.col(id_col), span, salt="e2")).alias("x2"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col(id_col).isNull().cast("int")).alias("nulls"),
+    ).collect()[0]
+    if (row.nulls or 0) > 0:
+        raise ValueError(
+            f"content-addressed epoch: {row.nulls} NULL {id_col} rows — ids "
+            "must be non-NULL for replay idempotence"
+        )
+    return f"{(row.x1 or 0):012x}{(row.x2 or 0):012x}n{row.n}"
 
 
 def minhash_signature(shingles: Column, n_sigs: int = MINHASH_SIGS) -> Column:
@@ -111,9 +132,10 @@ def simhash60(toks: Column | str) -> Column:
     regardless of what expression produced it."""
     if isinstance(toks, str):
         # SQL token-array expression -> the whole two-fold simhash as
-        # ONE F.expr parse (round-10 opt: the lambda-built Column form
-        # paid ~70 ms of py4j round-trips per call); shapes and
-        # NULL/type semantics mirror the Column form below exactly
+        # ONE F.expr parse (the lambda-built Column form pays a py4j
+        # round-trip per node; BASELINE.md, "Plan-construction figures");
+        # shapes and NULL/type semantics mirror the Column form below
+        # exactly
         halves_sql = (
             "named_struct("
             "'h1', CAST(conv(substring(md5(t), 1, 7), 16, 10) AS BIGINT), "

@@ -20,11 +20,7 @@ Scale notes (100 TB posture): one shuffle, hash-partitioned by ``key``;
 every window below shares that single (key, ts) sort so Catalyst plans ONE
 Exchange + ONE Sort feeding all three Window operators. Skewed keys (few
 huge tickers) are the known hazard — AQE skew handling does not apply to
-windows. For pathological key skew use :func:`bars_analysis_two_phase`
-(opt-in): pre-partition by (key, coarse time bucket), compute every frame
-locally, and repair only the <= frame_rows-1 boundary rows per bucket
-from the previous bucket's carried tail — equality with the single-window
-plan is pinned in tests/test_analysis_skew.py.
+windows.
 """
 
 from __future__ import annotations
@@ -35,20 +31,21 @@ from pyspark.sql import functions as F
 from ..functions.scalars import guarded_ratio, round_half_up
 
 
-def _analysis_select(
+def bars_analysis(
     df: DataFrame,
-    order: Window,
-    frame_rows: int,
-    key: str,
-    ts: str,
-    value: str,
-    carry_cols: tuple[str, ...],
-    extra: tuple[str, ...] = (),
+    key: str = "stock",
+    ts: str = "timestamp",
+    value: str = "close",
+    carry_cols: tuple[str, ...] = (),
+    frame_rows: int = 5,
 ) -> DataFrame:
-    """The shared window math over an arbitrary partitioning spec: the
-    single-window plan passes PARTITION BY key; the two-phase plan
-    passes PARTITION BY (key, bucket) and repairs bucket boundaries.
-    ``extra`` carries plumbing columns through unchanged."""
+    """Per-key lag / guarded-return / moving-avg / moving-stddev analytics.
+
+    Output columns (names mirror the reference's derived table):
+    ``key, [carry_cols...], date, value, prev_value, return_pct,
+    moving_avg, moving_stddev``.
+    """
+    order = Window.partitionBy(key).orderBy(ts)
     frame = order.rowsBetween(-(frame_rows - 1), Window.currentRow)
     v = F.col(value)
     prev = F.lag(v, 1).over(order)  # W1: no default => NULL on first row (Q5)
@@ -68,162 +65,5 @@ def _analysis_select(
             round_half_up(F.stddev(F.col("ret")).over(frame), 2).alias(
                 "moving_stddev"
             ),  # W3
-            *[F.col(c) for c in extra],
         )
     )
-
-
-def bars_analysis(
-    df: DataFrame,
-    key: str = "stock",
-    ts: str = "timestamp",
-    value: str = "close",
-    carry_cols: tuple[str, ...] = (),
-    frame_rows: int = 5,
-) -> DataFrame:
-    """Per-key lag / guarded-return / moving-avg / moving-stddev analytics.
-
-    Output columns (names mirror the reference's derived table):
-    ``key, [carry_cols...], date, value, prev_value, return_pct,
-    moving_avg, moving_stddev``.
-    """
-    order = Window.partitionBy(key).orderBy(ts)
-    return _analysis_select(df, order, frame_rows, key, ts, value, carry_cols)
-
-
-def bars_analysis_two_phase(
-    df: DataFrame,
-    bucket,
-    key: str = "stock",
-    ts: str = "timestamp",
-    value: str = "close",
-    carry_cols: tuple[str, ...] = (),
-    frame_rows: int = 5,
-) -> DataFrame:
-    """Skew-safe twin of :func:`bars_analysis` for PATHOLOGICAL key skew
-    (one ticker holding a large fraction of all rows). A window cannot
-    be AQE-skew-split — the whole key lands in one task and sorts there
-    — so this opt-in variant partitions by (key, ``bucket``) instead,
-    where ``bucket`` is a caller-supplied coarse-time Column derived
-    from ``ts`` (e.g. ``F.date_trunc('month', F.col(ts))``): the hot
-    key's sort spreads over its time buckets, bounded-frame windows
-    compute LOCALLY per bucket, and only the rows whose frame crosses
-    the bucket boundary — at most ``frame_rows - 1`` + the lag row per
-    (key, bucket) — are recomputed over the previous bucket's carried
-    tail (<= frame_rows rows) and stitched back in. Cost shape: the big
-    shuffle keys on (key, bucket) — skew-free by construction when the
-    hot key spans time — plus two tiny repair passes that are O(buckets
-    x frame_rows), not O(rows).
-
-    Correctness precondition, ENFORCED lazily in-plan: a frame may
-    reach back only into the IMMEDIATELY previous present bucket, i.e.
-    every non-first (key, bucket) group must hold >= frame_rows rows
-    (a sparser middle bucket would need carry from two buckets back).
-    Violations raise inside the job rather than returning silently
-    wrong boundary frames — pick a coarser bucket instead. Equality
-    with the single-window plan (bit-for-bit, the rounded columns
-    included — both plans accumulate each frame in the same row order)
-    is pinned in tests/test_analysis_skew.py on a 50%-hot-key fixture.
-
-    Ordering contract matches bars_analysis: (key, ts) must be unique
-    (the single-window form is nondeterministic under ts ties anyway).
-    """
-    base = df.select(
-        F.col(key), *[F.col(c) for c in carry_cols], F.col(ts), F.col(value)
-    ).withColumn("_bucket", bucket)
-
-    local = Window.partitionBy(key, "_bucket").orderBy(ts)
-    rn = F.row_number().over(local)
-    n_in_bucket = F.count(F.lit(1)).over(
-        Window.partitionBy(key, "_bucket")
-    )
-    staged = base.withColumn("_rn", rn).withColumn("_n", n_in_bucket)
-
-    # Per-(key, bucket) manifest: previous present bucket, its size, and
-    # whether a repair from it could be incomplete (unsafe). Tiny — one
-    # row per (key, bucket).
-    per_key = Window.partitionBy(key).orderBy("_bucket")
-    buckets = (
-        staged.groupBy(key, "_bucket")
-        .agg(F.max("_n").alias("_cnt"))
-        .withColumn("_rn_b", F.row_number().over(per_key))
-        .withColumn("_prev_bucket", F.lag("_bucket").over(per_key))
-        .withColumn("_prev_cnt", F.lag("_cnt").over(per_key))
-        .withColumn(
-            # undersized previous bucket is fine when it's the key's
-            # FIRST bucket (no rows exist further back to carry)
-            "_unsafe",
-            (F.col("_rn_b") >= 3) & (F.col("_prev_cnt") < F.lit(frame_rows)),
-        )
-    )
-
-    # Phase 1: every frame computed locally; interior rows are final. A
-    # row is interior only past rn = frame_rows: the row AT frame_rows
-    # has its value frame in-bucket, but its stddev frame contains
-    # ret(rn=1), whose lag input lives in the previous bucket.
-    phase1 = _analysis_select(
-        staged, local, frame_rows, key, ts, value, carry_cols, extra=("_rn",)
-    )
-    interior = phase1.filter(F.col("_rn") > frame_rows).drop("_rn")
-
-    # Phase 2: boundary rows (rn <= frame_rows, at most frame_rows per
-    # (key, bucket)) re-windowed over (previous bucket's tail ∪ boundary
-    # rows). The tail is the last frame_rows rows — enough to rebuild
-    # the lag, the deepest value frame (rn=1 reaches back frame_rows-1
-    # rows), AND that frame's rets (the oldest needs one predecessor
-    # more).
-    boundary = staged.filter(F.col("_rn") <= frame_rows).withColumn(
-        "_keep", F.lit(True)
-    )
-    tails = (
-        staged.filter(F.col("_n") - F.col("_rn") < frame_rows)
-        .join(
-            buckets.select(
-                key,
-                F.col("_prev_bucket").alias("_bucket"),
-                F.col("_bucket").alias("_target"),
-            ).filter(F.col("_bucket").isNotNull()),
-            on=[key, "_bucket"],
-            how="inner",
-        )
-        .withColumn("_bucket", F.col("_target"))
-        .drop("_target")
-        .withColumn("_keep", F.lit(False))
-    )
-    repair_in = boundary.unionByName(tails.select(*boundary.columns))
-    repaired = (
-        _analysis_select(
-            repair_in,
-            Window.partitionBy(key, "_bucket").orderBy(ts),
-            frame_rows,
-            key,
-            ts,
-            value,
-            carry_cols,
-            extra=("_keep", "_bucket"),
-        )
-        .filter(F.col("_keep"))
-        .join(
-            buckets.select(key, "_bucket", "_unsafe"), on=[key, "_bucket"], how="left"
-        )
-        # the guard is a FILTER, not a column expression: riding it on
-        # a projectable column (an earlier revision put it inside
-        # `value`) lets a caller's select() prune the guard away with
-        # the column, silently returning wrong boundary frames — a
-        # filter survives any downstream projection
-        .filter(
-            F.when(
-                F.col("_unsafe"),
-                F.raise_error(
-                    F.lit(
-                        "bars_analysis_two_phase: a bucket smaller than "
-                        f"frame_rows={frame_rows} precedes a boundary repair — "
-                        "frames would need carry from two buckets back; use a "
-                        "coarser bucket"
-                    )
-                ).cast("boolean"),
-            ).otherwise(F.lit(True))
-        )
-        .drop("_keep", "_bucket", "_unsafe")
-    )
-    return interior.unionByName(repaired)

@@ -70,10 +70,9 @@ def _sql_str(s: str) -> str:
 
 def _initial_symbols(word: str, eow: str | None) -> str:
     """SQL text for the initial per-character symbol array. SQL strings
-    rather than Column trees (round-10 opt): the nested merge folds paid
-    a py4j driver round-trip per node (~0.4 s of plan construction per
-    6-rule bpe_segment call), where one F.expr parse at the consumer is
-    single-digit ms."""
+    rather than Column trees: the nested merge folds pay a py4j driver
+    round-trip per node, where one F.expr parse at the consumer does not
+    (BASELINE.md, "Plan-construction figures")."""
     chars = f"filter(split({word}, ''), c -> c != '')"
     if eow:
         chars = f"concat({chars}, array({_sql_str(eow)}))"
@@ -270,39 +269,3 @@ def bpe_segment(
             out = materialize(out.withColumn("pieces", F.expr(syms)))
             syms = "pieces"
     return out.withColumn("pieces", F.expr(syms))
-
-
-def bpe_decode(
-    df: DataFrame,
-    pieces_col: str = "pieces",
-    eow: str | None = EOW,
-    out_col: str = "decoded",
-) -> DataFrame:
-    """Inverse of :func:`bpe_segment`: concatenate the pieces and strip
-    the single end-of-word marker — BPE merges only ever concatenate
-    ADJACENT symbols, so any piece sequence is a partition of the
-    initial symbol string and decoding is exact (the tokenizer
-    losslessness law, pinned as a round-trip in tests/test_bpe.py; a
-    tokenizer whose decode(encode(w)) != w silently corrupts every
-    downstream training example, which is why production pipelines
-    assert this property over the full vocabulary, not a sample).
-
-    Map-only codegen (one concat + one suffix strip per row) — safe
-    inline in any scan. NULL pieces decode to NULL (pass-through)."""
-    if out_col in df.columns:
-        raise ValueError(
-            f"bpe_decode writes {out_col!r}; input already has that column"
-        )
-    joined = F.concat_ws("", F.col(pieces_col))
-    if eow:
-        n = F.length(joined)
-        k = len(eow)
-        joined = F.when(
-            F.substring(joined, -k, k) == eow, F.substring(joined, 1, n - k)
-        ).otherwise(joined)
-    return df.withColumn(
-        out_col,
-        F.when(F.col(pieces_col).isNull(), F.lit(None).cast("string")).otherwise(
-            joined
-        ),
-    )

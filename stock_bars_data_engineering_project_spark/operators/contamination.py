@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import materialize
-
 from ..functions.scalars import round_half_up
 from ..functions.text import tokens, word_shingles
 
@@ -378,122 +376,3 @@ def dedup_paragraphs(
         F.size(rm).cast("bigint").alias("n_removed"),
         F.array_join(kept, join_delim).alias("clean_text"),
     )
-
-
-def ingest_scrub_batch(
-    wh,
-    batch: DataFrame,
-    counts_table: str = "gram_counts",
-    k: int = 3,
-    df_cap: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Incremental boilerplate maintenance: fold a new batch's gram
-    document-frequencies into a persisted counts table and scrub the
-    batch against the MERGED hot set — without re-counting the corpus
-    (the scrub analog of incremental_dedup's band index / the rollup
-    fold).
-
-    Mergeability: with append-only doc ids each document contributes to
-    exactly one batch's counts, so per-gram distinct-doc counts ADD
-    across batches — the combined state equals a full-corpus recount
-    (pinned in tests). Singletons must be KEPT: a gram appearing once
-    per batch across df_cap batches is hot, and pruning df=1 rows would
-    silently lose those counts.
-
-    Exactly-once under at-least-once delivery (the epoch-log pattern of
-    streaming/incremental.rollup_maintenance_stream): each batch's
-    counts land via keyed merge into their own ``_epoch`` partition,
-    where the epoch id is CONTENT-ADDRESSED (order-free 2x48-bit hash
-    fold of the batch's doc ids + count). A redelivered batch derives
-    the identical epoch and rewrites the identical partition — a no-op
-    — with NO read-modify-write of prior state, so there is no crash
-    window in which a replay could double-count (the previous snapshot
-    read-merge-overwrite here double-counted a batch redelivered after
-    its commit). Read the combined (gram, gram_df) state with
-    :func:`gram_count_state`; fold history into one base partition with
-    :func:`compact_gram_state` when epoch count grows.
-
-    Law: the returned scrub of THIS batch is identical to running
-    :func:`boilerplate_scrub` over the full corpus and restricting to
-    the batch's documents — both use the same merged hot set. Earlier
-    batches were delivered against the counts known at THEIR ingest
-    time; re-running :func:`scrub_against` over the stored corpus with
-    the current counts (compaction-time re-scrub) reconciles exactly to
-    the full-corpus scrub.
-
-    Returns the scrubbed batch frame ``(doc_id, n_tokens, n_removed,
-    clean_text)``.
-    """
-    pos_grams = positional_grams(batch, k, id_col=id_col, text_col=text_col)
-    batch_counts = gram_doc_frequency(pos_grams)
-    epoch = _content_epoch(batch, id_col)
-    wh.merge(
-        batch_counts.withColumn("_epoch", F.lit(epoch)),
-        counts_table,
-        keys=("gram", "_epoch"),
-        partition_by=("_epoch",),
-    )
-    hot = (
-        gram_count_state(wh, counts_table)
-        .filter(F.col("gram_df") >= df_cap)
-        .select("gram")
-    )
-    return scrub_against(
-        batch, hot, k, id_col=id_col, text_col=text_col, pos_grams=pos_grams
-    )
-
-
-def _content_epoch(batch: DataFrame, id_col: str) -> str:
-    """Deterministic content-addressed epoch id for a batch: two
-    independent order-free 48-bit xor folds over the doc ids plus the
-    row count — partial-aggregable (no driver-side id list), identical
-    for a redelivered batch, and loudly NULL-guarded (a NULL id cannot
-    be content-addressed or replay-deduped; md5_bucket48's documented
-    caller obligation)."""
-    from ..functions.hashing import md5_bucket48
-
-    span = 1 << 48
-    row = batch.agg(
-        F.bit_xor(md5_bucket48(F.col(id_col), span, salt="e1")).alias("x1"),
-        F.bit_xor(md5_bucket48(F.col(id_col), span, salt="e2")).alias("x2"),
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(id_col).isNull().cast("int")).alias("nulls"),
-    ).collect()[0]
-    if (row.nulls or 0) > 0:
-        # no caller-specific prefix: this helper now addresses epochs for
-        # the scrub, LM, and PCA ingest paths alike
-        raise ValueError(
-            f"content-addressed epoch: {row.nulls} NULL {id_col} rows — ids "
-            "must be non-NULL for replay idempotence"
-        )
-    return f"{(row.x1 or 0):012x}{(row.x2 or 0):012x}n{row.n}"
-
-
-def gram_count_state(
-    wh, counts_table: str = "gram_counts"
-) -> DataFrame:
-    """Combined (gram, gram_df) over all epoch partitions — per-gram
-    sums are exact integers, so the combine equals a full-corpus
-    recount however the batches were sliced."""
-    return (
-        wh.read(counts_table)
-        .groupBy("gram")
-        .agg(F.sum("gram_df").alias("gram_df"))
-    )
-
-
-def compact_gram_state(wh, counts_table: str = "gram_counts") -> None:
-    """Fold every epoch into the single ``_epoch='base'`` partition
-    ('base' is 4 chars; content ids are 24 hex + 'n' + count, so no
-    collision). Run at a DELIVERY BARRIER only — i.e. when every batch
-    handed to ingest_scrub_batch has been acked upstream: a redelivery
-    arriving AFTER compaction would re-land its epoch beside the base
-    that already absorbed it and double-count (the identical
-    operational constraint as streaming/incremental's
-    compact_rollup_state, whose checkpoint makes the barrier explicit)."""
-    state = materialize(gram_count_state(wh, counts_table)).withColumn(
-        "_epoch", F.lit("base")
-    )
-    wh.overwrite(state, counts_table, partition_by=("_epoch",))

@@ -23,15 +23,13 @@ disk, not just nprobe/K of the rows.
 
 Drift contract: centroids are frozen between rebuilds, so heavy
 ingestion skews list occupancy and degrades recall gradually (the
-standard IVF operational trade — FAISS retrains on the same signal).
-``index_occupancy`` exposes the skew metric; :func:`maintain_ann_index`
-rebuilds when its max/mean ratio drifts past policy.
+standard IVF operational trade); a rebuild (:func:`build_ann_index`
+over the stored vectors) retrains them.
 
-Deletes, the layout-preserving tombstone fold and the occupancy metric
-are the shared index lifecycle (``operators/index_maint.py``, layout
+Deletes and the layout-preserving tombstone fold are the shared index
+lifecycle (``operators/index_maint.py``, layout
 :data:`~.index_maint.IVF`: ids in ``vec_id``, lists partitioned by
-``cid``); centroids are untouched by a fold and retrained only by
-:func:`maintain_ann_index`.
+``cid``); centroids are untouched by a fold.
 """
 
 from __future__ import annotations
@@ -42,13 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_up
 from ..functions.vectors import cosine
 from ..sinks.warehouse import ParquetWarehouse
-from .index_maint import (
-    IVF,
-    apply_deletes,
-    index_occupancy,
-    log_maintenance,
-    not_deleted,
-)
+from .index_maint import not_deleted
 from .similarity import ivf_assign, kmeans_refine, l2sq
 from .skew import salted_topk
 
@@ -161,53 +153,3 @@ def ann_query(
     return salted_topk(scored, ("query_id",), "cos", "vec_id", k).select(
         "query_id", "vec_id", "cos", "rank"
     )
-
-
-def maintain_ann_index(
-    wh: ParquetWarehouse,
-    table: str = "ann_index",
-    max_skew: float = 4.0,
-    centroid_stride: int = 125,
-    refine_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> dict:
-    """The index lifecycle's maintenance policy in one call — the
-    operational loop FAISS users run by hand (the drift contract in
-    the module docstring), made explicit:
-
-    1. fold tombstones into the files (``apply_deletes`` — always,
-       it is a no-op without tombstones and a heavily tombstoned index
-       both wastes probe work and skews the occupancy signal);
-    2. read the skew ratio (``index_occupancy``);
-    3. if it exceeds ``max_skew``, RETRAIN: rebuild the quantizer and
-       re-assign the surviving corpus (:func:`build_ann_index` on the
-       stored vectors — the one corpus-sized pass, paid only when
-       drift policy says so).
-
-    Returns ``{"skew_ratio": float, "rebuilt": bool}`` so callers can
-    log the decision. Answer-preserving when it does NOT rebuild
-    (apply_deletes is); a rebuild changes list membership (new
-    centroids) but not the exact-cosine ranking within probed lists —
-    recall is what it repairs."""
-    apply_deletes(wh, table, IVF)
-    occ = (
-        index_occupancy(wh, table, IVF).select("skew_ratio").limit(1).collect()
-    )
-    skew = float(occ[0]["skew_ratio"]) if occ else 0.0
-    rebuilt = False
-    if skew > max_skew:
-        corpus = wh.read(table).select(id_col, vec_col)
-        build_ann_index(
-            wh,
-            corpus,
-            table,
-            centroid_stride=centroid_stride,
-            refine_iters=refine_iters,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
-        rebuilt = True
-    decision = {"skew_ratio": skew, "rebuilt": rebuilt}
-    log_maintenance(wh, table, decision)
-    return decision

@@ -7,11 +7,11 @@ accepted, and refitting must not re-scan history: PCA's sufficient
 statistics (count, column sum, Gram matrix) are EXACTLY additive, so
 each accepted batch's moments land in their own content-addressed
 epoch partition (the same exactly-once-under-at-least-once epoch-log
-discipline as lm_state / contamination.ingest_scrub_batch: a
-redelivered batch derives the identical epoch and rewrites the
-identical partition — a no-op with no read-modify-write crash window),
-and the combined state is a pure epoch-sum read feeding the same
-driver-side eigensolve ``fit_pca`` uses.
+discipline as lm_state: a redelivered batch derives the identical
+epoch, finds its partition present and writes nothing — no
+read-modify-write crash window), and the combined state is a pure
+epoch-sum read feeding the same driver-side eigensolve ``fit_pca``
+uses.
 
 Storage shape: one (i, v) row per moment component per epoch —
 i in [0, d) is the column sum, [d, d + d^2) the row-major Gram, and
@@ -35,7 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .contamination import _content_epoch
+from ..functions.hashing import content_epoch
 from .pca import suffstats_rows
 
 
@@ -69,44 +69,33 @@ def ingest_pca_batch(
 ) -> str:
     """Fold one accepted batch's moments into the persisted state.
     Returns the content-addressed epoch id. Replay idempotence is
-    STRUCTURAL: a redelivered batch derives the identical epoch, which
-    is found already present and skipped before any moment is computed
-    — the state bytes are untouched, so idempotence never depends on
-    bit-identical recomputation of shuffled double sums (Spark's
-    partial-agg merge order is not deterministic; a rewrite could
-    legally differ in the last ULP). Batches must partition the
+    STRUCTURAL: a redelivered batch derives the identical epoch, whose
+    partition is found already present (a filesystem probe, no job) and
+    skipped before any moment is computed — the state bytes are
+    untouched, so idempotence never depends on bit-identical
+    recomputation of shuffled double sums (Spark's partial-agg merge
+    order is not deterministic; a rewrite could legally differ in the
+    last ULP). Batches must partition the
     accepted corpus by ``id_col`` (append-only ids), the standard
     epoch-log mergeability contract; empty batches are rejected loudly
     (an empty frame has no content address and no moments — the count
     rides the epoch string, so the check is free).
 
-    Each ingest costs ONE suffstats pass over the batch plus the
-    id-column scan the content address needs: the moment rows are
-    locally materialized before the merge so the write does not
-    re-aggregate. ``dim`` is stamped onto every state row; the read
-    side refuses a state whose epochs disagree on it."""
-    epoch = _content_epoch(batch, id_col)
+    A new epoch costs ONE suffstats pass over the batch, appended as its
+    own partition, plus the id-column scan the content address needs.
+    ``dim`` is stamped onto every state row; the read side refuses a
+    state whose epochs disagree on it."""
+    epoch = content_epoch(batch, id_col)
     if int(epoch.rsplit("n", 1)[-1]) == 0:
         raise ValueError("ingest_pca_batch: empty batch — nothing to ingest")
-    if wh.exists(table):
-        already = (
-            wh.read(table).filter(F.col("_epoch") == epoch).limit(1).count()
+    if not wh.has_partition(table, "_epoch", epoch):
+        wh.append(
+            _batch_moment_rows(batch, vec_col, dim)
+            .withColumn("_epoch", F.lit(epoch))
+            .withColumn("_dim", F.lit(dim)),
+            table,
+            partition_by=("_epoch",),
         )
-        if already:
-            return epoch
-    from ..materialize import materialize
-
-    rows = materialize(
-        _batch_moment_rows(batch, vec_col, dim)
-        .withColumn("_epoch", F.lit(epoch))
-        .withColumn("_dim", F.lit(dim))
-    )
-    wh.merge(
-        rows,
-        table,
-        keys=("i", "_epoch"),
-        partition_by=("_epoch",),
-    )
     return epoch
 
 

@@ -103,7 +103,7 @@ def bm25_query(
         raise ValueError(f"k must be positive, got {k}")
     if k1 < 0 or not 0 <= b <= 1:
         raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got k1={k1}, b={b}")
-    n_buckets, gen = read_meta(wh, table)
+    n_buckets = read_meta(wh, table)
 
     # ONE driver job for the whole query side: collect the
     # (query_id, token) pairs — query-set-sized by module contract — and
@@ -146,7 +146,7 @@ def bm25_query(
     postings = not_deleted(
         wh,
         table,
-        wh.read(postings_table(table, gen))
+        wh.read(postings_table(table))
         .filter(F.col("bkt").isin(probe_bkts))
         .join(F.broadcast(qvocab), "token", "left_semi")
         # full-row dedup: heals the duplicated postings a crashed-and-

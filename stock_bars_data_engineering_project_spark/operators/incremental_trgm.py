@@ -82,7 +82,7 @@ def trgm_query(
     broadcast-small by module contract; ``max_pattern_trigrams`` makes
     that contract LOUD — an oversized pattern frame fails fast instead
     of silently building a huge broadcast + driver literal."""
-    n_buckets, gen = read_meta(wh, table)
+    n_buckets = read_meta(wh, table)
     # Patterns are broadcast-small by module contract, so the WHOLE
     # pattern side runs on the driver from ONE collect. The Python
     # trigram expansion replicates char_ngrams exactly (both Java's
@@ -146,7 +146,7 @@ def trgm_query(
         not_deleted(
             wh,
             table,
-            wh.read(postings_table(table, gen))
+            wh.read(postings_table(table))
             .filter(F.col("bkt").isin(probe_bkts))
             .join(
                 F.broadcast(pat_tri.select("trigram").distinct()),

@@ -4,11 +4,9 @@
 
 Tables (``table`` = the index name):
 
-- lexical: ``<table>__postings`` (generation g > 0:
-  ``<table>__postings_g{g}``), hive-partitioned by ``bkt`` = the 48-bit
-  md5 bucket of the term; ``<table>__docs``, the membership (doc_id
-  plus family columns); ``<table>__meta``, ONE row
-  (n_buckets, postings_gen).
+- lexical: ``<table>__postings``, hive-partitioned by ``bkt`` = the
+  48-bit md5 bucket of the term; ``<table>__docs``, the membership
+  (doc_id plus family columns); ``<table>__meta``, ONE row (n_buckets).
 - ANN: ``<table>`` (the inverted lists, hive-partitioned by ``cid``)
   and ``<table>__centroids``.
 - all three: ``<table>__deleted``, the tombstones (one id column).
@@ -29,19 +27,10 @@ Contract:
   old id is ignored, not merged.
 - **Delete** (:func:`delete_ids`) appends ids to ``__deleted``, O(ids);
   every query anti-joins them (:func:`not_deleted`) out of its pruned
-  probe slice. A tombstoned id stays dead to queries and re-ingest until
-  :func:`apply_deletes` rewrites the row tables without it (keeping
-  their hive layout) and clears the tombstones. Duplicate tombstones
-  change nothing.
-- **Maintain** folds tombstones, reads the occupancy skew
-  (:func:`index_occupancy`) and rebuilds past a threshold. The ANN
-  rebuild retrains the quantizer (``maintain_ann_index``). The lexical
-  rebuild (:func:`maintain_bucketed_index`) re-hashes the postings into
-  more buckets, writes them COLD as generation g+1, and publishes
-  (n_buckets, postings_gen) in ONE ``__meta`` snapshot swap, so a crash
-  before the swap leaves every reader on the old generation; orphan
-  generations are swept by the next call. Bucket ids prune, never
-  score, so re-bucketing preserves answers.
+  probe slice. A tombstoned id stays dead to queries and re-ingest
+  until :func:`apply_deletes` rewrites the row tables without it
+  (keeping their hive layout) and clears the tombstones. Duplicate
+  tombstones change nothing.
 """
 
 from __future__ import annotations
@@ -52,15 +41,13 @@ from typing import Callable, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_bucket48
 from ..materialize import materialize
 from ..memo import build_once, run_chains
 from ..sinks.warehouse import ParquetWarehouse
 
 
-def postings_table(table: str, gen: int = 0) -> str:
-    """Generation-addressed postings table name."""
-    return f"{table}__postings" if not gen else f"{table}__postings_g{gen}"
+def postings_table(table: str) -> str:
+    return f"{table}__postings"
 
 
 def docs_table(table: str) -> str:
@@ -75,17 +62,16 @@ def deleted_table(table: str) -> str:
     return f"{table}__deleted"
 
 
-def read_meta(wh: ParquetWarehouse, table: str) -> tuple[int, int]:
-    """(n_buckets, postings_gen) of a lexical index.
+def read_meta(wh: ParquetWarehouse, table: str) -> int:
+    """n_buckets of a lexical index.
 
     Memoized per committed ``__meta`` version directory: every write
     path commits a new one, so a hit never serves stale meta and plan
     construction skips the one-row scan job."""
     meta = meta_table(table)
 
-    def _scan() -> tuple[int, int]:
-        row = wh.read(meta).collect()[0].asDict()
-        return int(row["n_buckets"]), int(row.get("postings_gen") or 0)
+    def _scan() -> int:
+        return int(wh.read(meta).collect()[0]["n_buckets"])
 
     version = wh.latest_version(meta)
     if version is None:
@@ -100,19 +86,16 @@ class Layout(NamedTuple):
 
     id_col: str  # the id column of the row tables and the tombstones
     hive_col: str  # the partition column apply_deletes preserves
-    # the tables holding index rows, the hive-partitioned one first
-    row_tables: Callable[[ParquetWarehouse, str], list[str]]
+    # name suffixes of the tables holding index rows, the
+    # hive-partitioned one first
+    row_suffixes: tuple[str, ...]
+
+    def row_tables(self, table: str) -> list[str]:
+        return [table + suffix for suffix in self.row_suffixes]
 
 
-BUCKETED = Layout(
-    "doc_id",
-    "bkt",
-    lambda wh, table: [
-        postings_table(table, read_meta(wh, table)[1]),
-        docs_table(table),
-    ],
-)
-IVF = Layout("vec_id", "cid", lambda wh, table: [table])
+BUCKETED = Layout("doc_id", "bkt", ("__postings", "__docs"))
+IVF = Layout("vec_id", "cid", ("",))
 
 
 def _reject_nulls(df: DataFrame, col: str, message: str) -> DataFrame:
@@ -131,7 +114,7 @@ def delete_ids(
     """Tombstone ``ids`` (a 1-column DataFrame or an iterable of ints)
     in the ``table`` index. Raises FileNotFoundError when the index was
     never built, and on evaluation of a NULL id."""
-    for t in layout.row_tables(wh, table):
+    for t in layout.row_tables(table):
         if not wh.exists(t):
             raise FileNotFoundError(
                 f"no such table: {t} (build index {table!r} first)"
@@ -170,7 +153,7 @@ def apply_deletes(wh: ParquetWarehouse, table: str, layout: Layout) -> None:
     if not wh.exists(deleted_table(table)):
         return
     hive = layout.hive_col
-    for t in layout.row_tables(wh, table):
+    for t in layout.row_tables(table):
         rows = not_deleted(wh, table, wh.read(t), layout.id_col)
         if hive in rows.columns:
             wh.overwrite(
@@ -179,30 +162,6 @@ def apply_deletes(wh: ParquetWarehouse, table: str, layout: Layout) -> None:
         else:
             wh.overwrite(materialize(rows), t)
     wh.drop(deleted_table(table))
-
-
-def index_occupancy(
-    wh: ParquetWarehouse, table: str, layout: Layout, live: bool = False
-) -> DataFrame:
-    """Rows per hive partition (``bkt`` or ``cid``) as ``n_rows``, plus
-    the global max/mean ``skew_ratio``: the rebuild trigger. A hot
-    partition makes its probe cost the index's worst case. ``live=True``
-    excludes tombstones (the probe-cost view); the default counts the
-    stored rows (the compaction view)."""
-    rows = wh.read(layout.row_tables(wh, table)[0])
-    if live:
-        rows = not_deleted(wh, table, rows, layout.id_col)
-    counts = rows.groupBy(layout.hive_col).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    stats = counts.agg(
-        F.max("n_rows").alias("_mx"), F.avg("n_rows").alias("_mean")
-    )
-    return counts.crossJoin(F.broadcast(stats)).select(
-        layout.hive_col,
-        "n_rows",
-        (F.col("_mx") / F.col("_mean")).alias("skew_ratio"),
-    )
 
 
 class LexicalFamily(NamedTuple):
@@ -249,9 +208,7 @@ def build_lexical_index(
         ),
     )
     wh.overwrite(
-        wh.spark.createDataFrame(
-            [(n_buckets, 0)], "n_buckets int, postings_gen int"
-        ),
+        wh.spark.createDataFrame([(n_buckets,)], "n_buckets int"),
         meta_table(table),
     )
 
@@ -266,7 +223,7 @@ def ingest_docs(
 ) -> int:
     """Fold ``batch`` into a lexical index (module docstring, Ingest).
     Returns the number of newly indexed documents."""
-    n_buckets, gen = read_meta(wh, table)
+    n_buckets = read_meta(wh, table)
     batch = _require_ids(batch, id_col, table)
     known = wh.read(docs_table(table)).select("doc_id")
     new_docs = materialize(
@@ -278,90 +235,7 @@ def ingest_docs(
         return 0
     wh.append(
         family.postings(new_docs, n_buckets, id_col, text_col),
-        postings_table(table, gen),
+        postings_table(table),
     )
     wh.append(members, docs_table(table))
     return n_new
-
-
-def sweep_generations(
-    wh: ParquetWarehouse, table: str, current_gen: int
-) -> None:
-    """Drop every postings generation except the published one:
-    superseded generations after a rebuild, cold orphans after a
-    crashed one."""
-    prefix = f"{table}__postings_g"
-    for t in wh.tables():
-        if t == f"{table}__postings":
-            if current_gen != 0:
-                wh.drop(t)
-            continue
-        if t.startswith(prefix):
-            tail = t[len(prefix):]
-            if tail.isdigit() and int(tail) != current_gen:
-                wh.drop(t)
-
-
-def log_maintenance(wh: ParquetWarehouse, table: str, decision: dict) -> None:
-    """One append-only K6 run-log row per maintenance decision, so
-    policy firings are auditable after the fact."""
-    wh.log(
-        f"{table}_maintenance",
-        "maintain " + " ".join(f"{k}:{v}" for k, v in sorted(decision.items())),
-    )
-
-
-def maintain_bucketed_index(
-    wh: ParquetWarehouse,
-    table: str,
-    max_skew: float = 4.0,
-    rebucket_factor: int = 2,
-) -> dict:
-    """The lexical maintenance policy (module docstring, Maintain):
-    fold tombstones, then past ``max_skew`` re-hash the postings into
-    ``rebucket_factor`` × more buckets. That splits colliding-term
-    hotspots; a single hot term's posting list is irreducible by any
-    bucketing. Returns ``{"skew_ratio", "rebuilt", "n_buckets"}`` after
-    writing the K6 audit row."""
-    if rebucket_factor < 2:
-        raise ValueError(
-            f"rebucket_factor must be >= 2, got {rebucket_factor}"
-        )
-    apply_deletes(wh, table, BUCKETED)
-    n_buckets, gen = read_meta(wh, table)
-    occ = (
-        index_occupancy(wh, table, BUCKETED)
-        .select("skew_ratio")
-        .limit(1)
-        .collect()
-    )
-    skew = float(occ[0]["skew_ratio"]) if occ else 0.0
-    rebuilt = False
-    if skew > max_skew:
-        new_n = n_buckets * rebucket_factor
-        new_gen = gen + 1
-        old = wh.read(postings_table(table, gen))
-        # the stored columns, term first (LexicalFamily.postings); the
-        # hive read appends bkt last
-        carry = [c for c in old.columns if c != "bkt"]
-        rebucketed = old.select(
-            md5_bucket48(F.col(carry[0]), new_n).alias("bkt"), *carry
-        ).repartition("bkt")
-        wh.overwrite(
-            rebucketed, postings_table(table, new_gen), partition_by=("bkt",)
-        )
-        # the atomic publish: one snapshot swap flips n_buckets and the
-        # postings generation together
-        wh.overwrite(
-            wh.spark.createDataFrame(
-                [(new_n, new_gen)], "n_buckets int, postings_gen int"
-            ),
-            meta_table(table),
-        )
-        n_buckets, gen, rebuilt = new_n, new_gen, True
-    sweep_generations(wh, table, gen)
-    decision = {
-        "skew_ratio": skew, "rebuilt": rebuilt, "n_buckets": n_buckets
-    }
-    log_maintenance(wh, table, decision)
-    return decision

@@ -6,12 +6,12 @@ reference LM (a batch of correlated garbage must not normalize itself),
 and the reference model itself grows as new TRUSTED data is accepted.
 This module maintains that model incrementally: each accepted batch's
 unigram and bigram counts land in their own content-addressed epoch
-partition (the exactly-once-under-at-least-once epoch-log discipline of
-contamination.ingest_scrub_batch — a redelivered batch derives the
-identical epoch and rewrites the identical partition, a no-op, with no
-read-modify-write crash window), and the combined state is a pure
-epoch-sum read. Counts are exact integers, so the combined model equals
-a full recount of every accepted batch however deliveries were sliced.
+partition (the exactly-once-under-at-least-once epoch-log discipline: a
+redelivered batch derives the identical epoch, finds its partition
+present and writes nothing, so there is no read-modify-write crash
+window), and the combined state is a pure epoch-sum read. Counts are
+exact integers, so the combined model equals a full recount of every
+accepted batch however deliveries were sliced.
 
 Counts are stored RAW (no min_count prune): per-(bigram, epoch)
 singletons must keep voting — a bigram appearing once per batch across
@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import content_epoch
 from ..functions.text import tokens
-from .contamination import _content_epoch
 
 
 def _batch_lm_counts(
@@ -84,20 +84,15 @@ def ingest_lm_batch(
     content-addressed epoch id (a redelivery of the same batch lands
     the identical epoch — replay-idempotent by construction; pinned in
     tests). Batches must partition the accepted corpus by ``id_col``
-    (append-only ids), the same mergeability contract as
-    contamination.ingest_scrub_batch."""
+    (append-only ids): the epoch-log mergeability contract."""
     uni, bi = _batch_lm_counts(batch, id_col, text_col)
-    epoch = _content_epoch(batch, id_col)
+    epoch = content_epoch(batch, id_col)
     # Epoch partitions are content-addressed, so a present partition is
     # BY CONTRACT identical to what this batch would write (append-only
-    # ids, docs immutable under their id — the index-family contract).
-    # Present => skip; absent => APPEND the one new partition (O(batch)
-    # manifest commit). The previous keyed merge re-derived the same
-    # no-op at the cost of reading the target and anti-joining every
-    # epoch — O(state) jobs per ingest for a write that is O(batch) by
-    # construction. The crash-heal is order-independent: redelivery
-    # recomputes the same epoch and appends only the missing table's
-    # partition.
+    # ids, docs immutable under their id). Present => skip; absent =>
+    # APPEND the one new partition (O(batch) manifest commit). The
+    # crash-heal is order-independent: redelivery recomputes the same
+    # epoch and appends only the missing table's partition.
     for df, table in ((uni, uni_table), (bi, bi_table)):
         if not wh.has_partition(table, "_epoch", epoch):
             wh.append(
@@ -130,26 +125,3 @@ def lm_state(
         .filter(F.col("n2") >= min_count)
     )
     return uni, bi
-
-
-def compact_lm_state(
-    wh,
-    uni_table: str = "lm_unigrams",
-    bi_table: str = "lm_bigrams",
-) -> None:
-    """Fold every epoch into one ``_epoch='base'`` partition. Run at a
-    DELIVERY BARRIER only (every ingested batch acked upstream) — the
-    same operational constraint, for the same redelivery-double-count
-    reason, as contamination.compact_gram_state."""
-    from ..materialize import materialize
-
-    uni = materialize(
-        wh.read(uni_table).groupBy("token").agg(F.sum("n").alias("n"))
-    ).withColumn("_epoch", F.lit("base"))
-    wh.overwrite(uni, uni_table, partition_by=("_epoch",))
-    bi = materialize(
-        wh.read(bi_table)
-        .groupBy("prev", "cur")
-        .agg(F.sum("n2").alias("n2"))
-    ).withColumn("_epoch", F.lit("base"))
-    wh.overwrite(bi, bi_table, partition_by=("_epoch",))

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-with Arrow-batched Pandas-UDF decode/feature stages.
+with Arrow-batched Pandas-UDF decode stages.
 
 Design for 100 TB of images/audio/video in parquet:
 
@@ -7,22 +7,20 @@ Design for 100 TB of images/audio/video in parquet:
     (media_type, width/height/duration, codec) so filters and joins
     prune on metadata without touching bytes — column pruning means a
     metadata-only query never reads a single payload byte;
-  * decode / resize / frame-sample run in ``mapInPandas`` — per-batch
-    Arrow transfer, one Python roundtrip per ~10k rows, not per row;
+  * decode / frame-sample run in ``mapInPandas`` — per-batch Arrow
+    transfer, one Python roundtrip per ~10k rows, not per row;
   * payload size is the partition-sizing hazard: repartition by a
     size-aware key before heavy decode so one task never holds a skewed
     batch of 100 MB videos.
 
 Every modality's decode seam EXECUTES for real with zero external
-dependencies: audio through stdlib ``wave`` (round 8), images through
-the stdlib uncompressed-BMP codec below (round 10 — the WAV trick
-applied to pixels), video frame fan-out through deterministic byte
-slicing. Pillow/ffmpeg/torchaudio remain the import-gated upgrade
-paths for the formats the stdlib can't parse; payloads no available
-branch can decode hit ``decode_image_stub``'s loud
-``NotImplementedError`` (never fabricated pixels), while the
-feature/phash stages keep ``fake_feature_extractor``/``fake_gray8x8``
-as the deterministic cross-engine stand-ins the driver oracle replays.
+dependencies: audio through stdlib ``wave``, images through the stdlib
+uncompressed-BMP codec below (the WAV trick applied to pixels), video
+frame fan-out through deterministic byte slicing. Pillow/ffmpeg/
+torchaudio remain the import-gated upgrade paths for the formats the
+stdlib can't parse; the phash stage keeps ``fake_gray8x8`` as the
+deterministic cross-engine stand-in the driver oracle replays for
+payloads no branch can decode.
 """
 
 from __future__ import annotations
@@ -47,9 +45,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("meta_duration_ms", T.IntegerType(), True),
     ]
 )
-
-FEATURE_DIM = 16
-
 
 def attach_binary_payload(
     df: DataFrame,
@@ -89,50 +84,18 @@ def _pil():
     return Image
 
 
-def decode_image_stub(payload: bytes) -> "object":
-    """The codec-less seam: raises where a decoder would run. Kept so
-    the no-codec path fails loudly instead of fabricating pixels."""
-    raise NotImplementedError("image codec not available in this environment")
-
-
 # ---------------------------------------------------------------------------
-# Stdlib BMP codec — the image modality's WAV trick (round 10)
+# Stdlib BMP codec — the image modality's WAV trick
 # ---------------------------------------------------------------------------
 #
-# Uncompressed 24-bit BMP needs no codec library, so with this ~60-line
+# Uncompressed 24-bit BMP needs no codec library, so with this short
 # parser the image decode seam EXECUTES for real in every environment —
 # the same closure stdlib `wave` gave the audio path. Pillow remains
 # the real-codec upgrade path (JPEG/PNG/WebP, resampling filters);
-# the dispatch order everywhere is Pillow first, BMP parser second,
-# loud stub third.
+# the dispatch order is Pillow first, BMP parser second.
 
 _BMP_HEADER = 14
 _BMP_DIB_MIN = 40
-
-
-def encode_bmp(rows: list) -> bytes:
-    """Honest uncompressed 24-bit BMP bytes (BITMAPINFOHEADER,
-    bottom-up, 4-byte row padding) from a top-down row-major pixel
-    matrix. Each pixel is an ``(r, g, b)`` triple or a single gray
-    int (encoded as r = g = b — which makes the round-trip luma exact,
-    see :func:`_bmp_gray8x8`). Any BMP reader decodes the output."""
-    import struct
-
-    h, w = len(rows), len(rows[0])
-    row_size = (3 * w + 3) & ~3
-    img_size = row_size * h
-    off = _BMP_HEADER + _BMP_DIB_MIN
-    header = struct.pack("<2sIHHI", b"BM", off + img_size, 0, 0, off)
-    dib = struct.pack(
-        "<IiiHHIIiiII", _BMP_DIB_MIN, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0
-    )
-    body = bytearray()
-    for row in reversed(rows):  # BMP stores rows bottom-up
-        for p in row:
-            r, g, b = (p, p, p) if isinstance(p, int) else p
-            body += bytes((b, g, r))  # little-endian channel order
-        body += b"\x00" * (row_size - 3 * w)
-    return header + dib + bytes(body)
 
 
 def decode_bmp(payload: bytes) -> tuple[int, int, list]:
@@ -197,119 +160,6 @@ def _bmp_gray8x8(payload: bytes) -> list[int]:
     return [p for row in _nn_resize(gray, 8, 8) for p in row]
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real-decoder entry, dispatching Pillow -> BMP parser -> stub:
-    ``PIL.Image.open`` when Pillow is installed (import-gated,
-    executor-local); else the stdlib BMP parser for BMP payloads
-    (returns (width, height, rows)); else the loud
-    ``NotImplementedError``. The deterministic fake feature extractor
-    remains the tested stand-in for non-decodable payloads."""
-    Image = _pil()
-    if Image is not None:
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    try:
-        return decode_bmp(payload)
-    except ValueError:
-        return decode_image_stub(payload)
-
-
-def fake_feature_extractor(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic bytes -> feature vector: md5-seeded, unit-scaled.
-    Stands in for a real embedding model with an identical signature."""
-    if payload is None:
-        return [0.0] * dim
-    digest = hashlib.md5(payload).digest()
-    return [digest[i % 16] / 255.0 for i in range(dim)]
-
-
-FEATURES_FIELD = T.StructField("features", T.ArrayType(T.DoubleType()), True)
-_OUT_SCHEMA = T.StructType(
-    [f for f in MEDIA_SCHEMA.fields if f.name != "payload"] + [FEATURES_FIELD]
-)
-
-
-def extract_features(df: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction: Arrow-batched, payload dropped on
-    output (features replace bytes — the shuffle downstream moves 16
-    doubles per row, not megabytes of media). Batch sizing is governed
-    by ``spark.sql.execution.arrow.maxRecordsPerBatch`` — there is
-    deliberately no per-call knob."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(fake_feature_extractor)
-            out = pdf.drop(columns=["payload"])
-            out["features"] = feats
-            yield out
-
-    return df.mapInPandas(_extract, schema=_OUT_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    MEDIA_SCHEMA.fields
-    + [
-        T.StructField("resized_width", T.IntegerType(), True),
-        T.StructField("resized_height", T.IntegerType(), True),
-    ]
-)
-
-
-def resize_images(df: DataFrame, width: int = 224, height: int = 224) -> DataFrame:
-    """mapInPandas resize stage. The REAL decode-resize-reencode branch
-    executes in every environment: Pillow when installed (import-gated,
-    resolved per executor; any format, quality resampling, PNG out),
-    else the stdlib BMP branch (decode_bmp -> nearest-neighbor ->
-    encode_bmp) for BMP payloads. Payloads neither branch can decode
-    (the stand-in text corpus is not image bytes) fall back per row to
-    the stamp path — payload kept, target geometry stamped — rather
-    than failing the batch, so schema/batching/partition behavior is
-    identical on every branch."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Image = _pil()
-        import io
-
-        def _one(payload):
-            if payload is None:
-                return payload
-            if Image is None:
-                try:
-                    _, _, rows = decode_bmp(bytes(payload))
-                    return encode_bmp(_nn_resize(rows, width, height))
-                except Exception:
-                    return payload
-            try:
-                img = Image.open(io.BytesIO(payload))
-                buf = io.BytesIO()
-                img.resize((width, height)).save(buf, format="PNG")
-                return buf.getvalue()
-            except Exception:
-                return payload
-
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = out["payload"].map(_one)
-            # metadata must describe the bytes in THIS row, not the
-            # pre-resize input: a re-encode changes both; downstream
-            # exact dedup keys on content_md5 and size-aware batching
-            # reads byte_len, so stale values corrupt both
-            if "byte_len" in out.columns:
-                out["byte_len"] = out["payload"].map(
-                    lambda p: len(p) if p is not None else None
-                )
-            if "content_md5" in out.columns:
-                out["content_md5"] = out["payload"].map(
-                    lambda p: hashlib.md5(p).hexdigest() if p is not None else None
-                )
-            out["resized_width"] = width
-            out["resized_height"] = height
-            yield out
-
-    return df.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -351,12 +201,6 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     return df.select("media_id", "payload").mapInPandas(_sample, schema=FRAME_SCHEMA)
 
 
-def media_metadata_only(df: DataFrame) -> DataFrame:
-    """Metadata projection — the plan must NOT read the payload column
-    (verified by tests via the scan's ReadSchema)."""
-    return df.select("media_id", "media_type", "byte_len", "content_md5")
-
-
 # ---------------------------------------------------------------------------
 # Perceptual-hash image dedup
 # ---------------------------------------------------------------------------
@@ -367,10 +211,9 @@ _PHASH_BLOCKS = 4  # 4 x 16-bit blocks: lossless pigeonhole for hamming <= 3
 
 def fake_gray8x8(payload: bytes) -> list[int]:
     """Deterministic stand-in for decode+resize-to-8x8-grayscale:
-    64 pixel values md5-expanded from the payload (same seam pattern as
-    fake_feature_extractor — identical payloads get identical pixels,
-    so exact re-encodes collapse; a REAL decoder additionally collapses
-    re-compressions and small edits)."""
+    64 pixel values md5-expanded from the payload (identical payloads
+    get identical pixels, so exact re-encodes collapse; a REAL decoder
+    additionally collapses re-compressions and small edits)."""
     if payload is None:
         return [0] * PHASH_BITS
     out = []
@@ -500,7 +343,7 @@ def phash_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
 # Unlike images (Pillow) and video (ffmpeg), WAV/PCM has a decoder in
 # the standard library — so the audio modality's decode seam EXECUTES
 # for real everywhere, the same closure the stdlib-synthesized PNG
-# fixture gave the image path in round 8. The synthesizer writes honest
+# fixture gave the image path. The synthesizer writes honest
 # RIFF/PCM bytes through `wave`; the decoder reads them back through
 # `wave` + numpy. A production pipeline swaps synth for object-storage
 # reads and this decoder for torchaudio/ffmpeg — the Spark-side

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens, top_gram_share, word_shingles
+from ..functions.text import tokens
 from ..materialize import materialize
 
 # The Gopher paper's stop-word presence list (Rae et al. 2021, §A1.1) —
@@ -215,12 +215,6 @@ def bigram_surprisal(
     )
 
 
-def _sum_lengths(arr: Column) -> Column:
-    return F.aggregate(
-        arr, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-
-
 def gopher_panel(
     docs: DataFrame,
     text_col: str = "text",
@@ -265,10 +259,10 @@ def gopher_panel(
     collision discipline).
     """
     # The whole rule panel is emitted as SQL strings and parsed by ONE
-    # selectExpr (round-10 opt): the loop-built Column form paid ~0.4 s
-    # of py4j round-trips per call (each higher-order lambda alone is
-    # ~30 ms of driver chatter), where the parser builds the identical
-    # trees in single-digit ms. Thresholds interpolate as literals —
+    # selectExpr: the loop-built Column form pays py4j round-trips per
+    # node (each higher-order lambda the most), where the parser builds
+    # the identical trees at once (BASELINE.md, "Plan-construction
+    # figures"). Thresholds interpolate as literals —
     # ints verbatim, floats as repr + the `D` suffix, which parses to
     # the identical IEEE double (the lsh_bucket rule). Repeated
     # sub-expression TEXT (toks/lines appear in several rules) costs

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 # rollup_increment was built with distinct_col) — binary DataSketches
 # state that merges by union, giving the rollup incremental distinct
 # counts and quantiles, which no exact aggregate can provide without
-# re-reading history (see operators/sketches.py for the full story).
+# re-reading history.
 _STATE = (
     "n_rows",
     "sum_value",

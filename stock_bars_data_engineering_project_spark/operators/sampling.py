@@ -71,19 +71,6 @@ def stable_split(
     return df.withColumn("split", expr)
 
 
-def deterministic_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id"
-) -> DataFrame:
-    """Content-addressed sample: keeps the row iff its hash bucket falls
-    under ``fraction``. Unlike ``df.sample`` this is reproducible across
-    runs, engines, and partitionings, and a row's membership never flips
-    when the corpus around it changes."""
-    _check_rate("fraction", fraction)
-    return df.filter(
-        hash_bucket(F.col(id_col), salt="sample") < int(round(fraction * 10_000))
-    )
-
-
 def _check_rate(name: str, rate: float) -> None:
     """Rates are probabilities. A typo'd percentage (10 for 10%) would
     otherwise silently sample at 100% and a negative rate silently drop
@@ -101,9 +88,9 @@ def stratified_sample(
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the corpus-mixture dial of a
-    training pipeline ("100% of books, 10% of common-crawl"). Same
-    map-only hash-bucket rule as :func:`deterministic_sample`, with the
-    threshold chosen per stratum; strata not listed get ``default_rate``.
+    training pipeline ("100% of books, 10% of common-crawl"): keep a row
+    iff its content-addressed hash bucket falls under its stratum's
+    rate; strata not listed get ``default_rate``.
     Row membership is stable under corpus growth and identical across
     engines and runs — re-weighting a mixture never reshuffles which
     rows the kept strata contribute."""
@@ -255,7 +242,11 @@ def shuffle_shards(
     ``n_shards``). Reading shards ``0..n-1``, each sorted by
     ``order_key``, replays one fixed pseudorandom permutation of the
     corpus — the data-order shuffle LLM training needs, reproducible
-    across runs, engines, and partitionings.
+    across runs, engines, and partitionings. Materialize it by
+    ``repartition(n_shards, "shard")`` then
+    ``sortWithinPartitions("shard", "order_key")`` (the shard prefix
+    stops a partitioned parquet writer from inserting its own unstable
+    sort) and a write partitioned by ``shard``.
 
     Scale shape: assignment is map-only; materializing the order is
     ``repartition(n_shards, shard)`` + ``sortWithinPartitions`` — one
@@ -289,29 +280,6 @@ def shuffle_shards(
     return df.withColumn("order_key", order_key).withColumn("shard", shard)
 
 
-def write_shuffled(
-    df: DataFrame, path: str, id_col: str = "doc_id", n_shards: int = 1024,
-    seed: str = "",
-) -> None:
-    """Materialize the :func:`shuffle_shards` order as a sharded parquet
-    layout: one shuffle to co-locate each shard, an in-partition sort,
-    and a partitioned write. A trainer streaming ``shard=0,1,...`` in
-    filename order (parquet preserves row order within a file) sees the
-    deterministic global permutation."""
-    (
-        shuffle_shards(df, id_col=id_col, n_shards=n_shards, seed=seed)
-        .repartition(n_shards, "shard")
-        # the shard prefix matters: the parquet writer requires rows
-        # sorted by the partition column and INSERTS ITS OWN (unstable)
-        # sort when the incoming ordering doesn't already satisfy it —
-        # sorting by order_key alone gets visibly re-permuted on write
-        .sortWithinPartitions("shard", "order_key")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
 def curriculum_phases(
     df: DataFrame,
     size: Column,
@@ -329,7 +297,7 @@ def curriculum_phases(
     reaches ceil(k*n/n_phases) — compared as ``cum * n_phases >= k * n``
     so no division, rounding mode, or FP interpolation can diverge
     across engines (the exact 1-ULP hazard class the multimodal phash
-    oracle hit in round 7). Ties share a phase by construction: equal
+    oracle once hit). Ties share a phase by construction: equal
     sizes can never straddle a boundary, so the assignment is stable
     under any partitioning and identically replayable in ANSI SQL.
 
@@ -456,7 +424,7 @@ def reservoir_k(
 ) -> DataFrame:
     """Deterministic exact-k per-group sample — the distributed,
     re-runnable stand-in for reservoir sampling. Rate-based sampling
-    (:func:`deterministic_sample`) cannot promise "exactly k docs per
+    (:func:`stratified_sample`) cannot promise "exactly k docs per
     stratum"; ranking every row by a content hash and keeping the k
     SMALLEST does (bottom-k sketch), and stays stable under corpus
     growth in the bottom-k sense: a new document evicts at most one
@@ -521,9 +489,9 @@ def weighted_sample_k(
     ``u**(1/w)`` compresses into [0.999986, 1] where ``round_dp=9``
     keeps only ~14 distinct values and selection silently degrades to
     the id tiebreak, while ``ln(u)/w`` spans [-1.4e-5, -1e-9] with
-    ~10^4 distinct rounded values (ADVICE round 8). Very large weights
-    still compress eventually — at w >~ 1e8 consider raising
-    ``round_dp`` on both engines.
+    ~10^4 distinct rounded values. Very large weights still compress
+    eventually — at w >~ 1e8 consider raising ``round_dp`` on both
+    engines.
 
     Determinism contract: u is (h48 %% 1_000_000 + 1) / 1e6 — one
     correctly-rounded division of exact integers, identical in any

@@ -4,8 +4,9 @@ pruning of embedding-space near-duplicates.
 The third blocking strategy for embedding near-dup detection, alongside
 dedup.py's hyperplane-LSH and the brute-force recall oracle: first
 coarse-cluster the corpus with the IVF quantizer (k-means centroids),
-then compare pairs ONLY within each cluster and drop all but one member
-of every connected duplicate group (Abbas et al. 2023, "SemDeDup:
+then compare pairs ONLY within each cluster; the verified pairs feed
+``dedup.dedup_clusters``, which keeps one member of every connected
+duplicate group (Abbas et al. 2023, "SemDeDup:
 Data-efficient learning at web-scale through semantic deduplication" —
 the published recipe prunes within k-means clusters exactly like this).
 
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import round_half_up
 from ..functions.vectors import as_double, dot, dot_sql, norm
-from .dedup import _bucket_pairs, dedup_clusters
+from .dedup import _bucket_pairs
 from .similarity import ivf_assign, kmeans_refine
 
 
@@ -52,8 +53,6 @@ def semantic_dup_pairs(
     within-cell duplicate pairs ``(doc_a, doc_b, cos)`` with
     ``doc_a < doc_b``, cosine rounded to 4 for display and verified at
     6-digit rounding >= ``threshold`` (the shared oracle discipline).
-    ``semantic_dedup`` consumes this; it is exposed separately so the
-    blocking+verify core can be driver-checked as a pairs row.
 
     ``centroids``: optional (cid, cv) frame; defaults to the stride
     seed over the corpus, polished with ``refine_iters`` Lloyd
@@ -77,13 +76,12 @@ def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
     # the embedding_dup_pairs_blocked verify discipline (dedup.py): the
     # per-pair predicate then pays ONE dot fold instead of three
     # (dot + both norms), which is the cost driver when cells are
-    # ~stride-sized (round-10 profile: the full-cosine predicate cost
-    # 4.3 s isolated at sf0.1, hoisted 1.5 s). Bit-identical to
-    # cosine()'s fold — norm(as_double(v)) is the same expression on
-    # the same values and the division associates identically — so the
-    # DuckDB oracle hash holds.
+    # ~stride-sized (BASELINE.md, "Other figures moved out of code
+    # comments"). Bit-identical to cosine()'s fold — norm(as_double(v))
+    # is the same expression on the same values and the division
+    # associates identically — so the DuckDB oracle hash holds.
     with_n = assigned.withColumn("_n", norm("embedding"))
-    # one F.expr parse per consumer (round-10 opt): _bucket_pairs always
+    # one F.expr parse per consumer: _bucket_pairs always
     # evaluates pair_pred on the named struct columns a/b, so the SQL
     # references are stable; same dot fold / same division association
     # as the Column-lambda form it replaces
@@ -102,54 +100,6 @@ def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
         F.col("a.id").alias("doc_a"),
         F.col("b.id").alias("doc_b"),
         round_half_up(F.expr(pair_cos_sql), 4).alias("cos"),
-    )
-
-
-def semantic_dedup(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    centroids: DataFrame | None = None,
-    centroid_stride: int = 125,
-    refine_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Label every vector with its semantic-duplicate cluster and a
-    keep flag. Returns ``(vec_id, cid, cluster_id, keep)``:
-
-    - ``cid``: the k-means cell the vector pruned within;
-    - ``cluster_id``: min-id connected-component label over verified
-      duplicate pairs (cosine >= ``threshold`` within the cell);
-      singletons label themselves;
-    - ``keep``: True for the cluster's lowest id — drop the rest.
-
-    ``centroids``: optional (cid, cv) frame; defaults to the stride
-    seed over the corpus, polished with ``refine_iters`` Lloyd
-    iterations (similarity.kmeans_refine) when requested.
-    """
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if centroids is None:
-        centroids = emb.filter(F.col(id_col) % centroid_stride == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-        )
-        if refine_iters > 0:
-            centroids = kmeans_refine(emb, centroids, n_iters=refine_iters,
-                                      vec_col=vec_col, id_col=id_col)
-    assigned = ivf_assign(emb, centroids, vec_col=vec_col, id_col=id_col)
-
-    pairs = _pairs_from_assigned(assigned, threshold).select("doc_a", "doc_b")
-
-    clusters = dedup_clusters(pairs)
-    out = assigned.select("vec_id", "cid").join(
-        clusters.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
-    )
-    cluster_id = F.coalesce(F.col("cluster_id"), F.col("vec_id"))
-    return out.select(
-        "vec_id",
-        "cid",
-        cluster_id.alias("cluster_id"),
-        (cluster_id == F.col("vec_id")).alias("keep"),
     )
 
 

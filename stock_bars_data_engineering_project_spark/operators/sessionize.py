@@ -15,13 +15,6 @@ corpus growth in other users — the 100 TB idiom (user cardinality
 bounds the shuffle, never total event count in one task; a single
 pathological user is the same single-task bound every per-user
 sequence operator here carries, documented in funnel.py).
-
-The streaming twin uses Structured Streaming's NATIVE session windows
-(``F.session_window`` + watermark): the engine merges events into
-dynamic-gap windows and emits each session once its gap closes past
-the watermark — the declarative form of the same semantics, with
-state eviction handled by the engine instead of a custom
-applyInPandasWithState loop.
 """
 
 from __future__ import annotations
@@ -29,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import as_event_time, event_micros
+from ..functions.scalars import event_micros
 
 
 def sessionize(
@@ -115,45 +108,5 @@ def session_stats(
                     lambda s: s["_t"],
                 ),
             ).alias("seq"),
-        )
-    )
-
-
-def session_stats_stream(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "1 day",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming per-session aggregates via the engine's native session
-    windows: ``groupBy(session_window(ts, gap), user)`` merges events
-    into dynamic-gap windows, the watermark bounds state, and each
-    session emits ONCE when its gap closes past the watermark (append
-    mode). Returns (user, session_start/end epoch-micros, n_events) —
-    the chain column is batch-only (ordered collect inside a streaming
-    session window would hold unbounded per-window state; the batch
-    twin supplies it on replay).
-
-    Semantics pin (tests): for any backlog drained with availableNow,
-    the emitted (user, start, end, n_events) rows equal
-    :func:`session_stats` on the same batch for every session older
-    than the watermark — session_window's merge rule IS the gap rule.
-    NTZ event time is reinterpreted as a UTC instant by
-    ``as_event_time`` (withWatermark rejects NTZ).
-    """
-    ev = as_event_time(events, ts_col)
-    return (
-        ev.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_minutes} minutes"),
-            F.col(user_col),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            user_col,
-            F.unix_micros(F.col("session_window.start")).alias("start_us"),
-            F.unix_micros(F.col("session_window.end")).alias("end_us"),
-            "n_events",
         )
     )

@@ -91,11 +91,10 @@ def lsh_bucket(vec: F.Column | str, dim: int, n_planes: int = 8) -> F.Column:
     ``vec`` as a SQL column reference (str) takes the fast path: the
     whole bucket expression — per-plane double-literal arrays, index-
     ordered dot folds, sign sum — is emitted as ONE ``F.expr`` parse.
-    The loop-built Column form paid a py4j driver round-trip per node
-    (~0.4 s of pure plan construction per call at dim 64 x 5 planes,
-    measured round 10); the parser builds the identical tree in
-    single-digit ms. ``repr(double)`` + the ``D`` literal suffix
-    round-trips to the identical IEEE double (same rule the DuckDB
+    The loop-built Column form pays a py4j driver round-trip per node;
+    the parser builds the identical tree at once (BASELINE.md,
+    "Plan-construction figures"). ``repr(double)`` + the ``D`` literal
+    suffix round-trips to the identical IEEE double (same rule the DuckDB
     oracle twin relies on), and the fold shape mirrors ``dot`` exactly:
     left fold in index order from a 0.0 double seed. A Column argument
     keeps the legacy tree (value-identical; used only by callers that
@@ -140,7 +139,7 @@ def lsh_bucket(vec: F.Column | str, dim: int, n_planes: int = 8) -> F.Column:
 
 def l2sq_sql(a: str, b: str) -> str:
     """SQL text twin of :func:`l2sq` — one parse instead of a py4j
-    round-trip per node (the vectors.py round-10 discipline)."""
+    round-trip per node (the vectors.py discipline)."""
     from ..functions.vectors import as_double_sql
 
     return (
@@ -192,7 +191,7 @@ def ivf_assign(
     # argmin folds over (cid, d2) pairs — putting l2sq inside the fold's
     # comparison AND its winning struct would evaluate the O(dim) fold
     # twice per centroid (the hashing.py lambda-re-evaluation trap).
-    # The whole fold is emitted as ONE F.expr parse (round-10 opt, the
+    # The whole fold is emitted as ONE F.expr parse (the
     # lsh_bucket discipline): identical tree, none of the per-node py4j
     # round-trips the loop-built Column form paid.
     dists = (
@@ -546,9 +545,9 @@ def pq_topk(
     # same finding that moved the simhash/minhash hashing to codegen).
     # Left-associated sums keep bit-identical FP accumulation with both
     # the fold form and the oracle's list_reduce. The unrolled trees are
-    # built as SQL strings and parsed in ONE F.expr per consumer
-    # (round-10 opt): py4j pays a driver round-trip per Column node, so
-    # the loop-built form cost >1 s of pure construction per call.
+    # built as SQL strings and parsed in ONE F.expr per consumer: py4j
+    # pays a driver round-trip per Column node (BASELINE.md,
+    # "Plan-construction figures").
     def unrolled_l2(s):
         # sum_i (cw_i - v_{s*sub+i})^2, i = 1..sub, left-assoc; the
         # square is an explicit product, not pow(x, 2) — POW may route
@@ -657,45 +656,4 @@ def pq_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cos", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def recall_at_k(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
-    """ANN quality evaluation: per-query recall@k of an approximate
-    top-k result against the exact one — the number that tunes the
-    nprobe/n_planes/rerank dials (every blocked ANN strategy here
-    trades recall for candidate-set size; this measures what the trade
-    actually bought on a given corpus).
-
-    Both inputs are (query_id, vec_id, rank) frames (any extra columns
-    ignored), e.g. ``ivf_topk`` / ``lsh_topk`` output vs
-    ``cosine_topk``. Returns (query_id, n_exact, n_hit, recall) with
-    recall = |approx∩exact| / |exact| at rank <= k; queries absent from
-    ``exact`` emit no row (recall of an empty truth set is undefined).
-
-    Scale shape: two rank filters, one equi-semi-join on (query_id,
-    vec_id), one partial-aggregable count — all query-set-sized, never
-    corpus-sized.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    e = exact.filter(F.col("rank") <= k).select("query_id", "vec_id")
-    a = approx.filter(F.col("rank") <= k).select("query_id", "vec_id")
-    per_q = e.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    hits = (
-        e.join(a, ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        per_q.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            "n_exact",
-            F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit"),
-            (
-                F.coalesce(F.col("n_hit"), F.lit(0))
-                / F.col("n_exact").cast("double")
-            ).alias("recall"),
-        )
     )

@@ -1,118 +1,26 @@
-"""Mergeable sketch state — incremental distinct counts, quantiles, and
-set expressions over 100 TB without re-reading history.
+"""Retention from stored Theta sketch state — day-over-day set
+expressions without joining the raw fact rows.
 
 The reference's only aggregate surfaces are exact (COUNT/MAX in
 /root/reference/etl_project/assets/assets.py and the full-refresh rollup in
-assets/sql/transform/stock_bars_analysis.sql). Exact distinct counts and exact
-percentiles do not maintain incrementally: adding one day of data to a
-"distinct users per month" rollup forces a re-scan of the whole month,
-and a 100 TB month makes that the dominant cost of the pipeline.
+assets/sql/transform/stock_bars_analysis.sql). Exact member sets do not
+maintain incrementally: "users retained day-over-day" over raw rows is a
+join of per-day member lists, and a 100 TB fact table makes that the
+dominant cost.
 
-The scalable shape is the same mergeable-state design as
-``operators/rollup.py``, with Apache DataSketches (shipped in Spark
-4.x as first-class SQL aggregates) as the state:
-
-- **HLL** (``hll_sketch_agg`` / ``hll_union_agg``): distinct count.
-  HLL state is a max-per-register array, so union-of-parts is
-  REGISTER-IDENTICAL to a single pass over the whole — merging is not
-  merely "close", the estimate is bit-equal however the input is
-  batched. ~1.6 KB per group at the default lgConfigK=12 for a
-  relative standard error of ~1.6%.
-- **KLL** (``kll_sketch_agg_double`` / ``kll_merge_agg_double``):
-  quantiles with a rank-error guarantee (~1.65% at the default
-  k=200). n, min (quantile 0.0) and max (quantile 1.0) are carried
-  EXACTLY regardless of compaction, so those three are hard laws a
-  test can pin even though interior quantiles are approximate.
-- **Theta** (``theta_sketch_agg`` / ``theta_union_agg`` /
-  ``theta_intersection``): distinct counting that also supports set
-  EXPRESSIONS on the states themselves — |A ∩ B|, |A \\ B| — which is
-  how "users retained day-over-day" is answered from per-day state
-  without ever joining the raw fact rows. Below the nominal-entries
-  threshold (default 2^12) the sketch is in exact mode.
-
-All three states are BINARY columns: they persist through parquet,
-survive a warehouse round-trip, and combine by re-aggregation on the
-group keys — exactly the ``merge_rollups`` contract, so a stored
-sketch rollup is maintained by folding each new batch's increment in,
-never by recomputing history.
+**Theta** (``theta_sketch_agg`` / ``theta_union_agg`` /
+``theta_intersection``, first-class Spark 4.x SQL aggregates) is a
+distinct-count state that supports set EXPRESSIONS on the states
+themselves — |A ∩ B|, |A \\ B| — so retention is answered from per-day
+state alone. Below the nominal-entries threshold (default 2^12) the
+sketch is in exact mode. The state is a BINARY column: it persists
+through parquet and combines by re-aggregation on its day key.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# state columns per group; every one combines associatively under
-# merge_sketch_states. n_rows rides along because estimate-vs-exact
-# contract checks and merge tests want it (and it is itself mergeable).
-SKETCH_STATE = ("n_rows", "hll_state", "kll_state", "theta_state")
-
-
-def sketch_increment(
-    batch: DataFrame,
-    keys: tuple[str, ...] = ("user_id",),
-    distinct_col: str = "event_id",
-    value_col: str = "value",
-    day_of: str | None = "ts",
-) -> DataFrame:
-    """One partial-aggregation pass over a batch -> mergeable sketch
-    state rows: HLL + Theta over ``distinct_col``, KLL over
-    ``value_col``. Same grain convention as ``rollup_increment``
-    (``day_of`` adds the event day to the group keys). Default sketch
-    parameters are kept on both the build and merge aggregates so
-    unions never see mismatched configs."""
-    group = [F.col(k) for k in keys]
-    if day_of is not None:
-        group.append(F.to_date(F.col(day_of)).alias("day"))
-    return batch.groupBy(*group).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.hll_sketch_agg(distinct_col).alias("hll_state"),
-        F.kll_sketch_agg_double(value_col).alias("kll_state"),
-        F.theta_sketch_agg(distinct_col).alias("theta_state"),
-    )
-
-
-def merge_sketch_states(state: DataFrame, increment: DataFrame) -> DataFrame:
-    """Combine two sketch-state frames (same schema) by re-aggregation
-    on the group keys — associative and commutative, so batches fold in
-    any order. With day in the grain and day-partitioned storage, the
-    warehouse merge path prunes the rewrite to the days the increment
-    touches (same argument as ``merge_rollups``)."""
-    keys = [c for c in state.columns if c not in SKETCH_STATE]
-    both = state.unionByName(increment)
-    return both.groupBy(*[F.col(k) for k in keys]).agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.hll_union_agg("hll_state").alias("hll_state"),
-        F.kll_merge_agg_double("kll_state").alias("kll_state"),
-        F.theta_union_agg("theta_state").alias("theta_state"),
-    )
-
-
-def sketch_metrics(
-    state: DataFrame, quantiles: tuple[float, ...] = (0.25, 0.5, 0.75)
-) -> DataFrame:
-    """Project user-facing estimates from stored state at read time.
-
-    ``kll_n`` / ``kll_min`` / ``kll_max`` are exact by the sketch's
-    contract (tests pin them against n_rows and the true extrema);
-    ``uniq_hll`` / ``uniq_theta`` and the interior quantiles carry the
-    documented error bounds."""
-    qcols = [
-        F.kll_sketch_get_quantile_double("kll_state", F.lit(q)).alias(
-            f"q{int(q * 100):02d}"
-        )
-        for q in quantiles
-    ]
-    return state.select(
-        *[c for c in state.columns if c not in SKETCH_STATE],
-        F.col("n_rows"),
-        F.hll_sketch_estimate("hll_state").alias("uniq_hll"),
-        F.theta_sketch_estimate("theta_state").alias("uniq_theta"),
-        F.kll_sketch_get_n_double("kll_state").alias("kll_n"),
-        F.kll_sketch_get_quantile_double("kll_state", F.lit(0.0)).alias("kll_min"),
-        F.kll_sketch_get_quantile_double("kll_state", F.lit(1.0)).alias("kll_max"),
-        *qcols,
-    )
 
 
 def member_day_sets(

@@ -28,7 +28,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalars import event_micros, round_half_up
+from ..functions.scalars import event_micros
 
 
 def _row(
@@ -160,99 +160,6 @@ def validation_panel(checks: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), checks)
 
 
-def profile_columns(
-    df: DataFrame, tbl: str, cols: tuple[str, ...] | None = None
-) -> DataFrame:
-    """Column profiling — the discovery half of the quality layer (the
-    checks above assert known expectations; profiling tells you what to
-    expect): one row per column with row/null/distinct counts and the
-    min/max rendered as strings (cast AFTER aggregating, so numeric
-    columns order numerically, not lexically).
-
-    ONE aggregation pass over the table for every column together.
-    Multiple exact count_distincts plan as a single Expand (k-way
-    map-side row expansion) + one shuffle — the standard profile cost;
-    at extreme widths swap ``approx_count_distinct`` per column (error
-    bound pinned in tests/test_stats.py for the sketch family). The
-    k-column single row is then melted to per-column rows (k rows — no
-    driver collect)."""
-    cols = tuple(cols) if cols is not None else tuple(df.columns)
-    missing = [c for c in cols if c not in df.columns]
-    if not cols or missing:
-        raise ValueError(
-            f"profile_columns: no columns to profile (missing={missing})"
-        )
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for i, c in enumerate(cols):
-        col = F.col(c)
-        aggs += [
-            (F.count(F.lit(1)) - F.count(col)).alias(f"_null_{i}"),
-            F.count_distinct(col).alias(f"_dist_{i}"),
-            F.min(col).cast("string").alias(f"_min_{i}"),
-            F.max(col).cast("string").alias(f"_max_{i}"),
-        ]
-    one = df.agg(*aggs)
-    per_col = [
-        F.struct(
-            F.lit(c).alias("col"),
-            F.col("_n").alias("n_rows"),
-            F.col(f"_null_{i}").alias("n_null"),
-            F.col(f"_dist_{i}").alias("n_distinct"),
-            F.col(f"_min_{i}").alias("min_s"),
-            F.col(f"_max_{i}").alias("max_s"),
-        )
-        for i, c in enumerate(cols)
-    ]
-    return one.select(
-        F.explode(F.array(*per_col)).alias("p")
-    ).select(F.lit(tbl).alias("tbl"), "p.*")
-
-
-def corpus_report(
-    df: DataFrame,
-    group_cols: tuple[str, ...] = ("source",),
-    text_col: str = "text",
-) -> DataFrame:
-    """Dataset-card statistics for a training corpus: per-stratum AND
-    overall rows from ONE rollup shuffle (the grand-total row carries
-    NULL group keys, ANSI grouping-set semantics on any engine).
-
-    Per row: n_docs, total/mean/median token counts (median via
-    percentile_approx — a mergeable sketch, so the aggregate stays
-    partial-aggregable), total characters, mean composite quality
-    score, plus ``rollup_level`` (grouping_id: 0 = leaf stratum, max =
-    grand total) and the derived ``is_total`` flag — because a rollup's
-    total/subtotal rows carry NULL group keys and would otherwise be
-    indistinguishable from a genuine NULL-valued stratum (a corpus
-    with source=NULL docs would silently alias its stratum row with
-    the corpus total). The heavy per-doc expressions run map-side
-    exactly once.
-    """
-    from ..functions.text import quality_score, token_count
-
-    if not group_cols:
-        raise ValueError("group_cols must name at least one column")
-    per_doc = df.select(
-        *group_cols,
-        token_count(f"`{text_col}`").alias("_tok"),
-        F.length(F.col(text_col)).alias("_chars"),
-        quality_score(f"`{text_col}`").alias("_q"),
-    )
-    return (
-        per_doc.rollup(*group_cols)
-        .agg(
-            F.grouping_id().cast("int").alias("rollup_level"),
-            (F.grouping_id() == (1 << len(group_cols)) - 1).alias("is_total"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_tok").cast("bigint").alias("total_tokens"),
-            round_half_up(F.avg("_tok"), 2).alias("mean_tokens"),
-            F.expr("percentile_approx(_tok, 0.5, 10000)").alias("p50_tokens"),
-            F.sum("_chars").cast("bigint").alias("total_chars"),
-            round_half_up(F.avg("_q"), 4).alias("mean_quality"),
-        )
-    )
-
-
 def k_anonymity(
     df: DataFrame, quasi_cols: tuple[str, ...], k: int = 10
 ) -> DataFrame:
@@ -323,58 +230,3 @@ def l_diversity(
         F.min("_l").alias("min_distinct_sensitive"),
         F.sum((F.col("_l") < l).cast("long")).alias("n_below_l"),
     )
-
-
-def pseudonymize(
-    df: DataFrame,
-    cols: tuple[str, ...],
-    secret: str,
-    token_len: int = 16,
-    prefix: str = "pid_",
-) -> DataFrame:
-    """Deterministic keyed pseudonymization (GDPR Art. 4(5) — the
-    release-governance companion to ``delete_where``: tokenize
-    identifiers up front, delete on request): each value becomes
-    ``prefix`` + the first ``token_len`` hex chars of
-    ``sha256(secret || ':' || value)``.
-
-    Keyed determinism is the point — the same value under the same
-    secret maps to the same token in EVERY table, so joins, groupBys,
-    and referential integrity keep working across a pseudonymized
-    warehouse; without the secret the mapping is one-way (re-identify
-    only by brute-forcing the value domain, which is what rotating the
-    secret defends against). NULL stays NULL (absence is not an
-    identity). Map-only ``sha2`` codegen — no shuffle, no UDF; the
-    pure-Python twin in the tests pins the hash family cross-side.
-
-    ``token_len`` trades linkage-collision risk for width: 16 hex
-    chars = 64 bits, birthday-safe to ~2^32 distinct identities.
-    """
-    if not secret:
-        raise ValueError("pseudonymize needs a non-empty secret")
-    if not cols:
-        raise ValueError("pseudonymize needs at least one column")
-    if not 8 <= token_len <= 64:
-        raise ValueError(f"token_len must be in [8, 64], got {token_len}")
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"pseudonymize: no such column(s) {missing}")
-    out = df
-    for c in cols:
-        tok = F.concat(
-            F.lit(prefix),
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit(f"{secret}:"), F.col(c).cast("string")
-                    ),
-                    256,
-                ),
-                1,
-                token_len,
-            ),
-        )
-        out = out.withColumn(
-            c, F.when(F.col(c).isNull(), None).otherwise(tok)
-        )
-    return out

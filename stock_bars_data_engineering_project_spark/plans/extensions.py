@@ -44,7 +44,6 @@ from ..operators.quality import bigram_surprisal, unigram_surprisal
 from ..functions.hashing import simhash60
 from ..operators.dedup import (
     canonical_selection,
-    dedup_clusters,
     embedding_dup_pairs_blocked,
     exact_dedup_groups,
     minhash_lsh_pairs,
@@ -211,7 +210,7 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
       cross join, no LSH recall loss). The oracle brute-forces all
       pairs; results must agree because jaccard >= 0.7 implies a
       shared shingle.
-    - 'fuzzy' (round 6): the entity-resolution join
+    - 'fuzzy': the entity-resolution join
       (operators/fuzzy.fuzzy_dedup_pairs) — the corpus has no natural
       near-identical name column (part names are massively duplicated
       verbatim), so the arm SYNTHESIZES one both engines replicate
@@ -352,14 +351,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster together in both) and replays the keeper window and the
     md5 split-bucket arithmetic exactly.
 
-    The ``pr`` column (round 8, operators/graph.pagerank) adds 3-round
+    The ``pr`` column (operators/graph.pagerank) adds 3-round
     PageRank over the SAME verified pair graph — within-cluster
     connectivity centrality next to the keeper's quality argmax — with
     every round's rank 9dp-rounded before feeding the next, and the
     oracle replaying the rounds as unrolled SQL (the BPE/k-means
     discipline for iterative algorithms).
 
-    Round 9: the components come from ``dedup_clusters_star`` — the
+    The components come from ``dedup_clusters_star`` — the
     large-star/small-star alternating algorithm (O(log n) rounds on
     any topology, vs min-label propagation's O(diameter)) — so the
     scale-path implementation is the one the oracle's transitive
@@ -574,14 +573,14 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
       lexicographic on fields) before projection. The rank-filter
       prunes per-key history BEFORE collection (WindowGroupLimit),
       bounding state at k rows per key regardless of key skew.
-    - 'funnel' (round 7, operators/funnel.py): ordered-funnel reach
+    - 'funnel' (operators/funnel.py): ordered-funnel reach
       counts for view > click > purchase with first-touch anchoring
       and strict time ordering — per-step partial-agg min(ts) plus
       user-keyed joins over user-cardinality frames; no per-user
       history window, so the cost tracks distinct users, not tick
       volume. The per-step user counts ride n_events, the step path
       rides seq.
-    - 'funnel_stream' (round 8, streaming/stateful.py funnel_stream):
+    - 'funnel_stream' (streaming/stateful.py funnel_stream):
       the same reach counts produced by the REAL streaming operator —
       the event log arrives as two event-time-split parquet waves
       through two SEPARATE availableNow drains sharing one checkpoint
@@ -590,19 +589,19 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
       drain 2), and the per-user max emitted step must reproduce the
       batch operator's counts exactly. Cross-batch anchoring within a
       wave stays pinned in tests/test_streaming.py.
-    - 'funnel_windowed' (round 8): the conversion-window variant —
+    - 'funnel_windowed': the conversion-window variant —
       each step must land within 24 hours of the previous step's
       anchor (inclusive; per-transition). At every SF the window
       genuinely prunes (e.g. 150>60>25 vs the unbounded 150/150/150
       at sf0.01), so the predicate is value-exercised, not vacuous.
-    - 'attribution' (round 8, operators/funnel.touch_attribution):
+    - 'attribution' (operators/funnel.touch_attribution):
       single-touch conversion attribution under BOTH standard models —
       last-touch and first-touch — over the same view/click → purchase
       journey, 24h lookback, direct conversions reported as 'none'.
       Counts are exact integers (no fractional multi-touch credit in
       the gate), ties break on event_id, and the oracle replays the
       user-keyed range join and both ROW_NUMBER picks verbatim.
-    - 'ttc' (round 8, operators/funnel.time_to_convert): per-transition
+    - 'ttc' (operators/funnel.time_to_convert): per-transition
       conversion-latency summary — converting-user count and the LOWER
       MEDIAN latency in integer microseconds (the order statistic, not
       an interpolated percentile — the curriculum_phases stance, so
@@ -667,7 +666,7 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     attribution_arm = _attr("last").unionByName(_attr("first"))
 
-    # 'sessions' (round 10, operators/sessionize.py): gap-based
+    # 'sessions' (operators/sessionize.py): gap-based
     # sessionization at a 12-hour inactivity timeout (the events table's
     # median inter-event gap is ~7 h, so the timeout genuinely splits) —
     # one row per (user, session) carrying the count and a
@@ -1393,7 +1392,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "tag string, doc_id bigint, term string, score double, rank int",
     )
-    # (i) heavy hitters at bounded memory (operators/heavy.py, round 8):
+    # (i) heavy hitters at bounded memory (operators/heavy.py):
     # the EXACT frequent-token set (> 1/25 of the token stream — at most
     # 24 items by construction, SQL-replayable as integer arithmetic
     # n*25 > total) is value-gated, and the Misra-Gries sketch that
@@ -1426,7 +1425,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "tag string, doc_id bigint, term string, score double, rank int",
     )
-    # (j) PMI collocations (round 8, operators/quality.pmi_collocations):
+    # (j) PMI collocations (operators/quality.pmi_collocations):
     # top-30 phrase candidates by pointwise mutual information over
     # min_count-pruned adjacent pairs — the word2vec-phrases pass. The
     # materialized wordcount serves as the unigram model (seventh
@@ -1635,7 +1634,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         # ONE partitioned write materializes both event-time waves
-        # (round-10 opt: the two per-wave filter+coalesce writes each
+        # (the two per-wave filter+coalesce writes each
         # re-scanned events and paid a separate job); the wave files
         # are then REVEALED to the file stream by driver-side renames
         # between the drains, which preserves exactly the contract
@@ -1815,7 +1814,7 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
       are removed and the cleaned text itself rides as the payload
       column, so the oracle gates the REBUILT text, not just counts.
 
-    - 'exact_substr' (round 6): exact-substring dedup (Lee et al. 2022
+    - 'exact_substr': exact-substring dedup (Lee et al. 2022
       at 8-gram granularity, operators/contamination.exact_substr_scrub)
       — every duplicated 8-token span is kept at its globally first
       (doc_id, pos) occurrence and scrubbed everywhere else; the
@@ -2062,7 +2061,7 @@ def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       stride seed + argmin assignment + in-cell pairing, so the
       opposite recall trade (cell-boundary misses vs the LSH ring) is
       itself value-hashed.
-    - 'decontam_exact' / 'decontam_blocked' (round 10): embedding-space
+    - 'decontam_exact' / 'decontam_blocked': embedding-space
       benchmark decontamination
       (operators/semantic.semantic_decontaminate[_blocked]) over the
       vec_id % 20 == 0 held-out split — the asymmetric relative of the
@@ -2292,7 +2291,7 @@ FROM (
 )
 
 
-# The 'refresh' arm's replay (round 9): the SAME composed-pipeline CTE
+# The 'refresh' arm's replay: the SAME composed-pipeline CTE
 # chain re-parameterized to the configuration an incremental refresh
 # reproduces exactly — keeper = lowest id (order-invariant under
 # monotone batch ids) and decontamination against the FROZEN raw %20
@@ -2459,7 +2458,7 @@ FROM (
         -- one correctly-rounded division), key ln(u)/w — the monotone-
         -- equivalent log form of u^(1/w), rounded to 9dp BEFORE
         -- ranking so a sub-ULP ln() libm difference cannot flip an
-        -- order (round 9: the log key keeps ~10^4 distinct rounded
+        -- order (the log key keeps ~10^4 distinct rounded
         -- values at w ~ 1e6 where u^(1/w) kept ~14)
         SELECT doc_id, source,
                CAST(ROUND(CAST(
@@ -2490,10 +2489,10 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by stratum; (d) the deterministic training-order shuffle
     (operators/sampling.py shuffle_shards): shard + order key as one
     label so the oracle gates the full permutation, not just shard
-    membership — 16 shards, epoch seed 'ep0', map-only assignment (the
-    materialized layout is write_shuffled; ordering law pinned in
-    tests/test_properties.py); (e) temperature-weighted alpha-sampling
-    (the mT5-style mixture rebalance, alpha=0.5): per-stratum keep rate
+    membership — 16 shards, epoch seed 'ep0', map-only assignment
+    (ordering law pinned in tests/test_properties.py); (e)
+    temperature-weighted alpha-sampling (the mT5-style mixture
+    rebalance, alpha=0.5): per-stratum keep rate
     sqrt(c_min/c_i) DERIVED from per-source token mass in one tiny
     aggregate, broadcast back, membership by the same salted-hash rule
     — sqrt and division are correctly-rounded IEEE, so the thresholds
@@ -2506,7 +2505,7 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine FP hazard — plus a salted 4-way shard within each
     phase; label 'p{phase}_s{shard}' gates both assignments;
     (g) leakage-safe walk-forward backtest folds over the EVENTS table
-    (operators/sampling.walk_forward_days, round 8): the purged/
+    (operators/sampling.walk_forward_days): the purged/
     embargoed time-series cross-validation financial ML requires —
     fold k tests on the k-th of the last three 5-day blocks, trains
     strictly before the block minus a 2-day embargo; the day-level
@@ -2575,7 +2574,7 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("f"), F.col("fold").cast("string"), F.lit(":"), F.col("role")
         ).alias("label"),
     )
-    # 'reservoir' / 'weighted' (round 8, operators/sampling.py
+    # 'reservoir' / 'weighted' (operators/sampling.py
     # reservoir_k / weighted_sample_k): exact-k-per-stratum sampling —
     # unweighted bottom-k on the FP-free 48-bit md5 rank, and the
     # Efraimidis-Spirakis u^(1/w) key (w = token count) with the key
@@ -2605,7 +2604,7 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("source"), F.lit("#"), F.col("rank").cast("string")
         ).alias("label"),
     )
-    # 'pipeline' (round 8): the COMPOSED corpus pipeline
+    # 'pipeline': the COMPOSED corpus pipeline
     # (pipeline/corpus_pipeline.prepare_corpus, default knobs) gated
     # end-to-end at per-document granularity — survivorship through
     # exact dedup, near-dup keeper selection, decontamination, and the
@@ -2631,7 +2630,7 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("label"),
         )
 
-    # 'refresh' (round 9): the INCREMENTAL composed refresh driven
+    # 'refresh': the INCREMENTAL composed refresh driven
     # through a REAL readStream + foreachBatch drain
     # (streaming/incremental.corpus_refresh_stream wrapping
     # pipeline/corpus_pipeline.refresh_corpus) — the corpus arrives as
@@ -3028,7 +3027,7 @@ _IVF_STRIDE_SQL = _ivf_sql(stride=125, nprobe=4)
 
 # The 'incremental' arm's replay: stride-100 quantizer (the seed rows
 # are all even ids, so seeding from the even-id build slice yields the
-# identical centroid set), nprobe=3, minus the round-9 tombstone wave:
+# identical centroid set), nprobe=3, minus the tombstone wave:
 # ids ending in 3 are deleted after ingest (never centroid seeds —
 # multiples of 100 end in 0 — so the frozen quantizer is unchanged and
 # the delete is purely a candidate-side exclusion, which is what the
@@ -3340,7 +3339,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     - `brute`: exact top-10 cosine for 5 query vectors — corpus streams
       once against a broadcast query set, deterministic (cos, id)
       ranking. The recall baseline the approximate arms are judged by.
-    - `int8` (round 8): the QUANTIZED-SERVING path — the corpus side is
+    - `int8`: the QUANTIZED-SERVING path — the corpus side is
       symmetric per-vector int8 (functions/vectors.quantize_int8,
       4x smaller at rest than float32: the memory/IO lever that decides
       whether a 100 TB vector corpus fits its serving tier), dequantized
@@ -3349,7 +3348,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       component rounding, and every reconstruction double — so the
       quantization ARITHMETIC is cross-engine-gated, not just the
       ranking it produces.
-    - `mrl` (round 8): the TRUNCATION-serving path — both sides keep
+    - `mrl`: the TRUNCATION-serving path — both sides keep
       only the first 16 of 64 components (functions/vectors
       .truncate_dims; MRL-trained embeddings order information by
       prefix) and rank by exact cosine in the truncated space: the
@@ -3454,7 +3453,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus_dq = emb.select(
         "vec_id",
-        # single-parse quantize->dequantize round trip (round-10 opt)
+        # single-parse quantize->dequantize round trip
         dequantize_int8(quantize_int8_sql("embedding")).alias("embedding"),
     )
     int8_arm = cosine_topk(corpus_dq, queries, k=10).withColumn(
@@ -3563,7 +3562,7 @@ _SCRUB_SQL = (
 
 def _scrubbed_sql(t: str) -> str:
     """Spark-SQL text twin of :func:`_scrubbed` — one parse at the
-    consumer (round-10 opt). Backslashes in the regexes double for the
+    consumer. Backslashes in the regexes double for the
     SQL string literal; the parsed pattern is byte-identical."""
     email = "'" + _EMAIL_RE.replace("\\", "\\\\") + "'"
     phone = "'" + _PHONE_RE.replace("\\", "\\\\") + "'"
@@ -3766,7 +3765,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_fail_expr = n_fail_expr - F.col(c).cast("int")
     t = F.col("text")
     # every per-document panel column takes the single-parse str path
-    # (round-10 opt — identical trees, none of the per-node py4j cost)
+    # (identical trees, none of the per-node py4j cost)
     grams = word_shingles("text", 2)
     has_grams = F.size(grams) > 0
     return d.select(
@@ -3807,7 +3806,7 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # text_scrub was consolidated into text_metrics (its `scrubbed` /
 # `delta_chars` columns — same codegen'd regex pass over the same
-# balanced scan), freeing a registry slot for the round-5 scale rows.
+# balanced scan), freeing a registry slot for the scale rows.
 
 
 # Chunking parameters for the suite's `chunk` arm: stride 12 gives the
@@ -3982,7 +3981,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
       this radius, which is exactly what a divergence here would
       falsify). On this corpus near-dups are the exact re-encodes
       (identical payloads), the fake-decode contract.
-    - ``wav_*`` (round 8): the AUDIO modality through a REAL codec —
+    - ``wav_*``: the AUDIO modality through a REAL codec —
       stdlib ``wave`` needs no external library, so unlike the
       PIL-gated image decoder this decode seam executes everywhere.
       Deterministic RIFF/PCM payloads are synthesized executor-side
@@ -4026,7 +4025,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one definition of the payload triple (operators/multimodal.py);
     # column pruning drops the unused payload bytes from the scan
     media = attach_binary_payload(d, passthrough=("source",))
-    # frame sampling (round 8: the video modality's plumbing, driver-
+    # frame sampling (the video modality's plumbing, driver-
     # gated): the Arrow-batched 1->4 fan-out, re-aggregated per doc —
     # frame 0's md5 and the tail frame's length gate the slicing
     # arithmetic exactly, frame_n the fan-out count; one mapInPandas
@@ -4230,7 +4229,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       the tf shuffle) and document frequency is computed for query
       terms only; the oracle recomputes the full formula term-for-term
       with matching operator precedence.
-    - 'index' (round 6, operators/incremental_retrieval.py): the SAME
+    - 'index' (operators/incremental_retrieval.py): the SAME
       queries answered from the persisted inverted index — built on
       the even-id half, odd-id half folded in by ingest_docs (the full
       maintenance chain, memoized per process like the ANN index), and
@@ -4240,7 +4239,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       against the same oracle ranking); index ≡ one-shot, replay
       idempotence, and the pruned plan shape stay pinned in
       tests/test_incremental_retrieval.py.
-    - 'rrf' (round 7, operators/retrieval.py rrf_fuse): HYBRID
+    - 'rrf' (operators/retrieval.py rrf_fuse): HYBRID
       retrieval — the lexical leg (this row's bm25 ranking) fused with
       a semantic leg (exact-cosine top-10 of each query's embedding,
       vec_id < 25 against vec_id >= 25 — documents and embeddings
@@ -4253,17 +4252,17 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       simply get no semantic contribution — the realistic
       partial-coverage case, exercised at sf0.1 where the embedding
       table covers 2/5 of the corpus ids.
-    - 'prf' (round 7, operators/retrieval.py prf_expand):
+    - 'prf' (operators/retrieval.py prf_expand):
       pseudo-relevance feedback — each query expands with the top-10
       most frequent NEW terms of its top-5 first-pass documents
       (integer weights, term-ascending tiebreak — the expansion
       ranking is FP-free), then a second Okapi pass retrieves with the
-      expanded term set — answered from the PERSISTED inverted index
-      (round 8), so the corpus is tokenized once per row, not once per
-      pass; without an index PRF's honest cost is one more corpus
-      scan. The oracle replays the feedback counts, the anti-joined
-      term pick, and the entire second-pass scoring.
-    - 'trgm' (round 8, operators/trigram.py +
+      expanded term set — answered from the PERSISTED inverted index,
+      so the corpus is tokenized once per row, not once per pass;
+      without an index PRF's honest cost is one more corpus scan.
+      The oracle replays the feedback counts, the anti-joined term
+      pick, and the entire second-pass scoring.
+    - 'trgm' (operators/trigram.py +
       operators/incremental_trgm.py): exact substring search from the
       PERSISTED trigram inverted index (built + ingested halves, the
       bm25-index maintenance chain; probed via static bucket partition
@@ -4377,7 +4376,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan" cost only applies when no index exists. (Built in
     # _lex_chain above — it consumes the materialized lex ranking.)
 
-    # 'trgm' (round 8, operators/trigram.py +
+    # 'trgm' (operators/trigram.py +
     # operators/incremental_trgm.py): substring patterns cut from four
     # query docs, answered from the PERSISTED trigram inverted index —
     # built on the even-id half, odd-id half folded in by ingest_docs

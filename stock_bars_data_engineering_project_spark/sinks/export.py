@@ -31,11 +31,3 @@ def export_jsonl(
     if compression:
         writer = writer.option("compression", compression)
     writer.json(path)
-
-
-def export_orc(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
-    """ORC export for Hive-era consumers; hive-partitioned when asked."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)

@@ -1,11 +1,7 @@
-from .readers import TESTDATA_TABLES, load_table, load_tables, read_csv_dim, register_views
-from .flatten import flatten_bars_json
+from .readers import TESTDATA_TABLES, load_table, read_csv_dim
 
 __all__ = [
     "TESTDATA_TABLES",
     "load_table",
-    "load_tables",
     "read_csv_dim",
-    "register_views",
-    "flatten_bars_json",
 ]

@@ -51,9 +51,9 @@ def balance(df: DataFrame) -> DataFrame:
     unconditional repartition would round-robin-shuffle the whole input
     for nothing, so it is skipped. The partition count probe is
     metadata-only: it compiles the plan but runs no job — and it reads
-    the count off the INTERNAL row RDD (round-10 opt): ``df.rdd`` would
+    the count off the INTERNAL row RDD: ``df.rdd`` would
     additionally build the Java-to-Python conversion plan plus the
-    Python RDD wrapper per call (~10-30 ms of pure driver work), while
+    Python RDD wrapper per call (pure driver work), while
     the partition count is identical on both (the conversion is a
     partition-preserving map)."""
     target = df.sparkSession.sparkContext.defaultParallelism
@@ -121,16 +121,6 @@ def load_events_since(
     return raw
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for ``spark.sql`` (S6)."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_csv_dim(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
     """S3: header CSV dimension scan (reference: pd.read_csv of the
     10-row ticker dim). Explicit schema preferred over inference in prod;
@@ -141,37 +131,3 @@ def read_csv_dim(spark: SparkSession, path: str, schema: str | None = None) -> D
     else:
         reader = reader.option("inferSchema", True)
     return reader.csv(path)
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: str | T.StructType | None = None
-) -> DataFrame:
-    """Newline-delimited JSON reader — the interchange format most LLM
-    training corpora arrive in (one document object per line, optionally
-    gzip-sharded; Spark's json source handles both transparently and
-    splits uncompressed shards by line).
-
-    Pass an explicit ``schema`` in production: without one Spark runs an
-    extra full inference pass over 100 TB just to discover the columns,
-    and the result schema becomes data-dependent (the same deploy hazard
-    the explicit pivot value list avoids). ``mode=PERMISSIVE`` with a
-    ``_corrupt_record`` column keeps a bad line from failing a 10^9-line
-    ingest — corrupt rows land in the audit column instead."""
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    )
-    if schema is not None:
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
-        # the corrupt-record column must exist in the schema to be kept
-        if "_corrupt_record" not in [f.name for f in schema.fields]:
-            schema = schema.add("_corrupt_record", T.StringType())
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning properties as parquet (column
-    projection and predicate pushdown reach the stripe level), for
-    interop with Hive-era warehouses."""
-    return spark.read.orc(path)

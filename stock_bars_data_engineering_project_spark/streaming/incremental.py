@@ -1,13 +1,13 @@
 """Structured-Streaming incremental ingest: the reference's manual
 "poll since checkpoint -> upsert -> advance watermark" loop (SURVEY
-§2.8, C1-C4) expressed as a streaming query with a keyed-merge sink.
+§2.8, C1-C4) expressed as streaming queries over warehouse sinks.
 
 ``readStream`` discovers new files; ``foreachBatch`` applies each
-micro-batch as a MERGE into the warehouse (idempotent under replay —
-exactly the reference's Q9 healing property, but with the checkpointing,
-offset tracking, and restart semantics supplied by the engine instead of
-hand-rolled SQL). Structured Streaming's checkpointLocation replaces the
-reference's ``check_points`` table.
+micro-batch through a replay-idempotent batch ingest (the reference's
+Q9 healing property, but with the checkpointing, offset tracking, and
+restart semantics supplied by the engine instead of hand-rolled SQL).
+Structured Streaming's checkpointLocation replaces the reference's
+``check_points`` table.
 """
 
 from __future__ import annotations
@@ -47,29 +47,6 @@ def _drain(
     return q
 
 
-def incremental_merge_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    wh: ParquetWarehouse,
-    table: str,
-    keys: tuple[str, ...],
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Stream files from ``src_dir`` into ``table`` via keyed merge.
-
-    With ``available_now`` the query drains everything currently present
-    and stops — a scheduled-batch deployment identical in semantics to
-    the reference's weekly ECS task, but restartable and exactly-once at
-    the sink (merge idempotency + offset checkpoint).
-    """
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        wh.merge(batch, table, keys=keys)
-
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
-
-
 def rollup_maintenance_stream(
     spark: SparkSession,
     src_dir: str,
@@ -92,8 +69,7 @@ def rollup_maintenance_stream(
     degrades to exactly-once state — no read-modify-write of prior
     state inside the hot path, which would double-fold on replay and
     serialize every batch behind a full-table rewrite. Reading the
-    rollup is a combine over epochs (``read_rollup_state``), and
-    ``compact_rollup_state`` bounds that read amplification offline.
+    rollup is a combine over epochs (``read_rollup_state``).
     """
     from ..operators.rollup import rollup_increment
 
@@ -113,29 +89,10 @@ def rollup_maintenance_stream(
 
 def read_rollup_state(wh: ParquetWarehouse, table: str) -> DataFrame:
     """Read-time combine of the epoch log -> one state row per group.
-    O(epochs) rows per group pre-combine; run ``compact_rollup_state``
-    on a schedule to keep that bounded."""
+    O(epochs) rows per group pre-combine."""
     from ..operators.rollup import combine_state
 
     return combine_state(wh.read(table).drop("_epoch"))
-
-
-# compacted history lands in a partition no streaming epoch can claim
-# (epoch ids are non-negative), so a replayed in-flight epoch can only
-# ever rewrite its OWN partition, never the folded base
-_BASE_EPOCH = -1
-
-
-def compact_rollup_state(wh: ParquetWarehouse, table: str) -> None:
-    """Fold all epoch partitions into the ``_epoch = -1`` base
-    partition. Run while the stream is stopped (or between triggers):
-    the one replayable epoch is the in-flight batch, which by
-    definition has not been folded yet, and a replay after compaction
-    rewrites only its own partition — the base is never an epoch id."""
-    state = read_rollup_state(wh, table).withColumn(
-        "_epoch", F.lit(_BASE_EPOCH)
-    )
-    wh.overwrite(state, table, partition_by=("_epoch",))
 
 
 def dedup_ingest_stream(
@@ -197,7 +154,7 @@ def corpus_refresh_stream(
     surprisal_max: float | None = None,
     frozen_unigram: DataFrame | None = None,
 ):
-    """Streaming form of the COMPOSED corpus refresh (round 9): each
+    """Streaming form of the COMPOSED corpus refresh: each
     micro-batch runs ``pipeline.corpus_pipeline.refresh_corpus`` — the
     whole product chain (persisted-band-index dedup -> frozen-benchmark
     decontamination -> scrub/quality gate/split -> pack continuation ->
@@ -271,122 +228,5 @@ def pca_ingest_stream(
         ingest_pca_batch(
             wh, batch, table=table, id_col=id_col, vec_col=vec_col, dim=dim
         )
-
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
-
-
-def index_ingest_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    checkpoint_dir: str,
-    ingest,
-    available_now: bool = True,
-):
-    """Streaming ingest for a persisted index: ``ingest(batch)`` per
-    non-empty micro-batch, e.g. ``lambda b: ingest_docs(wh, b, "bm",
-    BM25)`` for a lexical index (operators/index_maint.py) or
-    ``lambda b: ingest_vectors(wh, b, "idx")`` for the IVF index.
-
-    The index must already exist: a stream cannot fix n_buckets or
-    train the frozen centroids. Exactly-once composition: the
-    file-source offset checkpoint gives at-least-once micro-batches,
-    and every index ingest is replay-idempotent (a lexical replay
-    anti-joins to nothing; an IVF replay merges identical (cid, vec_id)
-    rows). Ingest is per document or per vector, so ANY micro-batching
-    of the same files yields an index that answers like the one-shot
-    build. Empty micro-batches are skipped, so a trigger that found no
-    files adds no version."""
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.isEmpty():
-            ingest(batch)
-
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
-
-
-def index_delete_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    wh: ParquetWarehouse,
-    checkpoint_dir: str,
-    kind: str,
-    table: str | None = None,
-    available_now: bool = True,
-):
-    """Streaming TOMBSTONE drain: id files land (a dedup pipeline's
-    retraction feed, a GDPR erasure queue) and each micro-batch goes
-    through ``index_maint.delete_ids``, so queries exclude the ids from
-    the next probe onward at O(ids) cost. ``kind`` picks the index
-    family (``'ann' | 'bm25' | 'trgm'``; default table
-    ``<kind>_index``); ``schema`` is the id-file schema (first column =
-    the id).
-
-    Exactly-once is WEAKER here than the ingest drain's, by design:
-    duplicate tombstones change no query answer and compact away at the
-    next apply_deletes, so an at-least-once replay costs duplicate rows
-    in the O(ids) tombstone table, never a wrong answer."""
-    from ..operators.index_maint import BUCKETED, IVF, delete_ids
-
-    kinds = ("ann", "bm25", "trgm")
-    if kind not in kinds:
-        raise ValueError(
-            f"unknown index kind {kind!r}; expected one of {list(kinds)}"
-        )
-    layout = IVF if kind == "ann" else BUCKETED
-    target = table or f"{kind}_index"
-    return index_ingest_stream(
-        spark,
-        src_dir,
-        schema,
-        checkpoint_dir,
-        lambda batch: delete_ids(wh, batch, target, layout),
-        available_now,
-    )
-
-
-def decontam_gate_stream(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    wh: ParquetWarehouse,
-    eval_set: DataFrame,
-    checkpoint_dir: str,
-    scores_table: str = "decontam_scores",
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    available_now: bool = True,
-):
-    """Streaming embedding-decontamination gate: every arriving
-    micro-batch of vectors is scored against a FROZEN eval set
-    (operators/semantic.semantic_decontaminate — broadcast eval,
-    map-only scan, partial-agg argmax) and the scored rows
-    ``(id, near_eval_id, cos, contaminated)`` merge into
-    ``scores_table`` keyed on the id. The eval set is captured once at
-    stream start — the decontamination baseline must not drift
-    mid-stream (the corpus_refresh_stream frozen-benchmark stance).
-
-    Exactly-once composition: at-least-once micro-batches from the
-    offset checkpoint, and the per-batch apply is replay-idempotent —
-    the score is a deterministic function of (vector, frozen eval set),
-    so a replayed batch merges byte-identical rows onto the same keys
-    (no-op). Batch-split invariance holds trivially: rows are scored
-    independently, so ANY micro-batching of the same files produces the
-    same scores table — pinned as stream ≡ batch in
-    ``tests/test_streaming_index_ingest.py``.
-    """
-    from ..operators.semantic import semantic_decontaminate
-
-    def _apply(batch: DataFrame, epoch_id: int) -> None:
-        scored = semantic_decontaminate(
-            batch,
-            eval_set,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        wh.merge(scored, scores_table, keys=(id_col,))
 
     return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)

@@ -177,29 +177,16 @@ def test_train_bpe_batched_bounds_round_count(spark):
     assert len(merges) / stats["rounds"] >= 10
 
 
-def test_bpe_decode_round_trips_every_word(spark):
-    """Tokenizer losslessness: decode(encode(w)) == w for EVERY distinct
-    corpus word under the learned merges — including words whose merges
-    cross the end-of-word marker."""
-    from pyspark.sql import functions as F
-
-    from stock_bars_data_engineering_project_spark.operators.bpe import bpe_decode
-
+def test_bpe_segment_round_trips_every_word(spark):
+    """Tokenizer losslessness: the pieces of every distinct corpus word
+    under the learned merges concatenate back to the word plus one
+    end-of-word marker — including words whose merges cross that
+    marker. BPE merges only concatenate adjacent symbols, so any other
+    outcome corrupts every downstream training example."""
     docs = spark.createDataFrame([(t,) for t in CORPUS], "text string")
     merges = train_bpe(docs, n_merges=8)
     words = word_counts(docs).select("word")
-    seg = bpe_segment(words, merges)
-    out = bpe_decode(seg).collect()
+    out = bpe_segment(words, merges).collect()
     assert out, "no words"
     for r in out:
-        assert r.decoded == r.word, (r.word, r.pieces, r.decoded)
-
-    # NULL pass-through + collision guard
-    nulled = bpe_decode(
-        seg.withColumn("pieces", F.lit(None).cast("array<string>"))
-    ).collect()
-    assert all(r.decoded is None for r in nulled)
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="decoded"):
-        bpe_decode(seg.withColumn("decoded", F.lit("x")))
+        assert "".join(r.pieces) == r.word + EOW, (r.word, r.pieces)

@@ -168,89 +168,6 @@ def test_boilerplate_scrub_no_hot_grams_identity(spark):
     assert all(r.clean_text.endswith(f"{r.doc_id} here") for r in out)
 
 
-def test_incremental_scrub_two_batches_equals_full(spark, tmp_path):
-    """The two incremental laws: (a) the persisted gram-count table
-    after two batches equals a full-corpus recount (mergeability incl.
-    cross-batch singleton promotion); (b) the second batch's scrub
-    equals the full-corpus scrub restricted to its docs; (c) a
-    compaction-time re-scrub of ALL stored docs against the current
-    counts reconciles exactly to the full-corpus scrub."""
-    from stock_bars_data_engineering_project_spark.operators.contamination import (
-        boilerplate_scrub,
-        compact_gram_state,
-        gram_count_state,
-        gram_doc_frequency,
-        ingest_scrub_batch,
-        positional_grams,
-        scrub_against,
-    )
-    from stock_bars_data_engineering_project_spark.sinks.warehouse import (
-        ParquetWarehouse,
-    )
-    from pyspark.sql import functions as F
-
-    boiler = "all rights reserved"
-    b1 = [(i, f"alpha {i} {boiler}") for i in range(3)]
-    # cross-batch promotion: "seen once here" + twice in batch 2 -> df 3
-    b1 += [(100, "rare repeated span once")]
-    b2 = [(10 + i, f"{boiler} beta {i}") for i in range(3)]
-    b2 += [(101, "x rare repeated span y"), (102, "z rare repeated span w")]
-    full_rows = b1 + b2
-    batch1 = spark.createDataFrame(b1, "doc_id long, text string")
-    batch2 = spark.createDataFrame(b2, "doc_id long, text string")
-    full = spark.createDataFrame(full_rows, "doc_id long, text string")
-
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    ingest_scrub_batch(wh, batch1, k=3, df_cap=3).collect()
-    out2 = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-        for r in ingest_scrub_batch(wh, batch2, k=3, df_cap=3).collect()
-    }
-
-    # (a) combined epoch-log state == full recount
-    stored = {
-        (r.gram, r.gram_df)
-        for r in gram_count_state(wh).collect()
-    }
-    expect_counts = {
-        (r.gram, r.gram_df)
-        for r in gram_doc_frequency(positional_grams(full, 3)).collect()
-    }
-    assert stored == expect_counts
-    # "rare repeated span" promoted to df 3 across batches
-    assert ("rare repeated span", 3) in stored
-
-    # (a') at-least-once redelivery is a no-op: same content epoch,
-    # identical partition rewritten, combined state unchanged
-    ingest_scrub_batch(wh, batch2, k=3, df_cap=3).collect()
-    assert {
-        (r.gram, r.gram_df) for r in gram_count_state(wh).collect()
-    } == expect_counts
-
-    # (a'') compaction folds epochs into one base partition, state
-    # unchanged
-    compact_gram_state(wh)
-    assert {
-        (r.gram, r.gram_df) for r in gram_count_state(wh).collect()
-    } == expect_counts
-    assert wh.read("gram_counts").select("_epoch").distinct().count() == 1
-
-    # (b) batch-2 scrub == full scrub restricted to batch-2 docs
-    full_scrub = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-        for r in boilerplate_scrub(full, k=3, df_cap=3).collect()
-    }
-    assert out2 == {d: full_scrub[d] for d in out2}
-
-    # (c) re-scrub of everything vs current counts == full scrub
-    hot = gram_count_state(wh).filter(F.col("gram_df") >= 3).select("gram")
-    rescrub = {
-        r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-        for r in scrub_against(full, hot, 3).collect()
-    }
-    assert rescrub == full_scrub
-
-
 def test_dedup_paragraphs_global_first_occurrence(spark):
     """Cross-doc + in-doc duplicate paragraphs: only the globally first
     occurrence by (doc_id, pos) survives; normalization (case + inner

@@ -56,8 +56,6 @@ def test_corpus_pipeline_exports_train_jsonl(spark, tmp_path):
     from stock_bars_data_engineering_project_spark.pipeline.corpus_pipeline import (
         run_corpus_pipeline,
     )
-    from stock_bars_data_engineering_project_spark.sources.readers import read_jsonl
-
     out = str(tmp_path / "jsonl")
     counts = run_corpus_pipeline(
         spark, "/root/testdata/sf0.001", str(tmp_path / "wh"),
@@ -65,7 +63,7 @@ def test_corpus_pipeline_exports_train_jsonl(spark, tmp_path):
     )
     shards = glob.glob(os.path.join(out, "part-*.json.gz"))
     assert len(shards) == 8
-    back = read_jsonl(spark, out)
+    back = spark.read.json(out)
     assert back.count() == counts["exported_train"] > 0
     assert set(r.split for r in back.select("split").distinct().collect()) == {"train"}
 
@@ -193,7 +191,7 @@ def test_gopher_gate_stage(spark):
 
 
 def test_incremental_refresh_equals_one_shot(spark, tmp_path):
-    """The composed refresh law (round 9): two monotone-id batches
+    """The composed refresh law: two monotone-id batches
     through refresh_corpus (persisted-state dedup -> frozen-benchmark
     decontam -> scrub/gate/split -> pack-continuation -> merge) must
     publish exactly what prepare_corpus(union, keeper='first',
@@ -236,7 +234,7 @@ def test_incremental_refresh_equals_one_shot(spark, tmp_path):
 
 def test_refresh_processed_covers_benchmark_excluded(spark, tmp_path):
     """Benchmark-excluded docs are terminally handled and must be
-    recorded in __processed (round-10 ADVICE fix): otherwise every
+    recorded in __processed: otherwise every
     subsequent refresh re-discovers them as 'missing' and pays an
     O(dropped-set) reconcile forever. Steady-state law: after any
     committed refresh, corpus_docs anti-join __processed is EMPTY."""
@@ -312,7 +310,7 @@ def test_incremental_refresh_crash_heal(spark, tmp_path):
 
 
 def test_streaming_corpus_refresh_equals_one_shot(spark, tmp_path):
-    """corpus_refresh_stream (round 9): documents delivered as two
+    """corpus_refresh_stream: documents delivered as two
     parquet file waves through a REAL readStream + foreachBatch drain
     must publish exactly prepare_corpus(union, keeper='first',
     benchmark=frozen) — the streaming form of the batch refresh law,
@@ -363,7 +361,7 @@ def test_streaming_corpus_refresh_equals_one_shot(spark, tmp_path):
 
 
 def test_incremental_refresh_frozen_surprisal_gate(spark, tmp_path):
-    """Round 9: the frozen-model ABSOLUTE surprisal gate (calibrate
+    """The frozen-model ABSOLUTE surprisal gate (calibrate
     once, apply per batch) keeps the two-batch ≡ one-shot law — and a
     batch-derived model is refused loudly on the refresh path."""
     import pytest
@@ -424,8 +422,7 @@ def test_refresh_on_legacy_one_shot_table(spark, tmp_path):
     """A published table written by run_corpus_pipeline (split-
     partitioned, no _shard column) must keep working under
     refresh_corpus: the publish detects the legacy layout and merges
-    unsharded instead of crashing on a missing merge-key column
-    (round-10 review finding)."""
+    unsharded instead of crashing on a missing merge-key column."""
     from stock_bars_data_engineering_project_spark.pipeline.corpus_pipeline import (
         refresh_corpus,
         run_corpus_pipeline,
@@ -456,7 +453,7 @@ def test_first_refresh_heals_pre_refresh_stream_ingested_corpus(spark, tmp_path)
     """Docs ingested through the dedup path BEFORE any refresh (the
     dedup_ingest_stream composition: corpus_docs populated, no
     __processed table) must be published by the FIRST refresh — the
-    round-10 reconcile gate treats an absent __processed as 'nothing
+    reconcile gate treats an absent __processed as 'nothing
     processed', not 'nothing missing' (review finding: the old skip
     plus the sync marker would have stranded them permanently)."""
     from stock_bars_data_engineering_project_spark.operators.incremental_dedup import (
@@ -492,7 +489,7 @@ def test_first_refresh_heals_pre_refresh_stream_ingested_corpus(spark, tmp_path)
 def test_noop_replay_churns_no_versions(spark, tmp_path):
     """A replayed committed batch must not grow ANY state table: no new
     __processed member, no __sync rewrite, no corpus/published version
-    (round-10 review finding: empty appends churned a version per
+    (empty appends churned a version per
     redelivery until the manifest-limit collapse paid an O(table)
     rewrite)."""
     from stock_bars_data_engineering_project_spark.pipeline.corpus_pipeline import (

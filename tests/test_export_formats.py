@@ -1,18 +1,12 @@
-"""JSONL / ORC interchange: round-trips, corrupt-line audit, shard control."""
+"""JSONL corpus export: round-trip and shard control."""
 
 from __future__ import annotations
 
 import glob
 import os
 
-from pyspark.sql import functions as F
-
-from stock_bars_data_engineering_project_spark.sinks.export import export_jsonl, export_orc
-from stock_bars_data_engineering_project_spark.sources.readers import (
-    load_table,
-    read_jsonl,
-    read_orc,
-)
+from stock_bars_data_engineering_project_spark.sinks.export import export_jsonl
+from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,41 +17,7 @@ def test_jsonl_roundtrip_and_shard_count(spark, tmp_path):
     export_jsonl(docs, out, n_shards=4, compression="gzip")
     shards = glob.glob(os.path.join(out, "part-*.json.gz"))
     assert len(shards) == 4
-    back = read_jsonl(
-        spark, out, schema="doc_id long, text string, source string"
-    )
-    got = {(r.doc_id, r.text, r.source) for r in back.drop("_corrupt_record").collect()}
+    back = spark.read.schema("doc_id long, text string, source string").json(out)
+    got = {(r.doc_id, r.text, r.source) for r in back.collect()}
     want = {(r.doc_id, r.text, r.source) for r in docs.collect()}
     assert got == want
-
-
-def test_jsonl_corrupt_lines_audited_not_fatal(spark, tmp_path):
-    p = tmp_path / "in"
-    p.mkdir()
-    (p / "a.jsonl").write_text(
-        '{"doc_id": 1, "text": "ok"}\n'
-        "THIS IS NOT JSON\n"
-        '{"doc_id": 2, "text": "also ok"}\n'
-    )
-    df = read_jsonl(spark, str(p), schema="doc_id long, text string")
-    rows = df.collect()
-    good = [r for r in rows if r._corrupt_record is None]
-    bad = [r for r in rows if r._corrupt_record is not None]
-    assert {r.doc_id for r in good} == {1, 2}
-    assert len(bad) == 1 and "NOT JSON" in bad[0]._corrupt_record
-
-
-def test_orc_roundtrip_partitioned(spark, tmp_path):
-    docs = load_table(spark, SF, "documents").select("doc_id", "text", "source")
-    out = str(tmp_path / "orc")
-    export_orc(docs, out, partition_by=("source",))
-    # hive layout: one directory per source value
-    parts = {d for d in os.listdir(out) if d.startswith("source=")}
-    assert parts == {
-        f"source={r.source}" for r in docs.select("source").distinct().collect()
-    }
-    back = read_orc(spark, out)
-    assert back.count() == docs.count()
-    # predicate on the partition column prunes to one directory
-    one = back.filter(F.col("source") == sorted(parts)[0].split("=")[1])
-    assert one.count() == docs.filter(F.col("source") == sorted(parts)[0].split("=")[1]).count()

@@ -12,13 +12,11 @@ from stock_bars_data_engineering_project_spark.operators.incremental_ann import 
     ann_query,
     build_ann_index,
     ingest_vectors,
-    maintain_ann_index,
 )
 from stock_bars_data_engineering_project_spark.operators.index_maint import (
     IVF,
     apply_deletes,
     delete_ids,
-    index_occupancy,
 )
 from stock_bars_data_engineering_project_spark.operators.similarity import ivf_topk
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
@@ -53,7 +51,7 @@ def test_build_ingest_matches_oneshot(spark, emb, tmp_path):
     assert _rows(got) == _rows(want)
 
 
-def test_ingest_idempotent_and_occupancy(spark, emb, tmp_path):
+def test_ingest_idempotent(spark, emb, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
@@ -62,11 +60,8 @@ def test_ingest_idempotent_and_occupancy(spark, emb, tmp_path):
     before = _rows(wh.read("idx").select("vec_id", "cid"))
     ingest_vectors(wh, second, "idx")  # replay
     assert _rows(wh.read("idx").select("vec_id", "cid")) == before
-    # every corpus vector is in exactly one list; skew metric present
-    occ = index_occupancy(wh, "idx", IVF)
-    total = occ.agg(F.sum("n_rows")).first()[0]
-    assert total == emb.count()
-    assert occ.select("skew_ratio").first()[0] >= 1.0
+    # every corpus vector is in exactly one list
+    assert len(before) == len({vec_id for vec_id, _ in before}) == emb.count()
 
 
 def test_tombstone_delete_and_apply(spark, emb, tmp_path):
@@ -128,35 +123,3 @@ def test_probe_scan_partition_prunes(spark, emb, tmp_path):
         .toString()
     )
     assert "PartitionFilters" in plan and "cid" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_maintain_index_policy(spark, emb, tmp_path):
-    """maintain_ann_index: applies tombstones, reads LIVE skew, and
-    retrains only past the policy threshold — the explicit form of the
-    module's drift contract."""
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_ann_index(wh, emb, "idx", centroid_stride=40, refine_iters=1)
-    delete_ids(wh, [r.vec_id for r in emb.limit(5).collect()], "idx", IVF)
-
-    # lenient policy: tombstones fold, no retrain, answers preserved
-    queries = emb.filter(F.col("vec_id") >= 5).limit(3)
-    before = _rows(ann_query(wh, queries, "idx", k=5, nprobe=3))
-    res = maintain_ann_index(wh, "idx", max_skew=1e9)
-    assert res["rebuilt"] is False and res["skew_ratio"] >= 1.0
-    assert not wh.exists("idx__deleted")
-    assert _rows(ann_query(wh, queries, "idx", k=5, nprobe=3)) == before
-
-    # strict policy: any skew > 1 forces a retrain; the quantizer is
-    # rebuilt from the surviving corpus and every survivor re-assigns
-    res2 = maintain_ann_index(wh, "idx", max_skew=1.0000001,
-                              centroid_stride=40, refine_iters=1)
-    if res2["rebuilt"]:
-        assert wh.read("idx").count() == emb.count() - 5
-        occ = index_occupancy(wh, "idx", IVF).select("skew_ratio").first()[0]
-        assert occ >= 1.0
-    # live vs physical occupancy: tombstones shrink the live view only
-    delete_ids(wh, [r.vec_id for r in emb.limit(20).collect()][5:10],
-               "idx", IVF)
-    phys = index_occupancy(wh, "idx", IVF).agg(F.sum("n_rows")).first()[0]
-    live = index_occupancy(wh, "idx", IVF, live=True).agg(F.sum("n_rows")).first()[0]
-    assert phys - live == 5

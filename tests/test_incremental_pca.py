@@ -6,10 +6,14 @@ persisted state matches the one-shot fit, and the loud guards fire."""
 
 from __future__ import annotations
 
+import contextlib
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from stock_bars_data_engineering_project_spark.functions.hashing import content_epoch
 from stock_bars_data_engineering_project_spark.operators.incremental_pca import (
     ingest_pca_batch,
     pca_moments_state,
@@ -68,6 +72,45 @@ def test_redelivery_is_exactly_idempotent(spark, emb, tmp_path):
     after = {r.i: r.v for r in wh.read("pca_moments").collect()}
     assert e1 == e2
     assert before == after  # bit-identical, not merely close
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_redelivery_runs_only_the_content_address(spark, emb, tmp_path):
+    """A redelivered batch is recognized by a filesystem probe of its
+    epoch partition: it submits exactly the jobs ``content_epoch``
+    alone submits on that batch, and nothing is read or written."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "pca_wh_jobs"))
+    batch = emb.filter(F.col("vec_id") % 3 == 0)
+    ingest_pca_batch(wh, batch, dim=DIM)
+    versions = wh.versions("pca_moments")
+
+    sc = spark.sparkContext
+    with _job_group(sc, "pca-epoch-only"):
+        content_epoch(batch, "vec_id")
+    with _job_group(sc, "pca-redelivery"):
+        ingest_pca_batch(wh, batch, dim=DIM)
+    # the status store is fed in event order: once the control job
+    # shows, every earlier job shows too
+    with _job_group(sc, "pca-control"):
+        spark.range(1).collect()
+    deadline = time.time() + 10
+    while not sc.statusTracker().getJobIdsForGroup("pca-control"):
+        assert time.time() < deadline, "the control job never reached the status store"
+        time.sleep(0.05)
+    alone = sc.statusTracker().getJobIdsForGroup("pca-epoch-only")
+    redelivered = sc.statusTracker().getJobIdsForGroup("pca-redelivery")
+    assert len(alone) >= 1
+    assert len(redelivered) == len(alone)
+    assert wh.versions("pca_moments") == versions
 
 
 def test_guards(spark, emb, tmp_path):

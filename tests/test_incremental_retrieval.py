@@ -18,9 +18,7 @@ from stock_bars_data_engineering_project_spark.operators.index_maint import (
     apply_deletes,
     build_lexical_index,
     delete_ids,
-    index_occupancy,
     ingest_docs,
-    maintain_bucketed_index,
     postings_table,
 )
 from stock_bars_data_engineering_project_spark.operators.retrieval import bm25_topk
@@ -141,18 +139,14 @@ def test_null_doc_id_rejected_loudly(spark, tmp_path):
             F.col("doc_id").alias("query_id"), "text"), table="bm", b=1.5)
 
 
-def test_occupancy_and_compaction_preserve_answers(spark, tmp_path):
-    """index_occupancy covers every bucket; warehouse compaction of the
-    append-accumulated postings (the small-files bound for a
-    long-lived index) must not change any answer."""
+def test_compaction_preserves_answers(spark, tmp_path):
+    """Warehouse compaction of the append-accumulated postings (the
+    small-files bound for a long-lived index) must not change any
+    answer."""
     corpus, queries = _corpus_and_queries(spark)
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     build_lexical_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), "bm", BM25)
     ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "bm", BM25)
-
-    occ = index_occupancy(wh, "bm", BUCKETED).collect()
-    assert sum(r.n_rows for r in occ) == wh.read("bm__postings").count()
-    assert all(r.skew_ratio >= 1.0 for r in occ)
 
     before = _rows(bm25_query(wh, queries, table="bm", k=10))
     wh.compact("bm__postings")  # inherits the bkt hive layout
@@ -196,56 +190,3 @@ def test_tombstone_delete_and_apply(spark, tmp_path):
     # after apply, a deleted id re-ingests as a fresh document
     assert ingest_docs(wh, corpus.filter(F.col("doc_id") == dead_ids[0]),
                        "bm", BM25) == 1
-
-
-def test_maintain_bm25_policy(spark, tmp_path):
-    """maintain_bucketed_index on BM25: folds tombstones, reads the
-    skew, and re-buckets only past the policy threshold, with the
-    stronger law the lexical rebuild affords over the ANN retrain: re-bucketing is ANSWER-PRESERVING (bucket
-    ids prune, never score) and publishes atomically via the __meta
-    generation pointer."""
-    corpus, queries = _corpus_and_queries(spark)
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_lexical_index(wh, corpus, "bm", BM25, n_buckets=16)
-    dead = [r.doc_id for r in corpus.limit(5).collect()]
-    delete_ids(wh, dead, "bm", BUCKETED)
-    before = _rows(bm25_query(wh, queries, table="bm", k=10))
-
-    # lenient policy: tombstones fold, no rebuild, answers preserved
-    res = maintain_bucketed_index(wh, "bm", max_skew=1e9)
-    assert res["rebuilt"] is False and res["skew_ratio"] >= 1.0
-    assert res["n_buckets"] == 16
-    assert not wh.exists("bm__deleted")
-    assert wh.read("bm__postings").filter(
-        F.col("doc_id").isin(dead)
-    ).count() == 0
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == before
-
-    # strict policy: any skew > 1 re-buckets into factor x more buckets;
-    # generation advances, the old table is swept, answers are EQUAL
-    res2 = maintain_bucketed_index(wh, "bm", max_skew=1.0000001)
-    assert res2["rebuilt"] is True and res2["n_buckets"] == 32
-    assert wh.exists("bm__postings_g1") and not wh.exists("bm__postings")
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == before
-    occ = index_occupancy(wh, "bm", BUCKETED).collect()
-    assert sum(r.n_rows for r in occ) == wh.read("bm__postings_g1").count()
-
-    # ingest after a rebuild lands in the NEW generation at the new
-    # bucketing, and the index answers like the one-shot over the union
-    refreshed = corpus.filter(F.col("doc_id").isin(dead))
-    assert ingest_docs(wh, refreshed, "bm", BM25) == len(dead)
-    got = _rows(bm25_query(wh, queries, table="bm", k=10))
-    want = _rows(bm25_topk(corpus, queries, k=10))
-    assert got == want
-
-    # crash-atomicity: a cold orphan generation (rebuild that died
-    # before the meta swap) is invisible to queries and swept by the
-    # next maintenance call
-    wh.overwrite(wh.read("bm__postings_g1"), "bm__postings_g7")
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == got
-    maintain_bucketed_index(wh, "bm", max_skew=1e9)
-    assert not wh.exists("bm__postings_g7")
-    assert wh.exists("bm__postings_g1")
-
-    with pytest.raises(ValueError, match="rebucket_factor"):
-        maintain_bucketed_index(wh, "bm", rebucket_factor=1)

@@ -34,7 +34,7 @@ def _bm25(wh, table):
         f"{table}__docs",
     )
     wh.overwrite(
-        spark.createDataFrame([(2, 0)], "n_buckets int, postings_gen int"),
+        spark.createDataFrame([(2,)], "n_buckets int"),
         f"{table}__meta",
     )
     return [f"{table}__postings", f"{table}__docs"]
@@ -55,7 +55,7 @@ def _trgm(wh, table):
         f"{table}__docs",
     )
     wh.overwrite(
-        spark.createDataFrame([(2, 0)], "n_buckets int, postings_gen int"),
+        spark.createDataFrame([(2,)], "n_buckets int"),
         f"{table}__meta",
     )
     return [f"{table}__postings", f"{table}__docs"]

@@ -1,6 +1,6 @@
 """Incrementally maintained bigram-LM state (operators/lm_state.py):
 two-batch ingest ≡ one-shot counts, redelivery idempotence, read-time
-pruning, compaction invariance, and the end-to-end law — scoring with
+pruning, and the end-to-end law — scoring with
 the incrementally-built frozen model equals self-modeling the same
 corpus."""
 
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.lm_state import (
-    compact_lm_state,
     ingest_lm_batch,
     lm_state,
 )
@@ -71,7 +70,7 @@ def test_redelivery_is_a_noop(spark, tmp_path, corpus):
 
 
 def test_redelivery_writes_nothing(spark, tmp_path, corpus):
-    """Round-10 opt pin: a present (content-addressed) epoch partition
+    """A present (content-addressed) epoch partition
     short-circuits BEFORE any write — redelivery commits no new table
     version, where the former keyed merge re-wrote the identical
     partition as a fresh snapshot."""
@@ -97,15 +96,6 @@ def test_read_time_pruning(spark, tmp_path, corpus):
     # raw singletons are still in the store — threshold is read-time
     _, b1 = lm_state(wh, min_count=1)
     assert b1.count() == 3
-
-
-def test_compaction_preserves_state(spark, tmp_path, corpus):
-    wh = _wh(spark, tmp_path, "compact")
-    ingest_lm_batch(wh, corpus.filter("doc_id <= 2"))
-    ingest_lm_batch(wh, corpus.filter("doc_id > 2"))
-    before = _counts(*lm_state(wh, min_count=1))
-    compact_lm_state(wh)
-    assert _counts(*lm_state(wh, min_count=1)) == before
 
 
 def test_frozen_model_scoring_equals_self_model(spark, tmp_path, corpus):

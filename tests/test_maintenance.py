@@ -1,20 +1,11 @@
-"""Table-maintenance and bucketing tests: compaction, vacuum, and the
-exchange-free co-bucketed join — the write-side scale levers."""
+"""Table-maintenance tests: compaction, vacuum, schema drift and the
+snapshot isolation of the write verbs."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
 from pyspark.sql import functions as F
 
-from stock_bars_data_engineering_project_spark.sinks.bucketed import (
-    co_bucketed_join,
-    write_bucketed,
-)
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
-
-SF_SMALL = "/root/testdata/sf0.001"
 
 
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
@@ -55,37 +46,6 @@ def test_vacuum_drops_old_versions_keeps_current(spark, tmp_path):
         raise AssertionError("vacuumed version should not be readable")
     except Exception:
         pass
-
-
-def test_cobucketed_join_is_exchange_free(spark):
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
-        F.col("o_orderkey").alias("orderkey"), "o_totalprice"
-    )
-    lineitem = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("orderkey"), "l_quantity"
-    )
-    write_bucketed(orders, "b_orders", ("orderkey",), 8, sort_cols=("orderkey",))
-    write_bucketed(lineitem, "b_lineitem", ("orderkey",), 8, sort_cols=("orderkey",))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try:
-        # force the fact-fact path (broadcast would hide the exchange)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        joined = co_bucketed_join(spark, "b_orders", "b_lineitem", on=["orderkey"])
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        # the whole point: bucketed scans feed the join with NO shuffle
-        assert "Exchange" not in plan
-        expected = lineitem.join(orders, on=["orderkey"]).count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_merge_schema_drift_backfills_nulls(spark, tmp_path):
@@ -142,7 +102,7 @@ def test_reader_pinned_before_overwrite_survives_flip(spark, tmp_path):
 
 
 def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
-    """Round-10 merge contract: a partition-pruned merge WRITES only the
+    """Merge contract: a partition-pruned merge WRITES only the
     touched partitions — untouched partitions carry into the new
     snapshot as hardlinks of the previous version's immutable files
     (same inode, zero data bytes moved), content is exactly the
@@ -208,8 +168,7 @@ def test_merge_on_drift_appended_history_falls_back_to_full(spark, tmp_path):
     """A pruned merge must NOT hardlink drift-appended manifest members
     into one directory (a single-dir parquet read samples one footer
     and silently drops/mis-aligns the drifted column): mixed-schema
-    histories fall back to the full rewrite, which re-aligns them
-    (round-10 review finding)."""
+    histories fall back to the full rewrite, which re-aligns them."""
     wh = ParquetWarehouse(spark, str(tmp_path))
     wh.overwrite(
         spark.createDataFrame([(i, i % 2, "a") for i in range(20)],

@@ -155,102 +155,3 @@ def test_warehouse_snapshot_roundtrip(spark, tmp_path, dim):
         (2, "B", 25.0, 2, None, True),
         (3, "C", 30.0, 1, None, True),
     ]
-
-
-# --- warehouse-backed store (sinks/scd2_store.py) ---------------------------
-
-
-def test_store_chain_equals_pure_operator_chain(spark, tmp_path):
-    """The split-layout store must produce EXACTLY the frame the pure
-    scd2_init/scd2_merge chain produces over the same batches — layout
-    is a physical choice, not a semantic one."""
-    from stock_bars_data_engineering_project_spark.sinks.scd2_store import (
-        Scd2Store,
-    )
-    from stock_bars_data_engineering_project_spark.sinks.warehouse import (
-        ParquetWarehouse,
-    )
-
-    batches = [
-        [(1, "A", 10.0), (2, "B", 20.0), (3, "C", 30.0)],
-        [(1, "A", 10.0), (2, "B", 25.0), (4, "D", 40.0)],
-        [(2, "X", 25.0), (3, "C", 31.0)],
-        [(1, "A2", 10.0), (4, "D", 40.0)],
-    ]
-    frames = [spark.createDataFrame(b, SCHEMA) for b in batches]
-
-    store = Scd2Store(
-        ParquetWarehouse(spark, str(tmp_path / "wh")), "dim"
-    )
-    state = None
-    for stamp, b in enumerate(frames, start=1):
-        store.apply(b, ("k",), ("status", "price"), stamp)
-        state = (
-            scd2_init(b, ("k",), stamp)
-            if state is None
-            else scd2_merge(state, b, ("k",), ("status", "price"), stamp)
-        )
-    assert _rows(store.read()) == _rows(state)
-    assert _rows(store.read_current()) == _rows(
-        state.filter("is_current")
-    )
-
-
-def test_store_history_is_append_only_o_batch(spark, tmp_path):
-    """The layout pin: each batch rewrites ONLY the current table and
-    APPENDS only that batch's closed rows to history — the history
-    snapshot is a manifest chain whose newest member carries just the
-    delta, and reading the current slice lists no history file."""
-    from stock_bars_data_engineering_project_spark.sinks.scd2_store import (
-        Scd2Store,
-    )
-    from stock_bars_data_engineering_project_spark.sinks.warehouse import (
-        ParquetWarehouse,
-    )
-
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    store = Scd2Store(wh, "dim")
-    n_keys = 50
-    b0 = spark.createDataFrame(
-        [(k, "S", float(k)) for k in range(n_keys)], SCHEMA
-    )
-    store.apply(b0, ("k",), ("status", "price"), 1)
-
-    hist_members = []
-    prices = {k: float(k) for k in range(n_keys)}
-    for stamp in range(2, 6):
-        # each batch bumps exactly 2 keys CUMULATIVELY (prior changes
-        # carry forward, so nothing reverts) -> exactly 2 closed rows
-        for k in range(n_keys):
-            if k % 25 == stamp % 25:
-                prices[k] += 1.0
-        batch = spark.createDataFrame(
-            [(k, "S", prices[k]) for k in range(n_keys)], SCHEMA
-        )
-        store.apply(batch, ("k",), ("status", "price"), stamp)
-        hist_members.append(len(wh.data_files(store.hist_table)))
-
-    # history grew file-monotonically (append-only manifest chain): each
-    # batch ADDED files, never rewrote the accumulated set
-    assert hist_members == sorted(hist_members)
-    latest = wh.latest_version(store.hist_table)
-    chain = wh._manifest_members(store.hist_table, latest)
-    # one member per history-writing batch (batch 2's base + 3 appends)
-    assert len(chain) == 4
-    # the newest member dir holds ONLY this batch's delta (2 closed rows)
-    import os
-
-    newest_files = [
-        f
-        for f in wh.data_files(store.hist_table)
-        if f"{os.sep}{latest}{os.sep}" in f or f"/{latest}/" in f
-    ]
-    newest = spark.read.parquet(*newest_files)
-    assert newest.count() == 2
-    # full history = 4 batches x 2 closed versions
-    assert store.read().filter("not is_current").count() == 8
-    # the hot read never lists a history file
-    cur_files = set(wh.data_files(store.cur_table))
-    hist_files = set(wh.data_files(store.hist_table))
-    assert not cur_files & hist_files
-    assert store.read_current().count() == n_keys

@@ -1,91 +1,14 @@
-"""SemDeDup-style semantic dedup: within-cluster pruning laws."""
+"""Embedding-space decontamination (operators/semantic.py): the exact
+and blocked arms against a Python argmax replay, and the guards."""
 
 from __future__ import annotations
-
-import itertools
-import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from stock_bars_data_engineering_project_spark.operators.semantic import semantic_dedup
 from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
-
-
-def _brute_reference(rows, threshold, centroids_of):
-    """Python replay: within-cell cosine pairs -> union-find -> min-id
-    keeper."""
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb)
-
-    parent = {r.vec_id: r.vec_id for r in rows}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in itertools.combinations(rows, 2):
-        if centroids_of[a.vec_id] != centroids_of[b.vec_id]:
-            continue
-        c = round(cos(a.embedding, b.embedding), 6)
-        if c >= threshold or math.isclose(c, threshold, abs_tol=5e-7):
-            ra, rb = find(a.vec_id), find(b.vec_id)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    # full path compress; label = min reachable == find (min-merged)
-    return {r.vec_id: find(r.vec_id) for r in rows}
-
-
-def test_semantic_dedup_matches_python_union_find(spark):
-    emb = load_table(spark, SF, "embeddings").limit(300)
-    out = semantic_dedup(emb, threshold=0.4, centroid_stride=50)
-    got = {r.vec_id: (r.cluster_id, r.keep) for r in out.collect()}
-
-    cids = {
-        r.vec_id: r.cid
-        for r in out.select("vec_id", "cid").collect()
-    }
-    rows = emb.select("vec_id", "embedding").collect()
-    labels = _brute_reference(rows, 0.4, cids)
-    assert {v: l for v, (l, _) in got.items()} == labels
-    # keep = exactly the min-id member of each label group
-    keepers = {v for v, (l, k) in got.items() if k}
-    assert keepers == set(labels.values())
-    # every vector labeled, exactly once
-    assert set(got) == {r.vec_id for r in rows}
-
-
-def test_semantic_dedup_identical_vectors_collapse(spark):
-    """Duplicated vectors sharing a cell collapse to one keeper; a
-    vector in another cell survives (the documented boundary trade)."""
-    base = [float(i) for i in range(8)]
-    rows = [(0, base), (1, base), (2, base)]  # same cell (centroid = id 0)
-    rows.append((50, [x + 0.001 for x in base]))  # other cell: centroid 50
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = {
-        r.vec_id: (r.cid, r.cluster_id, r.keep)
-        for r in semantic_dedup(emb, threshold=0.999, centroid_stride=50).collect()
-    }
-    # 0,1,2 share centroid 0's cell and are identical -> one keeper (0)
-    assert out[0][2] and not out[1][2] and not out[2][2]
-    assert out[0][1] == out[1][1] == out[2][1] == 0
-    # 50 seeds its own centroid -> own cell -> survives despite cosine≈1
-    assert out[50] == (50, 50, True)
-
-    with pytest.raises(ValueError, match="threshold"):
-        semantic_dedup(emb, threshold=1.5)
-
-
-# ---------------------------------------------------------------------------
-# Embedding-space decontamination
-# ---------------------------------------------------------------------------
 
 
 def _np_best(train_rows, eval_rows):

@@ -1,6 +1,5 @@
 """Gap-based sessionization laws: boundary semantics, Python replay,
-and the native-session-window streaming twin (stream ≡ batch for every
-watermark-closed session)."""
+the per-session stats chain, and the guards."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ from pyspark.sql import functions as F
 from stock_bars_data_engineering_project_spark.functions.scalars import event_micros
 from stock_bars_data_engineering_project_spark.operators.sessionize import (
     session_stats,
-    session_stats_stream,
     sessionize,
 )
 from stock_bars_data_engineering_project_spark.sources.readers import load_table
@@ -93,57 +91,6 @@ def test_session_stats_chain_and_duration(spark):
     assert out[1].seq == "view,click" and out[1].n_events == 2
     assert out[1].duration_us == 600 * 1_000_000
     assert out[2].seq == "purchase" and out[2].duration_us == 0
-
-
-def test_session_stats_stream_matches_batch_closed_sessions(spark, tmp_path):
-    """availableNow drain: every session whose window closed past the
-    final watermark is emitted exactly as the batch form computes it —
-    same start, end = batch end + gap (the session_window definition),
-    same count — and nothing is emitted that batch doesn't have."""
-    ev = load_table(spark, SF, "events").select(
-        "user_id", "event_id", "ts", "event_type"
-    )
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    outp = str(tmp_path / "out")
-    ev.coalesce(1).write.parquet(src)
-
-    stream = session_stats_stream(
-        spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
-        gap_minutes=720,
-        watermark="1 hour",
-    )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", outp)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.start_us): (r.end_us, r.n_events)
-        for r in spark.read.parquet(outp).collect()
-    }
-    assert got, "no sessions emitted — watermark never closed anything"
-
-    gap_us = 720 * 60 * 1_000_000
-    batch = session_stats(ev, gap_minutes=720).collect()
-    max_us = max(r.end_us for r in batch)
-    wm_us = max_us - 3600 * 1_000_000
-    want = {
-        (r.user_id, r.start_us): (r.end_us + gap_us, r.n_events)
-        for r in batch
-        if r.end_us + gap_us < wm_us  # closed strictly before watermark
-    }
-    for k, v in want.items():
-        assert got.get(k) == v, k
-    batch_all = {
-        (r.user_id, r.start_us): (r.end_us + gap_us, r.n_events)
-        for r in batch
-    }
-    for k, v in got.items():
-        assert batch_all.get(k) == v, k
 
 
 def test_sessionize_guards(spark):

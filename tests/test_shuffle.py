@@ -1,7 +1,8 @@
 """Deterministic training-order shuffle: the (shard, order_key) pair
 must replay one fixed global permutation — engine-portable (md5),
-stable across runs/partitionings, reseedable per epoch — and the
-materialized layout must stream back in exactly that order."""
+stable across runs/partitionings, reseedable per epoch, balanced across
+shards, and NULL ids must fail loudly — and the layout materialized the
+way shuffle_shards documents must stream back in exactly that order."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.sampling import (
     shuffle_shards,
-    write_shuffled,
 )
 from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
@@ -89,7 +89,13 @@ def test_shards_are_balanced(spark, docs):
 
 def test_write_shuffled_streams_in_order(spark, docs, tmp_path):
     path = str(tmp_path / "shuffled")
-    write_shuffled(docs, path, n_shards=4, seed="ep0")
+    (
+        shuffle_shards(docs, n_shards=4, seed="ep0")
+        .repartition(4, "shard")
+        .sortWithinPartitions("shard", "order_key")
+        .write.partitionBy("shard")
+        .parquet(path)
+    )
     streamed = []
     for s in range(4):
         part = spark.read.parquet(f"{path}/shard={s}")

@@ -306,46 +306,6 @@ def test_vector_storage_utilities(spark):
         truncate_dims(F.col("embedding"), 0)
 
 
-def test_recall_at_k(spark):
-    """recall@k laws: self-recall 1.0, disjoint 0.0, partial overlap
-    counts only rank<=k rows, missing-query absence, guards."""
-    import pytest
-
-    from stock_bars_data_engineering_project_spark.operators.similarity import (
-        recall_at_k,
-    )
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, "query_id long, vec_id long, rank int"
-        )
-
-    exact = frame(
-        [(1, 10, 1), (1, 11, 2), (1, 12, 3), (2, 20, 1), (2, 21, 2)]
-    )
-    # query 1: finds 10 and 12 in top-3, 99 is noise; rank-4 hit 11
-    # must NOT count at k=3. query 2: fully disjoint.
-    approx = frame(
-        [(1, 10, 1), (1, 99, 2), (1, 12, 3), (1, 11, 4), (2, 90, 1), (2, 91, 2)]
-    )
-    got = {r.query_id: r for r in recall_at_k(approx, exact, k=3).collect()}
-    assert got[1].n_exact == 3 and got[1].n_hit == 2
-    assert got[1].recall == pytest.approx(2 / 3)
-    assert got[2].n_exact == 2 and got[2].n_hit == 0 and got[2].recall == 0.0
-
-    # self-recall is exactly 1.0 for every query
-    self_r = recall_at_k(exact, exact, k=3).collect()
-    assert all(r.recall == 1.0 for r in self_r)
-
-    # a query with no exact row emits nothing
-    assert 3 not in {
-        r.query_id
-        for r in recall_at_k(frame([(3, 1, 1)]), exact, k=3).collect()
-    }
-    with pytest.raises(ValueError, match="k must be positive"):
-        recall_at_k(approx, exact, k=0)
-
-
 def test_kmeans_exact_mean_matches_sql_replay(spark):
     """Bit-exact cross-engine gate for the training loop, moved here
     from the driver row when ann_topk_suite's registered arm switched

@@ -1,8 +1,5 @@
-"""Mergeable sketch state (operators/sketches.py): folding batch
-increments must equal one pass over the union; the exact-by-contract
-outputs (HLL below saturation, KLL n/min/max, Theta in exact mode)
-must equal a direct exact recompute; state must survive a parquet
-round-trip and keep merging."""
+"""Theta-state retention (operators/sketches.py): in exact mode the
+day-over-day set expressions equal the raw-row member-set algebra."""
 
 from __future__ import annotations
 
@@ -11,96 +8,17 @@ from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.sketches import (
     member_day_sets,
-    merge_sketch_states,
     retention_day_over_day,
-    sketch_increment,
-    sketch_metrics,
 )
 from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
 SF = "/root/testdata/sf0.001"
 
 
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted((tuple(str(r[c]) for c in cols) for r in df.collect()), key=repr)
-
-
 @pytest.fixture(scope="module")
 def events(spark):
     return load_table(spark, SF, "events").select(
         "event_id", "ts", "user_id", "value"
-    )
-
-
-def test_fold_equals_direct(spark, events):
-    """3-batch fold ≡ single pass. HLL union-of-parts is
-    register-identical to one pass (max-per-register is associative);
-    KLL groups here are far below k=200 so no compaction occurs and
-    quantiles are exact; Theta is in exact mode below 2^12 entries —
-    so the METRICS match exactly, not just approximately."""
-    direct = sketch_metrics(sketch_increment(events))
-    parts = [events.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    state = sketch_increment(parts[0])
-    for p in parts[1:]:
-        state = merge_sketch_states(state, sketch_increment(p))
-    assert _rows(sketch_metrics(state)) == _rows(direct)
-
-
-def test_fold_order_does_not_matter(spark, events):
-    a = events.filter(F.col("event_id") % 2 == 0)
-    b = events.filter(F.col("event_id") % 2 == 1)
-    ab = merge_sketch_states(sketch_increment(a), sketch_increment(b))
-    ba = merge_sketch_states(sketch_increment(b), sketch_increment(a))
-    assert _rows(sketch_metrics(ab)) == _rows(sketch_metrics(ba))
-
-
-def test_exact_contracts_vs_direct_recompute(spark, events):
-    """Per-(user, day) group: uniq estimates equal the exact distinct
-    count (groups are tiny at sf0.001 -> both HLL and Theta exact),
-    kll_n equals the row count, kll_min/kll_max equal the true value
-    extrema, and interior quantiles are monotone within [min, max]."""
-    m = sketch_metrics(sketch_increment(events)).alias("m")
-    exact = (
-        events.groupBy("user_id", F.to_date("ts").alias("day"))
-        .agg(
-            F.count_distinct("event_id").alias("x_uniq"),
-            F.count(F.lit(1)).alias("x_n"),
-            F.min("value").alias("x_min"),
-            F.max("value").alias("x_max"),
-        )
-        .alias("x")
-    )
-    j = m.join(exact, ["user_id", "day"], "full_outer")
-    bad = j.filter(
-        (F.col("uniq_hll") != F.col("x_uniq"))
-        | (F.col("uniq_theta") != F.col("x_uniq"))
-        | (F.col("kll_n") != F.col("x_n"))
-        | (F.col("kll_min") != F.col("x_min"))
-        | (F.col("kll_max") != F.col("x_max"))
-        | (F.col("q25") > F.col("q50"))
-        | (F.col("q50") > F.col("q75"))
-        | (F.col("q25") < F.col("x_min"))
-        | (F.col("q75") > F.col("x_max"))
-        | F.col("x_n").isNull()
-        | F.col("n_rows").isNull()
-    )
-    assert bad.count() == 0
-
-
-def test_state_survives_parquet_roundtrip(spark, events, tmp_path):
-    """The warehouse story: persist day-1..15 state, read it back, fold
-    in the rest, and the result still equals a direct single pass —
-    binary sketch state is storage-stable, so incremental maintenance
-    never re-reads history."""
-    early = events.filter(F.to_date("ts") <= F.lit("2024-01-15"))
-    late = events.filter(F.to_date("ts") > F.lit("2024-01-15"))
-    path = str(tmp_path / "sketch_state")
-    sketch_increment(early).write.parquet(path)
-    stored = spark.read.parquet(path)
-    folded = merge_sketch_states(stored, sketch_increment(late))
-    assert _rows(sketch_metrics(folded)) == _rows(
-        sketch_metrics(sketch_increment(events))
     )
 
 

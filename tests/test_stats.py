@@ -29,7 +29,6 @@ def test_approx_percentile_error_bound(spark):
 
 def test_stable_split_deterministic_and_stable(spark):
     from stock_bars_data_engineering_project_spark.operators.sampling import (
-        deterministic_sample,
         stable_split,
     )
 
@@ -50,17 +49,13 @@ def test_stable_split_deterministic_and_stable(spark):
     assert 0.85 < c["train"] / n < 0.95
     assert c["val"] > 0 and c["test"] > 0
 
-    # sample is a strict subset rule, consistent with buckets
-    s = deterministic_sample(docs, 0.25)
-    assert 0.15 < s.count() / docs.count() < 0.35
-
 
 def _budget_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, n long")
 
 
 def test_token_budget_edges(spark):
-    """token_budget_sample edge cases (ADVICE round 1): a zero budget
+    """token_budget_sample edge cases: a zero budget
     takes nothing from a stratum, unlisted strata fall to
     default_budget, and the document that CROSSES the budget boundary
     is kept (budgets are floors)."""
@@ -147,7 +142,7 @@ def test_token_budget_raises_on_temp_column_collision(spark):
 
 
 def test_warehouse_write_lock_blocks_second_writer(spark, tmp_path):
-    """Concurrent-writer guard (ADVICE round 1): a held lock makes the
+    """Concurrent-writer guard: a held lock makes the
     second writer fail loudly instead of silently losing the first
     writer's rows; the lock clears after a successful write."""
     import os
@@ -175,7 +170,7 @@ def test_warehouse_write_lock_blocks_second_writer(spark, tmp_path):
 
 
 def test_warehouse_write_lock_transient_contention_retries(spark, tmp_path):
-    """Round 9 contention policy: a writer arriving while another holds
+    """Contention policy: a writer arriving while another holds
     the lock backs off and succeeds once the holder releases (one
     winner + one clean retry, no lost update); a lock held past the
     whole retry budget still fails loudly."""
@@ -584,7 +579,7 @@ def test_mad_outliers_matches_python_replay(spark):
         vs = [v for g, v in rows if g == grp and v is not None]
         med = _med(vs)
         mad = _med([abs(v - med) for v in vs])
-        # MAD=0 degenerate contract (round 9): the count is NULL, not
+        # MAD=0 degenerate contract: the count is NULL, not
         # everything-off-median
         n_out = (
             None
@@ -655,7 +650,7 @@ def test_weighted_sample_k_favors_heavy_and_replays(spark):
     def key(i, w):
         u = (int(hashlib.md5(f"wres:{i}".encode()).hexdigest()[:12], 16)
              % 1_000_000 + 1) / 1_000_000.0
-        # round 9: the monotone-equivalent log form of u**(1/w) — same
+        # The monotone-equivalent log form of u**(1/w) — same
         # order pre-rounding, usable dynamic range at large w
         return round(math.log(u) / w, 9)
 
@@ -667,7 +662,7 @@ def test_weighted_sample_k_favors_heavy_and_replays(spark):
 
 
 def test_weighted_sample_k_large_weights_keep_resolution(spark):
-    """ADVICE round 8: at w ~ 1e6 the old u**(1/w) key collapsed to
+    """At w ~ 1e6 the old u**(1/w) key collapsed to
     ~14 distinct 9dp values and selection degraded to the id tiebreak;
     the log key must keep weight-proportional randomness — the picked
     set follows the hash order, not the lowest ids."""
@@ -721,7 +716,7 @@ def test_sampler_guards_raise_loudly(spark):
 
 
 def test_mad_outliers_degenerate_mad_reports_null(spark):
-    """ADVICE round 8: >50% of a group equal to the median makes MAD=0
+    """When >50% of a group equals the median, MAD=0
     and the fence zero-width — the count must be NULL (undefined), not
     'everything off the median is an outlier'; a healthy group in the
     same frame still counts normally."""

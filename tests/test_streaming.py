@@ -1,5 +1,6 @@
-"""Structured Streaming: windowed aggs vs batch equivalence, and the
-incremental merge stream (exactly-once sink semantics under replay)."""
+"""Structured Streaming: windowed aggs vs batch equivalence, stateful
+dedup and EWMA, stream-static and interval joins, and the rollup
+epoch log (exactly-once state under replay)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse
 from stock_bars_data_engineering_project_spark.sources.readers import load_table
-from stock_bars_data_engineering_project_spark.streaming.incremental import incremental_merge_stream
 from stock_bars_data_engineering_project_spark.streaming.windows import (
     run_stream_to_memory,
     stream_events,
@@ -36,40 +36,6 @@ def test_stream_matches_batch_tumbling(spark, tmp_path):
         for r in tumbling_agg(events, duration="1 day").collect()
     }
     assert got == want
-
-
-def test_incremental_merge_stream_exactly_once(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    events = load_table(spark, SF, "events").select("event_id", "user_id", "ts", "value")
-    first = events.filter(F.col("event_id") < 500)
-    first.write.mode("append").parquet(src)
-
-    incremental_merge_stream(
-        spark, src, first.schema, wh, "ev", keys=("event_id",), checkpoint_dir=ckpt
-    )
-    n1 = wh.read("ev").count()
-    assert n1 == first.count()
-
-    # second drain with NO new files: offsets checkpointed -> no-op
-    incremental_merge_stream(
-        spark, src, first.schema, wh, "ev", keys=("event_id",), checkpoint_dir=ckpt
-    )
-    assert wh.read("ev").count() == n1
-
-    # new file arrives, overlapping keys revised -> merged idempotently
-    second = events.filter(
-        (F.col("event_id") >= 400) & (F.col("event_id") < 700)
-    ).withColumn("value", F.col("value") + 1000)
-    second.write.mode("append").parquet(src)
-    incremental_merge_stream(
-        spark, src, first.schema, wh, "ev", keys=("event_id",), checkpoint_dir=ckpt
-    )
-    final = wh.read("ev")
-    assert final.count() == 700
-    # overlap rows took the revised values
-    assert final.filter((F.col("event_id") == 450) & (F.col("value") >= 1000)).count() == 1
 
 
 def test_stateful_first_seen_dedup(spark, tmp_path):
@@ -195,10 +161,10 @@ def test_streaming_ewma_correct_across_small_arrow_chunks(spark, tmp_path):
 
 
 def test_stream_static_join_matches_batch(spark, tmp_path):
-    """Stream-static enrichment (registry entry consolidated out in
-    round 2 — pinned here instead): a readStream event flow joined to a
-    static dimension inside the streaming query, drained in complete
-    mode, must equal the batch join+agg."""
+    """Stream-static enrichment (no registry entry — pinned here): a
+    readStream event flow joined to a static dimension inside the
+    streaming query, drained in complete mode, must equal the batch
+    join+agg."""
     events = load_table(spark, SF, "events")
     customers = load_table(spark, SF, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -232,7 +198,7 @@ def test_stream_static_join_matches_batch(spark, tmp_path):
 def test_dedup_within_watermark_exactly_once(spark, tmp_path):
     """dropDuplicatesWithinWatermark over an at-least-once source
     (every data file fed twice) must emit each event exactly once
-    (registry entry consolidated out in round 2 — pinned here)."""
+    (no registry entry — pinned here)."""
     import shutil, os
 
     events = load_table(spark, SF, "events").filter(F.col("event_id") < 300)
@@ -384,14 +350,12 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
     """Streamed sketch-extended rollup maintenance: drains fold each
     micro-batch into an _epoch-partitioned increment; the read-time
     combine must equal a direct batch rollup over everything streamed,
-    a replayed epoch must be a no-op (structural idempotence), and
-    compaction must not change the answer."""
+    and a replayed epoch must be a no-op (structural idempotence)."""
     from stock_bars_data_engineering_project_spark.operators.rollup import (
         rollup_increment,
         rollup_metrics,
     )
     from stock_bars_data_engineering_project_spark.streaming.incremental import (
-        compact_rollup_state,
         read_rollup_state,
         rollup_maintenance_stream,
     )
@@ -440,11 +404,6 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
         keys=("user_id", "day", "_epoch"),
         partition_by=("_epoch",),
     )
-    assert _rows(rollup_metrics(read_rollup_state(wh, "roll"))) == want
-
-    # compaction folds the epoch log into the base partition
-    compact_rollup_state(wh, "roll")
-    assert wh.read("roll").select("_epoch").distinct().count() == 1
     assert _rows(rollup_metrics(read_rollup_state(wh, "roll"))) == want
 
 

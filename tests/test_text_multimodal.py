@@ -12,10 +12,6 @@ from stock_bars_data_engineering_project_spark.functions.text import (
 )
 from stock_bars_data_engineering_project_spark.operators.multimodal import (
     attach_binary_payload,
-    decode_image_stub,
-    extract_features,
-    fake_feature_extractor,
-    media_metadata_only,
 )
 
 
@@ -48,56 +44,14 @@ def test_quality_score_bounds(spark):
     assert 0.0 <= rows[1].q < rows[0].q <= 1.0
 
 
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\x89PNG")
-
-
-def test_feature_extractor_deterministic():
-    assert fake_feature_extractor(b"abc") == fake_feature_extractor(b"abc")
-    assert fake_feature_extractor(b"abc") != fake_feature_extractor(b"abd")
-    assert len(fake_feature_extractor(None)) == 16
-
-
-def test_multimodal_pipeline(spark):
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "spark engine")], "doc_id long, text string"
-    )
-    media = attach_binary_payload(docs)
-    feats = extract_features(media).collect()
-    assert {r.media_id for r in feats} == {1, 2}
-    assert all(len(r.features) == 16 for r in feats)
-    assert "payload" not in extract_features(media).columns  # bytes dropped post-extract
-
-    # metadata-only projection never touches payload bytes in the scan
-    import io
-    from contextlib import redirect_stdout
-
-    docs.write.mode("overwrite").parquet("/tmp/mm_media_test")
-    stored = spark.read.parquet("/tmp/mm_media_test")
-    media_stored = attach_binary_payload(stored)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        media_metadata_only(media_stored).explain()
-    assert "payload" not in buf.getvalue() or "ReadSchema" in buf.getvalue()
-
-
-def test_resize_and_frame_sample_plumbing(spark):
+def test_frame_sample_plumbing(spark):
     from stock_bars_data_engineering_project_spark.operators.multimodal import (
-        attach_binary_payload,
-        resize_images,
         sample_frames,
     )
     from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(20)
     media = attach_binary_payload(docs)
-
-    resized = resize_images(media, width=64, height=48)
-    rows = resized.collect()
-    assert len(rows) == 20
-    assert all(r.resized_width == 64 and r.resized_height == 48 for r in rows)
-    assert all(r.payload is not None for r in rows)
 
     frames = sample_frames(media, n_frames=4)
     out = frames.collect()
@@ -108,55 +62,6 @@ def test_resize_and_frame_sample_plumbing(spark):
     for rows in by_media.values():
         assert sorted(r.frame_idx for r in rows) == [0, 1, 2, 3]
         assert all(isinstance(r.frame_payload, (bytes, bytearray)) for r in rows)
-
-
-def test_extract_then_ann_search_composes(spark):
-    """The inference seam feeds similarity search directly: binary ->
-    mapInPandas features -> brute-force cosine top-k. Verifies the
-    schema contract between the two operator families end-to-end."""
-    from pyspark.sql import functions as F
-
-    from stock_bars_data_engineering_project_spark.operators.multimodal import (
-        attach_binary_payload,
-        extract_features,
-    )
-    from stock_bars_data_engineering_project_spark.operators.similarity import cosine_topk
-    from stock_bars_data_engineering_project_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    feats = extract_features(attach_binary_payload(docs)).select(
-        F.col("media_id").alias("vec_id"), F.col("features").alias("embedding")
-    )
-    out = cosine_topk(feats, feats.filter(F.col("vec_id") < 2), k=5).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    for q, rows in by_q.items():
-        assert len(rows) == 5
-        assert all(r.vec_id != q for r in rows)
-
-
-def test_decode_image_gates_on_pil():
-    """decode_image uses the real codec when Pillow is importable and
-    falls through to the loud stub otherwise — never fabricated pixels."""
-    import pytest
-
-    from stock_bars_data_engineering_project_spark.operators.multimodal import (
-        _pil,
-        decode_image,
-    )
-
-    if _pil() is None:
-        with pytest.raises(NotImplementedError):
-            decode_image(b"\x89PNG\r\n\x1a\n")
-    else:
-        import io
-
-        Image = _pil()
-        buf = io.BytesIO()
-        Image.new("RGB", (4, 4)).save(buf, format="PNG")
-        img = decode_image(buf.getvalue())
-        assert img.size == (4, 4)
 
 
 def test_top_gram_share_matches_counter(spark):
@@ -445,6 +350,28 @@ def _make_png(width: int, height: int, pixel_rows) -> bytes:
     )
 
 
+def encode_bmp(rows: list) -> bytes:
+    """Uncompressed 24-bit BMP bytes (BITMAPINFOHEADER, bottom-up,
+    4-byte row padding) from a top-down row-major pixel matrix. Each
+    pixel is an ``(r, g, b)`` triple or a single gray int (encoded as
+    r = g = b, which makes the round-trip luma exact)."""
+    import struct
+
+    h, w = len(rows), len(rows[0])
+    row_size = (3 * w + 3) & ~3
+    img_size = row_size * h
+    off = 14 + 40  # file header + BITMAPINFOHEADER
+    header = struct.pack("<2sIHHI", b"BM", off + img_size, 0, 0, off)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size, 2835, 2835, 0, 0)
+    body = bytearray()
+    for row in reversed(rows):  # BMP stores rows bottom-up
+        for p in row:
+            r, g, b = (p, p, p) if isinstance(p, int) else p
+            body += bytes((b, g, r))  # little-endian channel order
+        body += b"\x00" * (row_size - 3 * w)
+    return header + dib + bytes(body)
+
+
 _PNG_8X8_ROWS = [[(r * 8 + c) * 4 for c in range(8)] for r in range(8)]
 
 
@@ -480,8 +407,8 @@ def _pil_or_none():
 
 
 def test_real_gray8x8_reads_synthesized_pixels(spark):
-    """The REAL decode branch, executing in EVERY environment (round
-    10): on a synthesized 8x8 gray BMP, _gray8x8 must return the EXACT
+    """The REAL decode branch, executing in EVERY environment: on a
+    synthesized 8x8 gray BMP, _gray8x8 must return the EXACT
     encoded pixels — through Pillow when installed (convert('L') +
     resize to own size are identities) or through the stdlib BMP
     parser otherwise (gray-encoded r=g=b makes the integer luma exact)
@@ -491,7 +418,6 @@ def test_real_gray8x8_reads_synthesized_pixels(spark):
         _bmp_gray8x8,
         _gray8x8,
         average_hash,
-        encode_bmp,
         perceptual_hashes,
     )
 
@@ -513,59 +439,15 @@ def test_real_gray8x8_reads_synthesized_pixels(spark):
         assert _gray8x8(png) == flat
 
 
-def test_real_resize_reencodes_payload(spark):
-    """resize_images must RE-ENCODE the payload (not
-    stamp-and-pass-through) in EVERY environment: bytes change,
-    geometry stamps match, byte_len/content_md5 describe the NEW bytes,
-    and the output decodes at the target size — PNG out under Pillow,
-    BMP out under the stdlib branch."""
-    import hashlib
-
-    from stock_bars_data_engineering_project_spark.operators.multimodal import (
-        attach_binary_payload,
-        decode_bmp,
-        encode_bmp,
-        resize_images,
-    )
-
-    bmp = encode_bmp(_PNG_8X8_ROWS)
-    src = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    media = attach_binary_payload(src).withColumn(
-        "payload", F.lit(bytearray(bmp))
-    )
-    row = resize_images(media, width=16, height=16).collect()[0]
-    out_bytes = bytes(row.payload)
-    assert out_bytes != bmp
-    assert row.resized_width == 16 and row.resized_height == 16
-    assert row.byte_len == len(out_bytes)
-    assert row.content_md5 == hashlib.md5(out_bytes).hexdigest()
-    Image = _pil_or_none()
-    if Image is not None:
-        import io
-
-        assert Image.open(io.BytesIO(out_bytes)).size == (16, 16)
-    else:
-        w, h, rows = decode_bmp(out_bytes)
-        assert (w, h) == (16, 16)
-        # nearest-neighbor of a 2x upscale: each source pixel appears
-        # as a 2x2 block, so the corners replay the source corners
-        assert rows[0][0] == (0, 0, 0)
-        src_last = _PNG_8X8_ROWS[7][7]
-        assert rows[15][15] == (src_last, src_last, src_last)
-
-
 def test_bmp_codec_roundtrip_and_guards():
     """The stdlib BMP codec (the image modality's WAV trick): encode ->
     decode is identity for RGB and gray matrices including odd widths
     (4-byte row padding); non-BMP and truncated payloads raise
-    ValueError; decode_image dispatches BMP -> parsed tuple and
-    garbage -> the loud stub when Pillow is absent."""
+    ValueError."""
     import pytest as _pytest
 
     from stock_bars_data_engineering_project_spark.operators.multimodal import (
         decode_bmp,
-        decode_image,
-        encode_bmp,
     )
 
     rgb = [
@@ -584,11 +466,6 @@ def test_bmp_codec_roundtrip_and_guards():
         decode_bmp(b"\x89PNG not a bmp at all, padded to header size....")
     with _pytest.raises(ValueError, match="truncated"):
         decode_bmp(encode_bmp(rgb)[:-4])
-
-    if _pil_or_none() is None:
-        assert decode_image(encode_bmp(gray))[0:2] == (2, 3)
-        with _pytest.raises(NotImplementedError):
-            decode_image(b"not an image payload of any kind whatsoever....")
 
 
 def test_wav_roundtrip_and_laws():

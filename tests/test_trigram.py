@@ -20,9 +20,7 @@ from stock_bars_data_engineering_project_spark.operators.index_maint import (
     apply_deletes,
     build_lexical_index,
     delete_ids,
-    index_occupancy,
     ingest_docs,
-    maintain_bucketed_index,
 )
 
 import pyspark.sql.functions as F
@@ -263,77 +261,3 @@ def test_trgm_query_pattern_size_cap_is_loud(spark, tmp_path):
     build_lexical_index(wh, docs, "tg", TRGM)
     with pytest.raises(ValueError, match="max_pattern_trigrams"):
         trgm_query(wh, docs, pats, table="tg", max_pattern_trigrams=3)
-
-
-def test_trgm_index_occupancy(spark, tmp_path):
-    """Occupancy parity with the BM25/ANN indexes: totals match the
-    postings, skew >= 1, and the live view shrinks under tombstones."""
-    docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    wh = _wh(spark, tmp_path)
-    build_lexical_index(wh, docs, "tg", TRGM)
-    occ = index_occupancy(wh, "tg", BUCKETED).collect()
-    assert sum(r.n_rows for r in occ) == wh.read("tg__postings").count()
-    assert all(r.skew_ratio >= 1.0 for r in occ)
-    delete_ids(wh, [1], "tg", BUCKETED)
-    phys = sum(r.n_rows for r in index_occupancy(wh, "tg", BUCKETED).collect())
-    live = sum(
-        r.n_rows for r in index_occupancy(wh, "tg", BUCKETED, live=True).collect()
-    )
-    n_doc1 = wh.read("tg__postings").filter(F.col("doc_id") == 1).count()
-    assert phys - live == n_doc1 > 0
-
-
-def test_maintain_trgm_policy(spark, tmp_path):
-    """maintain_bucketed_index on the trigram index: fold-only under a
-    lenient threshold with answers preserved; strict threshold
-    re-buckets ANSWER-PRESERVINGLY with an atomic generation
-    publish."""
-    docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    pats = spark.createDataFrame(PATTERNS, ["pattern_id", "pattern"])
-    wh = _wh(spark, tmp_path)
-    build_lexical_index(wh, docs, "tg", TRGM, n_buckets=8)
-    delete_ids(wh, [1, 5], "tg", BUCKETED)
-
-    def _got():
-        return sorted(
-            (r.pattern_id, r.id)
-            for r in trgm_query(wh, docs, pats, table="tg").collect()
-        )
-
-    before = _got()
-    assert before == sorted(
-        (pid, did)
-        for pid, pat in PATTERNS
-        for did, text in DOCS
-        if pat in text and did not in (1, 5)
-    )
-
-    # lenient: tombstones fold physically, no rebuild, answers preserved
-    res = maintain_bucketed_index(wh, "tg", max_skew=1e9)
-    assert res["rebuilt"] is False and res["skew_ratio"] >= 1.0
-    assert res["n_buckets"] == 8
-    assert not wh.exists("tg__deleted")
-    assert _got() == before
-
-    # strict: re-bucket into 2x buckets; generation advances atomically,
-    # answers EQUAL (bucket ids prune, never match)
-    res2 = maintain_bucketed_index(wh, "tg", max_skew=1.0000001)
-    assert res2["rebuilt"] is True and res2["n_buckets"] == 16
-    assert wh.exists("tg__postings_g1") and not wh.exists("tg__postings")
-    assert _got() == before
-    occ = index_occupancy(wh, "tg", BUCKETED).collect()
-    assert sum(r.n_rows for r in occ) == wh.read("tg__postings_g1").count()
-
-    # ingest after the rebuild lands in the new generation; the full
-    # answer set is restored
-    assert ingest_docs(
-        wh, docs.filter(F.col("doc_id").isin([1, 5])), "tg", TRGM
-    ) == 2
-    assert _got() == _expected()
-
-    # crash-atomicity: a cold orphan generation is invisible and swept
-    wh.overwrite(wh.read("tg__postings_g1"), "tg__postings_g3")
-    assert _got() == _expected()
-    maintain_bucketed_index(wh, "tg", max_skew=1e9)
-    assert not wh.exists("tg__postings_g3")
-    assert wh.exists("tg__postings_g1")

@@ -88,26 +88,6 @@ def test_panel_unions_and_rejects_empty(spark):
         validation_panel([])
 
 
-def test_profile_columns_counts_and_typed_minmax(spark):
-    from stock_bars_data_engineering_project_spark.operators.validation import (
-        profile_columns,
-    )
-
-    df = spark.createDataFrame(
-        [(2, "b"), (10, "a"), (10, None)], "v long, s string"
-    )
-    rows = {r.col: r for r in profile_columns(df, "t").collect()}
-    assert set(rows) == {"v", "s"}
-    v = rows["v"]
-    assert (v.tbl, v.n_rows, v.n_null, v.n_distinct) == ("t", 3, 0, 2)
-    # numeric ordering, not lexicographic: min 2 (not "10")
-    assert (v.min_s, v.max_s) == ("2", "10")
-    s = rows["s"]
-    assert (s.n_null, s.n_distinct, s.min_s, s.max_s) == (1, 2, "a", "b")
-    with pytest.raises(ValueError, match="missing"):
-        profile_columns(df, "t", cols=("nope",))
-
-
 def test_ref_integrity_null_child_key_is_orphan_even_with_null_parent(spark):
     from stock_bars_data_engineering_project_spark.operators.validation import (
         ref_integrity,
@@ -118,55 +98,6 @@ def test_ref_integrity_null_child_key_is_orphan_even_with_null_parent(spark):
     r = ref_integrity(child, "fk", parent, "pk", "t").collect()[0]
     # NULL references nothing: one orphan key despite the parent NULL
     assert (r.failed, r.ok) == (1, 0)
-
-
-def test_corpus_report_rollup_and_python_replay(spark):
-    """Dataset-card rollup: per-source rows + one NULL-keyed grand
-    total from a single rollup; counts/sums replayed in Python; the
-    total row equals the sum of strata."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from stock_bars_data_engineering_project_spark.operators.validation import (
-        corpus_report,
-    )
-
-    rows = [
-        (1, "srcA", "three tokens here"),
-        (2, "srcA", "two tokens"),
-        (3, "srcB", "just one single doc with six"),
-        # a genuine NULL-valued stratum: must NOT alias the total row
-        (4, None, "null source stratum doc"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = corpus_report(docs).collect()
-    got = {(r.source, r.is_total): r for r in out}
-    assert set(got) == {
-        ("srcA", False), ("srcB", False), (None, False), (None, True),
-    }
-    assert all(r.rollup_level == (1 if r.is_total else 0) for r in out)
-    toks = {"srcA": [3, 2], "srcB": [6]}
-    # the NULL stratum row carries its own stats, not the corpus total
-    null_stratum = got[(None, False)]
-    assert null_stratum.n_docs == 1 and null_stratum.total_tokens == 4
-    got = {r.source: r for r in out if not r.is_total and r.source is not None}
-    for src, ts in toks.items():
-        assert got[src].n_docs == len(ts)
-        assert got[src].total_tokens == sum(ts)
-        assert got[src].mean_tokens == pytest.approx(
-            round(sum(ts) / len(ts), 2)
-        )
-        assert got[src].total_chars == sum(
-            len(t) for _, s, t in rows if s == src
-        )
-    total = {(r.source, r.is_total): r for r in out}[(None, True)]
-    assert total.n_docs == 4
-    assert total.total_tokens == sum(sum(v) for v in toks.values()) + 4
-    assert total.total_chars == sum(len(t) for _, _, t in rows)
-    assert total.p50_tokens == 3  # median of [3, 2, 6, 4]
-
-    with pytest.raises(ValueError, match="at least one column"):
-        corpus_report(docs, group_cols=())
 
 
 def test_k_anonymity_report_and_guards(spark):
@@ -214,53 +145,3 @@ def test_l_diversity_report_and_guards(spark):
         l_diversity(df, (), "lang")
     with pytest.raises(ValueError):
         l_diversity(df, ("src",), "lang", l=0)
-
-
-def test_pseudonymize_deterministic_keyed_and_python_twin(spark):
-    import hashlib
-
-    from stock_bars_data_engineering_project_spark.operators.validation import (
-        pseudonymize,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "alice@x.com", "NL"), (2, "bob@y.org", None), (3, "alice@x.com", "DE")],
-        "id long, email string, country string",
-    )
-    got = {r["id"]: r for r in pseudonymize(df, ("email", "country"), "s3cret").collect()}
-    # python twin of the token construction pins the hash family
-    def tok(v):
-        return "pid_" + hashlib.sha256(f"s3cret:{v}".encode()).hexdigest()[:16]
-
-    assert got[1]["email"] == tok("alice@x.com")
-    assert got[3]["email"] == got[1]["email"]  # referential integrity
-    assert got[2]["country"] is None  # NULL stays NULL
-    assert got[1]["country"] == tok("NL") and got[3]["country"] == tok("DE")
-    # a different secret unlinks every token
-    other = {r["id"]: r for r in pseudonymize(df, ("email",), "rotated").collect()}
-    assert other[1]["email"] != got[1]["email"]
-    # joins still work across tables sharing the secret
-    dim = spark.createDataFrame([("alice@x.com", "gold")], "email string, tier string")
-    joined = pseudonymize(df, ("email",), "s3cret").join(
-        pseudonymize(dim, ("email",), "s3cret"), "email"
-    )
-    assert sorted(r["id"] for r in joined.collect()) == [1, 3]
-
-
-def test_pseudonymize_guards(spark):
-    from stock_bars_data_engineering_project_spark.operators.validation import (
-        pseudonymize,
-    )
-
-    df = spark.createDataFrame([(1, "a")], "id long, v string")
-    for bad, match in [
-        (dict(cols=("v",), secret=""), "secret"),
-        (dict(cols=(), secret="s"), "column"),
-        (dict(cols=("nope",), secret="s"), "nope"),
-        (dict(cols=("v",), secret="s", token_len=4), "token_len"),
-    ]:
-        try:
-            pseudonymize(df, **bad)
-            raise AssertionError(f"{bad} must refuse")
-        except ValueError as e:
-            assert match in str(e)

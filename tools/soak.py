@@ -17,8 +17,8 @@ and a final summary of the runtime ratio vs. the linear ideal.
 untimed warm-up pass of every measured op followed by min-of-2: a
 long-lived local[32] session accumulates heap pressure whose
 multi-second full-GC pauses land on whichever scale happens to be
-running — the round-4 embedding curve (9.2 s at x2 vs 3.5 s at x16)
-was exactly that artifact — while a COLD fresh JVM runs its first
+running (BASELINE.md, "Other figures moved out of code comments",
+records one such inverted curve) — while a COLD fresh JVM runs its first
 heavy job 3-6x slower until C2 compiles the eval paths, which
 min-of-N of the same query does not recover. Use isolated mode for
 any curve that feeds a scaling decision.
@@ -40,7 +40,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from stock_bars_data_engineering_project_spark.operators.analysis import (  # noqa: E402
     bars_analysis,
-    bars_analysis_two_phase,
 )
 from stock_bars_data_engineering_project_spark.operators.asof import asof_join  # noqa: E402
 from stock_bars_data_engineering_project_spark.operators.dedup import (  # noqa: E402
@@ -560,26 +559,14 @@ def run(
         ),
         # Pathological window skew: EVERY event lands on one key (the
         # case AQE cannot split — a window sorts the whole key in one
-        # task). single = the one-Exchange-one-Sort plan, whose curve
-        # degrades with scale as the single task sorts everything;
-        # two_phase = (key, day-bucket) partitioning with boundary
-        # repair (operators/analysis.bars_analysis_two_phase), whose
-        # curve should track the cluster-wide sort. Replica day-shifts
-        # grow the bucket count linearly with scale.
+        # task). The one-Exchange-one-Sort plan's curve degrades with
+        # scale as the single task sorts everything.
         "window_hot_single": lambda: bars_analysis(
             events.select(
                 F.lit("HOT").alias("stock"),
                 F.col("ts").alias("timestamp"),
                 F.col("value").alias("close"),
             )
-        ),
-        "window_hot_two_phase": lambda: bars_analysis_two_phase(
-            events.select(
-                F.lit("HOT").alias("stock"),
-                F.col("ts").alias("timestamp"),
-                F.col("value").alias("close"),
-            ),
-            F.date_trunc("day", F.col("timestamp")),
         ),
         # trigram substring search: FIXED 4-pattern set against the
         # linearly growing corpus — the curve should track the posting
