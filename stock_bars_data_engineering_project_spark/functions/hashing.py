@@ -68,8 +68,8 @@ def content_epoch(batch: DataFrame, id_col: str) -> str:
     return f"{(row.x1 or 0):012x}{(row.x2 or 0):012x}n{row.n}"
 
 
-def minhash_signature(shingles: Column, n_sigs: int = MINHASH_SIGS) -> Column:
-    """array<string> of ``n_sigs`` MinHash values: for seed s, the
+def minhash_signature(shingles: Column) -> Column:
+    """array<string> of ``MINHASH_SIGS`` MinHash values: for seed s, the
     lexicographic min of ``md5(s || ':' || shingle)``. Min of a uniform
     hash family — the classic Broder estimator; string min avoids any
     cross-engine integer-parsing divergence.
@@ -78,33 +78,33 @@ def minhash_signature(shingles: Column, n_sigs: int = MINHASH_SIGS) -> Column:
     seed and element-wise-min'ed into the accumulator, so ``shingles``
     (however expensive its expression) is evaluated exactly once per
     row. ``least`` skips the NULL initial accumulator."""
-    init = F.array_repeat(F.lit(None).cast("string"), n_sigs)
+    init = F.array_repeat(F.lit(None).cast("string"), MINHASH_SIGS)
     return F.aggregate(
         shingles,
         init,
         lambda acc, sh: F.zip_with(
             acc,
             F.array(
-                *[F.md5(F.concat(F.lit(f"{s}:"), sh)) for s in range(n_sigs)]
+                *[F.md5(F.concat(F.lit(f"{s}:"), sh)) for s in range(MINHASH_SIGS)]
             ),
             lambda a, b: F.least(a, b),
         ),
     )
 
 
-def lsh_band_hashes(signature: Column, bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> Column:
-    """array<string> of band keys: md5 of each contiguous ``rows``-slice
-    of the signature. Two docs collide in a band iff that band's rows all
-    match — the standard banding amplification.
+def lsh_band_hashes(signature: Column) -> Column:
+    """array<string> of ``LSH_BANDS`` band keys: md5 of each contiguous
+    ``LSH_ROWS``-slice of the signature. Two docs collide in a band iff
+    that band's rows all match — the standard banding amplification.
 
-    Unrolled at the Python level: the ``bands`` syntactic references to
+    Unrolled at the Python level: the ``LSH_BANDS`` syntactic references to
     ``signature`` keep CollapseProject from inlining an expensive
     upstream signature expression into a per-element lambda body (the
     caller should still compute the signature in its own select)."""
     return F.array(
         *[
-            F.md5(F.concat_ws("", F.slice(signature, b * rows + 1, rows)))
-            for b in range(bands)
+            F.md5(F.concat_ws("", F.slice(signature, b * LSH_ROWS + 1, LSH_ROWS)))
+            for b in range(LSH_BANDS)
         ]
     )
 

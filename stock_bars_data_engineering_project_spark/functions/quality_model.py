@@ -77,23 +77,21 @@ def bucket_weight(bucket: Column) -> Column:
     return h / F.lit(_HASH_SPAN) * 2.0 - 1.0
 
 
-def quality_scores(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Per-document classifier score in (0, 1): sigmoid(GAIN * mean
     feature weight). Documents with no non-empty token produce no
     feature rows and drop out (same contract as the surprisal arm).
 
-    Returns ``(id_col, n_features, qscore)``.
+    Returns ``(doc_id, n_features, qscore)``.
     """
     feats = df.select(
-        F.col(id_col), F.explode(doc_features(F.col(text_col))).alias("_feat")
+        F.col("doc_id"), F.explode(doc_features(F.col("text"))).alias("_feat")
     )
     weighted = feats.select(
-        id_col, bucket_weight(feature_bucket(F.col("_feat"))).alias("_w")
+        "doc_id", bucket_weight(feature_bucket(F.col("_feat"))).alias("_w")
     )
     margin = F.avg("_w") * GAIN
-    return weighted.groupBy(id_col).agg(
+    return weighted.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_features"),
         (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("qscore"),
     )
@@ -102,8 +100,6 @@ def quality_scores(
 def train_quality_classifier(
     df: DataFrame,
     label_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_iters: int = 8,
     lr: float = 16.0,
     stats: dict | None = None,
@@ -159,9 +155,9 @@ def train_quality_classifier(
 
     feats = (
         df.select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.col(label_col).cast("double").alias("_y"),
-            F.explode(doc_features(F.col(text_col))).alias("_f"),
+            F.explode(doc_features(F.col("text"))).alias("_f"),
         )
         .select("_id", "_y", feature_bucket(F.col("_f")).alias("bucket"))
         .transform(materialize)
@@ -172,7 +168,7 @@ def train_quality_classifier(
     )
     # The per-iteration loss/acc probe is a MONITOR, not a dependency
     # of the weight update, so it rides the update job as OBSERVED
-    # METRICS (round-11 opt): ``observe`` computes the two aggregates
+    # METRICS: ``observe`` computes the two aggregates
     # over the margins rows as they flow through the update's own
     # execution — zero extra driver jobs and zero recompute, where the
     # previous structure paid a separate checkpoint + collect per
@@ -268,25 +264,20 @@ def train_quality_classifier(
     return weights.select("bucket", F.col("w").alias("weight"))
 
 
-def score_with_weights(
-    df: DataFrame,
-    weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def score_with_weights(df: DataFrame, weights: DataFrame) -> DataFrame:
     """Score documents with a TRAINED ``(bucket, weight)`` table — the
     same plan shape as :func:`quality_scores` with the derived-weight
     expression swapped for the join this module's docstring promises.
     Unseen buckets score 0 (the training init). Returns
-    ``(id_col, n_features, qscore)``."""
+    ``(doc_id, n_features, qscore)``."""
     feats = df.select(
-        F.col(id_col), F.explode(doc_features(F.col(text_col))).alias("_feat")
-    ).select(id_col, feature_bucket(F.col("_feat")).alias("bucket"))
+        F.col("doc_id"), F.explode(doc_features(F.col("text"))).alias("_feat")
+    ).select("doc_id", feature_bucket(F.col("_feat")).alias("bucket"))
     joined = feats.join(weights, "bucket", "left").select(
-        id_col, F.coalesce(F.col("weight"), F.lit(0.0)).alias("_w")
+        "doc_id", F.coalesce(F.col("weight"), F.lit(0.0)).alias("_w")
     )
     margin = F.avg("_w") * GAIN
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_features"),
         (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("qscore"),
     )

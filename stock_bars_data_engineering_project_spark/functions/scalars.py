@@ -36,11 +36,11 @@ def sql_round(expr: str, scale: int) -> str:
     return f"CAST(ROUND(CAST({expr} AS DECIMAL(30,10)), {scale}) AS DOUBLE)"
 
 
-def guarded_ratio(numerator: Column, denominator: Column, scale: int = 3) -> Column:
+def guarded_ratio(numerator: Column, denominator: Column) -> Column:
     """The reference's daily-return expression (SURVEY Q2+Q3):
-    ``round(num / nullif(den, 0), scale)`` — rounded FIRST, before any
+    ``round(num / nullif(den, 0), 3)`` — rounded FIRST, before any
     downstream use (the 5-row stddev runs over this rounded value)."""
-    return round_half_up(numerator / nullif_zero(denominator), scale)
+    return round_half_up(numerator / nullif_zero(denominator), 3)
 
 
 def event_micros(df, col: str) -> Column:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 EN_STOPWORDS = ("a", "an", "the", "of", "to", "and", "in", "is", "it", "that")
 
 
-# ``*_sql`` twins + str fast paths (round-10 opt, the vectors.py
+# ``*_sql`` twins + str fast paths (the vectors.py
 # discipline): a str argument is a SQL column reference/expression and
 # the helper parses the identical tree in ONE F.expr instead of a py4j
 # driver round-trip per node. Same fold shapes, same literal types
@@ -70,25 +70,21 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     ) + F.length(F.regexp_replace(text, r"[a-zA-Z0-9\s]", F.lit("")))
 
 
-def stopword_ratio_sql(
-    text: str, stopwords: tuple[str, ...] = EN_STOPWORDS
-) -> str:
+def stopword_ratio_sql(text: str) -> str:
     toks = tokens_sql(text)
-    arr = "array(" + ",".join(f"'{s}'" for s in stopwords) + ")"
+    arr = "array(" + ",".join(f"'{s}'" for s in EN_STOPWORDS) + ")"
     return (
         f"(size(filter({toks}, t -> array_contains({arr}, lower(t)))) "
         f"/ size({toks}))"
     )
 
 
-def stopword_ratio(
-    text: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS
-) -> Column:
+def stopword_ratio(text: Column | str) -> Column:
     """Fraction of tokens that are closed-class function words."""
     if isinstance(text, str):
-        return F.expr(stopword_ratio_sql(text, stopwords))
+        return F.expr(stopword_ratio_sql(text))
     toks = tokens(text)
-    stops = F.array(*[F.lit(s) for s in stopwords])
+    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, F.lower(t))))
     return n_stop / F.size(toks)
 
@@ -121,20 +117,20 @@ def mean_word_len(text: Column | str) -> Column:
     return (F.length(text) - F.size(tokens(text)) + 1) / F.size(tokens(text))
 
 
-def lang_id_sql(text: str, threshold: float = 0.03) -> str:
+def lang_id_sql(text: str) -> str:
     return (
-        f"(CASE WHEN {stopword_ratio_sql(text)} >= {float(threshold)!r}D "
+        f"(CASE WHEN {stopword_ratio_sql(text)} >= 0.03D "
         "THEN 'en' ELSE 'unknown' END)"
     )
 
 
-def lang_id(text: Column | str, threshold: float = 0.03) -> Column:
-    """Heuristic language ID: stopword density above threshold -> 'en'.
+def lang_id(text: Column | str) -> Column:
+    """Heuristic language ID: stopword density >= 0.03 -> 'en'.
     (A real n-gram profile model drops in here; the Spark plumbing —
     per-document closed-vocabulary scan, no shuffle — is the point.)"""
     if isinstance(text, str):
-        return F.expr(lang_id_sql(text, threshold))
-    return F.when(stopword_ratio(text) >= threshold, F.lit("en")).otherwise(
+        return F.expr(lang_id_sql(text))
+    return F.when(stopword_ratio(text) >= 0.03, F.lit("en")).otherwise(
         F.lit("unknown")
     )
 
@@ -194,7 +190,7 @@ def rolling_fingerprint(text: Column | str) -> Column:
 def word_shingles_sql(text: str, k: int = 3) -> str:
     """SQL text for :func:`word_shingles` over a SQL column reference —
     one parse at the consumer instead of k zip_with lambdas' worth of
-    py4j round trips (round-10 opt)."""
+    py4j round trips."""
     toks = f"split({text}, ' ')"
     acc = toks
     for off in range(1, k):
@@ -218,7 +214,7 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     collapse; the zip shape touches each token O(k) times total.
 
     A str argument (SQL column reference) parses the identical tree in
-    ONE F.expr (round-10 opt)."""
+    ONE F.expr."""
     if isinstance(text, str):
         return F.expr(word_shingles_sql(text, k))
     toks = tokens(text)
@@ -247,7 +243,7 @@ def top_gram_share(grams: Column | str) -> Column:
 
     A str argument is SQL text for the gram array (e.g. from
     :func:`word_shingles_sql`): the whole run fold parses as ONE
-    F.expr (round-10 opt)."""
+    F.expr."""
     if isinstance(grams, str):
         nxt = "CASE WHEN g = acc.prev THEN acc.run + 1 ELSE 1 END"
         return F.expr(
@@ -291,27 +287,21 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_id_profiles(
-    text: Column | str,
-    profiles: dict[str, tuple[str, ...]] | None = None,
-    threshold: float = 0.05,
-) -> Column:
+def lang_id_profiles(text: Column | str) -> Column:
     """Multilingual language ID: argmax of per-language function-word
-    density, 'unknown' below ``threshold`` — the n-language upgrade of
-    :func:`lang_id`, still one map-only codegen expression (no model
-    artifact, no shuffle, no Python). Ties break toward the profile
-    dict's insertion order, so classification is deterministic.
+    density over ``LANG_PROFILES``, 'unknown' below 0.05 — the
+    n-language upgrade of :func:`lang_id`, still one map-only codegen
+    expression (no model artifact, no shuffle, no Python). Ties break
+    toward the profile dict's insertion order, so classification is
+    deterministic.
 
     A real n-gram profile model (textcat) or fastText drops in at the
     same call site; the per-document closed-vocabulary scan shape is
     identical.
     """
-    profiles = LANG_PROFILES if profiles is None else profiles
-    if not profiles:
-        raise ValueError("profiles must name at least one language")
     if isinstance(text, str):
         # SQL column reference -> the whole argmax as ONE F.expr parse
-        # (round-10 opt: the loop-built Column form paid ~0.1 s of py4j
+        # (the loop-built Column form paid ~0.1 s of py4j
         # round-trips per call; same fold shape, -1.0D init, identical
         # tie-break toward dict insertion order)
         toks_sql = f"filter(split(lower({text}), '\\\\s+'), t -> t != '')"
@@ -320,7 +310,7 @@ def lang_id_profiles(
             f"try_divide(size(filter({toks_sql}, t -> array_contains(array("
             + ",".join(f"'{w}'" for w in words)
             + f"), t))), size({toks_sql})))"
-            for lang, words in profiles.items()
+            for lang, words in LANG_PROFILES.items()
         )
         best_sql = (
             f"aggregate(array({cands_sql}), "
@@ -328,7 +318,7 @@ def lang_id_profiles(
             f"(acc, c) -> CASE WHEN c.r > acc.r THEN c ELSE acc END)"
         )
         return F.expr(
-            f"CASE WHEN {best_sql}.r >= {float(threshold)!r}D "
+            f"CASE WHEN {best_sql}.r >= 0.05D "
             f"THEN {best_sql}.lang ELSE 'unknown' END"
         )
     # \s+ split, NOT tokens()' single-space split: multi-line prose
@@ -353,10 +343,10 @@ def lang_id_profiles(
         )
         return F.struct(F.lit(lang).alias("lang"), ratio.alias("r"))
 
-    cands = F.array(*[_cand(lang, words) for lang, words in profiles.items()])
+    cands = F.array(*[_cand(lang, words) for lang, words in LANG_PROFILES.items()])
     best = F.aggregate(
         cands,
         F.struct(F.lit(None).cast("string").alias("lang"), F.lit(-1.0).alias("r")),
         lambda acc, c: F.when(c["r"] > acc["r"], c).otherwise(acc),
     )
-    return F.when(best["r"] >= threshold, best["lang"]).otherwise(F.lit("unknown"))
+    return F.when(best["r"] >= 0.05, best["lang"]).otherwise(F.lit("unknown"))

@@ -7,7 +7,7 @@ double-precision sums (float accumulation orders would diverge).
 no Python, no UDF, no serialization per row.
 
 Every helper also has a ``*_sql`` text twin and accepts a ``str`` SQL
-column reference (round-10 opt, the lsh_bucket discipline): the
+column reference (the lsh_bucket discipline): the
 loop/lambda-built Column forms pay one py4j driver round-trip per
 expression node (~40–110 ms of pure plan construction PER CALL,
 measured with tools/profile_build_helpers.py), while ``F.expr`` parses

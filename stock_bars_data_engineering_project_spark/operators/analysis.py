@@ -37,7 +37,6 @@ def bars_analysis(
     ts: str = "timestamp",
     value: str = "close",
     carry_cols: tuple[str, ...] = (),
-    frame_rows: int = 5,
 ) -> DataFrame:
     """Per-key lag / guarded-return / moving-avg / moving-stddev analytics.
 
@@ -46,7 +45,7 @@ def bars_analysis(
     moving_avg, moving_stddev``.
     """
     order = Window.partitionBy(key).orderBy(ts)
-    frame = order.rowsBetween(-(frame_rows - 1), Window.currentRow)
+    frame = order.rowsBetween(-4, Window.currentRow)  # 5-row frame
     v = F.col(value)
     prev = F.lag(v, 1).over(order)  # W1: no default => NULL on first row (Q5)
     ret = guarded_ratio(v - prev, prev)  # round(.., 3) BEFORE stddev (Q3)

@@ -32,14 +32,12 @@ def asof_join(
     on: str = "ts",
     right_on: str | None = None,
     by: tuple[str, ...] = ("user_id",),
-    tolerance: str | None = None,
 ) -> DataFrame:
     """Backward inclusive as-of join: each left row gains the right row
     with the greatest ``right_on <= on`` within the same ``by`` group
     (NULLs when no predecessor exists). Right rows must be unique per
     (by, right_on) — dedup upstream, as with any merge source (SURVEY
-    Q6). ``tolerance`` (an INTERVAL string, e.g. ``'2 hours'``) drops
-    matches older than the window, mirroring pandas ``merge_asof``.
+    Q6).
 
     Forward as-of is the same construction with both orderings negated.
     """
@@ -96,9 +94,4 @@ def asof_join(
         *[F.col(f"_l.{c}").alias(c) for c in left.columns],
         *[F.col(f"_match.{c}").alias(c) for c in rval_cols],
     )
-    if tolerance is not None:
-        # keep the row, null the match outside the window (merge_asof style)
-        cond = F.col(right_on) >= F.col(on) - F.expr(f"INTERVAL {tolerance}")
-        for c in rval_cols:
-            out = out.withColumn(c, F.when(cond, F.col(c)))
     return out

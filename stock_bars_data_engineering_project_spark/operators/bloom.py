@@ -15,9 +15,9 @@ function registry), and the rule only fires on shuffle-join shapes it
 recognizes. This module is the EXPLICIT, composable form, built from
 the engine-portable md5 idiom everything else here uses:
 
-- k = ``n_hashes`` positions per key from salted
+- k = ``N_HASHES`` positions per key from salted
   :func:`functions.hashing.md5_bucket48` (bit-identical in any engine);
-- the bitmap is ``m_bits`` bits packed into 32-bit words, built by ONE
+- the bitmap is ``M_BITS`` bits packed into 32-bit words, built by ONE
   partial-aggregable pass over the build side (groupBy word,
   bit_or — at most m/32 groups however large the build side);
 - the bitmap rides into the probe plan as ONE array literal (the
@@ -25,11 +25,10 @@ the engine-portable md5 idiom everything else here uses:
   O(m) driver bytes, O(1) plan nodes per word access), and membership
   is a pure codegen expression — no join, no Python.
 
-Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k; the default 2^16
-bits / 4 hashes reads ~4-5%% fp at n = 10k build keys. At 100 TB the
-build side of a bloom-worthy join is dimension-sized — size m at
-~10 bits per expected key and the bitmap stays a few hundred KB of
-broadcast, three orders below the probe side's shuffle savings.
+Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k; 2^16 bits / 4
+hashes reads ~4-5%% fp at n = 10k build keys. The bitmap is fixed at
+that size, so a build side far past ~10k keys saturates it and the
+pre-filter passes more probe rows; the join result stays exact.
 
 Bit arithmetic avoids shift-by-column (Spark's shiftleft/shiftright
 take literal shift amounts): the word value stays < 2^32 and the bit
@@ -45,27 +44,24 @@ from pyspark.sql import functions as F
 from ..functions.hashing import md5_bucket48
 
 _WORD = 32
+M_BITS = 1 << 16
+N_HASHES = 4
 
 
-def _positions(key: Column, m_bits: int, n_hashes: int) -> list[Column]:
+def _positions(key: Column) -> list[Column]:
     return [
-        md5_bucket48(key, m_bits, salt=f"bloom{i}") for i in range(n_hashes)
+        md5_bucket48(key, M_BITS, salt=f"bloom{i}") for i in range(N_HASHES)
     ]
 
 
-def _bitmap_rows(
-    build: DataFrame, key: str, m_bits: int, n_hashes: int
-) -> DataFrame:
-    """The build side's bloom bitmap as (w, bits) rows — one
-    partial-aggregable pass, at most m_bits/32 groups."""
-    if m_bits <= 0 or m_bits % _WORD != 0:
-        raise ValueError(f"m_bits must be a positive multiple of {_WORD}")
-    if n_hashes <= 0:
-        raise ValueError(f"n_hashes must be positive, got {n_hashes}")
-    pos = F.explode(
-        F.array(*_positions(F.col(key), m_bits, n_hashes))
-    ).alias("pos")
-    return (
+def bloom_bitmap(build: DataFrame, key: str) -> list[int]:
+    """The build side's bloom bitmap as ``M_BITS/32`` ints — a bounded
+    model artifact (like the BPE rule list or the PCA components): its
+    size is O(M_BITS) regardless of build-side cardinality, so the
+    collect is sanctioned. One partial-aggregable pass, at most
+    M_BITS/32 groups."""
+    pos = F.explode(F.array(*_positions(F.col(key)))).alias("pos")
+    rows = (
         # NULL build keys contribute nothing: an equi-join never matches
         # NULL, so leaving them out preserves exact join semantics (and
         # a NULL md5 position would poison the word assembly). The probe
@@ -79,25 +75,8 @@ def _bitmap_rows(
         )
         .groupBy("w")
         .agg(F.bit_or("b").alias("bits"))
-    )
-
-
-def bloom_bitmap(
-    build: DataFrame,
-    key: str,
-    m_bits: int = 1 << 16,
-    n_hashes: int = 4,
-) -> list[int]:
-    """The build side's bloom bitmap as ``m_bits/32`` ints — a bounded
-    model artifact (like the BPE rule list or the PCA components): its
-    size is O(m_bits) regardless of build-side cardinality, so the
-    collect is sanctioned AT SMALL m. Past ~2^18 bits do NOT collect:
-    a megabit bitmap as a plan literal blows up codegen and task
-    serialization (measured: the x64 soak went 5.4 s -> 101 s when the
-    literal grew to 131k elements) — use the broadcast bitmap-table
-    path (:func:`bloom_semi_join` switches automatically)."""
-    rows = _bitmap_rows(build, key, m_bits, n_hashes).collect()
-    words = [0] * (m_bits // _WORD)
+    ).collect()
+    words = [0] * (M_BITS // _WORD)
     for r in rows:
         words[r.w] = int(r.bits)
     return words
@@ -112,23 +91,21 @@ def _words_literal(words: list[int]) -> Column:
     the same array as one SQL string parses JVM-side in ~ms. (A
     bit-STRING literal was tried and is far worse: SQL ``substr`` on
     UTF8String scans from byte 0 to find the character offset, so a
-    64k-char bitmap costs O(m_bits) per row per probe — measured 8x
+    64k-char bitmap costs O(M_BITS) per row per probe — measured 8x
     slower than the whole join it was filtering.)"""
     return F.expr("array(" + ",".join(str(int(w)) for w in words) + ")")
 
 
-def bloom_might_contain(
-    key: Column | str, words: list[int], m_bits: int, n_hashes: int
-) -> Column:
+def bloom_might_contain(key: Column | str, words: list[int]) -> Column:
     """Codegen membership test against a literal bitmap: true unless
     some hash position's bit is unset. False positives possible by
     design; false negatives impossible.
 
     ``key`` as a SQL column reference (str) takes the fast path: the
-    whole test — bitmap literal, the ``n_hashes`` md5 positions, and
-    the bit checks — is ONE ``F.expr`` parse (round-10 opt; the
-    loop-built Column form paid ~0.25 s of py4j round-trips per call
-    on top of the already-single-parse bitmap literal). ``forall``
+    whole test — bitmap literal, the ``N_HASHES`` md5 positions, and
+    the bit checks — is ONE ``F.expr`` parse (the loop-built Column
+    form paid ~0.25 s of py4j round-trips per call on top of the
+    already-single-parse bitmap literal). ``forall``
     over the position array references the bitmap literal ONCE and
     keeps the three-valued NULL semantics of the old ``true AND bit_0
     AND ...`` chain: any false position -> false, else any NULL (NULL
@@ -138,8 +115,8 @@ def bloom_might_contain(
         positions = ",".join(
             f"(CAST(conv(substring(md5(concat('bloom{i}:', "
             f"CAST({key} AS STRING))), 1, 12), 16, 10) AS BIGINT) "
-            f"% {m_bits})"
-            for i in range(n_hashes)
+            f"% {M_BITS})"
+            for i in range(N_HASHES)
         )
         # exact bit extraction without shift-by-column: word < 2^32 and
         # 2^(p%32) are both exact doubles, so floor(word / 2^bit) % 2
@@ -151,7 +128,7 @@ def bloom_might_contain(
         )
     lit_words = _words_literal(words)
     cond = F.lit(True)
-    for p in _positions(key, m_bits, n_hashes):
+    for p in _positions(key):
         word = F.element_at(lit_words, (p / _WORD).cast("int") + 1)
         # exact bit extraction without shift-by-column: word < 2^32 and
         # 2^(p%32) are both exact doubles, so floor(word / 2^bit) % 2
@@ -163,126 +140,30 @@ def bloom_might_contain(
     return cond
 
 
-def _check_words(words: list[int] | None, m_bits: int) -> None:
-    """Guard the caller-owned precomputed-bitmap contract: a bitmap
-    built at a different ``m_bits`` silently changes join results
-    (every word index is wrong), and on the broadcast-table path the
-    parameter has no effect at all. Cheap, catches the two most likely
-    misuses loudly instead of silently."""
-    if words is None:
-        return
-    if m_bits > _LITERAL_MAX_BITS:
-        raise ValueError(
-            f"precomputed 'words' bitmap is only used on the literal "
-            f"path (m_bits <= {_LITERAL_MAX_BITS}); at m_bits={m_bits} "
-            f"the broadcast-table path rebuilds the bitmap from the "
-            f"build side and would silently ignore it"
-        )
-    if len(words) * _WORD != m_bits:
-        raise ValueError(
-            f"precomputed 'words' bitmap has {len(words)} words = "
-            f"{len(words) * _WORD} bits but m_bits={m_bits}; it was "
-            f"built at a different size and would index the wrong words"
-        )
-
-
-# above this, the bitmap stops being a plan literal: a 131k-element
-# literal array took the x64 soak from 5.4 s to 101 s (codegen + task
-# binary size), so large bitmaps broadcast as a TABLE instead
-_LITERAL_MAX_BITS = 1 << 18
-
-
-def _with_bloom_hit(
-    probe: DataFrame,
-    build: DataFrame,
-    key: str,
-    build_key: str,
-    m_bits: int,
-    n_hashes: int,
-) -> DataFrame:
-    """The large-m membership test as a COLUMN: the (w, bits) bitmap
-    table stays a DataFrame (never collected) and each hash position
-    becomes one map-side BROADCAST hash join + codegen bit check — no
-    shuffle, no literal, any m. Adds a boolean ``_bloom_hit``: true iff
-    every hash position's bit is set (a probe word absent from the
-    table means no build key ever hashed there — NULL bits reads as an
-    unset bit). A NULL probe key yields ``_bloom_hit`` = false: NULL
-    never equi-matches, so it is a certain non-member for both the
-    semi and the anti consumer."""
-    bm = _bitmap_rows(build, build_key, m_bits, n_hashes)
-    pre = probe
-    hit = F.lit(True)
-    for i in range(n_hashes):
-        p = md5_bucket48(F.col(key), m_bits, salt=f"bloom{i}")
-        t = F.broadcast(
-            bm.select(
-                F.col("w").alias(f"_bfw{i}"), F.col("bits").alias(f"_bfb{i}")
-            )
-        )
-        pre = pre.withColumn(f"_bfp{i}", p).join(
-            t,
-            (F.col(f"_bfp{i}") / _WORD).cast("int") == F.col(f"_bfw{i}"),
-            "left",
-        )
-        check = F.col(f"_bfb{i}").isNotNull() & (
-            (
-                F.floor(
-                    F.col(f"_bfb{i}")
-                    / F.pow(F.lit(2.0), F.col(f"_bfp{i}") % _WORD)
-                ).cast("long")
-                % 2
-            )
-            == 1
-        )
-        hit = hit & F.coalesce(check, F.lit(False))
-    return pre.withColumn("_bloom_hit", hit).drop(
-        *[c for i in range(n_hashes) for c in (f"_bfp{i}", f"_bfw{i}", f"_bfb{i}")]
-    )
-
-
 def bloom_semi_join(
     probe: DataFrame,
     build: DataFrame,
     key: str,
     build_key: str | None = None,
-    m_bits: int = 1 << 16,
-    n_hashes: int = 4,
     words: list[int] | None = None,
 ) -> DataFrame:
     """LEFT SEMI join with a bloom pre-filter on the probe side: rows
     whose key cannot be in the build side never reach the join
     exchange. Result is EXACTLY ``probe ⋉ build`` (no false negatives);
-    at scale the win is the probe rows that never shuffle.
-
-    Bitmap transport switches on size: up to ``_LITERAL_MAX_BITS`` the
-    bitmap collects to a flat array literal (zero joins, pure codegen);
-    above it the bitmap stays a broadcast TABLE and membership is
-    ``n_hashes`` map-side broadcast joins — same bits, same result,
-    no driver literal (the x64 soak measured the literal path's cliff).
+    at scale the win is the probe rows that never shuffle. The bitmap
+    collects to a flat array literal (zero joins, pure codegen).
 
     ``words``: a bitmap previously built by :func:`bloom_bitmap` over
-    the SAME build side and (m_bits, n_hashes) config. A bloom bitmap
-    is a build-once artifact (the BPE-rules/PCA-components class): a
-    serving loop amortizes the two build jobs (bitmap agg + collect)
-    across every probe, so callers that probe repeatedly should build
-    once and pass it here. A stale or mismatched bitmap silently
-    changes results — the caller owns that invariant (literal path
-    only; passing it with a broadcast-table m_bits raises — see
-    :func:`_check_words`)."""
+    the SAME build side. A bloom bitmap is a build-once artifact (the
+    BPE-rules/PCA-components class): a serving loop amortizes the two
+    build jobs (bitmap agg + collect) across every probe, so callers
+    that probe repeatedly should build once and pass it here. A stale
+    bitmap silently changes results — the caller owns that
+    invariant."""
     bk = build_key or key
-    _check_words(words, m_bits)
-    if m_bits <= _LITERAL_MAX_BITS:
-        if words is None:
-            words = bloom_bitmap(build, bk, m_bits, n_hashes)
-        pre = probe.filter(
-            bloom_might_contain(key, words, m_bits, n_hashes)
-        )
-    else:
-        pre = (
-            _with_bloom_hit(probe, build, key, bk, m_bits, n_hashes)
-            .filter(F.col("_bloom_hit"))
-            .drop("_bloom_hit")
-        )
+    if words is None:
+        words = bloom_bitmap(build, bk)
+    pre = probe.filter(bloom_might_contain(key, words))
     return pre.join(build, pre[key] == build[bk], "left_semi")
 
 
@@ -291,8 +172,6 @@ def bloom_anti_join(
     build: DataFrame,
     key: str,
     build_key: str | None = None,
-    m_bits: int = 1 << 16,
-    n_hashes: int = 4,
     words: list[int] | None = None,
 ) -> DataFrame:
     """LEFT ANTI join with a bloom SHORTCUT: a probe row whose
@@ -309,18 +188,12 @@ def bloom_anti_join(
     the split is on ``test IS TRUE``).
 
     ``words``: optional precomputed bitmap — same build-once amortize
-    contract (size-checked, staleness caller-owned) as
-    :func:`bloom_semi_join`."""
+    contract (staleness caller-owned) as :func:`bloom_semi_join`."""
     bk = build_key or key
-    _check_words(words, m_bits)
-    if m_bits <= _LITERAL_MAX_BITS:
-        if words is None:
-            words = bloom_bitmap(build, bk, m_bits, n_hashes)
-        test = bloom_might_contain(key, words, m_bits, n_hashes)
-        hit = F.coalesce(test, F.lit(False))
-        tagged = probe.withColumn("_bloom_hit", hit)
-    else:
-        tagged = _with_bloom_hit(probe, build, key, bk, m_bits, n_hashes)
+    if words is None:
+        words = bloom_bitmap(build, bk)
+    hit = F.coalesce(bloom_might_contain(key, words), F.lit(False))
+    tagged = probe.withColumn("_bloom_hit", hit)
     certain_miss = tagged.filter(~F.col("_bloom_hit")).drop("_bloom_hit")
     candidates = tagged.filter(F.col("_bloom_hit")).drop("_bloom_hit")
     survivors = candidates.join(

@@ -37,7 +37,7 @@ learned.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
@@ -45,17 +45,12 @@ from ..materialize import materialize
 EOW = "</w>"
 
 
-def word_counts(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
+def word_counts(df: DataFrame) -> DataFrame:
     """Corpus -> (word, n): the single corpus-sized pass of BPE
     training. Map-side combine absorbs the Zipf head before the
     shuffle."""
-    text = F.col(text_col)
-    if lowercase:
-        text = F.lower(text)
     return (
-        df.select(F.explode(F.split(text, " ")).alias("word"))
+        df.select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -68,15 +63,13 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _initial_symbols(word: str, eow: str | None) -> str:
+def _initial_symbols(word: str) -> str:
     """SQL text for the initial per-character symbol array. SQL strings
     rather than Column trees: the nested merge folds pay a py4j driver
     round-trip per node, where one F.expr parse at the consumer does not
     (BASELINE.md, "Plan-construction figures")."""
     chars = f"filter(split({word}, ''), c -> c != '')"
-    if eow:
-        chars = f"concat({chars}, array({_sql_str(eow)}))"
-    return chars
+    return f"concat({chars}, array({_sql_str(EOW)}))"
 
 
 def _apply_merge(syms: str, a: str, b: str) -> str:
@@ -129,73 +122,21 @@ def _pair_counts(symtab: DataFrame) -> DataFrame:
     )
 
 
-def _select_batch(
-    cands, want: int, min_pair_count: int
-) -> list[tuple[str, str, int]]:
-    """Greedy non-interacting rule selection from ONE pair-count
-    snapshot, in (cnt desc, a, b) order. A candidate is skipped when it
-    shares a symbol with an already-picked rule or with a string a pick
-    will create (applying the picks could change its count or its
-    leftmost-first match positions); non-interacting candidates' counts
-    are INVARIANT under the picks (a merge only consumes occurrences of
-    its own symbols and creates pairs containing its new token), which
-    is what makes applying them from the stale snapshot sound."""
-    picked: list[tuple[str, str, int]] = []
-    touched: set[str] = set()
-    for r in cands:
-        if len(picked) >= want:
-            break
-        if r["cnt"] < min_pair_count:
-            break
-        a, b = r["a"], r["b"]
-        if a in touched or b in touched or (a + b) in touched:
-            continue
-        picked.append((a, b, int(r["cnt"])))
-        touched.update((a, b, a + b))
-    return picked
-
-
-def train_bpe(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    lowercase: bool = True,
-    eow: str | None = EOW,
-    min_pair_count: int = 2,
-    batch_size: int = 1,
-    stats: dict | None = None,
-) -> list[tuple[str, str, int]]:
+def train_bpe(df: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merge rules from a corpus. Returns the
     ordered rule list ``[(a, b, pair_count), ...]`` — the tokenizer
     model. Deterministic: ties on count break lexicographically on
     (a, b), so the learned vocabulary is reproducible across runs,
     partitionings, and engines.
 
-    Stops early (returns fewer rules) when no remaining pair reaches
-    ``min_pair_count`` — merging singleton pairs only memorizes the
-    corpus.
+    Stops early (returns fewer rules) when no remaining pair occurs at
+    least twice — merging singleton pairs only memorizes the corpus.
 
-    ``batch_size=1`` (default) is the exact sequential reference
-    algorithm: one cluster round (pair-count argmax + symtab rewrite)
-    PER MERGE — 32k jobs for a 32k-merge production vocab, which is
-    scheduling-bound long before it is data-bound. ``batch_size>1``
-    learns up to that many NON-INTERACTING rules per round from one
-    count snapshot (the same batching discipline fast trainers use):
-    rules sharing no symbols — and not colliding with a string another
-    pick creates — have snapshot-invariant counts, so applying them
-    together equals applying them sequentially; the approximation is
-    only that rules after the first were RANKED against the stale
-    snapshot, so a pair created mid-batch cannot jump the queue until
-    the next round. Where the round's top candidates don't interact at
-    all, the batched model is IDENTICAL to sequential (pinned in
-    tests/test_bpe.py); cluster rounds drop ~batch_size-fold.
-    ``stats`` (optional dict) receives {'rounds': ...} so callers can
-    assert the merges-per-round ratio."""
+    One cluster round (pair-count argmax + symtab rewrite) per merge:
+    the exact sequential algorithm."""
     if n_merges <= 0:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    if batch_size <= 0:
-        raise ValueError(f"batch_size must be positive, got {batch_size}")
-    wc = word_counts(df, text_col=text_col, lowercase=lowercase)
+    wc = word_counts(df)
     # localCheckpoint per round, NOT persist: persist caches blocks but
     # leaves the logical plan intact, so each round would nest another
     # fold and analysis cost would grow quadratically with n_merges
@@ -204,42 +145,29 @@ def train_bpe(
     # propagation; same cluster-durability caveat and remedy as
     # dedup_clusters discusses.
     symtab = wc.select(
-        "n", F.expr(_initial_symbols("word", eow)).alias("syms")
+        "n", F.expr(_initial_symbols("word")).alias("syms")
     ).transform(materialize)
     merges: list[tuple[str, str, int]] = []
-    rounds = 0
     while len(merges) < n_merges:
-        want = min(batch_size, n_merges - len(merges))
-        # over-fetch so interaction skips can still fill the batch; the
-        # top rule is never skipped, so progress is guaranteed
-        cands = (
+        top = (
             _pair_counts(symtab)
             .orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(max(4 * want, 8))
+            .limit(1)
             .collect()
         )
-        rounds += 1
-        picked = _select_batch(cands, want, min_pair_count)
-        if not picked:
+        if not top or top[0]["cnt"] < 2:
             break
-        merges.extend(picked)
-        syms = "syms"
-        for a, b, _cnt in picked:
-            syms = _apply_merge(syms, a, b)
+        a, b = top[0]["a"], top[0]["b"]
+        merges.append((a, b, int(top[0]["cnt"])))
         symtab = symtab.select(
-            "n", F.expr(syms).alias("syms")
+            "n", F.expr(_apply_merge("syms", a, b)).alias("syms")
         ).transform(materialize)
-    if stats is not None:
-        stats["rounds"] = rounds
     return merges
 
 
 def bpe_segment(
     df: DataFrame,
     merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    word_col: str = "word",
-    eow: str | None = EOW,
-    checkpoint_every: int = 64,
 ) -> DataFrame:
     """Apply a learned merge sequence to a table of words: adds a
     ``pieces`` array<string> column — the tokenizer's ENCODE side,
@@ -247,25 +175,23 @@ def bpe_segment(
     BPE: encode applies merges in learned order, not greedily by
     frequency).
 
-    Rules are applied in chunks of ``checkpoint_every`` nested folds
-    with a lineage-truncating materialization between chunks: a
+    Rules are applied in chunks of 64 nested folds with a
+    lineage-truncating materialization between chunks: a
     production merge list (tens of thousands of rules) folded into ONE
     column expression would build a Catalyst tree deep enough to blow
     analysis/codegen. A merge list at most one chunk long stays a pure
     single-plan transform."""
-    if checkpoint_every <= 0:
-        raise ValueError(f"checkpoint_every must be positive, got {checkpoint_every}")
     if "pieces" in df.columns:
         # same collision discipline as salted_topk:
         # silently overwriting a caller's column is a data bug, not a
         # convenience
         raise ValueError("bpe_segment writes a 'pieces' column; input already has one")
-    syms = _initial_symbols(f"`{word_col}`", eow)
+    syms = _initial_symbols("`word`")
     out = df
     for i, rule in enumerate(merges):
         a, b = rule[0], rule[1]
         syms = _apply_merge(syms, a, b)
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < len(merges):
+        if (i + 1) % 64 == 0 and (i + 1) < len(merges):
             out = materialize(out.withColumn("pieces", F.expr(syms)))
             syms = "pieces"
     return out.withColumn("pieces", F.expr(syms))

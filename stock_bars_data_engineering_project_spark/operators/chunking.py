@@ -31,26 +31,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def chunk_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_size: int = 32,
-    overlap: int = 8,
-    tokenizer_pattern: str = " ",
-) -> DataFrame:
-    """Split ``text_col`` into overlapping token windows.
+def chunk_documents(df: DataFrame, chunk_size: int = 32, overlap: int = 8) -> DataFrame:
+    """Split ``text`` on single spaces into overlapping token windows.
 
-    Returns one row per chunk: ``(id_col, chunk_id, chunk_tokens,
+    Returns one row per chunk: ``(doc_id, chunk_id, chunk_tokens,
     chunk_text)`` where ``chunk_id`` is the 0-based window index,
     ``chunk_tokens`` the window's token count and ``chunk_text`` the
     space-rejoined window. Deterministic, map-only, engine-portable
     (the DuckDB oracle replays the same slicing arithmetic).
-
-    ``tokenizer_pattern`` is a Java REGEX (it feeds ``F.split``), not a
-    literal delimiter — pass ``re.escape``-d text for literal splitting
-    on regex metacharacters ('.', '|', ...); the oracle-gated path uses
-    the default single space, which is metacharacter-free.
     """
     if chunk_size <= 0:
         raise ValueError(f"chunk_size must be positive, got {chunk_size}")
@@ -60,19 +48,19 @@ def chunk_documents(
         )
     stride = chunk_size - overlap
 
-    toks = F.split(F.col(text_col), tokenizer_pattern)
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     # ceil((n - overlap) / stride) without floats; n <= overlap (short
     # doc) clamps to one chunk. NULL text must fail loudly here — a
     # silent zero-chunk drop would make the document vanish from the
     # training set with no audit trail (same stance as hash_bucket).
     n_chunks = F.when(
-        F.col(text_col).isNull(),
+        F.col("text").isNull(),
         F.raise_error(F.lit("chunk_documents: NULL text — filter or scrub first")),
     ).otherwise(F.greatest(F.lit(1), F.floor((n - overlap + stride - 1) / stride)))
 
     exploded = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_toks"),
         F.explode(
             F.sequence(F.lit(0).cast("long"), (n_chunks - 1).cast("long"))
@@ -84,7 +72,7 @@ def chunk_documents(
         F.col("_toks"), (F.col("chunk_id") * stride + 1).cast("int"), chunk_size
     )
     return exploded.select(
-        id_col,
+        "doc_id",
         F.col("chunk_id").cast("int").alias("chunk_id"),
         F.size(window).cast("int").alias("chunk_tokens"),
         F.array_join(window, " ").alias("chunk_text"),

@@ -23,8 +23,6 @@ def contamination_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per corpus document: how many of its distinct k-word shingles
     appear anywhere in the benchmark set, plus the contaminated
@@ -39,14 +37,14 @@ def contamination_overlap(
     # shingling is the per-row CPU here; balance() guards against a
     # coarse upstream (one row-group) serializing it on one core
     shingled = balance(corpus).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(word_shingles(F.col(text_col), k)).alias("shingles"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles(F.col("text"), k)).alias("shingles"),
     ).filter(F.size("shingles") > 0)
 
     bench_shingles = (
         benchmark.select(
             F.explode(
-                F.array_distinct(word_shingles(F.col(text_col), k))
+                F.array_distinct(word_shingles(F.col("text"), k))
             ).alias("shingle")
         )
         .distinct()
@@ -70,14 +68,7 @@ def contamination_overlap(
     )
 
 
-def boilerplate_scrub(
-    df: DataFrame,
-    k: int = 3,
-    df_cap: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_hot: bool = True,
-) -> DataFrame:
+def boilerplate_scrub(df: DataFrame, k: int = 3, df_cap: int = 5) -> DataFrame:
     """Corpus-level boilerplate removal (the C4/RefinedWeb-style scrub):
     any k-token span that appears in >= ``df_cap`` DISTINCT documents is
     treated as boilerplate (headers, footers, license banners, nav
@@ -89,9 +80,8 @@ def boilerplate_scrub(
        slice + concat_ws), one explode;
     2. gram document-frequency — ONE partial-aggregable groupBy; grams
        at or over ``df_cap`` form the hot set, whose size is bounded by
-       total_grams/df_cap and in real corpora is a tiny fraction
-       (``broadcast_hot=False`` falls back to a shuffle join when a
-       pathological corpus overflows the broadcast limit);
+       total_grams/df_cap and in real corpora is a tiny fraction, so
+       it is broadcast;
     3. covered positions per doc — the hot-occurrence join fans out k
        positions per hit, then ONE groupBy(doc) collect_set; the
        rebuild is a map-side indexed array filter.
@@ -105,7 +95,7 @@ def boilerplate_scrub(
     spaces (a normalized token join, both engines reassemble
     identically). Documents shorter than k tokens pass through intact.
     """
-    pos_grams = positional_grams(df, k, id_col=id_col, text_col=text_col)
+    pos_grams = positional_grams(df, k)
     hot = (
         gram_doc_frequency(pos_grams)
         .filter(F.col("gram_df") >= df_cap)
@@ -115,23 +105,18 @@ def boilerplate_scrub(
         df,
         hot,
         k,
-        id_col=id_col,
-        text_col=text_col,
-        broadcast_hot=broadcast_hot,
         pos_grams=pos_grams,
     )
 
 
-def positional_grams(
-    df: DataFrame, k: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def positional_grams(df: DataFrame, k: int) -> DataFrame:
     """(doc_id, pos, gram): every k-token span with its 1-based start
     position — map-side array ops (sequence + slice + concat_ws), one
     explode."""
     from ..sources.readers import balance
 
-    toks = tokens(F.col(text_col))
-    base = balance(df).select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = tokens(F.col("text"))
+    base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
     n = F.size("toks")
     empty_pg = F.array().cast("array<struct<pos:int,gram:string>>")
     return base.select(
@@ -167,9 +152,6 @@ def scrub_against(
     df: DataFrame,
     hot: DataFrame,
     k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_hot: bool = True,
     pos_grams: DataFrame | None = None,
 ) -> DataFrame:
     """Remove every position covered by an occurrence of a ``hot`` gram
@@ -178,11 +160,11 @@ def scrub_against(
     or the incrementally maintained one)."""
     from ..sources.readers import balance
 
-    toks = tokens(F.col(text_col))
-    base = balance(df).select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = tokens(F.col("text"))
+    base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
     if pos_grams is None:
-        pos_grams = positional_grams(df, k, id_col=id_col, text_col=text_col)
-    hot_side = F.broadcast(hot) if broadcast_hot else hot
+        pos_grams = positional_grams(df, k)
+    hot_side = F.broadcast(hot)
     covered = (
         pos_grams.join(hot_side, "gram")
         .select(
@@ -224,17 +206,11 @@ def _rebuild_minus_covered(base: DataFrame, covered: DataFrame) -> DataFrame:
     )
 
 
-def exact_substr_scrub(
-    df: DataFrame,
-    k: int = 8,
-    min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def exact_substr_scrub(df: DataFrame, k: int = 8) -> DataFrame:
     """Exact-substring dedup (the suffix-array pass of Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
     re-expressed at k-gram granularity): every occurrence of a k-token
-    span that appears ``min_count``-or-more times ANYWHERE in the corpus
+    span that appears twice or more ANYWHERE in the corpus
     — across documents or repeated within one — is removed EXCEPT the
     globally first occurrence (ordered by (doc_id, position)), which
     survives in place. Overlapping duplicated grams merge into longer
@@ -260,19 +236,16 @@ def exact_substr_scrub(
     document, same contract as :func:`boilerplate_scrub`.
     """
     from ..sources.readers import balance
-
-    if min_count < 2:
-        raise ValueError("exact_substr_scrub: min_count must be >= 2")
-    toks = tokens(F.col(text_col))
-    base = balance(df).select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
-    pos_grams = positional_grams(df, k, id_col=id_col, text_col=text_col)
+    toks = tokens(F.col("text"))
+    base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
+    pos_grams = positional_grams(df, k)
     winners = (
         pos_grams.groupBy("gram")
         .agg(
             F.count(F.lit(1)).alias("n_occ"),
             F.min(F.struct("doc_id", "pos")).alias("keep"),
         )
-        .filter(F.col("n_occ") >= min_count)
+        .filter(F.col("n_occ") >= 2)
         .select("gram", "keep")
     )
     dup_occ = pos_grams.join(winners, "gram").filter(
@@ -292,15 +265,7 @@ def exact_substr_scrub(
     return _rebuild_minus_covered(base, covered)
 
 
-def dedup_paragraphs(
-    df: DataFrame,
-    split_re: str = r"\n{2,}",
-    join_delim: str = "\n\n",
-    min_chars: int = 1,
-    casefold: bool = True,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_paragraphs(df: DataFrame) -> DataFrame:
     """Corpus-global exact paragraph dedup (the C4/RefinedWeb pass that
     complements :func:`boilerplate_scrub`): every paragraph occurrence
     that is not the globally FIRST occurrence of its normalized form is
@@ -308,12 +273,11 @@ def dedup_paragraphs(
     the keeper is deterministic — survive in place.
 
     Matching normalizes each paragraph (trim + inner-whitespace
-    collapse, lowercase unless ``casefold=False``) and keys on the
-    128-bit md5 of the normalized form — the same exact-dedup key
-    discipline as ``dedup_exact`` (operators/dedup.py). Paragraphs whose
-    normalized length is under ``min_chars`` are exempt (always kept):
-    empty/near-empty fragments would otherwise both be destroyed
-    corpus-wide AND form degenerate hot keys.
+    collapse + lowercase) and keys on the 128-bit md5 of the normalized
+    form — the same exact-dedup key discipline as ``dedup_exact``
+    (operators/dedup.py). Paragraphs that normalize to the empty string
+    are exempt (always kept): empty fragments would otherwise both be
+    destroyed corpus-wide AND form a degenerate hot key.
 
     Scale shape (the 100-TB question is the boilerplate paragraph that
     appears in millions of documents):
@@ -326,28 +290,26 @@ def dedup_paragraphs(
        plain shuffle equi-join, AQE skew-split eligible, carrying only
        ``(key, doc_id, pos)`` — never the paragraph text;
     4. per-doc rebuild — groupBy(doc) collect_set of removed positions,
-       indexed array filter, re-join with ``join_delim`` (the
+       indexed array filter, re-join with a blank line (the
        scrub_against idiom).
 
     Output: ``(doc_id, n_paragraphs, n_removed, clean_text)`` for EVERY
     input document (docs with no duplicate paragraphs pass through with
     n_removed=0; ``clean_text`` keeps the ORIGINAL paragraph text, only
-    the inter-paragraph delimiter is normalized to ``join_delim``).
+    the inter-paragraph delimiter is normalized to one blank line).
     """
     from ..sources.readers import balance
 
     # NULL text is treated as "" (one empty, exempt paragraph) — explode
     # of a NULL array would silently DROP the document from the output
-    paras = F.split(F.coalesce(F.col(text_col), F.lit("")), split_re)
-    base = balance(df).select(F.col(id_col).alias("doc_id"), paras.alias("paras"))
+    paras = F.split(F.coalesce(F.col("text"), F.lit("")), r"\n{2,}")
+    base = balance(df).select(F.col("doc_id"), paras.alias("paras"))
 
-    norm = F.trim(F.regexp_replace(F.col("para"), r"\s+", " "))
-    if casefold:
-        norm = F.lower(norm)
+    norm = F.lower(F.trim(F.regexp_replace(F.col("para"), r"\s+", " ")))
     occ = (
         base.select("doc_id", F.posexplode("paras").alias("pos", "para"))
         .select("doc_id", "pos", norm.alias("norm"))
-        .filter(F.length("norm") >= min_chars)
+        .filter(F.length("norm") >= 1)
         .select("doc_id", "pos", F.md5(F.col("norm")).alias("pkey"))
     )
     winners = occ.groupBy("pkey").agg(
@@ -374,5 +336,5 @@ def dedup_paragraphs(
         "doc_id",
         F.size("paras").cast("bigint").alias("n_paragraphs"),
         F.size(rm).cast("bigint").alias("n_removed"),
-        F.array_join(kept, join_delim).alias("clean_text"),
+        F.array_join(kept, "\n\n").alias("clean_text"),
     )

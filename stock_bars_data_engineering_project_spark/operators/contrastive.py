@@ -43,18 +43,11 @@ def contrastive_pairs(
     n_pos: int = 3,
     n_hard: int = 2,
     n_rand: int = 2,
-    pos_floor: float | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_buckets: int | None = None,
-    topk_fn=cosine_topk,
 ) -> DataFrame:
     """Mine (anchor_id, role, other_id, score, slot) rows: roles
-    'pos' (rank 1..n_pos, optionally gated by ``pos_floor``), 'hard'
-    (rank n_pos+1..n_pos+n_hard), 'rand' (hash-addressed, score NULL).
-
-    ``topk_fn(corpus, anchors, k, vec_col, id_col)`` is the ANN
-    strategy — brute-force by default, LSH/IVF drop in unchanged.
+    'pos' (rank 1..n_pos), 'hard' (rank n_pos+1..n_pos+n_hard), 'rand'
+    (hash-addressed, score NULL). Neighbors come from the brute-force
+    ``cosine_topk`` over ``vec_id``/``embedding``.
     """
     for n, v in (("n_pos", n_pos), ("n_hard", n_hard), ("n_rand", n_rand)):
         if v < 0:
@@ -62,13 +55,8 @@ def contrastive_pairs(
     if n_pos + n_hard + n_rand == 0:
         raise ValueError("nothing to mine: all of n_pos/n_hard/n_rand are 0")
 
-    neighbors = topk_fn(
-        corpus, anchors, k=n_pos + n_hard, vec_col=vec_col, id_col=id_col
-    )
-    pos = neighbors.filter(F.col("rank") <= n_pos)
-    if pos_floor is not None:
-        pos = pos.filter(F.col("cos") >= pos_floor)
-    pos = pos.select(
+    neighbors = cosine_topk(corpus, anchors, k=n_pos + n_hard)
+    pos = neighbors.filter(F.col("rank") <= n_pos).select(
         F.col("query_id").alias("anchor_id"),
         F.lit("pos").alias("role"),
         F.col("vec_id").alias("other_id"),
@@ -85,15 +73,14 @@ def contrastive_pairs(
 
     out = pos.unionByName(hard)
     if n_rand > 0:
-        if n_buckets is None:
-            # one expected row per bucket keeps the slot join's fan-in
-            # at O(1) rows; a 1-row aggregate, broadcast into the plan
-            n_buckets = max(1, corpus.count())
+        # one expected row per bucket keeps the slot join's fan-in
+        # at O(1) rows; a 1-row aggregate, broadcast into the plan
+        n_buckets = max(1, corpus.count())
         rows = corpus.select(
-            F.col(id_col).alias("other_id"),
-            hash_bucket(F.col(id_col), n_buckets, salt="negrow").alias("_bkt"),
+            F.col("vec_id").alias("other_id"),
+            hash_bucket(F.col("vec_id"), n_buckets, salt="negrow").alias("_bkt"),
         )
-        slots = anchors.select(F.col(id_col).alias("anchor_id")).crossJoin(
+        slots = anchors.select(F.col("vec_id").alias("anchor_id")).crossJoin(
             F.broadcast(
                 anchors.sparkSession.range(1, n_rand + 1).select(
                     F.col("id").cast("int").alias("slot")

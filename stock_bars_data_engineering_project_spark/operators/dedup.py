@@ -39,34 +39,33 @@ from ..functions.hashing import (
 )
 from ..functions.scalars import round_half_up
 from ..functions.text import tokens, word_shingles
-from ..functions.vectors import as_double, cosine, dot, norm
+from ..functions.vectors import cosine, dot, norm
+from ..materialize import materialize
 from ..sources.readers import balance
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups: md5 content key -> (n_copies, keeper =
     lowest id). One shuffle; at 100 TB the md5-of-text beats shuffling
     full documents as the group key."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_md5"))
+        df.groupBy(F.md5(F.col("text")).alias("content_md5"))
         .agg(
             F.count(F.lit(1)).alias("n_copies"),
-            F.min(id_col).alias("keeper_doc_id"),
+            F.min("doc_id").alias("keeper_doc_id"),
         )
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep exactly one row (lowest id) per distinct content."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
+    w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
     return (
         df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
     )
 
 
-def minhash_signatures(
-    shingled: DataFrame, n_sigs: int = MINHASH_SIGS
-) -> DataFrame:
+def minhash_signatures(shingled: DataFrame) -> DataFrame:
     """(doc_id, n_sh, sig) from a ``_shingled`` frame — explode +
     codegen aggregation, bit-identical to the per-row
     ``minhash_signature`` fold (pinned in test_dedup).
@@ -78,33 +77,33 @@ def minhash_signatures(
     length-prune payload) — whole-stage codegen end to end, one
     partial-aggregated row per doc into the shuffle. Measured ~2-4x at
     the x64 soak scale (minhash_lsh_pairs 12.2 s warm-JVM vs 27-48 s
-    for the HOF fold in the round-4 isolated soak)."""
+    for the HOF fold in an isolated soak)."""
     ex = shingled.select("doc_id", F.explode("shingles").alias("_sh"))
     ex = ex.select(
         "doc_id",
         *[
             F.md5(F.concat(F.lit(f"{s}:"), F.col("_sh"))).alias(f"_h{s}")
-            for s in range(n_sigs)
+            for s in range(MINHASH_SIGS)
         ],
     )
     agg = ex.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_sh"),
-        *[F.min(f"_h{s}").alias(f"_m{s}") for s in range(n_sigs)],
+        *[F.min(f"_h{s}").alias(f"_m{s}") for s in range(MINHASH_SIGS)],
     )
     return agg.select(
         "doc_id",
         "n_sh",
-        F.array(*[F.col(f"_m{s}") for s in range(n_sigs)]).alias("sig"),
+        F.array(*[F.col(f"_m{s}") for s in range(MINHASH_SIGS)]).alias("sig"),
     )
 
 
-def _shingled(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+def _shingled(df: DataFrame) -> DataFrame:
     slim = balance(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+        df.select(F.col("doc_id"), F.col("text").alias("_text"))
     )
     return slim.select(
         "doc_id",
-        F.array_distinct(word_shingles(F.col("_text"), k)).alias("shingles"),
+        F.array_distinct(word_shingles(F.col("_text"), 3)).alias("shingles"),
     ).filter(F.size("shingles") > 0)
 
 
@@ -187,18 +186,12 @@ def _bucket_pairs(
     return exploded.dropDuplicates(["a", "b"]) if distinct else exploded
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
     """MinHash+LSH near-duplicate pairs, exact-Jaccard verified.
 
     shingle -> 16 MD5-minhash sigs -> 4 bands -> explode band keys ->
     bucket-aggregate pair expansion on (band, key) -> distinct candidate
-    pairs -> verify with exact Jaccard >= threshold. Banding bounds the
+    pairs -> verify with exact Jaccard >= 0.7. Banding bounds the
     candidate set: only docs agreeing on an entire band ever meet. The
     bucket aggregation (vs. a band self-join) computes the per-shingle
     minhash signatures exactly once and never shuffles the shingle
@@ -210,7 +203,7 @@ def minhash_lsh_pairs(
     semi-joins the docs to the candidate ids first and re-shingles only
     those — see operators/incremental_dedup.py.)
     """
-    shingled = _shingled(df, text_col, id_col, k)
+    shingled = _shingled(df)
     # codegen explode+agg signatures (see minhash_signatures); the agg
     # output is materialized ahead of the band expressions, so the
     # per-shingle hashing runs exactly once per doc
@@ -237,7 +230,7 @@ def minhash_lsh_pairs(
         "doc_id",
         ("n_sh",),
         pair_pred=lambda a, b: F.least(a["n_sh"], b["n_sh"])
-        >= F.lit(threshold - 1e-3) * F.greatest(a["n_sh"], b["n_sh"]),
+        >= F.lit(0.7 - 1e-3) * F.greatest(a["n_sh"], b["n_sh"]),
     )
     sa = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     sb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
@@ -251,151 +244,60 @@ def minhash_lsh_pairs(
     jac = round_half_up(inter / union, 4)
     return (
         cand.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.7)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.7,
-    max_shingle_df: int | None = None,
-    prefix_filter: bool = False,
-) -> DataFrame:
-    """Exact all-pairs n-gram Jaccard — no LSH recall loss.
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """Exact all-pairs 3-shingle Jaccard >= 0.7 — no LSH recall loss.
 
-    Default path: full inverted index — every pair sharing >= 1 shingle
-    meets in the postings join and the intersection is COUNTED inside
-    the (partial-aggregable) groupBy, so no shingle array is ever
-    re-fetched. MEASURED the faster shape on this corpus at every scale
-    tried (x16 replication: 9.3s vs 19.9s steady) because the verify is
-    free and the join stays aggregate-bound.
-
-    ``prefix_filter=True`` (Chaudhuri/Vernica SSJoin prefix filtering):
-    sort each doc's distinct shingles under one global total order (md5
-    — deterministic, no statistics pass) and index ONLY the first
-    ``|d| - ceil(t*|d|) + 1``. Jaccard >= t forces an intersection of
-    >= ceil(t*max(|A|,|B|)) shingles, so prefixes must intersect under
-    any common order — candidates are COMPLETE, then an exact full-set
-    verify (array_intersect) restores exact scores; equivalence of the
-    two paths is pinned in tests. At t=0.7 the index holds ~0.3 of the
-    postings: the shape to switch to when the POSTINGS JOIN itself is
-    the bottleneck (very long documents or heavy cross-doc shingle
-    sharing, where df^2 join fan-out dwarfs the per-candidate verify).
-
-    ``max_shingle_df`` drops shingles appearing in more than N docs
-    (stop-shingles), the standard skew guard; it CHANGES semantics
-    (Jaccard over the capped universe) and composes with either path.
+    Full inverted index: every pair sharing >= 1 shingle meets in the
+    postings join and the intersection is COUNTED inside the
+    (partial-aggregable) groupBy, so no shingle array is ever
+    re-fetched. Measured faster than SSJoin prefix filtering on this
+    corpus at every scale tried (x16 replication: 9.3s vs 19.9s steady)
+    because the verify is free and the join stays aggregate-bound.
     """
-    shingled = _shingled(df, text_col, id_col, k)
-    if max_shingle_df is not None:
-        inv_all = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
-        hot = (
-            inv_all.groupBy("shingle").count().filter(F.col("count") > max_shingle_df)
-        )
-        hot_arr = F.broadcast(
-            hot.agg(F.collect_set("shingle").alias("_hot"))
-        )
-        # Jaccard must be computed over the FILTERED shingle universe on
-        # BOTH sides: keeping dropped shingles in the union but never in
-        # the intersection would deflate scores (an exact duplicate
-        # could fall below threshold).
-        shingled = shingled.crossJoin(hot_arr).select(
-            "doc_id",
-            F.array_except(F.col("shingles"), F.col("_hot")).alias("shingles"),
-        ).filter(F.size("shingles") > 0)
-    if not prefix_filter:
-        inv = shingled.select(
-            "doc_id",
-            F.size("shingles").alias("n_sh"),
-            F.explode("shingles").alias("shingle"),
-        )
-        a = inv.select(
-            F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle"
-        )
-        b = inv.select(
-            F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "shingle"
-        )
-        pairs = (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            # lossless length prune ahead of the pair-count aggregate:
-            # a size-ratio below the threshold already caps jaccard
-            # under it, so those rows never enter the groupBy shuffle.
-            # 1e-3 slack: the emit contract is ROUNDED jaccard >= t
-            # (half-up at 4 decimals), so true J in [t - 5e-5, t) must
-            # survive the prune — slack only admits extra candidates.
-            .filter(
-                F.least("n_a", "n_b")
-                >= F.lit(threshold - 1e-3) * F.greatest("n_a", "n_b")
-            )
-            .groupBy("doc_a", "doc_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        jac = round_half_up(
-            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 4
-        )
-        return (
-            pairs.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
-    # prefix path: md5-sorted shingles, index the first n - ceil(t*n) + 1
-    ordered = shingled.select(
+    shingled = _shingled(df)
+    inv = shingled.select(
         "doc_id",
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    F.col("shingles"),
-                    lambda s: F.struct(F.md5(s).alias("h"), s.alias("s")),
-                )
-            ),
-            lambda x: x["s"],
-        ).alias("shingles"),
+        F.size("shingles").alias("n_sh"),
+        F.explode("shingles").alias("shingle"),
     )
-    # Two deliberate slacks, both one-sided (a longer prefix only adds
-    # candidates, never drops one): 1e-3 mirrors the other prune sites —
-    # the emit contract is ROUNDED jaccard >= t, so true J in
-    # [t - 5e-5, t) must still produce a candidate, which the raw-t
-    # prefix length cannot guarantee; 1e-9 guards the ceil when t*n is
-    # mathematically integral but the double product rounds a hair high.
-    prefix_len = (
-        F.size("shingles")
-        - F.ceil(F.size("shingles") * F.lit(threshold - 1e-3) - F.lit(1e-9))
-        + 1
-    ).cast("int")
-    inv = ordered.select(
-        "doc_id",
-        F.explode(F.slice(F.col("shingles"), 1, prefix_len)).alias("shingle"),
+    a = inv.select(
+        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle"
     )
-    cand = (
-        inv.alias("a")
-        .join(inv.alias("b"), "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    b = inv.select(
+        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "shingle"
+    )
+    pairs = (
+        a.join(b, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        # lossless length prune ahead of the pair-count aggregate:
+        # a size-ratio below the threshold already caps jaccard
+        # under it, so those rows never enter the groupBy shuffle.
+        # 1e-3 slack: the emit contract is ROUNDED jaccard >= t
+        # (half-up at 4 decimals), so true J in [t - 5e-5, t) must
+        # survive the prune — slack only admits extra candidates.
+        .filter(
+            F.least("n_a", "n_b")
+            >= F.lit(0.7 - 1e-3) * F.greatest("n_a", "n_b")
         )
-        .dropDuplicates(["doc_a", "doc_b"])
+        .groupBy("doc_a", "doc_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = ordered.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = ordered.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    jac = round_half_up(
+        F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 4
+    )
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", round_half_up(inter / union, 4))
-        .filter(F.col("jaccard") >= threshold)
+        pairs.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= 0.7)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
-def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_fingerprints(df: DataFrame) -> DataFrame:
     """Per-document 60-bit SimHash fingerprint, explode + codegen
     aggregation.
 
@@ -415,7 +317,7 @@ def simhash_fingerprints(
     them to ONE row per doc before it moves — n skinny rows, nothing
     like the token volume."""
     slim = balance(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+        df.select(F.col("doc_id"), F.col("text").alias("_text"))
     )
     tok = slim.select(
         "doc_id", F.explode_outer(tokens(F.col("_text"))).alias("_tok")
@@ -429,8 +331,8 @@ def simhash_fingerprints(
     # The 60 vote aggregates and the 60-piece fingerprint assembly are
     # each ONE F.expr parse instead of loop-built Column trees: py4j
     # constructs expressions one round-trip per operator node (~2 s of
-    # pure driver time per call for these two loops, measured at
-    # round 10), while the SQL parser builds the identical trees in a
+    # pure driver time per call for these two loops, measured), while
+    # the SQL parser builds the identical trees in a
     # few ms. CASE WHEN b IS NULL handles the explode_outer row of a
     # NULL-text doc (split of non-null text never yields an empty
     # array): zero votes, and the _ntok guard below turns the whole
@@ -484,7 +386,7 @@ def _simhash_block_pieces(col: str):
     (block i, sub-block j) of a 60-bit fingerprint — THE one definition
     of the two-level split, shared by the bucket keys and the canonical
     first-match index so they cannot drift. SQL strings rather than
-    Column trees (round-10 opt): py4j pays one driver round-trip per
+    Column trees: py4j pays one driver round-trip per
     expression node, so the loop-built Column form cost ~0.5 s of pure
     plan construction per call where F.expr parses the identical tree
     in single-digit ms."""
@@ -520,20 +422,10 @@ def _simhash_first_match_idx(x: str, y: str) -> Column:
     return F.expr(f"CASE {whens} ELSE -1 END")
 
 
-def simhash_pairs_from_fingerprints(
-    fp: DataFrame, max_hamming: int = 3
-) -> DataFrame:
+def simhash_pairs_from_fingerprints(fp: DataFrame) -> DataFrame:
     """Blocking + verify over precomputed (doc_id, simhash) rows — see
     ``simhash_pairs``; split out so completeness can be pinned against
     brute force on synthetic fingerprints without text hashing."""
-    if max_hamming > SIMHASH_BLOCKS - 1:
-        # pigeonhole over 4 blocks only guarantees a shared block for
-        # hamming <= 3; a larger bound would silently lose pairs whose
-        # errors spread one-per-block
-        raise ValueError(
-            f"simhash blocking is candidate-complete only for "
-            f"max_hamming <= {SIMHASH_BLOCKS - 1}, got {max_hamming}"
-        )
     keys_sql = ", ".join(
         # one long key: block value in the high bits, sub value low
         f"(shiftleft({block_val}, 12) | {sub_val})"
@@ -557,7 +449,7 @@ def simhash_pairs_from_fingerprints(
         "doc_id",
         ("simhash",),
         pair_pred=lambda a, b, block_idx: (
-            hamming(a["simhash"], b["simhash"]) <= F.lit(max_hamming)
+            hamming(a["simhash"], b["simhash"]) <= F.lit(3)
         )
         & (_simhash_first_match_idx("a.simhash", "b.simhash") == block_idx),
         pred_keys=("block_idx",),
@@ -570,12 +462,7 @@ def simhash_pairs_from_fingerprints(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame) -> DataFrame:
     """SimHash near-dup pairs, Manku-style TWO-LEVEL pigeonhole blocking
     with canonical single-bucket emission.
 
@@ -598,22 +485,17 @@ def simhash_pairs(
     (map-side bit math over the XOR), so the former distinct-pair
     shuffle — up to 16x the true pair count on collision-heavy
     corpora — is gone entirely."""
-    fp = simhash_fingerprints(df, text_col, id_col)
-    return simhash_pairs_from_fingerprints(fp, max_hamming)
+    fp = simhash_fingerprints(df)
+    return simhash_pairs_from_fingerprints(fp)
 
 
-def _materialize_rounds(df: DataFrame, durable: bool | None) -> DataFrame:
-    """Per-round materialization for the label-propagation loop — the
-    shared cluster-safe switch (see ``materialize``'s module docstring
-    for the localCheckpoint-vs-checkpoint trade)."""
-    from ..materialize import materialize
-
-    return materialize(df, durable)
+# Round budgets of the two connected-components loops: past them the
+# labels are not yet minimal, so the loops raise instead of answering.
+PROPAGATION_ROUNDS = 20
+STAR_ROUNDS = 30
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iters: int = 20, durable: bool | None = None
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs -> duplicate clusters:
     every doc labeled with the smallest doc_id reachable through the
     pair graph (the canonical keeper). THE dedup endgame — pairwise
@@ -633,14 +515,10 @@ def dedup_clusters(
     for every doc that appears in some pair; singleton docs are their
     own cluster by definition and need no row.
 
-    ``durable`` selects the per-round materialization (see
-    ``_materialize_rounds``): False = executor-local blocks (fast,
-    dies with an executor), True = reliable ``checkpoint()`` to the
-    fault-tolerant checkpoint dir (the cluster posture). Default reads
-    the ``spark.graft.durableCheckpoint`` session conf (``"true"``/
-    ``"false"``, absent = false) so deployments flip the mode — for
-    EVERY materializing operator, not just this one — without threading
-    a flag through call sites.
+    Each round materializes through ``materialize``, so the
+    ``spark.graft.durableCheckpoint`` session conf picks executor-local
+    blocks or a reliable ``checkpoint()`` for it as for every other
+    materializing operator.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -654,11 +532,11 @@ def dedup_clusters(
         # loop checkpoints the labels, but without this the other join
         # input re-runs the whole hashing DAG once per round
     )
-    edges = _materialize_rounds(edges, durable)
+    edges = materialize(edges)
     labels = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
-    for _ in range(max_iters):
+    for _ in range(PROPAGATION_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -676,7 +554,7 @@ def dedup_clusters(
         # Materialize once (truncating lineage), then run the convergence
         # check against the checkpointed data — checking before
         # checkpointing would compute the round twice.
-        new_labels = _materialize_rounds(new_labels, durable)
+        new_labels = materialize(new_labels)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
@@ -688,23 +566,19 @@ def dedup_clusters(
             break
     else:
         # Silent wrong answers are worse than failure: if a component's
-        # diameter exceeds max_iters the labels are not yet minimal and
-        # "keeper" semantics would split one cluster into several.
+        # diameter exceeds the round budget the labels are not yet
+        # minimal and "keeper" semantics would split one cluster.
         raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} iterations "
-            "(a duplicate chain longer than max_iters exists); raise max_iters"
+            f"dedup_clusters did not converge in {PROPAGATION_ROUNDS} "
+            "iterations (a longer duplicate chain exists); use "
+            "dedup_clusters_star"
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
 
-def dedup_clusters_star(
-    pairs: DataFrame,
-    max_iters: int = 30,
-    durable: bool | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
+def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     rounds — the scale-path twin of :func:`dedup_clusters` with the
     SAME contract (every doc in some pair labeled with the smallest
@@ -730,10 +604,8 @@ def dedup_clusters_star(
     Both steps are one aggregate + one join over the (pair-graph-
     sized, corpus-small) edge set, shuffle-keyed on node id; the fixed
     point is a forest of stars whose centers are the component minima,
-    read off as (doc_id, cluster_id). Per-round materialization and
-    the ``durable`` dial are shared with the propagation twin.
-    ``stats`` (optional dict) receives ``{"rounds": n}`` — the
-    soak/SCALING instrumentation that shows the round-count win.
+    read off as (doc_id, cluster_id). Per-round materialization is
+    shared with the propagation twin.
     """
     # (larger, smaller)-oriented edge list, one row per undirected edge
     edges = (
@@ -744,13 +616,13 @@ def dedup_clusters_star(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    edges = _materialize_rounds(edges, durable)
+    edges = materialize(edges)
     members = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
         .distinct()
     )
-    members = _materialize_rounds(members, durable)
+    members = materialize(members)
 
     def _large_star(e: DataFrame) -> DataFrame:
         # symmetrize, then every strictly-larger neighbor of u hooks
@@ -783,23 +655,19 @@ def dedup_clusters_star(
             .distinct()
         )
 
-    for i in range(max_iters):
-        new_edges = _materialize_rounds(
-            _small_star(_large_star(edges)), durable
-        )
+    for _ in range(STAR_ROUNDS):
+        new_edges = materialize(_small_star(_large_star(edges)))
         changed = (
             new_edges.exceptAll(edges).limit(1).count()
             + edges.exceptAll(new_edges).limit(1).count()
         )
         edges = new_edges
         if changed == 0:
-            if stats is not None:
-                stats["rounds"] = i + 1
             break
     else:
         raise RuntimeError(
-            f"dedup_clusters_star did not converge in {max_iters} "
-            "alternating rounds; raise max_iters"
+            f"dedup_clusters_star did not converge in {STAR_ROUNDS} "
+            "alternating rounds"
         )
     # fixed point: a star forest of (child, root) edges, root = the
     # component minimum; roots appear only on the v side, so their own
@@ -813,33 +681,25 @@ def dedup_clusters_star(
     return child.unionByName(roots)
 
 
-def embedding_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.4,
-) -> DataFrame:
+def embedding_dup_pairs(df: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs — brute force all-pairs baseline.
     O(n^2) in corpus size: this is the RECALL ORACLE for tests, not the
     production path. ``embedding_dup_pairs_blocked`` is the default at
     scale (and the registered query)."""
-    slim = balance(df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")))
+    slim = balance(df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")))
     a = slim.select(F.col("_id").alias("id_a"), F.col("_v").alias("v_a"))
     b = slim.select(F.col("_id").alias("id_b"), F.col("_v").alias("v_b"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("cos", round_half_up(cosine("v_a", "v_b"), 4))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= 0.4)
         .select("id_a", "id_b", "cos")
     )
 
 
 def embedding_dup_pairs_blocked(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.4,
     dim: int = 64,
     n_planes: int = 8,
 ) -> DataFrame:
@@ -859,12 +719,12 @@ def embedding_dup_pairs_blocked(
     The candidate rule is deterministic, so the DuckDB oracle replays it
     exactly (same md5-derived plane literals, same hamming cut) — like
     ann_topk_ivf, bucket membership itself is correctness-gated. Blocking
-    trades recall for scale: pairs at >= threshold whose buckets differ
+    trades recall for scale: pairs at cosine >= 0.4 whose buckets differ
     by > 2 bits are not emitted (measured against the exact baseline in
     tests/test_dedup.py)."""
     from .similarity import lsh_bucket
 
-    slim = balance(df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")))
+    slim = balance(df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")))
     bucketed = slim.select(
         "_id", lsh_bucket("_v", dim, n_planes).alias("_bucket")
     )
@@ -919,7 +779,7 @@ def embedding_dup_pairs_blocked(
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cos", pair_cos)
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= 0.4)
         .select("id_a", "id_b", "cos")
     )
 
@@ -928,7 +788,6 @@ def canonical_selection(
     clusters: DataFrame,
     docs: DataFrame,
     quality_col: str = "n_chars",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Cluster-level dedup endgame: pick the KEEPER of each duplicate
     cluster and assign every member a leakage-safe split label.
@@ -960,17 +819,17 @@ def canonical_selection(
     # salted_topk's and shuffle_shards' collision guards
     taken = {"keep", "split"}
     colliding = sorted(
-        taken & (set(clusters.columns) | {quality_col, id_col})
+        taken & (set(clusters.columns) | {quality_col, "doc_id"})
     )
     if colliding:
         raise ValueError(
             f"canonical_selection: column names {colliding} are reserved "
             "for the output; rename them on the input first"
         )
-    quality = docs.select(F.col(id_col), F.col(quality_col))
-    joined = clusters.join(quality, id_col)
+    quality = docs.select(F.col("doc_id"), F.col(quality_col))
+    joined = clusters.join(quality, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(quality_col).desc(), F.col(id_col)
+        F.col(quality_col).desc(), F.col("doc_id")
     )
     ranked = joined.withColumn("keep", F.row_number().over(w) == F.lit(1))
     return stable_split(ranked, id_col="cluster_id")

@@ -43,18 +43,11 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_up
 
 
-def psi_drift(
-    df: DataFrame,
-    value_col: str,
-    is_reference: Column,
-    keys: Sequence[str] = ("event_type",),
-    bin_width: float = 10.0,
-    round_dp: int = 6,
-) -> DataFrame:
-    """PSI between the ``is_reference`` rows and the rest, per key
-    group. Returns one row per key group with columns: the keys,
-    ``psi`` (rounded), and the exact audit integers ``n_ref``,
-    ``n_cur``, ``n_bins`` — gating the population sizes and the bin
+def psi_drift(df: DataFrame, value_col: str, is_reference: Column) -> DataFrame:
+    """PSI between the ``is_reference`` rows and the rest, per
+    ``event_type``, over width-10 value bins. Returns one row per
+    ``event_type`` with ``psi`` (rounded), and the exact audit integers
+    ``n_ref``, ``n_cur``, ``n_bins`` — gating the population sizes and the bin
     support alongside the statistic itself.
 
     ``is_reference`` is any boolean Column (e.g. an even/odd epoch-day
@@ -62,25 +55,21 @@ def psi_drift(
     batch-over-batch drift). Rows where it is NULL are treated as
     current — callers wanting a third bucket should filter first.
     """
-    if bin_width <= 0:
-        raise ValueError(f"bin_width must be positive, got {bin_width}")
-    bucket = F.floor(F.col(value_col) / F.lit(bin_width)).cast("long")
+    bucket = F.floor(F.col(value_col) / F.lit(10.0)).cast("long")
     ref_flag = F.when(is_reference, F.lit(1)).otherwise(F.lit(0))
     # one corpus-sized partial-agg pass: per (key, bucket) side counts
     counts = (
-        df.select(*keys, bucket.alias("_bucket"), ref_flag.alias("_is_ref"))
-        .groupBy(*keys, "_bucket")
+        df.select("event_type", bucket.alias("_bucket"), ref_flag.alias("_is_ref"))
+        .groupBy("event_type", "_bucket")
         .agg(
             F.sum("_is_ref").alias("_c_ref"),
             F.sum(F.lit(1) - F.col("_is_ref")).alias("_c_cur"),
         )
     )
-    return _psi_from_side_counts(counts, keys, round_dp)
+    return _psi_from_side_counts(counts, ("event_type",))
 
 
-def _psi_from_side_counts(
-    counts: DataFrame, keys: Sequence[str], round_dp: int
-) -> DataFrame:
+def _psi_from_side_counts(counts: DataFrame, keys: Sequence[str]) -> DataFrame:
     """The PSI fold shared by :func:`psi_drift` and
     :func:`psi_vs_reference`: ``counts`` is the per-(keys, bin) side
     table (columns ``keys..., _bucket, _c_ref, _c_cur``); totals come
@@ -102,7 +91,7 @@ def _psi_from_side_counts(
         joined.withColumn("_term", (p - q) * F.log(p / q))
         .groupBy(*keys)
         .agg(
-            round_half_up(F.sum("_term"), round_dp).alias("psi"),
+            round_half_up(F.sum("_term"), 6).alias("psi"),
             F.first("_n_ref").alias("n_ref"),
             F.first("_n_cur").alias("n_cur"),
             F.first("_n_bins").alias("n_bins"),
@@ -115,7 +104,6 @@ def psi_vs_reference(
     ref_counts: DataFrame,
     ref_keys: Sequence[str] = ("event_type",),
     window_cols: Sequence[str] = ("window_start",),
-    round_dp: int = 6,
 ) -> DataFrame:
     """PSI of each (ref_keys x window) population against a FROZEN
     per-ref_keys reference histogram — the monitoring shape: the
@@ -169,16 +157,10 @@ def psi_vs_reference(
         F.sum("_c_ref").alias("_c_ref"),
         F.sum("_c_cur").alias("_c_cur"),
     )
-    return _psi_from_side_counts(both, keys, round_dp)
+    return _psi_from_side_counts(both, keys)
 
 
-def mad_outliers(
-    df: DataFrame,
-    value_col: str,
-    keys: Sequence[str] = (),
-    k: float = 3.0,
-    round_dp: int = 6,
-) -> DataFrame:
+def mad_outliers(df: DataFrame, value_col: str, keys: Sequence[str] = ()) -> DataFrame:
     """Robust per-group outlier detection by the median/MAD rule — the
     other half of batch monitoring next to :func:`psi_drift`: PSI says
     "the distribution moved", this says "these are the rows that don't
@@ -186,12 +168,12 @@ def mad_outliers(
     inflates the stddev enough to hide itself; the breakdown point of
     the median and the MAD is 50%).
 
-    A value is an outlier when ``|v - median| > k * 1.4826 * MAD``
+    A value is an outlier when ``|v - median| > 3 * 1.4826 * MAD``
     (1.4826 scales the MAD to the stddev of a normal distribution, so
-    ``k`` reads in sigma units).
+    the cut reads as 3 sigma).
 
-    Determinism contract: the median and the MAD are rounded to
-    ``round_dp`` BEFORE the threshold comparison. Both engines see the
+    Determinism contract: the median and the MAD are rounded to 6
+    places BEFORE the threshold comparison. Both engines see the
     same parquet doubles, and subtraction/abs/multiply are IEEE-exact,
     so once the two rounded statistics agree the outlier COUNT is
     bitwise-reproducible — an unrounded threshold would let a 1-ULP
@@ -199,7 +181,7 @@ def mad_outliers(
     The MAD is likewise taken around the ROUNDED median so its input
     set is engine-identical, not merely ULP-close.
 
-    Degenerate groups (ADVICE round 8): when more than half a group's
+    Degenerate groups: when more than half a group's
     values equal its median — constant or heavily quantized columns —
     the MAD is 0, the fence has zero width, and the rule would flag
     EVERY value differing from the median (potentially most of the
@@ -239,7 +221,7 @@ def mad_outliers(
 
     med = df.groupBy(*ks).agg(
         round_half_up(
-            F.expr(f"percentile({value_col}, 0.5D)"), round_dp
+            F.expr(f"percentile({value_col}, 0.5D)"), 6
         ).alias("median")
     )
     with_med = _bjoin(df, _renamed(med))
@@ -248,7 +230,7 @@ def mad_outliers(
     mad = with_med.groupBy(*ks, "median").agg(
         round_half_up(
             F.expr(f"percentile(abs({value_col} - median), 0.5D)"),
-            round_dp,
+            6,
         ).alias("mad"),
     )
     with_mad = _bjoin(df, _renamed(mad))
@@ -257,7 +239,7 @@ def mad_outliers(
         F.sum(
             F.when(
                 F.abs(vc - F.col("median"))
-                > F.lit(k) * 1.4826 * F.col("mad"),
+                > F.lit(3.0) * 1.4826 * F.col("mad"),
                 1,
             ).otherwise(0)
         ).alias("n_outliers"),

@@ -23,16 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ewma_per_key(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    value: str = "value",
-    tiebreak: str = "event_id",
-    alpha: float = 0.1,
-    out_col: str = "ema",
-) -> DataFrame:
-    """Per-key EMA ordered by (ts, tiebreak), seeded at the first value
+def ewma_per_key(df: DataFrame, alpha: float = 0.1) -> DataFrame:
+    """Per-``user_id`` EMA of ``value`` ordered by (ts, event_id) into
+    ``ema``, seeded at the first value
     (pandas ``ewm(adjust=False)`` semantics: y_1 = x_1). Emits the RAW
     double — cross-engine display rounding belongs to the caller
     (functions.scalars.round_half_up), not the kernel."""
@@ -40,8 +33,8 @@ def ewma_per_key(
     # (a string key or int tiebreak must not be force-cast to long)
     in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = (
-        f"{key} {in_types[key]}, {tiebreak} {in_types[tiebreak]}, "
-        f"{ts} {in_types[ts]}, {value} {in_types[value]}, {out_col} double"
+        f"user_id {in_types['user_id']}, event_id {in_types['event_id']}, "
+        f"ts {in_types['ts']}, value {in_types['value']}, ema double"
     )
 
     def _fold(batches):
@@ -60,33 +53,33 @@ def ewma_per_key(
             # group-major order; dropping the key level and sorting the
             # original index restores row alignment.
             ema = (
-                pdf.groupby(key, sort=False)[value]
+                pdf.groupby("user_id", sort=False)["value"]
                 .ewm(alpha=alpha, adjust=False)
                 .mean()
                 .droplevel(0)
                 .sort_index()
             )
-            first_key = pdf[key].iloc[0]
+            first_key = pdf["user_id"].iloc[0]
             if carry_key is not None and first_key == carry_key:
                 # this batch starts mid-run: reseed the first key's EMA
                 # from the carried value (prepend, fold, drop the seed)
-                mask = pdf[key] == first_key
+                mask = pdf["user_id"] == first_key
                 seeded = pd.concat(
-                    [pd.Series([carry_y]), pdf.loc[mask, value]],
+                    [pd.Series([carry_y]), pdf.loc[mask, "value"]],
                     ignore_index=True,
                 )
                 ema.loc[mask] = (
                     seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:].values
                 )
-            carry_key = pdf[key].iloc[-1]
+            carry_key = pdf["user_id"].iloc[-1]
             carry_y = float(ema.iloc[-1])
-            yield pdf.assign(**{out_col: ema})[
-                [key, tiebreak, ts, value, out_col]
+            yield pdf.assign(ema=ema)[
+                ["user_id", "event_id", "ts", "value", "ema"]
             ]
 
     clustered = (
-        df.select(key, tiebreak, ts, value)
-        .repartition(F.col(key))
-        .sortWithinPartitions(key, ts, tiebreak)
+        df.select("user_id", "event_id", "ts", "value")
+        .repartition(F.col("user_id"))
+        .sortWithinPartitions("user_id", "ts", "event_id")
     )
     return clustered.mapInPandas(_fold, schema=out_schema)

@@ -24,9 +24,6 @@ from pyspark.sql import functions as F
 def funnel_steps(
     events: DataFrame,
     steps: tuple[str, ...],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     within: str | None = None,
 ) -> DataFrame:
     """Per-step reach counts for an ordered funnel: row i carries
@@ -61,8 +58,8 @@ def funnel_steps(
     frames = []
     prev: DataFrame | None = None
     for i, s in enumerate(steps):
-        ev_s = events.filter(F.col(type_col) == s).select(
-            F.col(user_col).alias("u"), F.col(ts_col).alias("__t")
+        ev_s = events.filter(F.col("event_type") == s).select(
+            F.col("user_id").alias("u"), F.col("ts").alias("__t")
         )
         if prev is None:
             cur = ev_s.groupBy("u").agg(F.min("__t").alias("t"))
@@ -90,12 +87,7 @@ def funnel_steps(
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 
-def cohort_retention(
-    events: DataFrame,
-    max_offset: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame, max_offset: int = 7) -> DataFrame:
     """Cohort retention triangle — the funnel's product-analytics twin:
     users cohort by their FIRST active day, and each (cohort_day,
     offset) cell counts how many of that cohort were active exactly
@@ -111,12 +103,12 @@ def cohort_retention(
     """
     if max_offset < 0:
         raise ValueError(f"max_offset must be >= 0, got {max_offset}")
-    day = F.to_date(F.col(ts_col))
-    first = events.groupBy(F.col(user_col).alias("u")).agg(
+    day = F.to_date(F.col("ts"))
+    first = events.groupBy(F.col("user_id").alias("u")).agg(
         F.min(day).alias("cohort_day")
     )
     active = (
-        events.select(F.col(user_col).alias("u"), day.alias("day"))
+        events.select(F.col("user_id").alias("u"), day.alias("day"))
         .distinct()
     )
     return (
@@ -129,19 +121,14 @@ def cohort_retention(
     )
 
 
-def touch_attribution(
-    events: DataFrame,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    within: str = "24 hours",
-    model: str = "last",
-) -> DataFrame:
+def touch_attribution(events: DataFrame, model: str = "last") -> DataFrame:
     """Single-touch conversion attribution — which channel gets credit
     for each conversion, the question every funnel report ends with.
     ``model='last'`` credits the latest qualifying touch before the
     conversion (the default of most product-analytics stacks),
-    ``'first'`` the earliest; a conversion with no touch inside
-    ``within`` is credited to ``'none'`` (the direct-conversion
+    ``'first'`` the earliest, among the view/click touches before each
+    purchase; a conversion with no touch inside 24 hours is credited to
+    ``'none'`` (the direct-conversion
     bucket, reported rather than dropped). Returns
     ``(event_type, n_conversions)`` with exact integer counts — no
     fractional credit, so the result replays exactly in any engine
@@ -149,7 +136,7 @@ def touch_attribution(
     float division in the gate).
 
     Scale shape: one user-keyed equi-join between the conversion slice
-    and the touch slice, range-bounded by ``within`` — fan-out is
+    and the touch slice, range-bounded by the 24-hour window — fan-out is
     touches-per-user x conversions-per-user inside the window, the
     irreducible size of the attribution relation — then a
     conversion-keyed ROW_NUMBER over that bounded group picks the
@@ -160,12 +147,12 @@ def touch_attribution(
         raise ValueError(f"model must be 'last' or 'first', got {model!r}")
     from pyspark.sql import Window
 
-    conv = events.filter(F.col("event_type") == conversion_type).select(
+    conv = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
         F.col("user_id").alias("cu"),
         F.col("ts").alias("cts"),
     )
-    touch = events.filter(F.col("event_type").isin(*touch_types)).select(
+    touch = events.filter(F.col("event_type").isin("view", "click")).select(
         F.col("user_id").alias("tu"),
         F.col("ts").alias("tts"),
         F.col("event_id").alias("tid"),
@@ -175,7 +162,7 @@ def touch_attribution(
         touch,
         (conv["cu"] == touch["tu"])
         & (touch["tts"] < conv["cts"])
-        & (touch["tts"] >= conv["cts"] - F.expr(f"INTERVAL {within}")),
+        & (touch["tts"] >= conv["cts"] - F.expr("INTERVAL 24 hours")),
     )
     order = (
         [F.col("tts").desc(), F.col("tid").desc()]
@@ -205,13 +192,7 @@ def touch_attribution(
     return credited.unionByName(none_row)
 
 
-def time_to_convert(
-    events: DataFrame,
-    steps: tuple[str, ...],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def time_to_convert(events: DataFrame, steps: tuple[str, ...]) -> DataFrame:
     """Per-transition conversion-latency summary for an ordered funnel:
     for each adjacent step pair (same first-touch anchoring and strict
     ordering as :func:`funnel_steps`), the number of converting users
@@ -242,8 +223,8 @@ def time_to_convert(
     frames = []
     prev: DataFrame | None = None
     for i, s in enumerate(steps):
-        ev_s = events.filter(F.col(type_col) == s).select(
-            F.col(user_col).alias("u"), F.col(ts_col).alias("__t")
+        ev_s = events.filter(F.col("event_type") == s).select(
+            F.col("user_id").alias("u"), F.col("ts").alias("__t")
         )
         if prev is None:
             cur = ev_s.groupBy("u").agg(F.min("__t").alias("t"))

@@ -10,10 +10,9 @@ any scale.
 Standard blocked shape instead (same blocking discipline as
 operators/dedup.py):
 
-1. **block** both sides on a cheap deterministic key (default: the
-   lowercased first token — swap in soundex/prefix/etc. via
-   ``block_expr`` for messier data). Only same-block pairs are
-   candidates, planned as an ordinary hash equi-join.
+1. **block** both sides on a cheap deterministic key (the lowercased
+   first token). Only same-block pairs are candidates, planned as an
+   ordinary hash equi-join.
 2. **length prune** inside the block: an edit distance <= d implies
    ``abs(len(a) - len(b)) <= d`` — a codegen filter that runs before
    the expensive verify.
@@ -25,13 +24,12 @@ Blocking on equality of a derived key means the join itself shuffles
 ONLY on the block key — no cross join anywhere (recall is exact for
 the stated rule "same block AND distance <= d"; candidate-completeness
 of first-token blocking for distance-d pairs whose first token differs
-is deliberately out of contract, as in every production blocker —
-choose ``block_expr`` to match the data's error model).
+is deliberately out of contract, as in every production blocker).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,29 +39,22 @@ def fuzzy_join(
     left_col: str,
     right_col: str,
     max_dist: int = 2,
-    block_expr=None,
 ) -> DataFrame:
     """Blocked approximate-string join. Returns all left x right rows
     whose block keys match AND ``levenshtein(left_col, right_col) <=
     max_dist``, with the distance as an ``edit_dist`` int column.
-
-    ``block_expr``: optional ``Column -> Column`` building the block key
-    from the match column (default: lowercased first space-token).
+    The block key is the match column's lowercased first space-token.
     """
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    if block_expr is None:
-        def block_expr(c: Column) -> Column:
-            return F.split(F.lower(c), " ")[0]
-
     clash = {"_blk", "edit_dist"} & (set(left.columns) | set(right.columns))
     if clash:
         raise ValueError(
             f"fuzzy_join: input already has column(s) {sorted(clash)}; "
             "rename them before joining"
         )
-    l = left.withColumn("_blk", block_expr(F.col(left_col)))
-    r = right.withColumn("_blk", block_expr(F.col(right_col)))
+    l = left.withColumn("_blk", F.split(F.lower(F.col(left_col)), " ")[0])
+    r = right.withColumn("_blk", F.split(F.lower(F.col(right_col)), " ")[0])
     joined = l.join(r, "_blk").filter(
         F.abs(F.length(F.col(left_col)) - F.length(F.col(right_col))) <= max_dist
     )
@@ -80,14 +71,13 @@ def fuzzy_dedup_pairs(
     id_col: str,
     name_col: str,
     max_dist: int = 2,
-    block_expr=None,
 ) -> DataFrame:
     """Self-join variant for near-identical NAME pairs within one table
     (the dedup side of entity resolution). Emits each unordered pair
     once (id_a < id_b) with the edit distance."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(name_col).alias("_na"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(name_col).alias("_nb"))
-    out = fuzzy_join(a, b, "_na", "_nb", max_dist=max_dist, block_expr=block_expr)
+    out = fuzzy_join(a, b, "_na", "_nb", max_dist=max_dist)
     return (
         out.filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "edit_dist")

@@ -23,7 +23,7 @@ Scale shape: each round is one shuffle join + one aggregate on the
 edge frame (pair-graph-sized — a small fraction of the corpus, the
 dedup_clusters bound) with the node count as a broadcast 1-row
 scalar; rounds materialize via the shared lineage-truncation switch
-(durable checkpoints on a real cluster). Fixed ``n_iter`` keeps the
+(durable checkpoints on a real cluster, by session conf). Fixed ``n_iter`` keeps the
 oracle expressible as unrolled SQL rounds (the _lloyd_iter_sql / BPE
 discipline).
 """
@@ -37,40 +37,28 @@ from ..functions.scalars import round_half_up
 from ..materialize import materialize
 
 
-def pagerank(
-    pairs: DataFrame,
-    n_iter: int = 3,
-    damping: float = 0.85,
-    round_dp: int = 9,
-    doc_a: str = "doc_a",
-    doc_b: str = "doc_b",
-    durable: bool | None = None,
-) -> DataFrame:
+def pagerank(pairs: DataFrame, n_iter: int = 3) -> DataFrame:
     """PageRank over an undirected pair graph: (node, pr) for every
     node appearing in some pair. Symmetric edges, no self-loops; every
     node has degree >= 1 by construction, so there is no dangling-mass
-    term. ``damping`` must be the literal 0.85 for the shipped oracles
-    (see module docstring on constant folding)."""
+    term. Damping is the literal 0.85 the shipped oracles fold (see
+    module docstring on constant folding)."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     edges = materialize(
         pairs.select(
-            F.col(doc_a).alias("src"), F.col(doc_b).alias("dst")
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         ).unionByName(
-            pairs.select(F.col(doc_b).alias("src"), F.col(doc_a).alias("dst"))
-        ).distinct(),
-        durable=durable,
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+        ).distinct()
     )
     # deg/contrib/n are static across rounds, so they materialize ONCE:
     # reusing only the plan objects would re-execute the degree groupBy,
     # the edges-deg join, and the countDistinct against the checkpointed
     # edges inside every round's plan — n_iter redundant edge scans
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n = materialize(
-        edges.agg(F.countDistinct("src").cast("double").alias("n")),
-        durable=durable,
-    )
-    teleport = F.lit(1.0 - damping) if damping != 0.85 else F.lit(0.15)
+    n = materialize(edges.agg(F.countDistinct("src").cast("double").alias("n")))
+    teleport = F.lit(0.15)
 
     pr = materialize(
         edges.select("src")
@@ -78,13 +66,11 @@ def pagerank(
         .crossJoin(F.broadcast(n))
         .select(
             F.col("src").alias("node"),
-            round_half_up(F.lit(1.0) / F.col("n"), round_dp).alias("pr"),
-        ),
-        durable=durable,
+            round_half_up(F.lit(1.0) / F.col("n"), 9).alias("pr"),
+        )
     )
-    contrib_src = materialize(
-        edges.join(deg, "src"), durable=durable
-    )  # (src, dst, deg) — static per run, computed once
+    # (src, dst, deg) — static per run, computed once
+    contrib_src = materialize(edges.join(deg, "src"))
     for _ in range(n_iter):
         pr = materialize(
             contrib_src.join(
@@ -96,10 +82,9 @@ def pagerank(
             .select(
                 "node",
                 round_half_up(
-                    teleport / F.col("n") + F.lit(damping) * F.col("_s"),
-                    round_dp,
+                    teleport / F.col("n") + F.lit(0.85) * F.col("_s"),
+                    9,
                 ).alias("pr"),
-            ),
-            durable=durable,
+            )
         )
     return pr

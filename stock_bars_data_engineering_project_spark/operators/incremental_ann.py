@@ -15,11 +15,11 @@ and you certainly cannot re-train. The warehouse keeps two tables:
 A new batch then costs exactly one broadcast-argmin assignment of the
 BATCH (``ivf_assign`` — map-only, centroid array broadcast) plus a
 keyed merge whose rewrite prunes to the cid partitions the batch
-touches. Queries probe ``nprobe`` lists; because the probed cid set is
+touches. Queries probe 3 lists; because the probed cid set is
 bounded by K (the centroid count) no matter how many queries arrive,
 the probe filter is a driver-side literal list — STATIC partition
-pruning on the index scan, so a query touches nprobe/K of the files on
-disk, not just nprobe/K of the rows.
+pruning on the index scan, so a query touches 3/K of the files on
+disk, not just 3/K of the rows.
 
 Drift contract: centroids are frozen between rebuilds, so heavy
 ingestion skews list occupancy and degrades recall gradually (the
@@ -55,23 +55,21 @@ def build_ann_index(
     table: str = "ann_index",
     centroid_stride: int = 125,
     refine_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Train the quantizer (deterministic stride seed + ``refine_iters``
     Lloyd passes) and materialize the inverted lists, partitioned by
     cid. One assignment pass over the corpus — the only time the full
     corpus is ever assigned."""
-    seed = corpus.filter(F.col(id_col) % centroid_stride == 0).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    seed = corpus.filter(F.col("vec_id") % centroid_stride == 0).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    cent = kmeans_refine(corpus, seed, refine_iters, vec_col, id_col)
+    cent = kmeans_refine(corpus, seed, refine_iters)
     # co-locate each inverted list before the hive-partitioned write:
     # without this, every one of the assignment's N shuffle partitions
     # writes its own sliver into every cid dir — N x K tiny files where
     # K files suffice (the small-files problem that makes list scans
     # metadata-bound at scale)
-    assigned = ivf_assign(corpus, cent, vec_col, id_col).repartition("cid")
+    assigned = ivf_assign(corpus, cent).repartition("cid")
     # a crashed build (centroids written, lists not) is rebuilt from
     # scratch: the centroids→lists window was never crash-atomic
     wh.overwrite(cent, _centroids_table(table))
@@ -82,8 +80,6 @@ def ingest_vectors(
     wh: ParquetWarehouse,
     batch: DataFrame,
     table: str = "ann_index",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Fold a new vector batch into the index: assign against the
     FROZEN stored centroids (map-only) and merge into the lists. The
@@ -95,9 +91,9 @@ def ingest_vectors(
     # them physically — without this anti-join the merge would rewrite
     # a row the query path anti-joins out anyway, paying a partition
     # rewrite for a vector that stays invisible
-    live_batch = not_deleted(wh, table, batch, id_col)
+    live_batch = not_deleted(wh, table, batch, "vec_id")
     # same list co-location as the build write (see build_ann_index)
-    assigned = ivf_assign(live_batch, cent, vec_col, id_col).repartition("cid")
+    assigned = ivf_assign(live_batch, cent).repartition("cid")
     wh.merge(assigned, table, keys=("cid", "vec_id"), partition_by=("cid",))
 
 
@@ -105,13 +101,9 @@ def ann_query(
     wh: ParquetWarehouse,
     queries: DataFrame,
     table: str = "ann_index",
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
-    """Probe the stored index: nprobe nearest lists per query, exact
-    cosine within the probed lists, salted bounded-fan-in ranking —
+    """Probe the stored index: the 3 nearest lists per query, exact
+    cosine top-10 within the probed lists, salted bounded-fan-in ranking —
     identical semantics to ``ivf_topk`` with the same centroids, minus
     any corpus-side recompute.
 
@@ -124,7 +116,7 @@ def ann_query(
         "cid", F.col("cv").alias("cv")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     qc = (
         q.crossJoin(F.broadcast(cent))
@@ -135,7 +127,7 @@ def ann_query(
                 Window.partitionBy("query_id").orderBy("d2", "cid")
             ),
         )
-        .filter(F.col("probe_rank") <= nprobe)
+        .filter(F.col("probe_rank") <= 3)
         .select("query_id", "q_vec", "cid")
     )
     probed_cids = [r["cid"] for r in qc.select("cid").distinct().collect()]
@@ -150,6 +142,6 @@ def ann_query(
     scored = cand.withColumn(
         "cos", round_half_up(cosine("q_vec", "embedding"), 6)
     )
-    return salted_topk(scored, ("query_id",), "cos", "vec_id", k).select(
+    return salted_topk(scored, ("query_id",), "cos", "vec_id", 10).select(
         "query_id", "vec_id", "cos", "rank"
     )

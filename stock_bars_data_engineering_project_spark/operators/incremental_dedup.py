@@ -51,7 +51,7 @@ from ..functions.scalars import round_half_up
 # shard rides in the merge key (sound — a doc_id's shard never changes),
 # so the warehouse's partition-pruned merge rewrites ONLY the shards a
 # batch lands in and hardlinks the rest forward: the corpus commit is
-# O(batch) PHYSICALLY, not just computationally (round 10 — the x64
+# O(batch) PHYSICALLY, not just computationally (the x64
 # refresh soak caught the unpartitioned merge rewriting the whole
 # text-bearing corpus per 600-doc batch). Monotone ingest ids cluster,
 # so a batch typically touches one shard.
@@ -62,7 +62,7 @@ _CORPUS_SHARD_DOCS = 1_000_000
 _CORPUS_META_COLS = ("_shard", "_h")
 
 
-def _sharded(df: DataFrame, text_col: str = "text") -> DataFrame:
+def _sharded(df: DataFrame) -> DataFrame:
     """Attach the storage columns written once per document: the range
     shard (pruned-merge key) and the content md5 — computed here so the
     exact cross-batch dedup reads a 32-char column instead of re-md5ing
@@ -71,16 +71,14 @@ def _sharded(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn(
         "_shard",
         F.floor(F.col("doc_id") / F.lit(_CORPUS_SHARD_DOCS)).cast("long"),
-    ).withColumn("_h", F.md5(F.col(text_col)))
+    ).withColumn("_h", F.md5(F.col("text")))
 
 
-def band_index(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
+def band_index(df: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_key) — the persistable LSH fingerprint.
     O(bands) short rows per doc; the full text never needs re-hashing
     once indexed."""
-    sig = minhash_signatures(_shingled(df, text_col, id_col, k))
+    sig = minhash_signatures(_shingled(df))
     return sig.select(
         "doc_id",
         F.posexplode(lsh_band_hashes(F.col("sig"))).alias("band_idx", "band_key"),
@@ -91,8 +89,6 @@ def _verify_pairs(
     cand: DataFrame,
     left_docs: DataFrame,
     right_docs: DataFrame,
-    threshold: float,
-    k: int,
 ) -> DataFrame:
     """Exact-Jaccard gate over (doc_a from left, doc_b from right).
 
@@ -104,19 +100,19 @@ def _verify_pairs(
     candidate-set-sized on both sides."""
     la = cand.select(F.col("doc_a").alias("doc_id")).distinct()
     lb = cand.select(F.col("doc_b").alias("doc_id")).distinct()
-    sa = _shingled(
-        left_docs.join(la, "doc_id", "left_semi"), "text", "doc_id", k
-    ).select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    sb = _shingled(
-        right_docs.join(lb, "doc_id", "left_semi"), "text", "doc_id", k
-    ).select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    sa = _shingled(left_docs.join(la, "doc_id", "left_semi")).select(
+        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
+    )
+    sb = _shingled(right_docs.join(lb, "doc_id", "left_semi")).select(
+        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
+    )
     joined = cand.join(sa, "doc_a").join(sb, "doc_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     # same 4-decimal HALF_UP gate as minhash_lsh_pairs — an unrounded
     # ratio would disagree with the full-dedup path on borderline pairs
     return joined.filter(
-        round_half_up(inter / union, 4) >= threshold
+        round_half_up(inter / union, 4) >= 0.7
     ).select("doc_a", "doc_b")
 
 
@@ -126,8 +122,6 @@ def ingest_batch(
     new_docs: DataFrame,
     corpus_table: str = "corpus_docs",
     index_table: str = "corpus_bands",
-    threshold: float = 0.7,
-    k: int = 3,
     return_survivors: bool = False,
 ) -> dict[str, int] | tuple[dict[str, int], DataFrame]:
     """Dedup ``new_docs`` against themselves AND the stored corpus, then
@@ -147,8 +141,8 @@ def ingest_batch(
     if raw_corpus is not None:
         # exact cross-batch: same content hash as any retained doc. The
         # hash column was persisted at commit time, so this reads one
-        # skinny column — only the BATCH pays an md5 (pre-round-10
-        # corpora without the column fall back to hashing in-plan)
+        # skinny column — only the BATCH pays an md5 (older corpora
+        # without the column fall back to hashing in-plan)
         stored_h = (
             raw_corpus.select("_h")
             if "_h" in raw_corpus.columns
@@ -163,14 +157,14 @@ def ingest_batch(
 
     if corpus is None:
         # first batch: standard in-batch near-dedup
-        clusters = dedup_clusters(minhash_lsh_pairs(batch, k=k, threshold=threshold))
+        clusters = dedup_clusters(minhash_lsh_pairs(batch))
         drops = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
         survivors = materialize(batch.join(drops, "doc_id", "left_anti"))
         counts["survivors"] = survivors.count()
         wh.overwrite(
             _sharded(survivors), corpus_table, partition_by=("_shard",)
         )
-        wh.overwrite(band_index(survivors, k=k), index_table)
+        wh.overwrite(band_index(survivors), index_table)
         _mark_synced(
             spark, wh, f"{index_table}__sync",
             wh.latest_version(corpus_table),
@@ -195,7 +189,7 @@ def ingest_batch(
         and wh.read(sync_table).first()["corpus_version"] == corpus_v
     )
     if not wh.exists(index_table):
-        wh.overwrite(band_index(corpus, k=k), index_table)
+        wh.overwrite(band_index(corpus), index_table)
         _mark_synced(spark, wh, sync_table, corpus_v)
     elif not in_sync:
         missing = corpus.join(
@@ -208,12 +202,12 @@ def ingest_batch(
         # shingle to nothing and can never be indexed, so they sit in
         # the missing set forever — an append gated on them would
         # rewrite the index snapshot every batch while adding zero rows.
-        fresh = band_index(missing, k=k)
+        fresh = band_index(missing)
         if fresh.limit(1).count():
             wh.append(fresh, index_table)
         _mark_synced(spark, wh, sync_table, corpus_v)
     index = wh.read(index_table)
-    new_bands = band_index(batch, k=k).transform(materialize)
+    new_bands = band_index(batch).transform(materialize)
 
     # batch-vs-corpus candidates via the stored index (no corpus re-hash)
     cand_bc = (
@@ -229,7 +223,7 @@ def ingest_batch(
         .distinct()
     )
     dup_of_corpus = (
-        _verify_pairs(cand_bc, batch, corpus, threshold, k)
+        _verify_pairs(cand_bc, batch, corpus)
         .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
@@ -245,7 +239,7 @@ def ingest_batch(
     cand_bb = _bucket_pairs(remaining_bands, ["band_idx", "band_key"], "doc_id").select(
         F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b")
     )
-    pairs_bb = _verify_pairs(cand_bb, batch, batch, threshold, k)
+    pairs_bb = _verify_pairs(cand_bb, batch, batch)
     clusters = dedup_clusters(pairs_bb)
     drops = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     survivors = materialize(batch.join(drops, "doc_id", "left_anti"))
@@ -260,7 +254,7 @@ def ingest_batch(
                 partition_by=("_shard",),
             )
         else:
-            # pre-round-10 corpus without the shard column: keep the
+            # older corpus without the shard column: keep the
             # legacy unsharded merge — correctness identical, commit
             # O(table) as it was before the shard landed
             wh.merge(survivors, corpus_table, keys=("doc_id",))

@@ -39,12 +39,10 @@ from ..functions.hashing import content_epoch
 from .pca import suffstats_rows
 
 
-def _batch_moment_rows(
-    batch: DataFrame, vec_col: str, dim: int
-) -> DataFrame:
+def _batch_moment_rows(batch: DataFrame, dim: int) -> DataFrame:
     """One batch's moments as (i int, v double) rows — the per-partition
     suffstats reduced by one tiny shuffle over d*(d+1) keys."""
-    parts = suffstats_rows(batch, vec_col=vec_col, dim=dim)
+    parts = suffstats_rows(batch, vec_col="embedding", dim=dim)
     moments = (
         parts.select(
             F.posexplode(F.concat("colsum", "gram")).alias("i", "v")
@@ -63,8 +61,6 @@ def ingest_pca_batch(
     wh,
     batch: DataFrame,
     table: str = "pca_moments",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> str:
     """Fold one accepted batch's moments into the persisted state.
@@ -76,7 +72,7 @@ def ingest_pca_batch(
     recomputation of shuffled double sums (Spark's partial-agg merge
     order is not deterministic; a rewrite could legally differ in the
     last ULP). Batches must partition the
-    accepted corpus by ``id_col`` (append-only ids), the standard
+    accepted corpus by ``vec_id`` (append-only ids), the standard
     epoch-log mergeability contract; empty batches are rejected loudly
     (an empty frame has no content address and no moments — the count
     rides the epoch string, so the check is free).
@@ -85,12 +81,12 @@ def ingest_pca_batch(
     own partition, plus the id-column scan the content address needs.
     ``dim`` is stamped onto every state row; the read side refuses a
     state whose epochs disagree on it."""
-    epoch = content_epoch(batch, id_col)
+    epoch = content_epoch(batch, "vec_id")
     if int(epoch.rsplit("n", 1)[-1]) == 0:
         raise ValueError("ingest_pca_batch: empty batch — nothing to ingest")
     if not wh.has_partition(table, "_epoch", epoch):
         wh.append(
-            _batch_moment_rows(batch, vec_col, dim)
+            _batch_moment_rows(batch, dim)
             .withColumn("_epoch", F.lit(epoch))
             .withColumn("_dim", F.lit(dim)),
             table,

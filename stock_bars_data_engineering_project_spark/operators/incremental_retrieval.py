@@ -86,11 +86,6 @@ def bm25_query(
     queries: DataFrame,
     table: str = "bm25_index",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    query_id_col: str = "query_id",
-    query_text_col: str = "text",
-    n_salt: int = 8,
 ) -> DataFrame:
     """Top-k BM25 per query against the STORED index — identical
     semantics and output schema to :func:`retrieval.bm25_topk` over the
@@ -101,8 +96,6 @@ def bm25_query(
     come from the probed partitions alone."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    if k1 < 0 or not 0 <= b <= 1:
-        raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got k1={k1}, b={b}")
     n_buckets = read_meta(wh, table)
 
     # ONE driver job for the whole query side: collect the
@@ -115,7 +108,7 @@ def bm25_query(
 
     qrows = [
         (r[0], r[1])
-        for r in _term_counts(queries, query_id_col, query_text_col)
+        for r in _term_counts(queries, "query_id", "text")
         .select("id", "token")
         .collect()
     ]
@@ -128,7 +121,7 @@ def bm25_query(
     )
     from pyspark.sql import types as T
 
-    qid_type = queries.schema[query_id_col].dataType
+    qid_type = queries.schema["query_id"].dataType
     spark = queries.sparkSession
     qterms = spark.createDataFrame(
         qrows,
@@ -172,4 +165,4 @@ def bm25_query(
     doc_terms = postings.select(
         F.col("doc_id").alias("id"), "dl", "token", "tf"
     )
-    return score_topk(doc_terms, qterms, dfreq, stats, k, k1, b, n_salt)
+    return score_topk(doc_terms, qterms, dfreq, stats, k)

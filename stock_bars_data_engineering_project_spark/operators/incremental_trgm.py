@@ -61,17 +61,15 @@ def _batch_members(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 TRGM = LexicalFamily(_batch_postings, _batch_members)
 
+# most pattern trigrams trgm_query broadcasts before it refuses
+MAX_PATTERN_TRIGRAMS = 100_000
+
 
 def trgm_query(
     wh: ParquetWarehouse,
     docs: DataFrame,
     patterns: DataFrame,
     table: str = "trgm_index",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pattern_id_col: str = "pattern_id",
-    pattern_col: str = "pattern",
-    max_pattern_trigrams: int = 100_000,
 ) -> DataFrame:
     """Exact substring matches (pattern_id, id) answered from the
     STORED index — identical semantics and output to
@@ -79,7 +77,7 @@ def trgm_query(
     posting build replaced by a statically-pruned postings scan.
     ``docs`` supplies the text for the ``contains`` verify (the index
     stores none) and for the sub-3-char scan fallback. Patterns are
-    broadcast-small by module contract; ``max_pattern_trigrams`` makes
+    broadcast-small by module contract; ``MAX_PATTERN_TRIGRAMS`` makes
     that contract LOUD — an oversized pattern frame fails fast instead
     of silently building a huge broadcast + driver literal."""
     n_buckets = read_meta(wh, table)
@@ -92,10 +90,7 @@ def trgm_query(
 
     pats_rows = [
         (r[0], r[1])
-        for r in patterns.select(
-            F.col(pattern_id_col).alias("pattern_id"),
-            F.col(pattern_col).alias("pattern"),
-        ).collect()
+        for r in patterns.select("pattern_id", "pattern").collect()
     ]
     # NULL patterns fall out of BOTH arms
     short_rows = [
@@ -109,12 +104,11 @@ def trgm_query(
         tri_rows.extend((pid, p, len(tris), t) for t in tris)
     # loud broadcast-contract guard (driver-side, no job)
     n_tri_total = len(tri_rows)
-    if n_tri_total > max_pattern_trigrams:
+    if n_tri_total > MAX_PATTERN_TRIGRAMS:
         raise ValueError(
             f"trgm_query: pattern set expands to {n_tri_total} trigrams "
-            f"(> max_pattern_trigrams={max_pattern_trigrams}) — patterns "
-            "must stay broadcast-small; raise the cap explicitly or "
-            "batch the pattern frame"
+            f"(> MAX_PATTERN_TRIGRAMS={MAX_PATTERN_TRIGRAMS}) — patterns "
+            "must stay broadcast-small; batch the pattern frame"
         )
     # driver-side probe-bucket literal: DISTINCT buckets, so bounded by
     # min(pattern trigram count, n_buckets) — never corpus-sized
@@ -127,7 +121,7 @@ def trgm_query(
     )
     from pyspark.sql import types as T
 
-    pid_type = patterns.schema[pattern_id_col].dataType
+    pid_type = patterns.schema["pattern_id"].dataType
     spark = patterns.sparkSession
     pat_tri = spark.createDataFrame(
         tri_rows,
@@ -170,7 +164,7 @@ def trgm_query(
     verified = (
         candidates.join(
             docs.select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("_text")
+                F.col("doc_id").alias("id"), F.col("text").alias("_text")
             ),
             "id",
         )
@@ -196,14 +190,10 @@ def trgm_query(
     # invisible to every indexed probe
     members = not_deleted(wh, table, wh.read(docs_table(table)), "doc_id")
     live_docs = docs.join(
-        members, docs[id_col] == members["doc_id"], "left_semi"
+        members, docs["doc_id"] == members["doc_id"], "left_semi"
     )
     fallback = substring_scan(
         live_docs,
         short,
-        id_col=id_col,
-        text_col=text_col,
-        pattern_id_col="pattern_id",
-        pattern_col="pattern",
     )
     return verified.unionByName(fallback)

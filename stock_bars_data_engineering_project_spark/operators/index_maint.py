@@ -175,11 +175,11 @@ class LexicalFamily(NamedTuple):
     members: Callable[[DataFrame, str, str], DataFrame]
 
 
-def _require_ids(batch: DataFrame, id_col: str, table: str) -> DataFrame:
+def _require_ids(batch: DataFrame, table: str) -> DataFrame:
     return _reject_nulls(
         batch,
-        id_col,
-        f"{table} index: NULL {id_col} — ids must be non-NULL for "
+        "doc_id",
+        f"{table} index: NULL doc_id — ids must be non-NULL for "
         "replay-idempotent ingest",
     )
 
@@ -189,26 +189,21 @@ def build_lexical_index(
     docs: DataFrame,
     table: str,
     family: LexicalFamily,
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Build a lexical index from scratch (module docstring, Build)."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    docs = _require_ids(docs, id_col, table)
+    docs = _require_ids(docs, table)
     run_chains(
         postings=lambda: wh.overwrite(
-            family.postings(docs, n_buckets, id_col, text_col),
+            family.postings(docs, 64, "doc_id", "text"),
             postings_table(table),
             partition_by=("bkt",),
         ),
         members=lambda: wh.overwrite(
-            family.members(docs, id_col, text_col), docs_table(table)
+            family.members(docs, "doc_id", "text"), docs_table(table)
         ),
     )
     wh.overwrite(
-        wh.spark.createDataFrame([(n_buckets,)], "n_buckets int"),
+        wh.spark.createDataFrame([(64,)], "n_buckets int"),
         meta_table(table),
     )
 
@@ -218,23 +213,21 @@ def ingest_docs(
     batch: DataFrame,
     table: str,
     family: LexicalFamily,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> int:
     """Fold ``batch`` into a lexical index (module docstring, Ingest).
     Returns the number of newly indexed documents."""
     n_buckets = read_meta(wh, table)
-    batch = _require_ids(batch, id_col, table)
+    batch = _require_ids(batch, table)
     known = wh.read(docs_table(table)).select("doc_id")
     new_docs = materialize(
-        batch.join(known, batch[id_col] == known["doc_id"], "left_anti")
+        batch.join(known, batch["doc_id"] == known["doc_id"], "left_anti")
     )  # consumed twice below; the anti-join runs once
-    members = family.members(new_docs, id_col, text_col)
+    members = family.members(new_docs, "doc_id", "text")
     n_new = int(members.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
     if n_new == 0:
         return 0
     wh.append(
-        family.postings(new_docs, n_buckets, id_col, text_col),
+        family.postings(new_docs, n_buckets, "doc_id", "text"),
         postings_table(table),
     )
     wh.append(members, docs_table(table))

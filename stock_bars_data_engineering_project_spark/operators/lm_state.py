@@ -33,22 +33,20 @@ from ..functions.hashing import content_epoch
 from ..functions.text import tokens
 
 
-def _batch_lm_counts(
-    batch: DataFrame, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _batch_lm_counts(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     """One batch's (token, n) and (prev, cur, n2) — the same derivation
     quality.bigram_surprisal performs on a self-modeled corpus.
     ``id_col`` is the column the batch-partitioning contract (see
     ingest_lm_batch) is keyed on; its presence is enforced here so a
     caller passing a batch without it fails loudly instead of silently
     ingesting rows the contract cannot cover."""
-    if id_col not in batch.columns:
+    if "doc_id" not in batch.columns:
         raise ValueError(
-            f"batch lacks id column {id_col!r} (columns: {batch.columns}); "
+            f"batch lacks id column 'doc_id' (columns: {batch.columns}); "
             "the epoch-log contract partitions the corpus by this column"
         )
     ltoks = F.filter(
-        tokens(F.lower(F.col(text_col))), lambda t: t != F.lit("")
+        tokens(F.lower(F.col("text"))), lambda t: t != F.lit("")
     )
     uni = (
         batch.select(F.explode(ltoks).alias("token"))
@@ -77,16 +75,14 @@ def ingest_lm_batch(
     batch: DataFrame,
     uni_table: str = "lm_unigrams",
     bi_table: str = "lm_bigrams",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> str:
     """Fold one accepted batch into the persisted LM. Returns the
     content-addressed epoch id (a redelivery of the same batch lands
     the identical epoch — replay-idempotent by construction; pinned in
-    tests). Batches must partition the accepted corpus by ``id_col``
+    tests). Batches must partition the accepted corpus by ``doc_id``
     (append-only ids): the epoch-log mergeability contract."""
-    uni, bi = _batch_lm_counts(batch, id_col, text_col)
-    epoch = content_epoch(batch, id_col)
+    uni, bi = _batch_lm_counts(batch)
+    epoch = content_epoch(batch, "doc_id")
     # Epoch partitions are content-addressed, so a present partition is
     # BY CONTRACT identical to what this batch would write (append-only
     # ids, docs immutable under their id). Present => skip; absent =>

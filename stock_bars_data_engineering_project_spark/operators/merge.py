@@ -27,7 +27,6 @@ def upsert_frames(
     target: DataFrame,
     source: DataFrame,
     keys: tuple[str, ...],
-    allow_schema_drift: bool = False,
     source_unique: bool = False,
 ) -> DataFrame:
     """Rows of ``source`` win on key collision; target rows without a
@@ -36,11 +35,8 @@ def upsert_frames(
     the caller vouches with ``source_unique=True`` (it already deduped —
     skipping the redundant key-shuffle of the batch).
 
-    With ``allow_schema_drift`` the union tolerates asymmetric columns
-    (Delta-style additive schema evolution): columns new in the source
-    backfill NULL on old target rows, columns the source dropped carry
-    NULL on new rows. Key columns must exist on both sides regardless.
-    Default is strict — silent drift is a bug in most pipelines.
+    Source and target must carry the same columns — silent drift is a
+    bug in most pipelines.
     """
     from pyspark.sql import functions as F
 
@@ -57,7 +53,7 @@ def upsert_frames(
         for k in keys
     ]
     kept = tgt.join(src, on=on, how="left_anti")
-    return kept.unionByName(src, allowMissingColumns=allow_schema_drift)
+    return kept.unionByName(src)
 
 
 SCD2_COLS = ("valid_from", "valid_to", "is_current")

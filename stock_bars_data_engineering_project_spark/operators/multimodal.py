@@ -48,19 +48,17 @@ MEDIA_SCHEMA = T.StructType(
 
 def attach_binary_payload(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Wrap rows into the media schema, using utf-8 bytes of ``text_col``
+    """Wrap rows into the media schema, using utf-8 bytes of ``text``
     as a stand-in payload (deterministic; real pipelines read the bytes
     from object storage). ``passthrough`` appends extra source columns
     unchanged — THE definition of the payload/byte_len/content_md5
     triple lives here; query-layer consumers project from this rather
     than restating the expressions."""
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.lit("image").alias("media_type"),
         payload.alias("payload"),
         F.octet_length(payload).cast("long").alias("byte_len"),
@@ -354,9 +352,7 @@ _WAV_RATE = 8000
 _WAV_AMP = 12000
 
 
-def synth_wav(
-    n_samples: int, freq_hz: float, amp: int = _WAV_AMP
-) -> bytes:
+def synth_wav(n_samples: int, freq_hz: float) -> bytes:
     """Real RIFF/PCM WAV bytes (mono, 16-bit, 8 kHz): a sine at
     ``freq_hz`` — fully determined by its parameters (callers derive
     them from row ids), honest in format: any WAV reader decodes it."""
@@ -374,7 +370,7 @@ def synth_wav(
             b"".join(
                 struct.pack(
                     "<h",
-                    int(round(amp * math.sin(2.0 * math.pi * freq_hz * i / _WAV_RATE))),
+                    int(round(_WAV_AMP * math.sin(2.0 * math.pi * freq_hz * i / _WAV_RATE))),
                 )
                 for i in range(n_samples)
             )
@@ -399,25 +395,23 @@ def decode_wav(payload: bytes) -> tuple[int, float, float]:
     return n, float(np.sqrt(np.mean(pcm * pcm))), float(np.max(np.abs(pcm)))
 
 
-def attach_wav_payload(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_wav_payload(df: DataFrame) -> DataFrame:
     """Deterministic per-row WAV payloads: n_samples = 800 + (id%50)*16
     (SQL-replayable exactly), frequency 200 + (id%20)*20 Hz. Arrow-
     batched mapInPandas — the bytes are born executor-side, never on
     the driver."""
     import pandas as pd
 
-    schema = f"{id_col} long, wav_payload binary"
+    schema = "doc_id long, wav_payload binary"
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            ids = pdf[id_col].astype("int64")
+            ids = pdf["doc_id"].astype("int64")
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "wav_payload": [
                         synth_wav(
                             800 + (int(i) % 50) * 16,
@@ -428,12 +422,10 @@ def attach_wav_payload(
                 }
             )
 
-    return df.select(id_col).mapInPandas(_synth, schema=schema)
+    return df.select("doc_id").mapInPandas(_synth, schema=schema)
 
 
-def audio_metrics(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "wav_payload"
-) -> DataFrame:
+def audio_metrics(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per-payload audio scalars through the REAL decoder: one Arrow
     batch in, (id, wav_samples, wav_rms, wav_peak) out — payload bytes
     never outlive the stage (the multimodal scale rule: features
@@ -447,7 +439,7 @@ def audio_metrics(
             if pdf.empty:
                 continue
             out = {id_col: [], "wav_samples": [], "wav_rms": [], "wav_peak": []}
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
+            for i, payload in zip(pdf[id_col], pdf["wav_payload"]):
                 n, rms, peak = decode_wav(bytes(payload))
                 out[id_col].append(int(i))
                 out["wav_samples"].append(n)
@@ -455,4 +447,4 @@ def audio_metrics(
                 out["wav_peak"].append(peak)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, payload_col).mapInPandas(_decode, schema=schema)
+    return df.select(id_col, "wav_payload").mapInPandas(_decode, schema=schema)

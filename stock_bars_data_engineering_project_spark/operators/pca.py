@@ -101,14 +101,12 @@ def covariance_stats(df: DataFrame, vec_col: str = "embedding", dim: int = 64):
     return n_total, mean, cov
 
 
-def fit_pca(
-    df: DataFrame, k: int, vec_col: str = "embedding", dim: int = 64
-) -> dict:
+def fit_pca(df: DataFrame, k: int, dim: int = 64) -> dict:
     """Top-k principal components, deterministic: eigenvectors of the
     covariance, descending eigenvalue order, sign fixed so each
     component's largest-magnitude coordinate is positive (eigenvectors
     are sign-ambiguous; an unfixed sign flips between runs/platforms)."""
-    n, mean, cov = covariance_stats(df, vec_col, dim)
+    n, mean, cov = covariance_stats(df, "embedding", dim)
     return fit_pca_from_moments(n, mean, cov, k)
 
 
@@ -138,7 +136,6 @@ def fit_pca_from_moments(n: int, mean, cov, k: int) -> dict:
 def project(
     df: DataFrame,
     model: dict,
-    vec_col: str = "embedding",
     out_col: str = "pca",
     whiten: bool = False,
 ) -> DataFrame:
@@ -148,7 +145,7 @@ def project(
     output coordinate is one codegen dot product. ``whiten`` scales each
     coordinate by 1/sqrt(eigenvalue) (unit variance per component)."""
     centered = F.zip_with(
-        as_double(F.col(vec_col)),
+        as_double(F.col("embedding")),
         F.lit(model["mean"].tolist()),
         lambda x, m: x - m,
     )

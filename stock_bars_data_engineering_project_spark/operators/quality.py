@@ -25,12 +25,7 @@ from ..materialize import materialize
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def unigram_surprisal(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    counts: DataFrame | None = None,
-) -> DataFrame:
+def unigram_surprisal(docs: DataFrame, counts: DataFrame | None = None) -> DataFrame:
     """Per-document mean surprisal -ln p(token) under the corpus's own
     unigram model (lower-cased whitespace tokens, empties dropped).
     Boilerplate, gibberish, and wrong-language documents have unusual
@@ -47,11 +42,11 @@ def unigram_surprisal(
     corpus). It MUST come from the same tokenization: lower-cased
     whitespace tokens, empties dropped.
 
-    Returns (id_col, score) with the RAW double score — display
+    Returns (doc_id, score) with the RAW double score — display
     rounding belongs to the caller (functions.scalars.round_half_up).
     """
     ltoks = docs.select(
-        id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
+        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
     ).filter(F.col("token") != "")
     if counts is None:
         counts = ltoks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
@@ -59,7 +54,7 @@ def unigram_surprisal(
     return (
         ltoks.join(counts, "token")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.avg(-F.log(F.col("n").cast("double") / F.col("total"))).alias(
                 "score"
@@ -78,15 +73,13 @@ def _lower_tokens(text_col: str) -> Column:
     )
 
 
-def _adjacent_pairs(
-    docs: DataFrame, text_col: str, id_col: str | None = None
-) -> DataFrame:
+def _adjacent_pairs(docs: DataFrame, id_col: str | None = None) -> DataFrame:
     """(prev, cur) adjacent token pairs (optionally id-keyed): zip the
     token array with its own 1-shifted copy; zip_with NULL-pads the
     shorter side, so the last element pairs (last_token, NULL) and the
     filter drops it. Map-only — the word_shingles no-lambda-body
     re-evaluation discipline (functions/text.py:101-107)."""
-    ltoks = _lower_tokens(text_col)
+    ltoks = _lower_tokens("text")
     bigrams = F.filter(
         F.zip_with(
             ltoks,
@@ -103,10 +96,7 @@ def _adjacent_pairs(
 
 def bigram_surprisal(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_count: int = 2,
-    alpha: float = 0.4,
     unigram_counts: DataFrame | None = None,
     bigram_counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -116,7 +106,7 @@ def bigram_surprisal(
 
         p = c2(prev, cur) / c1(prev)        if the bigram survives
                                             min_count pruning,
-          = alpha * c1(cur) / total         otherwise (backoff to the
+          = 0.4 * c1(cur) / total           otherwise (backoff to the
                                             unigram model),
 
     and the score is mean(-ln p). This is the KenLM-shaped upgrade of
@@ -140,7 +130,7 @@ def bigram_surprisal(
 
     Documents with fewer than two non-empty tokens have no bigrams and
     emit no row (they drop out of the explode on any engine). Returns
-    (id_col, score, n_bigrams) with the RAW double score — display
+    (doc_id, score, n_bigrams) with the RAW double score — display
     rounding belongs to the caller.
 
     ``unigram_counts`` optionally supplies the (token, n) table from the
@@ -160,7 +150,7 @@ def bigram_surprisal(
     OOV contract (the frozen-model case that matters): tokens absent
     from ``unigram_counts`` are scored KenLM-style as ``<unk>`` with
     count 1 — the unigram joins are LEFT joins, an unseen ``cur`` backs
-    off to ``p = alpha * 1/total``, and a bigram whose ``prev`` is
+    off to ``p = 0.4 * 1/total``, and a bigram whose ``prev`` is
     unseen takes the backoff branch regardless of ``bigram_counts``.
     Novel-garbage batches therefore get their most suspicious
     transitions scored at maximum surprisal instead of silently dropped
@@ -168,8 +158,8 @@ def bigram_surprisal(
     row. In self-model mode every token is in the table, so the left
     joins match inner-join behavior exactly.
     """
-    ltoks = _lower_tokens(text_col)
-    pairs = _adjacent_pairs(docs, text_col, id_col=id_col)
+    ltoks = _lower_tokens("text")
+    pairs = _adjacent_pairs(docs, id_col="doc_id")
 
     if unigram_counts is None:
         unigram_counts = (
@@ -200,14 +190,14 @@ def bigram_surprisal(
         F.col("n2").isNotNull() & F.col("n_prev").isNotNull(),
         F.col("n2").cast("double") / F.col("n_prev"),
     ).otherwise(
-        F.lit(alpha) * F.coalesce(F.col("n_cur"), F.lit(1.0)) / F.col("total")
+        F.lit(0.4) * F.coalesce(F.col("n_cur"), F.lit(1.0)) / F.col("total")
     )
     return (
         pairs.join(c2, ["prev", "cur"], "left")
         .join(c1p, "prev", "left")
         .join(c1c, "cur", "left")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.avg(-F.log(p)).alias("score"),
             F.count(F.lit(1)).alias("n_bigrams"),
@@ -414,8 +404,6 @@ def gopher_panel(
 
 def pmi_collocations(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_count: int = 5,
     unigram_counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -457,8 +445,8 @@ def pmi_collocations(
     a caller that already built the vocabulary (the tfidf suite's
     materialized wordcount) skips one corpus pass — the
     bigram_surprisal contract."""
-    ltoks = _lower_tokens(text_col)
-    pairs = _adjacent_pairs(docs, text_col)
+    ltoks = _lower_tokens("text")
+    pairs = _adjacent_pairs(docs)
     uni = unigram_counts
     if uni is None:
         # vocabulary-sized (Heaps'-law sub-linear) and consumed three

@@ -26,19 +26,10 @@ def range_join(
     hi: str = "hi",
     by: tuple[str, ...] = (),
     bucket_seconds: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join-shaped interval join: rows of ``left`` matched to every
     ``right`` interval with ``lo <= on <= hi`` (inclusive both ends),
     optionally co-keyed on ``by`` columns."""
-    if how != "inner":
-        # the exact BETWEEN runs as a post-join FILTER, which would
-        # silently discard the null-padded rows an outer join exists to
-        # produce; support inner only rather than lie about outer
-        raise ValueError(
-            "range_join supports how='inner' only (the BETWEEN residual "
-            "is applied post-join and would drop outer null rows)"
-        )
     # Column names shared between the two frames (beyond the join keys)
     # would make the unqualified BETWEEN references below ambiguous —
     # fail with the precondition spelled out instead of Spark's
@@ -64,7 +55,7 @@ def range_join(
         )
     )
     return (
-        lb.join(rb, [*by, "_bucket"], how)
+        lb.join(rb, [*by, "_bucket"], "inner")
         .filter((F.col(on) >= F.col(lo)) & (F.col(on) <= F.col(hi)))
         .drop("_bucket")
     )

@@ -81,38 +81,23 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "text",
-    n_salt: int = 8,
-    stats: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 documents per query: (query_id, doc_id, bm25, rank),
     rank 1..k by descending score, doc_id ascending as the
     deterministic tiebreak. Documents sharing no term with a query
     score 0 and are absent (the inverted-index contract); a query with
     no non-empty tokens matches nothing.
-
-    ``stats`` optionally supplies the 1-row (n_docs, avgdl) corpus
-    aggregate — a caller scoring the SAME corpus twice (the PRF second
-    pass) skips one full corpus tokenization. It MUST describe ``docs``
-    exactly (same rows, same tokenization).
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    if k1 < 0 or not 0 <= b <= 1:
-        raise ValueError(f"need k1 >= 0 and 0 <= b <= 1, got k1={k1}, b={b}")
 
-    qterms = _term_counts(queries, query_id_col, query_text_col).select(
+    qterms = _term_counts(queries, "query_id", "text").select(
         F.col("id").alias("query_id"), "token"
     )
     qvocab = qterms.select("token").distinct()
 
     # corpus-side: non-query tokens are dropped BEFORE the tf shuffle
-    doc_terms = _term_counts(docs, id_col, text_col, vocab=qvocab)
+    doc_terms = _term_counts(docs, "doc_id", "text", vocab=qvocab)
 
     # document frequency for query terms only (query-vocab-sized)
     dfreq = doc_terms.groupBy("token").agg(
@@ -124,23 +109,20 @@ def bm25_topk(
     # Convention: n_docs counts every corpus row; avgdl averages over
     # docs whose text tokenizes (avg skips the NULL dl of NULL text) —
     # the oracle's COUNT(*) / AVG() pair behaves identically.
-    if stats is None:
-        stats = corpus_stats_1row(docs, text_col=text_col)
-
-    return score_topk(doc_terms, qterms, dfreq, stats, k, k1, b, n_salt)
-
-
-def corpus_stats_1row(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """The 1-row (n_docs, avgdl) broadcast aggregate BM25 scoring needs
-    — factored out so multi-pass callers (PRF) compute it once."""
-    return docs.select(
+    stats = docs.select(
         F.size(
-            F.array_remove(tokens(F.lower(F.col(text_col))), "")
+            F.array_remove(tokens(F.lower(F.col("text"))), "")
         ).alias("dl")
     ).agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
+
+    return score_topk(doc_terms, qterms, dfreq, stats, k)
+
+
+# BM25 term-frequency saturation and length normalization
+K1, B = 1.2, 0.75
 
 
 def score_topk(
@@ -149,9 +131,6 @@ def score_topk(
     dfreq: DataFrame,
     stats: DataFrame,
     k: int,
-    k1: float,
-    b: float,
-    n_salt: int,
 ) -> DataFrame:
     """Shared BM25 scoring + ranking tail: ``doc_terms`` is
     (id, dl, token, tf) from either a live corpus scan (:func:`bm25_topk`)
@@ -165,10 +144,10 @@ def score_topk(
     )
     contrib = idf * (
         F.col("tf")
-        * (k1 + 1)
+        * (K1 + 1)
         / (
             F.col("tf")
-            + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+            + K1 * (1 - B + B * F.col("dl") / F.col("avgdl"))
         )
     )
 
@@ -195,29 +174,23 @@ def score_topk(
         order_col="_bm25_r",
         tiebreak_col="doc_id",
         k=k,
-        n_salt=n_salt,
+        n_salt=8,
     )
     return out.select(
         "query_id", "doc_id", "bm25", F.col("rank").cast("int").alias("rank")
     )
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    query_col: str = "query_id",
-    item_col: str = "doc_id",
-    k: int = 10,
-    k0: int = 60,
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of N ranked lists —
     the standard hybrid-retrieval combiner (lexical BM25 + semantic ANN
-    being the canonical pair): each list contributes ``1 / (k0 + rank)``
+    being the canonical pair): each list contributes ``1 / (60 + rank)``
     for the items it ranked, the per-(query, item) contributions sum,
     and the fused top-k is ranked on the 6-dp ROUNDED score with an
     item-id tiebreak (the bm25_topk ranking discipline — raw-double
     ranking would tie-break differently per engine).
 
-    Every input must carry (query_col, item_col, rank). Scale shape:
+    Every input must carry (query_id, doc_id, rank). Scale shape:
     the legs are already top-k-blocked, so the union holds at most
     ``len(rankings) * k`` rows per query — the fusion window's fan-in is
     bounded by construction and no salting is needed. With two legs the
@@ -233,10 +206,10 @@ def rrf_fuse(
 
     legs = [
         r.select(
-            F.col(query_col).alias("query_id"),
-            F.col(item_col).alias("__rrf_item"),
+            F.col("query_id"),
+            F.col("doc_id").alias("__rrf_item"),
             (
-                F.lit(1.0) / (F.lit(float(k0)) + F.col("rank").cast("double"))
+                F.lit(1.0) / (F.lit(60.0) + F.col("rank").cast("double"))
             ).alias("__rrf_c"),
         )
         for r in rankings
@@ -253,8 +226,8 @@ def rrf_fuse(
         fused.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("query_id").alias(query_col),
-            F.col("__rrf_item").alias(item_col),
+            F.col("query_id"),
+            F.col("__rrf_item").alias("doc_id"),
             "score",
             "rank",
         )
@@ -265,79 +238,66 @@ def prf_expand(
     corpus: DataFrame,
     queries: DataFrame,
     lex_ranks: DataFrame,
-    k_fb: int = 5,
-    n_terms: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_text_col: str | None = None,
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Pseudo-relevance-feedback query expansion (the Rocchio/RM-family
     first-pass trick, integer-weighted variant): take each query's top
-    ``k_fb`` first-pass documents, rank THEIR terms by total term
+    5 first-pass documents, rank THEIR terms by total term
     frequency within that feedback set (an exact integer, so the
     cross-engine ranking needs no FP tolerance; term-ascending
     tiebreak), drop terms the query already contains, and append the
-    top ``n_terms`` to the query text. BM25 treats the query as a term
+    top 10 to the query text. BM25 treats the query as a term
     SET, so append order is immaterial — the expansion is a set union.
 
     ``lex_ranks`` is the first-pass ranking (query_id, doc_id, rank) —
     pass the frame you already computed; this function does not re-run
-    retrieval. Scale shape: the feedback doc set is ≤ queries × k_fb
+    retrieval. Scale shape: the feedback doc set is ≤ queries × 5
     rows however large the corpus, so every stage here is
     query-set-sized: one semi-join pulls the feedback texts, one
     explode+groupBy counts their terms, one window takes the top-n. The
     second retrieval pass the caller runs afterwards pays one more
     corpus scan — the honest cost of PRF everywhere.
 
-    Returns (query_id, <query_text_col>) with the expanded text — feed
-    it straight back to :func:`bm25_topk`. Queries whose feedback terms
-    are all already in the query expand to themselves.
-    ``query_text_col`` defaults to ``text_col`` (corpus and queries
-    usually share the column name; pass it when they differ — the
-    bm25_topk signature symmetry). ``query_id_col`` names the query id
-    column in BOTH ``queries`` and ``lex_ranks`` (the rrf_fuse
-    parameterization discipline) and is preserved in the output.
+    Returns (query_id, text) with the expanded text — feed it straight
+    back to :func:`bm25_topk`. Queries whose feedback terms are all
+    already in the query expand to themselves.
     """
-    qtc = text_col if query_text_col is None else query_text_col
-    qid = query_id_col
     from pyspark.sql import Window
 
-    fb = lex_ranks.filter(F.col("rank") <= k_fb).select(
-        qid, F.col(id_col)
+    fb = lex_ranks.filter(F.col("rank") <= 5).select(
+        "query_id", F.col("doc_id")
     )
     fb_texts = fb.join(
-        corpus.select(id_col, text_col), id_col
-    ).select(qid, text_col)
+        corpus.select("doc_id", "text"), "doc_id"
+    ).select("query_id", "text")
     toks = F.filter(
-        tokens(F.lower(F.col(text_col))), lambda t: t != F.lit("")
+        tokens(F.lower(F.col("text"))), lambda t: t != F.lit("")
     )
     fb_counts = (
-        fb_texts.select(qid, F.explode(toks).alias("token"))
-        .groupBy(qid, "token")
+        fb_texts.select("query_id", F.explode(toks).alias("token"))
+        .groupBy("query_id", "token")
         .agg(F.count(F.lit(1)).alias("w"))
     )
     qtoks = F.filter(
-        tokens(F.lower(F.col(qtc))), lambda t: t != F.lit("")
+        tokens(F.lower(F.col("text"))), lambda t: t != F.lit("")
     )
     qterms = queries.select(
-        qid, F.explode(qtoks).alias("token")
+        "query_id", F.explode(qtoks).alias("token")
     ).distinct()
-    new_terms = fb_counts.join(qterms, [qid, "token"], "left_anti")
-    wnd = Window.partitionBy(qid).orderBy(
+    new_terms = fb_counts.join(qterms, ["query_id", "token"], "left_anti")
+    wnd = Window.partitionBy("query_id").orderBy(
         F.col("w").desc(), F.col("token")
     )
     picked = (
         new_terms.withColumn("r", F.row_number().over(wnd))
-        .filter(F.col("r") <= n_terms)
-        .groupBy(qid)
+        .filter(F.col("r") <= 10)
+        .groupBy("query_id")
         .agg(F.concat_ws(" ", F.collect_list("token")).alias("_exp"))
     )
-    return queries.join(picked, qid, "left").select(
-        qid,
+    return queries.join(picked, "query_id", "left").select(
+        "query_id",
         F.when(
-            F.col("_exp").isNull(), F.col(qtc)
+            F.col("_exp").isNull(), F.col("text")
         )
-        .otherwise(F.concat(F.col(qtc), F.lit(" "), F.col("_exp")))
-        .alias(qtc),
+        .otherwise(F.concat(F.col("text"), F.lit(" "), F.col("_exp")))
+        .alias("text"),
     )

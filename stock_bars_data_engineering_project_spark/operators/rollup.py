@@ -46,36 +46,32 @@ _STATE = (
 def rollup_increment(
     batch: DataFrame,
     keys: tuple[str, ...] = ("user_id",),
-    ts: str = "ts",
-    value: str = "value",
-    day_of: str | None = "ts",
     distinct_col: str | None = None,
 ) -> DataFrame:
     """One partial-aggregation pass over a batch -> mergeable state rows.
 
-    ``day_of`` adds the event day to the group keys (the common rollup
-    grain); pass None for an all-time per-key rollup. ``distinct_col``
-    additionally carries mergeable sketch state: an HLL sketch of that
+    The event day of ``ts`` joins the group keys (the common rollup
+    grain). ``distinct_col`` additionally carries mergeable sketch
+    state: an HLL sketch of that
     column (incremental distinct count) and a KLL sketch of ``value``
     (incremental quantiles) — both fold through ``merge_rollups``
     exactly like the scalar state.
     """
     group = [F.col(k) for k in keys]
-    if day_of is not None:
-        group.append(F.to_date(F.col(day_of)).alias("day"))
+    group.append(F.to_date(F.col("ts")).alias("day"))
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(value).alias("sum_value"),
-        F.min(value).alias("min_value"),
-        F.max(value).alias("max_value"),
-        F.min(F.struct(F.col(ts), F.col(value)))[ts].alias("_ots"),
-        F.min(F.struct(F.col(ts), F.col(value)))[value].alias("_ov"),
-        F.max(F.struct(F.col(ts), F.col(value)))[ts].alias("_cts"),
-        F.max(F.struct(F.col(ts), F.col(value)))[value].alias("_cv"),
+        F.sum("value").alias("sum_value"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+        F.min(F.struct(F.col("ts"), F.col("value")))["ts"].alias("_ots"),
+        F.min(F.struct(F.col("ts"), F.col("value")))["value"].alias("_ov"),
+        F.max(F.struct(F.col("ts"), F.col("value")))["ts"].alias("_cts"),
+        F.max(F.struct(F.col("ts"), F.col("value")))["value"].alias("_cv"),
     ]
     if distinct_col is not None:
         aggs.append(F.hll_sketch_agg(distinct_col).alias("hll_state"))
-        aggs.append(F.kll_sketch_agg_double(value).alias("kll_state"))
+        aggs.append(F.kll_sketch_agg_double("value").alias("kll_state"))
     return batch.groupBy(*group).agg(*aggs).withColumnsRenamed(
         {"_ots": "open_ts", "_ov": "open_value", "_cts": "close_ts", "_cv": "close_value"}
     )

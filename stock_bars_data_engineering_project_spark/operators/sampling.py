@@ -41,24 +41,12 @@ def hash_bucket(key: Column, n_buckets: int = 10_000, salt: str = "") -> Column:
     ).otherwise(bucket)
 
 
-def _check_weights(weights: dict[str, float]) -> None:
-    total = sum(weights.values())
-    if abs(total - 1.0) > 1e-9:
-        # the last entry would silently absorb every leftover bucket
-        raise ValueError(f"split weights must sum to 1.0, got {total}")
-
-
-def stable_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    weights: dict[str, float] | None = None,
-) -> DataFrame:
-    """Assign every row a split label by hashed-id bucket. Default
-    90/5/5 train/val/test. Deterministic, engine-portable, and stable
-    under corpus growth — new rows hash into splits without moving any
+def stable_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Assign every row a split label by hashed-id bucket: 90/5/5
+    train/val/test. Deterministic, engine-portable, and stable under
+    corpus growth — new rows hash into splits without moving any
     existing row."""
-    weights = weights or {"train": 0.90, "val": 0.05, "test": 0.05}
-    _check_weights(weights)
+    weights = {"train": 0.90, "val": 0.05, "test": 0.05}
     bucket = hash_bucket(F.col(id_col), salt="split")
     expr = None
     hi = 0.0
@@ -118,8 +106,6 @@ def token_budget_sample(
     df: DataFrame,
     budgets: dict[str, int],
     n_tokens: Column,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
     default_budget: int = 0,
 ) -> DataFrame:
     """Fill a per-stratum TOKEN budget instead of sampling by rate — the
@@ -142,16 +128,16 @@ def token_budget_sample(
                 "rename it before sampling"
             )
     w = (
-        Window.partitionBy(stratum_col)
-        .orderBy(hash_bucket(F.col(id_col), salt="budget"), F.col(id_col))
+        Window.partitionBy("source")
+        .orderBy(hash_bucket(F.col("doc_id"), salt="budget"), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     budget = None
     for name, b in budgets.items():
         budget = (
-            F.when(F.col(stratum_col) == name, b)
+            F.when(F.col("source") == name, b)
             if budget is None
-            else budget.when(F.col(stratum_col) == name, b)
+            else budget.when(F.col("source") == name, b)
         )
     budget = (
         F.lit(default_budget) if budget is None else budget.otherwise(default_budget)
@@ -280,21 +266,16 @@ def shuffle_shards(
     return df.withColumn("order_key", order_key).withColumn("shard", shard)
 
 
-def curriculum_phases(
-    df: DataFrame,
-    size: Column,
-    n_phases: int = 10,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def curriculum_phases(df: DataFrame, size: Column) -> DataFrame:
     """Curriculum-learning phase assignment: order the corpus into
-    ``n_phases`` quantile phases of ``size`` (classic length-based
-    curriculum — train on short/simple documents first, graduate to
-    long ones). Adds an int ``phase`` column in [0, n_phases).
+    10 quantile phases of ``size`` (classic length-based curriculum —
+    train on short/simple documents first, graduate to long ones). Adds
+    an int ``phase`` column in [0, 10).
 
     Phase boundaries are INTEGER-EXACT, derived from the size
     HISTOGRAM rather than an interpolated percentile: boundary t_k
-    (k = 1..n_phases-1) is the smallest size whose cumulative doc count
-    reaches ceil(k*n/n_phases) — compared as ``cum * n_phases >= k * n``
+    (k = 1..9) is the smallest size whose cumulative doc count
+    reaches ceil(k*n/10) — compared as ``cum * 10 >= k * n``
     so no division, rounding mode, or FP interpolation can diverge
     across engines (the exact 1-ULP hazard class the multimodal phash
     oracle once hit). Ties share a phase by construction: equal
@@ -304,13 +285,11 @@ def curriculum_phases(
     Scale shape: the only full-corpus work is one partial-aggregable
     ``groupBy(size)`` histogram; the cumulative window and the boundary
     argmin run on the DISTINCT-SIZE table (bounded by the max document
-    length, ~10^5 rows at any corpus scale), and the n_phases-1
+    length, ~10^5 rows at any corpus scale), and the 9
     boundary values — a model, like the BPE rule table — are collected
     to the driver and folded back as a map-only when-chain. No global
     sort, no per-doc window.
     """
-    if n_phases < 2:
-        raise ValueError(f"n_phases must be >= 2, got {n_phases}")
     for c in ("phase", "_sz"):
         if c in df.columns:
             raise ValueError(
@@ -330,7 +309,7 @@ def curriculum_phases(
     # total doc count = the histogram's own cumulative max — derived on
     # the tiny distinct-size table so the corpus is scanned exactly once
     full = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ks = range(1, n_phases)
+    ks = range(1, 10)
     bounds = (
         cum.withColumn("_n", F.max("_cum").over(full))
         .crossJoin(
@@ -338,7 +317,7 @@ def curriculum_phases(
                 cum.sparkSession.createDataFrame([(k,) for k in ks], "k int")
             )
         )
-        .filter(F.col("_cum") * n_phases >= F.col("k") * F.col("_n"))
+        .filter(F.col("_cum") * 10 >= F.col("k") * F.col("_n"))
         .groupBy("k")
         .agg(F.min("_sz").alias("t"))
         .collect()
@@ -415,13 +394,7 @@ def walk_forward_days(
     )
 
 
-def reservoir_k(
-    df: DataFrame,
-    keys: tuple[str, ...],
-    id_col: str,
-    k: int,
-    seed: str = "res",
-) -> DataFrame:
+def reservoir_k(df: DataFrame, keys: tuple[str, ...], id_col: str, k: int) -> DataFrame:
     """Deterministic exact-k per-group sample — the distributed,
     re-runnable stand-in for reservoir sampling. Rate-based sampling
     (:func:`stratified_sample`) cannot promise "exactly k docs per
@@ -431,7 +404,7 @@ def reservoir_k(
     incumbent, it never reshuffles the survivor set.
 
     The hash is the engine-portable 48-bit md5 prefix (exact integer —
-    the ranking is FP-free), salted by ``seed`` so composition with the
+    the ranking is FP-free), salted by ``'res'`` so composition with the
     split/sample hashes stays independent (the hash_bucket discipline).
     Bottom-k is also MERGEABLE: the bottom-k of a union is the bottom-k
     of the concatenated bottom-k's, which is why this form (not an
@@ -454,7 +427,7 @@ def reservoir_k(
             F.raise_error(
                 F.lit("reservoir_k: NULL id — clean or filter ids first")
             ),
-        ).otherwise(md5_bucket48(F.col(id_col), 1 << 48, salt=seed)),
+        ).otherwise(md5_bucket48(F.col(id_col), 1 << 48, salt="res")),
     )
     from .skew import salted_topk
 
@@ -469,8 +442,6 @@ def weighted_sample_k(
     id_col: str,
     weight_col: str,
     k: int,
-    seed: str = "wres",
-    round_dp: int = 9,
 ) -> DataFrame:
     """Weighted exact-k per-group sample without replacement —
     Efraimidis-Spirakis A-ES: each row draws a deterministic uniform
@@ -486,16 +457,16 @@ def weighted_sample_k(
     of the textbook ``u**(1/w)`` (ln is strictly increasing, so the
     order is identical before rounding) chosen for DYNAMIC RANGE under
     the pre-rank rounding: at w ~ 1e6 (token counts of huge docs)
-    ``u**(1/w)`` compresses into [0.999986, 1] where ``round_dp=9``
+    ``u**(1/w)`` compresses into [0.999986, 1] where rounding to 9 places
     keeps only ~14 distinct values and selection silently degrades to
     the id tiebreak, while ``ln(u)/w`` spans [-1.4e-5, -1e-9] with
     ~10^4 distinct rounded values. Very large weights still compress
-    eventually — at w >~ 1e8 consider raising ``round_dp`` on both
+    eventually — at w >~ 1e8 the 9-place rounding needs raising on both
     engines.
 
     Determinism contract: u is (h48 %% 1_000_000 + 1) / 1e6 — one
     correctly-rounded division of exact integers, identical in any
-    engine — and the A-ES key is rounded to ``round_dp`` BEFORE the
+    engine — and the A-ES key is rounded to 9 places BEFORE the
     ranking with the id as tiebreak, so a sub-ULP ln() difference
     between libms cannot flip an order (the lexranks discipline).
     Weights must be >= 1 (integer token counts are the intended use)
@@ -510,9 +481,9 @@ def weighted_sample_k(
 
     w = F.col(weight_col).cast("double")
     u = (
-        md5_bucket48(F.col(id_col), 1_000_000, salt=seed) + 1
+        md5_bucket48(F.col(id_col), 1_000_000, salt="wres") + 1
     ) / 1_000_000.0
-    key = round_half_up(F.log(u) / w, round_dp)
+    key = round_half_up(F.log(u) / w, 9)
     guard = (
         F.when(
             F.col(id_col).isNull(),

@@ -37,37 +37,26 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_up
 from ..functions.vectors import as_double, dot, dot_sql, norm
 from .dedup import _bucket_pairs
-from .similarity import ivf_assign, kmeans_refine
+from .similarity import ivf_assign
 
 
 def semantic_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    centroids: DataFrame | None = None,
     centroid_stride: int = 125,
-    refine_iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The SemDeDup candidate/verify stage on its own: verified
     within-cell duplicate pairs ``(doc_a, doc_b, cos)`` with
     ``doc_a < doc_b``, cosine rounded to 4 for display and verified at
     6-digit rounding >= ``threshold`` (the shared oracle discipline).
-
-    ``centroids``: optional (cid, cv) frame; defaults to the stride
-    seed over the corpus, polished with ``refine_iters`` Lloyd
-    iterations (similarity.kmeans_refine) when requested.
+    The centroids are every ``centroid_stride``-th vector.
     """
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if centroids is None:
-        centroids = emb.filter(F.col(id_col) % centroid_stride == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-        )
-        if refine_iters > 0:
-            centroids = kmeans_refine(emb, centroids, n_iters=refine_iters,
-                                      vec_col=vec_col, id_col=id_col)
-    assigned = ivf_assign(emb, centroids, vec_col=vec_col, id_col=id_col)
+    centroids = emb.filter(F.col("vec_id") % centroid_stride == 0).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    )
+    assigned = ivf_assign(emb, centroids)
     return _pairs_from_assigned(assigned, threshold)
 
 
@@ -103,11 +92,7 @@ def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _best_eval_match(
-    scored: DataFrame,
-    threshold: float,
-    id_col: str,
-) -> DataFrame:
+def _best_eval_match(scored: DataFrame, threshold: float) -> DataFrame:
     """Shared reduce for the decontamination arms: per train vector,
     the best (highest-cosine) eval match. Ties on the raw double break
     to the LOWEST eval id via lexicographic struct max over
@@ -115,7 +100,7 @@ def _best_eval_match(
     replays as ``ORDER BY cos_raw DESC, eval_id``. The max is a
     partial-aggregable groupBy (map-side combine), so the only shuffle
     carries one pre-reduced row per train vector per partition."""
-    best = scored.groupBy(id_col).agg(
+    best = scored.groupBy("vec_id").agg(
         F.max(
             F.struct(
                 F.col("_cos_raw").alias("c"), (-F.col("_eid")).alias("nid")
@@ -123,7 +108,7 @@ def _best_eval_match(
         ).alias("_b")
     )
     return best.select(
-        id_col,
+        "vec_id",
         (-F.col("_b.nid")).cast("long").alias("near_eval_id"),
         round_half_up(F.col("_b.c"), 4).alias("cos"),
         (round_half_up(F.col("_b.c"), 6) >= F.lit(threshold)).alias(
@@ -132,10 +117,7 @@ def _best_eval_match(
     )
 
 
-def _decontam_guard(
-    train: DataFrame, eval_set: DataFrame, threshold: float,
-    id_col: str, eval_id_col: str,
-) -> None:
+def _decontam_guard(train: DataFrame, eval_set: DataFrame, threshold: float) -> None:
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     taken = {"near_eval_id", "cos", "contaminated"}
@@ -145,16 +127,14 @@ def _decontam_guard(
             f"semantic_decontaminate: column names {colliding} are "
             "reserved for the output; rename them on the input first"
         )
-    if id_col in taken:
-        raise ValueError(f"id_col {id_col!r} collides with an output column")
     # the argmax tie-break negates the eval id, so it must be numeric —
     # a string id would silently cast to NULL and corrupt near_eval_id
     from pyspark.sql import types as T
 
-    dt = eval_set.schema[eval_id_col].dataType
+    dt = eval_set.schema["vec_id"].dataType
     if not isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         raise ValueError(
-            f"semantic_decontaminate: eval id column {eval_id_col!r} must "
+            "semantic_decontaminate: eval id column 'vec_id' must "
             f"be an integer type (got {dt.simpleString()}) — the argmax "
             "tie-break orders on its negation; map string ids to a "
             "surrogate long first"
@@ -165,9 +145,6 @@ def semantic_decontaminate(
     train: DataFrame,
     eval_set: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eval_id_col: str | None = None,
 ) -> DataFrame:
     """Embedding-space benchmark decontamination, exact form: score
     every training vector by its maximum cosine against the held-out
@@ -178,7 +155,7 @@ def semantic_decontaminate(
     re-embedded eval leakage that shingle overlap cannot (the semantic
     decontamination step of modern pre-training pipelines).
 
-    Returns ``(id_col, near_eval_id, cos, contaminated)`` — one row per
+    Returns ``(vec_id, near_eval_id, cos, contaminated)`` — one row per
     training vector (the full scored table, not just the flagged ones),
     with ``near_eval_id`` the argmax eval vector (ties -> lowest id).
 
@@ -193,16 +170,15 @@ def semantic_decontaminate(
     against), not an all-false table — callers gating a corpus on the
     output must treat "no eval set" upstream.
     """
-    eid = eval_id_col or id_col
-    _decontam_guard(train, eval_set, threshold, id_col, eid)
+    _decontam_guard(train, eval_set, threshold)
     ev = F.broadcast(
         eval_set.select(
-            F.col(eid).cast("long").alias("_eid"),
-            as_double(F.col(vec_col)).alias("_ev"),
+            F.col("vec_id").cast("long").alias("_eid"),
+            as_double(F.col("embedding")).alias("_ev"),
         ).withColumn("_en", norm("_ev"))
     )
     tr = train.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_tv")
+        F.col("vec_id"), as_double(F.col("embedding")).alias("_tv")
     ).withColumn("_tn", norm("_tv"))
     # hoisted-norm cosine: dot / (norm_a * norm_b) — the same fold and
     # division association as functions.vectors.cosine and the oracle's
@@ -210,7 +186,7 @@ def semantic_decontaminate(
     scored = tr.crossJoin(ev).withColumn(
         "_cos_raw", dot("_tv", "_ev") / (F.col("_tn") * F.col("_en"))
     )
-    return _best_eval_match(scored, threshold, id_col)
+    return _best_eval_match(scored, threshold)
 
 
 def semantic_decontaminate_blocked(
@@ -220,9 +196,6 @@ def semantic_decontaminate_blocked(
     dim: int = 64,
     n_planes: int = 8,
     hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    eval_id_col: str | None = None,
 ) -> DataFrame:
     """Blocked form of :func:`semantic_decontaminate` for eval sets too
     large to broadcast-scan: both sides get the deterministic
@@ -247,8 +220,7 @@ def semantic_decontaminate_blocked(
 
     from .similarity import lsh_bucket
 
-    eid = eval_id_col or id_col
-    _decontam_guard(train, eval_set, threshold, id_col, eid)
+    _decontam_guard(train, eval_set, threshold)
     if not 0 <= hamming <= 2:
         # the ball is C(n_planes, <=hamming); past radius 2 it grows
         # combinatorially and the caller should raise n_planes instead
@@ -265,8 +237,8 @@ def semantic_decontaminate_blocked(
     bucket = lsh_bucket("_ev", dim, n_planes)
     ev = (
         eval_set.select(
-            F.col(eid).cast("long").alias("_eid"),
-            as_double(F.col(vec_col)).alias("_ev"),
+            F.col("vec_id").cast("long").alias("_eid"),
+            as_double(F.col("embedding")).alias("_ev"),
         )
         .withColumn("_en", norm("_ev"))
         .withColumn("_eb", bucket)
@@ -278,7 +250,7 @@ def semantic_decontaminate_blocked(
         )
     )
     tr = (
-        train.select(F.col(id_col), as_double(F.col(vec_col)).alias("_tv"))
+        train.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_tv"))
         .withColumn("_tn", norm("_tv"))
         .withColumn("_tb", lsh_bucket("_tv", dim, n_planes))
     )
@@ -287,4 +259,4 @@ def semantic_decontaminate_blocked(
     ).withColumn(
         "_cos_raw", dot("_tv", "_ev") / (F.col("_tn") * F.col("_en"))
     )
-    return _best_eval_match(scored, threshold, id_col)
+    return _best_eval_match(scored, threshold)

@@ -25,17 +25,11 @@ from pyspark.sql import functions as F
 from ..functions.scalars import event_micros
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Label every event with its per-user ``session_id`` (1-based, in
     time order): a new session starts at the user's first event and at
     every event following >= ``gap_minutes`` of silence. Ordering is
-    (event-time micros, ``id_col``) — tie-free by the unique event id,
+    (event-time micros, ``event_id``) — tie-free by the unique event id,
     so the labeling is deterministic on any engine (the window-ordering
     discipline). Timestamp flavor (TIMESTAMP vs TIMESTAMP_NTZ) is
     normalized by ``event_micros``.
@@ -53,47 +47,40 @@ def sessionize(
             "sessionize: input already has a session_id column — rename "
             "it first (withColumn would silently overwrite)"
         )
-    us = event_micros(events, ts_col)
-    w = Window.partitionBy(user_col).orderBy(us.asc(), F.col(id_col).asc())
+    us = event_micros(events, "ts")
+    w = Window.partitionBy("user_id").orderBy(us.asc(), F.col("event_id").asc())
     gap_us = int(gap_minutes) * 60 * 1_000_000
     prev = F.lag(us).over(w)
     flagged = events.withColumn(
         "_new_session",
         F.when(prev.isNull() | ((us - prev) > gap_us), 1).otherwise(0),
     )
-    run = Window.partitionBy(user_col).orderBy(
-        event_micros(flagged, ts_col).asc(), F.col(id_col).asc()
+    run = Window.partitionBy("user_id").orderBy(
+        event_micros(flagged, "ts").asc(), F.col("event_id").asc()
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return flagged.withColumn(
         "session_id", F.sum("_new_session").over(run)
     ).drop("_new_session")
 
 
-def session_stats(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-) -> DataFrame:
+def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-session aggregate over :func:`sessionize`: one row per
     (user, session) with event count, start/end epoch-micros, duration,
     and the time-ordered event-type chain — the sequence form consumed
     by behavioral-cloning / next-event training data builds. The
     aggregate is partial-aggregable except the ordered chain, which
     rides the same per-user sort the labeling already paid."""
-    labeled = sessionize(events, gap_minutes, user_col, ts_col, id_col)
-    us = event_micros(labeled, ts_col)
+    labeled = sessionize(events, gap_minutes)
+    us = event_micros(labeled, "ts")
     return (
         labeled.select(
-            user_col,
+            "user_id",
             "session_id",
             us.alias("_us"),
-            F.col(id_col).alias("_id"),
-            F.col(type_col).alias("_t"),
+            F.col("event_id").alias("_id"),
+            F.col("event_type").alias("_t"),
         )
-        .groupBy(user_col, "session_id")
+        .groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("_us").alias("start_us"),

@@ -35,19 +35,13 @@ from ..sources.readers import balance
 from .skew import salted_topk
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact brute-force top-k neighbors for each query vector."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     c = balance(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
+        corpus.select(F.col("vec_id"), F.col("embedding").alias("c_vec"))
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -164,8 +158,6 @@ def l2sq(a: F.Column | str, b: F.Column | str) -> F.Column:
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     keep_dist: bool = False,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (squared-L2, ties to
@@ -213,7 +205,7 @@ def ivf_assign(
     dim_of = F.size(as_double(F.col("_v")))
     cent_dim = F.size(F.element_at(F.col("cents"), 1)["cv"])
     slim = balance(
-        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
+        df.select(F.col("vec_id"), F.col("embedding").alias("_v"))
     )
     return (
         slim.crossJoin(F.broadcast(cent_arr))
@@ -239,8 +231,6 @@ def kmeans_refine(
     corpus: DataFrame,
     centroids: DataFrame,
     n_iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     exact_mean: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -280,7 +270,7 @@ def kmeans_refine(
         stats["inertia_in"] = []
     for _ in range(n_iters):
         assigned = ivf_assign(
-            corpus, cents, vec_col, id_col, keep_dist=stats is not None
+            corpus, cents, keep_dist=stats is not None
         )
         comp = assigned.select(
             "vec_id",
@@ -332,12 +322,7 @@ def kmeans_refine(
     return cents
 
 
-def kmeans_inertia(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> float:
+def kmeans_inertia(corpus: DataFrame, centroids: DataFrame) -> float:
     """Sum of squared distances to assigned centroids — the quantity
     Lloyd iterations must not increase. One map-only pass: the argmin
     fold already computed the winning distance, so this reads it off
@@ -345,7 +330,7 @@ def kmeans_inertia(
     l2sq — at 100 TB the training monitor costs exactly the assignment
     pass it was going to pay anyway."""
     return (
-        ivf_assign(corpus, centroids, vec_col, id_col, keep_dist=True)
+        ivf_assign(corpus, centroids, keep_dist=True)
         .agg(F.sum("d2"))
         .first()[0]
     )
@@ -357,8 +342,6 @@ def ivf_topk(
     k: int = 10,
     centroid_stride: int = 125,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: partition the corpus into inverted lists by
@@ -372,13 +355,13 @@ def ivf_topk(
     cent = (
         centroids
         if centroids is not None
-        else corpus.filter(F.col(id_col) % centroid_stride == 0).select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+        else corpus.filter(F.col("vec_id") % centroid_stride == 0).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
         )
     )
-    assigned = ivf_assign(corpus, cent, vec_col, id_col)
+    assigned = ivf_assign(corpus, cent)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
     # nprobe nearest centroids per query (deterministic (d2, cid) order)
     qc = (
@@ -412,24 +395,21 @@ def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    dim: int = 64,
     n_planes: int = 8,
     probe_radius: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors whose bucket is
     within ``probe_radius`` sign-flips of the query's bucket (multi-probe
     LSH), then exact-rank the candidates."""
-    c = balance(corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))).select(
+    c = balance(corpus.select(F.col("vec_id"), F.col("embedding").alias("c_vec"))).select(
         "vec_id",
         "c_vec",
-        lsh_bucket("c_vec", dim, n_planes).alias("c_bucket"),
+        lsh_bucket("c_vec", 64, n_planes).alias("c_bucket"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        lsh_bucket(vec_col, dim, n_planes).alias("q_bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        lsh_bucket("embedding", 64, n_planes).alias("q_bucket"),
     )
     cand = (
         c.crossJoin(F.broadcast(q))
@@ -452,8 +432,6 @@ def pq_codebook(
     m: int = 4,
     dim: int = 64,
     stride: int = 32,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Deterministic product-quantization codebook: split the dim-`dim`
     space into ``m`` contiguous subspaces and take every ``stride``-th
@@ -485,10 +463,10 @@ def pq_codebook(
     # oracle join is unaffected. The global window ranks only the K
     # seed rows (K held constant at production scale — see below), the
     # same bounded-window pattern as the vocab top-100 ranking.
-    w_seed = Window.orderBy(F.col(id_col))
+    w_seed = Window.orderBy(F.col("vec_id"))
     cw = (
-        corpus.filter(F.col(id_col) % stride == 0)
-        .select(F.col(id_col), as_double(F.col(vec_col)).alias("cv"))
+        corpus.filter(F.col("vec_id") % stride == 0)
+        .select(F.col("vec_id"), as_double(F.col("embedding")).alias("cv"))
         .select(
             (F.row_number().over(w_seed) - 1).cast("long").alias("j"), "cv"
         )
@@ -517,8 +495,6 @@ def pq_topk(
     dim: int = 64,
     stride: int = 32,
     rerank: int = 32,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Product-quantization ANN (IVF-PQ's scoring half): encode every
     corpus vector as ``m`` codeword ids (its compressed representation —
@@ -536,7 +512,7 @@ def pq_topk(
     looked up in subspace order and left-folded from 0.0, matching the
     oracle's fixed-order sum, so ADC scores are bit-identical."""
     sub = dim // m
-    cb_row = pq_codebook(corpus, m, dim, stride, vec_col, id_col)
+    cb_row = pq_codebook(corpus, m, dim, stride)
 
     # m and sub are PYTHON constants, so the inner distance/dot loops
     # unroll into flat expression trees instead of nested HOF lambdas
@@ -591,7 +567,7 @@ def pq_topk(
     corpus_codes = (
         balance(
             corpus.select(
-                F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("_v")
+                F.col("vec_id"), as_double(F.col("embedding")).alias("_v")
             )
         )
         .crossJoin(F.broadcast(cb_row))
@@ -602,7 +578,7 @@ def pq_topk(
     # per-query ADC lookup table tq[s][j] = <q_sub(s), cw(s,j)> — the
     # nested-array layout makes each scan lookup O(1) element_at
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q_vec")
+        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("q_vec")
     )
     def tq_for(s):
         return (
@@ -646,7 +622,7 @@ def pq_topk(
 
     # rerank: fetch full vectors for the |queries| x rerank survivors
     scored = (
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec"))
+        corpus.select(F.col("vec_id"), F.col("embedding").alias("c_vec"))
         .join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(q), "query_id")
         .withColumn("cos", round_half_up(cosine("q_vec", "c_vec"), 6))

@@ -23,16 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def member_day_sets(
-    df: DataFrame, member_col: str = "user_id", day_of: str = "ts"
-) -> DataFrame:
+def member_day_sets(df: DataFrame) -> DataFrame:
     """Per-day Theta state of the member set — the stored input to
     retention/churn set expressions. One partial-aggregating pass; the
     result is O(days) rows of bounded-size state, mergeable across
     batches via ``theta_union_agg`` (grain (day,), no extra keys)."""
-    return df.groupBy(F.to_date(F.col(day_of)).alias("day")).agg(
+    return df.groupBy(F.to_date(F.col("ts")).alias("day")).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.theta_sketch_agg(member_col).alias("theta_state"),
+        F.theta_sketch_agg("user_id").alias("theta_state"),
     )
 
 

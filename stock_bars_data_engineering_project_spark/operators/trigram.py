@@ -56,13 +56,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def char_ngrams(text: Column, k: int = 3) -> Column:
-    """Overlapping k-character substrings as an array column; strings
-    shorter than k yield an empty array. Shifted-copy ``zip_with``
+def char_ngrams(text: Column) -> Column:
+    """Overlapping 3-character substrings as an array column; strings
+    shorter than 3 yield an empty array. Shifted-copy ``zip_with``
     build — see module docstring for why not transform+substring."""
     chars = F.split(text, "")
     acc = chars
-    for off in range(1, k):
+    for off in range(1, 3):
         acc = F.zip_with(
             acc,
             F.slice(chars, off + 1, F.size(chars)),
@@ -84,54 +84,36 @@ def trigram_postings(
     )
 
 
-def substring_scan(
-    docs: DataFrame,
-    patterns: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pattern_id_col: str = "pattern_id",
-    pattern_col: str = "pattern",
-) -> DataFrame:
+def substring_scan(docs: DataFrame, patterns: DataFrame) -> DataFrame:
     """The unindexed baseline: broadcast the (small) pattern set and
     ``contains``-probe every corpus row. O(N x q) text scans — correct
     at any size, affordable only when no index exists. Returns
     (pattern_id, id) match rows."""
     return (
         docs.crossJoin(F.broadcast(patterns))
-        .filter(F.contains(F.col(text_col), F.col(pattern_col)))
+        .filter(F.contains(F.col("text"), F.col("pattern")))
         .select(
-            F.col(pattern_id_col).alias("pattern_id"),
-            F.col(id_col).alias("id"),
+            F.col("pattern_id"),
+            F.col("doc_id").alias("id"),
         )
     )
 
 
-def substring_search(
-    docs: DataFrame,
-    patterns: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pattern_id_col: str = "pattern_id",
-    pattern_col: str = "pattern",
-    postings: DataFrame | None = None,
-) -> DataFrame:
-    """Exact substring matches (pattern_id, id) via the trigram index.
-
-    ``postings`` lets a caller supply a persisted/materialized index
-    (the incremental-maintenance story); by default they are derived
-    from ``docs`` in the same plan. Patterns below 3 characters take
-    the documented scan fallback; everything else goes
-    postings -> all-trigrams candidate gate -> contains verify.
+def substring_search(docs: DataFrame, patterns: DataFrame) -> DataFrame:
+    """Exact substring matches (pattern_id, id) via the trigram index,
+    whose postings are derived from ``docs`` in the same plan. Patterns
+    below 3 characters take the documented scan fallback; everything
+    else goes postings -> all-trigrams candidate gate -> contains
+    verify.
     """
     pats = patterns.select(
-        F.col(pattern_id_col).alias("pattern_id"),
-        F.col(pattern_col).alias("pattern"),
+        F.col("pattern_id"),
+        F.col("pattern"),
     )
     short = pats.filter(F.length("pattern") < 3)
     indexed = pats.filter(F.length("pattern") >= 3)
 
-    if postings is None:
-        postings = trigram_postings(docs, id_col=id_col, text_col=text_col)
+    postings = trigram_postings(docs)
 
     # q x (len-2) rows: every pattern's distinct trigrams + how many a
     # candidate must match. Broadcast — the posting scan drops
@@ -158,7 +140,7 @@ def substring_search(
     verified = (
         candidates.join(
             docs.select(
-                F.col(id_col).alias("id"), F.col(text_col).alias("_text")
+                F.col("doc_id").alias("id"), F.col("text").alias("_text")
             ),
             "id",
         )
@@ -179,9 +161,5 @@ def substring_search(
     fallback = substring_scan(
         docs,
         short,
-        id_col=id_col,
-        text_col=text_col,
-        pattern_id_col="pattern_id",
-        pattern_col="pattern",
     )
     return verified.unionByName(fallback)

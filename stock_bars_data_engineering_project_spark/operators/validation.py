@@ -55,11 +55,11 @@ def row_count(df: DataFrame, tbl: str) -> DataFrame:
     return df.agg(*_row("row_count", tbl, n, (n == 0).cast("bigint")))
 
 
-def max_watermark(df: DataFrame, tbl: str, ts_col: str = "ts") -> DataFrame:
+def max_watermark(df: DataFrame, tbl: str) -> DataFrame:
     """Freshness probe: observed = epoch-micros of max(ts) (integer on
     both engines — string-formatting a timestamp is engine-flavored).
     Fails only when the table has no timestamps at all."""
-    mx = F.max(event_micros(df, ts_col))
+    mx = F.max(event_micros(df, "ts"))
     return df.agg(*_row("max_watermark", tbl, mx, mx.isNull().cast("bigint")))
 
 

@@ -71,9 +71,6 @@ _PHONE = r"\d{3}[-.]\d{3,4}[-.]\d{4}"
 
 def prepare_corpus(
     docs: DataFrame,
-    min_quality: float = 0.3,
-    max_contamination: float = 0.5,
-    pack_budget: int = 2048,
     surprisal_keep_frac: float | None = None,
     surprisal_model: str = "unigram",
     boilerplate_df_cap: int | None = None,
@@ -82,8 +79,6 @@ def prepare_corpus(
     gopher: dict | None = None,
     keeper: str = "quality",
     benchmark: DataFrame | None = None,
-    surprisal_max: float | None = None,
-    frozen_unigram: DataFrame | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Run stages 1-8 and return (final corpus frame, per-stage counts).
 
@@ -102,17 +97,6 @@ def prepare_corpus(
     (default) keeps the best-quality member via canonical_selection;
     ``"first"`` keeps the lowest id — the order-invariant policy an
     incremental refresh with monotone ids reproduces exactly.
-
-    ``surprisal_max`` (+ ``frozen_unigram``, a pinned (token, n)
-    reference LM — e.g. ``lm_state()``'s unigram table) switches on
-    the FROZEN-MODEL ABSOLUTE surprisal gate: drop documents whose
-    mean -ln p(token) under the frozen model exceeds the calibrated
-    ceiling. Unlike ``surprisal_keep_frac`` (a corpus percentile —
-    inherently a one-shot statistic), this gate is per-document
-    deterministic, so it is available on the incremental refresh path
-    too (:func:`refresh_corpus`) — the production posture: calibrate
-    the threshold once, apply it to every arriving batch. Token-less
-    docs have no score row and drop (the shared gate contract).
 
     ``surprisal_keep_frac`` (e.g. 0.9) switches on the unigram-LM gate:
     keep the fraction of documents with the LOWEST corpus-unigram
@@ -193,7 +177,7 @@ def prepare_corpus(
         )
     contaminated = (
         contamination_overlap(corpus, bench_docs)
-        .filter(F.col("contamination") > max_contamination)
+        .filter(F.col("contamination") > 0.5)
         .select("doc_id")
     )
     corpus = corpus.join(contaminated, "doc_id", "left_anti").transform(
@@ -223,19 +207,6 @@ def prepare_corpus(
         F.regexp_replace(F.col("text"), _EMAIL, "<EMAIL>"), _PHONE, "<PHONE>"
     )
     corpus = corpus.withColumn("text", scrubbed)
-
-    if surprisal_max is not None:
-        # frozen-model ABSOLUTE gate (docstring): per-doc deterministic,
-        # so the refresh path applies the identical rule batch-by-batch
-        keep_ids = (
-            unigram_surprisal(corpus, counts=frozen_unigram)
-            .filter(F.col("score") <= surprisal_max)
-            .select("doc_id")
-        )
-        corpus = corpus.join(keep_ids, "doc_id", "left_semi").transform(
-            materialize
-        )
-        counts["surprisal_abs_gated"] = corpus.count()
 
     if surprisal_keep_frac is not None:
         # corpus-unigram surprisal gate: keep the keep_frac least-
@@ -302,7 +273,7 @@ def prepare_corpus(
     from pyspark.sql import Observation
 
     quality_obs = Observation("quality_gated")
-    corpus = corpus.filter(quality_score("text") >= min_quality).observe(
+    corpus = corpus.filter(quality_score("text") >= 0.3).observe(
         quality_obs, F.count(F.lit(1)).alias("n")
     )
 
@@ -317,7 +288,7 @@ def prepare_corpus(
         .withColumn("cum", F.sum("n_tokens").over(w))
         .withColumn(
             "pack_id",
-            F.floor((F.col("cum") - F.col("n_tokens")) / pack_budget).cast("long"),
+            F.floor((F.col("cum") - F.col("n_tokens")) / 2048).cast("long"),
         )
         .drop("cum")
     )
@@ -375,23 +346,14 @@ def refresh_corpus(
     wh: ParquetWarehouse,
     batch: DataFrame,
     benchmark: DataFrame,
-    min_quality: float = 0.3,
-    max_contamination: float = 0.5,
-    pack_budget: int = 2048,
     table: str = "training_corpus",
-    surprisal_max: float | None = None,
-    frozen_unigram: DataFrame | None = None,
     corpus_table: str = "corpus_docs",
     index_table: str = "corpus_bands",
 ) -> dict[str, int]:
     """Incrementally fold ONE document batch into the published
-    training corpus — the composed refresh path (round 9): every stage
+    training corpus — the composed refresh path: every stage
     of :func:`prepare_corpus`'s core chain runs at O(batch) cost
     against persisted state, never re-processing the corpus.
-    ``surprisal_max`` + ``frozen_unigram`` add the frozen-model
-    absolute surprisal gate (prepare_corpus's round-9 mode) — the
-    frozen model is REQUIRED here: a self-derived model would let each
-    batch normalize its own garbage and break the one-shot law.
 
         batch
           1. exact + near-dup dedup against the PERSISTED corpus/band
@@ -433,15 +395,8 @@ def refresh_corpus(
     whose stages are all deterministic per-document, and the final
     merge is idempotent on doc_id."""
     from ..operators.incremental_dedup import _CORPUS_META_COLS, ingest_batch
-
-    if surprisal_max is not None and frozen_unigram is None:
-        raise ValueError(
-            "refresh_corpus: surprisal_max needs frozen_unigram — a "
-            "batch-derived model would re-normalize per batch and "
-            "break incremental ≡ one-shot (docstring)"
-        )
     processed_t = f"{table}__processed"
-    # Reconcile gate (round 10, the ingest __sync discipline): the
+    # Reconcile gate (the ingest __sync discipline): the
     # reconcile anti-join only ever finds docs stranded by a PREVIOUS
     # crashed refresh, so it is needed iff the 1-row marker recording
     # the corpus version the last COMPLETED refresh covered does not
@@ -517,7 +472,7 @@ def refresh_corpus(
 
     contaminated = (
         contamination_overlap(delta, benchmark)
-        .filter(F.col("contamination") > max_contamination)
+        .filter(F.col("contamination") > 0.5)
         .select("doc_id")
     )
     clean = delta.join(contaminated, "doc_id", "left_anti")
@@ -525,14 +480,7 @@ def refresh_corpus(
         F.regexp_replace(F.col("text"), _EMAIL, "<EMAIL>"), _PHONE, "<PHONE>"
     )
     clean = clean.withColumn("text", scrubbed)
-    if surprisal_max is not None:
-        keep_ids = (
-            unigram_surprisal(clean, counts=frozen_unigram)
-            .filter(F.col("score") <= surprisal_max)
-            .select("doc_id")
-        )
-        clean = clean.join(keep_ids, "doc_id", "left_semi")
-    clean = clean.filter(quality_score("text") >= min_quality)
+    clean = clean.filter(quality_score("text") >= 0.3)
     clean = stable_split(clean).withColumn(
         "n_tokens", token_count("text")
     )
@@ -566,14 +514,14 @@ def refresh_corpus(
     rows = materialize(
         rows.withColumn(
             "pack_id",
-            F.floor((F.col("cum") - F.col("n_tokens")) / pack_budget).cast(
+            F.floor((F.col("cum") - F.col("n_tokens")) / 2048).cast(
                 "long"
             ),
         ).drop("cum")
     )
     counts["published"] = rows.count()
     if counts["published"]:
-        # O(batch) PHYSICAL publish (round 10): the published table is
+        # O(batch) PHYSICAL publish: the published table is
         # hive-partitioned on a doc_id range shard, and the shard rides
         # in the merge key (sound ONLY because the shard is a fixed
         # pure function of doc_id — the width is the module constant

@@ -20,7 +20,6 @@ frame, and collecting it starts no Spark job.
 
 from __future__ import annotations
 
-import datetime as _dt
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession

@@ -3444,7 +3444,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _index_chain():
         wh = _ann_incremental_index(spark, sf_dir, emb)
-        return _ann_query(wh, queries, table="ann_idx", k=10, nprobe=3)
+        return _ann_query(wh, queries, table="ann_idx")
 
     (brute, flags), incremental = run_chains(
         brute=_brute_chain, index=_index_chain

@@ -1,4 +1,4 @@
-"""Driver rows for the round-4 scale components that previously had
+"""Driver rows for the scale components that previously had
 only pytest pins: incremental rollup maintenance, incremental
 band-index dedup, and distributed PCA. Each row's contract is the
 component's core invariant — fold ≡ recompute, two-batch ≡ full, and
@@ -264,12 +264,12 @@ _PCA_MODEL_FLAGS = (
     "eigen_sum_le_total",
     "orthonormal",
     "sign_convention",
-    # round 8 — persisted incremental moments (operators/incremental_pca.py)
+    # persisted incremental moments (operators/incremental_pca.py)
     "inc_n_exact",
     "inc_mean_matches",
     "inc_cov_matches",
     "inc_replay_idempotent",
-    # round 8 — the same state built through a REAL readStream +
+    # the same state built through a REAL readStream +
     # foreachBatch drain (streaming/incremental.pca_ingest_stream)
     "inc_stream_matches",
 )
@@ -382,7 +382,7 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     desc_ok = all(evs[i] >= evs[i + 1] - 1e-12 for i in range(_PCA_K - 1))
     sum_ok = float(np.sum(evs)) <= total_var * (1 + 1e-9) + 1e-9
-    # (round 8) persisted incremental moments (operators/
+    # persisted incremental moments (operators/
     # incremental_pca.py): the corpus as two vec_id-median batches
     # folded into content-addressed epoch partitions of a scratch
     # warehouse; the combined state must equal a full recount — n
@@ -412,8 +412,8 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_r, mean_r, cov_r = pca_moments_state(inc_wh, dim=_PCA_DIM)
     fn, fmean, fcov = covariance_stats(emb, dim=_PCA_DIM)
 
-    def _rel_close(a, b, tol=1e-9):
-        return float(np.max(np.abs(a - b))) <= tol * (
+    def _rel_close(a, b):
+        return float(np.max(np.abs(a - b))) <= 1e-9 * (
             1.0 + float(np.max(np.abs(b)))
         )
 

@@ -594,7 +594,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "metric",
         "value",
     )
-    # (f) cohort retention triangle (round 7, operators/funnel.py
+    # (f) cohort retention triangle (operators/funnel.py
     # cohort_retention): users cohort by first active day; each
     # (cohort_day, offset<=7) cell counts members active exactly that
     # many days later. Complements the day-over-day Theta-sketch
@@ -612,7 +612,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("n_users").cast("double").alias("value"),
     )
-    # (g) PSI distribution drift (round 8, operators/drift.py): the
+    # (g) PSI distribution drift (operators/drift.py): the
     # standard model-monitoring statistic, computed per event type as
     # temporal drift — reference = even epoch-day rows, current = odd —
     # over fixed-width value bins with Laplace smoothing on the
@@ -644,7 +644,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # (h) STREAMING drift (round 8): the monitoring loop a production
+    # (h) STREAMING drift: the monitoring loop a production
     # pipeline actually runs — a REAL readStream drain aggregates each
     # day-window's value histogram per event type (day index =
     # floor(epoch_us / 86.4e9), a session-tz-independent integer, so
@@ -753,7 +753,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("psi_stream").alias("tag"), "group_key", "metric", "value"
         )
     )
-    # (i) robust outliers (round 8, operators/drift.mad_outliers):
+    # (i) robust outliers (operators/drift.mad_outliers):
     # per-type median/MAD fence — the row-level complement to the PSI
     # arms' distribution-level drift. The median and MAD are rounded
     # to 6dp BEFORE the threshold compare on BOTH engines, so the
@@ -784,7 +784,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # (j) streaming outlier fence (round 8): the SAME frozen batch
+    # (j) streaming outlier fence: the SAME frozen batch
     # median/MAD statistics broadcast into a stream-static join, with
     # per-(type, day) outlier counts aggregated by a REAL availableNow
     # drain — the online form of (i): a production gate scores
@@ -819,8 +819,8 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    # (k) k-anonymity + l-diversity audits (round 8,
-    # operators/validation.k_anonymity / l_diversity): the
+    # (k) k-anonymity + l-diversity audits
+    # (operators/validation.k_anonymity / l_diversity): the
     # release-governance pair — quasi-identifier class sizes and
     # per-class sensitive-value diversity over the corpus metadata,
     # each reported as leak-free scalars (never the rare classes
@@ -1122,8 +1122,8 @@ def full_outer_year_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# window_range_2day and window_day_anchors were consolidated into
-# window_functions_suite (round-2 registry consolidation).
+# window_range_2day and window_day_anchors are arms of
+# window_functions_suite.
 
 
 @register(
@@ -1213,7 +1213,7 @@ def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# grouping_sets_explicit was consolidated out (round-2): the grouping-
+# There is no separate grouping_sets_explicit row: the grouping-
 # set lattice is driver-checked via cube_order_counts (full CUBE) and
 # q1_pricing_rollup (ROLLUP); the SQL-text Catalyst path stays checked
 # via s6_sql_cte_chain. value_histogram lives on as stats_suite's

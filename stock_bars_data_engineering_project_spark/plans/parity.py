@@ -68,8 +68,8 @@ def flagship_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # W1/W2/W3 (lag, 5-row moving avg, 5-row moving stddev) are verified
 # through flagship_analysis, which computes all three in one plan —
 # their standalone query forms were consolidated into it so every
-# registered query fits the driver's checked window (round-2 registry
-# consolidation; the operators live in operators/analysis.py).
+# registered query fits the driver's checked window (the operators
+# live in operators/analysis.py).
 
 # ---------------------------------------------------------------------------
 # J1: inner equi-join to a small dimension, different key names, drops
@@ -186,9 +186,9 @@ FROM (
     tags=("filter", "incremental", "scalar", "json"),
 )
 def fx_filter_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1+F2+X6 on one events scan (consolidated to free registry slots
-    for the round-5 scale components; each semantic is still
-    individually driver-verified through this row):
+    """F1+F2+X6 on one events scan (one row keeps registry slots free;
+    each semantic is still individually driver-verified through this
+    row):
 
     - F1: equality predicate (checkpoint lookup shape,
       utilities.py:11-15);
@@ -343,7 +343,7 @@ def s2_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     parent key carried along (the reference's dict-of-lists flatten,
     assets.py:54-68, as a distributed explode).
 
-    The `json_props` arm (round 7) covers the OTHER semi-structured
+    The `json_props` arm covers the OTHER semi-structured
     shape: schema-on-read extraction from a JSON string column
     (events.props) via ``from_json`` with a TYPED schema — the
     arithmetic on the parsed INT (k*2+1) proves the value really

@@ -184,9 +184,8 @@ WHERE ts >= TIMESTAMP '2024-01-25 00:00:00'
     tags=("streaming", "stateful"),
 )
 def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two stateful streaming dedup surfaces as tagged arms of one row
-    (consolidated back into the driver window in round 6 — both were
-    previously pinned only by tests/test_streaming.py):
+    """Two stateful streaming dedup surfaces as tagged arms of one row,
+    so the driver checks both (tests/test_streaming.py pins them too):
 
     - 'first_seen': custom stateful operator (applyInPandasWithState) —
       keyed first-seen dedup, one output row per user ever, state
@@ -306,7 +305,7 @@ def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       to 01-30 ~23:xx at every SF), making the availableNow drain
       deterministic and equal to the batch left-outer interval join —
       null emissions included, which the inner arm cannot check.
-    - 'static' (round 6): stream-static enrichment — the purchase
+    - 'static': stream-static enrichment — the purchase
       stream joined to the STATIC customer dimension inside the
       streaming query (broadcast per micro-batch, no state, append
       mode), emitting the joined c_mktsegment. Every purchase's
@@ -334,7 +333,6 @@ def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         joined = join_fn(
             purchases, views, key="user_id", left_ts="ts", right_ts="ts",
-            max_lag="1 hour",
         ).select(
             F.col("l_event_id").alias("purchase_id"),
             F.col("l_user_id").alias("user_id"),
@@ -373,7 +371,7 @@ def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inner.unionByName(outer).unionByName(static)
 
 
-# Every streaming surface is driver-gated as of round 6: stateful
+# Every streaming surface is driver-gated: stateful
 # first-seen dedup + dropDuplicatesWithinWatermark (arms of
 # stream_stateful_dedup), inner/outer interval joins + stream-static
 # enrichment (arms of stream_interval_join_suite), epoch-log rollup

@@ -35,7 +35,7 @@ def _revenue():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
-# q3_shipping_priority was consolidated out of the registry (round-2):
+# q3_shipping_priority is not in the registry:
 # its join-filter-group-TopN shape is fully covered by q10_returned_items
 # (same TakeOrderedAndProject plan, one more join) and q5/q18.
 
@@ -215,17 +215,17 @@ def set_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     users who both purchased and viewed; (d) EXCEPT — the snapshot diff
     behind incremental training-data refreshes (docs new relative to a
     prior snapshot), planned as a left-anti hash join; (e) the same
-    semi join through operators/bloom.bloom_semi_join (round 8) — the
+    semi join through operators/bloom.bloom_semi_join — the
     probe side is pre-filtered by an md5 bloom bitmap built from the
     urgent-order keys before the exact LEFT SEMI runs. A bloom can only
     false-positive, so the arm's rows must EQUAL arm (b)'s against the
     same EXISTS oracle — the exactness contract of runtime row-level
     filtering, gated cross-engine (fp-rate and pre-filter mechanics are
     pinned in tests/test_bloom.py); (f) the ANTI-join shortcut
-    (bloom_anti_join, round 8): certain bloom misses are kept WITHOUT
+    (bloom_anti_join): certain bloom misses are kept WITHOUT
     touching the join, only passing candidates pay the exact anti join
     — must EQUAL arm (a)'s rows against the same NOT EXISTS oracle
-    (NULL-keeping semantics and both bitmap transports pinned in
+    (NULL-keeping semantics pinned in
     tests/test_bloom.py)."""
     c = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")

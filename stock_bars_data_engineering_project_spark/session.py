@@ -33,7 +33,6 @@ def driver_memory() -> str:
 
 def get_spark(
     app_name: str = "stock_bars_data_engineering_project_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults applied."""
@@ -43,7 +42,7 @@ def get_spark(
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -13,21 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def export_jsonl(
-    df: DataFrame,
-    path: str,
-    n_shards: int | None = None,
-    compression: str | None = "gzip",
-) -> None:
+def export_jsonl(df: DataFrame, path: str, n_shards: int | None = None) -> None:
     """Write ``df`` as JSONL shards. ``n_shards`` repartitions to a
     target shard count (round-robin — balanced shard sizes for even
-    consumer throughput); None keeps the upstream partitioning.
-    ``compression=None`` writes plain text (splittable on re-read;
-    gzip shards are not, which is why shard COUNT is the parallelism
-    knob for compressed corpora)."""
+    consumer throughput); None keeps the upstream partitioning. Shards
+    are gzip-compressed, so they do not split on re-read: shard COUNT
+    is the parallelism knob."""
     if n_shards is not None:
         df = df.repartition(n_shards)
-    writer = df.write.mode("overwrite")
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
+    df.write.mode("overwrite").option("compression", "gzip").json(path)

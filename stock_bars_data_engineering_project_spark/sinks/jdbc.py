@@ -30,7 +30,7 @@ Scale shape:
   N range-disjoint cursors instead of one session streaming the whole
   table through the driver. Catalyst pushes filters and projections
   into the remote SQL (JDBC is a pushdown-capable V2 source).
-- Writes go through ``df.write.jdbc`` with ``batchsize`` — each
+- Writes go through ``df.write.jdbc`` in 10,000-row batches — each
   partition COPYs its slice concurrently; the database's write
   throughput, not Spark, is the bottleneck by design.
 - Upsert is the standard Spark-to-PG two-phase: write the batch to a
@@ -145,39 +145,34 @@ class JdbcWarehouse:
 
     # -- writes -------------------------------------------------------
 
-    def _writer(self, df: DataFrame, table: str, batchsize: int):
+    def _writer(self, df: DataFrame, table: str):
         w = (
             df.write.format("jdbc")
             .option("url", self.url)
             .option("dbtable", table)
-            .option("batchsize", int(batchsize))
+            .option("batchsize", 10_000)
         )
         for k, v in self._props.items():
             w = w.option(k, v)
         return w
 
-    def insert(
-        self, df: DataFrame, table: str, batchsize: int = 10_000
-    ) -> None:
+    def insert(self, df: DataFrame, table: str) -> None:
         """K1: append insert (postgresql.py:70-73) — creates the table
         from the frame's schema if absent, else appends. Each Spark
         partition writes its slice concurrently."""
-        self._writer(df, table, batchsize).mode("append").save()
+        self._writer(df, table).mode("append").save()
 
-    def overwrite(
-        self, df: DataFrame, table: str, batchsize: int = 10_000
-    ) -> None:
+    def overwrite(self, df: DataFrame, table: str) -> None:
         """K2: drop-and-replace (postgresql.py:75-77). Spark's
         overwrite mode drops and recreates the table from the frame's
         schema — the reference's drop_table + insert in one mode."""
-        self._writer(df, table, batchsize).mode("overwrite").save()
+        self._writer(df, table).mode("overwrite").save()
 
     def upsert(
         self,
         df: DataFrame,
         table: str,
         keys: tuple[str, ...],
-        batchsize: int = 10_000,
     ) -> None:
         """K3: keyed upsert (postgresql.py:79-91) — INSERT ... ON
         CONFLICT (keys) DO UPDATE SET every non-key column to the
@@ -191,7 +186,7 @@ class JdbcWarehouse:
         if missing:
             raise ValueError(f"upsert keys absent from frame: {missing}")
         staging = f"{table}__staging"
-        self.overwrite(df, staging, batchsize)
+        self.overwrite(df, staging)
         cols = ", ".join(f'"{c}"' for c in df.columns)
         keylist = ", ".join(f'"{k}"' for k in keys)
         sets = ", ".join(

@@ -27,7 +27,7 @@ directory any retained version references; ``overwrite``/``merge``/
 ``compact`` write full (manifest-free) snapshots, so a compaction
 naturally collapses a long append chain, and ``append`` itself
 materializes a full snapshot once the chain reaches
-``manifest_limit`` members (bounding read fan-in between compactions).
+``MANIFEST_LIMIT`` members (bounding read fan-in between compactions).
 
 Scale posture: snapshots can be hive-partitioned (``partition_by``), and
 ``merge`` prunes the rewrite to ONLY the partitions present in the
@@ -40,10 +40,11 @@ Layout rule (every write verb): a new table takes the caller's
 ``partition_by`` (none if omitted); an existing table keeps the layout
 its live snapshot recorded (``_LAYOUT``) when ``partition_by`` is
 ``None`` or equal to it. A different layout is a full rewrite, so only
-``overwrite`` and ``compact`` accept it; ``append`` and ``merge`` raise
+``overwrite`` accepts it; ``append`` and ``merge`` raise
 ``ValueError`` — their batch members and pruned rewrites share the
 live snapshot's files, which a second layout would make unreadable or
-silently drop. ``delete_where`` always keeps the recorded layout.
+silently drop. ``delete_where`` and ``compact`` always keep the
+recorded layout.
 """
 
 from __future__ import annotations
@@ -66,6 +67,9 @@ from ..session import local_frame
 _POINTER = "_LATEST"
 _MANIFEST = "_MANIFEST"
 _LAYOUT = "_LAYOUT"
+# most members an append chain may reach before append writes a full
+# snapshot instead
+MANIFEST_LIMIT = 64
 
 
 def _read_version_dir(spark: SparkSession, path: str) -> DataFrame:
@@ -129,8 +133,7 @@ def _colocated(df: DataFrame, partition_by: tuple[str, ...]) -> DataFrame:
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
-    """unionByName of snapshot-member reads, aligning drift-appended
-    members the way ``append(allow_schema_drift=True)`` aligned them."""
+    """unionByName of snapshot-member reads, aligned by column name."""
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
@@ -281,7 +284,7 @@ class ParquetWarehouse:
         if tuple(partition_by) != live and not relayout:
             raise ValueError(
                 f"{table!r} is laid out by partition_by={live!r}, not "
-                f"{tuple(partition_by)!r}; only overwrite and compact may "
+                f"{tuple(partition_by)!r}; only overwrite may "
                 "change a table's layout"
             )
         return tuple(partition_by)
@@ -368,9 +371,7 @@ class ParquetWarehouse:
 
         A manifest snapshot reads as the unionByName of its member
         directories (each member read whole, so hive-partition columns
-        survive); ``allowMissingColumns`` aligns drift-appended members
-        the same way ``append(allow_schema_drift=True)`` aligned them at
-        write time."""
+        survive), aligned by column name."""
         v = self._version(table, version)
         return _union([
             _read_version_dir(
@@ -386,8 +387,6 @@ class ParquetWarehouse:
         df: DataFrame,
         table: str,
         partition_by: tuple[str, ...] | None = None,
-        allow_schema_drift: bool = False,
-        manifest_limit: int = 64,
     ) -> None:
         """K1: append insert (postgresql.py:70-73) — new snapshot = old ∪ batch,
         committed as a MANIFEST snapshot: only the batch's files are
@@ -399,15 +398,15 @@ class ParquetWarehouse:
         snapshot isolation is unchanged (the pointer flip is still the
         whole transaction, and member dirs are immutable).
 
-        ``manifest_limit`` bounds the chain: when the member count would
+        ``MANIFEST_LIMIT`` bounds the chain: when the member count would
         exceed it, this append materializes a full snapshot instead
         (the same collapse ``compact``/``overwrite`` perform), so read
         fan-in stays bounded between compactions.
 
-        Schema drift refuses loudly unless ``allow_schema_drift`` —
-        checked HERE, at write time, because the manifest read aligns
-        members with allowMissingColumns and would otherwise mask a
-        drifted append forever.
+        Schema drift refuses loudly — checked HERE, at write time,
+        because the manifest read aligns members with
+        allowMissingColumns and would otherwise mask a drifted append
+        forever.
         """
         with self._write_lock(table):
             partition_by = self._resolve_layout(table, partition_by)
@@ -416,49 +415,42 @@ class ParquetWarehouse:
                 version = self._write_snapshot(df, table, partition_by)
                 self._commit(table, version)
                 return
-            existing = None
-            if not allow_schema_drift:
-                existing = self.read(table)
-                prev_cols = set(existing.columns)
-                if set(df.columns) != prev_cols:
-                    raise ValueError(
-                        f"append to {table!r}: schema drift (batch columns "
-                        f"{sorted(set(df.columns) ^ prev_cols)} differ); pass "
-                        "allow_schema_drift=True to align by name"
-                    )
-                # TYPE drift too: a same-name INCOMPATIBLE type change
-                # passes the column-set check but detonates at READ time
-                # (the manifest union can't align string vs long),
-                # turning a bad write into a poisoned table. Checked
-                # here, where the writer can still fix the batch.
-                # Numeric-widening pairs are fine (the union resolves
-                # them), and hive partition columns are exempt — their
-                # read-back dtype is DIRNAME INFERENCE (a bigint bkt
-                # comes back int), not anything the writer controls.
-                prev_types = dict(existing.dtypes)
-                mismatched = [
-                    (c, t, prev_types[c])
-                    for c, t in df.dtypes
-                    if c not in partition_by
-                    and prev_types.get(c, t) != t
-                    and not _types_compatible(t, prev_types[c])
-                ]
-                if mismatched:
-                    raise ValueError(
-                        f"append to {table!r}: type drift — "
-                        + ", ".join(
-                            f"{c!r} is {t} but the table has {pt}"
-                            for c, t, pt in mismatched
-                        )
-                        + "; cast the batch to the table's types"
-                    )
-            chain = self._manifest_members(table, prev)
-            if len(chain) + 1 > manifest_limit:
-                if existing is None:
-                    existing = self.read(table)
-                merged = existing.unionByName(
-                    df, allowMissingColumns=allow_schema_drift
+            existing = self.read(table)
+            prev_cols = set(existing.columns)
+            if set(df.columns) != prev_cols:
+                raise ValueError(
+                    f"append to {table!r}: schema drift (batch columns "
+                    f"{sorted(set(df.columns) ^ prev_cols)} differ)"
                 )
+            # TYPE drift too: a same-name INCOMPATIBLE type change
+            # passes the column-set check but detonates at READ time
+            # (the manifest union can't align string vs long),
+            # turning a bad write into a poisoned table. Checked
+            # here, where the writer can still fix the batch.
+            # Numeric-widening pairs are fine (the union resolves
+            # them), and hive partition columns are exempt — their
+            # read-back dtype is DIRNAME INFERENCE (a bigint bkt
+            # comes back int), not anything the writer controls.
+            prev_types = dict(existing.dtypes)
+            mismatched = [
+                (c, t, prev_types[c])
+                for c, t in df.dtypes
+                if c not in partition_by
+                and prev_types.get(c, t) != t
+                and not _types_compatible(t, prev_types[c])
+            ]
+            if mismatched:
+                raise ValueError(
+                    f"append to {table!r}: type drift — "
+                    + ", ".join(
+                        f"{c!r} is {t} but the table has {pt}"
+                        for c, t, pt in mismatched
+                    )
+                    + "; cast the batch to the table's types"
+                )
+            chain = self._manifest_members(table, prev)
+            if len(chain) + 1 > MANIFEST_LIMIT:
+                merged = existing.unionByName(df)
                 version = self._write_snapshot(merged, table, partition_by)
                 self._commit(table, version)
                 return
@@ -502,7 +494,6 @@ class ParquetWarehouse:
         table: str,
         keys: tuple[str, ...],
         partition_by: tuple[str, ...] | None = None,
-        allow_schema_drift: bool = False,
     ) -> None:
         """K3: keyed upsert — MERGE WHEN MATCHED UPDATE SET * / WHEN NOT
         MATCHED INSERT * (postgresql.py:79-91).
@@ -542,16 +533,13 @@ class ParquetWarehouse:
                 return
 
             def upsert(target: DataFrame) -> DataFrame:
-                return upsert_frames(
-                    target, src, keys, allow_schema_drift, source_unique=True
-                )
+                return upsert_frames(target, src, keys, source_unique=True)
 
             target = self.read(table)
             if (
                 partition_by
                 and set(partition_by) <= set(src.columns)
                 and set(partition_by) <= set(keys)
-                and not allow_schema_drift
                 and self._members_schema_consistent(table, prev)
             ):
                 # The pruned rewrite is SOUND ONLY when (a) the partition
@@ -659,11 +647,12 @@ class ParquetWarehouse:
         """True when every manifest member of a snapshot carries the
         same column set and types. The hardlink carry-over collapses
         member files into ONE directory, and a single-dir parquet read
-        does not name-align drifted schemas the way the manifest union
-        does (it samples one footer) — so a drift-appended history must
-        fall back to the full rewrite, which re-aligns it. One driver
-        footer read per member, members bounded by manifest_limit;
-        the overwhelmingly common single-member case is free."""
+        does not align member schemas the way the manifest union does
+        (it samples one footer) — so a history with a type-widened
+        append must fall back to the full rewrite, which re-aligns it.
+        One driver footer read per member, members bounded by
+        MANIFEST_LIMIT; the overwhelmingly common single-member case is
+        free."""
         members = self._manifest_members(table, version)
         if len(members) <= 1:
             return True
@@ -765,10 +754,10 @@ class ParquetWarehouse:
 
     # -- table maintenance (beyond the reference; required at 100 TB) -------
 
-    def data_files(self, table: str, version: str | None = None) -> list[str]:
-        """Data files of a snapshot (manifest members included) — the
-        observable compaction metric."""
-        v = self._version(table, version)
+    def data_files(self, table: str) -> list[str]:
+        """Data files of the live snapshot (manifest members included) —
+        the observable compaction metric."""
+        v = self._version(table)
         out: list[str] = []
         for member in self._manifest_members(table, v):
             for dirpath, dirs, names in os.walk(
@@ -783,25 +772,19 @@ class ParquetWarehouse:
                 )
         return sorted(out)
 
-    def compact(
-        self,
-        table: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        partition_by: tuple[str, ...] | None = None,
-    ) -> None:
+    def compact(self, table: str) -> None:
         """Small-file compaction: rewrite the latest snapshot into
-        ceil(bytes / target) files (per partition when hive-partitioned —
+        ceil(bytes / 128 MiB) files (per partition when hive-partitioned —
         one file per partition directory, the right shape for pruned
         reads). Micro-batch appends/merges accrete small files; at scale
         the fix is a periodic rewrite sized to the parquet row-group
         sweet spot (~128 MB), exactly Delta OPTIMIZE / Iceberg rewrite.
         Runs as an ordinary snapshot write + pointer flip, so readers
-        see either the old or the compacted snapshot, never a mix.
+        see either the old or the compacted snapshot, never a mix. The
+        table keeps its recorded layout.
         """
         with self._write_lock(table):
-            partition_by = self._resolve_layout(
-                table, partition_by, relayout=True
-            )
+            partition_by = self._resolve_layout(table, None)
             df = self.read(table)
             if partition_by:
                 df = _colocated(df, partition_by)
@@ -810,7 +793,7 @@ class ParquetWarehouse:
                 # large snapshot while holding the writer lock is not
                 # free, and a partitioned table does not need it
                 total = sum(os.path.getsize(f) for f in self.data_files(table))
-                df = df.repartition(max(1, -(-total // target_file_bytes)))
+                df = df.repartition(max(1, -(-total // (128 * 1024 * 1024))))
             version = self._write_snapshot(df, table, partition_by)
             self._commit(table, version)
 
@@ -818,12 +801,12 @@ class ParquetWarehouse:
         self,
         table: str,
         from_version: str,
-        to_version: str | None = None,
         keys: tuple[str, ...] = (),
     ) -> DataFrame:
-        """Change data feed between two snapshots: one row per changed
-        key with ``_change_type`` ∈ insert / update / delete (update
-        carries the post-image; delete carries the pre-image).
+        """Change data feed from ``from_version`` to the live snapshot:
+        one row per changed key with ``_change_type`` ∈ insert / update /
+        delete (update carries the post-image; delete carries the
+        pre-image).
 
         The reference has no history at all (PostgreSQL tables are
         mutated in place); versioned snapshots make CDC a pure read:
@@ -839,7 +822,7 @@ class ParquetWarehouse:
         if not keys:
             raise ValueError("changes() needs the table's logical key columns")
         old = self.read(table, from_version)
-        new = self.read(table, to_version)  # None -> latest
+        new = self.read(table)
         val_cols = sorted(c for c in new.columns if c not in keys)
         if sorted(old.columns) != sorted(new.columns):
             # schema drift between the snapshots: compare only the shared

@@ -27,12 +27,7 @@ import hashlib
 import os
 from collections.abc import Iterator, Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 BARS_SCHEMA = (
     "symbol string, c double, h double, l double, n bigint, o double, "
@@ -83,8 +78,6 @@ def fetch_bars_rest(
     symbols: Sequence[str],
     start: str,
     end: str | None,
-    timeframe: str = "1Day",
-    page_limit: int = 1000,
 ) -> dict[str, list[dict]]:
     """Live REST path (requires ALPACA_API_KEY/ALPACA_SECRET_KEY env).
 
@@ -104,9 +97,9 @@ def fetch_bars_rest(
     out: dict[str, list[dict]] = {}
     params = {
         "symbols": ",".join(symbols),
-        "timeframe": timeframe,
+        "timeframe": "1Day",
         "start": start,
-        "limit": page_limit,
+        "limit": 1000,
         "adjustment": "raw",
         "feed": "sip",
         "sort": "asc",
@@ -148,9 +141,6 @@ class StockBarsDataSource(DataSource):
 
     def reader(self, schema) -> "StockBarsReader":
         return StockBarsReader(self.options)
-
-    def streamReader(self, schema) -> "StockBarsStreamReader":
-        return StockBarsStreamReader(self.options)
 
 
 class StockBarsReader(DataSourceReader):
@@ -194,114 +184,6 @@ class StockBarsReader(DataSourceReader):
                 )
         else:
             yield from synth_bars(partition.symbol, self.start, self.end, self.seed)
-
-
-class _RangePartition(InputPartition):
-    def __init__(self, symbol: str, start: str, end: str):
-        self.symbol = symbol
-        self.start = start  # exclusive
-        self.end = end  # inclusive
-
-
-class StockBarsStreamReader(DataSourceStreamReader):
-    """The reference's incremental loop — "poll since checkpoint, load,
-    advance watermark" (stock_bars.py:36-89, SURVEY §2.8) — as a REAL
-    Structured Streaming source. The offset IS the reference's
-    checkpoint date; Spark's offset log replaces the hand-rolled
-    ``check_points`` table, and exactly-once comes from offset-ranged
-    replay instead of Q9's overlap-plus-upsert healing.
-
-    Each micro-batch covers ``(last_offset_date, available_date]``;
-    ``available_date`` advances ``batch_days`` per poll up to ``end``
-    (deterministic bounded replay offline; a live deployment would
-    return today's date). Partitions split by symbol per batch, so
-    ingestion parallelizes across executors within every micro-batch.
-    """
-
-    def __init__(self, options):
-        self.symbols = [
-            s.strip()
-            for s in options.get("symbols", DEFAULT_SYMBOLS).split(",")
-            if s.strip()
-        ]
-        self.start = _dt.date.fromisoformat(options.get("start", "2025-09-01"))
-        self.end = (
-            _dt.date.fromisoformat(options["end"])
-            if "end" in options
-            else self.start + _dt.timedelta(days=30)
-        )
-        self.seed = int(options.get("seed", "42"))
-        self.batch_days = int(options.get("batch_days", "7"))
-        # same option contract as the batch reader: live=true polls the
-        # REST source per micro-batch range (import-gated; deterministic
-        # synth fallback), anything else replays the synthetic walk.
-        # Silently ignoring the option would hand a user who configured
-        # live ingestion a fake random walk with an identical schema.
-        self.live = options.get("live", "false").lower() == "true"
-        self._cursor = self.start - _dt.timedelta(days=1)
-
-    def initialOffset(self) -> dict:
-        return {"date": (self.start - _dt.timedelta(days=1)).isoformat()}
-
-    def latestOffset(self) -> dict:
-        self._cursor = min(
-            self._cursor + _dt.timedelta(days=self.batch_days), self.end
-        )
-        return {"date": self._cursor.isoformat()}
-
-    def _advance_cursor(self, *offsets: dict) -> None:
-        # Restart safety: a fresh reader's in-memory cursor starts at
-        # start-1, which is BEHIND the checkpointed offset. Spark replays
-        # the logged (start, end) through partitions()/commit() on
-        # recovery, so the cursor catches up from those callbacks; until
-        # it does, a regressed latestOffset only yields one empty batch
-        # (read() guards lo > hi) — never re-emitted rows.
-        for off in offsets:
-            d = _dt.date.fromisoformat(off["date"])
-            if d > self._cursor:
-                self._cursor = d
-
-    def partitions(self, start: dict, end: dict):
-        self._advance_cursor(start, end)
-        return [
-            _RangePartition(s, start["date"], end["date"]) for s in self.symbols
-        ]
-
-    def read(self, partition: _RangePartition) -> Iterator[tuple]:
-        lo = _dt.date.fromisoformat(partition.start) + _dt.timedelta(days=1)
-        hi = _dt.date.fromisoformat(partition.end)
-        if lo > hi:
-            return
-        if self.live:
-            bars = fetch_bars_rest(
-                [partition.symbol], lo.isoformat(), hi.isoformat()
-            ).get(partition.symbol, [])
-            for b in bars:
-                yield (
-                    partition.symbol,
-                    b.get("c"),
-                    b.get("h"),
-                    b.get("l"),
-                    b.get("n"),
-                    b.get("o"),
-                    b.get("t"),
-                    b.get("v"),
-                    b.get("vw"),
-                )
-            return
-        # Replay the walk from series start and slice the batch's range:
-        # the geometric walk chains day-to-day, so starting a fresh walk
-        # at `lo` would emit different bars than the batch reader for the
-        # same days. Replay keeps stream ≡ batch bar-for-bar.
-        cutoff = lo.isoformat()
-        for row in synth_bars(partition.symbol, self.start, hi, self.seed):
-            if row[6][:10] >= cutoff:  # row[6] = ISO timestamp string
-                yield row
-
-    def commit(self, end: dict) -> None:
-        # offsets are durable in Spark's offset log; just keep the
-        # in-memory cursor monotone (see _advance_cursor)
-        self._advance_cursor(end)
 
 
 def _ship_package(spark) -> None:

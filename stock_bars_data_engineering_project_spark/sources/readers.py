@@ -121,13 +121,8 @@ def load_events_since(
     return raw
 
 
-def read_csv_dim(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
+def read_csv_dim(spark: SparkSession, path: str) -> DataFrame:
     """S3: header CSV dimension scan (reference: pd.read_csv of the
-    10-row ticker dim). Explicit schema preferred over inference in prod;
-    dims this small are broadcast by Catalyst at join time."""
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
+    10-row ticker dim) with an inferred schema; dims this small are
+    broadcast by Catalyst at join time."""
+    return spark.read.option("header", True).option("inferSchema", True).csv(path)

@@ -18,32 +18,22 @@ from pyspark.sql import functions as F
 from ..sinks.warehouse import ParquetWarehouse
 
 
-def _drain(
-    spark: SparkSession,
-    src_dir: str,
-    schema,
-    apply,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
+def _drain(spark: SparkSession, src_dir: str, schema, apply, checkpoint_dir: str):
     """The shared foreachBatch drain every ingest stream here runs:
     readStream over a file source, ``apply(batch, epoch_id)`` per
-    micro-batch, offset checkpointing. With ``available_now`` the query
-    drains the current backlog and stops (the scheduled-batch
-    deployment shape); without it the query runs until stopped.
+    micro-batch, offset checkpointing. The query drains the current
+    backlog and stops (the scheduled-batch deployment shape).
     Exactly-once at the sink is the COMPOSITION contract each caller
     documents: the checkpoint gives at-least-once micro-batches, and
     the per-module batch ingest is replay-idempotent."""
     src = spark.readStream.schema(schema).parquet(src_dir)
-    writer = (
+    q = (
         src.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 
@@ -56,7 +46,6 @@ def rollup_maintenance_stream(
     keys: tuple[str, ...] = ("user_id",),
     checkpoint_dir: str = "",
     distinct_col: str | None = None,
-    available_now: bool = True,
 ):
     """Maintain a mergeable rollup (operators/rollup.py, optionally
     sketch-extended) under Structured Streaming as an EPOCH LOG.
@@ -84,7 +73,7 @@ def rollup_maintenance_stream(
             partition_by=("_epoch",),
         )
 
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
+    return _drain(spark, src_dir, schema, _apply, checkpoint_dir)
 
 
 def read_rollup_state(wh: ParquetWarehouse, table: str) -> DataFrame:
@@ -103,9 +92,6 @@ def dedup_ingest_stream(
     checkpoint_dir: str,
     corpus_table: str = "corpus_docs",
     index_table: str = "corpus_bands",
-    threshold: float = 0.7,
-    k: int = 3,
-    available_now: bool = True,
 ):
     """Streaming corpus ingest with near-duplicate rejection at the
     door: each micro-batch runs the persisted-band-index dedup
@@ -132,11 +118,9 @@ def dedup_ingest_stream(
             batch,
             corpus_table=corpus_table,
             index_table=index_table,
-            threshold=threshold,
-            k=k,
         )
 
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
+    return _drain(spark, src_dir, schema, _apply, checkpoint_dir)
 
 
 def corpus_refresh_stream(
@@ -147,12 +131,6 @@ def corpus_refresh_stream(
     checkpoint_dir: str,
     benchmark: DataFrame,
     table: str = "training_corpus",
-    min_quality: float = 0.3,
-    max_contamination: float = 0.5,
-    pack_budget: int = 2048,
-    available_now: bool = True,
-    surprisal_max: float | None = None,
-    frozen_unigram: DataFrame | None = None,
 ):
     """Streaming form of the COMPOSED corpus refresh: each
     micro-batch runs ``pipeline.corpus_pipeline.refresh_corpus`` — the
@@ -179,15 +157,10 @@ def corpus_refresh_stream(
             wh,
             batch,
             benchmark,
-            min_quality=min_quality,
-            max_contamination=max_contamination,
-            pack_budget=pack_budget,
             table=table,
-            surprisal_max=surprisal_max,
-            frozen_unigram=frozen_unigram,
         )
 
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
+    return _drain(spark, src_dir, schema, _apply, checkpoint_dir)
 
 
 def pca_ingest_stream(
@@ -197,10 +170,7 @@ def pca_ingest_stream(
     wh: ParquetWarehouse,
     checkpoint_dir: str,
     table: str = "pca_moments",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim: int = 64,
-    available_now: bool = True,
 ):
     """Streaming PCA-moment maintenance: each micro-batch's sufficient
     statistics fold into the content-addressed epoch log
@@ -226,7 +196,7 @@ def pca_ingest_stream(
         if batch.isEmpty():
             return
         ingest_pca_batch(
-            wh, batch, table=table, id_col=id_col, vec_col=vec_col, dim=dim
+            wh, batch, table=table, dim=dim
         )
 
-    return _drain(spark, src_dir, schema, _apply, checkpoint_dir, available_now)
+    return _drain(spark, src_dir, schema, _apply, checkpoint_dir)

@@ -21,11 +21,10 @@ def interval_join(
     key: str,
     left_ts: str,
     right_ts: str,
-    max_lag: str = "1 hour",
     how: str = "inner",
 ) -> DataFrame:
     """Join ``left`` and ``right`` on ``key`` where the right event
-    happened within ``[left_ts - max_lag, left_ts]``. Works identically
+    happened within ``[left_ts - 1 hour, left_ts]``. Works identically
     on batch DataFrames and on watermarked streams (callers apply
     ``withWatermark`` on each stream; the range predicate below is what
     lets the engine evict buffered rows once the watermark passes).
@@ -41,7 +40,7 @@ def interval_join(
     )
     cond = (
         (F.col(lk) == F.col(rk))
-        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}") - F.expr(f"INTERVAL {max_lag}"))
+        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}") - F.expr("INTERVAL 1 hour"))
         & (F.col(f"r_{right_ts}") <= F.col(f"l_{left_ts}"))
     )
     return lt.join(rt, cond, how)
@@ -53,7 +52,6 @@ def interval_join_outer(
     key: str,
     left_ts: str,
     right_ts: str,
-    max_lag: str = "1 hour",
 ) -> DataFrame:
     """LEFT OUTER variant: every left event emits, matched or not.
 
@@ -68,5 +66,5 @@ def interval_join_outer(
     left-outer interval join, which is what the oracle computes.
     """
     return interval_join(
-        left, right, key, left_ts, right_ts, max_lag, how="left_outer"
+        left, right, key, left_ts, right_ts, how="left_outer"
     )

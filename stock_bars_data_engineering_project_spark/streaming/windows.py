@@ -19,22 +19,17 @@ from pyspark.sql import functions as F
 from ..functions.scalars import as_event_time, round_half_up
 
 
-def tumbling_agg(
-    df: DataFrame,
-    ts: str = "ts",
-    duration: str = "1 day",
-    keys: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Fixed epoch-aligned windows: count + sum per (window, keys)."""
+def tumbling_agg(df: DataFrame, duration: str = "1 day") -> DataFrame:
+    """Fixed epoch-aligned windows: count + sum per (window, event_type)."""
     return (
-        df.groupBy(F.window(ts, duration).alias("win"), *keys)
+        df.groupBy(F.window("ts", duration).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             round_half_up(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
             F.col("win.start").alias("window_start"),
-            *keys,
+            "event_type",
             "n_events",
             "sum_value",
         )
@@ -43,41 +38,34 @@ def tumbling_agg(
 
 def sliding_agg(
     df: DataFrame,
-    ts: str = "ts",
     duration: str = "2 hours",
     slide: str = "1 hour",
-    keys: tuple[str, ...] = ("event_type",),
 ) -> DataFrame:
     """Overlapping windows — each event lands in duration/slide windows."""
     return (
-        df.groupBy(F.window(ts, duration, slide).alias("win"), *keys)
+        df.groupBy(F.window("ts", duration, slide).alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             round_half_up(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
-            F.col("win.start").alias("window_start"), *keys, "n_events", "sum_value"
+            F.col("win.start").alias("window_start"), "event_type", "n_events", "sum_value"
         )
     )
 
 
-def session_agg(
-    df: DataFrame,
-    ts: str = "ts",
-    gap: str = "2 hours",
-    key: str = "user_id",
-) -> DataFrame:
+def session_agg(df: DataFrame, gap: str = "2 hours") -> DataFrame:
     """Session windows: events within ``gap`` of each other merge into one
-    session per key. Native ``session_window`` — the same operator
+    session per ``user_id``. Native ``session_window`` — the same operator
     Structured Streaming uses for stateful session merge."""
     return (
-        df.groupBy(F.session_window(ts, gap).alias("win"), key)
+        df.groupBy(F.session_window("ts", gap).alias("win"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             round_half_up(F.sum("value"), 2).alias("sum_value"),
         )
         .select(
-            F.col(key),
+            F.col("user_id"),
             F.col("win.start").alias("session_start"),
             "n_events",
             "sum_value",
@@ -90,7 +78,6 @@ def stream_events(
     src_dir: str,
     schema,
     watermark: str = "1 hour",
-    ts: str = "ts",
 ) -> DataFrame:
     """``readStream`` over a parquet directory with an event-time
     watermark — late data beyond ``watermark`` is dropped and state for
@@ -99,7 +86,7 @@ def stream_events(
     TIMESTAMP proper, so a TIMESTAMP_NTZ event-time column is first
     reinterpreted as a UTC instant (:func:`as_event_time`)."""
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    return as_event_time(stream, ts).withWatermark(ts, watermark)
+    return as_event_time(stream, "ts").withWatermark("ts", watermark)
 
 
 def run_stream_to_memory(

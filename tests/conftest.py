@@ -32,5 +32,5 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", shuffle_partitions=8)
+    spark = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield spark

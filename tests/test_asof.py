@@ -1,5 +1,4 @@
-"""As-of join: inclusive backward match, NULL when no predecessor,
-tolerance window nulls old matches."""
+"""As-of join: inclusive backward match, NULL when no predecessor."""
 
 from __future__ import annotations
 
@@ -28,21 +27,3 @@ def test_asof_backward_inclusive_and_null(spark):
     assert got[1] == (_dt(10), 100.0)  # inclusive: equal timestamps match
     assert got[2] == (_dt(11), 110.0)  # latest predecessor, not first
     assert got[3] == (None, None)  # no predecessor -> NULL match
-
-
-def test_asof_tolerance_nulls_stale_match(spark):
-    left = spark.createDataFrame(
-        [(1, 1, _dt(12))], "event_id long, user_id long, ts timestamp"
-    )
-    right = spark.createDataFrame(
-        [(1, _dt(9), 90.0)], "user_id long, mark_ts timestamp, mark_value double"
-    )
-    rows = asof_join(
-        left, right, on="ts", right_on="mark_ts", tolerance="'2' HOUR"
-    ).collect()
-    assert rows[0].mark_value is None  # 3h old > 2h tolerance
-
-    rows = asof_join(
-        left, right, on="ts", right_on="mark_ts", tolerance="'4' HOUR"
-    ).collect()
-    assert rows[0].mark_value == 90.0

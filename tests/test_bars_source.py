@@ -39,100 +39,3 @@ def test_offline_determinism(spark):
     a = sorted(map(tuple, _read(spark).collect()))
     b = sorted(map(tuple, _read(spark).collect()))
     assert a == b
-
-
-def test_stream_reader_matches_batch(spark, tmp_path):
-    """The streaming source, drained across several micro-batches, must
-    emit exactly the batch read's rows (offset-ranged replay, no dup/loss
-    across batch boundaries of the chained walk)."""
-    import time
-
-    register(spark)
-    opts = {"symbols": "AAPL,MSFT", "start": "2025-09-01", "end": "2025-09-30"}
-    batch = sorted(map(tuple, _read(spark, **opts).collect()))
-
-    stream = (
-        spark.readStream.format("stockbars")
-        .option("symbols", opts["symbols"])
-        .option("start", opts["start"])
-        .option("end", opts["end"])
-        .option("batch_days", "7")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("bars_stream_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            got = spark.table("bars_stream_test").count()
-            if got >= len(batch):
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    streamed = sorted(map(tuple, spark.table("bars_stream_test").collect()))
-    assert streamed == batch
-
-
-def test_stream_restart_from_checkpoint_no_duplicates(spark, tmp_path):
-    """Stop after partial progress, restart with a FRESH reader from the
-    same checkpoint: the in-memory cursor resets but the offset log must
-    win — no day is ever emitted twice."""
-    import time
-
-    register(spark)
-    opts = {"symbols": "AAPL", "start": "2025-09-01", "end": "2025-09-30"}
-    batch = sorted(map(tuple, _read(spark, **opts).collect()))
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")  # file sink: the recoverable sink kind
-
-    def start_stream():
-        return (
-            spark.readStream.format("stockbars")
-            .option("symbols", opts["symbols"])
-            .option("start", opts["start"])
-            .option("end", opts["end"])
-            .option("batch_days", "5")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-    def landed():
-        try:
-            return spark.read.parquet(out).count()
-        except Exception:
-            return 0
-
-    q = start_stream()
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if landed() > 0:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()  # partial progress checkpointed
-    assert landed() > 0  # stopped mid-stream (usually < len(batch))
-
-    q2 = start_stream()  # fresh reader instance, same checkpoint
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if landed() >= len(batch):
-                break
-            time.sleep(1)
-    finally:
-        q2.stop()
-    streamed = sorted(map(tuple, spark.read.parquet(out).collect()))
-    assert streamed == batch  # exactly once: no missing, NO DUPLICATED days

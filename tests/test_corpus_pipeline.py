@@ -360,64 +360,6 @@ def test_streaming_corpus_refresh_equals_one_shot(spark, tmp_path):
     assert wh.read("training_corpus").count() == want.count()
 
 
-def test_incremental_refresh_frozen_surprisal_gate(spark, tmp_path):
-    """The frozen-model ABSOLUTE surprisal gate (calibrate
-    once, apply per batch) keeps the two-batch ≡ one-shot law — and a
-    batch-derived model is refused loudly on the refresh path."""
-    import pytest
-
-    from stock_bars_data_engineering_project_spark.operators.quality import (
-        unigram_surprisal,
-    )
-    from stock_bars_data_engineering_project_spark.pipeline.corpus_pipeline import (
-        prepare_corpus,
-        refresh_corpus,
-    )
-    from stock_bars_data_engineering_project_spark.sources.readers import load_table
-    from stock_bars_data_engineering_project_spark.functions.text import tokens as _tok
-
-    docs = load_table(spark, SF, "documents")
-    benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    # pinned reference LM: unigram counts of the WHOLE docs table (a
-    # stand-in for a trusted external model release)
-    frozen = (
-        docs.select(F.explode(_tok(F.lower(F.col("text")))).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    ).cache()
-    frozen.count()
-    # a ceiling that actually bites: the 70th percentile of scores
-    thr = float(
-        unigram_surprisal(docs, counts=frozen)
-        .agg(F.expr("percentile(score, 0.7D)"))
-        .first()[0]
-    )
-
-    half = docs.agg(F.expr("percentile(doc_id, 0.5D)")).first()[0]
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    for b in (docs.filter(F.col("doc_id") <= half),
-              docs.filter(F.col("doc_id") > half)):
-        refresh_corpus(spark, wh, b, benchmark,
-                       surprisal_max=thr, frozen_unigram=frozen)
-
-    got = wh.read("training_corpus").select(
-        "doc_id", "split", "n_tokens", "pack_id", F.md5("text").alias("h")
-    )
-    want, counts = prepare_corpus(
-        docs, keeper="first", benchmark=benchmark,
-        surprisal_max=thr, frozen_unigram=frozen,
-    )
-    want = want.select(
-        "doc_id", "split", "n_tokens", "pack_id", F.md5("text").alias("h")
-    )
-    assert counts["surprisal_abs_gated"] < counts["decontaminated"]  # gate bit
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    with pytest.raises(ValueError, match="frozen_unigram"):
-        refresh_corpus(spark, wh, docs.limit(5), benchmark, surprisal_max=thr)
-
-
 def test_refresh_on_legacy_one_shot_table(spark, tmp_path):
     """A published table written by run_corpus_pipeline (split-
     partitioned, no _shard column) must keep working under

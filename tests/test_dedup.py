@@ -34,7 +34,7 @@ def test_exact_dedup(spark):
 def test_minhash_lsh_finds_near_and_exact_dups(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_lsh_pairs(_docs(spark), threshold=0.5).collect()
+        for r in minhash_lsh_pairs(_docs(spark)).collect()
     }
     assert pairs[(1, 4)] == 1.0  # exact dup -> jaccard 1
     assert (1, 2) in pairs and 0.5 <= pairs[(1, 2)] < 1.0
@@ -44,7 +44,7 @@ def test_minhash_lsh_finds_near_and_exact_dups(spark):
 def test_ngram_jaccard_exact_all_pairs(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(_docs(spark), threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(_docs(spark)).collect()
     }
     assert pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs
@@ -115,7 +115,7 @@ def test_minhash_signatures_match_per_row_expression(spark):
         minhash_signatures,
     )
 
-    sh = _shingled(_docs(spark), "text", "doc_id", 3)
+    sh = _shingled(_docs(spark))
     old = sh.select(
         "doc_id",
         F.size("shingles").alias("want_n"),
@@ -181,10 +181,9 @@ def test_simhash_blocking_complete_vs_bruteforce(spark):
 
 
 def test_dedup_clusters_durable_checkpoint_mode(spark):
-    """Cluster-safe iteration: durable=True must (a) refuse to run
-    without a fault-tolerant checkpoint dir, (b) produce identical
-    clusters to the local mode once one is set, (c) be selectable via
-    the session conf instead of the parameter."""
+    """Cluster-safe iteration: the durable session conf must (a) make
+    it refuse to run without a fault-tolerant checkpoint dir and (b)
+    produce identical clusters to the local mode once one is set."""
     from stock_bars_data_engineering_project_spark.materialize import DURABLE_CONF
     from stock_bars_data_engineering_project_spark.operators.dedup import dedup_clusters
 
@@ -196,55 +195,53 @@ def test_dedup_clusters_durable_checkpoint_mode(spark):
     # The refusal contract is order-dependent (setCheckpointDir has no
     # unset): assert it when this test runs before anything set a dir,
     # and make the skip VISIBLE rather than silent otherwise.
-    if spark.sparkContext.getCheckpointDir() is None:
-        try:
-            dedup_clusters(pairs, durable=True)
-            raise AssertionError("expected ValueError without checkpoint dir")
-        except ValueError as e:
-            assert "setCheckpointDir" in str(e)
-    else:  # pragma: no cover - depends on test ordering
-        import warnings
-
-        warnings.warn("checkpoint dir already set; refusal branch not exercised")
-    # a stable dir, NOT pytest's function-scoped tmp_path: the session
-    # outlives this test and would otherwise point its checkpoint dir at
-    # a deleted directory for the rest of the suite
-    import tempfile
-
-    spark.sparkContext.setCheckpointDir(
-        tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    )
-    got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs, durable=True).collect()}
-    assert got == want
-
     spark.conf.set(DURABLE_CONF, "true")
     try:
+        if spark.sparkContext.getCheckpointDir() is None:
+            try:
+                dedup_clusters(pairs)
+                raise AssertionError("expected ValueError without checkpoint dir")
+            except ValueError as e:
+                assert "setCheckpointDir" in str(e)
+        else:  # pragma: no cover - depends on test ordering
+            import warnings
+
+            warnings.warn("checkpoint dir already set; refusal branch not exercised")
+        # a stable dir, NOT pytest's function-scoped tmp_path: the session
+        # outlives this test and would otherwise point its checkpoint dir at
+        # a deleted directory for the rest of the suite
+        import tempfile
+
+        spark.sparkContext.setCheckpointDir(
+            tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+        )
         got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs).collect()}
         assert got == want
     finally:
         spark.conf.unset(DURABLE_CONF)
 
 
-def test_dedup_clusters_raises_when_unconverged(spark):
+def test_dedup_clusters_raises_when_unconverged(spark, monkeypatch):
+    from stock_bars_data_engineering_project_spark.operators import dedup
     from stock_bars_data_engineering_project_spark.operators.dedup import dedup_clusters
 
-    # a 7-node chain has diameter 6 > max_iters=2: silent wrong labels
-    # are forbidden — the operator must fail loudly instead
+    # a 7-node chain has diameter 6 > a 2-round budget: silent wrong
+    # labels are forbidden — the operator must fail loudly instead
+    monkeypatch.setattr(dedup, "PROPAGATION_ROUNDS", 2)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 7)], "doc_a long, doc_b long"
     )
     try:
-        dedup_clusters(chain, max_iters=2)
+        dedup_clusters(chain)
         raise AssertionError("expected RuntimeError for unconverged clustering")
     except RuntimeError as e:
         assert "did not converge" in str(e)
 
 
 def test_ngram_df_cap_keeps_exact_dup_pairs(spark):
-    """Jaccard under max_shingle_df must use the filtered shingle
-    universe on BOTH sides: identical docs sharing a hot (capped)
-    shingle must still score 1.0, not have the dropped shingle count
-    against the union only."""
+    """Identical docs that share a hot shingle with every other doc
+    still score exactly 1.0, and the hot shingle alone pairs nothing
+    else."""
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )
@@ -260,7 +257,7 @@ def test_ngram_df_cap_keeps_exact_dup_pairs(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = ngram_jaccard_pairs(docs, max_shingle_df=3).collect()
+    pairs = ngram_jaccard_pairs(docs).collect()
     assert [(r.doc_a, r.doc_b, r.jaccard) for r in pairs] == [(1, 2, 1.0)]
 
 
@@ -290,40 +287,16 @@ def test_embedding_blocked_is_subset_of_exact_with_identical_scores(spark):
     assert len(exact) == 0 or len(blocked) >= 0.2 * len(exact)
 
 
-def test_ngram_prefix_filter_is_exact(spark):
-    """The prefix-filtered inverted index must return EXACTLY the same
-    pairs and scores as the full inverted index (candidate completeness
-    of the |d| - ceil(t|d|) + 1 prefix under a common md5 order), across
-    thresholds including ones where t*|d| is integral."""
-    from stock_bars_data_engineering_project_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    for t in (0.5, 0.7, 0.8):
-        full = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in ngram_jaccard_pairs(
-                docs, threshold=t, prefix_filter=False
-            ).collect()
-        }
-        pref = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in ngram_jaccard_pairs(
-                docs, threshold=t, prefix_filter=True
-            ).collect()
-        }
-        assert pref == full, f"threshold {t}"
-
-
-
 def test_embedding_blocked_candidates_equal_hamming_ring(spark):
     """Property pin for the canonical-group pair emission: for several
-    n_planes, the blocked operator at threshold -1 (verify always
-    passes) must return EXACTLY the pairs whose buckets are within
-    hamming distance 2 — each emitted once (no duplicates lost or
-    invented by the min-shared-key rule)."""
+    n_planes, the blocked operator must return EXACTLY the exact
+    all-pairs matches whose buckets are within hamming distance 2 —
+    each emitted once (no duplicates lost or invented by the
+    min-shared-key rule)."""
     from pyspark.sql import functions as F
 
     from stock_bars_data_engineering_project_spark.operators.dedup import (
+        embedding_dup_pairs,
         embedding_dup_pairs_blocked,
     )
     from stock_bars_data_engineering_project_spark.operators.similarity import (
@@ -332,9 +305,10 @@ def test_embedding_blocked_candidates_equal_hamming_ring(spark):
     from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    exact = {(r.id_a, r.id_b) for r in embedding_dup_pairs(emb).collect()}
     for n_planes in (5, 8):
         blocked = embedding_dup_pairs_blocked(
-            emb, threshold=-1.0, dim=64, n_planes=n_planes
+            emb, dim=64, n_planes=n_planes
         ).collect()
         got = {(r.id_a, r.id_b) for r in blocked}
         assert len(got) == len(blocked)  # no duplicate emissions
@@ -350,6 +324,7 @@ def test_embedding_blocked_candidates_equal_hamming_ring(spark):
             for i, a in enumerate(ids)
             for b in ids[i + 1 :]
             if bin(buckets[a] ^ buckets[b]).count("1") <= 2
+            and (a, b) in exact
         }
         assert got == want, f"n_planes={n_planes}"
 

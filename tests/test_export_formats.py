@@ -14,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 def test_jsonl_roundtrip_and_shard_count(spark, tmp_path):
     docs = load_table(spark, SF, "documents").select("doc_id", "text", "source")
     out = str(tmp_path / "corpus")
-    export_jsonl(docs, out, n_shards=4, compression="gzip")
+    export_jsonl(docs, out, n_shards=4)
     shards = glob.glob(os.path.join(out, "part-*.json.gz"))
     assert len(shards) == 4
     back = spark.read.schema("doc_id long, text string, source string").json(out)

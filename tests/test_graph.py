@@ -73,8 +73,6 @@ def test_star_cc_equals_propagation_on_corpus_pairs(spark):
     """Large-star/small-star connected components (round 9) must label
     the real near-dup pair graph identically to min-label
     propagation — the same-driver-row gate's pytest twin."""
-    from pyspark.sql import functions as F
-
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         dedup_clusters,
         dedup_clusters_star,
@@ -90,11 +88,12 @@ def test_star_cc_equals_propagation_on_corpus_pairs(spark):
     assert _labels(dedup_clusters_star(pairs)) == _labels(dedup_clusters(pairs))
 
 
-def test_star_cc_round_count_win_on_path_graph(spark):
+def test_star_cc_round_count_win_on_path_graph(spark, monkeypatch):
     """The algorithmic point of the twin: a 200-node path graph (the
     drift-chain worst case) converges in O(log n) alternating rounds
     where propagation needs O(diameter) rounds — and both agree that
     the whole path is one cluster rooted at its minimum."""
+    from stock_bars_data_engineering_project_spark.operators import dedup
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         dedup_clusters,
         dedup_clusters_star,
@@ -104,17 +103,18 @@ def test_star_cc_round_count_win_on_path_graph(spark):
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
-    stats: dict = {}
-    star = dedup_clusters_star(path, max_iters=30, stats=stats)
-    got = _labels(star)
+    # exponential contraction: converges within a 10-round budget
+    monkeypatch.setattr(dedup, "STAR_ROUNDS", 10)
+    got = _labels(dedup_clusters_star(path))
     assert got == [(i, 0) for i in range(n + 1)]
-    assert stats["rounds"] <= 10, stats  # exponential contraction
     # propagation needs ~diameter rounds: it must refuse at a small
     # budget (silent wrong answers are worse than failure) ...
+    monkeypatch.setattr(dedup, "PROPAGATION_ROUNDS", 10)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(path, max_iters=10)
+        dedup_clusters(path)
     # ... and agree when given enough rounds
-    assert _labels(dedup_clusters(path, max_iters=2 * n + 2)) == got
+    monkeypatch.setattr(dedup, "PROPAGATION_ROUNDS", 2 * n + 2)
+    assert _labels(dedup_clusters(path)) == got
 
 
 def test_star_cc_shapes(spark):

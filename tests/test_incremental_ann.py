@@ -45,9 +45,9 @@ def test_build_ingest_matches_oneshot(spark, emb, tmp_path):
     build_ann_index(wh, first, "idx", centroid_stride=40, refine_iters=1)
     ingest_vectors(wh, second, "idx")
     queries = emb.filter(F.col("vec_id") < 5)
-    got = ann_query(wh, queries, "idx", k=5, nprobe=3)
+    got = ann_query(wh, queries, "idx")
     cent = wh.read("idx__centroids")
-    want = ivf_topk(emb, queries, k=5, nprobe=3, centroids=cent)
+    want = ivf_topk(emb, queries, k=10, nprobe=3, centroids=cent)
     assert _rows(got) == _rows(want)
 
 
@@ -84,17 +84,17 @@ def test_tombstone_delete_and_apply(spark, emb, tmp_path):
 
     queries = emb.filter(F.col("vec_id") < 5)
     cent = wh.read("idx__centroids")
-    want = _rows(ivf_topk(survivors, queries, k=5, nprobe=3, centroids=cent))
-    assert _rows(ann_query(wh, queries, "idx", k=5, nprobe=3)) == want
+    want = _rows(ivf_topk(survivors, queries, k=10, nprobe=3, centroids=cent))
+    assert _rows(ann_query(wh, queries, "idx")) == want
 
     # tombstoned ids are dead to re-ingest until physically applied
     n_before = wh.read("idx").count()
     ingest_vectors(wh, emb.filter(F.col("vec_id").isin(dead_ids[:3])), "idx")
     assert wh.read("idx").count() == n_before
-    assert _rows(ann_query(wh, queries, "idx", k=5, nprobe=3)) == want
+    assert _rows(ann_query(wh, queries, "idx")) == want
 
     apply_deletes(wh, "idx", IVF)
-    assert _rows(ann_query(wh, queries, "idx", k=5, nprobe=3)) == want
+    assert _rows(ann_query(wh, queries, "idx")) == want
     assert not wh.exists("idx__deleted")
     assert wh.read("idx").filter(F.col("vec_id").isin(dead_ids)).count() == 0
     # physical apply preserved the cid hive layout (static pruning path)

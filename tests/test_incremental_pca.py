@@ -119,7 +119,7 @@ def test_guards(spark, emb, tmp_path):
         ingest_pca_batch(wh, emb.filter(F.lit(False)), dim=DIM)
     with pytest.raises(ValueError, match="empty or lacks"):
         pca_moments_state(wh, dim=DIM)
-    ingest_pca_batch(wh, emb.limit(10), id_col="vec_id", dim=DIM)
+    ingest_pca_batch(wh, emb.limit(10), dim=DIM)
     with pytest.raises(ValueError, match="wrong dim"):
         pca_moments_state(wh, dim=32)
 

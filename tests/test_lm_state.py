@@ -7,7 +7,6 @@ corpus."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.lm_state import (
     ingest_lm_batch,

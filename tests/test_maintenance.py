@@ -15,7 +15,7 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
         wh.append(spark.range(i * 1000, (i + 1) * 1000).repartition(8), "t")
     before = len(wh.data_files("t"))
     assert before > 8
-    wh.compact("t", target_file_bytes=1 << 30)  # everything fits one file
+    wh.compact("t")  # everything fits one 128 MiB file
     assert len(wh.data_files("t")) == 1
     assert wh.read("t").count() == 4000
     assert wh.read("t").agg(F.sum("id")).first()[0] == sum(range(4000))
@@ -27,7 +27,7 @@ def test_compact_partitioned_one_file_per_partition(spark, tmp_path):
     for _ in range(3):
         wh.append(df, "t", partition_by=("bucket",))
         df = df.withColumn("id", F.col("id") + 10000)
-    wh.compact("t", partition_by=("bucket",))
+    wh.compact("t")  # keeps the recorded bucket layout
     files = wh.data_files("t")
     assert len(files) == 4  # one per hive partition
     assert wh.read("t").count() == 6000
@@ -46,19 +46,6 @@ def test_vacuum_drops_old_versions_keeps_current(spark, tmp_path):
         raise AssertionError("vacuumed version should not be readable")
     except Exception:
         pass
-
-
-def test_merge_schema_drift_backfills_nulls(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path))
-    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string")
-    wh.merge(v1, "t", keys=("id",))
-    # source adds a column: old rows backfill NULL, collisions take source
-    v2 = spark.createDataFrame(
-        [(2, "B", 9.5), (3, "c", 1.0)], "id long, val string, score double"
-    )
-    wh.merge(v2, "t", keys=("id",), allow_schema_drift=True)
-    got = {r.id: (r.val, r.score) for r in wh.read("t").collect()}
-    assert got == {1: ("a", None), 2: ("B", 9.5), 3: ("c", 1.0)}
 
 
 def test_merge_strict_rejects_drift(spark, tmp_path):
@@ -115,9 +102,10 @@ def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
         [(i, i % 4, f"v{i}") for i in range(400)], "id long, p int, val string"
     )
     wh.overwrite(base, "t", partition_by=("p",))
+    v1_all = wh.data_files("t")
     v1_files = {
         f: os.stat(f).st_ino
-        for f in wh.data_files("t")
+        for f in v1_all
         if "/p=1/" in f or "/p=2/" in f or "/p=3/" in f
     }
     assert v1_files
@@ -143,7 +131,7 @@ def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
         os.stat(f).st_ino for f in v2_files if "/p=1/" in f or "/p=2/" in f or "/p=3/" in f
     }
     assert untouched_inodes == set(v1_files.values())
-    v1_touched = {f for f in wh.data_files("t", "v000001") if "/p=0/" in f}
+    v1_touched = {f for f in v1_all if "/p=0/" in f}
     v2_touched = {f for f in v2_files if "/p=0/" in f}
     assert v2_touched and not {os.path.basename(f) for f in v2_touched} & {
         os.path.basename(f) for f in v1_touched
@@ -165,33 +153,32 @@ def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
 
 
 def test_merge_on_drift_appended_history_falls_back_to_full(spark, tmp_path):
-    """A pruned merge must NOT hardlink drift-appended manifest members
-    into one directory (a single-dir parquet read samples one footer
-    and silently drops/mis-aligns the drifted column): mixed-schema
-    histories fall back to the full rewrite, which re-aligns them."""
+    """A pruned merge must NOT hardlink manifest members of different
+    schemas into one directory (a single-dir parquet read samples one
+    footer and mis-reads the others): a history with a type-widened
+    append (int -> bigint) falls back to the full rewrite, which
+    re-aligns it."""
     wh = ParquetWarehouse(spark, str(tmp_path))
     wh.overwrite(
-        spark.createDataFrame([(i, i % 2, "a") for i in range(20)],
-                              "id long, p int, val string"),
+        spark.createDataFrame([(i, i % 2, "a", i) for i in range(20)],
+                              "id long, p int, val string, score int"),
         "t", partition_by=("p",),
     )
     wh.append(
-        spark.createDataFrame([(100, 0, "b", 9.5)],
-                              "id long, p int, val string, extra double"),
-        "t", allow_schema_drift=True,
+        spark.createDataFrame([(100, 0, "b", 9)],
+                              "id long, p int, val string, score long"),
+        "t",
     )
     batch = spark.createDataFrame(
-        [(0, 0, "NEW", None), (200, 1, "NEW", 1.5)],
-        "id long, p int, val string, extra double",
+        [(0, 0, "NEW", 5), (200, 1, "NEW", 7)],
+        "id long, p int, val string, score long",
     )
     wh.merge(batch, "t", keys=("p", "id"), partition_by=("p",))
-    out = wh.read("t")
-    assert "extra" in out.columns
-    got = {(r.id): (r.val, r.extra) for r in out.collect()}
-    assert got[100] == ("b", 9.5)      # drifted member's value survives
-    assert got[200] == ("NEW", 1.5)    # merged row carries the column
-    assert got[0] == ("NEW", None)
-    assert got[1] == ("a", None)       # untouched rows aligned, present
+    got = {r.id: (r.val, r.score) for r in wh.read("t").collect()}
+    assert got[100] == ("b", 9)       # widened member's row survives
+    assert got[200] == ("NEW", 7)     # inserted row
+    assert got[0] == ("NEW", 5)       # updated row
+    assert got[1] == ("a", 1)         # untouched rows aligned, present
     assert len(got) == 22
 
 
@@ -204,7 +191,7 @@ def test_delete_where_partition_pruned_hardlinks_untouched(spark, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path))
     df = spark.range(0, 2000).withColumn("bucket", (F.col("id") % 4).cast("int"))
     wh.overwrite(df, "t", partition_by=("bucket",))
-    wh.compact("t", partition_by=("bucket",))  # one file per partition
+    wh.compact("t")  # one file per partition
     def _rel(f):
         # bucket=N/part-...: basenames alone can collide across hive
         # dirs (one write task serves several partition values)
@@ -318,8 +305,6 @@ def test_append_type_drift_refuses_at_write_time(spark, tmp_path):
         assert "type drift" in str(e) and "'v'" in str(e)
     # the table is unpoisoned: still readable, still one row
     assert wh.read("t").count() == 1
-    # and an explicitly drift-allowed append stays the caller's call
-    wh.append(bad, "t", allow_schema_drift=True)
 
 
 def test_append_numeric_widening_and_partition_inference_allowed(spark, tmp_path):

@@ -1,7 +1,9 @@
-"""Shared cluster-safe materialization switch: conf resolution,
-refusal without a checkpoint dir, value preservation."""
+"""Shared cluster-safe materialization switch: session-conf
+resolution, refusal without a checkpoint dir, value preservation."""
 
 from __future__ import annotations
+
+import tempfile
 
 import pytest
 
@@ -20,22 +22,6 @@ def test_local_default_preserves_rows(spark):
     assert got == [(1, "a"), (2, "b")]
 
 
-def _durable_behaves(spark, df):
-    """Durable mode either refuses loudly (no checkpoint dir yet) or
-    round-trips the rows through the reliable checkpoint — which branch
-    depends on suite ordering, since setCheckpointDir has no unset."""
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            materialize(df, durable=True)
-    else:
-        got = sorted((r.id, r.v) for r in materialize(df, durable=True).collect())
-        assert got == [(1, "a"), (2, "b")]
-
-
-def test_durable_param(spark):
-    _durable_behaves(spark, _df(spark))
-
-
 @pytest.mark.parametrize("key", [DURABLE_CONF])
 def test_durable_via_session_conf(spark, key):
     spark.conf.set(key, "true")
@@ -48,6 +34,27 @@ def test_durable_via_session_conf(spark, key):
             assert got == [(1, "a"), (2, "b")]
     finally:
         spark.conf.unset(key)
+
+
+def test_durable_param(spark):
+    """The durable switch refuses loudly while no checkpoint dir is set,
+    then round-trips the rows through the reliable checkpoint once one
+    is. The dir is set only after the refusal check: setCheckpointDir
+    has no unset, so every later test in the session sees it."""
+    spark.conf.set(DURABLE_CONF, "true")
+    try:
+        if spark.sparkContext.getCheckpointDir() is None:
+            with pytest.raises(ValueError, match="setCheckpointDir"):
+                materialize(_df(spark))
+            # a stable dir, NOT pytest's function-scoped tmp_path: the
+            # session outlives this test
+            spark.sparkContext.setCheckpointDir(
+                tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+            )
+        got = sorted((r.id, r.v) for r in materialize(_df(spark)).collect())
+        assert got == [(1, "a"), (2, "b")]
+    finally:
+        spark.conf.unset(DURABLE_CONF)
 
 
 def test_conf_false_stays_local(spark):

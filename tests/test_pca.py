@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.pca import (
     covariance_stats,

@@ -1,7 +1,8 @@
 """Static rules over the source tree: the warehouse's snapshot format
 stays inside ``sinks/``, the slow-tier manifest names only tests that
-exist, and every top-level package function or class is named by the
-package or its entry points. All parse source with ``ast``; no Spark
+exist, every top-level package function or class is named by the
+package or its entry points, and every defaulted package parameter is
+set by some product caller. All parse source with ``ast``; no Spark
 session needed."""
 
 from __future__ import annotations
@@ -9,7 +10,7 @@ from __future__ import annotations
 import ast
 import importlib.util
 import sys
-from collections import Counter
+from collections import Counter, defaultdict
 from pathlib import Path
 
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
@@ -132,18 +133,195 @@ def test_unnamed_definitions_rule():
     assert unnamed_definitions(sources, ["used()"]) == {"a.py:dead", "b.py:Gone"}
 
 
-def test_every_top_level_definition_is_named():
-    sources = {
+def _package_sources() -> dict[str, str]:
+    return {
         str(p.relative_to(PACKAGE)): p.read_text() for p in sorted(PACKAGE.rglob("*.py"))
     }
-    roots = [
-        p.read_text()
-        for p in [
-            REPO / "__spark_entry__.py",
-            REPO / "bench.py",
-            *sorted((REPO / "perfbench").rglob("*.py")),
-        ]
+
+
+def _root_sources() -> list[str]:
+    """The product roots the reachability tool runs from."""
+    return [
+        Path(path).read_text()
+        for rel in reachability.ROOT_FILES
+        for path in reachability._py_files(str(REPO / rel))
     ]
-    unnamed = unnamed_definitions(sources, roots)
+
+
+def test_every_top_level_definition_is_named():
+    unnamed = unnamed_definitions(_package_sources(), _root_sources())
     assert sorted(unnamed - set(UNNAMED_ALLOWED)) == []
     assert sorted(set(UNNAMED_ALLOWED) - unnamed) == []
+
+
+# A defaulted parameter no product caller sets is an option nobody
+# uses: inline its default. One may stay only with a reason in
+# tools/reachability.py's KEEP_PARAMS table.
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
+    """(name, positional index or None for keyword-only) of every
+    parameter of ``fn`` that has a default."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    first = len(pos) - len(a.defaults)
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+class _Calls(ast.NodeVisitor):
+    """Every call in one module by the name it is matched on: the
+    function's name (through ``import ... as`` aliases), or
+    ``<Class>.__init__`` for ``Class(...)`` and a classmethod's
+    ``cls(...)``. A record is (positional count, keywords, ``**``
+    values, enclosing function, bound), where bound means the callee's
+    first parameter is already filled (``obj.m(...)``, ``Class(...)``).
+    A call through a variable holding a function is not matched."""
+
+    def __init__(self, classes: set[str], calls: dict[str, list]):
+        self.classes = classes
+        self.calls = calls
+        self._aliases: dict[str, str] = {}
+        self._fn: list = [None]
+        self._cls: list = [None]
+
+    def visit_Import(self, node):
+        self._aliases.update((a.asname, a.name) for a in node.names if a.asname)
+
+    visit_ImportFrom = visit_Import
+
+    def visit_ClassDef(self, node):
+        self._cls.append(node.name)
+        self.generic_visit(node)
+        self._cls.pop()
+
+    def visit_FunctionDef(self, node):
+        self._fn.append(node)
+        self.generic_visit(node)
+        self._fn.pop()
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Call(self, node):
+        f = node.func
+        name = getattr(f, "id", None) or getattr(f, "attr", None)
+        name = self._aliases.get(name, name)
+        bound = isinstance(f, ast.Attribute)
+        if name == "cls" and self._cls[-1]:
+            name = self._cls[-1]
+        if name in self.classes:
+            name, bound = f"{name}.__init__", True
+        if name:
+            star = any(isinstance(a, ast.Starred) for a in node.args)
+            self.calls[name].append((
+                float("inf") if star else len(node.args),
+                {k.arg for k in node.keywords if k.arg},
+                [k.value for k in node.keywords if k.arg is None],
+                self._fn[-1],
+                bound,
+            ))
+        self.generic_visit(node)
+
+
+def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
+    """``<module>:<qualname>(<param>)`` for every defaulted parameter of a
+    function in ``sources`` that no call in ``sources`` or ``roots``
+    sets, by keyword, by position or through ``**kwargs`` forwarding.
+    Calls match by name, so a name two functions share counts for both
+    (the rule errs toward "set")."""
+    trees = {m: ast.parse(text) for m, text in sources.items()}
+    defs: list[tuple[str, str, ast.FunctionDef, bool]] = []
+
+    def visit(module, body, prefix, cls):
+        for node in body:
+            if isinstance(node, ast.ClassDef):
+                visit(module, node.body, f"{prefix}{node.name}.", node.name)
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(
+                    getattr(d, "id", None) == "staticmethod" for d in node.decorator_list
+                )
+                key = f"{cls}.{node.name}" if cls and node.name == "__init__" else node.name
+                defs.append((f"{module}:{prefix}{node.name}", key, node, bool(cls) and not static))
+                visit(module, node.body, f"{prefix}{node.name}.", None)
+
+    for module, tree in trees.items():
+        visit(module, tree.body, "", None)
+    classes = {
+        n.name for t in trees.values() for n in ast.walk(t) if isinstance(n, ast.ClassDef)
+    }
+    calls: dict[str, list] = defaultdict(list)
+    for tree in [*trees.values(), *(ast.parse(r) for r in roots)]:
+        _Calls(classes, calls).visit(tree)
+
+    def forwarded(value, fn, seen) -> set[str] | None:
+        """Keywords a ``**value`` argument can carry; None = any."""
+        if isinstance(value, ast.Dict) and all(isinstance(k, ast.Constant) for k in value.keys):
+            return {k.value for k in value.keys}
+        kwarg = fn.args.kwarg if fn is not None else None
+        if not (isinstance(value, ast.Name) and kwarg is not None and kwarg.arg == value.id):
+            return None
+        if fn in seen:
+            return set()
+        named = {a.arg for a in [*fn.args.posonlyargs, *fn.args.args, *fn.args.kwonlyargs]}
+        out: set[str] = set()
+        for _, kws, fwds, enclosing, _ in calls.get(fn.name, ()):
+            out |= kws - named
+            for v in fwds:
+                more = forwarded(v, enclosing, seen | {fn})
+                if more is None:
+                    return None
+                out |= more
+        return out
+
+    def is_set(name, index, records, method) -> bool:
+        for npos, kws, fwds, enclosing, bound in records:
+            filled = npos + (1 if method and bound else 0)
+            if name in kws or (index is not None and filled > index):
+                return True
+            for v in fwds:
+                more = forwarded(v, enclosing, frozenset())
+                if more is None or name in more:
+                    return True
+        return False
+
+    return {
+        f"{qual}({name})"
+        for qual, key, fn, method in defs
+        for name, index in _defaulted(fn)
+        if not is_set(name, index, calls.get(key, ()), method)
+    }
+
+
+def test_unset_parameters_rule():
+    sources = {
+        "a.py": (
+            "def by_keyword(x, flag=False):\n    return flag\n\n"
+            "def by_position(x, n=1):\n    return n\n\n"
+            "def never(x, n=1):\n    return n\n\n"
+            "class C:\n"
+            "    def m(self, x, opt=None):\n        return opt\n\n"
+            "    def run(self):\n        return self.m(1, 2)\n\n"
+            "def inner(x, deep=0, shallow=0):\n    return deep + shallow\n\n"
+            "def outer(x, **kw):\n    return inner(x, **kw)\n\n"
+            "def connect(url, user=None):\n    return url\n\n"
+            "def aliased(x, opt=None):\n    return opt\n"
+        ),
+    }
+    roots = [
+        "from a import aliased as other\n"
+        "by_keyword(1, flag=True)\nby_position(1, 2)\nC().run()\n"
+        "outer(1, deep=3)\nconnect('db://')\nother(1, opt=2)\n"
+    ]
+    unset = unset_parameters(sources, roots)
+    # keyword, positional, self-method, aliased and forwarded (deep)
+    # passes set their parameters; nobody fills `shallow` through **kw
+    assert unset == {"a.py:never(n)", "a.py:inner(shallow)", "a.py:connect(user)"}
+    allowed = {"a.py:connect(user)": "deployment setting: credential"}
+    assert unset - set(allowed) == {"a.py:never(n)", "a.py:inner(shallow)"}
+
+
+def test_every_defaulted_parameter_is_set_by_product():
+    unset = unset_parameters(_package_sources(), _root_sources())
+    assert sorted(unset - set(reachability.KEEP_PARAMS)) == []
+    assert sorted(set(reachability.KEEP_PARAMS) - unset) == []

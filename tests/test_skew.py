@@ -8,7 +8,6 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -250,7 +250,6 @@ def test_stream_outer_interval_join_matches_batch_in_closed_region(spark, tmp_pa
     )
     out = interval_join_outer(
         purchases_s, views_s, key="user_id", left_ts="ts", right_ts="ts",
-        max_lag="1 hour",
     ).select("l_event_id", "r_event_id")
     run_stream_to_memory(out, "t_outer_ij", output_mode="append")
     got = spark.table("t_outer_ij")
@@ -264,7 +263,6 @@ def test_stream_outer_interval_join_matches_batch_in_closed_region(spark, tmp_pa
     views_b = batch.filter(F.col("event_type") == "view")
     want = interval_join_outer(
         purchases_b, views_b, key="user_id", left_ts="ts", right_ts="ts",
-        max_lag="1 hour",
     ).select("l_event_id", "l_ts", "r_event_id")
 
     # closed region: watermark delay + match window behind max event time

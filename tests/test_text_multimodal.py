@@ -266,15 +266,16 @@ def test_lang_id_profiles_threshold_and_ties(spark):
         lang_id_profiles,
     )
 
-    docs = spark.createDataFrame(
-        # exactly one en stopword in 20 tokens -> ratio 0.05
-        [(1, "the " + " ".join(f"w{i}" for i in range(19)))],
-        "doc_id long, text string",
-    )
-    at = docs.select(lang_id_profiles(F.col("text"), threshold=0.05).alias("l"))
-    above = docs.select(lang_id_profiles(F.col("text"), threshold=0.06).alias("l"))
-    assert at.collect()[0].l == "en"
-    assert above.collect()[0].l == "unknown"
+    def lang(n_other):
+        # one en stopword among 1 + n_other tokens
+        docs = spark.createDataFrame(
+            [(1, "the " + " ".join(f"w{i}" for i in range(n_other)))],
+            "doc_id long, text string",
+        )
+        return docs.select(lang_id_profiles(F.col("text")).alias("l")).collect()[0].l
+
+    assert lang(19) == "en"  # ratio exactly 0.05: the threshold is inclusive
+    assert lang(20) == "unknown"  # ratio 1/21 falls below it
 
     # deterministic tie: a token in BOTH fr and es profiles ('que') ->
     # first profile in dict order wins (fr precedes es)
@@ -283,18 +284,6 @@ def test_lang_id_profiles_threshold_and_ties(spark):
         tie.select(lang_id_profiles(F.col("text")).alias("l")).collect()[0].l
         == "fr"
     )
-
-
-def test_lang_id_profiles_guards(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from stock_bars_data_engineering_project_spark.functions.text import (
-        lang_id_profiles,
-    )
-
-    with pytest.raises(ValueError, match="at least one language"):
-        lang_id_profiles(F.lit("x"), profiles={})
 
 
 def test_lang_id_profiles_empty_doc_is_unknown(spark):

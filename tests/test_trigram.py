@@ -11,6 +11,7 @@ from stock_bars_data_engineering_project_spark.operators.trigram import (
     trigram_postings,
 )
 
+from stock_bars_data_engineering_project_spark.operators import incremental_trgm
 from stock_bars_data_engineering_project_spark.operators.incremental_trgm import (
     TRGM,
     trgm_query,
@@ -102,22 +103,21 @@ def test_postings_are_distinct_per_doc(spark):
     assert [(r.trigram, r.id) for r in post] == [("aaa", 1)]
 
 
-def test_external_postings_reused(spark):
-    """A persisted index (here: a pre-materialized frame) answers the
-    probe without docs-side trigram work — the incremental story."""
+def test_external_postings_reused(spark, tmp_path):
+    """A persisted index answers the probe from its stored postings —
+    no docs-side trigram work — with the in-plan search's answer."""
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pats = spark.createDataFrame(
         [(100, "quick brown")], ["pattern_id", "pattern"]
     )
-    post = trigram_postings(docs).cache()
-    try:
-        got = sorted(
-            (r.pattern_id, r.id)
-            for r in substring_search(docs, pats, postings=post).collect()
-        )
-        assert got == [(100, 1), (100, 2)]
-    finally:
-        post.unpersist()
+    wh = _wh(spark, tmp_path)
+    build_lexical_index(wh, docs, "tg", TRGM)
+    got = sorted(
+        (r.pattern_id, r.id) for r in trgm_query(wh, docs, pats, table="tg").collect()
+    )
+    assert got == [(100, 1), (100, 2)]
+    want = sorted((r.pattern_id, r.id) for r in substring_search(docs, pats).collect())
+    assert got == want
 
 
 def _wh(spark, tmp_path):
@@ -250,7 +250,7 @@ def test_persisted_index_tombstone_delete_and_apply(spark, tmp_path):
     assert (100, 1) in _got() and (103, 1) in _got()
 
 
-def test_trgm_query_pattern_size_cap_is_loud(spark, tmp_path):
+def test_trgm_query_pattern_size_cap_is_loud(spark, tmp_path, monkeypatch):
     """An oversized pattern frame must fail fast with the documented
     guard, not silently build a huge broadcast."""
     import pytest
@@ -259,5 +259,6 @@ def test_trgm_query_pattern_size_cap_is_loud(spark, tmp_path):
     pats = spark.createDataFrame(PATTERNS, ["pattern_id", "pattern"])
     wh = _wh(spark, tmp_path)
     build_lexical_index(wh, docs, "tg", TRGM)
-    with pytest.raises(ValueError, match="max_pattern_trigrams"):
-        trgm_query(wh, docs, pats, table="tg", max_pattern_trigrams=3)
+    monkeypatch.setattr(incremental_trgm, "MAX_PATTERN_TRIGRAMS", 3)
+    with pytest.raises(ValueError, match="MAX_PATTERN_TRIGRAMS"):
+        trgm_query(wh, docs, pats, table="tg")

@@ -73,7 +73,7 @@ def test_ref_integrity_counts_orphan_keys_not_rows(spark):
 def test_row_count_and_watermark_empty_table_fail(spark):
     empty = spark.createDataFrame([], "id long, ts timestamp")
     assert _one(row_count(empty, "t")).ok == 0
-    assert _one(max_watermark(empty, "t", "ts")).ok == 0
+    assert _one(max_watermark(empty, "t")).ok == 0
 
 
 def test_panel_unions_and_rejects_empty(spark):

@@ -66,15 +66,37 @@ KEEP: dict[str, str] = {
     "sinks/warehouse.py:ParquetWarehouse.delete_where": _ROADMAP_4,
     "sinks/warehouse.py:ParquetWarehouse.compact": _ROADMAP_4,
     "sources/bars_source.py:_SymbolPartition.__init__": _PROTOCOL,
-    "sources/bars_source.py:_RangePartition.__init__": _PROTOCOL,
-    "sources/bars_source.py:StockBarsDataSource.streamReader": _PROTOCOL,
     "sources/bars_source.py:StockBarsReader.__init__": _PROTOCOL,
     "sources/bars_source.py:StockBarsReader.partitions": _PROTOCOL,
-    "sources/bars_source.py:StockBarsStreamReader.__init__": _PROTOCOL,
-    "sources/bars_source.py:StockBarsStreamReader.initialOffset": _PROTOCOL,
-    "sources/bars_source.py:StockBarsStreamReader.latestOffset": _PROTOCOL,
-    "sources/bars_source.py:StockBarsStreamReader.partitions": _PROTOCOL,
-    "sources/bars_source.py:StockBarsStreamReader.commit": _PROTOCOL,
+}
+
+_TABLE = "deployment setting: the warehouse table name"
+_DRIVER = "deployment setting: the JDBC driver class"
+_JDBC_BOUNDS = "deployment setting: per-table JDBC partitioned-read bounds"
+
+# "<module path>:<qualname>(<parameter>)" -> why a defaulted parameter
+# stays although no product caller sets it (tests/test_repo_rules.py).
+KEEP_PARAMS: dict[str, str] = {
+    "operators/lm_state.py:ingest_lm_batch(uni_table)": _TABLE,
+    "operators/lm_state.py:ingest_lm_batch(bi_table)": _TABLE,
+    "operators/lm_state.py:lm_state(uni_table)": _TABLE,
+    "operators/lm_state.py:lm_state(bi_table)": _TABLE,
+    "operators/similarity.py:kmeans_refine(exact_mean)": _REFERENCE
+    + " (the id-ordered fold DuckDB replays bit for bit)",
+    "pipeline/corpus_pipeline.py:prepare_corpus(keeper)": _REFERENCE
+    + " (refresh_corpus equals the one-shot with keeper='first')",
+    "pipeline/corpus_pipeline.py:prepare_corpus(benchmark)": _REFERENCE
+    + " (refresh_corpus equals the one-shot over a frozen benchmark)",
+    "pipeline/corpus_pipeline.py:refresh_corpus(corpus_table)": _TABLE,
+    "pipeline/corpus_pipeline.py:refresh_corpus(index_table)": _TABLE,
+    "pipeline/corpus_pipeline.py:run_corpus_pipeline(table)": _TABLE,
+    "sinks/jdbc.py:JdbcWarehouse.__init__(driver)": _DRIVER,
+    "sinks/jdbc.py:JdbcWarehouse.read(lower)": _JDBC_BOUNDS,
+    "sinks/jdbc.py:JdbcWarehouse.read(upper)": _JDBC_BOUNDS,
+    "sinks/jdbc.py:JdbcWarehouse.read(num_partitions)": _JDBC_BOUNDS,
+    "streaming/incremental.py:dedup_ingest_stream(corpus_table)": _TABLE,
+    "streaming/incremental.py:dedup_ingest_stream(index_table)": _TABLE,
+    "streaming/incremental.py:corpus_refresh_stream(table)": _TABLE,
 }
 
 

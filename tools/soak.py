@@ -389,11 +389,8 @@ def run(
         # bloom pre-filtered semi join: bitmap build is one partial-agg
         # pass over the (linearly growing) purchase slice, membership a
         # map-only codegen filter on the full stream — the curve should
-        # track the two scans. m_bits follows the operator's own sizing
-        # rule (~10 bits per expected build key): at a FIXED m the
-        # bitmap saturates as the build side grows and the pre-filter
-        # silently degrades to a pass-through — the same
-        # grow-with-corpus policy as embedding_blocked's plane count
+        # track the two scans. The bitmap is a fixed 2^16 bits, so at
+        # large scales it saturates and the pre-filter passes more rows
         "bloom_semi": lambda: bloom_semi_join(
             events.select("event_id", "user_id"),
             events.filter(F.col("event_type") == "purchase").select(
@@ -401,7 +398,6 @@ def run(
             ),
             key="user_id",
             build_key="buyer_id",
-            m_bits=(1 << 16) * scale,
         ),
         # PSI distribution drift: one partial-agg (key, bucket) pass
         # over the fact table, then windows/folds on the (keys x bins)
