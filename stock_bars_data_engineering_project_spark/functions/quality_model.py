@@ -41,6 +41,9 @@ N_BUCKETS = 1 << 20
 _HASH_SPAN = float(1 << 48)
 # spreads the mean-of-[-1,1) margin over sigmoid's responsive range
 GAIN = 8.0
+# full-batch iterations and step size of train_quality_classifier
+N_ITERS = 8
+LR = 16.0
 
 
 def doc_features(text: Column) -> Column:
@@ -100,8 +103,6 @@ def quality_scores(df: DataFrame) -> DataFrame:
 def train_quality_classifier(
     df: DataFrame,
     label_col: str,
-    n_iters: int = 8,
-    lr: float = 16.0,
     stats: dict | None = None,
 ) -> DataFrame:
     """Train the hashed linear classifier IN the engine — full-batch
@@ -125,7 +126,7 @@ def train_quality_classifier(
          head or never moves the tail; dividing by the bucket's
          occurrence count equalizes per-bucket step sizes, the same
          diagonal trick AdaGrad approximates adaptively);
-      3. update: weights left-join gradient, w -= lr * g, then
+      3. update: weights left-join gradient, w -= LR * g, then
          materialize() (the repo's checkpoint choke point — honors the
          durable-checkpoint session switch; raw localCheckpoint would
          not) — persist alone leaves the logical plan
@@ -135,7 +136,7 @@ def train_quality_classifier(
          kmeans_refine lesson).
 
     ``stats`` (optional dict) receives ``loss`` and ``acc`` lists with
-    n_iters+1 entries — evaluated BEFORE each update plus once after
+    N_ITERS+1 entries — evaluated BEFORE each update plus once after
     the last, so callers can assert the training laws (loss monotone
     non-increasing, accuracy above the label prior). Mean margins and
     mean gradients are partial-agg floats, so trained weights are NOT
@@ -146,10 +147,6 @@ def train_quality_classifier(
     Returns the trained ``(bucket, weight)`` table (every bucket seen
     in the corpus; weights start at 0, so the init loss is ln 2).
     """
-    if n_iters < 1:
-        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    if lr <= 0:
-        raise ValueError(f"lr must be > 0, got {lr}")
     if label_col not in df.columns:
         raise ValueError(f"label column {label_col!r} not in input")
 
@@ -198,7 +195,7 @@ def train_quality_classifier(
     losses: list[float] = []
     accs: list[float] = []
     observations: list[Observation] = []
-    for i in range(n_iters + 1):
+    for i in range(N_ITERS + 1):
         margins = (
             # weights is bounded at 2^20 rows BY CONSTRUCTION (the
             # hashing trick), so it broadcasts at any corpus scale —
@@ -222,7 +219,7 @@ def train_quality_classifier(
         obs = Observation(f"train_probe_{i}")
         margins = margins.observe(obs, _loss_expr, _acc_expr)
         observations.append(obs)
-        if i == n_iters:
+        if i == N_ITERS:
             # no update consumes the final margins — one noop action
             # executes them so the last probe's metrics materialize
             margins.write.mode("overwrite").format("noop").save()
@@ -244,7 +241,7 @@ def train_quality_classifier(
                 "bucket",
                 (
                     F.col("w")
-                    - F.lit(lr) * F.coalesce(F.col("_g"), F.lit(0.0))
+                    - F.lit(LR) * F.coalesce(F.col("_g"), F.lit(0.0))
                 ).alias("w"),
             )
             .transform(materialize)

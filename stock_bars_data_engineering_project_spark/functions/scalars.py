@@ -63,8 +63,8 @@ def event_micros(df, col: str) -> Column:
     return F.unix_micros(F.col(col))
 
 
-def as_event_time(df, col: str):
-    """Return ``df`` with ``col`` usable as a Structured Streaming event
+def as_event_time(df):
+    """Return ``df`` with ``ts`` usable as a Structured Streaming event
     time: ``withWatermark`` requires TIMESTAMP proper, so a TIMESTAMP_NTZ
     column (naive wall time, UTC by this dataset's convention) is
     reinterpreted as a UTC instant via
@@ -77,6 +77,6 @@ def as_event_time(df, col: str):
     TIMESTAMP columns pass through untouched."""
     from pyspark.sql import types as T
 
-    if isinstance(df.schema[col].dataType, T.TimestampNTZType):
-        return df.withColumn(col, F.timestamp_micros(event_micros(df, col)))
+    if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+        return df.withColumn("ts", F.timestamp_micros(event_micros(df, "ts")))
     return df

@@ -29,20 +29,18 @@ from pyspark.sql import types as T
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
     right_on: str | None = None,
-    by: tuple[str, ...] = ("user_id",),
 ) -> DataFrame:
     """Backward inclusive as-of join: each left row gains the right row
-    with the greatest ``right_on <= on`` within the same ``by`` group
+    with the greatest ``right_on <= ts`` within the same ``user_id``
     (NULLs when no predecessor exists). Right rows must be unique per
-    (by, right_on) — dedup upstream, as with any merge source (SURVEY
+    (user_id, right_on) — dedup upstream, as with any merge source (SURVEY
     Q6).
 
     Forward as-of is the same construction with both orderings negated.
     """
+    on, by = "ts", ("user_id",)
     right_on = right_on or on
-    by = tuple(by)
     # When both sides share the event-time column name (the defaulted
     # right_on path), the right's copy is the join coordinate, not a
     # payload — emitting it would always clash with left's column, so it

@@ -18,13 +18,15 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_up
 from ..functions.text import tokens, word_shingles
 
+# exact_substr_scrub's span length in tokens
+SUBSTR_K = 8
+
 
 def contamination_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
-    k: int = 3,
 ) -> DataFrame:
-    """Per corpus document: how many of its distinct k-word shingles
+    """Per corpus document: how many of its distinct 3-word shingles
     appear anywhere in the benchmark set, plus the contaminated
     fraction. Returns only documents with at least one overlapping
     shingle (the candidates to drop/inspect).
@@ -38,13 +40,13 @@ def contamination_overlap(
     # coarse upstream (one row-group) serializing it on one core
     shingled = balance(corpus).select(
         F.col("doc_id"),
-        F.array_distinct(word_shingles(F.col("text"), k)).alias("shingles"),
+        F.array_distinct(word_shingles(F.col("text"), 3)).alias("shingles"),
     ).filter(F.size("shingles") > 0)
 
     bench_shingles = (
         benchmark.select(
             F.explode(
-                F.array_distinct(word_shingles(F.col("text"), k))
+                F.array_distinct(word_shingles(F.col("text"), 3))
             ).alias("shingle")
         )
         .distinct()
@@ -68,9 +70,9 @@ def contamination_overlap(
     )
 
 
-def boilerplate_scrub(df: DataFrame, k: int = 3, df_cap: int = 5) -> DataFrame:
+def boilerplate_scrub(df: DataFrame, df_cap: int = 5) -> DataFrame:
     """Corpus-level boilerplate removal (the C4/RefinedWeb-style scrub):
-    any k-token span that appears in >= ``df_cap`` DISTINCT documents is
+    any 3-token span that appears in >= ``df_cap`` DISTINCT documents is
     treated as boilerplate (headers, footers, license banners, nav
     text), and every token position covered by a hot span is removed
     from every document.
@@ -93,20 +95,24 @@ def boilerplate_scrub(df: DataFrame, k: int = 3, df_cap: int = 5) -> DataFrame:
     Output: (doc_id, n_tokens, n_removed, clean_text) for EVERY input
     document; ``clean_text`` is the kept tokens re-joined with single
     spaces (a normalized token join, both engines reassemble
-    identically). Documents shorter than k tokens pass through intact.
+    identically). Documents shorter than 3 tokens pass through intact.
     """
-    pos_grams = positional_grams(df, k)
+    from ..sources.readers import balance
+
+    pos_grams = positional_grams(df, 3)
     hot = (
         gram_doc_frequency(pos_grams)
         .filter(F.col("gram_df") >= df_cap)
         .select("gram")
     )
-    return scrub_against(
-        df,
-        hot,
-        k,
-        pos_grams=pos_grams,
+    base = balance(df).select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
+    covered = (
+        pos_grams.join(F.broadcast(hot), "gram")
+        .select("doc_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + 2)).alias("p"))
+        .groupBy("doc_id")
+        .agg(F.collect_set("p").alias("_cov"))
     )
+    return _rebuild_minus_covered(base, covered)
 
 
 def positional_grams(df: DataFrame, k: int) -> DataFrame:
@@ -148,35 +154,6 @@ def gram_doc_frequency(pos_grams: DataFrame) -> DataFrame:
     )
 
 
-def scrub_against(
-    df: DataFrame,
-    hot: DataFrame,
-    k: int,
-    pos_grams: DataFrame | None = None,
-) -> DataFrame:
-    """Remove every position covered by an occurrence of a ``hot`` gram
-    (a 1-column ``gram`` frame) from each document — the apply side of
-    the scrub, reusable against ANY hot set (batch-local, full-corpus,
-    or the incrementally maintained one)."""
-    from ..sources.readers import balance
-
-    toks = tokens(F.col("text"))
-    base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
-    if pos_grams is None:
-        pos_grams = positional_grams(df, k)
-    hot_side = F.broadcast(hot)
-    covered = (
-        pos_grams.join(hot_side, "gram")
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias("p"),
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("p").alias("_cov"))
-    )
-    return _rebuild_minus_covered(base, covered)
-
-
 def _rebuild_minus_covered(base: DataFrame, covered: DataFrame) -> DataFrame:
     """Shared rebuild: drop each document's covered 1-based positions
     and re-join the kept tokens. ``base`` is (doc_id, toks); ``covered``
@@ -206,7 +183,7 @@ def _rebuild_minus_covered(base: DataFrame, covered: DataFrame) -> DataFrame:
     )
 
 
-def exact_substr_scrub(df: DataFrame, k: int = 8) -> DataFrame:
+def exact_substr_scrub(df: DataFrame) -> DataFrame:
     """Exact-substring dedup (the suffix-array pass of Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
     re-expressed at k-gram granularity): every occurrence of a k-token
@@ -238,6 +215,7 @@ def exact_substr_scrub(df: DataFrame, k: int = 8) -> DataFrame:
     from ..sources.readers import balance
     toks = tokens(F.col("text"))
     base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
+    k = SUBSTR_K
     pos_grams = positional_grams(df, k)
     winners = (
         pos_grams.groupBy("gram")
@@ -291,7 +269,7 @@ def dedup_paragraphs(df: DataFrame) -> DataFrame:
        ``(key, doc_id, pos)`` — never the paragraph text;
     4. per-doc rebuild — groupBy(doc) collect_set of removed positions,
        indexed array filter, re-join with a blank line (the
-       scrub_against idiom).
+       boilerplate_scrub idiom).
 
     Output: ``(doc_id, n_paragraphs, n_removed, clean_text)`` for EVERY
     input document (docs with no duplicate paragraphs pass through with

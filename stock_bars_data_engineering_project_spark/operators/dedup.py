@@ -698,20 +698,17 @@ def embedding_dup_pairs(df: DataFrame) -> DataFrame:
     )
 
 
-def embedding_dup_pairs_blocked(
-    df: DataFrame,
-    dim: int = 64,
-    n_planes: int = 8,
-) -> DataFrame:
+def embedding_dup_pairs_blocked(df: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs, hyperplane-LSH blocked — the
-    scale path. Every vector gets a deterministic ``n_planes``-bit sign
-    bucket (similarity.lsh_bucket); a pair becomes a candidate iff the
-    buckets are within hamming distance 2, realized WITHOUT a self-join:
-    each vector emits its bucket plus the ``n_planes`` one-bit flips as
+    scale path. Every 64-dim vector gets a deterministic n-bit sign
+    bucket (similarity.lsh_bucket; n = similarity.lsh_planes, 8 at this
+    suite's sizes, growing with the corpus); a pair becomes a candidate
+    iff the buckets are within hamming distance 2, realized WITHOUT a
+    self-join: each vector emits its bucket plus the n one-bit flips as
     probe keys, and two key sets intersect exactly when
     hamming(bucket_a, bucket_b) <= 2. Candidates then get the exact
     cosine verify. Plan shape: one map-only bucket pass, one
-    (n_planes+1)-way key explode, one groupBy-expand over tiny buckets
+    (n+1)-way key explode, one groupBy-expand over tiny buckets
     (_bucket_pairs), two id-equi-joins to re-fetch vectors for the
     candidate set only — no cross join anywhere, linear in corpus size
     for bounded bucket occupancy.
@@ -722,11 +719,12 @@ def embedding_dup_pairs_blocked(
     trades recall for scale: pairs at cosine >= 0.4 whose buckets differ
     by > 2 bits are not emitted (measured against the exact baseline in
     tests/test_dedup.py)."""
-    from .similarity import lsh_bucket
+    from .similarity import lsh_bucket, lsh_planes
 
+    n_planes = lsh_planes(df)
     slim = balance(df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")))
     bucketed = slim.select(
-        "_id", lsh_bucket("_v", dim, n_planes).alias("_bucket")
+        "_id", lsh_bucket("_v", 64, n_planes).alias("_bucket")
     )
     probe_keys = F.array(
         F.col("_bucket"),
@@ -787,7 +785,6 @@ def embedding_dup_pairs_blocked(
 def canonical_selection(
     clusters: DataFrame,
     docs: DataFrame,
-    quality_col: str = "n_chars",
 ) -> DataFrame:
     """Cluster-level dedup endgame: pick the KEEPER of each duplicate
     cluster and assign every member a leakage-safe split label.
@@ -799,7 +796,7 @@ def canonical_selection(
     exactly what dedup was supposed to prevent. Both decisions are made
     here at CLUSTER granularity:
 
-      * ``keep``: True for the member maximizing ``quality_col``
+      * ``keep``: True for the member maximizing ``n_chars``
         (tie -> lowest id) within its cluster.
       * ``split``: ``stable_split`` keyed on cluster_id, so every
         member of a cluster lands in the SAME train/val/test split.
@@ -813,23 +810,20 @@ def canonical_selection(
     """
     from .sampling import stable_split
 
-    # guard the FRAMES, not just the parameter names: withColumn would
-    # silently overwrite an existing keep/split (e.g. re-running
-    # selection on an already-labeled frame) — same stance as
-    # salted_topk's and shuffle_shards' collision guards
+    # withColumn would silently overwrite an existing keep/split (e.g.
+    # re-running selection on an already-labeled frame) — same stance
+    # as salted_topk's and shuffle_shards' collision guards
     taken = {"keep", "split"}
-    colliding = sorted(
-        taken & (set(clusters.columns) | {quality_col, "doc_id"})
-    )
+    colliding = sorted(taken & set(clusters.columns))
     if colliding:
         raise ValueError(
             f"canonical_selection: column names {colliding} are reserved "
             "for the output; rename them on the input first"
         )
-    quality = docs.select(F.col("doc_id"), F.col(quality_col))
+    quality = docs.select(F.col("doc_id"), F.col("n_chars"))
     joined = clusters.join(quality, "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(quality_col).desc(), F.col("doc_id")
+        F.col("n_chars").desc(), F.col("doc_id")
     )
     ranked = joined.withColumn("keep", F.row_number().over(w) == F.lit(1))
     return stable_split(ranked, id_col="cluster_id")

@@ -43,9 +43,9 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_up
 
 
-def psi_drift(df: DataFrame, value_col: str, is_reference: Column) -> DataFrame:
+def psi_drift(df: DataFrame, is_reference: Column) -> DataFrame:
     """PSI between the ``is_reference`` rows and the rest, per
-    ``event_type``, over width-10 value bins. Returns one row per
+    ``event_type``, over width-10 bins of ``value``. Returns one row per
     ``event_type`` with ``psi`` (rounded), and the exact audit integers
     ``n_ref``, ``n_cur``, ``n_bins`` — gating the population sizes and the bin
     support alongside the statistic itself.
@@ -55,7 +55,7 @@ def psi_drift(df: DataFrame, value_col: str, is_reference: Column) -> DataFrame:
     batch-over-batch drift). Rows where it is NULL are treated as
     current — callers wanting a third bucket should filter first.
     """
-    bucket = F.floor(F.col(value_col) / F.lit(10.0)).cast("long")
+    bucket = F.floor(F.col("value") / F.lit(10.0)).cast("long")
     ref_flag = F.when(is_reference, F.lit(1)).otherwise(F.lit(0))
     # one corpus-sized partial-agg pass: per (key, bucket) side counts
     counts = (
@@ -102,18 +102,17 @@ def _psi_from_side_counts(counts: DataFrame, keys: Sequence[str]) -> DataFrame:
 def psi_vs_reference(
     cur_counts: DataFrame,
     ref_counts: DataFrame,
-    ref_keys: Sequence[str] = ("event_type",),
     window_cols: Sequence[str] = ("window_start",),
 ) -> DataFrame:
-    """PSI of each (ref_keys x window) population against a FROZEN
-    per-ref_keys reference histogram — the monitoring shape: the
+    """PSI of each (event_type x window) population against a FROZEN
+    per-event_type reference histogram — the monitoring shape: the
     reference is the accepted corpus's bin counts (built once,
     persisted or broadcast), each arriving window is judged against it
     without the reference moving.
 
-    ``cur_counts``: ``ref_keys + window_cols + (bucket, n)`` — e.g. the
+    ``cur_counts``: ``event_type + window_cols + (bucket, n)`` — e.g. the
     drained output of a streaming per-window histogram aggregation.
-    ``ref_counts``: ``ref_keys + (bucket, n)``. Bin support per window
+    ``ref_counts``: ``(event_type, bucket, n)``. Bin support per window
     is the union of the window's bins and the reference's bins for its
     key (reference bins missing from a window still vote — a vanished
     mode is drift). Join keys must be non-NULL (the equi-joins here
@@ -124,7 +123,7 @@ def psi_vs_reference(
     (ref = keys x bins, cur = keys x windows x bins); the reference
     side is broadcast onto the window list.
     """
-    rk, wc = list(ref_keys), list(window_cols)
+    rk, wc = ["event_type"], list(window_cols)
     keys = rk + wc
     windows = cur_counts.select(*keys).distinct()
     expanded = windows.join(
@@ -160,7 +159,7 @@ def psi_vs_reference(
     return _psi_from_side_counts(both, keys)
 
 
-def mad_outliers(df: DataFrame, value_col: str, keys: Sequence[str] = ()) -> DataFrame:
+def mad_outliers(df: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
     """Robust per-group outlier detection by the median/MAD rule — the
     other half of batch monitoring next to :func:`psi_drift`: PSI says
     "the distribution moved", this says "these are the rows that don't
@@ -168,7 +167,7 @@ def mad_outliers(df: DataFrame, value_col: str, keys: Sequence[str] = ()) -> Dat
     inflates the stddev enough to hide itself; the breakdown point of
     the median and the MAD is 50%).
 
-    A value is an outlier when ``|v - median| > 3 * 1.4826 * MAD``
+    A ``value`` is an outlier when ``|v - median| > 3 * 1.4826 * MAD``
     (1.4826 scales the MAD to the stddev of a normal distribution, so
     the cut reads as 3 sigma).
 
@@ -201,7 +200,7 @@ def mad_outliers(df: DataFrame, value_col: str, keys: Sequence[str] = ()) -> Dat
     (keys..., median, mad, n, n_outliers).
     """
     ks = list(keys)
-    vc = F.col(value_col)
+    vc = F.col("value")
 
     def _bjoin(left: DataFrame, right: DataFrame) -> DataFrame:
         if not ks:
@@ -221,7 +220,7 @@ def mad_outliers(df: DataFrame, value_col: str, keys: Sequence[str] = ()) -> Dat
 
     med = df.groupBy(*ks).agg(
         round_half_up(
-            F.expr(f"percentile({value_col}, 0.5D)"), 6
+            F.expr("percentile(value, 0.5D)"), 6
         ).alias("median")
     )
     with_med = _bjoin(df, _renamed(med))
@@ -229,7 +228,7 @@ def mad_outliers(df: DataFrame, value_col: str, keys: Sequence[str] = ()) -> Dat
     # (the per-group broadcast stats are single-valued per key)
     mad = with_med.groupBy(*ks, "median").agg(
         round_half_up(
-            F.expr(f"percentile(abs({value_col} - median), 0.5D)"),
+            F.expr("percentile(abs(value - median), 0.5D)"),
             6,
         ).alias("mad"),
     )

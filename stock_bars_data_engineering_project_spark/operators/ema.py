@@ -23,9 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ewma_per_key(df: DataFrame, alpha: float = 0.1) -> DataFrame:
-    """Per-``user_id`` EMA of ``value`` ordered by (ts, event_id) into
-    ``ema``, seeded at the first value
+# smoothing factor of the batch and streaming EMA
+ALPHA = 0.1
+
+
+def ewma_per_key(df: DataFrame) -> DataFrame:
+    """Per-``user_id`` EMA (``ALPHA``) of ``value`` ordered by (ts,
+    event_id) into ``ema``, seeded at the first value
     (pandas ``ewm(adjust=False)`` semantics: y_1 = x_1). Emits the RAW
     double — cross-engine display rounding belongs to the caller
     (functions.scalars.round_half_up), not the kernel."""
@@ -54,7 +58,7 @@ def ewma_per_key(df: DataFrame, alpha: float = 0.1) -> DataFrame:
             # original index restores row alignment.
             ema = (
                 pdf.groupby("user_id", sort=False)["value"]
-                .ewm(alpha=alpha, adjust=False)
+                .ewm(alpha=ALPHA, adjust=False)
                 .mean()
                 .droplevel(0)
                 .sort_index()
@@ -69,7 +73,7 @@ def ewma_per_key(df: DataFrame, alpha: float = 0.1) -> DataFrame:
                     ignore_index=True,
                 )
                 ema.loc[mask] = (
-                    seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:].values
+                    seeded.ewm(alpha=ALPHA, adjust=False).mean().iloc[1:].values
                 )
             carry_key = pdf["user_id"].iloc[-1]
             carry_y = float(ema.iloc[-1])

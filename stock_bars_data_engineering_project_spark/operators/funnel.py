@@ -87,22 +87,20 @@ def funnel_steps(
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 
-def cohort_retention(events: DataFrame, max_offset: int = 7) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Cohort retention triangle — the funnel's product-analytics twin:
     users cohort by their FIRST active day, and each (cohort_day,
     offset) cell counts how many of that cohort were active exactly
     ``offset`` days later (offset 0 = cohort size by construction).
 
-    Returns (cohort_day, offset, n_users) for offsets 0..max_offset.
+    Returns (cohort_day, offset, n_users) for offsets 0..7.
 
     Scale shape: one partial-agg first-day aggregate (user-cardinality
     output), one distinct over (user, day) — bounded by user-days, far
     below raw tick volume — one user-keyed join of those two reduced
     frames, one counting aggregate. The offset cap bounds the output at
-    days x (max_offset+1) cells however large the log.
+    days x 8 cells however large the log.
     """
-    if max_offset < 0:
-        raise ValueError(f"max_offset must be >= 0, got {max_offset}")
     day = F.to_date(F.col("ts"))
     first = events.groupBy(F.col("user_id").alias("u")).agg(
         F.min(day).alias("cohort_day")
@@ -114,7 +112,7 @@ def cohort_retention(events: DataFrame, max_offset: int = 7) -> DataFrame:
     return (
         active.join(first, "u")
         .withColumn("offset", F.datediff("day", "cohort_day"))
-        .filter(F.col("offset") <= max_offset)
+        .filter(F.col("offset") <= 7)
         .groupBy("cohort_day", "offset")
         .agg(F.count(F.lit(1)).alias("n_users"))
         .select("cohort_day", F.col("offset").cast("int"), "n_users")

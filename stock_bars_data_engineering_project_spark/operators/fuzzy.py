@@ -38,15 +38,12 @@ def fuzzy_join(
     right: DataFrame,
     left_col: str,
     right_col: str,
-    max_dist: int = 2,
 ) -> DataFrame:
     """Blocked approximate-string join. Returns all left x right rows
     whose block keys match AND ``levenshtein(left_col, right_col) <=
-    max_dist``, with the distance as an ``edit_dist`` int column.
+    2``, with the distance as an ``edit_dist`` int column.
     The block key is the match column's lowercased first space-token.
     """
-    if max_dist < 0:
-        raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     clash = {"_blk", "edit_dist"} & (set(left.columns) | set(right.columns))
     if clash:
         raise ValueError(
@@ -56,9 +53,9 @@ def fuzzy_join(
     l = left.withColumn("_blk", F.split(F.lower(F.col(left_col)), " ")[0])
     r = right.withColumn("_blk", F.split(F.lower(F.col(right_col)), " ")[0])
     joined = l.join(r, "_blk").filter(
-        F.abs(F.length(F.col(left_col)) - F.length(F.col(right_col))) <= max_dist
+        F.abs(F.length(F.col(left_col)) - F.length(F.col(right_col))) <= 2
     )
-    dist = F.levenshtein(F.col(left_col), F.col(right_col), max_dist)
+    dist = F.levenshtein(F.col(left_col), F.col(right_col), 2)
     return (
         joined.withColumn("edit_dist", dist)
         .filter(F.col("edit_dist") >= 0)  # -1 = threshold exceeded
@@ -69,15 +66,13 @@ def fuzzy_join(
 def fuzzy_dedup_pairs(
     df: DataFrame,
     id_col: str,
-    name_col: str,
-    max_dist: int = 2,
 ) -> DataFrame:
-    """Self-join variant for near-identical NAME pairs within one table
+    """Self-join variant for near-identical ``name`` pairs within one table
     (the dedup side of entity resolution). Emits each unordered pair
     once (id_a < id_b) with the edit distance."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(name_col).alias("_na"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(name_col).alias("_nb"))
-    out = fuzzy_join(a, b, "_na", "_nb", max_dist=max_dist)
+    a = df.select(F.col(id_col).alias("id_a"), F.col("name").alias("_na"))
+    b = df.select(F.col(id_col).alias("id_b"), F.col("name").alias("_nb"))
+    out = fuzzy_join(a, b, "_na", "_nb")
     return (
         out.filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "edit_dist")

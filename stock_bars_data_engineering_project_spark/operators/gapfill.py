@@ -21,10 +21,9 @@ from pyspark.sql import functions as F
 def calendar_fill(
     bars: DataFrame,
     key: str,
-    day_col: str,
     carry: tuple[str, ...],
 ) -> DataFrame:
-    """Return ONLY the synthetic rows: one per day missing from
+    """Return ONLY the synthetic rows: one per ``day`` missing from
     ``bars`` inside each key's [min(day), max(day)] span, with every
     ``carry`` column forward-filled from the key's most recent observed
     row (an observed NULL also inherits the prior value — last
@@ -43,24 +42,24 @@ def calendar_fill(
             "rename them on the input first"
         )
     spans = bars.groupBy(key).agg(
-        F.min(day_col).alias("__gap_lo"), F.max(day_col).alias("__gap_hi")
+        F.min("day").alias("__gap_lo"), F.max("day").alias("__gap_hi")
     )
     cal = spans.select(
         key,
-        F.explode(F.sequence("__gap_lo", "__gap_hi")).alias(day_col),
+        F.explode(F.sequence("__gap_lo", "__gap_hi")).alias("day"),
     )
     observed = bars.select(
-        key, day_col, *carry, F.lit(True).alias("__gap_obs")
+        key, "day", *carry, F.lit(True).alias("__gap_obs")
     )
-    joined = cal.join(observed, [key, day_col], "left")
+    joined = cal.join(observed, [key, "day"], "left")
     w = (
         Window.partitionBy(key)
-        .orderBy(day_col)
+        .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     filled = joined.select(
         key,
-        day_col,
+        "day",
         *[F.last(c, ignorenulls=True).over(w).alias(c) for c in carry],
         "__gap_obs",
     )

@@ -37,14 +37,12 @@ from ..functions.scalars import round_half_up
 from ..materialize import materialize
 
 
-def pagerank(pairs: DataFrame, n_iter: int = 3) -> DataFrame:
-    """PageRank over an undirected pair graph: (node, pr) for every
+def pagerank(pairs: DataFrame) -> DataFrame:
+    """Three rounds of PageRank over an undirected pair graph: (node, pr) for every
     node appearing in some pair. Symmetric edges, no self-loops; every
     node has degree >= 1 by construction, so there is no dangling-mass
     term. Damping is the literal 0.85 the shipped oracles fold (see
     module docstring on constant folding)."""
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     edges = materialize(
         pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
@@ -55,7 +53,7 @@ def pagerank(pairs: DataFrame, n_iter: int = 3) -> DataFrame:
     # deg/contrib/n are static across rounds, so they materialize ONCE:
     # reusing only the plan objects would re-execute the degree groupBy,
     # the edges-deg join, and the countDistinct against the checkpointed
-    # edges inside every round's plan — n_iter redundant edge scans
+    # edges inside every round's plan — one redundant edge scan per round
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = materialize(edges.agg(F.countDistinct("src").cast("double").alias("n")))
     teleport = F.lit(0.15)
@@ -71,7 +69,7 @@ def pagerank(pairs: DataFrame, n_iter: int = 3) -> DataFrame:
     )
     # (src, dst, deg) — static per run, computed once
     contrib_src = materialize(edges.join(deg, "src"))
-    for _ in range(n_iter):
+    for _ in range(3):
         pr = materialize(
             contrib_src.join(
                 pr.select(F.col("node").alias("src"), "pr"), "src"

@@ -42,7 +42,7 @@ from .pca import suffstats_rows
 def _batch_moment_rows(batch: DataFrame, dim: int) -> DataFrame:
     """One batch's moments as (i int, v double) rows — the per-partition
     suffstats reduced by one tiny shuffle over d*(d+1) keys."""
-    parts = suffstats_rows(batch, vec_col="embedding", dim=dim)
+    parts = suffstats_rows(batch, dim=dim)
     moments = (
         parts.select(
             F.posexplode(F.concat("colsum", "gram")).alias("i", "v")

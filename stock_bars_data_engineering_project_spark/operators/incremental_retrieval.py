@@ -85,7 +85,6 @@ def bm25_query(
     wh: ParquetWarehouse,
     queries: DataFrame,
     table: str = "bm25_index",
-    k: int = 10,
 ) -> DataFrame:
     """Top-k BM25 per query against the STORED index — identical
     semantics and output schema to :func:`retrieval.bm25_topk` over the
@@ -94,8 +93,6 @@ def bm25_query(
     of the query's own tokens (driver-side literal IN — bounded by the
     query vocabulary, the ann_query idiom), and document frequencies
     come from the probed partitions alone."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
     n_buckets = read_meta(wh, table)
 
     # ONE driver job for the whole query side: collect the
@@ -165,4 +162,4 @@ def bm25_query(
     doc_terms = postings.select(
         F.col("doc_id").alias("id"), "dl", "token", "tf"
     )
-    return score_topk(doc_terms, qterms, dfreq, stats, k)
+    return score_topk(doc_terms, qterms, dfreq, stats)

@@ -13,7 +13,7 @@ window), and the combined state is a pure epoch-sum read. Counts are
 exact integers, so the combined model equals a full recount of every
 accepted batch however deliveries were sliced.
 
-Counts are stored RAW (no min_count prune): per-(bigram, epoch)
+Counts are stored RAW (no BIGRAM_MIN_COUNT prune): per-(bigram, epoch)
 singletons must keep voting — a bigram appearing once per batch across
 many batches is a real transition — and storing raw keeps the prune
 threshold a read-time choice instead of a baked-in one.
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import content_epoch
 from ..functions.text import tokens
+from . import quality
 
 
 def _batch_lm_counts(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -103,9 +104,8 @@ def lm_state(
     wh,
     uni_table: str = "lm_unigrams",
     bi_table: str = "lm_bigrams",
-    min_count: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
-    """The combined frozen model: (token, n) and min_count-pruned
+    """The combined frozen model: (token, n) and BIGRAM_MIN_COUNT-pruned
     (prev, cur, n2) over every accepted epoch — feed straight into
     ``bigram_surprisal(batch, unigram_counts=uni, bigram_counts=bi)``.
     Pruning happens HERE (read time), on the summed counts."""
@@ -118,6 +118,6 @@ def lm_state(
         wh.read(bi_table)
         .groupBy("prev", "cur")
         .agg(F.sum("n2").alias("n2"))
-        .filter(F.col("n2") >= min_count)
+        .filter(F.col("n2") >= quality.BIGRAM_MIN_COUNT)
     )
     return uni, bi

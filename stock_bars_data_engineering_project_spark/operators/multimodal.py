@@ -167,10 +167,10 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """mapInPandas frame sampling — a 1->N row fan-out (one row per
     sampled frame), the shape ffmpeg keyframe extraction takes. The
-    deterministic stand-in slices the payload into ``n_frames`` even
+    deterministic stand-in slices the payload into 4 even
     byte ranges; a production build replaces the slicing with decoder
     calls. Output rows carry only (media_id, frame_idx, frame bytes) so
     the downstream per-frame featurization shuffles frames, not whole
@@ -186,13 +186,13 @@ def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
                 pdf["media_id"].values, pdf["payload"].values
             ):
                 payload = payload or b""
-                step = max(1, len(payload) // n_frames)
-                for i in range(n_frames):
+                step = max(1, len(payload) // 4)
+                for i in range(4):
                     rows["media_id"].append(media_id)
                     rows["frame_idx"].append(i)
-                    # the LAST frame runs to the end: len % n_frames
-                    # tail bytes belong to a frame, not the void
-                    end = (i + 1) * step if i < n_frames - 1 else len(payload)
+                    # the LAST frame runs to the end: len % 4 tail
+                    # bytes belong to a frame, not the void
+                    end = (i + 1) * step if i < 3 else len(payload)
                     rows["frame_payload"].append(payload[i * step : end])
             yield pd.DataFrame(rows)
 
@@ -278,25 +278,17 @@ def perceptual_hashes(df: DataFrame, pixels_fn=None) -> DataFrame:
     )
 
 
-def phash_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-duplicate image pairs by perceptual hash: pigeonhole
-    blocking on 4 x 16-bit blocks (lossless for hamming <= 3: a pair
+def phash_dup_pairs(hashed: DataFrame) -> DataFrame:
+    """Near-duplicate image pairs (hamming <= 3) by perceptual hash:
+    pigeonhole blocking on 4 x 16-bit blocks (lossless: a pair
     differing in at most 3 bits leaves at least one block intact), then
     a codegen hamming verify BEFORE the distinct-pair shuffle — the
     same discipline as dedup.simhash_pairs, over image hashes instead
     of text fingerprints.
-
-    ``max_hamming`` must stay < _PHASH_BLOCKS or the blocking loses
-    pairs — enforced loudly.
     """
     from ..functions.hashing import hamming
     from .dedup import _bucket_pairs
 
-    if not 0 <= max_hamming < _PHASH_BLOCKS:
-        raise ValueError(
-            f"max_hamming must be in [0, {_PHASH_BLOCKS - 1}] for lossless "
-            f"{_PHASH_BLOCKS}-block pigeonhole blocking, got {max_hamming}"
-        )
     width = PHASH_BITS // _PHASH_BLOCKS
     blocked = hashed.select(
         F.col("media_id"),
@@ -325,7 +317,7 @@ def phash_dup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
         keys=["block_idx", "block_key"],
         id_col="media_id",
         payload_cols=("phash",),
-        pair_pred=lambda a, b: hamming(a["phash"], b["phash"]) <= max_hamming,
+        pair_pred=lambda a, b: hamming(a["phash"], b["phash"]) <= 3,
     )
     return pairs.select(
         F.col("a.id").alias("id_a"),
@@ -425,26 +417,26 @@ def attach_wav_payload(df: DataFrame) -> DataFrame:
     return df.select("doc_id").mapInPandas(_synth, schema=schema)
 
 
-def audio_metrics(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def audio_metrics(df: DataFrame) -> DataFrame:
     """Per-payload audio scalars through the REAL decoder: one Arrow
-    batch in, (id, wav_samples, wav_rms, wav_peak) out — payload bytes
+    batch in, (doc_id, wav_samples, wav_rms, wav_peak) out — payload bytes
     never outlive the stage (the multimodal scale rule: features
     shuffle, media bytes don't)."""
     import pandas as pd
 
-    schema = f"{id_col} long, wav_samples long, wav_rms double, wav_peak double"
+    schema = "doc_id long, wav_samples long, wav_rms double, wav_peak double"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
                 continue
-            out = {id_col: [], "wav_samples": [], "wav_rms": [], "wav_peak": []}
-            for i, payload in zip(pdf[id_col], pdf["wav_payload"]):
+            out = {"doc_id": [], "wav_samples": [], "wav_rms": [], "wav_peak": []}
+            for i, payload in zip(pdf["doc_id"], pdf["wav_payload"]):
                 n, rms, peak = decode_wav(bytes(payload))
-                out[id_col].append(int(i))
+                out["doc_id"].append(int(i))
                 out["wav_samples"].append(n)
                 out["wav_rms"].append(rms)
                 out["wav_peak"].append(peak)
             yield pd.DataFrame(out)
 
-    return df.select(id_col, "wav_payload").mapInPandas(_decode, schema=schema)
+    return df.select("doc_id", "wav_payload").mapInPandas(_decode, schema=schema)

@@ -38,13 +38,11 @@ from ..functions.vectors import as_double, dot
 _SUFFSTATS_SCHEMA = "n long, colsum array<double>, gram array<double>"
 
 
-def suffstats_rows(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """Per-partition PCA sufficient statistics: each partition emits ONE
-    row (n, colsum, gram) of d*(d+1) + 1 doubles — the mergeable state
-    everything else in this module (and operators/incremental_pca.py's
-    persisted epochs) is built from. Raises on vectors whose length
+def suffstats_rows(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Per-partition PCA sufficient statistics of ``embedding``: each
+    partition emits ONE row (n, colsum, gram) of d*(d+1) + 1 doubles —
+    the mergeable state everything else in this module (and
+    operators/incremental_pca.py's persisted epochs) is built from. Raises on vectors whose length
     differs from ``dim`` — silent zero-padding would corrupt the
     moments."""
 
@@ -55,7 +53,7 @@ def suffstats_rows(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             if x.shape[1] != dim:
                 raise ValueError(
                     f"covariance_stats: embedding dim {x.shape[1]} != {dim}"
@@ -68,15 +66,15 @@ def suffstats_rows(
                 {"n": [n], "colsum": [s.tolist()], "gram": [g.ravel().tolist()]}
             )
 
-    return df.select(vec_col).mapInPandas(_partial, schema=_SUFFSTATS_SCHEMA)
+    return df.select("embedding").mapInPandas(_partial, schema=_SUFFSTATS_SCHEMA)
 
 
-def covariance_stats(df: DataFrame, vec_col: str = "embedding", dim: int = 64):
-    """(count, mean vector, covariance matrix) of an embedding column.
+def covariance_stats(df: DataFrame, dim: int = 64):
+    """(count, mean vector, covariance matrix) of the ``embedding`` column.
 
     Returns plain numpy objects (the d x d matrix is driver-sized by
     design)."""
-    parts = suffstats_rows(df, vec_col, dim)
+    parts = suffstats_rows(df, dim)
     # element-wise array sums across the (one-row-per-partition) stats:
     # explode to (idx, value) and sum per idx — thousands of rows total,
     # one tiny shuffle regardless of corpus size
@@ -106,7 +104,7 @@ def fit_pca(df: DataFrame, k: int, dim: int = 64) -> dict:
     covariance, descending eigenvalue order, sign fixed so each
     component's largest-magnitude coordinate is positive (eigenvectors
     are sign-ambiguous; an unfixed sign flips between runs/platforms)."""
-    n, mean, cov = covariance_stats(df, "embedding", dim)
+    n, mean, cov = covariance_stats(df, dim)
     return fit_pca_from_moments(n, mean, cov, k)
 
 

@@ -94,9 +94,14 @@ def _adjacent_pairs(docs: DataFrame, id_col: str | None = None) -> DataFrame:
     )
 
 
+# bigrams seen fewer times are pruned from the bigram model
+# (bigram_surprisal, lm_state) and from pmi_collocations' pair table
+BIGRAM_MIN_COUNT = 2
+PMI_MIN_COUNT = 5
+
+
 def bigram_surprisal(
     docs: DataFrame,
-    min_count: int = 2,
     unigram_counts: DataFrame | None = None,
     bigram_counts: DataFrame | None = None,
 ) -> DataFrame:
@@ -105,7 +110,7 @@ def bigram_surprisal(
     pair (prev, cur),
 
         p = c2(prev, cur) / c1(prev)        if the bigram survives
-                                            min_count pruning,
+                                            BIGRAM_MIN_COUNT pruning,
           = 0.4 * c1(cur) / total           otherwise (backoff to the
                                             unigram model),
 
@@ -114,7 +119,7 @@ def bigram_surprisal(
     TRANSITIONS (shuffled words, templated gibberish with common tokens
     in uncommon orders) that a bag-of-words model cannot see.
 
-    min_count pruning is the scale lever, not a tuning nicety: at corpus
+    BIGRAM_MIN_COUNT pruning is the scale lever, not a tuning nicety: at corpus
     scale the bigram table's cardinality is dominated by singletons
     (Zipf tail squared), and pruning them bounds the only model-sized
     join table while making the backoff branch real work — with the
@@ -143,7 +148,7 @@ def bigram_surprisal(
     realistic 100 TB shape: the gate scores incoming batches against a
     fixed LM rather than re-deriving the model from the batch (which
     would let a batch of correlated garbage normalize itself). The
-    supplied table is used as-is — apply min_count pruning before
+    supplied table is used as-is — apply BIGRAM_MIN_COUNT pruning before
     persisting it; when supplied, ``unigram_counts`` should come from
     the SAME reference corpus.
 
@@ -171,7 +176,7 @@ def bigram_surprisal(
         c2 = (
             pairs.groupBy("prev", "cur")
             .agg(F.count(F.lit(1)).alias("n2"))
-            .filter(F.col("n2") >= min_count)
+            .filter(F.col("n2") >= BIGRAM_MIN_COUNT)
         )
     else:
         c2 = bigram_counts.select("prev", "cur", "n2")
@@ -404,7 +409,6 @@ def gopher_panel(
 
 def pmi_collocations(
     docs: DataFrame,
-    min_count: int = 5,
     unigram_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Collocation mining by pointwise mutual information — the phrase
@@ -422,7 +426,7 @@ def pmi_collocations(
     cross-engine contract is the same as the surprisal arms (round the
     ln for display/ranking).
 
-    ``min_count`` prunes the Zipf singleton tail BEFORE the joins —
+    ``PMI_MIN_COUNT`` prunes the Zipf singleton tail BEFORE the joins —
     PMI's known failure mode is that hapax pairs of hapax words get the
     maximum score, and the pruning is also what bounds the join tables
     at corpus scale (the bigram_surprisal lever).
@@ -460,7 +464,7 @@ def pmi_collocations(
     c2 = (
         pairs.groupBy("prev", "cur")
         .agg(F.count(F.lit(1)).alias("n2"))
-        .filter(F.col("n2") >= min_count)
+        .filter(F.col("n2") >= PMI_MIN_COUNT)
     )
     n1 = uni.agg(F.sum("n").cast("double").alias("_n1"))
     # total pair count WITHOUT a second corpus explode: per-doc pair

@@ -21,15 +21,13 @@ from pyspark.sql import functions as F
 def range_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
     lo: str = "lo",
     hi: str = "hi",
     by: tuple[str, ...] = (),
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Equi-join-shaped interval join: rows of ``left`` matched to every
-    ``right`` interval with ``lo <= on <= hi`` (inclusive both ends),
-    optionally co-keyed on ``by`` columns."""
+    ``right`` interval with ``lo <= ts <= hi`` (inclusive both ends),
+    optionally co-keyed on ``by`` columns, through one-hour buckets."""
     # Column names shared between the two frames (beyond the join keys)
     # would make the unqualified BETWEEN references below ambiguous —
     # fail with the precondition spelled out instead of Spark's
@@ -41,21 +39,21 @@ def range_join(
             f"one side: {sorted(overlap)}"
         )
     lb = left.withColumn(
-        "_bucket", F.floor(F.unix_timestamp(F.col(on)) / bucket_seconds)
+        "_bucket", F.floor(F.unix_timestamp(F.col("ts")) / 3600)
     )
     rb = (
         right.withColumn(
             "_bucket",
             F.explode(
                 F.sequence(
-                    F.floor(F.unix_timestamp(F.col(lo)) / bucket_seconds),
-                    F.floor(F.unix_timestamp(F.col(hi)) / bucket_seconds),
+                    F.floor(F.unix_timestamp(F.col(lo)) / 3600),
+                    F.floor(F.unix_timestamp(F.col(hi)) / 3600),
                 )
             ),
         )
     )
     return (
         lb.join(rb, [*by, "_bucket"], "inner")
-        .filter((F.col(on) >= F.col(lo)) & (F.col(on) <= F.col(hi)))
+        .filter((F.col("ts") >= F.col(lo)) & (F.col("ts") <= F.col(hi)))
         .drop("_bucket")
     )

@@ -77,20 +77,17 @@ def _term_counts(
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Top-k BM25 documents per query: (query_id, doc_id, bm25, rank),
-    rank 1..k by descending score, doc_id ascending as the
+# documents kept per query by bm25_topk, bm25_query and rrf_fuse
+TOP_K = 10
+
+
+def bm25_topk(docs: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-``TOP_K`` BM25 documents per query: (query_id, doc_id, bm25,
+    rank), rank 1..TOP_K by descending score, doc_id ascending as the
     deterministic tiebreak. Documents sharing no term with a query
     score 0 and are absent (the inverted-index contract); a query with
     no non-empty tokens matches nothing.
     """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-
     qterms = _term_counts(queries, "query_id", "text").select(
         F.col("id").alias("query_id"), "token"
     )
@@ -118,7 +115,7 @@ def bm25_topk(
         F.avg("dl").alias("avgdl"),
     )
 
-    return score_topk(doc_terms, qterms, dfreq, stats, k)
+    return score_topk(doc_terms, qterms, dfreq, stats)
 
 
 # BM25 term-frequency saturation and length normalization
@@ -130,7 +127,6 @@ def score_topk(
     qterms: DataFrame,
     dfreq: DataFrame,
     stats: DataFrame,
-    k: int,
 ) -> DataFrame:
     """Shared BM25 scoring + ranking tail: ``doc_terms`` is
     (id, dl, token, tf) from either a live corpus scan (:func:`bm25_topk`)
@@ -173,7 +169,7 @@ def score_topk(
         keys=("query_id",),
         order_col="_bm25_r",
         tiebreak_col="doc_id",
-        k=k,
+        k=TOP_K,
         n_salt=8,
     )
     return out.select(
@@ -181,18 +177,18 @@ def score_topk(
     )
 
 
-def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of N ranked lists —
     the standard hybrid-retrieval combiner (lexical BM25 + semantic ANN
     being the canonical pair): each list contributes ``1 / (60 + rank)``
     for the items it ranked, the per-(query, item) contributions sum,
-    and the fused top-k is ranked on the 6-dp ROUNDED score with an
+    and the fused top-``TOP_K`` is ranked on the 6-dp ROUNDED score with an
     item-id tiebreak (the bm25_topk ranking discipline — raw-double
     ranking would tie-break differently per engine).
 
     Every input must carry (query_id, doc_id, rank). Scale shape:
     the legs are already top-k-blocked, so the union holds at most
-    ``len(rankings) * k`` rows per query — the fusion window's fan-in is
+    ``len(rankings) * TOP_K`` rows per query — the fusion window's fan-in is
     bounded by construction and no salting is needed. With two legs the
     score is a sum of at most two doubles (FP addition is commutative,
     so the aggregate is deterministic); with more legs the 6-dp rounding
@@ -224,7 +220,7 @@ def rrf_fuse(rankings: list[DataFrame], k: int = 10) -> DataFrame:
     )
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             F.col("query_id"),
             F.col("__rrf_item").alias("doc_id"),

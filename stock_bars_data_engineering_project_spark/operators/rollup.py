@@ -45,20 +45,18 @@ _STATE = (
 
 def rollup_increment(
     batch: DataFrame,
-    keys: tuple[str, ...] = ("user_id",),
     distinct_col: str | None = None,
 ) -> DataFrame:
     """One partial-aggregation pass over a batch -> mergeable state rows.
 
-    The event day of ``ts`` joins the group keys (the common rollup
+    Groups by ``user_id`` and the event day of ``ts`` (the common rollup
     grain). ``distinct_col`` additionally carries mergeable sketch
     state: an HLL sketch of that
     column (incremental distinct count) and a KLL sketch of ``value``
     (incremental quantiles) — both fold through ``merge_rollups``
     exactly like the scalar state.
     """
-    group = [F.col(k) for k in keys]
-    group.append(F.to_date(F.col("ts")).alias("day"))
+    group = [F.col("user_id"), F.to_date(F.col("ts")).alias("day")]
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("value").alias("sum_value"),

@@ -71,13 +71,11 @@ def _check_rate(name: str, rate: float) -> None:
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the corpus-mixture dial of a
     training pipeline ("100% of books, 10% of common-crawl"): keep a row
-    iff its content-addressed hash bucket falls under its stratum's
+    iff its ``doc_id`` hash bucket falls under its ``source`` stratum's
     rate; strata not listed get ``default_rate``.
     Row membership is stable under corpus growth and identical across
     engines and runs — re-weighting a mixture never reshuffles which
@@ -85,14 +83,14 @@ def stratified_sample(
     _check_rate("default_rate", default_rate)
     for name, r in rates.items():
         _check_rate(f"rates[{name!r}]", r)
-    bucket = hash_bucket(F.col(id_col), salt="stratum")
+    bucket = hash_bucket(F.col("doc_id"), salt="stratum")
     threshold = None
     for name, r in rates.items():
         t = int(round(r * 10_000))
         threshold = (
-            F.when(F.col(stratum_col) == name, t)
+            F.when(F.col("source") == name, t)
             if threshold is None
-            else threshold.when(F.col(stratum_col) == name, t)
+            else threshold.when(F.col("source") == name, t)
         )
     thr = (
         F.lit(int(round(default_rate * 10_000)))
@@ -152,12 +150,10 @@ def token_budget_sample(
 def alpha_mixture_sample(
     df: DataFrame,
     alpha: float = 0.5,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
     size: Column | None = None,
 ) -> DataFrame:
     """Temperature-weighted corpus mixture (the mT5/XLM-R alpha-sampling
-    rule): strata are kept at a rate proportional to ``share**(alpha-1)``,
+    rule): ``source`` strata are kept at a rate proportional to ``share**(alpha-1)``,
     so with ``alpha < 1`` small strata (rare languages, niche domains)
     are boosted toward parity and dominant strata are down-sampled.
     ``alpha=1`` reproduces the natural distribution (every row kept);
@@ -190,7 +186,7 @@ def alpha_mixture_sample(
             f"alpha_mixture_sample: input already has column(s) {sorted(clash)}; "
             "rename them before sampling"
         )
-    counts = df.groupBy(stratum_col).agg(
+    counts = df.groupBy("source").agg(
         (F.sum(size) if size is not None else F.count(F.lit(1)))
         .cast("double")
         .alias("_c")
@@ -201,7 +197,7 @@ def alpha_mixture_sample(
     else:
         rate = F.pow(F.col("_cmin") / F.col("_c"), F.lit(1.0 - alpha))
     thresholds = counts.crossJoin(F.broadcast(c_min)).select(
-        F.col(stratum_col).alias("_s"),
+        F.col("source").alias("_s"),
         F.floor(rate * 10_000).cast("long").alias("_thr"),
     )
     # null-safe equality: a NULL stratum is a stratum (it aggregated into
@@ -209,22 +205,21 @@ def alpha_mixture_sample(
     # every NULL-stratum row, the silent-NULL routing this module's
     # guards exist to prevent
     out = df.join(
-        F.broadcast(thresholds), F.col(stratum_col).eqNullSafe(F.col("_s")), "inner"
+        F.broadcast(thresholds), F.col("source").eqNullSafe(F.col("_s")), "inner"
     )
-    bucket = hash_bucket(F.col(id_col), salt="alpha")
+    bucket = hash_bucket(F.col("doc_id"), salt="alpha")
     # _thr == 10000 for the smallest stratum; bucket < 10000 always holds
     return out.filter(bucket < F.col("_thr")).drop("_s", "_thr")
 
 
 def shuffle_shards(
     df: DataFrame,
-    id_col: str = "doc_id",
     n_shards: int = 1024,
     seed: str = "",
 ) -> DataFrame:
     """Deterministic global training-order shuffle WITHOUT a global sort
     barrier: every row gets a content-addressed ``order_key`` (md5 of
-    the seeded id) and a ``shard`` (the key's top 48 bits mod
+    the seeded ``doc_id``) and a ``shard`` (the key's top 48 bits mod
     ``n_shards``). Reading shards ``0..n-1``, each sorted by
     ``order_key``, replays one fixed pseudorandom permutation of the
     corpus — the data-order shuffle LLM training needs, reproducible
@@ -250,9 +245,9 @@ def shuffle_shards(
                 f"shuffle_shards: input already has a column named {c!r}; "
                 "rename it before shuffling"
             )
-    key = F.md5(F.concat(F.lit(f"shuffle:{seed}:"), F.col(id_col).cast("string")))
+    key = F.md5(F.concat(F.lit(f"shuffle:{seed}:"), F.col("doc_id").cast("string")))
     order_key = F.when(
-        F.col(id_col).isNull(),
+        F.col("doc_id").isNull(),
         F.raise_error(F.lit("shuffle_shards: NULL id — clean or filter ids first")),
     ).otherwise(key)
     # shard derives from the GUARDED key, not the raw md5: a consumer
@@ -333,9 +328,6 @@ def curriculum_phases(df: DataFrame, size: Column) -> DataFrame:
 def walk_forward_days(
     df: DataFrame,
     day_idx: Column,
-    n_folds: int = 3,
-    test_days: int = 5,
-    embargo_days: int = 2,
 ) -> DataFrame:
     """Leakage-safe walk-forward backtest folds over a time-keyed fact
     table (the purged/embargoed cross-validation of financial ML — the
@@ -344,25 +336,21 @@ def walk_forward_days(
     (day, fold): ``(day_idx, fold, role)`` with role in
     {'train', 'embargo', 'test', 'future'}.
 
-    Fold k (0-based) tests on the k-th of the last ``n_folds``
-    consecutive ``test_days`` blocks; training uses only days STRICTLY
-    before the test block minus ``embargo_days`` (the embargo absorbs
-    label lookahead/serial correlation at the boundary); days after the
+    Fold k (0-based) tests on the k-th of the last 3 consecutive 5-day
+    blocks; training uses only days STRICTLY before the test block minus
+    a 2-day embargo (the embargo absorbs label lookahead/serial
+    correlation at the boundary); days after the
     fold's test block are 'future' (unusable for that fold). Row-level
     assignment is a pure function of the row's day, so the day-level
     table IS the split — join it back on the day for row membership.
 
     Determinism/scale shape: day boundaries derive from one min/max
     aggregate (two driver scalars); the fold table is
-    (distinct days x n_folds) rows built from a broadcast fold list;
+    (distinct days x 3) rows built from a broadcast fold list;
     every comparison is integer day arithmetic — no timestamps, no FP,
     no tz.
     """
-    if n_folds <= 0 or test_days <= 0 or embargo_days < 0:
-        raise ValueError(
-            f"need n_folds > 0, test_days > 0, embargo_days >= 0; got "
-            f"{n_folds}, {test_days}, {embargo_days}"
-        )
+    n_folds, test_days, embargo_days = 3, 5, 2
     days = df.select(day_idx.cast("long").alias("day_idx")).distinct()
     bounds = days.agg(
         F.min("day_idx").alias("lo"), F.max("day_idx").alias("hi")

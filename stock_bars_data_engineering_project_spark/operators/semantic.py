@@ -39,21 +39,23 @@ from ..functions.vectors import as_double, dot, dot_sql, norm
 from .dedup import _bucket_pairs
 from .similarity import ivf_assign
 
+# cosine at or above which a training vector counts as eval leakage
+DECONTAM_COS = 0.4
+
 
 def semantic_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    centroid_stride: int = 125,
 ) -> DataFrame:
     """The SemDeDup candidate/verify stage on its own: verified
     within-cell duplicate pairs ``(doc_a, doc_b, cos)`` with
     ``doc_a < doc_b``, cosine rounded to 4 for display and verified at
     6-digit rounding >= ``threshold`` (the shared oracle discipline).
-    The centroids are every ``centroid_stride``-th vector.
+    The centroids are every 125th vector.
     """
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    centroids = emb.filter(F.col("vec_id") % centroid_stride == 0).select(
+    centroids = emb.filter(F.col("vec_id") % 125 == 0).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     assigned = ivf_assign(emb, centroids)
@@ -92,7 +94,7 @@ def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _best_eval_match(scored: DataFrame, threshold: float) -> DataFrame:
+def _best_eval_match(scored: DataFrame) -> DataFrame:
     """Shared reduce for the decontamination arms: per train vector,
     the best (highest-cosine) eval match. Ties on the raw double break
     to the LOWEST eval id via lexicographic struct max over
@@ -111,15 +113,13 @@ def _best_eval_match(scored: DataFrame, threshold: float) -> DataFrame:
         "vec_id",
         (-F.col("_b.nid")).cast("long").alias("near_eval_id"),
         round_half_up(F.col("_b.c"), 4).alias("cos"),
-        (round_half_up(F.col("_b.c"), 6) >= F.lit(threshold)).alias(
+        (round_half_up(F.col("_b.c"), 6) >= F.lit(DECONTAM_COS)).alias(
             "contaminated"
         ),
     )
 
 
-def _decontam_guard(train: DataFrame, eval_set: DataFrame, threshold: float) -> None:
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
+def _decontam_guard(train: DataFrame, eval_set: DataFrame) -> None:
     taken = {"near_eval_id", "cos", "contaminated"}
     colliding = sorted(taken & set(train.columns))
     if colliding:
@@ -144,11 +144,10 @@ def _decontam_guard(train: DataFrame, eval_set: DataFrame, threshold: float) -> 
 def semantic_decontaminate(
     train: DataFrame,
     eval_set: DataFrame,
-    threshold: float = 0.4,
 ) -> DataFrame:
     """Embedding-space benchmark decontamination, exact form: score
     every training vector by its maximum cosine against the held-out
-    evaluation set and flag the ones at or above ``threshold``
+    evaluation set and flag the ones at or above ``DECONTAM_COS``
     (6-digit-rounded compare, 4-digit display — the shared oracle
     discipline). The token-level twin is
     ``contamination.contamination_overlap``; this catches paraphrased /
@@ -170,7 +169,7 @@ def semantic_decontaminate(
     against), not an all-false table — callers gating a corpus on the
     output must treat "no eval set" upstream.
     """
-    _decontam_guard(train, eval_set, threshold)
+    _decontam_guard(train, eval_set)
     ev = F.broadcast(
         eval_set.select(
             F.col("vec_id").cast("long").alias("_eid"),
@@ -186,22 +185,19 @@ def semantic_decontaminate(
     scored = tr.crossJoin(ev).withColumn(
         "_cos_raw", dot("_tv", "_ev") / (F.col("_tn") * F.col("_en"))
     )
-    return _best_eval_match(scored, threshold)
+    return _best_eval_match(scored)
 
 
 def semantic_decontaminate_blocked(
     train: DataFrame,
     eval_set: DataFrame,
-    threshold: float = 0.4,
-    dim: int = 64,
-    n_planes: int = 8,
-    hamming: int = 2,
 ) -> DataFrame:
     """Blocked form of :func:`semantic_decontaminate` for eval sets too
-    large to broadcast-scan: both sides get the deterministic
-    ``n_planes``-bit hyperplane sign bucket (similarity.lsh_bucket), the
-    eval side explodes each bucket into its full hamming-``hamming``
-    ball (1 + C(n,1) + C(n,2) keys for the default radius 2 — the ball
+    large to broadcast-scan: both sides of the 64-dim embeddings get the
+    deterministic n-bit hyperplane sign bucket (similarity.lsh_bucket;
+    n = similarity.lsh_planes of the training corpus, 8 at this suite's
+    sizes), the eval side explodes each bucket into its full hamming-2
+    ball (1 + C(n,1) + C(n,2) keys, 37 at n = 8 — the ball
     lives on the SMALL side, never the corpus), and candidates meet on
     a bucket equi-join; the exact hoisted-norm cosine verifies
     candidates only. Output schema matches the exact form, but only
@@ -209,7 +205,7 @@ def semantic_decontaminate_blocked(
     ``near_eval_id``/``cos`` are the argmax over CANDIDATES — the
     documented recall trade (same as embedding_dup_pairs_blocked), which
     the oracle replays exactly via ``bit_count(xor(bucket_a, bucket_b))
-    <= hamming``.
+    <= 2``.
 
     Scale shape: one map-only bucket pass per side, a bucket equi-join
     (broadcast when eval fits, hash-shuffle on the bucket key when not
@@ -218,23 +214,14 @@ def semantic_decontaminate_blocked(
     """
     from itertools import combinations
 
-    from .similarity import lsh_bucket
+    from .similarity import lsh_bucket, lsh_planes
 
-    _decontam_guard(train, eval_set, threshold)
-    if not 0 <= hamming <= 2:
-        # the ball is C(n_planes, <=hamming); past radius 2 it grows
-        # combinatorially and the caller should raise n_planes instead
-        raise ValueError(f"hamming must be in [0, 2], got {hamming}")
+    _decontam_guard(train, eval_set)
+    n_planes = lsh_planes(train)
+    masks = [0, *(1 << i for i in range(n_planes))]
+    masks += [(1 << i) | (1 << j) for i, j in combinations(range(n_planes), 2)]
 
-    masks = [0]
-    if hamming >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if hamming >= 2:
-        masks += [
-            (1 << i) | (1 << j) for i, j in combinations(range(n_planes), 2)
-        ]
-
-    bucket = lsh_bucket("_ev", dim, n_planes)
+    bucket = lsh_bucket("_ev", 64, n_planes)
     ev = (
         eval_set.select(
             F.col("vec_id").cast("long").alias("_eid"),
@@ -252,11 +239,11 @@ def semantic_decontaminate_blocked(
     tr = (
         train.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_tv"))
         .withColumn("_tn", norm("_tv"))
-        .withColumn("_tb", lsh_bucket("_tv", dim, n_planes))
+        .withColumn("_tb", lsh_bucket("_tv", 64, n_planes))
     )
     scored = tr.join(
         F.broadcast(ev), tr["_tb"] == ev["_probe"]
     ).withColumn(
         "_cos_raw", dot("_tv", "_ev") / (F.col("_tn") * F.col("_en"))
     )
-    return _best_eval_match(scored, threshold)
+    return _best_eval_match(scored)

@@ -9,9 +9,9 @@ Two tiers, same output contract (query_id, vec_id, cos, rank):
     codegen'd array arithmetic once.
 
   * ``lsh_ann_topk`` — approximate top-k via random-hyperplane LSH:
-    bucket every vector by the sign pattern of ``n_planes``
+    bucket every vector by the sign pattern of ``ANN_PLANES``
     MD5-seeded hyperplanes (deterministic, no RNG state to ship),
-    probe only the query's bucket ring (hamming <= probe_radius), rank
+    probe only the query's bucket ring (hamming <= ANN_PROBE_RADIUS), rank
     within candidates. Trades recall for a ~(corpus/buckets) read
     reduction — the scale path when queries are many.
 
@@ -79,7 +79,24 @@ def _hyperplane(dim: int, plane_idx: int) -> F.Column:
     return F.lit(plane_components(dim, plane_idx))
 
 
-def lsh_bucket(vec: F.Column | str, dim: int, n_planes: int = 8) -> F.Column:
+# LSH blocking keeps 8 sign bits up to this many corpus rows
+LSH_BASE_ROWS = 2048
+# lsh_ann_topk's sign bits and probe radius
+ANN_PLANES, ANN_PROBE_RADIUS = 5, 2
+
+
+def lsh_planes(corpus: DataFrame) -> int:
+    """Sign bits for LSH-blocking ``corpus`` (one count job): 8 up to
+    ``LSH_BASE_ROWS`` rows and 2 more per doubling beyond. At a fixed
+    plane count the hamming-2 probe ring admits a fixed FRACTION of all
+    pairs, so candidate work grows quadratically with the corpus; +2
+    planes per doubling keeps the expected candidates per vector flat.
+    Capped at 62 so the bucket id stays a positive long."""
+    doublings = ((max(corpus.count(), 1) - 1) // LSH_BASE_ROWS).bit_length()
+    return min(62, 8 + 2 * doublings)
+
+
+def lsh_bucket(vec: F.Column | str, dim: int, n_planes: int) -> F.Column:
     """Sign-pattern bucket id in [0, 2^n_planes).
 
     ``vec`` as a SQL column reference (str) takes the fast path: the
@@ -339,14 +356,12 @@ def kmeans_inertia(corpus: DataFrame, centroids: DataFrame) -> float:
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    centroid_stride: int = 125,
     nprobe: int = 4,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k: partition the corpus into inverted lists by
-    nearest centroid (deterministic centroid seed: every
-    ``centroid_stride``-th vector by id), probe each query against its
+    """IVF approximate top-10: partition the corpus into inverted lists by
+    nearest centroid (deterministic centroid seed: every 125th vector by
+    id), probe each query against its
     ``nprobe`` nearest lists only, exact-rank the candidates.
 
     The scale shape: assignment is map-only (see ivf_assign); the probe
@@ -355,7 +370,7 @@ def ivf_topk(
     cent = (
         centroids
         if centroids is not None
-        else corpus.filter(F.col("vec_id") % centroid_stride == 0).select(
+        else corpus.filter(F.col("vec_id") % 125 == 0).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
         )
     )
@@ -386,73 +401,67 @@ def ivf_topk(
     # lists a plain per-query window funnels every candidate of a query
     # into one task — the exact skew wall the brute-force path was
     # hardened against; result identical (exact top-k, tie-free order)
-    return salted_topk(scored, ("query_id",), "cos", "vec_id", k).select(
+    return salted_topk(scored, ("query_id",), "cos", "vec_id", 10).select(
         "query_id", "vec_id", "cos", "rank"
     )
 
 
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    probe_radius: int = 1,
-) -> DataFrame:
-    """Approximate top-k: candidates = corpus vectors whose bucket is
-    within ``probe_radius`` sign-flips of the query's bucket (multi-probe
-    LSH), then exact-rank the candidates."""
+def lsh_ann_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-10: candidates = corpus vectors whose
+    ``ANN_PLANES``-bit bucket is within ``ANN_PROBE_RADIUS`` sign-flips
+    of the query's bucket (multi-probe LSH), then exact-rank the
+    candidates."""
     c = balance(corpus.select(F.col("vec_id"), F.col("embedding").alias("c_vec"))).select(
         "vec_id",
         "c_vec",
-        lsh_bucket("c_vec", 64, n_planes).alias("c_bucket"),
+        lsh_bucket("c_vec", 64, ANN_PLANES).alias("c_bucket"),
     )
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
-        lsh_bucket("embedding", 64, n_planes).alias("q_bucket"),
+        lsh_bucket("embedding", 64, ANN_PLANES).alias("q_bucket"),
     )
     cand = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .filter(
-            hamming(F.col("c_bucket"), F.col("q_bucket")) <= probe_radius
+            hamming(F.col("c_bucket"), F.col("q_bucket")) <= ANN_PROBE_RADIUS
         )
         .withColumn("cos", round_half_up(cosine("q_vec", "c_vec"), 6))
     )
     # salted ranking: the bucket ring admits a fixed fraction of the
     # corpus per query, so the per-query candidate set scales with the
     # corpus — rank it with bounded per-task fan-in (see cosine_topk)
-    return salted_topk(cand, ("query_id",), "cos", "vec_id", k).select(
+    return salted_topk(cand, ("query_id",), "cos", "vec_id", 10).select(
         "query_id", "vec_id", "cos", "rank"
     )
 
 
-def pq_codebook(
-    corpus: DataFrame,
-    m: int = 4,
-    dim: int = 64,
-    stride: int = 32,
-) -> DataFrame:
-    """Deterministic product-quantization codebook: split the dim-`dim`
-    space into ``m`` contiguous subspaces and take every ``stride``-th
-    corpus vector's subvectors as the codewords (the same RNG-free
-    seeding rule as IVF's stride centroids, so the oracle can replay
-    codeword identity exactly; a Lloyd polish per subspace would slot in
-    like kmeans_refine but is deliberately omitted from the gated path).
+# product quantization: subspaces, dimensions, codebook seed stride,
+# and the ADC candidates reranked by exact cosine
+PQ_M, PQ_DIM, PQ_STRIDE = 4, 64, 32
+PQ_RERANK = 32
+
+
+def pq_codebook(corpus: DataFrame) -> DataFrame:
+    """Deterministic product-quantization codebook: split the
+    ``PQ_DIM``-dim space into ``PQ_M`` contiguous subspaces and take
+    every ``PQ_STRIDE``-th corpus vector's subvectors as the codewords
+    (the same RNG-free seeding rule as IVF's stride centroids, so the
+    oracle can replay codeword identity exactly; a Lloyd polish per
+    subspace would slot in like kmeans_refine but is deliberately
+    omitted from the gated path).
 
     Returns ONE row {cb: array<struct<s,j,cw>>} sorted by (s, j) —
     m x K codewords of dim/m doubles, a few hundred KB at production K,
     broadcast to every task.
 
-    K = |corpus| / stride, so a FIXED stride is only right at fixed
-    corpus size (this suite's case). Production holds K constant
-    (classically 256, one byte per code) by scaling stride with the
-    corpus — the same bounded-parameter policy as the LSH soak's
-    scaled plane count; encode cost is then O(N * K * dim), linear in
-    the corpus, never O(N^2 / stride)."""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
+    K = |corpus| / PQ_STRIDE grows with the corpus, so encode cost is
+    O(N^2 / PQ_STRIDE): right at this suite's sizes only. Holding K
+    constant (classically 256, one byte per code) would need a stride
+    that grows with the corpus; encode cost is then O(N * K * dim),
+    linear in the corpus."""
+    m, stride, sub = PQ_M, PQ_STRIDE, PQ_DIM // PQ_M
     # j MUST be the codeword's dense 0-based rank, not id/stride: the
     # ADC scan looks codewords up by POSITION in the (s, j)-sorted
     # lookup arrays, so gaps in the id space (ids not starting at 0, or
@@ -461,8 +470,8 @@ def pq_codebook(
     # strictly increasing map from id/stride, so argmin tie-breaking
     # (lowest j) picks the same codeword either way and the value-keyed
     # oracle join is unaffected. The global window ranks only the K
-    # seed rows (K held constant at production scale — see below), the
-    # same bounded-window pattern as the vocab top-100 ranking.
+    # seed rows, the same bounded-window pattern as the vocab top-100
+    # ranking.
     w_seed = Window.orderBy(F.col("vec_id"))
     cw = (
         corpus.filter(F.col("vec_id") % stride == 0)
@@ -487,32 +496,24 @@ def pq_codebook(
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    dim: int = 64,
-    stride: int = 32,
-    rerank: int = 32,
-) -> DataFrame:
-    """Product-quantization ANN (IVF-PQ's scoring half): encode every
-    corpus vector as ``m`` codeword ids (its compressed representation —
+def pq_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Product-quantization ANN top-10 (IVF-PQ's scoring half): encode
+    every corpus vector as ``PQ_M`` codeword ids (its compressed representation —
     m bytes/vector at K<=256 instead of 4*dim, the asymmetric-distance
     trick of Jegou et al.'s PQ paper), score candidates by ADC table
-    lookups only, then exact-cosine rerank the top ``rerank``.
+    lookups only, then exact-cosine rerank the top ``PQ_RERANK``.
 
     Scale shape: encoding is one map-only pass against the broadcast
     codebook (argmin fold per subspace, ties to the lowest codeword id);
     the ADC scan touches ONLY the m-byte codes plus a broadcast
     per-query lookup table (m x K partial dot products) — the full
-    vectors are read again just for the |queries| x rerank survivors,
+    vectors are read again just for the |queries| x PQ_RERANK survivors,
     fetched by a broadcast semi-join. No shuffle anywhere except the
     bounded salted ranking. FP determinism: subspace partials are
     looked up in subspace order and left-folded from 0.0, matching the
     oracle's fixed-order sum, so ADC scores are bit-identical."""
-    sub = dim // m
-    cb_row = pq_codebook(corpus, m, dim, stride)
+    m, dim, sub = PQ_M, PQ_DIM, PQ_DIM // PQ_M
+    cb_row = pq_codebook(corpus)
 
     # m and sub are PYTHON constants, so the inner distance/dot loops
     # unroll into flat expression trees instead of nested HOF lambdas
@@ -616,11 +617,11 @@ def pq_topk(
             "query_id", "vec_id", round_half_up(approx, 6).alias("approx")
         )
     )
-    cand = salted_topk(adc, ("query_id",), "approx", "vec_id", rerank).select(
+    cand = salted_topk(adc, ("query_id",), "approx", "vec_id", PQ_RERANK).select(
         "query_id", "vec_id"
     )
 
-    # rerank: fetch full vectors for the |queries| x rerank survivors
+    # rerank: fetch full vectors for the |queries| x PQ_RERANK survivors
     scored = (
         corpus.select(F.col("vec_id"), F.col("embedding").alias("c_vec"))
         .join(F.broadcast(cand), "vec_id")
@@ -630,6 +631,6 @@ def pq_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .select("query_id", "vec_id", "cos", F.col("rank").cast("int").alias("rank"))
     )

@@ -160,14 +160,12 @@ def validation_panel(checks: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), checks)
 
 
-def k_anonymity(
-    df: DataFrame, quasi_cols: tuple[str, ...], k: int = 10
-) -> DataFrame:
+def k_anonymity(df: DataFrame, quasi_cols: tuple[str, ...]) -> DataFrame:
     """Re-identification risk audit — the governance gate a training
     corpus with user-linked metadata needs before release: every
     combination of quasi-identifier values (the columns an adversary
     could join against an external dataset) must be shared by at least
-    ``k`` rows, or the rows in that class are re-identifiable. The
+    k = 10 rows, or the rows in that class are re-identifiable. The
     standard k-anonymity report, as one aggregate:
 
       * ``n_classes``: distinct quasi-identifier combinations,
@@ -184,8 +182,7 @@ def k_anonymity(
     """
     if not quasi_cols:
         raise ValueError("k_anonymity needs at least one quasi column")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
+    k = 10
     sizes = df.groupBy(*quasi_cols).agg(F.count(F.lit(1)).alias("_n"))
     return sizes.agg(
         F.count(F.lit(1)).alias("n_classes"),
@@ -200,14 +197,12 @@ def k_anonymity(
 def l_diversity(
     df: DataFrame,
     quasi_cols: tuple[str, ...],
-    sensitive_col: str,
-    l: int = 2,  # noqa: E741 - the metric's canonical name
 ) -> DataFrame:
     """k-anonymity's companion audit: a class can be large (k-anonymous)
     yet still leak if every member shares the same SENSITIVE value —
     the adversary learns the attribute without identifying the row.
     l-diversity requires every quasi-identifier class to contain at
-    least ``l`` distinct sensitive values. Same leak-free report shape
+    least l = 2 distinct sensitive ``lang`` values. Same leak-free report shape
     as :func:`k_anonymity`: (n_classes, min_distinct_sensitive,
     n_below_l) — classes themselves are never emitted. NULL sensitive
     values count as a value (the absence of the attribute is itself
@@ -215,18 +210,16 @@ def l_diversity(
     """
     if not quasi_cols:
         raise ValueError("l_diversity needs at least one quasi column")
-    if l < 1:
-        raise ValueError(f"l must be >= 1, got {l}")
     # count_distinct skips NULLs; the +max(is-null) term restores the
     # NULL sensitive value as a countable class member
     per = df.groupBy(*quasi_cols).agg(
         (
-            F.count_distinct(F.col(sensitive_col))
-            + F.max(F.col(sensitive_col).isNull().cast("long"))
+            F.count_distinct(F.col("lang"))
+            + F.max(F.col("lang").isNull().cast("long"))
         ).alias("_l")
     )
     return per.agg(
         F.count(F.lit(1)).alias("n_classes"),
         F.min("_l").alias("min_distinct_sensitive"),
-        F.sum((F.col("_l") < l).cast("long")).alias("n_below_l"),
+        F.sum((F.col("_l") < 2).cast("long")).alias("n_below_l"),
     )

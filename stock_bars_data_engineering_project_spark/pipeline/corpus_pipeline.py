@@ -149,7 +149,7 @@ def prepare_corpus(
     clusters = dedup_clusters(minhash_lsh_pairs(deduped))
     if keeper == "quality":
         near_drops = canonical_selection(
-            clusters, deduped, quality_col="n_chars"
+            clusters, deduped
         ).filter(~F.col("keep")).select("doc_id")
     elif keeper == "first":
         near_drops = clusters.filter(
@@ -192,7 +192,7 @@ def prepare_corpus(
         # text. Two consumers of `corpus` (gram counting + the join
         # back), so checkpoint + explicit count like the other funnel
         # stages.
-        clean = boilerplate_scrub(corpus, k=3, df_cap=boilerplate_df_cap).select(
+        clean = boilerplate_scrub(corpus, df_cap=boilerplate_df_cap).select(
             "doc_id", F.col("clean_text").alias("_clean")
         )
         corpus = (

@@ -76,7 +76,6 @@ SELECT md5(text) AS content_md5,
 FROM documents
 GROUP BY md5(text)
 """,
-    tags=("dedup",),
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash: one hash-aggregate shuffle on
@@ -160,7 +159,6 @@ FROM (
 )
 WHERE jaccard >= 0.7
 """,
-    tags=("dedup", "lsh"),
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16 sigs) + LSH(4 bands) candidate pairs, exact-Jaccard
@@ -200,7 +198,6 @@ FROM fz_blk a JOIN fz_blk b ON a.blk = b.blk AND a.doc_id < b.doc_id
 WHERE abs(length(a.name) - length(b.name)) <= 2
   AND levenshtein(a.name, b.name) <= 2
 """,
-    tags=("dedup", "fuzzy"),
 )
 def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two blocked pairwise-matching surfaces as tagged arms:
@@ -241,7 +238,7 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("nm"))
     )
     ent = base.select("doc_id", name.alias("name"))
-    fuzzy = fuzzy_dedup_pairs(ent, "doc_id", "name", max_dist=2).select(
+    fuzzy = fuzzy_dedup_pairs(ent, "doc_id").select(
         F.lit("fuzzy").alias("variant"),
         F.col("id_a").alias("doc_a"),
         F.col("id_b").alias("doc_b"),
@@ -336,7 +333,6 @@ SELECT r.doc_id, r.cluster_id, r.n_chars,
        p.pr AS pr
 FROM ranked r JOIN pr_3 p ON r.doc_id = p.node
 """,
-    tags=("dedup", "clusters", "canonical"),
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters + the cluster-level dedup endgame: MinHash-LSH
@@ -377,7 +373,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = canonical_selection(clusters, docs).withColumn(
         "keep", F.col("keep").cast("int")
     )
-    pr = pagerank(pairs, n_iter=3)
+    pr = pagerank(pairs)
     return base.join(
         pr.select(F.col("node").alias("doc_id"), "pr"), "doc_id"
     )
@@ -560,7 +556,6 @@ FROM (
     FROM sl GROUP BY user_id, sid
 )
 """,
-    tags=("sequence", "agg", "funnel", "sessions"),
 )
 def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered per-entity history construction (the behavioral-sequence
@@ -1103,16 +1098,6 @@ FROM (
 )
 WHERE rank <= 30
 """,
-    tags=(
-        "text",
-        "tfidf",
-        "vocab",
-        "surprisal",
-        "bigram_lm",
-        "classifier",
-        "bpe",
-        "training",
-    ),
 )
 def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term-statistics suite in one result: (a) per-document top-3 terms
@@ -1296,7 +1281,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wordcount pass serves three arms); n_bigrams rides the rank
     # column so the per-doc pair count is gated too.
     bigram_lm_arm = bigram_surprisal(
-        docs, min_count=2, unigram_counts=counts
+        docs, unigram_counts=counts
     ).select(
         F.lit("bigram_lm").alias("tag"),
         "doc_id",
@@ -1316,7 +1301,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.lm_state import lm_state
 
     # (lm_wh resolved in the build-artifact pool above)
-    lm_uni, lm_bi = lm_state(lm_wh, min_count=2)
+    lm_uni, lm_bi = lm_state(lm_wh)
     lm_state_arm = bigram_surprisal(
         docs, unigram_counts=lm_uni, bigram_counts=lm_bi
     ).select(
@@ -1433,7 +1418,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 30-row ranking window — the vocab_arm discipline.
     from ..operators.quality import pmi_collocations
 
-    pmis = pmi_collocations(docs, min_count=5, unigram_counts=counts)
+    pmis = pmi_collocations(docs, unigram_counts=counts)
     wp = Window.orderBy(F.col("score").desc(), "prev", "cur")
     pmi_arm = (
         pmis.select(
@@ -1497,7 +1482,7 @@ def _classifier_train_laws(spark, sf_dir: str, docs) -> list[tuple[str, float]]:
         d = docs.select("doc_id", "text", label.alias("label"))
         stats: dict = {}
         weights = train_quality_classifier(
-            d, "label", n_iters=8, lr=16.0, stats=stats
+            d, "label", stats=stats
         )
         losses = stats["loss"]
         sep = (
@@ -1570,7 +1555,6 @@ SELECT 'stream' AS variant, user_id, event_id, ts, value,
        {sql_round('ema_raw', 6)} AS ema
 FROM sexpanded
 """,
-    tags=("window", "ema", "pandas-udf", "streaming"),
 )
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key exponential moving average (alpha=0.1) — recursive state
@@ -1591,7 +1575,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stream ≡ batch across arbitrary in-wave micro-batching stays
     pinned in tests/test_streaming.py."""
     events = load_table(spark, sf_dir, "events")
-    out = ewma_per_key(events, alpha=0.1)
+    out = ewma_per_key(events)
     batch_arm = out.withColumn("ema", round_half_up(F.col("ema"), 6)).select(
         F.lit("batch").alias("variant"), "user_id", "event_id", "ts", "value", "ema"
     )
@@ -1613,7 +1597,7 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     def drain() -> None:
         q = (
             ewma_stream(
-                spark.readStream.schema(sub.schema).parquet(src), alpha=0.1
+                spark.readStream.schema(sub.schema).parquet(src)
             )
             .writeStream.format("parquet")
             .option("path", outp)
@@ -1798,7 +1782,6 @@ FROM btoks t LEFT JOIN (
     SELECT doc_id, list(p) AS ps FROM escov GROUP BY doc_id
 ) c USING (doc_id)
 """,
-    tags=("text", "contamination", "boilerplate", "paragraphs"),
 )
 def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-cleaning suite, tagged arms:
@@ -1827,7 +1810,7 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
-    overlap_arm = contamination_overlap(corpus, benchmark, k=3).select(
+    overlap_arm = contamination_overlap(corpus, benchmark).select(
         F.lit("overlap").alias("tag"),
         "doc_id",
         F.col("n_shingles").cast("bigint").alias("n_tokens"),
@@ -1835,7 +1818,7 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("contamination").alias("ratio"),
         F.lit(None).cast("string").alias("payload"),
     )
-    scrub_arm = boilerplate_scrub(docs, k=3, df_cap=5).select(
+    scrub_arm = boilerplate_scrub(docs, df_cap=5).select(
         F.lit("boilerplate").alias("tag"),
         "doc_id",
         "n_tokens",
@@ -1874,7 +1857,7 @@ def q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ratio"),
         F.col("clean_text").alias("payload"),
     )
-    es_arm = exact_substr_scrub(docs, k=8).select(
+    es_arm = exact_substr_scrub(docs).select(
         F.lit("exact_substr").alias("tag"),
         "doc_id",
         "n_tokens",
@@ -1918,7 +1901,6 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """,
-    tags=("dedup", "hash"),
 )
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (hamming <= 3), blocked on 4 x 15-bit
@@ -1967,6 +1949,8 @@ def _lsh_bucket_sql(vec_expr: str, dim: int, n_planes: int) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
+# 8 planes: similarity.lsh_planes of every test scale's embeddings
+# (at most 2,000 rows, below LSH_BASE_ROWS)
 @register(
     "dedup_embedding_pairs",
     oracle=f"""
@@ -2041,7 +2025,6 @@ FROM (
     )
 ) WHERE rn = 1
 """,
-    tags=("dedup", "embedding", "semdedup", "contamination"),
 )
 def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (>= 0.4), BOTH blocking
@@ -2083,10 +2066,10 @@ def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    lsh_arm = embedding_dup_pairs_blocked(emb, dim=64, n_planes=8).select(
+    lsh_arm = embedding_dup_pairs_blocked(emb).select(
         F.lit("lsh").alias("variant"), "id_a", "id_b", "cos"
     )
-    sem_arm = semantic_dup_pairs(emb, threshold=0.4, centroid_stride=125).select(
+    sem_arm = semantic_dup_pairs(emb, threshold=0.4).select(
         F.lit("semdedup").alias("variant"),
         F.col("doc_a").alias("id_a"),
         F.col("doc_b").alias("id_b"),
@@ -2094,14 +2077,14 @@ def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = emb.filter(F.col("vec_id") % 20 != 0)
     ev = emb.filter(F.col("vec_id") % 20 == 0)
-    dex_arm = semantic_decontaminate(train, ev, threshold=0.4).select(
+    dex_arm = semantic_decontaminate(train, ev).select(
         F.lit("decontam_exact").alias("variant"),
         F.col("vec_id").alias("id_a"),
         F.col("near_eval_id").alias("id_b"),
         "cos",
     )
     dbl_arm = semantic_decontaminate_blocked(
-        train, ev, threshold=0.4, dim=64, n_planes=8, hamming=2
+        train, ev
     ).select(
         F.lit("decontam_blocked").alias("variant"),
         F.col("vec_id").alias("id_a"),
@@ -2132,7 +2115,6 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 """,
-    tags=("agg", "stats"),
 )
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-slice dataset statistics (count, distinct entities, mean,
@@ -2474,7 +2456,6 @@ WHERE rank <= 5
 """
     + _PIPE_ARM_SQL
     + _REFRESH_ARM_SQL,
-    tags=("sampling", "mixture", "tokens", "shuffle", "curriculum"),
 )
 def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic sampling family in one tagged result, all
@@ -2527,8 +2508,6 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     strat_arm = stratified_sample(
         docs,
         rates={"src0": 1.0, "src1": 0.5, "src2": 0.1},
-        stratum_col="source",
-        id_col="doc_id",
         default_rate=0.25,
     ).select(F.lit("stratified").alias("tag"), "doc_id", F.col("source").alias("label"))
     budget_arm = token_budget_sample(
@@ -2537,7 +2516,7 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tokens=token_count("text"),
         default_budget=1_000,
     ).select(F.lit("budget").alias("tag"), "doc_id", F.col("source").alias("label"))
-    shard_arm = shuffle_shards(docs, id_col="doc_id", n_shards=16, seed="ep0").select(
+    shard_arm = shuffle_shards(docs, n_shards=16, seed="ep0").select(
         F.lit("shard").alias("tag"),
         "doc_id",
         F.concat(
@@ -2545,8 +2524,7 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("label"),
     )
     alpha_arm = alpha_mixture_sample(
-        docs, alpha=0.5, stratum_col="source", id_col="doc_id",
-        size=token_count("text"),
+        docs, alpha=0.5, size=token_count("text")
     ).select(F.lit("alpha").alias("tag"), "doc_id", F.col("source").alias("label"))
     curr_arm = curriculum_phases(
         docs, size=F.size(F.split(F.col("text"), " "))
@@ -2564,9 +2542,6 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     wf_arm = walk_forward_days(
         ev_wf,
         day_idx=F.floor(event_micros(ev_wf, "ts") / F.lit(86400000000.0)),
-        n_folds=3,
-        test_days=5,
-        embargo_days=2,
     ).select(
         F.lit("walkforward").alias("tag"),
         F.col("day_idx").alias("doc_id"),
@@ -2716,7 +2691,6 @@ SELECT l.event_id, l.user_id, l.ts, l.value, r.mark_ts, r.mark_value
 FROM lefts l
 ASOF LEFT JOIN marks r ON l.user_id = r.user_id AND l.ts >= r.mark_ts
 """,
-    tags=("join", "asof"),
 )
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward-inclusive as-of join: every purchase event picks up the
@@ -2731,7 +2705,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lefts = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
-    return asof_join(lefts, marks, on="ts", right_on="mark_ts", by=("user_id",))
+    return asof_join(lefts, marks, right_on="mark_ts")
 
 
 @register(
@@ -2753,7 +2727,6 @@ FROM p JOIN w ON p.user_id = w.user_id
              AND p.ts >= w.window_lo AND p.ts <= w.window_hi
 GROUP BY 1, 2
 """,
-    tags=("join", "range"),
 )
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join via temporal bucketization: purchases matched into
@@ -2773,8 +2746,8 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "value"
     )
     matched = range_join(
-        purchases, windows, on="ts", lo="window_lo", hi="window_hi",
-        by=("user_id",), bucket_seconds=3600,
+        purchases, windows, lo="window_lo", hi="window_hi",
+        by=("user_id",),
     )
     return matched.groupBy("user_id", "window_lo").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2806,7 +2779,7 @@ def _ann_trained_laws(spark, sf_dir: str, emb, queries, brute) -> list[float]:
         c2 = kmeans_refine(emb, seed, n_iters=2, stats=s_train)
         i0, i1 = s_train["inertia_in"]
         i2 = kmeans_inertia(emb, c2)
-        trained = materialize(ivf_topk(emb, queries, k=10, centroids=c2))
+        trained = materialize(ivf_topk(emb, queries, centroids=c2))
 
         n_lists = seed.count()
         nprobe = 4
@@ -3328,7 +3301,6 @@ SELECT 'trained_laws' AS variant, CAST(-1 AS BIGINT) AS query_id,
        CAST(0 AS INT) AS rank
 FROM range(1, {len(ANN_TRAINED_LAWS) + 1}) t(n)
 """,
-    tags=("similarity", "ivf", "kmeans", "lsh"),
 )
 def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole ANN family as one variant-tagged row (consolidated from
@@ -3472,9 +3444,9 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     mrl_arm = cosine_topk(_trunc(emb), _trunc(queries), k=10).withColumn(
         "rank", F.col("rank").cast("int")
     )
-    stride = ivf_topk(emb, queries, k=10, centroid_stride=125, nprobe=4)
-    pq = pq_topk(emb, queries, k=10, m=4, dim=64, stride=32, rerank=32)
-    lsh = lsh_ann_topk(emb, queries, k=10, n_planes=5, probe_radius=2)
+    stride = ivf_topk(emb, queries)
+    pq = pq_topk(emb, queries)
+    lsh = lsh_ann_topk(emb, queries)
 
     # incremental arm: persisted-index maintenance chain — build on the
     # even-id slice (whose stride-100 sample IS the full corpus's: every
@@ -3501,7 +3473,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replays md5-for-md5, anti-join included)
     from ..operators.contrastive import contrastive_pairs
 
-    contr = contrastive_pairs(emb, queries, n_pos=3, n_hard=2, n_rand=2).select(
+    contr = contrastive_pairs(emb, queries).select(
         F.concat(F.lit("contrastive_"), F.col("role")).alias("variant"),
         F.col("anchor_id").alias("query_id"),
         F.col("other_id").alias("vec_id"),
@@ -3727,7 +3699,6 @@ FROM (
     )
 )
 """,
-    tags=("text", "quality", "hash"),
 )
 def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document text-analysis panel in ONE map-only pass: token
@@ -3840,7 +3811,6 @@ FROM (
     FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
 )
 """,
-    tags=("text", "packing", "chunking"),
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-prep suite over documents, tag-unioned:
@@ -3960,7 +3930,6 @@ FROM documents d
 JOIN ph ON ph.doc_id = d.doc_id
 LEFT JOIN partners ON partners.doc_id = d.doc_id
 """,
-    tags=("multimodal", "phash", "dedup"),
 )
 def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-binary column plumbing + perceptual-hash image dedup
@@ -4007,7 +3976,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     amp = float(_WAV_AMP)
     target_rms = amp / math.sqrt(2.0)
-    wav_cols = audio_metrics(attach_wav_payload(d), id_col="doc_id").select(
+    wav_cols = audio_metrics(attach_wav_payload(d)).select(
         "doc_id",
         "wav_samples",
         F.when(
@@ -4033,7 +4002,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. operators.multimodal import sample_frames
 
     frame_cols = (
-        sample_frames(media, n_frames=4)
+        sample_frames(media)
         .groupBy(F.col("media_id").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("frame_n"),
@@ -4046,7 +4015,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hashed = perceptual_hashes(media, pixels_fn=fake_gray8x8)
-    pairs = phash_dup_pairs(hashed, max_hamming=3)
+    pairs = phash_dup_pairs(hashed)
     partners = (
         pairs.select(F.col("id_a").alias("doc_id"), F.col("id_b").alias("partner"))
         .unionByName(
@@ -4216,7 +4185,6 @@ FROM (SELECT doc_id AS qid, substr(text, 11, 12) AS pat
 JOIN documents c ON c.doc_id >= 25 AND c.doc_id % 10 != 3
                 AND contains(c.text, p.pat)
 """,
-    tags=("retrieval", "text", "topk", "index", "hybrid", "prf", "trgm"),
 )
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 retrieval, two arms sharing one oracle ranking:
@@ -4319,7 +4287,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # CONCURRENTLY with the doc-terms stages, where a standalone
         # eager materialize serialized a whole extra job of it on the
         # driver.
-        lex = materialize(bm25_topk(corpus, queries, k=10))
+        lex = materialize(bm25_topk(corpus, queries))
         # PRF (docstring below): the expansion is materialized because
         # bm25_query's probe-bucket collect forces the expansion
         # lineage once at build time and the final union action would
@@ -4331,12 +4299,12 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         wh = _bm25_index(spark, sf_dir, corpus)
-        prf = _round(bm25_query(wh, expanded, table="bm25_idx", k=10), "prf")
+        prf = _round(bm25_query(wh, expanded, table="bm25_idx"), "prf")
         return lex, prf
 
     def _index_chain():
         wh = _bm25_index(spark, sf_dir, corpus)
-        return _round(bm25_query(wh, queries, table="bm25_idx", k=10), "index")
+        return _round(bm25_query(wh, queries, table="bm25_idx"), "index")
 
     def _trgm_chain():
         return trgm_query(
@@ -4357,7 +4325,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 25),
         k=10,
     ).select("query_id", F.col("vec_id").alias("doc_id"), "rank")
-    fused = rrf_fuse([lex.select("query_id", "doc_id", "rank"), sem], k=10)
+    fused = rrf_fuse([lex.select("query_id", "doc_id", "rank"), sem])
     rrf = fused.select(
         F.lit("rrf").alias("variant"),
         "query_id",

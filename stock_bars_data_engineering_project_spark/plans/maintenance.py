@@ -65,7 +65,6 @@ JOIN ranked o ON o.user_id = a.user_id AND o.day = a.day AND o.rn_open = 1
 JOIN ranked c ON c.user_id = a.user_id AND c.day = a.day AND c.rn_close = 1
 CROSS JOIN (SELECT unnest(['batch', 'stream']) AS variant) v
 """,
-    tags=("rollup", "incremental"),
 )
 def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rollup maintenance (operators/rollup.py): the events
@@ -133,10 +132,10 @@ def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    state = rollup_increment(batches[0], keys=("user_id",), distinct_col="event_id")
+    state = rollup_increment(batches[0], distinct_col="event_id")
     for b in batches[1:]:
         state = merge_rollups(
-            state, rollup_increment(b, keys=("user_id",), distinct_col="event_id")
+            state, rollup_increment(b, distinct_col="event_id")
         )
     batch_arm = _project(rollup_metrics(state), "batch")
 
@@ -151,13 +150,11 @@ def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(wh.root, "_ckpt")
     ev.filter(F.col("event_id") % 3 != 2).write.mode("append").parquet(src)
     rollup_maintenance_stream(
-        spark, src, ev.schema, wh, "roll",
-        keys=("user_id",), checkpoint_dir=ckpt, distinct_col="event_id",
+        spark, src, ev.schema, wh, "roll", checkpoint_dir=ckpt, distinct_col="event_id",
     )
     ev.filter(F.col("event_id") % 3 == 2).write.mode("append").parquet(src)
     rollup_maintenance_stream(
-        spark, src, ev.schema, wh, "roll",
-        keys=("user_id",), checkpoint_dir=ckpt, distinct_col="event_id",
+        spark, src, ev.schema, wh, "roll", checkpoint_dir=ckpt, distinct_col="event_id",
     )
     stream_arm = _project(
         rollup_metrics(read_rollup_state(wh, "roll")), "stream"
@@ -218,7 +215,6 @@ WHERE c.cluster_id IS NULL OR c.cluster_id = e.doc_id
 @register(
     "incremental_dedup_two_batch",
     oracle=_INC_DEDUP_ORACLE,
-    tags=("dedup", "incremental"),
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental band-index ingestion ≡ full-corpus dedup
@@ -301,7 +297,6 @@ SELECT CAST(i AS INT), m, 1.0
 FROM (SELECT unnest(range(0, {_PCA_K})) AS i)
 CROSS JOIN (SELECT unnest({list(_PCA_LAW_METRICS)}) AS m)
 """,
-    tags=("pca", "embeddings"),
 )
 def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed PCA gate (operators/pca.py). The eigensolve is a
@@ -538,7 +533,6 @@ FROM (
     WHERE s.k IS NULL OR s.status <> f.status OR s.price <> f.price
 )
 """,
-    tags=("warehouse", "cdc", "versioning"),
 )
 def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-feed over the versioned parquet warehouse
@@ -569,8 +563,8 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
       version-pinned eagerly at ``changes()`` time (reads resolve
       member dirs immediately), so the later pointer flip cannot
       retroactively change it.
-    - `vacuum_law`: ``vacuum(keep_last=2)`` with the pointer parked on
-      v1 — reference-aware retention must keep the restored-to version
+    - `vacuum_law`: ``vacuum`` (keeps the last 2) with the pointer
+      parked on v1 — reference-aware retention must keep the restored-to version
       (it is the pointer target, not among the newest two) and the
       table must still read back exactly state1's rows afterwards; the
       flag row collapses to the oracle's literal 1.0.
@@ -617,7 +611,7 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference-aware vacuum: with the pointer parked on v1 (NOT among
     # the newest two versions), retention must keep it and the table
     # must still read exactly state1 afterwards
-    wh.vacuum("t", keep_last=2)
+    wh.vacuum("t")
     n_state1 = state1.count()
     vacuum_ok = float(
         v1 in wh.versions("t") and wh.read("t").count() == n_state1
@@ -669,7 +663,6 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_dedup_ingest",
     oracle=_INC_DEDUP_ORACLE,
-    tags=("dedup", "incremental", "streaming"),
 )
 def q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of ``incremental_dedup_two_batch``

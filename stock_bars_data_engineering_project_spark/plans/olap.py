@@ -30,7 +30,6 @@ SELECT o_orderstatus, o_orderpriority,
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """,
-    tags=("agg", "cube"),
 )
 def cube_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two dimensions with GROUPING() disambiguation — all four
@@ -377,7 +376,6 @@ FROM (
     SELECT 'n_below_l', n_below_l FROM lrep
 )
 """,
-    tags=("agg", "stats", "corr", "histogram"),
 )
 def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The statistics family as one long-format (tag, group_key, metric,
@@ -604,7 +602,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cardinality before joining.
     from ..operators.funnel import cohort_retention
 
-    cohort_arm = cohort_retention(ev, max_offset=7).select(
+    cohort_arm = cohort_retention(ev).select(
         F.lit("cohort").alias("tag"),
         F.col("cohort_day").cast("string").alias("group_key"),
         F.concat(F.lit("d"), F.col("offset").cast("string")).alias(
@@ -623,7 +621,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     day_idx = F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
     psi_arm = (
-        psi_drift(ev, "value", is_reference=day_idx % 2 == 0)
+        psi_drift(ev, is_reference=day_idx % 2 == 0)
         .select(
             "event_type",
             "psi",
@@ -686,7 +684,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..memo import run_chains
     from ..operators.drift import mad_outliers
 
-    out_stats = mad_outliers(ev, "value", keys=("event_type",))
+    out_stats = mad_outliers(ev, keys=("event_type",))
     fence = out_stats.select(
         F.col("event_type").alias("_fet"), "median", "mad"
     )
@@ -729,7 +727,6 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         psi_vs_reference(
             spark.table("stats_psi_stream"),
             ref_counts,
-            ref_keys=("event_type",),
             window_cols=("day_idx",),
         )
         .select(
@@ -829,7 +826,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gov_docs = load_table(spark, sf_dir, "documents")
     ldiv_arm = (
-        l_diversity(gov_docs, ("source",), "lang", l=2)
+        l_diversity(gov_docs, ("source",))
         .select(
             F.col("n_classes").cast("double").alias("l_n_classes"),
             F.col("min_distinct_sensitive")
@@ -851,7 +848,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     kanon_arm = (
-        k_anonymity(gov_docs, ("source", "lang"), k=10)
+        k_anonymity(gov_docs, ("source", "lang"))
         .select(
             F.col("n_classes").cast("double").alias("n_classes"),
             F.col("min_class_size").cast("double").alias("min_class_size"),
@@ -921,7 +918,6 @@ WINDOW wr AS (PARTITION BY user_id ORDER BY value DESC, event_id),
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
        wu AS (PARTITION BY user_id)
 """,
-    tags=("window", "rank", "range", "anchors", "anomaly"),
 )
 def window_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The window-function menu beyond the reference's lag/avg/stddev,
@@ -1020,7 +1016,6 @@ SELECT 'gapfilled' AS variant, user_id, day,
 FROM filled
 WHERE n_ticks IS NULL
 """,
-    tags=("agg", "resample", "ohlc", "gapfill"),
 )
 def resample_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tick-to-bar resampling — the inverse of the reference's pipeline
@@ -1050,7 +1045,7 @@ def resample_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_half_up(F.max_by("value", tie), 4).alias("close_v"),
         F.count(F.lit(1)).alias("n_ticks"),
     )
-    gaps = calendar_fill(bars, "user_id", "day", carry=("close_v",))
+    gaps = calendar_fill(bars, "user_id", carry=("close_v",))
     gap_arm = gaps.select(
         F.lit("gapfilled").alias("variant"),
         "user_id",
@@ -1085,7 +1080,6 @@ SELECT COALESCE(y99.o_custkey, y00.o_custkey) AS custkey,
        COALESCE(y00.n00, 0) - COALESCE(y99.n99, 0) AS delta
 FROM y99 FULL OUTER JOIN y00 ON y99.o_custkey = y00.o_custkey
 """,
-    tags=("join", "outer"),
 )
 def full_outer_year_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-outer reconciliation: per-customer order counts across two
@@ -1138,7 +1132,6 @@ FROM orders o
 JOIN customer c ON c.c_custkey = o.o_custkey
 GROUP BY c.c_mktsegment
 """,
-    tags=("agg", "pivot"),
 )
 def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide reshape: order status pivoted into columns per market
@@ -1188,7 +1181,6 @@ SELECT l_orderkey, l_linenumber, 'discount' AS metric,
        {sql_round('l_discount', 4)} AS val
 FROM lineitem
 """,
-    tags=("reshape", "unpivot"),
 )
 def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-to-long reshape (the inverse of pivot_status_by_segment):

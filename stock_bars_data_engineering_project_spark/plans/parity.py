@@ -55,7 +55,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN 4 PRECEDING AND CURRE
 """
 
 
-@register("flagship_analysis", oracle=_FLAGSHIP_ORACLE, tags=("window", "flagship"))
+@register("flagship_analysis", oracle=_FLAGSHIP_ORACLE)
 def flagship_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key lag -> guarded rounded return -> 5-row moving avg/stddev;
     the whole reference analytical query as one composable operator
@@ -86,7 +86,6 @@ FROM lineitem l
 INNER JOIN (SELECT * FROM part WHERE p_size < 25) p
   ON l.l_partkey = p.p_partkey
 """,
-    tags=("join",),
 )
 def j1_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: fact ⋈ small dim, inner (non-matching fact rows silently dropped
@@ -125,7 +124,6 @@ SELECT o_orderkey AS order_id,
            AS days_since_epoch0
 FROM orders
 """,
-    tags=("project", "datetime"),
 )
 def p1_rename_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1+P3: bulk rename and fixed-order projection (the reference's
@@ -183,7 +181,6 @@ FROM (
     WHERE event_type = 'purchase' AND ts >= TIMESTAMP '2024-01-15 00:00:00'
 )
 """,
-    tags=("filter", "incremental", "scalar", "json"),
 )
 def fx_filter_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1+F2+X6 on one events scan (one row keeps registry slots free;
@@ -288,7 +285,6 @@ FROM (
               THEN 1 ELSE 0 END) AS n
 )
 """,
-    tags=("agg", "incremental", "validation"),
 )
 def a_scan_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1+A2, grown into the data-quality validation panel a production
@@ -336,7 +332,6 @@ SELECT 'json_props' AS variant, event_id AS doc_id,
             AS VARCHAR) AS token
 FROM events
 """,
-    tags=("explode", "json"),
 )
 def s2_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: the flatten operator — nested collection -> one row per element,
@@ -396,7 +391,6 @@ FROM running
 @register(
     "s6_sql_cte_chain",
     oracle=_S6_SQL,
-    tags=("sql", "cte", "window"),
 )
 def s6_sql_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: arbitrary SQL text executed by the engine (extract_from_query,
@@ -434,7 +428,6 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """,
-    tags=("agg", "rollup", "bench"),
 )
 def q1_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape under ROLLUP: the scan-heavy multi-aggregate pass
@@ -480,7 +473,6 @@ FROM (
 )
 WHERE rank <= 3
 """,
-    tags=("window", "topk", "skew"),
 )
 def topk_per_group_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same top-k computed skew-proof: two-phase salted ranking

@@ -11,7 +11,7 @@ sorts columns by name before hashing values.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,23 +51,18 @@ def scratch_warehouse(spark: SparkSession, label: str):
 
 @dataclass
 class QuerySpec:
-    name: str
     fn: QueryFn
     oracle: str | None  # None => non-SQL-expressible; driver does rows-only check
-    tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def register(
-    name: str, oracle: str | None = None, tags: tuple[str, ...] = ()
-) -> Callable[[QueryFn], QueryFn]:
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = QuerySpec(name, fn, oracle, tags, fn.__doc__ or "")
+        QUERIES[name] = QuerySpec(fn, oracle)
         return fn
 
     return deco

@@ -93,7 +93,6 @@ FROM (
 )
 GROUP BY user_id, session_id
 """,
-    tags=("streaming", "window", "session"),
 )
 def q_win_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The event-time window family in one tagged result — tumbling
@@ -105,21 +104,21 @@ def q_win_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``readStream`` with a watermark — that is the point of Structured
     Streaming; windowed aggs shuffle on (window, key)."""
     events = load_table(spark, sf_dir, "events")
-    tum = tumbling_agg(events, duration="1 day").select(
+    tum = tumbling_agg(events).select(
         F.lit("tumbling_1d").alias("kind"),
         F.col("event_type").alias("key"),
         "window_start",
         "n_events",
         "sum_value",
     )
-    sli = sliding_agg(events, duration="2 hours", slide="1 hour").select(
+    sli = sliding_agg(events).select(
         F.lit("sliding_2h").alias("kind"),
         F.col("event_type").alias("key"),
         "window_start",
         "n_events",
         "sum_value",
     )
-    ses = session_agg(events, gap="2 hours").select(
+    ses = session_agg(events).select(
         F.lit("session_2h").alias("kind"),
         F.col("user_id").cast("string").alias("key"),
         F.col("session_start").alias("window_start"),
@@ -145,7 +144,6 @@ SELECT t.event_id, t.user_id, t.ts, t.event_type, t.value
 FROM target t LEFT JOIN source s ON t.event_id = s.event_id
 WHERE s.event_id IS NULL
 """,
-    tags=("incremental", "merge"),
 )
 def q_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K3/C4 as a query: an overlapping re-extract (ts >= 01-15, values
@@ -181,7 +179,6 @@ SELECT 'wm_dedup' AS variant,
 FROM events
 WHERE ts >= TIMESTAMP '2024-01-25 00:00:00'
 """,
-    tags=("streaming", "stateful"),
 )
 def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two stateful streaming dedup surfaces as tagged arms of one row,
@@ -204,7 +201,7 @@ def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = _stage_events_dir(sf_dir, batch, tag="ge20240125")
     events = spark.readStream.schema(batch.schema).parquet(src)
-    out = first_seen_per_key(events, key="user_id")
+    out = first_seen_per_key(events)
     run_stream_to_memory(out, "stream_stateful_dedup", output_mode="append")
     first_seen = spark.table("stream_stateful_dedup").select(
         F.lit("first_seen").alias("variant"),
@@ -283,7 +280,6 @@ JOIN customer c ON p.user_id = c.c_custkey
 WHERE p.event_type = 'purchase'
   AND p.ts >= TIMESTAMP '2024-01-25 00:00:00'
 """,
-    tags=("streaming", "join", "outer"),
 )
 def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH watermarked stream-stream interval joins as tagged arms of
@@ -312,7 +308,7 @@ def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       user_id resolves in the dim at every SF, so the arm is the batch
       inner join. Previously pinned only by
       tests/test_streaming.py::test_stream_static_join_matches_batch."""
-    from ..streaming.joins import interval_join, interval_join_outer
+    from ..streaming.joins import interval_join
 
     batch = load_table(spark, sf_dir, "events").filter(
         F.col("ts") >= F.lit("2024-01-25 00:00:00").cast("timestamp")
@@ -320,20 +316,18 @@ def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = batch.schema
     src = _stage_events_dir(sf_dir, batch, tag="ge20240125")
 
-    def drain(join_fn, bound_left: bool, sink: str) -> DataFrame:
-        purchases = stream_events(spark, src, schema, watermark="1 hour").filter(
+    def drain(how: str, bound_left: bool, sink: str) -> DataFrame:
+        purchases = stream_events(spark, src, schema).filter(
             F.col("event_type") == "purchase"
         )
         if bound_left:
             purchases = purchases.filter(
                 F.col("ts") < F.lit("2024-01-30 00:00:00").cast("timestamp")
             )
-        views = stream_events(spark, src, schema, watermark="1 hour").filter(
+        views = stream_events(spark, src, schema).filter(
             F.col("event_type") == "view"
         )
-        joined = join_fn(
-            purchases, views, key="user_id", left_ts="ts", right_ts="ts",
-        ).select(
+        joined = interval_join(purchases, views, how=how).select(
             F.col("l_event_id").alias("purchase_id"),
             F.col("l_user_id").alias("user_id"),
             F.col("r_event_id").alias("view_id"),
@@ -341,11 +335,11 @@ def q_stream_interval_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_memory(joined, sink, output_mode="append")
         return spark.table(sink)
 
-    inner = drain(interval_join, False, "stream_ij_inner").select(
+    inner = drain("inner", False, "stream_ij_inner").select(
         F.lit("inner").alias("variant"), "purchase_id", "user_id", "view_id",
         F.lit(None).cast("string").alias("seg"),
     )
-    outer = drain(interval_join_outer, True, "stream_ij_outer").select(
+    outer = drain("left_outer", True, "stream_ij_outer").select(
         F.lit("outer").alias("variant"), "purchase_id", "user_id", "view_id",
         F.lit(None).cast("string").alias("seg"),
     )

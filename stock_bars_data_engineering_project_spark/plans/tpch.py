@@ -56,7 +56,6 @@ WHERE r.r_name = 'ASIA'
   AND o.o_orderdate < TIMESTAMP '2000-01-01 00:00:00'
 GROUP BY n.n_name
 """,
-    tags=("join", "agg", "bench"),
 )
 def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join (two facts, four dims) with a
@@ -107,7 +106,6 @@ FROM (
 JOIN orders o ON o.o_orderkey = big.l_orderkey
 JOIN customer c ON c.c_custkey = o.o_custkey
 """,
-    tags=("join", "agg", "having"),
 )
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: aggregate-HAVING subquery joined back to its
@@ -203,7 +201,6 @@ SELECT 'except_new_docs' AS tag, id FROM (
     )
 )
 """,
-    tags=("join", "anti", "semi", "setop"),
 )
 def set_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The set-operation / existential-join family in one tagged result:
@@ -306,7 +303,6 @@ WHERE c.unit_cost = (
     SELECT MIN(c2.unit_cost) FROM cost c2 WHERE c2.l_partkey = c.l_partkey
 )
 """,
-    tags=("join", "window", "subquery"),
 )
 def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: min-per-group correlated subquery, decorrelated as
@@ -359,7 +355,6 @@ GROUP BY c.c_custkey, c.c_name, n.n_name
 ORDER BY revenue DESC, c.c_custkey
 LIMIT 20
 """,
-    tags=("join", "agg", "topk"),
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: lost-revenue ranking of customers whose items
@@ -410,7 +405,6 @@ SELECT 'bracket_revenue' AS metric, (
            AND l.l_quantity >= 20 AND l.l_quantity <= 40)
 ) AS value
 """,
-    tags=("join", "agg", "predicate"),
 )
 def promo_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 + Q19 shapes as one two-row (metric, value) result:

@@ -50,9 +50,11 @@ recorded layout.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import glob
 import os
 import shutil
+import socket
 import tempfile
 import time
 from dataclasses import dataclass
@@ -70,6 +72,12 @@ _LAYOUT = "_LAYOUT"
 # most members an append chain may reach before append writes a full
 # snapshot instead
 MANIFEST_LIMIT = 64
+# a contended writer lock is retried this many times, with exponential
+# backoff from the base delay (~3 s in total)
+LOCK_RETRIES = 5
+LOCK_RETRY_BASE_S = 0.1
+# snapshots vacuum keeps besides those the kept ones reference
+VACUUM_KEEP_LAST = 2
 
 
 def _read_version_dir(spark: SparkSession, path: str) -> DataFrame:
@@ -144,12 +152,6 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 class ParquetWarehouse:
     spark: SparkSession
     root: str
-    # Writer-lock contention policy: transient contention — another
-    # pipeline step holding the same table's lock for the
-    # read->snapshot->commit span — retries with exponential backoff
-    # before failing. 0 attempts restores the fail-fast posture.
-    lock_retries: int = 5
-    lock_retry_base_s: float = 0.1
 
     # -- catalog (S7/S8: probe + schema reflection) -------------------------
 
@@ -209,55 +211,47 @@ class ParquetWarehouse:
         ``_LATEST``, compute the same next version, and the second
         pointer flip would silently discard the first writer's committed
         rows (lost update — the reference's PostgreSQL store is
-        transactional here). An ``O_CREAT|O_EXCL`` lock file makes the
-        claim atomic on POSIX filesystems.
+        transactional here).
 
         Contention policy: TRANSIENT contention is legitimate
         concurrency — two pipeline steps appending different batches to
         the same table are both correct, just serialized — so a failed
-        claim retries ``lock_retries`` times with exponential backoff
-        (base ``lock_retry_base_s``, ~3 s total at the defaults) and
-        proceeds once the holder commits; version allocation happens
-        UNDER the lock, so the retried writer correctly builds on the
-        winner's commit. Contention that OUTLASTS the budget still
-        fails loudly with the holder's pid: a long-held or crashed-
-        writer (stale) lock is an operational situation to surface, not
-        to spin on — the same manual-unlock tradeoff as a stale Delta
-        _delta_log lock on non-transactional stores.
-        ``lock_retries=0`` restores the strict fail-fast posture.
+        claim retries ``LOCK_RETRIES`` times with exponential backoff
+        (base ``LOCK_RETRY_BASE_S``) and proceeds once the holder
+        commits; version allocation happens UNDER the lock, so the
+        retried writer correctly builds on the winner's commit.
+
+        The lock is a ``flock`` on ``._writer_lock``, a file that is
+        never deleted; the kernel releases it when its holder exits, so
+        a crashed writer leaves nothing to break by hand. The holder's
+        ``host:pid`` is written into the file for the error message
+        only. Contention that OUTLASTS the budget fails loudly with the
+        holder.
         """
         tdir = self.table_path(table)
         os.makedirs(tdir, exist_ok=True)
-        lock = os.path.join(tdir, "._writer_lock")
-        fd = None
-        for attempt in range(max(0, self.lock_retries) + 1):
-            if attempt:
-                time.sleep(self.lock_retry_base_s * (2 ** (attempt - 1)))
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                continue
-        if fd is None:
-            # The holder may release (delete) the lock between our failed
-            # O_EXCL claim and this diagnostic read; default first so the
-            # message never references an unbound name in that race.
-            holder = "unknown"
-            with contextlib.suppress(OSError):
-                holder = open(lock).read().strip() or "unknown"
-            raise RuntimeError(
-                f"concurrent writer on table {table!r} (lock held by pid "
-                f"{holder} past {max(0, self.lock_retries)} backoff "
-                f"retries); single-writer-per-table is the contract — if "
-                f"the holder crashed, remove {lock}"
-            ) from None
+        fd = os.open(os.path.join(tdir, "._writer_lock"), os.O_CREAT | os.O_RDWR)
         try:
-            with os.fdopen(fd, "w") as f:
-                f.write(str(os.getpid()))
+            for attempt in range(LOCK_RETRIES + 1):
+                if attempt:
+                    time.sleep(LOCK_RETRY_BASE_S * (2 ** (attempt - 1)))
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    continue
+            else:
+                holder = os.pread(fd, 256, 0).decode(errors="replace").strip()
+                raise RuntimeError(
+                    f"concurrent writer on table {table!r} (lock held by "
+                    f"{holder or 'unknown'} past {LOCK_RETRIES} backoff "
+                    f"retries); single-writer-per-table is the contract"
+                )
+            os.ftruncate(fd, 0)
+            os.pwrite(fd, f"{socket.gethostname()}:{os.getpid()}".encode(), 0)
             yield
         finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(lock)
+            os.close(fd)  # releases the lock
 
     def _version(self, table: str, version: str | None = None) -> str:
         """``version``, or the live one; raises for a missing table."""
@@ -905,11 +899,12 @@ class ParquetWarehouse:
             if d.startswith("v") and os.path.isdir(os.path.join(tdir, d))
         )
 
-    def vacuum(self, table: str, keep_last: int = 2) -> None:
-        """Drop snapshot directories older than the newest ``keep_last``,
-        never touching the version the pointer references NOR any member
-        directory a retained manifest snapshot references — a manifest
-        append shares its predecessors' files, so reference-unaware
+    def vacuum(self, table: str) -> None:
+        """Drop snapshot directories older than the newest
+        ``VACUUM_KEEP_LAST``, never touching the version the pointer
+        references NOR any member directory a retained manifest
+        snapshot references — a manifest append shares its
+        predecessors' files, so reference-unaware
         deletion would corrupt the live table (the reason Delta VACUUM
         consults the log before deleting). Bounds storage growth the
         same way Delta VACUUM does; readers pinned to a vacuumed
@@ -919,7 +914,7 @@ class ParquetWarehouse:
         current = self.latest_version(table)
         tdir = self.table_path(table)
         versions = self.versions(table)
-        keep = set(versions[-keep_last:]) | ({current} if current else set())
+        keep = set(versions[-VACUUM_KEEP_LAST:]) | ({current} if current else set())
         referenced: set[str] = set()
         for v in keep:
             referenced.update(self._manifest_members(table, v))

@@ -43,12 +43,12 @@ def rollup_maintenance_stream(
     schema,
     wh: ParquetWarehouse,
     table: str,
-    keys: tuple[str, ...] = ("user_id",),
     checkpoint_dir: str = "",
     distinct_col: str | None = None,
 ):
-    """Maintain a mergeable rollup (operators/rollup.py, optionally
-    sketch-extended) under Structured Streaming as an EPOCH LOG.
+    """Maintain a mergeable per-``user_id`` rollup (operators/rollup.py,
+    optionally sketch-extended) under Structured Streaming as an EPOCH
+    LOG.
 
     Each micro-batch folds to a per-group increment tagged with its
     epoch id and lands via keyed merge into its own ``_epoch``
@@ -64,12 +64,12 @@ def rollup_maintenance_stream(
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         inc = rollup_increment(
-            batch, keys=keys, distinct_col=distinct_col
+            batch, distinct_col=distinct_col
         ).withColumn("_epoch", F.lit(int(epoch_id)))
         wh.merge(
             inc,
             table,
-            keys=(*keys, "day", "_epoch"),
+            keys=("user_id", "day", "_epoch"),
             partition_by=("_epoch",),
         )
 

@@ -15,56 +15,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join ``left`` and ``right`` on ``key`` where the right event
-    happened within ``[left_ts - 1 hour, left_ts]``. Works identically
-    on batch DataFrames and on watermarked streams (callers apply
-    ``withWatermark`` on each stream; the range predicate below is what
-    lets the engine evict buffered rows once the watermark passes).
-    """
-    lk, rk = f"l_{key}", f"r_{key}"
-    lt = left.select(
-        F.col(key).alias(lk),
-        *[F.col(c).alias(f"l_{c}") for c in left.columns if c != key],
-    )
-    rt = right.select(
-        F.col(key).alias(rk),
-        *[F.col(c).alias(f"r_{c}") for c in right.columns if c != key],
-    )
-    cond = (
-        (F.col(lk) == F.col(rk))
-        & (F.col(f"r_{right_ts}") >= F.col(f"l_{left_ts}") - F.expr("INTERVAL 1 hour"))
-        & (F.col(f"r_{right_ts}") <= F.col(f"l_{left_ts}"))
-    )
-    return lt.join(rt, cond, how)
+def interval_join(left: DataFrame, right: DataFrame, how: str = "inner") -> DataFrame:
+    """Join ``left`` and ``right`` on ``user_id`` where the right event
+    happened within ``[ts - 1 hour, ts]`` of the left event. Works
+    identically on batch DataFrames and on watermarked streams (callers
+    apply ``withWatermark`` on each stream; the range predicate below is
+    what lets the engine evict buffered rows once the watermark passes).
 
-
-def interval_join_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-) -> DataFrame:
-    """LEFT OUTER variant: every left event emits, matched or not.
-
-    Under streaming this is the semantically interesting one — an
-    unmatched left row cannot be emitted the moment it arrives (a match
-    may still come), so the engine holds it in state and emits the
-    null-padded row only once the WATERMARK passes the end of its match
-    window. The time-bounded condition is therefore mandatory for outer
+    ``how="left_outer"`` emits every left event, matched or not. Under
+    streaming this is the semantically interesting one — an unmatched
+    left row cannot be emitted the moment it arrives (a match may still
+    come), so the engine holds it in state and emits the null-padded row
+    only once the WATERMARK passes the end of its match window. The
+    time-bounded condition is therefore mandatory for outer
     stream-stream joins, not just a state-size optimization: without it
     "no match can still arrive" is undecidable and Spark rejects the
     query. On a finite availableNow drain the result equals the batch
     left-outer interval join, which is what the oracle computes.
     """
-    return interval_join(
-        left, right, key, left_ts, right_ts, how="left_outer"
+    lt = left.select(
+        F.col("user_id").alias("l_user_id"),
+        *[F.col(c).alias(f"l_{c}") for c in left.columns if c != "user_id"],
     )
+    rt = right.select(
+        F.col("user_id").alias("r_user_id"),
+        *[F.col(c).alias(f"r_{c}") for c in right.columns if c != "user_id"],
+    )
+    cond = (
+        (F.col("l_user_id") == F.col("r_user_id"))
+        & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 1 hour"))
+        & (F.col("r_ts") <= F.col("l_ts"))
+    )
+    return lt.join(rt, cond, how)

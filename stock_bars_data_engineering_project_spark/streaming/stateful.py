@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators import ema
+
 # output: the first-seen event's fields (the key and event-time fields
 # are built per call from the INPUT schema — a hardcoded TimestampType
 # would localize a TIMESTAMP_NTZ wall time through the session timezone
@@ -35,19 +37,15 @@ _DEDUP_TAIL_FIELDS = [
 DEDUP_STATE_SCHEMA = T.StructType([T.StructField("seen", T.BooleanType())])
 
 
-def first_seen_per_key(events: DataFrame, key: str = "user_id") -> DataFrame:
+def first_seen_per_key(events: DataFrame) -> DataFrame:
     """Keyed first-seen dedup as a custom stateful operator: one output
-    row per key, ever — the pattern behind streaming entity resolution
+    row per ``user_id``, ever — the pattern behind streaming entity resolution
     and exactly-once side-effect gating. ``NoTimeout`` keeps keys
     forever; swap to ``EventTimeTimeout`` + ``state.setTimeoutTimestamp``
     to age keys out under a watermark (bounded state at 100 TB/day).
 
-    ``key`` may be any column of the stream — the output's first field
-    takes its name and type (the ts/event_id/value event columns are
-    required; they define "first"). Earlier revisions hardcoded
-    user_id's name AND LongType in the output schema, so a non-default
-    key either crashed at Arrow serialization or silently mislabeled
-    the column; ``first_ts`` likewise inherits the input ts type.
+    The output's ``user_id`` and ``first_ts`` take the input's types
+    (the ts/event_id/value event columns define "first").
 
     "First" is exact within one drain batch (the slice is sorted); a
     key whose events SPAN micro-batches emits the earliest event of the
@@ -57,7 +55,7 @@ def first_seen_per_key(events: DataFrame, key: str = "user_id") -> DataFrame:
     drain the oracle checks has no such split."""
     out_schema = T.StructType(
         [
-            T.StructField(key, events.schema[key].dataType),
+            T.StructField("user_id", events.schema["user_id"].dataType),
             T.StructField("first_ts", events.schema["ts"].dataType),
         ]
         + _DEDUP_TAIL_FIELDS
@@ -87,14 +85,14 @@ def first_seen_per_key(events: DataFrame, key: str = "user_id") -> DataFrame:
         state.update((True,))
         yield pd.DataFrame(
             {
-                key: [key_t[0]],
+                "user_id": [key_t[0]],
                 "first_ts": [first.ts],
                 "first_event_id": [first.event_id],
                 "first_value": [first.value],
             }
         )
 
-    return events.groupBy(key).applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         _first_seen,
         outputStructType=out_schema,
         stateStructType=DEDUP_STATE_SCHEMA,
@@ -123,7 +121,9 @@ def _ema_out_schema(events: DataFrame) -> T.StructType:
     )
 
 
-def _ewma_update(alpha: float):
+def _ewma_update():
+    alpha = ema.ALPHA
+
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -151,16 +151,17 @@ def _ewma_update(alpha: float):
     return fn
 
 
-def ewma_stream(events: DataFrame, alpha: float = 0.1) -> DataFrame:
-    """Streaming per-key EMA: applyInPandasWithState carries the last
-    smoothed value per key across micro-batches, so a restarted or
+def ewma_stream(events: DataFrame) -> DataFrame:
+    """Streaming per-key EMA at ``operators.ema.ALPHA``:
+    applyInPandasWithState carries the last smoothed value per key
+    across micro-batches, so a restarted or
     long-running stream emits the same series the batch operator
     (operators/ema.py) computes over the full history — pinned by test.
     Correctness requires event-time-ordered arrival across batches
     (guaranteed by an upstream watermark + sorted replay; within a batch
     the slice is sorted here)."""
     return events.groupBy("user_id").applyInPandasWithState(
-        _ewma_update(alpha),
+        _ewma_update(),
         outputStructType=_ema_out_schema(events),
         stateStructType=EMA_STATE_SCHEMA,
         outputMode="append",

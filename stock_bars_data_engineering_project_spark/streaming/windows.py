@@ -19,10 +19,11 @@ from pyspark.sql import functions as F
 from ..functions.scalars import as_event_time, round_half_up
 
 
-def tumbling_agg(df: DataFrame, duration: str = "1 day") -> DataFrame:
-    """Fixed epoch-aligned windows: count + sum per (window, event_type)."""
+def tumbling_agg(df: DataFrame) -> DataFrame:
+    """Fixed epoch-aligned 1-day windows: count + sum per (window,
+    event_type)."""
     return (
-        df.groupBy(F.window("ts", duration).alias("win"), "event_type")
+        df.groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             round_half_up(F.sum("value"), 2).alias("sum_value"),
@@ -36,14 +37,11 @@ def tumbling_agg(df: DataFrame, duration: str = "1 day") -> DataFrame:
     )
 
 
-def sliding_agg(
-    df: DataFrame,
-    duration: str = "2 hours",
-    slide: str = "1 hour",
-) -> DataFrame:
-    """Overlapping windows — each event lands in duration/slide windows."""
+def sliding_agg(df: DataFrame) -> DataFrame:
+    """Overlapping 2-hour windows sliding by 1 hour — each event lands in
+    two windows."""
     return (
-        df.groupBy(F.window("ts", duration, slide).alias("win"), "event_type")
+        df.groupBy(F.window("ts", "2 hours", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             round_half_up(F.sum("value"), 2).alias("sum_value"),
@@ -54,12 +52,12 @@ def sliding_agg(
     )
 
 
-def session_agg(df: DataFrame, gap: str = "2 hours") -> DataFrame:
-    """Session windows: events within ``gap`` of each other merge into one
+def session_agg(df: DataFrame) -> DataFrame:
+    """Session windows: events within 2 hours of each other merge into one
     session per ``user_id``. Native ``session_window`` — the same operator
     Structured Streaming uses for stateful session merge."""
     return (
-        df.groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        df.groupBy(F.session_window("ts", "2 hours").alias("win"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             round_half_up(F.sum("value"), 2).alias("sum_value"),
@@ -77,16 +75,15 @@ def stream_events(
     spark: SparkSession,
     src_dir: str,
     schema,
-    watermark: str = "1 hour",
 ) -> DataFrame:
-    """``readStream`` over a parquet directory with an event-time
-    watermark — late data beyond ``watermark`` is dropped and state for
+    """``readStream`` over a parquet directory with a 1-hour event-time
+    watermark — late data beyond it is dropped and state for
     closed windows is reclaimed (the streaming analog of the reference's
     overlap-inclusive re-read, SURVEY C4). ``withWatermark`` requires
     TIMESTAMP proper, so a TIMESTAMP_NTZ event-time column is first
     reinterpreted as a UTC instant (:func:`as_event_time`)."""
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    return as_event_time(stream, "ts").withWatermark("ts", watermark)
+    return as_event_time(stream).withWatermark("ts", "1 hour")
 
 
 def run_stream_to_memory(

@@ -11,7 +11,9 @@ import pytest
 
 from stock_bars_data_engineering_project_spark.functions.quality_model import (
     GAIN,
+    LR,
     N_BUCKETS,
+    N_ITERS,
     score_with_weights,
     train_quality_classifier,
 )
@@ -84,14 +86,14 @@ def test_training_matches_numpy_replay(spark):
     w = {
         r.bucket: r.weight
         for r in train_quality_classifier(
-            df, "label", n_iters=4, lr=8.0, stats=stats
+            df, "label", stats=stats
         ).collect()
     }
-    ref_w, ref_loss, ref_acc = _replay(ROWS, n_iters=4, lr=8.0)
+    ref_w, ref_loss, ref_acc = _replay(ROWS, n_iters=N_ITERS, lr=LR)
     assert set(w) == set(ref_w)
     for b in ref_w:
         assert abs(w[b] - ref_w[b]) <= 1e-9 * max(1.0, abs(ref_w[b])), b
-    assert len(stats["loss"]) == 5 and len(stats["acc"]) == 5
+    assert len(stats["loss"]) == N_ITERS + 1 == len(stats["acc"])
     for got, want in zip(stats["loss"], ref_loss):
         assert abs(got - want) <= 1e-9
     for got, want in zip(stats["acc"], ref_acc):
@@ -103,7 +105,7 @@ def test_training_laws_on_learnable_labels(spark):
     monotone non-increasing, final accuracy above the label prior."""
     df = spark.createDataFrame(ROWS, "doc_id long, text string, label double")
     stats: dict = {}
-    train_quality_classifier(df, "label", n_iters=6, lr=8.0, stats=stats)
+    train_quality_classifier(df, "label", stats=stats)
     losses, accs = stats["loss"], stats["acc"]
     assert abs(losses[0] - math.log(2.0)) <= 1e-12
     for a, b in zip(losses, losses[1:]):
@@ -118,7 +120,7 @@ def test_trained_weights_score_and_separate(spark):
     all-zero weights give exactly 0.5 everywhere (unseen-bucket
     contract)."""
     df = spark.createDataFrame(ROWS, "doc_id long, text string, label double")
-    w = train_quality_classifier(df, "label", n_iters=6, lr=8.0)
+    w = train_quality_classifier(df, "label")
     scored = {r.doc_id: r.qscore for r in score_with_weights(df, w).collect()}
     labels = {d: y for d, _, y in ROWS}
     pos = min(v for d, v in scored.items() if labels[d] == 1.0)
@@ -132,9 +134,5 @@ def test_trained_weights_score_and_separate(spark):
 
 def test_training_guards(spark):
     df = spark.createDataFrame(ROWS, "doc_id long, text string, label double")
-    with pytest.raises(ValueError):
-        train_quality_classifier(df, "label", n_iters=0)
-    with pytest.raises(ValueError):
-        train_quality_classifier(df, "label", lr=0.0)
     with pytest.raises(ValueError):
         train_quality_classifier(df, "nope")

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.contamination import (
@@ -53,9 +54,7 @@ def test_interval_join_bounds_are_inclusive(spark):
     )
     purchases = events.filter(F.col("event_type") == "purchase")
     views = events.filter(F.col("event_type") == "view")
-    got = interval_join(
-        purchases, views, key="user_id", left_ts="ts", right_ts="ts"
-    )
+    got = interval_join(purchases, views)
     view_ids = sorted(r.r_event_id for r in got.collect())
     assert view_ids == [10, 12]
 
@@ -72,9 +71,6 @@ def test_interval_join_requires_same_user(spark):
     got = interval_join(
         events.filter(F.col("event_type") == "purchase"),
         events.filter(F.col("event_type") == "view"),
-        key="user_id",
-        left_ts="ts",
-        right_ts="ts",
     )
     assert got.count() == 0
 
@@ -94,10 +90,10 @@ def test_ewma_matches_hand_computation(spark):
     )
     got = {
         r.event_id: r.ema
-        for r in ewma_per_key(df, alpha=0.5).collect()
+        for r in ewma_per_key(df).collect()
     }
-    # y1=10, y2=.5*10+.5*20=15, y3=.5*15+.5*30=22.5, y4=.5*22.5+.5*40=31.25
-    assert got == {0: 10.0, 1: 15.0, 2: 22.5, 3: 31.25}
+    # y1=10, y2=.9*10+.1*20=11, y3=.9*11+.1*30=12.9, y4=.9*12.9+.1*40=15.61
+    assert got == pytest.approx({0: 10.0, 1: 11.0, 2: 12.9, 3: 15.61}, rel=1e-12)
 
 
 def test_ewma_supports_string_keys(spark):
@@ -110,9 +106,9 @@ def test_ewma_supports_string_keys(spark):
         [("AAPL", 1, t0, 10.0), ("AAPL", 2, t0 + dt.timedelta(hours=1), 20.0)],
         "user_id string, event_id int, ts timestamp, value double",
     )
-    got = ewma_per_key(df, alpha=0.5).collect()
+    got = ewma_per_key(df).collect()
     assert {r.user_id for r in got} == {"AAPL"}
-    assert sorted(r.ema for r in got) == [10.0, 15.0]
+    assert sorted(r.ema for r in got) == pytest.approx([10.0, 11.0], rel=1e-12)
 
 
 def test_boilerplate_scrub_known_corpus(spark):
@@ -134,7 +130,7 @@ def test_boilerplate_scrub_known_corpus(spark):
 
     out = {
         r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-        for r in boilerplate_scrub(docs, k=3, df_cap=5).collect()
+        for r in boilerplate_scrub(docs, df_cap=5).collect()
     }
     assert len(out) == len(rows)  # every doc comes back
     # df("all rights reserved") = 11 >= 5 -> removed everywhere
@@ -161,7 +157,7 @@ def test_boilerplate_scrub_no_hot_grams_identity(spark):
         [(i, f"totally distinct words {i} here") for i in range(4)],
         "doc_id long, text string",
     )
-    out = boilerplate_scrub(docs, k=3, df_cap=5).collect()
+    out = boilerplate_scrub(docs, df_cap=5).collect()
     assert all(r.n_removed == 0 for r in out)
     assert all(r.clean_text.endswith(f"{r.doc_id} here") for r in out)
 
@@ -297,15 +293,19 @@ def _exact_substr_replay(rows, k, min_count=2):
     }
 
 
-def test_exact_substr_scrub_matches_python_reference(spark):
+def test_exact_substr_scrub_matches_python_reference(spark, monkeypatch):
     """Generated corpus with cross-doc shared passages AND within-doc
     repetition — the operator must equal the direct replay exactly
-    (counts and rebuilt text)."""
+    (counts and rebuilt text). Spans of 3 tokens, so the 6-token
+    passages overlap and merge."""
     import random
 
+    from stock_bars_data_engineering_project_spark.operators import contamination
     from stock_bars_data_engineering_project_spark.operators.contamination import (
         exact_substr_scrub,
     )
+
+    monkeypatch.setattr(contamination, "SUBSTR_K", 3)
 
     rng = random.Random(7)
     passages = [
@@ -328,7 +328,7 @@ def test_exact_substr_scrub_matches_python_reference(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
-        for r in exact_substr_scrub(docs, k=3).collect()
+        for r in exact_substr_scrub(docs).collect()
     }
     assert got == _exact_substr_replay(rows, k=3)
 
@@ -351,7 +351,7 @@ def test_exact_substr_scrub_keeper_and_identity(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r for r in exact_substr_scrub(docs, k=8).collect()}
+    got = {r.doc_id: r for r in exact_substr_scrub(docs).collect()}
     # doc 1 holds the first occurrence (pos 3) -> intact
     assert got[1].n_removed == 0 and shared in got[1].clean_text
     # doc 2's copy starts at pos 1 but doc_id orders after doc 1 -> scrubbed
@@ -375,8 +375,8 @@ def test_scrubs_pass_null_text_through_as_null(spark):
         "doc_id long, text string",
     )
     for fn in (
-        lambda d: boilerplate_scrub(d, k=3, df_cap=2),
-        lambda d: exact_substr_scrub(d, k=3),
+        lambda d: boilerplate_scrub(d, df_cap=2),
+        lambda d: exact_substr_scrub(d),
     ):
         got = {r.doc_id: (r.n_tokens, r.n_removed, r.clean_text)
                for r in fn(docs).collect()}

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.contrastive import (
@@ -13,14 +12,14 @@ from stock_bars_data_engineering_project_spark.sources.readers import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def _mine(spark, **kw):
+def _mine(spark):
     emb = load_table(spark, SF, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 4)
-    return contrastive_pairs(emb, anchors, **kw), emb, anchors
+    return contrastive_pairs(emb, anchors), emb, anchors
 
 
 def test_roles_ranks_and_exclusions(spark):
-    out, emb, anchors = _mine(spark, n_pos=3, n_hard=2, n_rand=2)
+    out, emb, anchors = _mine(spark)
     rows = out.collect()
     by_anchor = {}
     for r in rows:
@@ -48,44 +47,41 @@ def test_positives_match_bruteforce_and_determinism(spark):
         cosine_topk,
     )
 
-    out, emb, anchors = _mine(spark, n_pos=3, n_hard=0, n_rand=0)
+    out, emb, anchors = _mine(spark)
     expect = {
         (r.query_id, r.vec_id, r.rank)
         for r in cosine_topk(emb, anchors, k=3).collect()
     }
-    got = {(r.anchor_id, r.other_id, r.slot) for r in out.collect()}
+    got = {(r.anchor_id, r.other_id, r.slot) for r in out.collect() if r.role == "pos"}
     assert got == expect
 
-    again, _, _ = _mine(spark, n_pos=3, n_hard=0, n_rand=0)
+    again, _, _ = _mine(spark)
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, out.collect()))
 
 
 def test_rand_negatives_deterministic_and_floor(spark):
-    a, _, _ = _mine(spark, n_pos=1, n_hard=0, n_rand=3)
-    b, _, _ = _mine(spark, n_pos=1, n_hard=0, n_rand=3)
+    a, _, _ = _mine(spark)
+    b, _, _ = _mine(spark)
     ra = sorted((r.anchor_id, r.slot, r.other_id) for r in a.collect() if r.role == "rand")
     rb = sorted((r.anchor_id, r.slot, r.other_id) for r in b.collect() if r.role == "rand")
     assert ra == rb and len(ra) > 0
 
-    with pytest.raises(ValueError, match="n_rand"):
-        _mine(spark, n_rand=-1)
-    with pytest.raises(ValueError, match="nothing to mine"):
-        _mine(spark, n_pos=0, n_hard=0, n_rand=0)
 
-
-def test_rand_excludes_floor_rejected_neighbors_and_dedups(spark):
+def test_rand_excludes_floor_rejected_neighbors_and_dedups(spark, monkeypatch):
     """(a) a near neighbor is never emitted as a random negative (the
     exclusion set is the full ANN neighborhood); (b) no anchor carries
-    the same random other_id in two slots."""
+    the same random other_id in two slots. Eight random slots per
+    anchor, so slot collisions occur."""
+    from stock_bars_data_engineering_project_spark.operators import contrastive
     from stock_bars_data_engineering_project_spark.operators.similarity import (
         cosine_topk,
     )
 
+    monkeypatch.setattr(contrastive, "N_RAND", 8)
+
     emb = load_table(spark, SF, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 4)
-    out = contrastive_pairs(
-        emb, anchors, n_pos=3, n_hard=2, n_rand=8
-    ).collect()
+    out = contrastive_pairs(emb, anchors).collect()
     seen = {
         (r.query_id, r.vec_id)
         for r in cosine_topk(emb, anchors, k=5).collect()

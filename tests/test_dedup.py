@@ -279,7 +279,7 @@ def test_embedding_blocked_is_subset_of_exact_with_identical_scores(spark):
     }
     blocked = {
         (r.id_a, r.id_b): r.cos
-        for r in embedding_dup_pairs_blocked(emb, dim=64, n_planes=8).collect()
+        for r in embedding_dup_pairs_blocked(emb).collect()
     }
     assert set(blocked) <= set(exact)
     for pair, cos in blocked.items():
@@ -287,35 +287,34 @@ def test_embedding_blocked_is_subset_of_exact_with_identical_scores(spark):
     assert len(exact) == 0 or len(blocked) >= 0.2 * len(exact)
 
 
-def test_embedding_blocked_candidates_equal_hamming_ring(spark):
-    """Property pin for the canonical-group pair emission: for several
-    n_planes, the blocked operator must return EXACTLY the exact
-    all-pairs matches whose buckets are within hamming distance 2 —
-    each emitted once (no duplicates lost or invented by the
-    min-shared-key rule)."""
+def test_embedding_blocked_candidates_equal_hamming_ring(spark, monkeypatch):
+    """Property pin for the canonical-group pair emission: at several
+    plane counts (the 500-row corpus gets 8 planes, and 10 once the
+    base row count is below its size), the blocked operator must return
+    EXACTLY the exact all-pairs matches whose buckets are within hamming
+    distance 2 — each emitted once (no duplicates lost or invented by
+    the min-shared-key rule)."""
     from pyspark.sql import functions as F
 
+    from stock_bars_data_engineering_project_spark.operators import similarity
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         embedding_dup_pairs,
         embedding_dup_pairs_blocked,
-    )
-    from stock_bars_data_engineering_project_spark.operators.similarity import (
-        lsh_bucket,
     )
     from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     exact = {(r.id_a, r.id_b) for r in embedding_dup_pairs(emb).collect()}
-    for n_planes in (5, 8):
-        blocked = embedding_dup_pairs_blocked(
-            emb, dim=64, n_planes=n_planes
-        ).collect()
+    for base_rows, n_planes in ((2048, 8), (256, 10)):
+        monkeypatch.setattr(similarity, "LSH_BASE_ROWS", base_rows)
+        assert similarity.lsh_planes(emb) == n_planes
+        blocked = embedding_dup_pairs_blocked(emb).collect()
         got = {(r.id_a, r.id_b) for r in blocked}
         assert len(got) == len(blocked)  # no duplicate emissions
         buckets = {
             r.vec_id: r.b
             for r in emb.select(
-                "vec_id", lsh_bucket(F.col("embedding"), 64, n_planes).alias("b")
+                "vec_id", similarity.lsh_bucket(F.col("embedding"), 64, n_planes).alias("b")
             ).collect()
         }
         ids = sorted(buckets)
@@ -363,10 +362,12 @@ def test_canonical_selection_rejects_reserved_columns(spark):
         canonical_selection,
     )
 
-    clusters = spark.createDataFrame([(1, 1)], "doc_id long, cluster_id long")
-    docs = spark.createDataFrame([(1, 2)], "doc_id long, keep long")
+    clusters = spark.createDataFrame(
+        [(1, 1, True)], "doc_id long, cluster_id long, keep boolean"
+    )
+    docs = spark.createDataFrame([(1, 2)], "doc_id long, n_chars long")
     with pytest.raises(ValueError, match="reserved"):
-        canonical_selection(clusters, docs, quality_col="keep")
+        canonical_selection(clusters, docs)
 
 
 def test_canonical_selection_rejects_prelabeled_clusters(spark):

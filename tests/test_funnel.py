@@ -112,7 +112,7 @@ def test_cohort_retention_hand_computed(spark):
     )
     got = {
         (r.cohort_day.isoformat(), r.offset): r.n_users
-        for r in cohort_retention(ev, max_offset=7).collect()
+        for r in cohort_retention(ev).collect()
     }
     assert got == {
         ("2024-01-01", 0): 2,
@@ -122,7 +122,7 @@ def test_cohort_retention_hand_computed(spark):
     }
 
 
-def test_cohort_offset_cap_and_guard(spark):
+def test_cohort_offset_cap(spark):
     from stock_bars_data_engineering_project_spark.operators.funnel import (
         cohort_retention,
     )
@@ -132,10 +132,8 @@ def test_cohort_offset_cap_and_guard(spark):
         [(1, d(2024, 1, 1, 9), "x"), (1, d(2024, 3, 1, 9), "x")],
         "user_id long, ts timestamp, event_type string",
     )
-    got = cohort_retention(ev, max_offset=7).collect()
+    got = cohort_retention(ev).collect()
     assert {(r.offset, r.n_users) for r in got} == {(0, 1)}  # day-60 capped
-    with pytest.raises(ValueError, match="max_offset"):
-        cohort_retention(ev, max_offset=-1)
 
 
 def test_cohort_day0_equals_cohort_size_on_real_data(spark):
@@ -147,7 +145,7 @@ def test_cohort_day0_equals_cohort_size_on_real_data(spark):
     from stock_bars_data_engineering_project_spark.sources.readers import load_table
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    tri = cohort_retention(ev, max_offset=3)
+    tri = cohort_retention(ev)
     d0_total = (
         tri.filter("offset = 0").agg(F.sum("n_users")).first()[0]
     )

@@ -55,7 +55,7 @@ def test_fuzzy_join_matches_brute_force(spark):
     }
     got = {
         (r.id_a, r.id_b, r.edit_dist)
-        for r in fuzzy_dedup_pairs(df, "id", "name", max_dist=2).collect()
+        for r in fuzzy_dedup_pairs(df, "id").collect()
     }
     assert got == expect
     assert (1, 2, 1) in got and (4, 5, 1) in got
@@ -68,11 +68,9 @@ def test_fuzzy_join_two_tables_and_guards(spark):
         [(10, "stark industried"), (11, "wayne enterprises")],
         "rid long, rname string",
     )
-    out = fuzzy_join(left, right, "lname", "rname", max_dist=1).collect()
+    out = fuzzy_join(left, right, "lname", "rname").collect()
     assert [(r.lid, r.rid, r.edit_dist) for r in out] == [(1, 10, 1)]
 
-    with pytest.raises(ValueError, match="max_dist"):
-        fuzzy_join(left, right, "lname", "rname", max_dist=-1)
     with pytest.raises(ValueError, match="edit_dist"):
         fuzzy_join(left.withColumn("edit_dist", F.lit(0)), right, "lname", "rname")
 
@@ -81,6 +79,6 @@ def test_fuzzy_join_plan_has_no_cartesian(spark):
     """The blocked join must plan as a hash equi-join on the block key —
     never a CartesianProduct / BroadcastNestedLoopJoin."""
     df = _vendors(spark)
-    plan = fuzzy_dedup_pairs(df, "id", "name", max_dist=2)._jdf.queryExecution().executedPlan().toString()
+    plan = fuzzy_dedup_pairs(df, "id")._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

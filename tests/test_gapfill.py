@@ -38,7 +38,7 @@ def bars(spark):
 def test_fills_only_missing_days_with_carried_value(bars):
     got = sorted(
         (r.user_id, r.day.isoformat(), r.close_v)
-        for r in calendar_fill(bars, "user_id", "day", ("close_v",)).collect()
+        for r in calendar_fill(bars, "user_id", ("close_v",)).collect()
     )
     assert got == [
         (1, "2024-01-03", 20.0),
@@ -55,7 +55,7 @@ def test_multi_column_carry_and_long_gap(spark):
         "user_id long, day date, close_v double, tag string",
     )
     got = calendar_fill(
-        bars, "user_id", "day", ("close_v", "tag")
+        bars, "user_id", ("close_v", "tag")
     ).collect()
     assert len(got) == 8  # 02..09
     assert {(r.close_v, r.tag) for r in got} == {(10.0, "x")}
@@ -64,7 +64,7 @@ def test_multi_column_carry_and_long_gap(spark):
 
 
 def test_union_with_observed_reconstructs_dense_series(bars):
-    gaps = calendar_fill(bars, "user_id", "day", ("close_v",))
+    gaps = calendar_fill(bars, "user_id", ("close_v",))
     dense = bars.unionByName(gaps)
     per_user = {
         r.user_id: r.n
@@ -85,6 +85,5 @@ def test_reserved_column_guard(bars):
         calendar_fill(
             bars.withColumn("__gap_obs", F.lit(1)),
             "user_id",
-            "day",
             ("close_v",),
         )

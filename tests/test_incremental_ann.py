@@ -47,7 +47,7 @@ def test_build_ingest_matches_oneshot(spark, emb, tmp_path):
     queries = emb.filter(F.col("vec_id") < 5)
     got = ann_query(wh, queries, "idx")
     cent = wh.read("idx__centroids")
-    want = ivf_topk(emb, queries, k=10, nprobe=3, centroids=cent)
+    want = ivf_topk(emb, queries, nprobe=3, centroids=cent)
     assert _rows(got) == _rows(want)
 
 
@@ -84,7 +84,7 @@ def test_tombstone_delete_and_apply(spark, emb, tmp_path):
 
     queries = emb.filter(F.col("vec_id") < 5)
     cent = wh.read("idx__centroids")
-    want = _rows(ivf_topk(survivors, queries, k=10, nprobe=3, centroids=cent))
+    want = _rows(ivf_topk(survivors, queries, nprobe=3, centroids=cent))
     assert _rows(ann_query(wh, queries, "idx")) == want
 
     # tombstoned ids are dead to re-ingest until physically applied

@@ -53,8 +53,8 @@ def test_build_ingest_query_matches_one_shot(spark, tmp_path):
     n = ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "bm", BM25)
     assert n == corpus.filter(F.col("doc_id") % 2 == 1).count()
 
-    got = _rows(bm25_query(wh, queries, table="bm", k=10))
-    want = _rows(bm25_topk(corpus, queries, k=10))
+    got = _rows(bm25_query(wh, queries, table="bm"))
+    want = _rows(bm25_topk(corpus, queries))
     assert got == want and len(got) > 0
 
 
@@ -66,10 +66,10 @@ def test_ingest_replay_is_noop(spark, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     half = corpus.filter(F.col("doc_id") % 2 == 0)
     build_lexical_index(wh, half, "bm", BM25)
-    before = _rows(bm25_query(wh, queries, table="bm", k=10))
+    before = _rows(bm25_query(wh, queries, table="bm"))
     assert ingest_docs(wh, half, "bm", BM25) == 0
     assert wh.read("bm__docs").count() == half.count()
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == before
+    assert _rows(bm25_query(wh, queries, table="bm")) == before
 
 
 def test_probe_scan_is_bucket_pruned(spark, tmp_path):
@@ -85,7 +85,7 @@ def test_probe_scan_is_bucket_pruned(spark, tmp_path):
     import re
 
     plan = (
-        bm25_query(wh, one_q, table="bm", k=5)
+        bm25_query(wh, one_q, table="bm")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -93,14 +93,6 @@ def test_probe_scan_is_bucket_pruned(spark, tmp_path):
     # the postings FileScans must carry the probe bucket as a PARTITION
     # filter (e.g. "PartitionFilters: [isnotnull(bkt#69), (bkt#69 = 0)]")
     assert re.search(r"PartitionFilters: \[isnotnull\(bkt#\d+\)", plan), plan[:2000]
-
-
-def test_guards(spark, tmp_path):
-    corpus, queries = _corpus_and_queries(spark)
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_lexical_index(wh, corpus.limit(10), "bm", BM25)
-    with pytest.raises(ValueError):
-        bm25_query(wh, queries, table="bm", k=0)
 
 
 def test_crash_window_duplicate_postings_heal(spark, tmp_path):
@@ -118,8 +110,8 @@ def test_crash_window_duplicate_postings_heal(spark, tmp_path):
     # redelivery: anti-join sees no membership, ingests the whole batch
     assert ingest_docs(wh, odd, "bm", BM25) == odd.count()
 
-    got = _rows(bm25_query(wh, queries, table="bm", k=10))
-    want = _rows(bm25_topk(corpus, queries, k=10))
+    got = _rows(bm25_query(wh, queries, table="bm"))
+    want = _rows(bm25_topk(corpus, queries))
     assert got == want
 
 
@@ -143,9 +135,9 @@ def test_compaction_preserves_answers(spark, tmp_path):
     build_lexical_index(wh, corpus.filter(F.col("doc_id") % 2 == 0), "bm", BM25)
     ingest_docs(wh, corpus.filter(F.col("doc_id") % 2 == 1), "bm", BM25)
 
-    before = _rows(bm25_query(wh, queries, table="bm", k=10))
+    before = _rows(bm25_query(wh, queries, table="bm"))
     wh.compact("bm__postings")  # inherits the bkt hive layout
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == before
+    assert _rows(bm25_query(wh, queries, table="bm")) == before
 
 
 def test_tombstone_delete_and_apply(spark, tmp_path):
@@ -163,14 +155,14 @@ def test_tombstone_delete_and_apply(spark, tmp_path):
     delete_ids(wh, dead_ids, "bm", BUCKETED)
     delete_ids(wh, dead_ids[:5], "bm", BUCKETED)  # idempotent re-delete
 
-    want = _rows(bm25_topk(survivors, queries, k=10))
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == want
+    want = _rows(bm25_topk(survivors, queries))
+    assert _rows(bm25_query(wh, queries, table="bm")) == want
     # tombstoned ids are dead to re-ingest until physically applied
     assert ingest_docs(wh, corpus.filter(F.col("doc_id").isin(dead_ids[:3])),
                        "bm", BM25) == 0
 
     apply_deletes(wh, "bm", BUCKETED)
-    assert _rows(bm25_query(wh, queries, table="bm", k=10)) == want
+    assert _rows(bm25_query(wh, queries, table="bm")) == want
     assert not wh.exists("bm__deleted")
     # physical apply preserved the hive layout: a single-token probe
     # still prunes statically (multi-token queries print an IN-list
@@ -178,7 +170,7 @@ def test_tombstone_delete_and_apply(spark, tmp_path):
     import re
     one_q = queries.limit(1).select("query_id", F.lit("scan").alias("text"))
     plan = (
-        bm25_query(wh, one_q, table="bm", k=5)
+        bm25_query(wh, one_q, table="bm")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert re.search(r"PartitionFilters: \[isnotnull\(bkt#\d+\)", plan)

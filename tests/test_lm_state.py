@@ -49,23 +49,26 @@ def test_two_batch_ingest_equals_one_shot(spark, tmp_path, corpus):
     ingest_lm_batch(inc, corpus.filter("doc_id > 2"))
     one = _wh(spark, tmp_path, "one")
     ingest_lm_batch(one, corpus)
-    assert _counts(*lm_state(inc, min_count=1)) == _counts(
-        *lm_state(one, min_count=1)
-    )
-    # known values: c1 = {a:4, b:4, x:1}; c2 = {(a,b):3, (b,a):1, (b,x):1}
-    u, b = _counts(*lm_state(inc, min_count=1))
+    assert _counts(*lm_state(inc)) == _counts(*lm_state(one))
+    # known values: c1 = {a:4, b:4, x:1}; raw c2 = {(a,b):3, (b,a):1,
+    # (b,x):1}, of which only (a,b) survives the read-time prune
+    u, b = _counts(*lm_state(inc))
     assert u == {"a": 4, "b": 4, "x": 1}
-    assert b == {("a", "b"): 3, ("b", "a"): 1, ("b", "x"): 1}
+    assert b == {("a", "b"): 3}
+    raw = inc.read("lm_bigrams").groupBy("prev", "cur").sum("n2").collect()
+    assert {(r[0], r[1]): r[2] for r in raw} == {
+        ("a", "b"): 3, ("b", "a"): 1, ("b", "x"): 1
+    }
 
 
 def test_redelivery_is_a_noop(spark, tmp_path, corpus):
     wh = _wh(spark, tmp_path, "redeliver")
     batch = corpus.filter("doc_id <= 2")
     e1 = ingest_lm_batch(wh, batch)
-    before = _counts(*lm_state(wh, min_count=1))
+    before = _counts(*lm_state(wh))
     e2 = ingest_lm_batch(wh, batch)  # at-least-once redelivery
     assert e1 == e2  # content-addressed epoch
-    assert _counts(*lm_state(wh, min_count=1)) == before
+    assert _counts(*lm_state(wh)) == before
 
 
 def test_redelivery_writes_nothing(spark, tmp_path, corpus):
@@ -90,11 +93,10 @@ def test_redelivery_writes_nothing(spark, tmp_path, corpus):
 def test_read_time_pruning(spark, tmp_path, corpus):
     wh = _wh(spark, tmp_path, "prune")
     ingest_lm_batch(wh, corpus)
-    _, b2 = lm_state(wh, min_count=2)
+    _, b2 = lm_state(wh)
     assert {(r.prev, r.cur) for r in b2.collect()} == {("a", "b")}
     # raw singletons are still in the store — threshold is read-time
-    _, b1 = lm_state(wh, min_count=1)
-    assert b1.count() == 3
+    assert wh.read("lm_bigrams").count() == 3
 
 
 def test_frozen_model_scoring_equals_self_model(spark, tmp_path, corpus):
@@ -104,7 +106,7 @@ def test_frozen_model_scoring_equals_self_model(spark, tmp_path, corpus):
     wh = _wh(spark, tmp_path, "score")
     ingest_lm_batch(wh, corpus.filter("doc_id <= 2"))
     ingest_lm_batch(wh, corpus.filter("doc_id > 2"))
-    uni, bi = lm_state(wh, min_count=2)
+    uni, bi = lm_state(wh)
     frozen = {
         r.doc_id: r.score
         for r in bigram_surprisal(
@@ -113,7 +115,7 @@ def test_frozen_model_scoring_equals_self_model(spark, tmp_path, corpus):
     }
     own = {
         r.doc_id: r.score
-        for r in bigram_surprisal(corpus, min_count=2).collect()
+        for r in bigram_surprisal(corpus).collect()
     }
     assert set(frozen) == set(own)
     for doc_id, s in own.items():

@@ -38,7 +38,7 @@ def test_vacuum_drops_old_versions_keeps_current(spark, tmp_path):
     for i in range(5):
         wh.overwrite(spark.range(i, i + 10), "t")
     assert wh.read("t", "v000001").count() == 10  # history readable
-    wh.vacuum("t", keep_last=2)
+    wh.vacuum("t")
     assert wh.read("t").agg(F.min("id")).first()[0] == 4  # latest intact
     assert wh.read("t", "v000004").count() == 10  # kept
     try:
@@ -88,7 +88,7 @@ def test_reader_pinned_before_overwrite_survives_flip(spark, tmp_path):
     assert wh.read("t").count() == 10  # new readers see the flip
 
 
-def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
+def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path, monkeypatch):
     """Merge contract: a partition-pruned merge WRITES only the
     touched partitions — untouched partitions carry into the new
     snapshot as hardlinks of the previous version's immutable files
@@ -138,7 +138,10 @@ def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path):
     }
 
     # durability: dropping the old version leaves the snapshot whole
-    wh.vacuum("t", keep_last=1)
+    from stock_bars_data_engineering_project_spark.sinks import warehouse
+
+    monkeypatch.setattr(warehouse, "VACUUM_KEEP_LAST", 1)
+    wh.vacuum("t")
     assert sorted(
         tuple(r) for r in wh.read("t").select("id", "p", "val").collect()
     ) == want

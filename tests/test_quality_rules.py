@@ -122,7 +122,7 @@ def _bigram_docs(spark):
 
 def test_bigram_surprisal_hand_computed(spark):
     """Corpus: c1 = {a:4, b:4, x:1}, total 9; bigrams (a,b)x3 (b,a)x1
-    (b,x)x1; min_count=2 prunes everything but (a,b) — so doc 1 mixes
+    (b,x)x1; BIGRAM_MIN_COUNT=2 prunes everything but (a,b) — so doc 1 mixes
     the seen branch (3/4) with the backoff branch (0.4*4/9), and doc 3
     is pure backoff. Docs 4 (one token) and 5 (empty) emit no row."""
     import math
@@ -130,7 +130,7 @@ def test_bigram_surprisal_hand_computed(spark):
     docs, bigram_surprisal = _bigram_docs(spark)
     out = {
         r.doc_id: (r.score, r.n_bigrams)
-        for r in bigram_surprisal(docs, min_count=2).collect()
+        for r in bigram_surprisal(docs).collect()
     }
     p_ab, p_ba, p_bx = 3 / 4, 0.4 * 4 / 9, 0.4 * 1 / 9
     expect = {
@@ -144,17 +144,20 @@ def test_bigram_surprisal_hand_computed(spark):
         assert out[doc_id][1] == n, doc_id
 
 
-def test_bigram_surprisal_no_pruning_never_backs_off(spark):
-    """With min_count=1 and the corpus as its own model, every observed
-    bigram hits the seen branch: scores are pure conditional bigram
-    surprisal (and doc 3's singleton transition stops being punished by
-    the unigram backoff)."""
+def test_bigram_surprisal_no_pruning_never_backs_off(spark, monkeypatch):
+    """With no pruning (BIGRAM_MIN_COUNT 1) and the corpus as its own
+    model, every observed bigram hits the seen branch: scores are pure
+    conditional bigram surprisal (and doc 3's singleton transition stops
+    being punished by the unigram backoff)."""
     import math
 
+    from stock_bars_data_engineering_project_spark.operators import quality
+
+    monkeypatch.setattr(quality, "BIGRAM_MIN_COUNT", 1)
     docs, bigram_surprisal = _bigram_docs(spark)
     out = {
         r.doc_id: r.score
-        for r in bigram_surprisal(docs, min_count=1).collect()
+        for r in bigram_surprisal(docs).collect()
     }
     # (b,x): c2=1, c1(b)=4 -> p = 1/4 (seen), not 0.4*1/9 (backoff)
     assert abs(out[3] - (-math.log(1 / 4))) < 1e-12
@@ -244,7 +247,7 @@ def test_bigram_surprisal_frozen_reference_model(spark, tmp_path):
 
     self_scores = {
         r.doc_id: round(r.score, 10)
-        for r in bigram_surprisal(docs, min_count=2).collect()
+        for r in bigram_surprisal(docs).collect()
     }
     frozen_scores = {
         r.doc_id: round(r.score, 10)
@@ -314,12 +317,16 @@ def test_bigram_surprisal_frozen_model_oov_unk_handling(spark):
     assert abs(out[2][0] - (-math.log(p_unk))) < 1e-12
 
 
-def test_pmi_collocations_matches_python_replay(spark):
+def test_pmi_collocations_matches_python_replay(spark, monkeypatch):
     import math
 
+    from stock_bars_data_engineering_project_spark.operators import quality
     from stock_bars_data_engineering_project_spark.operators.quality import (
         pmi_collocations,
     )
+
+    # the fixture's pairs occur at most 3 times: prune below 2
+    monkeypatch.setattr(quality, "PMI_MIN_COUNT", 2)
 
     docs = spark.createDataFrame(
         [
@@ -332,7 +339,7 @@ def test_pmi_collocations_matches_python_replay(spark):
     )
     got = {
         (r.prev, r.cur): (r.n2, r.pmi)
-        for r in pmi_collocations(docs, min_count=2).collect()
+        for r in pmi_collocations(docs).collect()
     }
 
     toks = []

@@ -20,7 +20,7 @@ def test_range_join_inclusive_and_multibucket(spark):
     right = spark.createDataFrame(
         [(100, _dt(10), _dt(13))], "interval_id long, lo timestamp, hi timestamp"
     )
-    rows = range_join(left, right, on="ts", lo="lo", hi="hi", bucket_seconds=3600).collect()
+    rows = range_join(left, right, lo="lo", hi="hi").collect()
     got = sorted(r.event_id for r in rows)
     # 1: lo-inclusive; 2: interior; 3: hi-inclusive; 4: one second past hi
     assert got == [1, 2, 3]

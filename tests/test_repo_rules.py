@@ -2,7 +2,7 @@
 stays inside ``sinks/``, the slow-tier manifest names only tests that
 exist, every top-level package function or class is named by the
 package or its entry points, and every defaulted package parameter is
-set by some product caller. All parse source with ``ast``; no Spark
+set by some product caller to a value other than its default. All parse source with ``ast``; no Spark
 session needed."""
 
 from __future__ import annotations
@@ -154,30 +154,75 @@ def test_every_top_level_definition_is_named():
     assert sorted(set(UNNAMED_ALLOWED) - unnamed) == []
 
 
-# A defaulted parameter no product caller sets is an option nobody
-# uses: inline its default. One may stay only with a reason in
-# tools/reachability.py's KEEP_PARAMS table.
+# A defaulted parameter that no product caller sets to a value other
+# than its default is an option nobody uses: inline its default. One may
+# stay only with a reason in tools/reachability.py's KEEP_PARAMS table.
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
-    """(name, positional index or None for keyword-only) of every
-    parameter of ``fn`` that has a default."""
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, positional index or None for keyword-only, default) of
+    every parameter of ``fn`` that has a default."""
     a = fn.args
     pos = [*a.posonlyargs, *a.args]
     first = len(pos) - len(a.defaults)
-    out = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
-    out += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    out = [(p.arg, i, a.defaults[i - first]) for i, p in enumerate(pos) if i >= first]
+    out += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
     return out
+
+
+def _is_dataclass(node: ast.ClassDef) -> bool:
+    return any(
+        (getattr(d, "id", None) or getattr(d, "attr", None)) == "dataclass"
+        or getattr(getattr(d, "func", None), "id", None) == "dataclass"
+        for d in node.decorator_list
+    )
+
+
+def _dataclass_init(node: ast.ClassDef) -> ast.FunctionDef:
+    """The ``__init__`` a ``@dataclass`` generates from its annotated
+    fields; ``field(default_factory=...)`` reads as a non-literal default."""
+    fields = [
+        f for f in node.body
+        if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+        and "ClassVar" not in ast.unparse(f.annotation)
+    ]
+    defaults = [f.value for f in fields if f.value is not None]
+    return ast.FunctionDef(
+        name="__init__",
+        args=ast.arguments(
+            posonlyargs=[],
+            args=[ast.arg("self"), *(ast.arg(f.target.id) for f in fields)],
+            kwonlyargs=[], kw_defaults=[], defaults=defaults,
+        ),
+        body=[], decorator_list=[],
+    )
+
+
+_UNKNOWN = object()
+
+
+def _literal(node: ast.expr):
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _UNKNOWN
+
+
+def _same_literal(value: ast.expr, default: ast.expr) -> bool:
+    """``value`` is a literal equal to the literal ``default`` (same type)."""
+    a, b = _literal(value), _literal(default)
+    return a is not _UNKNOWN and b is not _UNKNOWN and type(a) is type(b) and a == b
 
 
 class _Calls(ast.NodeVisitor):
     """Every call in one module by the name it is matched on: the
     function's name (through ``import ... as`` aliases), or
     ``<Class>.__init__`` for ``Class(...)`` and a classmethod's
-    ``cls(...)``. A record is (positional count, keywords, ``**``
-    values, enclosing function, bound), where bound means the callee's
-    first parameter is already filled (``obj.m(...)``, ``Class(...)``).
-    A call through a variable holding a function is not matched."""
+    ``cls(...)``. A record is (positional values before any ``*args``,
+    whether a ``*args`` follows, keyword values, ``**`` values,
+    enclosing function, bound), where bound means the callee's first
+    parameter is already filled (``obj.m(...)``, ``Class(...)``). A call
+    through a variable holding a function is not matched."""
 
     def __init__(self, classes: set[str], calls: dict[str, list]):
         self.classes = classes
@@ -213,10 +258,14 @@ class _Calls(ast.NodeVisitor):
         if name in self.classes:
             name, bound = f"{name}.__init__", True
         if name:
-            star = any(isinstance(a, ast.Starred) for a in node.args)
+            star = next(
+                (i for i, a in enumerate(node.args) if isinstance(a, ast.Starred)),
+                len(node.args),
+            )
             self.calls[name].append((
-                float("inf") if star else len(node.args),
-                {k.arg for k in node.keywords if k.arg},
+                node.args[:star],
+                star < len(node.args),
+                {k.arg: k.value for k in node.keywords if k.arg},
                 [k.value for k in node.keywords if k.arg is None],
                 self._fn[-1],
                 bound,
@@ -226,16 +275,22 @@ class _Calls(ast.NodeVisitor):
 
 def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
     """``<module>:<qualname>(<param>)`` for every defaulted parameter of a
-    function in ``sources`` that no call in ``sources`` or ``roots``
-    sets, by keyword, by position or through ``**kwargs`` forwarding.
-    Calls match by name, so a name two functions share counts for both
-    (the rule errs toward "set")."""
+    function (or ``@dataclass`` field) in ``sources`` that no call in
+    ``sources`` or ``roots`` sets: by keyword or by position to a
+    non-literal or to a literal other than the default, or through
+    ``**kwargs`` forwarding. Calls match by name, so a name two
+    functions share counts for both (the rule errs toward "set")."""
     trees = {m: ast.parse(text) for m, text in sources.items()}
     defs: list[tuple[str, str, ast.FunctionDef, bool]] = []
 
     def visit(module, body, prefix, cls):
         for node in body:
             if isinstance(node, ast.ClassDef):
+                if _is_dataclass(node):
+                    defs.append((
+                        f"{module}:{prefix}{node.name}.__init__",
+                        f"{node.name}.__init__", _dataclass_init(node), True,
+                    ))
                 visit(module, node.body, f"{prefix}{node.name}.", node.name)
             elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 static = any(
@@ -265,8 +320,8 @@ def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
             return set()
         named = {a.arg for a in [*fn.args.posonlyargs, *fn.args.args, *fn.args.kwonlyargs]}
         out: set[str] = set()
-        for _, kws, fwds, enclosing, _ in calls.get(fn.name, ()):
-            out |= kws - named
+        for _, _, kws, fwds, enclosing, _ in calls.get(fn.name, ()):
+            out |= set(kws) - named
             for v in fwds:
                 more = forwarded(v, enclosing, seen | {fn})
                 if more is None:
@@ -274,10 +329,16 @@ def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
                 out |= more
         return out
 
-    def is_set(name, index, records, method) -> bool:
-        for npos, kws, fwds, enclosing, bound in records:
-            filled = npos + (1 if method and bound else 0)
-            if name in kws or (index is not None and filled > index):
+    def is_set(name, index, default, records, method) -> bool:
+        for args, starred, kws, fwds, enclosing, bound in records:
+            value = kws.get(name)
+            if value is None and index is not None:
+                pos = index - (1 if method and bound else 0)
+                if 0 <= pos < len(args):
+                    value = args[pos]
+                elif starred and pos >= len(args):
+                    return True  # filled by a *args of unknown values
+            if value is not None and not _same_literal(value, default):
                 return True
             for v in fwds:
                 more = forwarded(v, enclosing, frozenset())
@@ -288,8 +349,8 @@ def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
     return {
         f"{qual}({name})"
         for qual, key, fn, method in defs
-        for name, index in _defaulted(fn)
-        if not is_set(name, index, calls.get(key, ()), method)
+        for name, index, default in _defaulted(fn)
+        if not is_set(name, index, default, calls.get(key, ()), method)
     }
 
 
@@ -305,20 +366,46 @@ def test_unset_parameters_rule():
             "def inner(x, deep=0, shallow=0):\n    return deep + shallow\n\n"
             "def outer(x, **kw):\n    return inner(x, **kw)\n\n"
             "def connect(url, user=None):\n    return url\n\n"
-            "def aliased(x, opt=None):\n    return opt\n"
+            "def aliased(x, opt=None):\n    return opt\n\n"
+            "def same(x, k=10, mode='a'):\n    return k\n\n"
+            "def two(x, k=10):\n    return k\n\n"
+            "def expr(x, k=10):\n    return k\n\n"
+            "@dataclass\n"
+            "class Spec:\n"
+            "    root: str\n"
+            "    retries: int = 5\n\n"
+            "@dataclass\n"
+            "class Config:\n"
+            "    table: str = 't'\n\n"
+            "    @classmethod\n"
+            "    def load(cls, raw):\n        return cls(**raw)\n"
         ),
     }
     roots = [
         "from a import aliased as other\n"
         "by_keyword(1, flag=True)\nby_position(1, 2)\nC().run()\n"
         "outer(1, deep=3)\nconnect('db://')\nother(1, opt=2)\n"
+        "same(1, k=10)\nsame(2, 10, 'a')\n"
+        "two(1, k=10)\ntwo(2, k=20)\n"
+        "expr(1, k=K)\n"
+        "Spec('/r')\nConfig.load({})\n"
     ]
     unset = unset_parameters(sources, roots)
     # keyword, positional, self-method, aliased and forwarded (deep)
-    # passes set their parameters; nobody fills `shallow` through **kw
-    assert unset == {"a.py:never(n)", "a.py:inner(shallow)", "a.py:connect(user)"}
+    # passes set their parameters; nobody fills `shallow` through **kw;
+    # a pass of the default literal (same.k, same.mode) sets nothing,
+    # two distinct literals (two.k) or a non-literal (expr.k) do; a
+    # dataclass field no root sets (tests are not roots) is unset, one
+    # filled through cls(**raw) is set
+    assert unset == {
+        "a.py:never(n)", "a.py:inner(shallow)", "a.py:connect(user)",
+        "a.py:same(k)", "a.py:same(mode)", "a.py:Spec.__init__(retries)",
+    }
     allowed = {"a.py:connect(user)": "deployment setting: credential"}
-    assert unset - set(allowed) == {"a.py:never(n)", "a.py:inner(shallow)"}
+    assert unset - set(allowed) == {
+        "a.py:never(n)", "a.py:inner(shallow)", "a.py:same(k)",
+        "a.py:same(mode)", "a.py:Spec.__init__(retries)",
+    }
 
 
 def test_every_defaulted_parameter_is_set_by_product():

@@ -70,7 +70,7 @@ def test_bm25_matches_python_reference(spark):
     docs, queries = _frames(spark)
     got = {
         (r.query_id, r.doc_id): r.bm25
-        for r in bm25_topk(docs, queries, k=10).collect()
+        for r in bm25_topk(docs, queries).collect()
     }
     expect = _bm25_ref(DOCS, QUERIES)
     assert set(got) == set(expect)
@@ -80,9 +80,13 @@ def test_bm25_matches_python_reference(spark):
     assert not any(q == 102 for q, _ in got)
 
 
-def test_bm25_ranking_and_k_cut(spark):
+def test_bm25_ranking_and_k_cut(spark, monkeypatch):
+    from stock_bars_data_engineering_project_spark.operators import retrieval
+
+    # the fixture ranks fewer than TOP_K docs per query: cut at 2
+    monkeypatch.setattr(retrieval, "TOP_K", 2)
     docs, queries = _frames(spark)
-    rows = bm25_topk(docs, queries, k=2).collect()
+    rows = bm25_topk(docs, queries).collect()
     by_q: dict[int, list] = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append(r)
@@ -107,7 +111,7 @@ def test_bm25_tiebreak_is_doc_id(spark):
         "doc_id long, text string",
     )
     queries = spark.createDataFrame([(1, "same")], "query_id long, text string")
-    rows = sorted(bm25_topk(docs, queries, k=3).collect(), key=lambda r: r.rank)
+    rows = sorted(bm25_topk(docs, queries).collect(), key=lambda r: r.rank)
     assert [r.doc_id for r in rows] == [3, 5, 7]
     assert rows[0].bm25 == rows[1].bm25 == rows[2].bm25
 
@@ -126,12 +130,6 @@ def test_bm25_plan_shape(spark):
     # the query-vocabulary and per-term tables join broadcast, never a
     # corpus-sized sort-merge
     assert "BroadcastHashJoin" in plan
-
-
-def test_bm25_guards(spark):
-    docs, queries = _frames(spark)
-    with pytest.raises(ValueError, match="k must be positive"):
-        bm25_topk(docs, queries, k=0)
 
 
 # --- reciprocal-rank fusion ------------------------------------------------
@@ -154,7 +152,7 @@ def test_rrf_hand_computed_fusion(spark):
     sem = _ranked(spark, [(1, 200, 1), (1, 100, 2)])
     out = {
         r.doc_id: (r.score, r.rank)
-        for r in rrf_fuse([lex, sem], k=10).collect()
+        for r in rrf_fuse([lex, sem]).collect()
     }
     s100 = 1 / 61 + 1 / 62
     s200 = 1 / 62 + 1 / 61
@@ -166,14 +164,17 @@ def test_rrf_hand_computed_fusion(spark):
     assert out[100][1] == 1 and out[200][1] == 2 and out[300][1] == 3
 
 
-def test_rrf_k_cut_and_multi_query(spark):
+def test_rrf_k_cut_and_multi_query(spark, monkeypatch):
+    from stock_bars_data_engineering_project_spark.operators import retrieval
     from stock_bars_data_engineering_project_spark.operators.retrieval import rrf_fuse
+
+    monkeypatch.setattr(retrieval, "TOP_K", 2)
 
     lex = _ranked(
         spark, [(q, d, r) for q in (1, 2) for r, d in enumerate((10, 20, 30), 1)]
     )
     sem = _ranked(spark, [(1, 40, 1), (2, 20, 1)])
-    out = rrf_fuse([lex, sem], k=2)
+    out = rrf_fuse([lex, sem])
     got = {(r.query_id, r.doc_id): r.rank for r in out.collect()}
     # q1: all single-leg contributions; lex rank-1 (doc 10) wins,
     # sem rank-1 (doc 40) ties it and loses on id
@@ -202,14 +203,13 @@ def test_rrf_matches_registered_hybrid_arm_shape(spark):
         docs.filter(F.col("doc_id") < 25).select(
             F.col("doc_id").alias("query_id"), "text"
         ),
-        k=10,
     ).select("query_id", "doc_id", "rank")
     sem = cosine_topk(
         emb.filter(F.col("vec_id") >= 25),
         emb.filter(F.col("vec_id") < 25),
         k=10,
     ).select("query_id", F.col("vec_id").alias("doc_id"), "rank")
-    fused = rrf_fuse([lex, sem], k=10)
+    fused = rrf_fuse([lex, sem])
     leg_keys = {
         (r.query_id, r.doc_id) for r in lex.collect()
     } | {(r.query_id, r.doc_id) for r in sem.collect()}
@@ -287,11 +287,11 @@ def test_prf_second_pass_recalls_expansion_matches(spark):
     queries = docs.filter(F.col("doc_id") < 25).select(
         F.col("doc_id").alias("query_id"), "text"
     )
-    first = bm25_topk(corpus, queries, k=10)
+    first = bm25_topk(corpus, queries)
     expanded = prf_expand(
         corpus, queries, first.select("query_id", "doc_id", "rank")
     )
-    second = bm25_topk(corpus, expanded, k=10)
+    second = bm25_topk(corpus, expanded)
     f = {(r.query_id, r.doc_id) for r in first.collect()}
     s = {(r.query_id, r.doc_id) for r in second.collect()}
     assert {q for q, _ in f} == {q for q, _ in s}  # same query coverage

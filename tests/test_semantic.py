@@ -36,13 +36,14 @@ def _np_best(train_rows, eval_rows):
 
 def test_semantic_decontaminate_matches_python_argmax(spark):
     from stock_bars_data_engineering_project_spark.operators.semantic import (
+        DECONTAM_COS,
         semantic_decontaminate,
     )
 
     emb = load_table(spark, SF, "embeddings").limit(200)
     train = emb.filter(F.col("vec_id") % 20 != 0)
     ev = emb.filter(F.col("vec_id") % 20 == 0)
-    out = semantic_decontaminate(train, ev, threshold=0.3)
+    out = semantic_decontaminate(train, ev)
     got = {r.vec_id: r for r in out.collect()}
 
     expect = _np_best(train.collect(), ev.collect())
@@ -51,7 +52,7 @@ def test_semantic_decontaminate_matches_python_argmax(spark):
         r = got[vid]
         assert r.near_eval_id == eid, vid
         assert abs(r.cos - round(c, 4)) <= 1e-9, vid
-        assert r.contaminated == (round(c, 6) >= 0.3), vid
+        assert r.contaminated == (round(c, 6) >= DECONTAM_COS), vid
 
 
 def test_semantic_decontaminate_blocked_is_subset_of_exact(spark):
@@ -80,16 +81,11 @@ def test_semantic_decontaminate_blocked_is_subset_of_exact(spark):
 def test_semantic_decontaminate_empty_eval_and_guards(spark):
     from stock_bars_data_engineering_project_spark.operators.semantic import (
         semantic_decontaminate,
-        semantic_decontaminate_blocked,
     )
 
     emb = load_table(spark, SF, "embeddings").limit(50)
     none = emb.filter(F.lit(False))
     assert semantic_decontaminate(emb, none).count() == 0
 
-    with pytest.raises(ValueError, match="threshold"):
-        semantic_decontaminate(emb, emb, threshold=1.5)
-    with pytest.raises(ValueError, match="hamming"):
-        semantic_decontaminate_blocked(emb, emb, hamming=3)
     with pytest.raises(ValueError, match="reserved"):
         semantic_decontaminate(emb.withColumn("cos", F.lit(1.0)), emb)

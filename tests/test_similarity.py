@@ -24,6 +24,29 @@ def test_bruteforce_topk_properties(spark):
         assert cosines == sorted(cosines, reverse=True)  # monotone
 
 
+def test_lsh_planes_grow_two_per_corpus_doubling():
+    """8 sign bits up to LSH_BASE_ROWS rows, +2 per doubling beyond
+    (rounded up), capped at 62 so the bucket id stays a positive long."""
+    from stock_bars_data_engineering_project_spark.operators.similarity import (
+        LSH_BASE_ROWS,
+        lsh_planes,
+    )
+
+    class Rows:
+        def __init__(self, n):
+            self.n = n
+
+        def count(self):
+            return self.n
+
+    base = LSH_BASE_ROWS
+    got = [
+        lsh_planes(Rows(n))
+        for n in (0, 1, base, base + 1, 2 * base, 2 * base + 1, 8 * base, 2**60)
+    ]
+    assert got == [8, 8, 8, 10, 10, 12, 14, 62]
+
+
 def test_lsh_recall_floor(spark):
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
@@ -32,7 +55,7 @@ def test_lsh_recall_floor(spark):
     }
     approx = {
         (r.query_id, r.vec_id)
-        for r in lsh_ann_topk(emb, q, k=10, n_planes=5, probe_radius=2).collect()
+        for r in lsh_ann_topk(emb, q).collect()
     }
     # random (near-orthogonal) embeddings are LSH's worst case: recall
     # tracks the probed-bucket fraction (~0.5 here); the floor pins that
@@ -66,7 +89,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     n = emb.count()
     full = {
         (r.query_id, r.vec_id)
-        for r in ivf_topk(emb, q, k=10, centroid_stride=50, nprobe=max(1, n // 50) + 1).collect()
+        for r in ivf_topk(emb, q, nprobe=n // 125 + 1).collect()
     }
     assert full == exact
 
@@ -107,7 +130,7 @@ def test_trained_ivf_recall_at_least_matches_seed(spark):
     trained = kmeans_refine(emb, seed, n_iters=2)
     got = {
         (r.query_id, r.vec_id)
-        for r in ivf_topk(emb, q, k=10, centroids=trained).collect()
+        for r in ivf_topk(emb, q, centroids=trained).collect()
     }
     recall = len(exact & got) / len(exact)
     assert recall >= 0.5, f"trained-IVF recall too low: {recall:.2f}"
@@ -145,7 +168,7 @@ def test_pq_codes_shape_and_range(spark):
     )
 
     emb = load_table(spark, SF, "embeddings")
-    cb = pq_codebook(emb, m=4, dim=64, stride=16).first().cb
+    cb = pq_codebook(emb).first().cb
     n_codes = len({(c.s, c.j) for c in cb})
     assert n_codes == len(cb)  # (s, j) unique
     ks = {}
@@ -169,17 +192,17 @@ def test_pq_rerank_cosines_are_exact(spark):
         (r.query_id, r.vec_id): r.cos
         for r in cosine_topk(emb, q, k=1000).collect()
     }
-    for r in pq_topk(emb, q, k=10, stride=16).collect():
+    for r in pq_topk(emb, q).collect():
         assert exact[(r.query_id, r.vec_id)] == r.cos
 
 
-def test_pq_recall_dial(spark):
+def test_pq_recall_dial(spark, monkeypatch):
     """Near-orthogonal random vectors are PQ's adversarial case
     (quantization error ~ signal, same caveat as the LSH floor), so pin
     the property that matters: recall is monotone in the rerank depth —
     the cost dial works — and clears a floor once the depth amortizes
     the ADC error (measured 0.48/0.64 at 64/96 on this corpus)."""
-    from stock_bars_data_engineering_project_spark.operators.similarity import pq_topk
+    from stock_bars_data_engineering_project_spark.operators import similarity
 
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
@@ -188,9 +211,10 @@ def test_pq_recall_dial(spark):
     }
     recalls = []
     for rr in (32, 96):
+        monkeypatch.setattr(similarity, "PQ_RERANK", rr)
         got = {
             (r.query_id, r.vec_id)
-            for r in pq_topk(emb, q, k=10, stride=16, rerank=rr).collect()
+            for r in similarity.pq_topk(emb, q).collect()
         }
         recalls.append(len(exact & got) / len(exact))
     assert recalls[0] <= recalls[1], f"rerank dial not monotone: {recalls}"
@@ -208,28 +232,25 @@ def test_pq_null_embedding_fails_loudly(spark):
     )
     corpus = emb.select("vec_id", "embedding").unionByName(bad)
     with _pytest.raises(Exception, match="pq_topk"):
-        pq_topk(corpus, emb.filter(F.col("vec_id") < 2), stride=16).collect()
+        pq_topk(corpus, emb.filter(F.col("vec_id") < 2)).collect()
 
 
-def test_pq_correct_with_noncontiguous_ids(spark):
+def test_pq_correct_with_noncontiguous_ids(spark, monkeypatch):
     """Regression: codeword ids must be dense ranks, not id/stride —
     a corpus whose ids don't start at 0 (or aren't stride multiples)
     previously indexed the ADC lookup table out of range / against the
     wrong codeword. With rerank covering the whole corpus, PQ must
     reproduce brute-force exactly regardless of the id layout."""
-    from stock_bars_data_engineering_project_spark.operators.similarity import (
-        cosine_topk,
-        pq_topk,
-    )
+    from stock_bars_data_engineering_project_spark.operators import similarity
 
     emb = load_table(spark, SF, "embeddings").withColumn(
         "vec_id", F.col("vec_id") + 7  # ids 7.. — no longer stride-aligned
     )
     q = emb.filter(F.col("vec_id") < 12)
-    n = emb.count()
+    monkeypatch.setattr(similarity, "PQ_RERANK", emb.count())
     got = {
         (r.query_id, r.vec_id, r.cos, r.rank)
-        for r in pq_topk(emb, q, k=10, stride=16, rerank=n).collect()
+        for r in similarity.pq_topk(emb, q).collect()
     }
     want = {
         (r.query_id, r.vec_id, r.cos, r.rank)
@@ -329,7 +350,7 @@ def test_kmeans_exact_mean_matches_sql_replay(spark):
     trained = kmeans_refine(emb, seed, n_iters=2, exact_mean=True)
     got = {
         (r.query_id, r.vec_id, r.cos, int(r.rank))
-        for r in ivf_topk(emb, q, k=10, centroids=trained).collect()
+        for r in ivf_topk(emb, q, centroids=trained).collect()
     }
 
     con = duckdb.connect()

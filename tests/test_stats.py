@@ -141,7 +141,18 @@ def test_token_budget_raises_on_temp_column_collision(spark):
         token_budget_sample(docs, budgets={"a": 10}, n_tokens=F.col("n"))
 
 
-def test_warehouse_write_lock_blocks_second_writer(spark, tmp_path):
+def _hold_lock(lock):
+    """Take the writer lock ``lock`` on a descriptor of its own, as a
+    second writer would; closing the descriptor releases it."""
+    import fcntl
+    import os
+
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR)
+    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+    return fd
+
+
+def test_warehouse_write_lock_blocks_second_writer(spark, tmp_path, monkeypatch):
     """Concurrent-writer guard: a held lock makes the
     second writer fail loudly instead of silently losing the first
     writer's rows; the lock clears after a successful write."""
@@ -149,27 +160,61 @@ def test_warehouse_write_lock_blocks_second_writer(spark, tmp_path):
 
     import pytest
 
-    from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse
+    from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse, warehouse
 
-    # lock_retries=0: the strict fail-fast posture (a PERSISTENT lock
-    # must fail loudly even with retries — that slower path is covered
-    # by the race test's default-config sibling)
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"), lock_retries=0)
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     df = spark.range(5).select(F.col("id").alias("k"))
     wh.overwrite(df, "t")  # lock taken and released
 
+    # a live holder (this very process, on another descriptor) is never
+    # broken: with no retries the second writer fails at once
+    monkeypatch.setattr(warehouse, "LOCK_RETRIES", 0)
+    monkeypatch.setattr(warehouse, "LOCK_RETRY_BASE_S", 0.0)
     lock = os.path.join(wh.table_path("t"), "._writer_lock")
-    os.makedirs(os.path.dirname(lock), exist_ok=True)
-    with open(lock, "w") as f:
-        f.write("99999")
+    fd = _hold_lock(lock)
     with pytest.raises(RuntimeError, match="concurrent writer"):
         wh.append(df, "t")
-    os.remove(lock)
-    wh.append(df, "t")  # works again once the stale lock is cleared
+    os.close(fd)
+    wh.append(df, "t")  # works again once the holder is gone
+    assert wh.read("t").count() == 10
+    os.close(_hold_lock(lock))  # and the write released it
+
+
+def test_warehouse_write_lock_of_a_crashed_writer_is_released(spark, tmp_path):
+    """A writer that dies while holding the lock (``os._exit`` inside
+    the locked span) does not block the table: the next writer commits."""
+    import os
+    import socket
+    import subprocess
+    import sys
+
+    from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse
+
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    df = spark.range(5).select(F.col("id").alias("k"))
+    wh.overwrite(df, "t")
+    lock = os.path.join(wh.table_path("t"), "._writer_lock")
+    crash = (
+        "import os\n"
+        "from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse\n"
+        f"wh = ParquetWarehouse(None, {wh.root!r})\n"
+        "with wh._write_lock('t'):\n"
+        "    print(os.getpid(), flush=True)\n"
+        "    os._exit(3)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo}
+    run = subprocess.run(
+        [sys.executable, "-c", crash], env=env, capture_output=True, text=True
+    )
+    assert run.returncode == 3
+    with open(lock) as f:  # the crashed holder took the lock
+        assert f.read() == f"{socket.gethostname()}:{run.stdout.strip()}"
+    wh.append(df, "t")
     assert wh.read("t").count() == 10
 
 
-def test_warehouse_write_lock_transient_contention_retries(spark, tmp_path):
+def test_warehouse_write_lock_transient_contention_retries(spark, tmp_path, monkeypatch):
     """Contention policy: a writer arriving while another holds
     the lock backs off and succeeds once the holder releases (one
     winner + one clean retry, no lost update); a lock held past the
@@ -180,31 +225,27 @@ def test_warehouse_write_lock_transient_contention_retries(spark, tmp_path):
 
     import pytest
 
-    from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse
+    from stock_bars_data_engineering_project_spark.sinks import ParquetWarehouse, warehouse
 
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     df = spark.range(5).select(F.col("id").alias("k"))
     wh.overwrite(df, "t")
 
     lock = os.path.join(wh.table_path("t"), "._writer_lock")
-    with open(lock, "w") as f:
-        f.write("winner")
-    releaser = threading.Thread(target=lambda: (time.sleep(0.4), os.remove(lock)))
+    fd = _hold_lock(lock)
+    releaser = threading.Thread(target=lambda: (time.sleep(0.4), os.close(fd)))
     releaser.start()
     wh.append(df, "t")  # retries through the backoff, then commits
     releaser.join()
     assert wh.read("t").count() == 10
-    assert not os.path.exists(lock)
 
     # a lock held past the entire budget is an operational error
-    wh_fast = ParquetWarehouse(
-        spark, str(tmp_path / "wh"), lock_retries=2, lock_retry_base_s=0.01
-    )
-    with open(lock, "w") as f:
-        f.write("stuck")
+    monkeypatch.setattr(warehouse, "LOCK_RETRIES", 2)
+    monkeypatch.setattr(warehouse, "LOCK_RETRY_BASE_S", 0.01)
+    fd = _hold_lock(lock)
     with pytest.raises(RuntimeError, match="past 2 backoff retries"):
-        wh_fast.append(df, "t")
-    os.remove(lock)
+        wh.append(df, "t")
+    os.close(fd)
 
 
 def test_zscore_arm_guards_and_known_value(spark, tmp_path):
@@ -404,7 +445,7 @@ def test_psi_drift_matches_python_replay(spark):
     )
     got = {
         r.event_type: r
-        for r in psi_drift(df, "value", is_reference=F.col("is_ref")).collect()
+        for r in psi_drift(df, is_reference=F.col("is_ref")).collect()
     }
 
     def replay(items):
@@ -452,15 +493,13 @@ def test_psi_vs_reference_matches_python_replay(spark):
         ("a", 101, 2, 40),                       # window 101: new mode only
         ("b", 100, 0, 5),
     ]
-    ref = spark.createDataFrame(ref_rows, "k string, bucket long, n long")
+    ref = spark.createDataFrame(ref_rows, "event_type string, bucket long, n long")
     cur = spark.createDataFrame(
-        cur_rows, "k string, w long, bucket long, n long"
+        cur_rows, "event_type string, w long, bucket long, n long"
     )
     got = {
-        (r.k, r.w): r
-        for r in psi_vs_reference(
-            cur, ref, ref_keys=("k",), window_cols=("w",)
-        ).collect()
+        (r.event_type, r.w): r
+        for r in psi_vs_reference(cur, ref, window_cols=("w",)).collect()
     }
 
     def replay(refc, curc):
@@ -509,9 +548,7 @@ def test_walk_forward_days_laws(spark):
 
     ev = load_table(spark, SF, "events")
     day = F.floor(event_micros(ev, "ts") / F.lit(86400000000.0))
-    out = walk_forward_days(
-        ev, day_idx=day, n_folds=3, test_days=5, embargo_days=2
-    ).collect()
+    out = walk_forward_days(ev, day_idx=day).collect()
     days = {r.day_idx for r in out}
     by_fold = defaultdict(lambda: defaultdict(set))
     for r in out:
@@ -533,12 +570,10 @@ def test_walk_forward_days_laws(spark):
 
     import pytest
 
+    # 16 days: fold 0 would test on days 2..6 and train on none
+    short = ev.filter(day >= hi - 15)
     with pytest.raises(ValueError, match="not enough history"):
-        walk_forward_days(
-            ev, day_idx=day, n_folds=6, test_days=5, embargo_days=2
-        )
-    with pytest.raises(ValueError, match="n_folds"):
-        walk_forward_days(ev, day_idx=day, n_folds=0)
+        walk_forward_days(short, day_idx=day)
 
 
 def test_mad_outliers_matches_python_replay(spark):
@@ -555,7 +590,7 @@ def test_mad_outliers_matches_python_replay(spark):
     df = spark.createDataFrame(rows, ["grp", "value"])
     got = {
         r.grp: (r.median, r.mad, r.n, r.n_outliers)
-        for r in mad_outliers(df, "value", keys=("grp",)).collect()
+        for r in mad_outliers(df, keys=("grp",)).collect()
     }
 
     def _med(vs):
@@ -591,7 +626,7 @@ def test_mad_outliers_ungrouped_broadcast_scalar(spark):
     df = spark.createDataFrame(
         [(float(v),) for v in [1, 2, 3, 4, 5, 1000]], ["value"]
     )
-    row = mad_outliers(df, "value").collect()[0]
+    row = mad_outliers(df).collect()[0]
     assert row.n == 6 and row.n_outliers == 1 and row.median == 3.5
 
 
@@ -722,7 +757,7 @@ def test_mad_outliers_degenerate_mad_reports_null(spark):
         + [("ok", float(v)) for v in (1, 2, 3, 4, 5, 6, 7, 100)]
     )
     df = spark.createDataFrame(rows, "grp string, value double")
-    got = {r.grp: r for r in mad_outliers(df, "value", keys=("grp",)).collect()}
+    got = {r.grp: r for r in mad_outliers(df, keys=("grp",)).collect()}
     assert got["const"].mad == 0.0
     assert got["const"].n_outliers is None
     assert got["const"].n == 8 and got["const"].median == 5.0

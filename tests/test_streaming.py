@@ -24,8 +24,8 @@ def test_stream_matches_batch_tumbling(spark, tmp_path):
     src = str(tmp_path / "src")
     events.write.parquet(src)
 
-    stream = stream_events(spark, src, events.schema, watermark="1 hour")
-    agg = tumbling_agg(stream, duration="1 day")
+    stream = stream_events(spark, src, events.schema)
+    agg = tumbling_agg(stream)
     run_stream_to_memory(agg, "t_stream_batch_eq", output_mode="complete")
     got = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
@@ -33,7 +33,7 @@ def test_stream_matches_batch_tumbling(spark, tmp_path):
     }
     want = {
         (r.window_start, r.event_type): (r.n_events, r.sum_value)
-        for r in tumbling_agg(events, duration="1 day").collect()
+        for r in tumbling_agg(events).collect()
     }
     assert got == want
 
@@ -47,7 +47,7 @@ def test_stateful_first_seen_dedup(spark, tmp_path):
     src = str(tmp_path / "src")
     events.write.parquet(src)
     stream = spark.readStream.schema(events.schema).parquet(src)
-    out = first_seen_per_key(stream, key="user_id")
+    out = first_seen_per_key(stream)
     run_stream_to_memory(out, "t_first_seen", output_mode="append")
     got = {
         r.user_id: (r.first_ts, r.first_event_id)
@@ -85,7 +85,7 @@ def test_streaming_ewma_continues_state_across_batches(spark, tmp_path):
         .select("user_id", "event_id", "ts", "value")
     )
     expected = {
-        r.event_id: r.ema for r in ewma_per_key(events, alpha=0.3).collect()
+        r.event_id: r.ema for r in ewma_per_key(events).collect()
     }
     from stock_bars_data_engineering_project_spark.functions.scalars import event_micros
 
@@ -102,7 +102,7 @@ def test_streaming_ewma_continues_state_across_batches(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        ewma_stream(stream, alpha=0.3)
+        ewma_stream(stream)
         .writeStream.format("memory")
         .queryName("ewma_stream_test")
         .outputMode("append")
@@ -134,7 +134,7 @@ def test_streaming_ewma_correct_across_small_arrow_chunks(spark, tmp_path):
     events = spark.createDataFrame(
         rows, "event_id long, user_id long, ts timestamp, value double"
     )
-    expected = {r.event_id: r.ema for r in ewma_per_key(events, alpha=0.3).collect()}
+    expected = {r.event_id: r.ema for r in ewma_per_key(events).collect()}
 
     src = str(tmp_path / "src")
     events.repartition(4).write.parquet(src)  # shuffled file order
@@ -143,7 +143,7 @@ def test_streaming_ewma_correct_across_small_arrow_chunks(spark, tmp_path):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
         stream = spark.readStream.schema(events.schema).parquet(src)
         q = (
-            ewma_stream(stream, alpha=0.3)
+            ewma_stream(stream)
             .writeStream.format("memory")
             .queryName("ewma_chunked_test")
             .outputMode("append")
@@ -213,7 +213,7 @@ def test_dedup_within_watermark_exactly_once(spark, tmp_path):
     from stock_bars_data_engineering_project_spark.functions.scalars import as_event_time
 
     stream = (
-        as_event_time(spark.readStream.schema(events.schema).parquet(dup), "ts")
+        as_event_time(spark.readStream.schema(events.schema).parquet(dup))
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
@@ -231,7 +231,7 @@ def test_stream_outer_interval_join_matches_batch_in_closed_region(spark, tmp_pa
     tail, still inside an open window at end of input, is exactly the
     part a real stream would emit on the next batch)."""
     from stock_bars_data_engineering_project_spark.streaming.joins import (
-        interval_join_outer,
+        interval_join,
     )
 
     events = (
@@ -242,15 +242,13 @@ def test_stream_outer_interval_join_matches_batch_in_closed_region(spark, tmp_pa
     src = str(tmp_path / "src")
     events.write.parquet(src)
 
-    purchases_s = stream_events(spark, src, events.schema, watermark="1 hour").filter(
+    purchases_s = stream_events(spark, src, events.schema).filter(
         F.col("event_type") == "purchase"
     )
-    views_s = stream_events(spark, src, events.schema, watermark="1 hour").filter(
+    views_s = stream_events(spark, src, events.schema).filter(
         F.col("event_type") == "view"
     )
-    out = interval_join_outer(
-        purchases_s, views_s, key="user_id", left_ts="ts", right_ts="ts",
-    ).select("l_event_id", "r_event_id")
+    out = interval_join(purchases_s, views_s, how="left_outer").select("l_event_id", "r_event_id")
     run_stream_to_memory(out, "t_outer_ij", output_mode="append")
     got = spark.table("t_outer_ij")
 
@@ -258,12 +256,10 @@ def test_stream_outer_interval_join_matches_batch_in_closed_region(spark, tmp_pa
         as_event_time,
     )
 
-    batch = as_event_time(events, "ts")
+    batch = as_event_time(events)
     purchases_b = batch.filter(F.col("event_type") == "purchase")
     views_b = batch.filter(F.col("event_type") == "view")
-    want = interval_join_outer(
-        purchases_b, views_b, key="user_id", left_ts="ts", right_ts="ts",
-    ).select("l_event_id", "l_ts", "r_event_id")
+    want = interval_join(purchases_b, views_b, how="left_outer").select("l_event_id", "l_ts", "r_event_id")
 
     # closed region: watermark delay + match window behind max event time
     hi = batch.agg(F.max("ts")).first()[0]
@@ -314,7 +310,7 @@ def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
             "RocksDBStateStoreProvider",
         )
         stream = spark.readStream.schema(events.schema).parquet(src)
-        out = first_seen_per_key(stream, key="user_id")
+        out = first_seen_per_key(stream)
         q = (
             out.writeStream.format("memory")
             .queryName("t_first_seen_rocks")
@@ -379,12 +375,12 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
     second = events.filter(F.col("event_id") % 2 == 1)
     first.write.mode("append").parquet(src)
     rollup_maintenance_stream(
-        spark, src, first.schema, wh, "roll", keys=("user_id",),
+        spark, src, first.schema, wh, "roll",
         checkpoint_dir=ckpt, distinct_col="event_id",
     )
     second.write.mode("append").parquet(src)
     rollup_maintenance_stream(
-        spark, src, first.schema, wh, "roll", keys=("user_id",),
+        spark, src, first.schema, wh, "roll",
         checkpoint_dir=ckpt, distinct_col="event_id",
     )
 
@@ -395,7 +391,7 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
     # (at-least-once delivery) -> rewrites the same partition, no change
     epochs = [r["_epoch"] for r in wh.read("roll").select("_epoch").distinct().collect()]
     last = max(epochs)
-    inc = rollup_increment(second, keys=("user_id",), distinct_col="event_id")
+    inc = rollup_increment(second, distinct_col="event_id")
     wh.merge(
         inc.withColumn("_epoch", F.lit(last)),
         "roll",

@@ -53,7 +53,7 @@ def test_frame_sample_plumbing(spark):
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(20)
     media = attach_binary_payload(docs)
 
-    frames = sample_frames(media, n_frames=4)
+    frames = sample_frames(media)
     out = frames.collect()
     assert len(out) == 80  # 1 -> N fan-out
     by_media = {}
@@ -197,7 +197,7 @@ def test_phash_dedup_pipeline(spark):
     # driver-side replay agrees with the executor-side computation
     assert rows[1] == rows[2]
     assert rows[1] == average_hash(fake_gray8x8(b"same bytes"))
-    pairs = phash_dup_pairs(hashed, max_hamming=3).collect()
+    pairs = phash_dup_pairs(hashed).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in pairs if r.hamming == 0] == [(1, 2, 0)]
 
     # pigeonhole completeness on controlled hashes: flip bits across
@@ -215,7 +215,7 @@ def test_phash_dedup_pipeline(spark):
     )
     got = {
         (r.id_a, r.id_b)
-        for r in phash_dup_pairs(ctl, max_hamming=3).collect()
+        for r in phash_dup_pairs(ctl).collect()
     }
     vals = {r.media_id: r.phash for r in ctl.collect()}
     expect = {
@@ -225,9 +225,6 @@ def test_phash_dedup_pipeline(spark):
     }
     assert got == expect
     assert (10, 14) not in got  # hamming 4 excluded
-
-    with pytest.raises(ValueError, match="max_hamming"):
-        phash_dup_pairs(ctl, max_hamming=4)
 
 
 def test_lang_id_profiles_classifies_five_languages(spark):
@@ -496,7 +493,7 @@ def test_audio_metrics_distributed(spark):
     )
 
     df = spark.createDataFrame([(i,) for i in range(0, 120, 7)], "doc_id long")
-    out = audio_metrics(attach_wav_payload(df), id_col="doc_id").collect()
+    out = audio_metrics(attach_wav_payload(df)).collect()
     assert len(out) == df.count()
     for r in out:
         assert r.wav_samples == 800 + (r.doc_id % 50) * 16

@@ -114,7 +114,7 @@ def test_event_time_mapping_is_session_tz_independent(spark):
         pytest.skip("testdata flavor is not NTZ this round")
 
     def instants():
-        conv = as_event_time(ev, "ts")
+        conv = as_event_time(ev)
         return {
             r.event_id: r.micros
             for r in conv.select(

@@ -114,16 +114,15 @@ def test_k_anonymity_report_and_guards(spark):
         + [(None, "en")] * 3   # NULL quasi value is its own class
     )
     df = spark.createDataFrame(rows, ["src", "lang"])
-    r = k_anonymity(df, ("src", "lang"), k=3).collect()[0]
+    r = k_anonymity(df, ("src", "lang")).collect()[0]
+    # every class is below k = 10
     assert (r.n_classes, r.min_class_size, r.n_below_k, r.n_rows_at_risk) == (
-        4, 1, 2, 3,
+        4, 1, 4, 11,
     )
-    ok = k_anonymity(df, ("src", "lang"), k=1).collect()[0]
-    assert ok.n_below_k == 0 and ok.n_rows_at_risk == 0
+    big = k_anonymity(df.unionAll(df).unionAll(df), ("src", "lang")).collect()[0]
+    assert (big.n_below_k, big.n_rows_at_risk) == (3, 18)
     with pytest.raises(ValueError):
-        k_anonymity(df, (), k=3)
-    with pytest.raises(ValueError):
-        k_anonymity(df, ("src",), k=0)
+        k_anonymity(df, ())
 
 
 def test_l_diversity_report_and_guards(spark):
@@ -139,9 +138,7 @@ def test_l_diversity_report_and_guards(spark):
         ("c", "en"), ("c", None),                # NULL counts as a value
     ]
     df = spark.createDataFrame(rows, ["src", "lang"])
-    r = l_diversity(df, ("src",), "lang", l=2).collect()[0]
+    r = l_diversity(df, ("src",)).collect()[0]
     assert (r.n_classes, r.min_distinct_sensitive, r.n_below_l) == (3, 1, 1)
     with pytest.raises(ValueError):
-        l_diversity(df, (), "lang")
-    with pytest.raises(ValueError):
-        l_diversity(df, ("src",), "lang", l=0)
+        l_diversity(df, ())

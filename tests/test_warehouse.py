@@ -228,7 +228,7 @@ def test_restore_rolls_back_pointer(spark, wh):
     assert [r.stock for r in wh.read("t").collect()] == ["TSLA"]
     # restore target gone after vacuum -> loud error
     wh.overwrite(_df(spark, [("GOOG", "t1", 3.0)]), "t")
-    wh.vacuum("t", keep_last=1)
+    wh.vacuum("t")
     with pytest.raises(FileNotFoundError):
         wh.restore("t", ver1)
 
@@ -298,14 +298,15 @@ def test_has_partition_probes_every_live_member(spark, wh):
     assert not wh.has_partition("t", "stock", "TSLA")
 
 
-def test_vacuum_keeps_referenced_manifest_members(spark, wh):
+def test_vacuum_keeps_referenced_manifest_members(spark, wh, monkeypatch):
     """vacuum must not delete a version dir that a retained manifest
     snapshot references — and must still drop truly dead versions."""
+    monkeypatch.setattr(warehouse, "VACUUM_KEEP_LAST", 1)
     wh.overwrite(_df(spark, [("A", "t1", 1.0)]), "t")       # v1
     wh.overwrite(_df(spark, [("B", "t1", 1.0)]), "t")       # v2 (dead)
     wh.overwrite(_df(spark, [("C", "t1", 1.0)]), "t")       # v3
     wh.append(_df(spark, [("D", "t2", 2.0)]), "t")          # v4 -> [v3, v4]
-    wh.vacuum("t", keep_last=1)
+    wh.vacuum("t")
     # v3 survives because v4's manifest references it; v1/v2 are gone
     assert wh.versions("t") == ["v000003", "v000004"]
     assert {r.stock for r in wh.read("t").collect()} == {"C", "D"}
@@ -351,7 +352,7 @@ def test_restore_refuses_missing_snapshot_and_member(spark, wh):
     wh.append(_df(spark, [("B", "t2", 2.0)]), "t")          # v2 -> [v1, v2]
     wh.overwrite(_df(spark, [("C", "t1", 1.0)]), "t")       # v3
     wh.overwrite(_df(spark, [("D", "t1", 1.0)]), "t")       # v4
-    wh.vacuum("t", keep_last=2)                             # keeps v3, v4
+    wh.vacuum("t")                                          # keeps v3, v4
     # v2's own dir is gone -> the plain missing-snapshot refusal
     with pytest.raises(FileNotFoundError, match="snapshot missing"):
         wh.restore("t", "v000002")

@@ -75,12 +75,15 @@ _DRIVER = "deployment setting: the JDBC driver class"
 _JDBC_BOUNDS = "deployment setting: per-table JDBC partitioned-read bounds"
 
 # "<module path>:<qualname>(<parameter>)" -> why a defaulted parameter
-# stays although no product caller sets it (tests/test_repo_rules.py).
+# stays although no product caller sets it to a value other than its
+# default (tests/test_repo_rules.py).
 KEEP_PARAMS: dict[str, str] = {
     "operators/lm_state.py:ingest_lm_batch(uni_table)": _TABLE,
     "operators/lm_state.py:ingest_lm_batch(bi_table)": _TABLE,
     "operators/lm_state.py:lm_state(uni_table)": _TABLE,
     "operators/lm_state.py:lm_state(bi_table)": _TABLE,
+    "operators/similarity.py:ivf_topk(nprobe)": _REFERENCE
+    + " (probing every list equals brute force; ann_query's probe count)",
     "operators/similarity.py:kmeans_refine(exact_mean)": _REFERENCE
     + " (the id-ordered fold DuckDB replays bit for bit)",
     "pipeline/corpus_pipeline.py:prepare_corpus(keeper)": _REFERENCE

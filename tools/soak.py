@@ -249,7 +249,7 @@ def _bm25_probe(spark, path: str, docs):
     queries = docs.filter(F.col("doc_id") < 25).select(
         F.col("doc_id").alias("query_id"), "text"
     )
-    return bm25_query(wh, queries, table="idx", k=10)
+    return bm25_query(wh, queries, table="idx")
 
 
 def run(
@@ -273,21 +273,19 @@ def run(
         "asof_join": lambda: asof_join(
             events.select("event_id", "user_id", "ts", "value"),
             marks,
-            on="ts",
             right_on="mark_ts",
         ),
-        "tumbling_agg": lambda: tumbling_agg(events, duration="1 day"),
+        "tumbling_agg": lambda: tumbling_agg(events),
         "salted_topk": lambda: salted_topk(
             events, ("user_id",), "value", "event_id", k=3, n_salt=8
         ),
-        # LSH blocking must grow its bucket space with the corpus — at a
-        # FIXED n_planes the hamming ring admits a fixed FRACTION of all
-        # pairs (quadratic growth); +2 planes per corpus doubling keeps
-        # expected bucket occupancy flat, which is exactly how the
-        # operator is meant to be configured at 100 TB.
-        "embedding_blocked": lambda: embedding_dup_pairs_blocked(
-            emb, dim=64, n_planes=8 + 2 * max(0, scale.bit_length() - 1)
-        ),
+        # LSH blocking grows its bucket space with the corpus
+        # (similarity.lsh_planes: +2 planes per doubling past 2048 rows,
+        # i.e. per soak scale doubling over the sf0.1 base): at a FIXED
+        # plane count the hamming ring admits a fixed FRACTION of all
+        # pairs (quadratic growth); scaled planes keep expected bucket
+        # occupancy flat
+        "embedding_blocked": lambda: embedding_dup_pairs_blocked(emb),
         "contamination": lambda: contamination_overlap(
             docs.filter(F.col("doc_id") % 20 != 0),
             docs.filter(F.col("doc_id") % 20 == 0),
@@ -327,7 +325,6 @@ def run(
                 "user_id", F.to_date("ts").alias("day")
             ).agg(F.max("value").alias("close_v")),
             "user_id",
-            "day",
             ("close_v",),
         ),
         # ordered funnel: per-step type-filtered min(ts) aggs +
@@ -346,7 +343,7 @@ def run(
         # cohort retention triangle: first-day agg + (user, day)
         # distinct + one keyed join; replica day-shifts grow cohorts
         # linearly while the offset cap bounds each cohort's row count
-        "cohort": lambda: cohort_retention(events, max_offset=7),
+        "cohort": lambda: cohort_retention(events),
         # SCD2 dimension merge: per-user current-value dim vs a
         # half-perturbed re-extract — keys grow linearly with replica
         # id offsets; one null-safe keyed full-outer join
@@ -405,7 +402,6 @@ def run(
         # sketch_rollup
         "psi": lambda: psi_drift(
             events,
-            "value",
             is_reference=F.datediff(
                 F.to_date("ts"), F.lit("1970-01-01").cast("date")
             )
@@ -448,8 +444,6 @@ def run(
                 ).alias("name"),
             ),
             "doc_id",
-            "name",
-            max_dist=2,
         ),
         # BM25: FIXED 25-query set (replica ids are offset, so doc_id
         # < 25 stays 25 rows at every scale) against the linearly
@@ -461,7 +455,6 @@ def run(
             docs.filter(F.col("doc_id") < 25).select(
                 F.col("doc_id").alias("query_id"), "text"
             ),
-            k=10,
         ),
         # hybrid retrieval: both legs (bm25 recompute + brute cosine,
         # each individually soaked above/below) + the RRF fusion —
@@ -475,7 +468,6 @@ def run(
                     docs.filter(F.col("doc_id") < 25).select(
                         F.col("doc_id").alias("query_id"), "text"
                     ),
-                    k=10,
                 ).select("query_id", "doc_id", "rank"),
                 cosine_topk(
                     emb.filter(F.col("vec_id") >= 25),
@@ -485,7 +477,6 @@ def run(
                     "query_id", F.col("vec_id").alias("doc_id"), "rank"
                 ),
             ],
-            k=10,
         ),
         # int8 quantized serving: symmetric per-vector quantize +
         # dequantize (map-only, all codegen) feeding the brute cosine
@@ -528,11 +519,10 @@ def run(
                 prf_expand(
                     corpus,
                     queries,
-                    bm25_topk(corpus, queries, k=10).select(
+                    bm25_topk(corpus, queries).select(
                         "query_id", "doc_id", "rank"
                     ),
                 ),
-                k=10,
             )
         )(
             docs.filter(F.col("doc_id") >= 25),
@@ -549,9 +539,6 @@ def run(
         "interval_join": lambda: interval_join(
             events.filter(F.col("event_type") == "purchase"),
             events.filter(F.col("event_type") == "view"),
-            key="user_id",
-            left_ts="ts",
-            right_ts="ts",
         ),
         # Pathological window skew: EVERY event lands on one key (the
         # case AQE cannot split — a window sorts the whole key in one
@@ -581,14 +568,14 @@ def run(
         # fact table with broadcast group-stats joins — the curve
         # should track 3x the scan, no window over raw rows
         "mad_outliers": lambda: mad_outliers(
-            events, "value", keys=("event_type",)
+            events, keys=("event_type",)
         ),
         # PMI collocations: bigram + unigram partial-agg wordcounts,
         # then joins on the min_count-PRUNED pair table — vocabulary
         # (and with it the join fan-in) grows sub-linearly under
         # replica token-suffixing, so the curve should track the pair
         # explode
-        "pmi": lambda: pmi_collocations(docs, min_count=5),
+        "pmi": lambda: pmi_collocations(docs),
         # 3-round PageRank over the verified near-dup pair graph: the
         # LSH pair emission is the corpus-sized stage (same input as
         # dedup_clusters); each rank round is a join+agg on the
@@ -607,14 +594,13 @@ def run(
             emb.filter(F.col("vec_id") < 100),
         ),
         # blocked arm: the big-eval path exercised with the same fixed
-        # eval set; plane count grows with the corpus (the
+        # eval set; the plane count grows with the training corpus (the
         # embedding_blocked occupancy policy) so candidate volume stays
         # a bounded fraction — the curve should track the two bucket
         # passes (corpus-side map-only) plus candidate verify
         "decontam_blocked": lambda: semantic_decontaminate_blocked(
             emb.filter(F.col("vec_id") >= 100),
             emb.filter(F.col("vec_id") < 100),
-            n_planes=8 + 2 * max(0, scale.bit_length() - 1),
         ),
         # gap-based sessionization stats: replica id offsets grow users
         # linearly at constant per-user history, so the user-hash
