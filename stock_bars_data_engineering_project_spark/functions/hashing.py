@@ -114,89 +114,51 @@ SIMHASH_BLOCKS = 4
 SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS  # 15
 
 
-def simhash60(toks: Column | str) -> Column:
+def simhash60(toks: str) -> Column:
     """60-bit SimHash over tokens: bit j of the fingerprint is the sign
     of ``sum over tokens of (bit_j(md5_prefix60(token)) ? +1 : -1)``.
+    ``toks`` is SQL text for the token array (e.g. ``"split(text, ' ')"``);
+    the whole two-fold hash is ONE ``F.expr`` parse.
 
     60 bits (not 64) so every intermediate stays exactly representable:
     the per-token hash is split as h1 = first 7 hex chars (28 bits) and
     h2 = next 8 hex chars (32 bits) — both < 2^53, so the per-bit
     ``floor(v / 2^j) % 2`` extraction is exact in double arithmetic
-    (the Column-valued shift amount rules out the integer shift
+    (the lambda-variable shift amount rules out the integer shift
     builtins, which need literal shifts), and the assembled fingerprint
     < 2^60 fits a signed 64-bit integer in any engine.
 
     One fold: per token, hash once (the h1/h2 struct is materialized
     once via the ``array_repeat`` trick), then vote into all 60 bit
     counters via ``zip_with`` — ``toks`` is evaluated once per row
-    regardless of what expression produced it."""
-    if isinstance(toks, str):
-        # SQL token-array expression -> the whole two-fold simhash as
-        # ONE F.expr parse (the lambda-built Column form pays a py4j
-        # round-trip per node; BASELINE.md, "Plan-construction figures");
-        # shapes and NULL/type semantics mirror the Column form below
-        # exactly
-        halves_sql = (
-            "named_struct("
-            "'h1', CAST(conv(substring(md5(t), 1, 7), 16, 10) AS BIGINT), "
-            "'h2', CAST(conv(substring(md5(t), 8, 8), 16, 10) AS BIGINT))"
-        )
-        bit_sql = (
-            "CASE WHEN j < 32 "
-            "THEN CAST(floor(s.h2 / power(2.0D, j)) AS BIGINT) % 2 "
-            "ELSE CAST(floor(s.h1 / power(2.0D, j - 32)) AS BIGINT) % 2 END"
-        )
-        bit_sums_sql = (
-            f"aggregate({toks}, array_repeat(0, {SIMHASH_BITS}), "
-            f"(acc, t) -> zip_with(acc, "
-            f"transform(array_repeat({halves_sql}, {SIMHASH_BITS}), "
-            f"(s, j) -> CASE WHEN ({bit_sql}) = 1 THEN 1 ELSE -1 END), "
-            f"(a, b) -> a + b))"
-        )
-        return F.expr(
-            f"aggregate(zip_with({bit_sums_sql}, "
-            f"sequence(0, {SIMHASH_BITS - 1}), "
-            f"(s, j) -> CASE WHEN s > 0 THEN CAST(power(2.0D, j) AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-    pow2 = lambda j: F.pow(F.lit(2.0), j)  # noqa: E731 — exact for 2^j
-    # Deliberately computes F.md5(t) twice (h1 and h2): hoisting the
-    # single md5 through a one-element transform + element_at was
-    # MEASURED 2x slower end-to-end (1.5s -> 3.0s, simhash_pairs at
-    # sf0.1) — the per-token array materialization costs more than a
-    # second md5 of a short token. The expensive-expression-in-lambda
-    # rule (module header) is about per-ELEMENT re-evaluation blowups;
-    # a fixed 2x on a cheap scalar is the better trade here.
-    halves = lambda t: F.struct(  # noqa: E731
-        F.conv(F.substring(F.md5(t), 1, 7), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(F.md5(t), 8, 8), 16, 10).cast("long").alias("h2"),
+    regardless of what expression produced it. ``md5(t)`` is computed
+    twice (h1 and h2): hoisting it through a one-element transform +
+    element_at measured 2x slower end-to-end (1.5s -> 3.0s,
+    simhash_pairs at sf0.1), since the per-token array costs more than
+    a second md5 of a short token."""
+    halves_sql = (
+        "named_struct("
+        "'h1', CAST(conv(substring(md5(t), 1, 7), 16, 10) AS BIGINT), "
+        "'h2', CAST(conv(substring(md5(t), 8, 8), 16, 10) AS BIGINT))"
     )
-    bit = lambda s, j: F.when(  # noqa: E731
-        j < 32, F.floor(s["h2"] / pow2(j)).cast("long") % 2
-    ).otherwise(F.floor(s["h1"] / pow2(j - 32)).cast("long") % 2)
-    bit_sums = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.transform(
-                F.array_repeat(halves(t), SIMHASH_BITS),
-                lambda s, j: F.when(bit(s, j) == 1, F.lit(1)).otherwise(F.lit(-1)),
-            ),
-            lambda a, b: a + b,
-        ),
+    bit_sql = (
+        "CASE WHEN j < 32 "
+        "THEN CAST(floor(s.h2 / power(2.0D, j)) AS BIGINT) % 2 "
+        "ELSE CAST(floor(s.h1 / power(2.0D, j - 32)) AS BIGINT) % 2 END"
     )
-    return F.aggregate(
-        F.zip_with(
-            bit_sums,
-            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
-            lambda s, j: F.when(s > 0, pow2(j).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    bit_sums_sql = (
+        f"aggregate({toks}, array_repeat(0, {SIMHASH_BITS}), "
+        f"(acc, t) -> zip_with(acc, "
+        f"transform(array_repeat({halves_sql}, {SIMHASH_BITS}), "
+        f"(s, j) -> CASE WHEN ({bit_sql}) = 1 THEN 1 ELSE -1 END), "
+        f"(a, b) -> a + b))"
+    )
+    return F.expr(
+        f"aggregate(zip_with({bit_sums_sql}, "
+        f"sequence(0, {SIMHASH_BITS - 1}), "
+        f"(s, j) -> CASE WHEN s > 0 THEN CAST(power(2.0D, j) AS BIGINT) "
+        f"ELSE CAST(0 AS BIGINT) END), "
+        f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
 
 

@@ -46,10 +46,11 @@ N_ITERS = 8
 LR = 16.0
 
 
-def doc_features(text: Column) -> Column:
-    """Lowercased unigrams + adjacent ``a_b`` bigrams as one array —
-    pure array expressions (filter/slice/zip_with), map-side codegen."""
-    toks = F.filter(tokens(F.lower(text)), lambda t: t != "")
+def doc_features() -> Column:
+    """Lowercased unigrams + adjacent ``a_b`` bigrams of ``text`` as one
+    array — pure array expressions (filter/slice/zip_with), map-side
+    codegen."""
+    toks = F.filter(tokens("lower(text)"), lambda t: t != "")
     n = F.size(toks)
     bigrams = F.when(
         n >= 2,
@@ -88,7 +89,7 @@ def quality_scores(df: DataFrame) -> DataFrame:
     Returns ``(doc_id, n_features, qscore)``.
     """
     feats = df.select(
-        F.col("doc_id"), F.explode(doc_features(F.col("text"))).alias("_feat")
+        F.col("doc_id"), F.explode(doc_features()).alias("_feat")
     )
     weighted = feats.select(
         "doc_id", bucket_weight(feature_bucket(F.col("_feat"))).alias("_w")
@@ -154,7 +155,7 @@ def train_quality_classifier(
         df.select(
             F.col("doc_id").alias("_id"),
             F.col(label_col).cast("double").alias("_y"),
-            F.explode(doc_features(F.col("text"))).alias("_f"),
+            F.explode(doc_features()).alias("_f"),
         )
         .select("_id", "_y", feature_bucket(F.col("_f")).alias("bucket"))
         .transform(materialize)
@@ -268,7 +269,7 @@ def score_with_weights(df: DataFrame, weights: DataFrame) -> DataFrame:
     Unseen buckets score 0 (the training init). Returns
     ``(doc_id, n_features, qscore)``."""
     feats = df.select(
-        F.col("doc_id"), F.explode(doc_features(F.col("text"))).alias("_feat")
+        F.col("doc_id"), F.explode(doc_features()).alias("_feat")
     ).select("doc_id", feature_bucket(F.col("_feat")).alias("bucket"))
     joined = feats.join(weights, "bucket", "left").select(
         "doc_id", F.coalesce(F.col("weight"), F.lit(0.0)).alias("_w")

@@ -82,70 +82,43 @@ def bloom_bitmap(build: DataFrame, key: str) -> list[int]:
     return words
 
 
-def _words_literal(words: list[int]) -> Column:
-    """The bitmap as an array literal built by ONE ``F.expr`` parse.
-    ``F.lit(list)`` issues one py4j call PER ELEMENT to assemble
-    ``array(lit, lit, ...)`` — measured ~1 s of pure driver-side
-    construction per bloom join at 2^16 bits (2048 words), paid on
-    EVERY plan build even with the bitmap itself memoized. Rendering
-    the same array as one SQL string parses JVM-side in ~ms. (A
-    bit-STRING literal was tried and is far worse: SQL ``substr`` on
+def bloom_might_contain(key: str, words: list[int]) -> Column:
+    """Codegen membership test of the SQL expression ``key`` against a
+    literal bitmap: true unless some hash position's bit is unset.
+    False positives possible by design; false negatives impossible.
+
+    The whole test — bitmap literal, the ``N_HASHES`` md5 positions, and
+    the bit checks — is ONE ``F.expr`` parse: ``F.lit(list)`` would
+    issue one py4j call per bitmap word (~1 s per bloom join at 2^16
+    bits). (A bit-STRING literal is far worse: SQL ``substr`` on
     UTF8String scans from byte 0 to find the character offset, so a
-    64k-char bitmap costs O(M_BITS) per row per probe — measured 8x
-    slower than the whole join it was filtering.)"""
-    return F.expr("array(" + ",".join(str(int(w)) for w in words) + ")")
-
-
-def bloom_might_contain(key: Column | str, words: list[int]) -> Column:
-    """Codegen membership test against a literal bitmap: true unless
-    some hash position's bit is unset. False positives possible by
-    design; false negatives impossible.
-
-    ``key`` as a SQL column reference (str) takes the fast path: the
-    whole test — bitmap literal, the ``N_HASHES`` md5 positions, and
-    the bit checks — is ONE ``F.expr`` parse (the loop-built Column
-    form paid ~0.25 s of py4j round-trips per call on top of the
-    already-single-parse bitmap literal). ``forall``
-    over the position array references the bitmap literal ONCE and
-    keeps the three-valued NULL semantics of the old ``true AND bit_0
-    AND ...`` chain: any false position -> false, else any NULL (NULL
-    key) -> NULL."""
-    if isinstance(key, str):
-        arr = "array(" + ",".join(str(int(w)) for w in words) + ")"
-        positions = ",".join(
-            f"(CAST(conv(substring(md5(concat('bloom{i}:', "
-            f"CAST({key} AS STRING))), 1, 12), 16, 10) AS BIGINT) "
-            f"% {M_BITS})"
-            for i in range(N_HASHES)
-        )
-        # exact bit extraction without shift-by-column: word < 2^32 and
-        # 2^(p%32) are both exact doubles, so floor(word / 2^bit) % 2
-        # is the bit
-        return F.expr(
-            f"forall(array({positions}), p -> "
-            f"(CAST(floor(element_at({arr}, CAST((p / {_WORD}) AS INT) + 1) "
-            f"/ power(2.0D, p % {_WORD})) AS BIGINT) % 2) = 1)"
-        )
-    lit_words = _words_literal(words)
-    cond = F.lit(True)
-    for p in _positions(key):
-        word = F.element_at(lit_words, (p / _WORD).cast("int") + 1)
-        # exact bit extraction without shift-by-column: word < 2^32 and
-        # 2^(p%32) are both exact doubles, so floor(word / 2^bit) % 2
-        # is the bit
-        bit = (
-            F.floor(word / F.pow(F.lit(2.0), p % _WORD)).cast("long") % 2
-        ) == 1
-        cond = cond & bit
-    return cond
+    64k-char bitmap costs O(M_BITS) per row per probe.) ``forall`` over
+    the position array references the bitmap literal ONCE and keeps
+    three-valued NULL semantics: any false position -> false, else any
+    NULL (NULL key) -> NULL."""
+    arr = "array(" + ",".join(str(int(w)) for w in words) + ")"
+    positions = ",".join(
+        f"(CAST(conv(substring(md5(concat('bloom{i}:', "
+        f"CAST({key} AS STRING))), 1, 12), 16, 10) AS BIGINT) "
+        f"% {M_BITS})"
+        for i in range(N_HASHES)
+    )
+    # exact bit extraction without shift-by-column: word < 2^32 and
+    # 2^(p%32) are both exact doubles, so floor(word / 2^bit) % 2
+    # is the bit
+    return F.expr(
+        f"forall(array({positions}), p -> "
+        f"(CAST(floor(element_at({arr}, CAST((p / {_WORD}) AS INT) + 1) "
+        f"/ power(2.0D, p % {_WORD})) AS BIGINT) % 2) = 1)"
+    )
 
 
 def bloom_semi_join(
     probe: DataFrame,
     build: DataFrame,
     key: str,
-    build_key: str | None = None,
-    words: list[int] | None = None,
+    build_key: str,
+    words: list[int],
 ) -> DataFrame:
     """LEFT SEMI join with a bloom pre-filter on the probe side: rows
     whose key cannot be in the build side never reach the join
@@ -153,26 +126,22 @@ def bloom_semi_join(
     at scale the win is the probe rows that never shuffle. The bitmap
     collects to a flat array literal (zero joins, pure codegen).
 
-    ``words``: a bitmap previously built by :func:`bloom_bitmap` over
-    the SAME build side. A bloom bitmap is a build-once artifact (the
+    ``words``: the bitmap :func:`bloom_bitmap` built over ``build_key``
+    of the SAME build side. A bloom bitmap is a build-once artifact (the
     BPE-rules/PCA-components class): a serving loop amortizes the two
-    build jobs (bitmap agg + collect) across every probe, so callers
-    that probe repeatedly should build once and pass it here. A stale
+    build jobs (bitmap agg + collect) across every probe. A stale
     bitmap silently changes results — the caller owns that
     invariant."""
-    bk = build_key or key
-    if words is None:
-        words = bloom_bitmap(build, bk)
     pre = probe.filter(bloom_might_contain(key, words))
-    return pre.join(build, pre[key] == build[bk], "left_semi")
+    return pre.join(build, pre[key] == build[build_key], "left_semi")
 
 
 def bloom_anti_join(
     probe: DataFrame,
     build: DataFrame,
     key: str,
-    build_key: str | None = None,
-    words: list[int] | None = None,
+    build_key: str,
+    words: list[int],
 ) -> DataFrame:
     """LEFT ANTI join with a bloom SHORTCUT: a probe row whose
     membership test fails is a CERTAIN non-member (a bloom has no
@@ -183,20 +152,16 @@ def bloom_anti_join(
 
     NULL probe keys never equi-match, so the anti join must KEEP them:
     the NULL membership test routes them to the certain-miss branch
-    (the literal path's NULL test is NULL — ``~NULL`` would silently
-    drop the row, the exact hazard hash_bucket's guard documents — so
-    the split is on ``test IS TRUE``).
+    (a NULL key's test is NULL — ``~NULL`` would silently drop the row,
+    the exact hazard hash_bucket's guard documents — so the split is on
+    ``test IS TRUE``).
 
-    ``words``: optional precomputed bitmap — same build-once amortize
-    contract (staleness caller-owned) as :func:`bloom_semi_join`."""
-    bk = build_key or key
-    if words is None:
-        words = bloom_bitmap(build, bk)
+    ``words``: the build side's bitmap, as for :func:`bloom_semi_join`."""
     hit = F.coalesce(bloom_might_contain(key, words), F.lit(False))
     tagged = probe.withColumn("_bloom_hit", hit)
     certain_miss = tagged.filter(~F.col("_bloom_hit")).drop("_bloom_hit")
     candidates = tagged.filter(F.col("_bloom_hit")).drop("_bloom_hit")
     survivors = candidates.join(
-        build, candidates[key] == build[bk], "left_anti"
+        build, candidates[key] == build[build_key], "left_anti"
     )
     return certain_miss.unionByName(survivors)

@@ -82,7 +82,7 @@ def _apply_merge(syms: str, a: str, b: str) -> str:
     clears the carry (so the merged token cannot immediately re-merge —
     'aaa' under (a,a) becomes ['aa','a'], the reference semantics);
     otherwise the carry is flushed and ``x`` becomes the new carry.
-    (NULL-carry semantics match the old Column form exactly: NULL AND
+    (NULL-carry semantics: NULL AND
     false short-circuits false, NULL AND true stays NULL, and CASE
     routes both to the flush branch.)
     """

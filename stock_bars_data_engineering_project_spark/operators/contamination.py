@@ -40,13 +40,13 @@ def contamination_overlap(
     # coarse upstream (one row-group) serializing it on one core
     shingled = balance(corpus).select(
         F.col("doc_id"),
-        F.array_distinct(word_shingles(F.col("text"), 3)).alias("shingles"),
+        F.array_distinct(word_shingles("text", 3)).alias("shingles"),
     ).filter(F.size("shingles") > 0)
 
     bench_shingles = (
         benchmark.select(
             F.explode(
-                F.array_distinct(word_shingles(F.col("text"), 3))
+                F.array_distinct(word_shingles("text", 3))
             ).alias("shingle")
         )
         .distinct()
@@ -105,7 +105,7 @@ def boilerplate_scrub(df: DataFrame, df_cap: int = 5) -> DataFrame:
         .filter(F.col("gram_df") >= df_cap)
         .select("gram")
     )
-    base = balance(df).select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
+    base = balance(df).select(F.col("doc_id"), tokens("text").alias("toks"))
     covered = (
         pos_grams.join(F.broadcast(hot), "gram")
         .select("doc_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + 2)).alias("p"))
@@ -121,7 +121,7 @@ def positional_grams(df: DataFrame, k: int) -> DataFrame:
     explode."""
     from ..sources.readers import balance
 
-    toks = tokens(F.col("text"))
+    toks = tokens("text")
     base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
     n = F.size("toks")
     empty_pg = F.array().cast("array<struct<pos:int,gram:string>>")
@@ -213,7 +213,7 @@ def exact_substr_scrub(df: DataFrame) -> DataFrame:
     document, same contract as :func:`boilerplate_scrub`.
     """
     from ..sources.readers import balance
-    toks = tokens(F.col("text"))
+    toks = tokens("text")
     base = balance(df).select(F.col("doc_id"), toks.alias("toks"))
     k = SUBSTR_K
     pos_grams = positional_grams(df, k)

@@ -103,7 +103,7 @@ def _shingled(df: DataFrame) -> DataFrame:
     )
     return slim.select(
         "doc_id",
-        F.array_distinct(word_shingles(F.col("_text"), 3)).alias("shingles"),
+        F.array_distinct(word_shingles("_text", 3)).alias("shingles"),
     ).filter(F.size("shingles") > 0)
 
 
@@ -301,8 +301,9 @@ def simhash_fingerprints(df: DataFrame) -> DataFrame:
     """Per-document 60-bit SimHash fingerprint, explode + codegen
     aggregation.
 
-    Bit-identical to the per-row ``simhash60`` expression (pinned in
-    test_dedup), but restructured for throughput: higher-order-function
+    Bit-identical to the per-row ``simhash60`` expression (test_dedup
+    pins it to a hashlib replay of that definition), but restructured
+    for throughput: higher-order-function
     lambdas (aggregate/transform/zip_with) evaluate INTERPRETED per
     array element — measured ~94 us/doc at the x64 soak scale, the
     whole cost of the dedup pipeline. Here each token becomes a row
@@ -320,7 +321,7 @@ def simhash_fingerprints(df: DataFrame) -> DataFrame:
         df.select(F.col("doc_id"), F.col("text").alias("_text"))
     )
     tok = slim.select(
-        "doc_id", F.explode_outer(tokens(F.col("_text"))).alias("_tok")
+        "doc_id", F.explode_outer(tokens("_text")).alias("_tok")
     )
     # same h1/h2 split as simhash60: md5 prefix 60 bits as two
     # double-exact halves (28 high via h1, 32 low via h2)

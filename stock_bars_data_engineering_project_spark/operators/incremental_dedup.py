@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
+from ..session import local_frame
 
 from ..sinks.warehouse import ParquetWarehouse
 from .dedup import (
@@ -278,6 +279,6 @@ def _mark_synced(
     """Record the corpus version the band index now covers — the 1-row
     marker that lets every in-sync ingest skip the heal anti-join."""
     wh.overwrite(
-        spark.createDataFrame([(corpus_v,)], "corpus_version string"),
+        local_frame(spark, [(corpus_v,)], "corpus_version string"),
         sync_table,
     )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
+from ..session import local_frame
 from ..sinks.warehouse import ParquetWarehouse
 from .index_maint import (
     LexicalFamily,
@@ -73,7 +74,7 @@ def _batch_doc_stats(
     from ..functions.text import tokens
 
     dl = F.size(
-        F.filter(tokens(F.lower(F.col(text_col))), lambda t: t != F.lit(""))
+        F.filter(tokens(f"lower(`{text_col}`)"), lambda t: t != F.lit(""))
     )
     return batch.select(F.col(id_col).alias("doc_id"), dl.alias("dl"))
 
@@ -116,22 +117,11 @@ def bm25_query(
             for _, t in qrows
         }
     )
-    from pyspark.sql import types as T
-
-    qid_type = queries.schema["query_id"].dataType
+    qid_type = queries.schema["query_id"].dataType.simpleString()
     spark = queries.sparkSession
-    qterms = spark.createDataFrame(
-        qrows,
-        T.StructType(
-            [
-                T.StructField("query_id", qid_type),
-                T.StructField("token", T.StringType()),
-            ]
-        ),
-    )
-    qvocab = spark.createDataFrame(
-        [(t,) for t in sorted({t for _, t in qrows})],
-        T.StructType([T.StructField("token", T.StringType())]),
+    qterms = local_frame(spark, qrows, f"query_id {qid_type}, token string")
+    qvocab = local_frame(
+        spark, [(t,) for t in sorted({t for _, t in qrows})], "token string"
     )
     postings = not_deleted(
         wh,

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
+from ..session import local_frame
 from ..sinks.warehouse import ParquetWarehouse
 from .index_maint import (
     LexicalFamily,
@@ -119,20 +120,12 @@ def trgm_query(
             for _, _, _, t in tri_rows
         }
     )
-    from pyspark.sql import types as T
-
-    pid_type = patterns.schema["pattern_id"].dataType
+    pid_type = patterns.schema["pattern_id"].dataType.simpleString()
     spark = patterns.sparkSession
-    pat_tri = spark.createDataFrame(
+    pat_tri = local_frame(
+        spark,
         tri_rows,
-        T.StructType(
-            [
-                T.StructField("pattern_id", pid_type),
-                T.StructField("pattern", T.StringType()),
-                T.StructField("n_tri", T.IntegerType()),
-                T.StructField("trigram", T.StringType()),
-            ]
-        ),
+        f"pattern_id {pid_type}, pattern string, n_tri int, trigram string",
     )
     # tombstones anti-join out on the already-pruned probe slice, not
     # the whole postings table (the bm25_query/ann_query discipline)
@@ -173,14 +166,8 @@ def trgm_query(
     )
     if not short_rows:
         return verified
-    short = spark.createDataFrame(
-        short_rows,
-        T.StructType(
-            [
-                T.StructField("pattern_id", pid_type),
-                T.StructField("pattern", T.StringType()),
-            ]
-        ),
+    short = local_frame(
+        spark, short_rows, f"pattern_id {pid_type}, pattern string"
     )
     # the scan fallback answers over LIVE INDEX MEMBERS only (the
     # caller's corpus frame semi-joined against tombstone-free

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import materialize
 from ..memo import build_once, run_chains
+from ..session import local_frame
 from ..sinks.warehouse import ParquetWarehouse
 
 
@@ -120,8 +121,8 @@ def delete_ids(
                 f"no such table: {t} (build index {table!r} first)"
             )
     if not isinstance(ids, DataFrame):
-        ids = wh.spark.createDataFrame(
-            [(int(i),) for i in ids], f"{layout.id_col} long"
+        ids = local_frame(
+            wh.spark, [(int(i),) for i in ids], f"{layout.id_col} long"
         )
     ids = _reject_nulls(
         ids.select(F.col(ids.columns[0]).alias(layout.id_col)),
@@ -203,7 +204,7 @@ def build_lexical_index(
         ),
     )
     wh.overwrite(
-        wh.spark.createDataFrame([(64,)], "n_buckets int"),
+        local_frame(wh.spark, [(64,)], "n_buckets int"),
         meta_table(table),
     )
 

@@ -47,7 +47,7 @@ def _batch_lm_counts(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
             "the epoch-log contract partitions the corpus by this column"
         )
     ltoks = F.filter(
-        tokens(F.lower(F.col("text"))), lambda t: t != F.lit("")
+        tokens("lower(text)"), lambda t: t != F.lit("")
     )
     uni = (
         batch.select(F.explode(ltoks).alias("token"))

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, dot
+from ..functions.vectors import as_double_sql, dot, doubles_sql
 
 
 _SUFFSTATS_SCHEMA = "n long, colsum array<double>, gram array<double>"
@@ -142,14 +142,13 @@ def project(
     shape as the LSH hyperplanes, O(1) plan size in row count), and each
     output coordinate is one codegen dot product. ``whiten`` scales each
     coordinate by 1/sqrt(eigenvalue) (unit variance per component)."""
-    centered = F.zip_with(
-        as_double(F.col("embedding")),
-        F.lit(model["mean"].tolist()),
-        lambda x, m: x - m,
+    centered = (
+        f"zip_with({as_double_sql('embedding')}, {doubles_sql(model['mean'])}, "
+        "(x, m) -> x - m)"
     )
     coords: list[Column] = []
     for i, comp in enumerate(model["components"]):
-        c = dot(centered, F.lit(comp.tolist()))
+        c = dot(centered, doubles_sql(comp))
         if whiten:
             ev = float(model["eigenvalues"][i])
             c = c / float(np.sqrt(ev)) if ev > 0 else F.lit(0.0)

@@ -46,7 +46,7 @@ def unigram_surprisal(docs: DataFrame, counts: DataFrame | None = None) -> DataF
     rounding belongs to the caller (functions.scalars.round_half_up).
     """
     ltoks = docs.select(
-        "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("token")
+        "doc_id", F.explode(tokens("lower(text)")).alias("token")
     ).filter(F.col("token") != "")
     if counts is None:
         counts = ltoks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
@@ -69,7 +69,7 @@ def _lower_tokens(text_col: str) -> Column:
     consumer in this module so the cross-engine contract cannot
     desynchronize between operators."""
     return F.filter(
-        tokens(F.lower(F.col(text_col))), lambda t: t != F.lit("")
+        tokens(f"lower(`{text_col}`)"), lambda t: t != F.lit("")
     )
 
 

@@ -63,7 +63,7 @@ def _term_counts(
     # instead of the interpreted higher-order-function path.
     arr = df.select(
         F.col(id_col).alias("id"),
-        F.array_remove(tokens(F.lower(F.col(text_col))), "").alias("__toks"),
+        F.array_remove(tokens(f"lower(`{text_col}`)"), "").alias("__toks"),
     )
     exploded = arr.select(
         "id",
@@ -108,7 +108,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame) -> DataFrame:
     # the oracle's COUNT(*) / AVG() pair behaves identically.
     stats = docs.select(
         F.size(
-            F.array_remove(tokens(F.lower(F.col("text"))), "")
+            F.array_remove(tokens("lower(text)"), "")
         ).alias("dl")
     ).agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -266,7 +266,7 @@ def prf_expand(
         corpus.select("doc_id", "text"), "doc_id"
     ).select("query_id", "text")
     toks = F.filter(
-        tokens(F.lower(F.col("text"))), lambda t: t != F.lit("")
+        tokens("lower(text)"), lambda t: t != F.lit("")
     )
     fb_counts = (
         fb_texts.select("query_id", F.explode(toks).alias("token"))
@@ -274,7 +274,7 @@ def prf_expand(
         .agg(F.count(F.lit(1)).alias("w"))
     )
     qtoks = F.filter(
-        tokens(F.lower(F.col("text"))), lambda t: t != F.lit("")
+        tokens("lower(text)"), lambda t: t != F.lit("")
     )
     qterms = queries.select(
         "query_id", F.explode(qtoks).alias("token")

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def hash_bucket(key: Column, n_buckets: int = 10_000, salt: str = "") -> Column:
     """Uniform bucket in [0, n_buckets) from the md5 of the (salted)
@@ -309,7 +311,7 @@ def curriculum_phases(df: DataFrame, size: Column) -> DataFrame:
         cum.withColumn("_n", F.max("_cum").over(full))
         .crossJoin(
             F.broadcast(
-                cum.sparkSession.createDataFrame([(k,) for k in ks], "k int")
+                local_frame(cum.sparkSession, [(k,) for k in ks], "k int")
             )
         )
         .filter(F.col("_cum") * 10 >= F.col("k") * F.col("_n"))
@@ -365,8 +367,8 @@ def walk_forward_days(
             f"window is empty (days span [{lo}, {hi}], first test starts "
             f"at {first_test_start}, embargo {embargo_days})"
         )
-    folds = days.sparkSession.createDataFrame(
-        [(k,) for k in range(n_folds)], "fold int"
+    folds = local_frame(
+        days.sparkSession, [(k,) for k in range(n_folds)], "fold int"
     )
     test_start = F.lit(first_test_start) + F.col("fold") * test_days
     test_end = test_start + test_days - 1

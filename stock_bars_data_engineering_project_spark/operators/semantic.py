@@ -173,11 +173,11 @@ def semantic_decontaminate(
     ev = F.broadcast(
         eval_set.select(
             F.col("vec_id").cast("long").alias("_eid"),
-            as_double(F.col("embedding")).alias("_ev"),
+            as_double("embedding").alias("_ev"),
         ).withColumn("_en", norm("_ev"))
     )
     tr = train.select(
-        F.col("vec_id"), as_double(F.col("embedding")).alias("_tv")
+        F.col("vec_id"), as_double("embedding").alias("_tv")
     ).withColumn("_tn", norm("_tv"))
     # hoisted-norm cosine: dot / (norm_a * norm_b) — the same fold and
     # division association as functions.vectors.cosine and the oracle's
@@ -225,7 +225,7 @@ def semantic_decontaminate_blocked(
     ev = (
         eval_set.select(
             F.col("vec_id").cast("long").alias("_eid"),
-            as_double(F.col("embedding")).alias("_ev"),
+            as_double("embedding").alias("_ev"),
         )
         .withColumn("_en", norm("_ev"))
         .withColumn("_eb", bucket)
@@ -237,7 +237,7 @@ def semantic_decontaminate_blocked(
         )
     )
     tr = (
-        train.select(F.col("vec_id"), as_double(F.col("embedding")).alias("_tv"))
+        train.select(F.col("vec_id"), as_double("embedding").alias("_tv"))
         .withColumn("_tn", norm("_tv"))
         .withColumn("_tb", lsh_bucket("_tv", 64, n_planes))
     )

@@ -30,7 +30,7 @@ from ..materialize import materialize
 
 from ..functions.hashing import hamming
 from ..functions.scalars import round_half_up
-from ..functions.vectors import as_double, cosine, dot
+from ..functions.vectors import as_double, as_double_sql, cosine, doubles_sql
 from ..sources.readers import balance
 from .skew import salted_topk
 
@@ -70,15 +70,6 @@ def plane_components(dim: int, plane_idx: int) -> list[float]:
     ]
 
 
-def _hyperplane(dim: int, plane_idx: int) -> F.Column:
-    """One ArrayType literal per plane — O(1) expression-tree nodes
-    regardless of embedding dim. The previous form built ``dim`` md5/conv
-    expression columns per plane, which at dim 768-3072 blows up the plan
-    tree and whole-stage codegen; computing the (constant) md5 bytes
-    driver-side yields bit-identical values with a flat plan."""
-    return F.lit(plane_components(dim, plane_idx))
-
-
 # LSH blocking keeps 8 sign bits up to this many corpus rows
 LSH_BASE_ROWS = 2048
 # lsh_ann_topk's sign bits and probe radius
@@ -96,80 +87,45 @@ def lsh_planes(corpus: DataFrame) -> int:
     return min(62, 8 + 2 * doublings)
 
 
-def lsh_bucket(vec: F.Column | str, dim: int, n_planes: int) -> F.Column:
-    """Sign-pattern bucket id in [0, 2^n_planes).
-
-    ``vec`` as a SQL column reference (str) takes the fast path: the
-    whole bucket expression — per-plane double-literal arrays, index-
-    ordered dot folds, sign sum — is emitted as ONE ``F.expr`` parse.
-    The loop-built Column form pays a py4j driver round-trip per node;
-    the parser builds the identical tree at once (BASELINE.md,
-    "Plan-construction figures"). ``repr(double)`` + the ``D`` literal
-    suffix round-trips to the identical IEEE double (same rule the DuckDB
-    oracle twin relies on), and the fold shape mirrors ``dot`` exactly:
-    left fold in index order from a 0.0 double seed. A Column argument
-    keeps the legacy tree (value-identical; used only by callers that
-    cannot name their input)."""
-    if isinstance(vec, str):
-        v = f"transform({vec}, x -> CAST(x AS DOUBLE))"
-        # dim mismatch must fail loudly: zip_with null-pads, the dot
-        # product goes NULL, and every vector would silently land in
-        # bucket 0 — degrading the "scale path" to a full cross join
-        guarded = (
-            f"(CASE WHEN size({v}) = {dim} THEN {v} "
-            f"ELSE raise_error('lsh_bucket: embedding dim != {dim}') END)"
-        )
-        terms = ["0"]
-        for p in range(n_planes):
-            arr = "array(" + ",".join(
-                f"{c!r}D" for c in plane_components(dim, p)
-            ) + ")"
-            dotp = (
-                f"aggregate(zip_with({guarded}, {arr}, (x, y) -> x * y), "
-                f"0.0D, (acc, x) -> acc + x)"
-            )
-            terms.append(
-                f"((CASE WHEN {dotp} >= 0 THEN 1 ELSE 0 END) * {1 << p})"
-            )
-        return F.expr("(" + " + ".join(terms) + ")")
-    v = as_double(vec)
-    # dim mismatch must fail loudly: zip_with null-pads, the dot product
-    # goes NULL, and every vector would silently land in bucket 0 —
-    # degrading the "scale path" to a full cross join
-    v = F.when(
-        F.size(v) == dim, v
-    ).otherwise(
-        F.raise_error(F.lit(f"lsh_bucket: embedding dim != {dim}"))
+def lsh_bucket(vec: str, dim: int, n_planes: int) -> F.Column:
+    """Sign-pattern bucket id in [0, 2^n_planes) of the SQL array
+    ``vec``. The whole bucket expression — per-plane double-literal
+    arrays (:func:`doubles_sql`), index-ordered dot folds, sign sum — is
+    ONE ``F.expr`` parse (BASELINE.md, "Plan-construction figures"), and
+    each fold mirrors ``dot``: left fold in index order from a 0.0
+    double seed."""
+    v = as_double_sql(vec)
+    # dim mismatch must fail loudly: zip_with null-pads, the dot
+    # product goes NULL, and every vector would silently land in
+    # bucket 0 — degrading the "scale path" to a full cross join
+    guarded = (
+        f"(CASE WHEN size({v}) = {dim} THEN {v} "
+        f"ELSE raise_error('lsh_bucket: embedding dim != {dim}') END)"
     )
-    bucket = F.lit(0)
+    terms = ["0"]
     for p in range(n_planes):
-        sign = F.when(dot(v, _hyperplane(dim, p)) >= 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + sign * F.lit(2**p)
-    return bucket
+        arr = doubles_sql(plane_components(dim, p))
+        dotp = (
+            f"aggregate(zip_with({guarded}, {arr}, (x, y) -> x * y), "
+            f"0.0D, (acc, x) -> acc + x)"
+        )
+        terms.append(
+            f"((CASE WHEN {dotp} >= 0 THEN 1 ELSE 0 END) * {1 << p})"
+        )
+    return F.expr("(" + " + ".join(terms) + ")")
 
 
 def l2sq_sql(a: str, b: str) -> str:
-    """SQL text twin of :func:`l2sq` — one parse instead of a py4j
-    round-trip per node (the vectors.py discipline)."""
-    from ..functions.vectors import as_double_sql
-
     return (
         f"aggregate(zip_with({as_double_sql(a)}, {as_double_sql(b)}, "
         "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v)"
     )
 
 
-def l2sq(a: F.Column | str, b: F.Column | str) -> F.Column:
+def l2sq(a: str, b: str) -> F.Column:
     """Squared L2 distance, double-promoted, sequential fold — same
-    accumulation order as the oracle's index-ordered list sum. Two str
-    arguments (SQL column references) take the single-parse path."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(l2sq_sql(a, b))
-    return F.aggregate(
-        F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    accumulation order as the oracle's index-ordered list sum."""
+    return F.expr(l2sq_sql(a, b))
 
 
 def ivf_assign(
@@ -193,7 +149,7 @@ def ivf_assign(
     kmeans_inertia path)."""
     cent_arr = centroids.agg(
         F.array_sort(
-            F.collect_list(F.struct(F.col("cid"), as_double(F.col("cv")).alias("cv")))
+            F.collect_list(F.struct(F.col("cid"), as_double("cv").alias("cv")))
         ).alias("cents")
     )
     # distances materialize ONCE per centroid (transform), then the
@@ -201,8 +157,7 @@ def ivf_assign(
     # comparison AND its winning struct would evaluate the O(dim) fold
     # twice per centroid (the hashing.py lambda-re-evaluation trap).
     # The whole fold is emitted as ONE F.expr parse (the
-    # lsh_bucket discipline): identical tree, none of the per-node py4j
-    # round-trips the loop-built Column form paid.
+    # lsh_bucket discipline).
     dists = (
         "transform(cents, c -> named_struct("
         f"'cid', c.cid, 'd2', {l2sq_sql('c.cv', '_v')}))"
@@ -219,7 +174,7 @@ def ivf_assign(
     # first iteration would then keep the FIRST centroid (acc.cid is
     # null -> take c) and every later `c.d2 < NULL` comparison keeps it
     # — silently assigning garbage to the lowest cid.
-    dim_of = F.size(as_double(F.col("_v")))
+    dim_of = F.size(as_double("_v"))
     cent_dim = F.size(F.element_at(F.col("cents"), 1)["cv"])
     slim = balance(
         df.select(F.col("vec_id"), F.col("embedding").alias("_v"))
@@ -282,7 +237,7 @@ def kmeans_refine(
     and each row repeats its vector's d2 once per dimension, hence the
     sum(sd2) / dim readback (within float-rescaling noise of the direct
     sum; callers compare with relative tolerance)."""
-    cents = centroids.select("cid", as_double(F.col("cv")).alias("cv"))
+    cents = centroids.select("cid", as_double("cv").alias("cv"))
     if stats is not None:
         stats["inertia_in"] = []
     for _ in range(n_iters):
@@ -293,7 +248,7 @@ def kmeans_refine(
             "vec_id",
             "cid",
             *([F.col("d2")] if stats is not None else []),
-            F.posexplode(as_double(F.col("embedding"))).alias("pos", "x"),
+            F.posexplode(as_double("embedding")).alias("pos", "x"),
         )
         extra = [F.sum("d2").alias("sd2")] if stats is not None else []
         if exact_mean:
@@ -475,7 +430,7 @@ def pq_codebook(corpus: DataFrame) -> DataFrame:
     w_seed = Window.orderBy(F.col("vec_id"))
     cw = (
         corpus.filter(F.col("vec_id") % stride == 0)
-        .select(F.col("vec_id"), as_double(F.col("embedding")).alias("cv"))
+        .select(F.col("vec_id"), as_double("embedding").alias("cv"))
         .select(
             (F.row_number().over(w_seed) - 1).cast("long").alias("j"), "cv"
         )
@@ -568,7 +523,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     corpus_codes = (
         balance(
             corpus.select(
-                F.col("vec_id"), as_double(F.col("embedding")).alias("_v")
+                F.col("vec_id"), as_double("embedding").alias("_v")
             )
         )
         .crossJoin(F.broadcast(cb_row))
@@ -579,7 +534,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     # per-query ADC lookup table tq[s][j] = <q_sub(s), cw(s,j)> — the
     # nested-array layout makes each scan lookup O(1) element_at
     q = queries.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("q_vec")
+        F.col("vec_id").alias("query_id"), as_double("embedding").alias("q_vec")
     )
     def tq_for(s):
         return (

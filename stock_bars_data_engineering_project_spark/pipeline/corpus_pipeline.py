@@ -62,6 +62,7 @@ from ..operators.quality import (
     unigram_surprisal,
 )
 from ..operators.sampling import alpha_mixture_sample, stable_split
+from ..session import local_frame
 from ..sinks.warehouse import ParquetWarehouse
 from ..sources.readers import load_table
 
@@ -322,7 +323,7 @@ def _mark_refresh_synced(
     ):
         return
     wh.overwrite(
-        spark.createDataFrame([(v,)], "corpus_version string"), sync_t
+        local_frame(spark, [(v,)], "corpus_version string"), sync_t
     )
 
 

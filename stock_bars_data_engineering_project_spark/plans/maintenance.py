@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_up, sql_round
 from ..operators.pca import fit_pca, project
 from ..operators.rollup import merge_rollups, rollup_increment, rollup_metrics
+from ..session import local_frame
 from ..sources.readers import load_table
 from .extensions import _JACCARD, _SH_CTE, _SIG_BAND_CAND_CTES
 from .registry import register, scratch_warehouse
@@ -334,7 +335,8 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.var_pop("w").alias("vw"),
         )
     )
-    eigen = spark.createDataFrame(
+    eigen = local_frame(
+        spark,
         [(i, float(ev)) for i, ev in enumerate(model["eigenvalues"])],
         "i int, ev double",
     )
@@ -465,8 +467,8 @@ def q_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             else 0.0,
         ),
     ]
-    model_arm = spark.createDataFrame(
-        model_rows, "component int, metric string, value double"
+    model_arm = local_frame(
+        spark, model_rows, "component int, metric string, value double"
     )
     return law_arm.unionByName(model_arm)
 
@@ -616,7 +618,8 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum_ok = float(
         v1 in wh.versions("t") and wh.read("t").count() == n_state1
     )
-    law = spark.createDataFrame(
+    law = local_frame(
+        spark,
         [("vacuum_law", "law", -1, "restore_target_survives_vacuum", vacuum_ok)],
         "variant string, _change_type string, k bigint, status string, price double",
     )

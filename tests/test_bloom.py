@@ -54,16 +54,16 @@ def test_semi_join_exact_and_prefilter_effective(spark):
             recent, c.c_custkey == recent.o_custkey, "left_semi"
         ).collect()
     )
+    words = bloom_bitmap(recent, "o_custkey")
     got = sorted(
         r.c_custkey
         for r in bloom_semi_join(
-            c, recent, key="c_custkey", build_key="o_custkey"
+            c, recent, key="c_custkey", build_key="o_custkey", words=words
         ).collect()
     )
     assert got == exact  # a bloom can only false-positive
 
-    words = bloom_bitmap(recent, "o_custkey")
-    kept = c.filter(bloom_might_contain(F.col("c_custkey"), words)).count()
+    kept = c.filter(bloom_might_contain("c_custkey", words)).count()
     n_probe, n_match = c.count(), len(exact)
     # (1 - e^(-kn/m))^k at these sizes is well under 5%; allow 3x slack
     assert kept - n_match <= max(3, int(0.15 * (n_probe - n_match)))
@@ -75,7 +75,10 @@ def test_null_keys_match_join_semantics(spark):
     build = spark.createDataFrame([(1,), (None,)], "k long")
     probe = spark.createDataFrame([(1,), (2,), (None,)], "k long")
     got = sorted(
-        r.k for r in bloom_semi_join(probe, build, "k").collect()
+        r.k
+        for r in bloom_semi_join(
+            probe, build, "k", "k", bloom_bitmap(build, "k")
+        ).collect()
     )
     exact = sorted(
         r.k for r in probe.join(build, "k", "left_semi").collect()
@@ -94,10 +97,10 @@ def test_precomputed_words_contract_guards(spark):
     probe = spark.createDataFrame([(1,), (3,)], "k long")
     good = bloom_bitmap(build, "k")
     assert [r.k for r in bloom_semi_join(
-        probe, build, "k", words=good
+        probe, build, "k", "k", words=good
     ).collect()] == [1]
     assert [r.k for r in bloom_anti_join(
-        probe, build, "k", words=good
+        probe, build, "k", "k", words=good
     ).collect()] == [3]
 
 
@@ -124,7 +127,11 @@ def test_anti_join_exact_and_null_kept(spark):
     got = sorted(
         r.c_custkey
         for r in bloom_anti_join(
-            c, urgent, key="c_custkey", build_key="o_custkey"
+            c,
+            urgent,
+            key="c_custkey",
+            build_key="o_custkey",
+            words=bloom_bitmap(urgent, "o_custkey"),
         ).collect()
     )
     assert got == exact
@@ -133,6 +140,8 @@ def test_anti_join_exact_and_null_kept(spark):
     build = spark.createDataFrame([(1,)], "k long")
     got = sorted(
         (r.k if r.k is not None else -1)
-        for r in bloom_anti_join(probe, build, "k").collect()
+        for r in bloom_anti_join(
+            probe, build, "k", "k", bloom_bitmap(build, "k")
+        ).collect()
     )
     assert got == [-1, 2]  # NULL kept, member dropped

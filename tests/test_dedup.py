@@ -75,16 +75,27 @@ def test_dedup_clusters_chains_transitively(spark):
 
 def test_simhash_fingerprints_match_per_row_expression(spark):
     """The explode+codegen-aggregate fingerprint path must be
-    bit-identical to the per-row simhash60 HOF expression (which
-    text_metrics and the DuckDB oracle still use), including the
-    empty/null/whitespace-token edge docs."""
-    from pyspark.sql import functions as F
+    bit-identical to a hashlib replay of the simhash60 definition (the
+    per-row expression text_metrics and the DuckDB oracle use),
+    including the empty/null/double-space edge docs: single-space
+    tokens, per token md5's first 7 hex chars as bits 32-59 and the
+    next 8 as bits 0-31, +1/-1 votes, bit set when its sum is positive."""
+    import hashlib
 
-    from stock_bars_data_engineering_project_spark.functions.hashing import simhash60
-    from stock_bars_data_engineering_project_spark.functions.text import tokens
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         simhash_fingerprints,
     )
+
+    def replay(text):
+        if text is None:
+            return None
+        sums = [0] * 60
+        for tok in text.split(" "):
+            h = hashlib.md5(tok.encode("utf-8")).hexdigest()
+            bits = int(h[:7], 16) << 32 | int(h[7:15], 16)
+            for j in range(60):
+                sums[j] += 1 if bits >> j & 1 else -1
+        return sum(1 << j for j in range(60) if sums[j] > 0)
 
     docs = _docs(spark).unionByName(
         spark.createDataFrame(
@@ -92,13 +103,10 @@ def test_simhash_fingerprints_match_per_row_expression(spark):
             "doc_id long, text string",
         )
     )
-    old = docs.select("doc_id", simhash60(tokens(F.col("text"))).alias("want"))
-    got = simhash_fingerprints(docs)
-    assert old.count() == got.count()
-    # null-SAFE comparison: `want <> simhash` is NULL (filtered away)
-    # when either side is NULL, which would silently pass exactly the
-    # NULL-text divergence this test exists to pin
-    assert old.join(got, "doc_id").filter("NOT (want <=> simhash)").count() == 0
+    want = {r.doc_id: replay(r.text) for r in docs.collect()}
+    got = {r.doc_id: r.simhash for r in simhash_fingerprints(docs).collect()}
+    assert got == want
+    assert want[91] is None and want[90] is not None
 
 
 def test_minhash_signatures_match_per_row_expression(spark):
@@ -314,7 +322,7 @@ def test_embedding_blocked_candidates_equal_hamming_ring(spark, monkeypatch):
         buckets = {
             r.vec_id: r.b
             for r in emb.select(
-                "vec_id", similarity.lsh_bucket(F.col("embedding"), 64, n_planes).alias("b")
+                "vec_id", similarity.lsh_bucket("embedding", 64, n_planes).alias("b")
             ).collect()
         }
         ids = sorted(buckets)

@@ -108,7 +108,7 @@ def test_word_shingles_count_law(spark, words, k):
     text = " ".join(words)
     row = (
         spark.createDataFrame([(text,)], "text string")
-        .select(word_shingles(F.col("text"), k).alias("sh"))
+        .select(word_shingles("text", k).alias("sh"))
         .first()
     )
     n_tokens = len(text.split(" "))  # split semantics: '' -> ['']

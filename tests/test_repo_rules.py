@@ -1,9 +1,11 @@
 """Static rules over the source tree: the warehouse's snapshot format
 stays inside ``sinks/``, the slow-tier manifest names only tests that
 exist, every top-level package function or class is named by the
-package or its entry points, and every defaulted package parameter is
-set by some product caller to a value other than its default. All parse source with ``ast``; no Spark
-session needed."""
+package or its entry points, every defaulted package parameter is set
+by some product caller to a value other than its default, column helpers
+take SQL text only (no ``Column | str`` twin), and driver-side frames
+are built only by ``session.local_frame``. All parse source with
+``ast``; no Spark session needed."""
 
 from __future__ import annotations
 
@@ -412,3 +414,187 @@ def test_every_defaulted_parameter_is_set_by_product():
     unset = unset_parameters(_package_sources(), _root_sources())
     assert sorted(unset - set(reachability.KEEP_PARAMS)) == []
     assert sorted(set(reachability.KEEP_PARAMS) - unset) == []
+
+
+# A column helper takes SQL text and builds one ``F.expr`` parse; a
+# second, Column-built implementation of the same values beside it is
+# code no product caller needs.
+
+
+def _annotation_names(node: ast.expr | None) -> set[str]:
+    if node is None:
+        return set()
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def _returns_expr(body: list[ast.stmt]) -> bool:
+    return any(
+        isinstance(n, ast.Return)
+        and isinstance(n.value, ast.Call)
+        and isinstance(n.value.func, ast.Attribute)
+        and n.value.func.attr == "expr"
+        for stmt in body
+        for n in ast.walk(stmt)
+    )
+
+
+def column_or_sql_twins(sources: dict[str, str]) -> set[str]:
+    """``<module>:<function>`` for every function in ``sources`` with a
+    parameter annotated as a union of ``Column`` and ``str``, or with an
+    ``if isinstance(<parameter>, str):`` whose body returns
+    ``F.expr(...)``."""
+    out = set()
+    for module, text in sources.items():
+        for fn in ast.walk(ast.parse(text)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            args = fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+            params = {a.arg for a in args}
+            if any(
+                isinstance(a.annotation, ast.BinOp | ast.Subscript)
+                and {"Column", "str"} <= _annotation_names(a.annotation)
+                for a in args
+            ):
+                out.add(f"{module}:{fn.name}")
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.If) or not _returns_expr(node.body):
+                    continue
+                if any(
+                    isinstance(c, ast.Call)
+                    and getattr(c.func, "id", None) == "isinstance"
+                    and len(c.args) == 2
+                    and getattr(c.args[0], "id", None) in params
+                    and getattr(c.args[1], "id", None) == "str"
+                    for c in ast.walk(node.test)
+                ):
+                    out.add(f"{module}:{fn.name}")
+    return out
+
+
+def test_column_or_sql_twins_rule():
+    sources = {
+        "a.py": (
+            "def union(x: Column | str) -> Column:\n    return x\n\n"
+            "def attr_union(x: 'F.Column | str'):\n    return x\n\n"
+            "def typing_union(x: Union[str, F.Column]):\n    return x\n\n"
+            "def dispatch(x):\n"
+            "    if isinstance(x, str):\n        return F.expr(x)\n"
+            "    return x\n\n"
+            "def both(a, b):\n"
+            "    if isinstance(a, str) and isinstance(b, str):\n"
+            "        return F.expr(a + b)\n"
+            "    return a\n\n"
+            "def sql_only(x: str) -> Column:\n    return F.expr(x)\n\n"
+            "def col_only(x: Column) -> Column:\n    return x\n\n"
+            "def other_check(x, y):\n"
+            "    if isinstance(y, str):\n        return F.col(y)\n"
+            "    return x\n"
+        ),
+    }
+    # a string annotation is not parsed, so attr_union passes; only
+    # the dispatch that returns a parse counts
+    assert column_or_sql_twins(sources) == {
+        "a.py:union", "a.py:typing_union", "a.py:dispatch", "a.py:both",
+    }
+
+
+def test_no_column_or_sql_twin_parameters():
+    assert sorted(column_or_sql_twins(_package_sources())) == []
+
+
+# A driver-side frame is built in one place, session.local_frame.
+
+
+def create_dataframe_calls(sources: dict[str, str]) -> set[str]:
+    """``<module>:<function>`` (``<module>`` at module level) for every
+    ``createDataFrame(...)`` call in ``sources`` outside a function named
+    ``local_frame``."""
+    out = set()
+
+    def visit(module: str, node: ast.AST, where: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(module, child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "createDataFrame"
+                and where != "local_frame"
+            ):
+                out.add(f"{module}:{where}" if where else module)
+            visit(module, child, where)
+
+    for module, text in sources.items():
+        visit(module, ast.parse(text), "")
+    return out
+
+
+def test_create_dataframe_rule():
+    sources = {
+        "session.py": (
+            "def local_frame(spark, rows, schema):\n"
+            "    return spark.createDataFrame(rows, schema)\n"
+        ),
+        "ops.py": (
+            "EMPTY = spark.createDataFrame([], 'x int')\n\n"
+            "def build(spark):\n"
+            "    def inner():\n"
+            "        return spark.createDataFrame([(1,)], 'x int')\n"
+            "    return local_frame(spark, [(1,)], 'x int')\n"
+        ),
+    }
+    assert create_dataframe_calls(sources) == {"ops.py", "ops.py:inner"}
+
+
+def test_create_dataframe_only_in_local_frame():
+    assert sorted(create_dataframe_calls(_package_sources())) == []
+
+
+def test_unrun_blocks_rule(tmp_path):
+    """The reachability report's statement blocks: a traced call of a
+    small function leaves exactly its unrun branches, without the
+    raise/continue-only guards and the docstring."""
+    source = (
+        "def f(x):\n"
+        '    """doc"""\n'
+        "    if isinstance(x, str):\n"
+        "        return x\n"
+        "    y = (\n"
+        "        x + 1\n"
+        "    )\n"
+        "    for i in range(3):\n"
+        "        if i > 5:\n"
+        "            continue\n"
+        "        if i > 7:\n"
+        "            raise ValueError(i)\n"
+        "    try:\n"
+        "        z = 1\n"
+        "    except ValueError:\n"
+        "        z = 2\n"
+        "        z += 1\n"
+        "    return y + z\n"
+    )
+    path = str(tmp_path / "mod.py")
+    namespace: dict = {}
+    exec(compile(source, path, "exec"), namespace)
+    lines: set[int] = set()
+
+    def local(frame, event, arg):
+        if event == "line":
+            lines.add(frame.f_lineno)
+        return local
+
+    saved = sys.gettrace()
+    sys.settrace(lambda frame, event, arg: local if frame.f_code.co_filename == path else None)
+    try:
+        namespace["f"](1)
+    finally:
+        sys.settrace(saved)
+    node = ast.parse(source).body[0]
+    d = reachability.Def("mod.py", "f", "def", 1, node)
+    assert reachability.unrun_blocks(d, lines) == [(4, 4), (16, 17)]

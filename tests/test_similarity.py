@@ -137,10 +137,10 @@ def test_trained_ivf_recall_at_least_matches_seed(spark):
 
 
 def test_hyperplane_plan_bounded_at_dim_768(spark):
-    """lsh_bucket at transformer-scale dims must stay a flat plan: planes
-    are ArrayType literals (one node per plane), not dim x n_planes md5
-    expression columns. Pins both that it executes and that the analyzed
-    plan string does not scale with dim."""
+    """lsh_bucket at transformer-scale dims must stay a flat plan: each
+    plane is one array of double literals parsed from SQL text, not
+    dim x n_planes md5 expression columns. Pins both that it executes
+    and the analyzed plan's size (about 10 KB of plan text)."""
     from stock_bars_data_engineering_project_spark.operators.similarity import lsh_bucket
 
     df = spark.range(8).select(
@@ -150,14 +150,14 @@ def test_hyperplane_plan_bounded_at_dim_768(spark):
             lambda i: (F.col("id") + i).cast("double") % 7.0 - 3.0,
         ).alias("embedding"),
     )
-    out = df.select("vec_id", lsh_bucket(F.col("embedding"), 768, 8).alias("b"))
+    out = df.select("vec_id", lsh_bucket("embedding", 768, 8).alias("b"))
     rows = out.collect()
     assert len(rows) == 8
     assert all(0 <= r.b < 256 for r in rows)
     plan = out._jdf.queryExecution().analyzed().toString()
     # 8 planes x 768 components as md5/conv expressions would be ~1 MB of
-    # plan text; literal arrays keep it in the tens of KB.
-    assert len(plan) < 200_000
+    # plan text; literal arrays keep it near 10 KB
+    assert len(plan) < 20_000
 
 
 def test_pq_codes_shape_and_range(spark):
@@ -260,7 +260,7 @@ def test_pq_correct_with_noncontiguous_ids(spark, monkeypatch):
 
 
 def test_vector_storage_utilities(spark):
-    """unit_normalize / truncate_dims / int8 quantization: exact Python
+    """unit_normalize_sql / truncate_dims / int8 quantization: exact Python
     replay, error bound, zero-vector laws, loud short-vector guard."""
     import math
 
@@ -271,7 +271,7 @@ def test_vector_storage_utilities(spark):
         dequantize_int8,
         quantize_int8,
         truncate_dims,
-        unit_normalize,
+        unit_normalize_sql,
     )
 
     vecs = [
@@ -285,11 +285,12 @@ def test_vector_storage_utilities(spark):
         r.vec_id: r
         for r in df.select(
             "vec_id",
-            unit_normalize(F.col("embedding")).alias("u"),
-            truncate_dims(F.col("embedding"), 2).alias("t2"),
-            quantize_int8(F.col("embedding")).alias("qs"),
-            dequantize_int8(quantize_int8(F.col("embedding"))).alias("dq"),
-        ).collect()
+            F.expr(unit_normalize_sql("embedding")).alias("u"),
+            truncate_dims("embedding", 2).alias("t2"),
+            quantize_int8("embedding").alias("qs"),
+        )
+        .withColumn("dq", dequantize_int8("qs"))
+        .collect()
     }
     for vid, v in vecs:
         r = out[vid]
@@ -322,9 +323,9 @@ def test_vector_storage_utilities(spark):
     # a vector shorter than d fails loudly, not with a silent NULL
     short = spark.createDataFrame([(1, [1.0])], "vec_id long, embedding array<double>")
     with pytest.raises(Exception, match="shorter than d"):
-        short.select(truncate_dims(F.col("embedding"), 8)).collect()
+        short.select(truncate_dims("embedding", 8)).collect()
     with pytest.raises(ValueError, match="d must be"):
-        truncate_dims(F.col("embedding"), 0)
+        truncate_dims("embedding", 0)
 
 
 def test_kmeans_exact_mean_matches_sql_replay(spark):
@@ -385,9 +386,8 @@ def test_int8_serving_recall_near_brute(spark):
         (r.query_id, r.vec_id)
         for r in cosine_topk(emb, queries, k=10).collect()
     }
-    corpus_dq = emb.select(
-        "vec_id",
-        dequantize_int8(quantize_int8(F.col("embedding"))).alias("embedding"),
+    corpus_dq = emb.select("vec_id", quantize_int8("embedding").alias("qs")).select(
+        "vec_id", dequantize_int8("qs").alias("embedding")
     )
     int8 = {
         (r.query_id, r.vec_id)

@@ -302,12 +302,12 @@ def test_alpha_mixture_membership_matches_python_replay(spark):
     kept = {
         r.doc_id
         for r in alpha_mixture_sample(
-            docs, alpha=0.5, size=token_count(F.col("text"))
+            docs, alpha=0.5, size=token_count("text")
         ).select("doc_id").collect()
     }
 
     rows = docs.select(
-        "doc_id", "source", token_count(F.col("text")).alias("n")
+        "doc_id", "source", token_count("text").alias("n")
     ).collect()
     mass: dict[str, float] = {}
     for r in rows:

@@ -19,7 +19,7 @@ def test_rolling_fingerprint_known_value(spark):
     # "ab": ((0*31+97)*31+98) % (2^31-1) = 3105
     row = (
         spark.createDataFrame([("ab",)], "text string")
-        .select(rolling_fingerprint(F.col("text")).alias("fp"))
+        .select(rolling_fingerprint("text").alias("fp"))
         .collect()[0]
     )
     assert row.fp == 3105
@@ -28,7 +28,7 @@ def test_rolling_fingerprint_known_value(spark):
 def test_shingles_short_doc_empty(spark):
     rows = (
         spark.createDataFrame([("a b",), ("a b c d",)], "text string")
-        .select(word_shingles(F.col("text")).alias("sh"))
+        .select(word_shingles("text").alias("sh"))
         .collect()
     )
     assert rows[0].sh == []
@@ -38,7 +38,7 @@ def test_shingles_short_doc_empty(spark):
 def test_quality_score_bounds(spark):
     rows = (
         spark.createDataFrame([("the a of and in is it that to an " * 10,), ("x",)], "text string")
-        .select(quality_score(F.col("text")).alias("q"))
+        .select(quality_score("text").alias("q"))
         .collect()
     )
     assert 0.0 <= rows[1].q < rows[0].q <= 1.0
@@ -70,7 +70,7 @@ def test_top_gram_share_matches_counter(spark):
 
     from stock_bars_data_engineering_project_spark.functions.text import (
         top_gram_share,
-        word_shingles,
+        word_shingles_sql,
     )
 
     texts = [
@@ -85,7 +85,7 @@ def test_top_gram_share_matches_counter(spark):
     got = {
         r.doc_id: r.share
         for r in df.select(
-            "doc_id", top_gram_share(word_shingles(F.col("text"), 2)).alias("share")
+            "doc_id", top_gram_share(word_shingles_sql("text", 2)).alias("share")
         ).collect()
     }
     for i, t in enumerate(texts):
@@ -228,8 +228,6 @@ def test_phash_dedup_pipeline(spark):
 
 
 def test_lang_id_profiles_classifies_five_languages(spark):
-    from pyspark.sql import functions as F
-
     from stock_bars_data_engineering_project_spark.functions.text import (
         lang_id_profiles,
     )
@@ -249,7 +247,7 @@ def test_lang_id_profiles_classifies_five_languages(spark):
     got = {
         r.doc_id: r.lang
         for r in docs.select(
-            "doc_id", lang_id_profiles(F.col("text")).alias("lang")
+            "doc_id", lang_id_profiles("text").alias("lang")
         ).collect()
     }
     for i, _, want in rows:
@@ -257,8 +255,6 @@ def test_lang_id_profiles_classifies_five_languages(spark):
 
 
 def test_lang_id_profiles_threshold_and_ties(spark):
-    from pyspark.sql import functions as F
-
     from stock_bars_data_engineering_project_spark.functions.text import (
         lang_id_profiles,
     )
@@ -269,7 +265,7 @@ def test_lang_id_profiles_threshold_and_ties(spark):
             [(1, "the " + " ".join(f"w{i}" for i in range(n_other)))],
             "doc_id long, text string",
         )
-        return docs.select(lang_id_profiles(F.col("text")).alias("l")).collect()[0].l
+        return docs.select(lang_id_profiles("text").alias("l")).collect()[0].l
 
     assert lang(19) == "en"  # ratio exactly 0.05: the threshold is inclusive
     assert lang(20) == "unknown"  # ratio 1/21 falls below it
@@ -278,7 +274,7 @@ def test_lang_id_profiles_threshold_and_ties(spark):
     # first profile in dict order wins (fr precedes es)
     tie = spark.createDataFrame([(1, "que que que")], "doc_id long, text string")
     assert (
-        tie.select(lang_id_profiles(F.col("text")).alias("l")).collect()[0].l
+        tie.select(lang_id_profiles("text").alias("l")).collect()[0].l
         == "fr"
     )
 
@@ -288,8 +284,6 @@ def test_lang_id_profiles_empty_doc_is_unknown(spark):
     with an ANSI divide-by-zero (the density divisor is the token
     count), and not fall through to the last profile language in the
     oracle's CASE (both found and fixed by review)."""
-    from pyspark.sql import functions as F
-
     from stock_bars_data_engineering_project_spark.functions.text import (
         lang_id_profiles,
     )
@@ -300,7 +294,7 @@ def test_lang_id_profiles_empty_doc_is_unknown(spark):
     got = {
         r.doc_id: r.lang
         for r in df.select(
-            "doc_id", lang_id_profiles(F.col("text")).alias("lang")
+            "doc_id", lang_id_profiles("text").alias("lang")
         ).collect()
     }
     assert got == {0: "unknown", 1: "unknown", 2: "unknown"}

@@ -1,8 +1,9 @@
 """Which package functions do the product's own entry points reach?
 
-Runs the product roots under a stdlib profiler (``sys.setprofile`` plus
-``threading.setprofile``, so chain threads started by ``memo.run_chains``
-are seen too) and records every package function that executes:
+Runs the product roots under a stdlib tracer (``sys.settrace`` plus
+``threading.settrace``, so chain threads started by ``memo.run_chains``
+are seen too) and records every package function that executes, and
+every line of package code that runs:
 
 - every ``__spark_entry__.queries()`` row over SF_DIR (collected), and
   ``oracle_sql()``;
@@ -14,12 +15,14 @@ A function also counts as reached when a reached function, or one of the
 root files (``__spark_entry__.py``, ``bench.py``, ``perfbench/*.py``),
 names it (:func:`mentions`). The name rule is needed because UDF and
 ``mapInPandas`` bodies and DataSource reader callbacks run in Python
-workers, where a driver-side profiler cannot see them; it
+workers, where a driver-side tracer cannot see them; it
 over-approximates, never under.
 
 Every function reached neither way must appear in ``KEEP`` with its
 reason to stay. The report (Markdown) goes to stdout or ``--out``; the
-exit status is 1 when an unreached function has no reason.
+exit status is 1 when an unreached function has no reason. The report
+also lists, for each executed function, the blocks of statements no
+root runs (:func:`unrun_blocks`); they do not change the exit status.
 
 Usage: python tools/reachability.py --sf-dir DIR [--out REACHABILITY.md]
 """
@@ -51,8 +54,6 @@ _ROADMAP_4 = "warehouse verb the fault-injection work (ROADMAP item 4) covers"
 # "<module path>:<qualname>" -> why it stays although no root reaches it.
 KEEP: dict[str, str] = {
     "functions/hashing.py:minhash_signature": _REFERENCE + " (the fused MinHash fold)",
-    "functions/vectors.py:quantize_int8": "encoder of the int8 codes the reached "
-    "dequantize_int8 decodes; tests build their inputs with it",
     "operators/dedup.py:embedding_dup_pairs": _REFERENCE + " (blocked embedding dedup)",
     "operators/index_maint.py:apply_deletes": "the only compaction of index "
     "tombstones; without it __deleted grows forever (ROADMAP item 4)",
@@ -219,27 +220,36 @@ def root_file_names() -> set[str]:
 
 class Tracer:
     """Collects ``(filename, firstlineno)`` of every package code object
-    that is called while active, in every thread."""
+    that is called while active, in every thread, and ``(filename,
+    lineno)`` of every line that runs in one. Only package frames get a
+    local (line) trace function; every other frame runs untraced."""
 
     def __init__(self) -> None:
         self.seen: set[tuple[str, int]] = set()
+        self.lines: set[tuple[str, int]] = set()
         self._prefix = PACKAGE + os.sep
 
-    def _profile(self, frame, event, arg):
-        if event == "call":
-            code = frame.f_code
-            if code.co_filename.startswith(self._prefix):
-                self.seen.add((code.co_filename, code.co_firstlineno))
+    def _call(self, frame, event, arg):
+        code = frame.f_code
+        if event != "call" or not code.co_filename.startswith(self._prefix):
+            return None
+        self.seen.add((code.co_filename, code.co_firstlineno))
+        return self._line
+
+    def _line(self, frame, event, arg):
+        if event == "line":
+            self.lines.add((frame.f_code.co_filename, frame.f_lineno))
+        return self._line
 
     @contextlib.contextmanager
     def active(self):
-        threading.setprofile(self._profile)
-        sys.setprofile(self._profile)
+        threading.settrace(self._call)
+        sys.settrace(self._call)
         try:
             yield self
         finally:
-            sys.setprofile(None)
-            threading.setprofile(None)
+            sys.settrace(None)
+            threading.settrace(None)
 
 
 def _run_cli(module_main, argv: list[str]) -> None:
@@ -332,7 +342,95 @@ def resolve(defs: list[Def], seen: set[tuple[str, int]]):
     return traced, reached - traced, named, unreached
 
 
-def report(defs, traced, via_class, named, unreached, sf_dir) -> str:
+_NO_CODE = (ast.Global, ast.Nonlocal, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _bodies(stmt: ast.stmt) -> list[list[ast.stmt]]:
+    out = [getattr(stmt, f) for f in ("body", "orelse", "finalbody") if getattr(stmt, f, None)]
+    out += [h.body for h in getattr(stmt, "handlers", ())]
+    out += [c.body for c in getattr(stmt, "cases", ())]
+    return out
+
+
+def unrun_blocks(d: Def, lines: set[int]) -> list[tuple[int, int]]:
+    """``(first, last)`` line spans of the maximal runs of statements in
+    ``d``'s body (nested bodies included, nested defs excluded) that no
+    traced line falls inside. Runs made only of ``raise``/``continue``,
+    docstrings, bare string statements and declarations are left out:
+    guards and text, not behaviour."""
+    out: list[tuple[int, int]] = []
+
+    def ran(stmt: ast.stmt) -> bool:
+        return any(n in lines for n in range(stmt.lineno, stmt.end_lineno + 1))
+
+    def flush(run: list[ast.stmt]) -> None:
+        if run and not all(isinstance(s, (ast.Raise, ast.Continue)) for s in run):
+            out.append((run[0].lineno, run[-1].end_lineno))
+
+    def visit(body: list[ast.stmt]) -> None:
+        run: list[ast.stmt] = []
+        for stmt in body:
+            quiet = isinstance(stmt, _NO_CODE) or (
+                isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Constant)
+            )
+            if quiet:
+                continue
+            if ran(stmt):
+                flush(run)
+                run = []
+                for inner in _bodies(stmt):
+                    visit(inner)
+            else:
+                run.append(stmt)
+        flush(run)
+
+    visit(d.node.body)
+    return out
+
+
+def _code_lines(source: list[str], first: int, last: int) -> int:
+    return sum(
+        1
+        for text in source[first - 1 : last]
+        if text.strip() and not text.strip().startswith("#")
+    )
+
+
+def unrun_section(defs: list[Def], traced: set[str], lines: set[tuple[str, int]]) -> list[str]:
+    """The report section listing :func:`unrun_blocks` of every executed
+    function."""
+    by_file: dict[str, set[int]] = defaultdict(set)
+    for filename, lineno in lines:
+        by_file[filename].add(lineno)
+    sources: dict[str, list[str]] = {}
+    rows, n_lines = [], 0
+    for d in sorted(defs, key=lambda d: (d.module, d.first)):
+        if d.key not in traced:
+            continue
+        path = os.path.join(PACKAGE, d.module)
+        if path not in sources:
+            with open(path) as f:
+                sources[path] = f.read().splitlines()
+        for first, last in unrun_blocks(d, by_file[path]):
+            n = _code_lines(sources[path], first, last)
+            n_lines += n
+            head = sources[path][first - 1].strip().replace("`", "'")
+            rows.append(f"- `{d.key}` lines {first}-{last} ({n}): `{head}`")
+    return [
+        "## Statements no root runs",
+        "",
+        "Blocks of statements inside executed functions that no root ran",
+        "(raise/continue-only blocks and docstrings left out); the number",
+        "in parentheses counts the block's code lines.",
+        "",
+        f"- blocks: {len(rows)}",
+        f"- code lines: {n_lines}",
+        "",
+        *(rows or ["(none)"]),
+    ]
+
+
+def report(defs, traced, via_class, named, unreached, sf_dir, ran) -> str:
     per_module: dict[str, list[int]] = defaultdict(lambda: [0, 0, 0, 0])
     for d in defs:
         row = per_module[d.module]
@@ -378,6 +476,7 @@ def report(defs, traced, via_class, named, unreached, sf_dir) -> str:
         lines += [f"- `{k}`" for k in stale]
     lines += ["", "## Reached only by name", ""]
     lines += [f"- `{k}`" for k in sorted(named)] or ["(none)"]
+    lines += ["", *unrun_section(defs, traced, ran)]
     return "\n".join(lines) + "\n"
 
 
@@ -397,9 +496,9 @@ def main(argv: list[str]) -> int:
     tracer = Tracer()
     with tracer.active():
         run_roots(args.sf_dir, log)
-    log(f"roots ran in {time.time() - t0:.0f}s under the profiler")
+    log(f"roots ran in {time.time() - t0:.0f}s under the tracer")
     traced, via_class, named, unreached = resolve(defs, tracer.seen)
-    text = report(defs, traced, via_class, named, unreached, args.sf_dir)
+    text = report(defs, traced, via_class, named, unreached, args.sf_dir, tracer.lines)
     if args.out:
         with open(args.out, "w") as f:
             f.write(text)

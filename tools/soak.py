@@ -74,7 +74,10 @@ from stock_bars_data_engineering_project_spark.functions.vectors import (  # noq
 from stock_bars_data_engineering_project_spark.functions.quality_model import (  # noqa: E402
     quality_scores,
 )
-from stock_bars_data_engineering_project_spark.operators.bloom import bloom_semi_join  # noqa: E402
+from stock_bars_data_engineering_project_spark.operators.bloom import (  # noqa: E402
+    bloom_bitmap,
+    bloom_semi_join,
+)
 from stock_bars_data_engineering_project_spark.operators.heavy import (  # noqa: E402
     merged_heavy_hitters,
     mg_summaries,
@@ -266,6 +269,9 @@ def run(
     marks = events.groupBy(
         "user_id", F.window("ts", "1 hour")["start"].alias("mark_ts")
     ).agg(F.sum("value").alias("mark_value"))
+    buyers = events.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("buyer_id")
+    )
     ops = {
         "minhash_lsh": lambda: minhash_lsh_pairs(docs),
         "ngram_jaccard": lambda: ngram_jaccard_pairs(docs),
@@ -390,11 +396,10 @@ def run(
         # large scales it saturates and the pre-filter passes more rows
         "bloom_semi": lambda: bloom_semi_join(
             events.select("event_id", "user_id"),
-            events.filter(F.col("event_type") == "purchase").select(
-                F.col("user_id").alias("buyer_id")
-            ),
+            buyers,
             key="user_id",
             build_key="buyer_id",
+            words=bloom_bitmap(buyers, "buyer_id"),
         ),
         # PSI distribution drift: one partial-agg (key, bucket) pass
         # over the fact table, then windows/folds on the (keys x bins)
@@ -483,12 +488,9 @@ def run(
         # top-k against the FIXED 25-query set — the curve should track
         # the corpus scan, quantization adding a per-row constant
         "ann_int8": lambda: cosine_topk(
-            emb.filter(F.col("vec_id") >= 25).select(
-                "vec_id",
-                dequantize_int8(
-                    quantize_int8(F.col("embedding"))
-                ).alias("embedding"),
-            ),
+            emb.filter(F.col("vec_id") >= 25)
+            .select("vec_id", quantize_int8("embedding").alias("qs"))
+            .select("vec_id", dequantize_int8("qs").alias("embedding")),
             emb.filter(F.col("vec_id") < 25),
             k=10,
         ),
@@ -498,15 +500,11 @@ def run(
         "ann_mrl": lambda: cosine_topk(
             emb.filter(F.col("vec_id") >= 25).select(
                 "vec_id",
-                truncate_dims(
-                    F.col("embedding"), 16, renormalize=False
-                ).alias("embedding"),
+                truncate_dims("embedding", 16, renormalize=False).alias("embedding"),
             ),
             emb.filter(F.col("vec_id") < 25).select(
                 "vec_id",
-                truncate_dims(
-                    F.col("embedding"), 16, renormalize=False
-                ).alias("embedding"),
+                truncate_dims("embedding", 16, renormalize=False).alias("embedding"),
             ),
             k=10,
         ),
