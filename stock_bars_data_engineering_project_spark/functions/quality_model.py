@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import materialize
 from .hashing import md5_bucket48
-from .text import tokens
+from .text import corpus_tokens
 
 N_BUCKETS = 1 << 20
 # 2^48 — the hash-prefix width used across functions/hashing idioms:
@@ -47,10 +47,10 @@ LR = 16.0
 
 
 def doc_features() -> Column:
-    """Lowercased unigrams + adjacent ``a_b`` bigrams of ``text`` as one
-    array — pure array expressions (filter/slice/zip_with), map-side
-    codegen."""
-    toks = F.filter(tokens("lower(text)"), lambda t: t != "")
+    """The corpus word model's unigrams + adjacent ``a_b`` bigrams of
+    ``text`` as one array — pure array expressions (slice/zip_with),
+    map-side."""
+    toks = corpus_tokens()
     n = F.size(toks)
     bigrams = F.when(
         n >= 2,

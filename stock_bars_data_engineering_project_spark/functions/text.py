@@ -33,6 +33,20 @@ def tokens(text: str) -> Column:
     return F.expr(tokens_sql(text))
 
 
+# The corpus word model: lower-cased single-space tokens of ``text``,
+# empties dropped. Every corpus-model consumer (surprisal, PMI, LM
+# state, BPE, BM25, the quality classifier) tokenizes through it, so
+# the cross-engine contract cannot desynchronize between operators.
+# array_remove equals filter(t -> t != '') on split output (split never
+# yields NULL elements) and stays in whole-stage codegen, where the
+# higher-order filter would run interpreted.
+CORPUS_TOKENS_SQL = f"array_remove({tokens_sql('lower(text)')}, '')"
+
+
+def corpus_tokens() -> Column:
+    return F.expr(CORPUS_TOKENS_SQL)
+
+
 def token_count_sql(text: str) -> str:
     return f"size({tokens_sql(text)})"
 
@@ -71,10 +85,12 @@ def stopword_ratio(text: str) -> Column:
 
 
 def punct_ratio_sql(text: str) -> str:
-    """Fraction of characters that are neither word chars nor whitespace."""
+    """Fraction of characters that are neither word chars nor whitespace;
+    NULL for the empty string (try_divide, DuckDB's x/0), so one empty
+    document cannot stop the job with an ANSI DIVIDE_BY_ZERO."""
     return (
-        f"(length(regexp_replace({text}, '[a-zA-Z0-9\\\\s]', '')) "
-        f"/ length({text}))"
+        f"try_divide(length(regexp_replace({text}, '[a-zA-Z0-9\\\\s]', '')), "
+        f"length({text}))"
     )
 
 
@@ -121,6 +137,27 @@ def quality_score(text: str) -> Column:
     Rounded by scalars.sql_round, the same ANSI SQL text the DuckDB
     oracles use."""
     return F.expr(quality_score_sql(text))
+
+
+# PII scrub: e-mail addresses and phone numbers become typed tags. The
+# DuckDB oracles interpolate the same patterns; production plugs a
+# fuller ruleset into the same shape.
+EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
+PHONE_RE = r"\d{3}[-.]\d{3,4}[-.]\d{4}"
+
+
+def pii_scrub_sql(text: str) -> str:
+    """Backslashes in the patterns double for the SQL string literal;
+    the parsed pattern is byte-identical."""
+    email, phone = (p.replace("\\", "\\\\") for p in (EMAIL_RE, PHONE_RE))
+    return (
+        f"regexp_replace(regexp_replace({text}, '{email}', '<EMAIL>'), "
+        f"'{phone}', '<PHONE>')"
+    )
+
+
+def pii_scrub(text: str) -> Column:
+    return F.expr(pii_scrub_sql(text))
 
 
 def rolling_fingerprint_sql(text: str) -> str:

@@ -61,33 +61,24 @@ def norm(a: str) -> Column:
     return F.expr(norm_sql(a))
 
 
+def cosine_from_norms_sql(dot: str, na: str, nb: str) -> str:
+    """``dot / (na * nb)``, the oracle's association, over SQL text for a
+    dot product and two norms (a scorer that computes each norm once per
+    row passes those columns). try_divide: a zero vector has no
+    direction, so its cosine is NULL, which is DuckDB's x/0, rather than
+    an ANSI DIVIDE_BY_ZERO that stops the job."""
+    return f"try_divide({dot}, ({na} * {nb}))"
+
+
 def cosine_sql(a: str, b: str) -> str:
-    # dot / (norm * norm), the oracle's association
-    return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
+    return cosine_from_norms_sql(dot_sql(a, b), norm_sql(a), norm_sql(b))
 
 
 def cosine(a: str, b: str) -> Column:
     return F.expr(cosine_sql(a, b))
 
 
-def unit_normalize_sql(vec: str) -> str:
-    """L2-normalize to unit length (the storage form that turns cosine
-    into a plain dot product downstream). A zero vector has no
-    direction and passes through unchanged (as doubles) rather than
-    becoming NaNs — IEEE double division would not error under ANSI,
-    it would silently poison every later similarity."""
-    v = as_double_sql(vec)
-    nrm = (
-        f"sqrt(aggregate(transform({v}, x -> x * x), 0.0D, "
-        "(acc, x) -> acc + x))"
-    )
-    return (
-        f"(CASE WHEN {nrm} > 0 THEN transform({v}, x -> x / {nrm}) "
-        f"ELSE {v} END)"
-    )
-
-
-def truncate_dims_sql(vec: str, d: int, renormalize: bool = True) -> str:
+def truncate_dims_sql(vec: str, d: int) -> str:
     if d < 1:
         raise ValueError(f"d must be >= 1, got {d}")
     checked = (
@@ -95,17 +86,16 @@ def truncate_dims_sql(vec: str, d: int, renormalize: bool = True) -> str:
         f"ELSE raise_error('truncate_dims: vector shorter than d={d}') "
         "END)"
     )
-    return (
-        unit_normalize_sql(checked) if renormalize else as_double_sql(checked)
-    )
+    return as_double_sql(checked)
 
 
-def truncate_dims(vec: str, d: int, renormalize: bool = True) -> Column:
+def truncate_dims(vec: str, d: int) -> Column:
     """Matryoshka-style dimension truncation: keep the first ``d``
-    components (MRL-trained embeddings order information by prefix), by
-    default re-normalized so downstream cosine stays calibrated. A
-    vector shorter than ``d`` is a data error and surfaces loudly."""
-    return F.expr(truncate_dims_sql(vec, d, renormalize))
+    components as doubles (MRL-trained embeddings order information by
+    prefix; cosine scoring is scale-free, so the prefix is not
+    re-normalized). A vector shorter than ``d`` is a data error and
+    surfaces loudly."""
+    return F.expr(truncate_dims_sql(vec, d))
 
 
 def quantize_int8_sql(vec: str) -> str:

@@ -26,31 +26,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    right_on: str | None = None,
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Backward inclusive as-of join: each left row gains the right row
-    with the greatest ``right_on <= ts`` within the same ``user_id``
+    with the greatest ``mark_ts <= ts`` within the same ``user_id``
     (NULLs when no predecessor exists). Right rows must be unique per
-    (user_id, right_on) — dedup upstream, as with any merge source (SURVEY
+    (user_id, mark_ts) — dedup upstream, as with any merge source (SURVEY
     Q6).
 
     Forward as-of is the same construction with both orderings negated.
     """
-    on, by = "ts", ("user_id",)
-    right_on = right_on or on
-    # When both sides share the event-time column name (the defaulted
-    # right_on path), the right's copy is the join coordinate, not a
-    # payload — emitting it would always clash with left's column, so it
-    # is excluded (pandas merge_asof resolves the same collision by
-    # suffixing; rename the right column first if its value is needed).
-    rval_cols = [
-        c
-        for c in right.columns
-        if c not in by and not (c == right_on and right_on in left.columns)
-    ]
+    on, by, right_on = "ts", ("user_id",), "mark_ts"
+    rval_cols = [c for c in right.columns if c not in by]
     clash = set(rval_cols) & set(left.columns)
     if clash:
         raise ValueError(f"rename right columns clashing with left: {sorted(clash)}")

@@ -12,9 +12,10 @@ small table.
 
 Spark-first shape:
 
-- corpus -> word counts: one explode + one partial-aggregable groupBy —
-  the only corpus-sized stage, identical to the vocab pass in
-  plans/extensions.py;
+- corpus -> word counts (``quality.word_counts``, the corpus word
+  model): one explode + one partial-aggregable groupBy — the only
+  corpus-sized stage, the same table the vocab pass in
+  plans/extensions.py reads;
 - per round: adjacent-pair counts via a map-side zip_with of two array
   slices weighted by the word count, ONE vocabulary-sized partial-agg
   shuffle, and a 1-row TakeOrdered argmax (a sanctioned driver-side
@@ -41,20 +42,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
+from .quality import word_counts
 
 EOW = "</w>"
-
-
-def word_counts(df: DataFrame) -> DataFrame:
-    """Corpus -> (word, n): the single corpus-sized pass of BPE
-    training. Map-side combine absorbs the Zipf head before the
-    shuffle."""
-    return (
-        df.select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def _sql_str(s: str) -> str:
@@ -145,7 +135,7 @@ def train_bpe(df: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     # propagation; same cluster-durability caveat and remedy as
     # dedup_clusters discusses.
     symtab = wc.select(
-        "n", F.expr(_initial_symbols("word")).alias("syms")
+        "n", F.expr(_initial_symbols("token")).alias("syms")
     ).transform(materialize)
     merges: list[tuple[str, str, int]] = []
     while len(merges) < n_merges:

@@ -39,7 +39,7 @@ from ..functions.hashing import (
 )
 from ..functions.scalars import round_half_up
 from ..functions.text import tokens, word_shingles
-from ..functions.vectors import cosine, dot, norm
+from ..functions.vectors import cosine, cosine_from_norms_sql, dot_sql, norm
 from ..materialize import materialize
 from ..sources.readers import balance
 
@@ -772,7 +772,7 @@ def embedding_dup_pairs_blocked(df: DataFrame) -> DataFrame:
         norm("_v").alias("_nb"),
     )
     pair_cos = round_half_up(
-        dot("v_a", "v_b") / (F.col("_na") * F.col("_nb")), 4
+        F.expr(cosine_from_norms_sql(dot_sql("v_a", "v_b"), "_na", "_nb")), 4
     )
     return (
         cand.join(va, "id_a")

@@ -99,19 +99,15 @@ def _psi_from_side_counts(counts: DataFrame, keys: Sequence[str]) -> DataFrame:
     )
 
 
-def psi_vs_reference(
-    cur_counts: DataFrame,
-    ref_counts: DataFrame,
-    window_cols: Sequence[str] = ("window_start",),
-) -> DataFrame:
+def psi_vs_reference(cur_counts: DataFrame, ref_counts: DataFrame) -> DataFrame:
     """PSI of each (event_type x window) population against a FROZEN
     per-event_type reference histogram — the monitoring shape: the
     reference is the accepted corpus's bin counts (built once,
     persisted or broadcast), each arriving window is judged against it
     without the reference moving.
 
-    ``cur_counts``: ``event_type + window_cols + (bucket, n)`` — e.g. the
-    drained output of a streaming per-window histogram aggregation.
+    ``cur_counts``: ``(event_type, day_idx, bucket, n)`` — e.g. the
+    drained output of a streaming per-day histogram aggregation.
     ``ref_counts``: ``(event_type, bucket, n)``. Bin support per window
     is the union of the window's bins and the reference's bins for its
     key (reference bins missing from a window still vote — a vanished
@@ -123,8 +119,8 @@ def psi_vs_reference(
     (ref = keys x bins, cur = keys x windows x bins); the reference
     side is broadcast onto the window list.
     """
-    rk, wc = ["event_type"], list(window_cols)
-    keys = rk + wc
+    rk = ["event_type"]
+    keys = rk + ["day_idx"]
     windows = cur_counts.select(*keys).distinct()
     expanded = windows.join(
         F.broadcast(
@@ -159,8 +155,8 @@ def psi_vs_reference(
     return _psi_from_side_counts(both, keys)
 
 
-def mad_outliers(df: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
-    """Robust per-group outlier detection by the median/MAD rule — the
+def mad_outliers(df: DataFrame) -> DataFrame:
+    """Robust per-``event_type`` outlier detection by the median/MAD rule — the
     other half of batch monitoring next to :func:`psi_drift`: PSI says
     "the distribution moved", this says "these are the rows that don't
     belong" without the mean/stddev fragility (a single extreme value
@@ -196,27 +192,21 @@ def mad_outliers(df: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
     correctness baseline, same stance as the percentile arms of the
     stats suite: the 100 TB operating point swaps `approx_percentile`
     (mergeable, one pass each) and its rank-error contract is already
-    pinned in tests/test_stats.py. Returns one row per group:
-    (keys..., median, mad, n, n_outliers).
+    pinned in tests/test_stats.py. Returns one row per group (a NULL
+    ``event_type`` is a group too): (event_type, median, mad, n,
+    n_outliers).
     """
-    ks = list(keys)
+    ks = ["event_type"]
     vc = F.col("value")
 
     def _bjoin(left: DataFrame, right: DataFrame) -> DataFrame:
-        if not ks:
-            return left.crossJoin(F.broadcast(right))
-        cond = None
-        for kcol in ks:
-            c = left[kcol].eqNullSafe(right[f"_r_{kcol}"])
-            cond = c if cond is None else (cond & c)
-        return left.join(F.broadcast(right), cond).drop(
-            *[f"_r_{kcol}" for kcol in ks]
-        )
+        return left.join(
+            F.broadcast(right),
+            left["event_type"].eqNullSafe(right["_r_event_type"]),
+        ).drop("_r_event_type")
 
     def _renamed(stats: DataFrame) -> DataFrame:
-        for kcol in ks:
-            stats = stats.withColumnRenamed(kcol, f"_r_{kcol}")
-        return stats
+        return stats.withColumnRenamed("event_type", "_r_event_type")
 
     med = df.groupBy(*ks).agg(
         round_half_up(

@@ -49,21 +49,25 @@ def _centroids_table(table: str) -> str:
     return f"{table}__centroids"
 
 
+# quantizer training of build_ann_index: every CENTROID_STRIDE-th
+# vec_id seeds a centroid, then REFINE_ITERS Lloyd passes
+CENTROID_STRIDE = 100
+REFINE_ITERS = 0
+
+
 def build_ann_index(
     wh: ParquetWarehouse,
     corpus: DataFrame,
     table: str = "ann_index",
-    centroid_stride: int = 125,
-    refine_iters: int = 2,
 ) -> None:
-    """Train the quantizer (deterministic stride seed + ``refine_iters``
+    """Train the quantizer (deterministic stride seed + ``REFINE_ITERS``
     Lloyd passes) and materialize the inverted lists, partitioned by
     cid. One assignment pass over the corpus — the only time the full
     corpus is ever assigned."""
-    seed = corpus.filter(F.col("vec_id") % centroid_stride == 0).select(
+    seed = corpus.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    cent = kmeans_refine(corpus, seed, refine_iters)
+    cent = kmeans_refine(corpus, seed, REFINE_ITERS)
     # co-locate each inverted list before the hive-partitioned write:
     # without this, every one of the assignment's N shuffle partitions
     # writes its own sliver into every cid dir — N x K tiny files where

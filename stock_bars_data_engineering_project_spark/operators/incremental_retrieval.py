@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_bucket48
+from ..functions.text import corpus_tokens
 from ..session import local_frame
 from ..sinks.warehouse import ParquetWarehouse
 from .index_maint import (
@@ -48,13 +49,11 @@ from .index_maint import (
 from .retrieval import _term_counts, score_topk
 
 
-def _batch_postings(
-    batch: DataFrame, n_buckets: int, id_col: str, text_col: str
-) -> DataFrame:
+def _batch_postings(batch: DataFrame, n_buckets: int) -> DataFrame:
     # repartition by bkt before the hive-partitioned write: without it
     # every shuffle partition writes a sliver into every bucket dir
     return (
-        _term_counts(batch, id_col, text_col)
+        _term_counts(batch, "doc_id")
         .select(
             md5_bucket48(F.col("token"), n_buckets).alias("bkt"),
             "token",
@@ -66,17 +65,10 @@ def _batch_postings(
     )
 
 
-def _batch_doc_stats(
-    batch: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
+def _batch_doc_stats(batch: DataFrame) -> DataFrame:
     # zero-token docs have no postings but are still members, so the
     # membership cannot be derived from the postings
-    from ..functions.text import tokens
-
-    dl = F.size(
-        F.filter(tokens(f"lower(`{text_col}`)"), lambda t: t != F.lit(""))
-    )
-    return batch.select(F.col(id_col).alias("doc_id"), dl.alias("dl"))
+    return batch.select("doc_id", F.size(corpus_tokens()).alias("dl"))
 
 
 BM25 = LexicalFamily(_batch_postings, _batch_doc_stats)
@@ -106,7 +98,7 @@ def bm25_query(
 
     qrows = [
         (r[0], r[1])
-        for r in _term_counts(queries, "query_id", "text")
+        for r in _term_counts(queries, "query_id")
         .select("id", "token")
         .collect()
     ]

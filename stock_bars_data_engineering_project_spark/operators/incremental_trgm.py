@@ -41,12 +41,10 @@ from .index_maint import (
 from .trigram import substring_scan, trigram_postings
 
 
-def _batch_postings(
-    batch: DataFrame, n_buckets: int, id_col: str, text_col: str
-) -> DataFrame:
+def _batch_postings(batch: DataFrame, n_buckets: int) -> DataFrame:
     # repartition by bkt before the hive-partitioned write (small files)
     return (
-        trigram_postings(batch, id_col=id_col, text_col=text_col)
+        trigram_postings(batch)
         .select(
             md5_bucket48(F.col("trigram"), n_buckets).alias("bkt"),
             "trigram",
@@ -56,8 +54,8 @@ def _batch_postings(
     )
 
 
-def _batch_members(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return batch.select(F.col(id_col).alias("doc_id"))
+def _batch_members(batch: DataFrame) -> DataFrame:
+    return batch.select("doc_id")
 
 
 TRGM = LexicalFamily(_batch_postings, _batch_members)

@@ -168,12 +168,12 @@ def apply_deletes(wh: ParquetWarehouse, table: str, layout: Layout) -> None:
 class LexicalFamily(NamedTuple):
     """The batch transforms that make a lexical index BM25 or trigram.
 
-    ``postings(batch, n_buckets, id_col, text_col)`` returns
-    (bkt, term, doc_id, ...), term first after bkt; ``members(batch,
-    id_col, text_col)`` returns (doc_id, ...)."""
+    Both read the batch's ``doc_id`` and ``text``: ``postings(batch,
+    n_buckets)`` returns (bkt, term, doc_id, ...), term first after bkt;
+    ``members(batch)`` returns (doc_id, ...)."""
 
-    postings: Callable[[DataFrame, int, str, str], DataFrame]
-    members: Callable[[DataFrame, str, str], DataFrame]
+    postings: Callable[[DataFrame, int], DataFrame]
+    members: Callable[[DataFrame], DataFrame]
 
 
 def _require_ids(batch: DataFrame, table: str) -> DataFrame:
@@ -195,12 +195,12 @@ def build_lexical_index(
     docs = _require_ids(docs, table)
     run_chains(
         postings=lambda: wh.overwrite(
-            family.postings(docs, 64, "doc_id", "text"),
+            family.postings(docs, 64),
             postings_table(table),
             partition_by=("bkt",),
         ),
         members=lambda: wh.overwrite(
-            family.members(docs, "doc_id", "text"), docs_table(table)
+            family.members(docs), docs_table(table)
         ),
     )
     wh.overwrite(
@@ -223,12 +223,12 @@ def ingest_docs(
     new_docs = materialize(
         batch.join(known, batch["doc_id"] == known["doc_id"], "left_anti")
     )  # consumed twice below; the anti-join runs once
-    members = family.members(new_docs, "doc_id", "text")
+    members = family.members(new_docs)
     n_new = int(members.agg(F.count(F.lit(1)).alias("n")).collect()[0].n)
     if n_new == 0:
         return 0
     wh.append(
-        family.postings(new_docs, n_buckets, "doc_id", "text"),
+        family.postings(new_docs, n_buckets),
         postings_table(table),
     )
     wh.append(members, docs_table(table))

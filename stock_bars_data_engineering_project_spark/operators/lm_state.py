@@ -18,10 +18,10 @@ singletons must keep voting — a bigram appearing once per batch across
 many batches is a real transition — and storing raw keeps the prune
 threshold a read-time choice instead of a baked-in one.
 
-Tokenization matches quality.bigram_surprisal exactly (lower-cased
-whitespace tokens, empties dropped; zip_with adjacent pairing), so
-``lm_state`` output feeds straight into its ``unigram_counts`` /
-``bigram_counts`` parameters.
+Counts come from the corpus word model quality.bigram_surprisal uses
+(``quality.word_counts`` / ``quality.adjacent_pairs``), so ``lm_state``
+output feeds straight into its ``unigram_counts`` / ``bigram_counts``
+parameters.
 """
 
 from __future__ import annotations
@@ -30,14 +30,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import content_epoch
-from ..functions.text import tokens
 from . import quality
 
 
 def _batch_lm_counts(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     """One batch's (token, n) and (prev, cur, n2) — the same derivation
     quality.bigram_surprisal performs on a self-modeled corpus.
-    ``id_col`` is the column the batch-partitioning contract (see
+    ``doc_id`` is the column the batch-partitioning contract (see
     ingest_lm_batch) is keyed on; its presence is enforced here so a
     caller passing a batch without it fails loudly instead of silently
     ingesting rows the contract cannot cover."""
@@ -46,25 +45,9 @@ def _batch_lm_counts(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
             f"batch lacks id column 'doc_id' (columns: {batch.columns}); "
             "the epoch-log contract partitions the corpus by this column"
         )
-    ltoks = F.filter(
-        tokens("lower(text)"), lambda t: t != F.lit("")
-    )
-    uni = (
-        batch.select(F.explode(ltoks).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    bigrams = F.filter(
-        F.zip_with(
-            ltoks,
-            F.slice(ltoks, 2, F.size(ltoks)),
-            lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-        ),
-        lambda s: s["cur"].isNotNull(),
-    )
+    uni = quality.word_counts(batch)
     bi = (
-        batch.select(F.explode(bigrams).alias("bg"))
-        .select(F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur"))
+        quality.adjacent_pairs(batch)
         .groupBy("prev", "cur")
         .agg(F.count(F.lit(1)).alias("n2"))
     )

@@ -87,13 +87,18 @@ def scd2_init(
     ).withColumn("is_current", F.lit(True))
 
 
+# scd2_merge's source is a FULL snapshot: a current key it lacks is
+# closed (delete detection). An incremental-batch source, whose absent
+# keys imply nothing, sets this False.
+CLOSE_MISSING = True
+
+
 def scd2_merge(
     target: DataFrame,
     source: DataFrame,
     keys: tuple[str, ...],
     tracked: tuple[str, ...],
     stamp,
-    close_missing: bool = False,
 ) -> DataFrame:
     """SCD Type-2 merge of a source batch into a versioned dimension
     (the Kimball slowly-changing-dimension discipline, expressed as ONE
@@ -106,10 +111,10 @@ def scd2_merge(
       open version of the source row is appended (``valid_from =
       stamp``);
     - key only in source: a new open version is appended;
-    - key only in target: kept open by default (incremental batches
-      don't imply deletion); with ``close_missing=True`` the source is
-      a FULL snapshot and the absent key's open version is closed with
-      no successor (the SCD2 form of delete detection).
+    - key only in target: with ``CLOSE_MISSING`` (the source is a FULL
+      snapshot) the absent key's open version is closed with no
+      successor (the SCD2 form of delete detection); without it the
+      key stays open (incremental batches don't imply deletion).
 
     Closed history rows pass through without touching the join — the
     merge's shuffle is sized by the current slice + batch, not by the
@@ -169,7 +174,7 @@ def scd2_merge(
 
     close_tgt = tgt_present & (
         (src_present & changed)
-        | (F.lit(close_missing) & ~src_present)
+        | (F.lit(CLOSE_MISSING) & ~src_present)
     )
     tgt_rows = joined.filter(tgt_present).select(
         *[F.col(f"__scd_tgt.{c}").alias(c) for c in value_cols],

@@ -46,13 +46,10 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-def attach_binary_payload(
-    df: DataFrame,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Wrap rows into the media schema, using utf-8 bytes of ``text``
     as a stand-in payload (deterministic; real pipelines read the bytes
-    from object storage). ``passthrough`` appends extra source columns
+    from object storage), with the document's ``source`` carried
     unchanged — THE definition of the payload/byte_len/content_md5
     triple lives here; query-layer consumers project from this rather
     than restating the expressions."""
@@ -66,7 +63,7 @@ def attach_binary_payload(
         F.lit(None).cast("int").alias("meta_width"),
         F.lit(None).cast("int").alias("meta_height"),
         F.lit(None).cast("int").alias("meta_duration_ms"),
-        *[F.col(c) for c in passthrough],
+        "source",
     )
 
 

@@ -13,11 +13,10 @@ then one per-doc mean aggregate. Nothing quadratic, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
-from ..materialize import materialize
+from ..functions.text import corpus_tokens
 
 # The Gopher paper's stop-word presence list (Rae et al. 2021, §A1.1) —
 # distinct from functions/text.py's EN_STOPWORDS, which feeds the
@@ -25,34 +24,56 @@ from ..materialize import materialize
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def unigram_surprisal(docs: DataFrame, counts: DataFrame | None = None) -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
+    """(token, n) under the corpus word model (functions/text.py
+    ``corpus_tokens``): one explode and one partial-aggregable count,
+    whose map-side combine absorbs the Zipf head before the shuffle.
+    Vocabulary-sized (Heaps'-law sub-linear) at any corpus scale."""
+    return (
+        docs.select(F.explode(corpus_tokens()).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def adjacent_pairs(docs: DataFrame, *ids: str) -> DataFrame:
+    """(*ids, prev, cur) adjacent pairs of the corpus word model: zip
+    the token array with its own 1-shifted copy; zip_with NULL-pads the
+    shorter side, so the last element pairs (last_token, NULL) and the
+    filter drops it. Map-only, and no lambda body re-evaluates the
+    tokenization (the word_shingles discipline, functions/text.py)."""
+    toks = corpus_tokens()
+    bigrams = F.filter(
+        F.zip_with(
+            toks,
+            F.slice(toks, 2, F.size(toks)),
+            lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
+        ),
+        lambda s: s["cur"].isNotNull(),
+    )
+    return docs.select(*ids, F.explode(bigrams).alias("bg")).select(
+        *ids, F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur")
+    )
+
+
+def unigram_surprisal(docs: DataFrame, counts: DataFrame) -> DataFrame:
     """Per-document mean surprisal -ln p(token) under the corpus's own
-    unigram model (lower-cased whitespace tokens, empties dropped).
-    Boilerplate, gibberish, and wrong-language documents have unusual
-    token mixes and score HIGH — the standard perplexity-style quality
-    gate, with the corpus itself as the language model so no external
-    artifact is needed.
+    unigram model (the corpus word model's ``counts``, from
+    :func:`word_counts`). Boilerplate, gibberish, and wrong-language
+    documents have unusual token mixes and score HIGH — the standard
+    perplexity-style quality gate, with the corpus itself as the
+    language model so no external artifact is needed.
 
     Documents with no non-empty tokens have no defined score and emit
     no row (they drop out of the token join on any engine).
 
-    ``counts`` optionally supplies a precomputed (token, n) unigram
-    table (a caller that already built the vocabulary — e.g. the
-    term-statistics suite — avoids a second wordcount pass over the
-    corpus). It MUST come from the same tokenization: lower-cased
-    whitespace tokens, empties dropped.
-
     Returns (doc_id, score) with the RAW double score — display
     rounding belongs to the caller (functions.scalars.round_half_up).
     """
-    ltoks = docs.select(
-        "doc_id", F.explode(tokens("lower(text)")).alias("token")
-    ).filter(F.col("token") != "")
-    if counts is None:
-        counts = ltoks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").cast("double").alias("total"))
     return (
-        ltoks.join(counts, "token")
+        docs.select("doc_id", F.explode(corpus_tokens()).alias("token"))
+        .join(counts, "token")
         .crossJoin(F.broadcast(total))
         .groupBy("doc_id")
         .agg(
@@ -60,37 +81,6 @@ def unigram_surprisal(docs: DataFrame, counts: DataFrame | None = None) -> DataF
                 "score"
             )
         )
-    )
-
-
-def _lower_tokens(text_col: str) -> Column:
-    """THE corpus-model tokenization, defined once: lower-cased
-    whitespace tokens, empties dropped — shared by every bigram/unigram
-    consumer in this module so the cross-engine contract cannot
-    desynchronize between operators."""
-    return F.filter(
-        tokens(f"lower(`{text_col}`)"), lambda t: t != F.lit("")
-    )
-
-
-def _adjacent_pairs(docs: DataFrame, id_col: str | None = None) -> DataFrame:
-    """(prev, cur) adjacent token pairs (optionally id-keyed): zip the
-    token array with its own 1-shifted copy; zip_with NULL-pads the
-    shorter side, so the last element pairs (last_token, NULL) and the
-    filter drops it. Map-only — the word_shingles no-lambda-body
-    re-evaluation discipline (functions/text.py:101-107)."""
-    ltoks = _lower_tokens("text")
-    bigrams = F.filter(
-        F.zip_with(
-            ltoks,
-            F.slice(ltoks, 2, F.size(ltoks)),
-            lambda a, b: F.struct(a.alias("prev"), b.alias("cur")),
-        ),
-        lambda s: s["cur"].isNotNull(),
-    )
-    ids = [id_col] if id_col else []
-    return docs.select(*ids, F.explode(bigrams).alias("bg")).select(
-        *ids, F.col("bg.prev").alias("prev"), F.col("bg.cur").alias("cur")
     )
 
 
@@ -102,7 +92,7 @@ PMI_MIN_COUNT = 5
 
 def bigram_surprisal(
     docs: DataFrame,
-    unigram_counts: DataFrame | None = None,
+    unigram_counts: DataFrame,
     bigram_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document mean bigram surprisal under the corpus's own bigram
@@ -138,9 +128,9 @@ def bigram_surprisal(
     (doc_id, score, n_bigrams) with the RAW double score — display
     rounding belongs to the caller.
 
-    ``unigram_counts`` optionally supplies the (token, n) table from the
-    same tokenization (lower-cased whitespace tokens, empties dropped)
-    so a caller that already built the vocabulary skips one corpus pass.
+    ``unigram_counts`` is the (token, n) table of the corpus word model
+    (:func:`word_counts`), so a caller that already built the
+    vocabulary shares it instead of paying a second corpus pass.
 
     ``bigram_counts`` optionally supplies a (prev, cur, n2) table — a
     FROZEN reference model (e.g. persisted from a trusted corpus via the
@@ -163,15 +153,7 @@ def bigram_surprisal(
     row. In self-model mode every token is in the table, so the left
     joins match inner-join behavior exactly.
     """
-    ltoks = _lower_tokens("text")
-    pairs = _adjacent_pairs(docs, id_col="doc_id")
-
-    if unigram_counts is None:
-        unigram_counts = (
-            docs.select(F.explode(ltoks).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
+    pairs = adjacent_pairs(docs, "doc_id")
     if bigram_counts is None:
         c2 = (
             pairs.groupBy("prev", "cur")
@@ -407,10 +389,7 @@ def gopher_panel(
     return out.select("*", keep.alias("keep"))
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    unigram_counts: DataFrame | None = None,
-) -> DataFrame:
+def pmi_collocations(docs: DataFrame, unigram_counts: DataFrame) -> DataFrame:
     """Collocation mining by pointwise mutual information — the phrase
     detector behind word2vec-phrases / Gensim ``Phrases``: token pairs
     that co-occur far more than their unigram frequencies predict
@@ -431,9 +410,8 @@ def pmi_collocations(
     maximum score, and the pruning is also what bounds the join tables
     at corpus scale (the bigram_surprisal lever).
 
-    Scale shape: one partial-aggregable bigram wordcount + one unigram
-    wordcount (MATERIALIZED when derived here — it feeds three
-    consumers), two token-keyed joins of the PRUNED pair table to the
+    Scale shape: one partial-aggregable bigram wordcount, two
+    token-keyed joins of the PRUNED pair table to the
     unigram table (AQE broadcasts the pruned side), and two 1-row
     scalars — the pair total comes from a map-only size aggregate over
     the scan (size(tokens)-1 per doc, integer-identical to counting
@@ -442,27 +420,13 @@ def pmi_collocations(
     belong to the caller (ranking the full table is a
     vocabulary-sized sort, not a corpus-sized one).
 
-    Tokenization is the shared corpus-model definition (lower-cased
-    whitespace tokens, empties dropped; pairs via the zip_with shift,
-    functions/text.py:101-107 discipline). ``unigram_counts``
-    optionally supplies the (token, n) table from that tokenization so
-    a caller that already built the vocabulary (the tfidf suite's
-    materialized wordcount) skips one corpus pass — the
-    bigram_surprisal contract."""
-    ltoks = _lower_tokens("text")
-    pairs = _adjacent_pairs(docs)
+    Tokens and pairs are the corpus word model's (:func:`word_counts`,
+    :func:`adjacent_pairs`). ``unigram_counts`` is consumed three times
+    (total + two joins), so a caller passes it materialized (the tfidf
+    suite's shared wordcount)."""
     uni = unigram_counts
-    if uni is None:
-        # vocabulary-sized (Heaps'-law sub-linear) and consumed three
-        # times below (total + two joins) — without the materialization
-        # each consumer replays the corpus explode
-        uni = materialize(
-            docs.select(F.explode(ltoks).alias("token"))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
     c2 = (
-        pairs.groupBy("prev", "cur")
+        adjacent_pairs(docs).groupBy("prev", "cur")
         .agg(F.count(F.lit(1)).alias("n2"))
         .filter(F.col("n2") >= PMI_MIN_COUNT)
     )
@@ -471,7 +435,7 @@ def pmi_collocations(
     # counts are size(tokens)-1, a map-only aggregate over the scan —
     # integer-identical to counting the exploded pairs
     n2tot = docs.agg(
-        F.sum(F.greatest(F.size(ltoks) - 1, F.lit(0)))
+        F.sum(F.greatest(F.size(corpus_tokens()) - 1, F.lit(0)))
         .cast("double")
         .alias("_n2tot")
     )

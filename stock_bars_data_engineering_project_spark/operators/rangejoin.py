@@ -18,16 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    lo: str = "lo",
-    hi: str = "hi",
-    by: tuple[str, ...] = (),
-) -> DataFrame:
+def range_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Equi-join-shaped interval join: rows of ``left`` matched to every
-    ``right`` interval with ``lo <= ts <= hi`` (inclusive both ends),
-    optionally co-keyed on ``by`` columns, through one-hour buckets."""
+    ``right`` interval of the same ``user_id`` with ``window_lo <= ts <=
+    window_hi`` (inclusive both ends), through one-hour buckets."""
+    lo, hi, by = "window_lo", "window_hi", ("user_id",)
     # Column names shared between the two frames (beyond the join keys)
     # would make the unqualified BETWEEN references below ambiguous —
     # fail with the precondition spelled out instead of Spark's

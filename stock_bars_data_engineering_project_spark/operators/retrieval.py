@@ -26,9 +26,9 @@ Scale shape (corpus N docs, query set q docs, q << N):
    (operators/skew.py), fan-in bounded at k x n_salt rows per query
    however many documents match.
 
-Tokenization matches operators/quality.unigram_surprisal: lower-cased
-whitespace tokens, empties dropped — one shared definition of "term"
-across the corpus-model operators.
+A term is a token of the corpus word model (functions/text.py
+``corpus_tokens``), the one definition the corpus-model operators
+share.
 
 IDF uses the +1 ("BM25+" / Lucene) form ln(1 + (N - df + 0.5)/(df +
 0.5)), which stays positive for df > N/2 terms instead of flipping the
@@ -40,12 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
+from ..functions.text import corpus_tokens
 from .skew import salted_topk
 
 
 def _term_counts(
-    df: DataFrame, id_col: str, text_col: str, vocab: DataFrame | None = None
+    df: DataFrame, id_col: str, vocab: DataFrame | None = None
 ) -> DataFrame:
     """(id, token, tf, dl): term frequencies + doc length in one
     partial-aggregable pass; dl is map-side (size of the FULL token
@@ -58,12 +58,8 @@ def _term_counts(
     # ABOVE Generate, which evaluates per OUTPUT row — an inline array
     # expression there re-tokenizes the document once per token,
     # O(len^2) per doc (measured 7x this stage's cost at sf0.1).
-    # array_remove(.., "") == filter(t != "") for split output (split
-    # never yields NULL elements) and stays in whole-stage codegen
-    # instead of the interpreted higher-order-function path.
     arr = df.select(
-        F.col(id_col).alias("id"),
-        F.array_remove(tokens(f"lower(`{text_col}`)"), "").alias("__toks"),
+        F.col(id_col).alias("id"), corpus_tokens().alias("__toks")
     )
     exploded = arr.select(
         "id",
@@ -88,13 +84,13 @@ def bm25_topk(docs: DataFrame, queries: DataFrame) -> DataFrame:
     score 0 and are absent (the inverted-index contract); a query with
     no non-empty tokens matches nothing.
     """
-    qterms = _term_counts(queries, "query_id", "text").select(
+    qterms = _term_counts(queries, "query_id").select(
         F.col("id").alias("query_id"), "token"
     )
     qvocab = qterms.select("token").distinct()
 
     # corpus-side: non-query tokens are dropped BEFORE the tf shuffle
-    doc_terms = _term_counts(docs, "doc_id", "text", vocab=qvocab)
+    doc_terms = _term_counts(docs, "doc_id", vocab=qvocab)
 
     # document frequency for query terms only (query-vocab-sized)
     dfreq = doc_terms.groupBy("token").agg(
@@ -106,11 +102,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame) -> DataFrame:
     # Convention: n_docs counts every corpus row; avgdl averages over
     # docs whose text tokenizes (avg skips the NULL dl of NULL text) —
     # the oracle's COUNT(*) / AVG() pair behaves identically.
-    stats = docs.select(
-        F.size(
-            F.array_remove(tokens("lower(text)"), "")
-        ).alias("dl")
-    ).agg(
+    stats = docs.select(F.size(corpus_tokens()).alias("dl")).agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
@@ -265,19 +257,13 @@ def prf_expand(
     fb_texts = fb.join(
         corpus.select("doc_id", "text"), "doc_id"
     ).select("query_id", "text")
-    toks = F.filter(
-        tokens("lower(text)"), lambda t: t != F.lit("")
-    )
     fb_counts = (
-        fb_texts.select("query_id", F.explode(toks).alias("token"))
+        fb_texts.select("query_id", F.explode(corpus_tokens()).alias("token"))
         .groupBy("query_id", "token")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    qtoks = F.filter(
-        tokens("lower(text)"), lambda t: t != F.lit("")
-    )
     qterms = queries.select(
-        "query_id", F.explode(qtoks).alias("token")
+        "query_id", F.explode(corpus_tokens()).alias("token")
     ).distinct()
     new_terms = fb_counts.join(qterms, ["query_id", "token"], "left_anti")
     wnd = Window.partitionBy("query_id").orderBy(

@@ -24,10 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # state columns per (keys) group; every one combines associatively.
-# hll_state/kll_state are optional sketch extensions (present only when
-# rollup_increment was built with distinct_col) — binary DataSketches
-# state that merges by union, giving the rollup incremental distinct
-# counts and quantiles, which no exact aggregate can provide without
+# hll_state/kll_state are binary DataSketches state that merges by
+# union, giving the rollup incremental distinct counts (of event_id) and
+# quantiles (of value), which no exact aggregate can provide without
 # re-reading history.
 _STATE = (
     "n_rows",
@@ -43,18 +42,14 @@ _STATE = (
 )
 
 
-def rollup_increment(
-    batch: DataFrame,
-    distinct_col: str | None = None,
-) -> DataFrame:
+def rollup_increment(batch: DataFrame) -> DataFrame:
     """One partial-aggregation pass over a batch -> mergeable state rows.
 
     Groups by ``user_id`` and the event day of ``ts`` (the common rollup
-    grain). ``distinct_col`` additionally carries mergeable sketch
-    state: an HLL sketch of that
-    column (incremental distinct count) and a KLL sketch of ``value``
-    (incremental quantiles) — both fold through ``merge_rollups``
-    exactly like the scalar state.
+    grain). Besides the scalar state it carries mergeable sketch state:
+    an HLL sketch of ``event_id`` (incremental distinct count) and a KLL
+    sketch of ``value`` (incremental quantiles) — both fold through
+    ``merge_rollups`` exactly like the scalar state.
     """
     group = [F.col("user_id"), F.to_date(F.col("ts")).alias("day")]
     aggs = [
@@ -66,10 +61,9 @@ def rollup_increment(
         F.min(F.struct(F.col("ts"), F.col("value")))["value"].alias("_ov"),
         F.max(F.struct(F.col("ts"), F.col("value")))["ts"].alias("_cts"),
         F.max(F.struct(F.col("ts"), F.col("value")))["value"].alias("_cv"),
+        F.hll_sketch_agg("event_id").alias("hll_state"),
+        F.kll_sketch_agg_double("value").alias("kll_state"),
     ]
-    if distinct_col is not None:
-        aggs.append(F.hll_sketch_agg(distinct_col).alias("hll_state"))
-        aggs.append(F.kll_sketch_agg_double("value").alias("kll_state"))
     return batch.groupBy(*group).agg(*aggs).withColumnsRenamed(
         {"_ots": "open_ts", "_ov": "open_value", "_cts": "close_ts", "_cv": "close_value"}
     )
@@ -99,10 +93,9 @@ def combine_state(both: DataFrame) -> DataFrame:
         F.min(F.struct("open_ts", "open_value"))["open_value"].alias("_ov"),
         F.max(F.struct("close_ts", "close_value"))["close_ts"].alias("_cts"),
         F.max(F.struct("close_ts", "close_value"))["close_value"].alias("_cv"),
+        F.hll_union_agg("hll_state").alias("hll_state"),
+        F.kll_merge_agg_double("kll_state").alias("kll_state"),
     ]
-    if "hll_state" in both.columns:
-        aggs.append(F.hll_union_agg("hll_state").alias("hll_state"))
-        aggs.append(F.kll_merge_agg_double("kll_state").alias("kll_state"))
     return both.groupBy(*[F.col(k) for k in keys]).agg(*aggs).withColumnsRenamed(
         {"_ots": "open_ts", "_ov": "open_value", "_cts": "close_ts", "_cv": "close_value"}
     )
@@ -110,20 +103,11 @@ def combine_state(both: DataFrame) -> DataFrame:
 
 def rollup_metrics(state: DataFrame) -> DataFrame:
     """Project the user-facing rollup (avg + OHLC) from mergeable state
-    — derived at read time, so nothing non-mergeable is ever stored.
-    When sketch state is present, also projects the incremental
-    distinct-count estimate and the KLL n / extrema / median (n, min
-    and max are exact by the sketch's contract; the median carries the
-    documented ~1.65% rank-error bound)."""
-    extra = []
-    if "hll_state" in state.columns:
-        extra = [
-            F.hll_sketch_estimate("hll_state").alias("uniq_est"),
-            F.kll_sketch_get_n_double("kll_state").alias("kll_n"),
-            F.kll_sketch_get_quantile_double("kll_state", F.lit(0.0)).alias("kll_min"),
-            F.kll_sketch_get_quantile_double("kll_state", F.lit(1.0)).alias("kll_max"),
-            F.kll_sketch_get_quantile_double("kll_state", F.lit(0.5)).alias("kll_q50"),
-        ]
+    — derived at read time, so nothing non-mergeable is ever stored —
+    with the incremental distinct-count estimate and the KLL n /
+    extrema / median (n, min and max are exact by the sketch's
+    contract; the median carries the documented ~1.65% rank-error
+    bound)."""
     return state.select(
         *[c for c in state.columns if c not in _STATE],
         F.col("n_rows"),
@@ -132,5 +116,9 @@ def rollup_metrics(state: DataFrame) -> DataFrame:
         F.col("max_value").alias("high_v"),
         F.col("min_value").alias("low_v"),
         F.col("close_value").alias("close_v"),
-        *extra,
+        F.hll_sketch_estimate("hll_state").alias("uniq_est"),
+        F.kll_sketch_get_n_double("kll_state").alias("kll_n"),
+        F.kll_sketch_get_quantile_double("kll_state", F.lit(0.0)).alias("kll_min"),
+        F.kll_sketch_get_quantile_double("kll_state", F.lit(1.0)).alias("kll_max"),
+        F.kll_sketch_get_quantile_double("kll_state", F.lit(0.5)).alias("kll_q50"),
     )

@@ -70,19 +70,20 @@ def _check_rate(name: str, rate: float) -> None:
         raise ValueError(f"{name} must be in [0, 1], got {rate}")
 
 
-def stratified_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    default_rate: float = 0.0,
-) -> DataFrame:
+# the rate and the token budget of a stratum that stratified_sample's
+# rates / token_budget_sample's budgets do not list
+DEFAULT_RATE = 0.25
+DEFAULT_BUDGET = 1_000
+
+
+def stratified_sample(df: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Per-stratum deterministic sampling — the corpus-mixture dial of a
     training pipeline ("100% of books, 10% of common-crawl"): keep a row
     iff its ``doc_id`` hash bucket falls under its ``source`` stratum's
-    rate; strata not listed get ``default_rate``.
+    rate; strata not listed get ``DEFAULT_RATE``.
     Row membership is stable under corpus growth and identical across
     engines and runs — re-weighting a mixture never reshuffles which
     rows the kept strata contribute."""
-    _check_rate("default_rate", default_rate)
     for name, r in rates.items():
         _check_rate(f"rates[{name!r}]", r)
     bucket = hash_bucket(F.col("doc_id"), salt="stratum")
@@ -94,11 +95,8 @@ def stratified_sample(
             if threshold is None
             else threshold.when(F.col("source") == name, t)
         )
-    thr = (
-        F.lit(int(round(default_rate * 10_000)))
-        if threshold is None
-        else threshold.otherwise(int(round(default_rate * 10_000)))
-    )
+    dflt = int(round(DEFAULT_RATE * 10_000))
+    thr = F.lit(dflt) if threshold is None else threshold.otherwise(dflt)
     return df.filter(bucket < thr)
 
 
@@ -106,7 +104,6 @@ def token_budget_sample(
     df: DataFrame,
     budgets: dict[str, int],
     n_tokens: Column,
-    default_budget: int = 0,
 ) -> DataFrame:
     """Fill a per-stratum TOKEN budget instead of sampling by rate — the
     mixture dial training recipes actually specify ("20M tokens of books,
@@ -140,7 +137,7 @@ def token_budget_sample(
             else budget.when(F.col("source") == name, b)
         )
     budget = (
-        F.lit(default_budget) if budget is None else budget.otherwise(default_budget)
+        F.lit(DEFAULT_BUDGET) if budget is None else budget.otherwise(DEFAULT_BUDGET)
     )
     out = df.withColumn("_nt", n_tokens).withColumn("_cum", F.sum("_nt").over(w))
     return (
@@ -214,15 +211,16 @@ def alpha_mixture_sample(
     return out.filter(bucket < F.col("_thr")).drop("_s", "_thr")
 
 
-def shuffle_shards(
-    df: DataFrame,
-    n_shards: int = 1024,
-    seed: str = "",
-) -> DataFrame:
+# shuffle_shards' shard count and permutation seed
+N_SHARDS = 16
+SHUFFLE_SEED = "ep0"
+
+
+def shuffle_shards(df: DataFrame) -> DataFrame:
     """Deterministic global training-order shuffle WITHOUT a global sort
     barrier: every row gets a content-addressed ``order_key`` (md5 of
-    the seeded ``doc_id``) and a ``shard`` (the key's top 48 bits mod
-    ``n_shards``). Reading shards ``0..n-1``, each sorted by
+    the ``SHUFFLE_SEED``-seeded ``doc_id``) and a ``shard`` (the key's
+    top 48 bits mod ``N_SHARDS``). Reading shards ``0..n-1``, each sorted by
     ``order_key``, replays one fixed pseudorandom permutation of the
     corpus — the data-order shuffle LLM training needs, reproducible
     across runs, engines, and partitionings. Materialize it by
@@ -237,8 +235,9 @@ def shuffle_shards(
     ``ORDER BY rand(seed)`` would funnel 100 TB through a single range
     sort and tie the order to the engine's RNG; this never sorts more
     than a shard and no step depends on Spark internals. Reseeding
-    (epoch number in ``seed``) yields an independent permutation.
+    (epoch number in ``SHUFFLE_SEED``) yields an independent permutation.
     """
+    n_shards, seed = N_SHARDS, SHUFFLE_SEED
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     for c in ("order_key", "shard"):

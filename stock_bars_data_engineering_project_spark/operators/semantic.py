@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalars import round_half_up
-from ..functions.vectors import as_double, dot, dot_sql, norm
+from ..functions.vectors import as_double, cosine_from_norms_sql, dot_sql, norm
 from .dedup import _bucket_pairs
 from .similarity import ivf_assign
 
@@ -43,26 +43,25 @@ from .similarity import ivf_assign
 DECONTAM_COS = 0.4
 
 
-def semantic_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-) -> DataFrame:
+# cosine at or above which semantic_dup_pairs verifies a pair
+SEMDEDUP_COS = 0.4
+
+
+def semantic_dup_pairs(emb: DataFrame) -> DataFrame:
     """The SemDeDup candidate/verify stage on its own: verified
     within-cell duplicate pairs ``(doc_a, doc_b, cos)`` with
     ``doc_a < doc_b``, cosine rounded to 4 for display and verified at
-    6-digit rounding >= ``threshold`` (the shared oracle discipline).
+    6-digit rounding >= ``SEMDEDUP_COS`` (the shared oracle discipline).
     The centroids are every 125th vector.
     """
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     centroids = emb.filter(F.col("vec_id") % 125 == 0).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     assigned = ivf_assign(emb, centroids)
-    return _pairs_from_assigned(assigned, threshold)
+    return _pairs_from_assigned(assigned)
 
 
-def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
+def _pairs_from_assigned(assigned: DataFrame) -> DataFrame:
     # Norms hoisted to once-per-vector BEFORE the in-cell expansion —
     # the embedding_dup_pairs_blocked verify discipline (dedup.py): the
     # per-pair predicate then pays ONE dot fold instead of three
@@ -74,10 +73,9 @@ def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
     with_n = assigned.withColumn("_n", norm("embedding"))
     # one F.expr parse per consumer: _bucket_pairs always
     # evaluates pair_pred on the named struct columns a/b, so the SQL
-    # references are stable; same dot fold / same division association
-    # as the Column-lambda form it replaces
-    pair_cos_sql = (
-        f"({dot_sql('a.embedding', 'b.embedding')} / (a._n * b._n))"
+    # references are stable
+    pair_cos_sql = cosine_from_norms_sql(
+        dot_sql("a.embedding", "b.embedding"), "a._n", "b._n"
     )
     return _bucket_pairs(
         with_n,
@@ -85,7 +83,7 @@ def _pairs_from_assigned(assigned: DataFrame, threshold: float) -> DataFrame:
         id_col="vec_id",
         payload_cols=("embedding", "_n"),
         pair_pred=lambda a, b: round_half_up(F.expr(pair_cos_sql), 6)
-        >= threshold,
+        >= SEMDEDUP_COS,
         distinct=False,  # one cluster per vector -> one emission site
     ).select(
         F.col("a.id").alias("doc_a"),
@@ -179,11 +177,12 @@ def semantic_decontaminate(
     tr = train.select(
         F.col("vec_id"), as_double("embedding").alias("_tv")
     ).withColumn("_tn", norm("_tv"))
-    # hoisted-norm cosine: dot / (norm_a * norm_b) — the same fold and
-    # division association as functions.vectors.cosine and the oracle's
-    # _COS_DOUBLE, so values are bit-identical across engines
+    # hoisted-norm cosine: the same fold and division as
+    # functions.vectors.cosine and the oracle's _COS_DOUBLE, so values
+    # are bit-identical across engines
     scored = tr.crossJoin(ev).withColumn(
-        "_cos_raw", dot("_tv", "_ev") / (F.col("_tn") * F.col("_en"))
+        "_cos_raw",
+        F.expr(cosine_from_norms_sql(dot_sql("_tv", "_ev"), "_tn", "_en")),
     )
     return _best_eval_match(scored)
 
@@ -244,6 +243,7 @@ def semantic_decontaminate_blocked(
     scored = tr.join(
         F.broadcast(ev), tr["_tb"] == ev["_probe"]
     ).withColumn(
-        "_cos_raw", dot("_tv", "_ev") / (F.col("_tn") * F.col("_en"))
+        "_cos_raw",
+        F.expr(cosine_from_norms_sql(dot_sql("_tv", "_ev"), "_tn", "_en")),
     )
     return _best_eval_match(scored)

@@ -1,5 +1,5 @@
 """Gap-based sessionization: group each user's event stream into
-sessions separated by >= ``gap_minutes`` of inactivity — the standard
+sessions separated by >= ``GAP_MINUTES`` of inactivity — the standard
 clickstream primitive feeding funnels, cohorts, and per-session
 training-sequence construction (the reference's analytics layer has no
 session concept; this is part of the events-table extension surface
@@ -24,11 +24,14 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import event_micros
 
+# inactivity timeout that starts a new session (12 hours)
+GAP_MINUTES = 720
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+
+def sessionize(events: DataFrame) -> DataFrame:
     """Label every event with its per-user ``session_id`` (1-based, in
     time order): a new session starts at the user's first event and at
-    every event following >= ``gap_minutes`` of silence. Ordering is
+    every event following >= ``GAP_MINUTES`` of silence. Ordering is
     (event-time micros, ``event_id``) — tie-free by the unique event id,
     so the labeling is deterministic on any engine (the window-ordering
     discipline). Timestamp flavor (TIMESTAMP vs TIMESTAMP_NTZ) is
@@ -40,6 +43,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     share the exact (partition, order) spec, so Catalyst plans them on
     a single Exchange + sort.
     """
+    gap_minutes = GAP_MINUTES
     if gap_minutes < 1:
         raise ValueError(f"gap_minutes must be >= 1, got {gap_minutes}")
     if "session_id" in events.columns:
@@ -63,14 +67,14 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     ).drop("_new_session")
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-session aggregate over :func:`sessionize`: one row per
     (user, session) with event count, start/end epoch-micros, duration,
     and the time-ordered event-type chain — the sequence form consumed
     by behavioral-cloning / next-event training data builds. The
     aggregate is partial-aggregable except the ordered chain, which
     rides the same per-user sort the labeling already paid."""
-    labeled = sessionize(events, gap_minutes)
+    labeled = sessionize(events)
     us = event_micros(labeled, "ts")
     return (
         labeled.select(

@@ -71,14 +71,12 @@ def char_ngrams(text: Column) -> Column:
     return F.filter(acc, lambda x: x.isNotNull())
 
 
-def trigram_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def trigram_postings(docs: DataFrame) -> DataFrame:
     """(trigram, id) inverted index — one row per DISTINCT trigram per
     document (array_distinct runs map-side, before the explode)."""
     return docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(char_ngrams(F.col(text_col)))).alias(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(char_ngrams(F.col("text")))).alias(
             "trigram"
         ),
     )

@@ -102,16 +102,10 @@ def value_range(
     df: DataFrame,
     tbl: str,
     col: str,
-    lo: float | None = None,
-    hi: float | None = None,
+    lo: float,
+    hi: float,
 ) -> DataFrame:
-    if lo is None and hi is None:
-        raise ValueError("value_range: at least one of lo/hi is required")
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (F.col(col) >= lo)
-    if hi is not None:
-        pred = pred & (F.col(col) <= hi)
+    pred = (F.col(col) >= lo) & (F.col(col) <= hi)
     return df.agg(
         *_row(f"range:{col}", tbl, F.count(F.lit(1)), _failed_count(pred))
     )

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from ..materialize import materialize
 
 from ..functions.quality_model import quality_scores
-from ..functions.text import quality_score, token_count
+from ..functions.text import pii_scrub, quality_score, token_count
 from ..operators.contamination import boilerplate_scrub, contamination_overlap
 from ..operators.dedup import (
     canonical_selection,
@@ -60,14 +60,13 @@ from ..operators.quality import (
     bigram_surprisal,
     gopher_panel,
     unigram_surprisal,
+    word_counts,
 )
 from ..operators.sampling import alpha_mixture_sample, stable_split
 from ..session import local_frame
 from ..sinks.warehouse import ParquetWarehouse
 from ..sources.readers import load_table
 
-_EMAIL = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-_PHONE = r"\d{3}[-.]\d{3,4}[-.]\d{4}"
 
 
 def prepare_corpus(
@@ -204,10 +203,7 @@ def prepare_corpus(
         )
         counts["boilerplate_scrubbed"] = corpus.count()
 
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(F.col("text"), _EMAIL, "<EMAIL>"), _PHONE, "<PHONE>"
-    )
-    corpus = corpus.withColumn("text", scrubbed)
+    corpus = corpus.withColumn("text", pii_scrub("text"))
 
     if surprisal_keep_frac is not None:
         # corpus-unigram surprisal gate: keep the keep_frac least-
@@ -217,9 +213,11 @@ def prepare_corpus(
         # is a semi-join on doc_id. Token-less docs have no score row
         # and are dropped by the semi-join — documented contract.
         if surprisal_model == "bigram":
-            scores = bigram_surprisal(corpus).drop("n_bigrams")
+            scores = bigram_surprisal(corpus, word_counts(corpus)).drop(
+                "n_bigrams"
+            )
         elif surprisal_model == "unigram":
-            scores = unigram_surprisal(corpus)
+            scores = unigram_surprisal(corpus, word_counts(corpus))
         else:
             raise ValueError(
                 f"surprisal_model must be 'unigram' or 'bigram', got "
@@ -477,10 +475,7 @@ def refresh_corpus(
         .select("doc_id")
     )
     clean = delta.join(contaminated, "doc_id", "left_anti")
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(F.col("text"), _EMAIL, "<EMAIL>"), _PHONE, "<PHONE>"
-    )
-    clean = clean.withColumn("text", scrubbed)
+    clean = clean.withColumn("text", pii_scrub("text"))
     clean = clean.filter(quality_score("text") >= 0.3)
     clean = stable_split(clean).withColumn(
         "n_tokens", token_count("text")
@@ -590,7 +585,7 @@ def run_corpus_pipeline(
         from ..sinks.export import export_jsonl
 
         train = wh.read(table).filter("split = 'train'")
-        export_jsonl(train, export_jsonl_dir, n_shards=8)
+        export_jsonl(train, export_jsonl_dir)
         counts["exported_train"] = train.count()
     wh.log(
         f"{table}_runs",

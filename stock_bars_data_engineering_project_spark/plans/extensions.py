@@ -12,12 +12,16 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import event_micros, round_half_up, sql_round
 from ..functions.text import (
+    EMAIL_RE,
     EN_STOPWORDS,
     LANG_PROFILES,
+    PHONE_RE,
     bpe_ish_token_count,
+    corpus_tokens,
     lang_id,
     lang_id_profiles,
     mean_word_len,
+    pii_scrub,
     quality_score,
     rolling_fingerprint,
     stopword_ratio,
@@ -25,7 +29,6 @@ from ..functions.text import (
     top_gram_share,
     word_shingles,
     word_shingles_sql,
-    tokens,
 )
 from ..functions.quality_model import quality_scores
 from ..memo import build_once, run_chains
@@ -40,7 +43,7 @@ from ..operators.contamination import (
 from ..operators.rangejoin import range_join
 from ..operators.sampling import hash_bucket, stable_split, stratified_sample
 from ..operators.ema import ewma_per_key
-from ..operators.quality import bigram_surprisal, unigram_surprisal
+from ..operators.quality import bigram_surprisal, unigram_surprisal, word_counts
 from ..functions.hashing import simhash60
 from ..operators.dedup import (
     canonical_selection,
@@ -144,6 +147,16 @@ _QUALITY_SQL = sql_round(
     " + 0.3 * least(1.0, (" + _STOP_RATIO_SQL + ") * 10.0)",
     4,
 )
+
+
+def _scrub_duckdb(text: str) -> str:
+    """DuckDB twin of functions/text.py ``pii_scrub``: DuckDB string
+    literals take backslashes as-is, and 'g' replaces every match, as
+    Spark's regexp_replace does."""
+    return (
+        f"regexp_replace(regexp_replace({text}, '{EMAIL_RE}', '<EMAIL>', 'g'), "
+        f"'{PHONE_RE}', '<PHONE>', 'g')"
+    )
 
 
 @register(
@@ -378,6 +391,62 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.join(
         pr.select(F.col("node").alias("doc_id"), "pr"), "doc_id"
     )
+
+
+def _two_wave_drain(
+    spark: SparkSession, label: str, sub: DataFrame, cut: Column, stream_fn
+) -> DataFrame:
+    """Replay ``sub`` through ``stream_fn`` (streaming frame -> streaming
+    frame) as two event-time waves split at ``cut``, through two
+    SEPARATE availableNow drains on one checkpoint: the state the first
+    drain persists is RESTORED from the checkpoint by the second (a
+    restart, not just a micro-batch boundary). Returns the parquet
+    sink's rows.
+
+    ONE partitioned write stages both waves; driver-side renames reveal
+    each wave's files to the file stream just before its drain, so wave
+    2's files do not exist under ``_src`` until the first drain has
+    committed. partitionBy keeps ``_wave`` out of the data files (the
+    streamed schema is ``sub``'s), and the rename prefixes keep the two
+    waves' identical task file names apart. os.rename assumes a LOCAL
+    filesystem; an object-store deployment would write each wave to
+    ``_src`` directly, one wave per drain.
+
+    The drains pin spark.sql.shuffle.partitions to 8: the slices carry
+    ~10^2 keys, so 32 (session) or 200 (a vanilla session) state
+    partitions are pure task overhead per micro-batch. The knob is a
+    deployment dial (at real key cardinality it goes UP); the checkpoint
+    fixes it at the stream's first run, so both drains see the same
+    value. It is restored before returning, so the caller's lazy arms
+    never see the override."""
+    import os
+
+    root = scratch_warehouse(spark, label).root
+    src, outp, ckpt, staging = (
+        os.path.join(root, d) for d in ("_src", "_out", "_ckpt", "_staging")
+    )
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        sub.withColumn("_wave", (F.col("ts") >= cut).cast("int")).coalesce(
+            1
+        ).write.partitionBy("_wave").parquet(staging)
+        os.makedirs(src, exist_ok=True)
+        for wave in (0, 1):
+            wdir = os.path.join(staging, f"_wave={wave}")
+            for f in os.listdir(wdir) if os.path.isdir(wdir) else ():
+                if f.endswith(".parquet"):
+                    os.rename(
+                        os.path.join(wdir, f), os.path.join(src, f"w{wave}_{f}")
+                    )
+            stream_fn(
+                spark.readStream.schema(sub.schema).parquet(src)
+            ).writeStream.format("parquet").option("path", outp).option(
+                "checkpointLocation", ckpt
+            ).trigger(availableNow=True).start().awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    return spark.read.parquet(outp)
 
 
 @register(
@@ -672,7 +741,7 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream ≡ batch in tests/test_sessionize.py.
     from ..operators.sessionize import session_stats
 
-    sessions_arm = session_stats(ev, gap_minutes=720).select(
+    sessions_arm = session_stats(ev).select(
         F.lit("sessions").alias("variant"),
         "user_id",
         "n_events",
@@ -701,46 +770,16 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # streaming twin: two event-time waves, two drains, one checkpoint
-    import os
-
     from ..streaming.stateful import funnel_stream
 
     steps = ("view", "click", "purchase")
-    sub = ev.select("user_id", "event_id", "ts", "event_type")
-    cut_mid = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    root = scratch_warehouse(spark, "funnel_stream_rows").root
-    src = os.path.join(root, "_src")
-    outp = os.path.join(root, "_out")
-    ckpt = os.path.join(root, "_ckpt")
-
-    def drain() -> None:
-        q = (
-            funnel_stream(
-                spark.readStream.schema(sub.schema).parquet(src), steps
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # state-store partition pinning: the ewma_per_user deployment-dial
-    # argument (extensions.py q_ewma) — restored before the lazy arms run
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        sub.filter(F.col("ts") < cut_mid).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        drain()
-        sub.filter(F.col("ts") >= cut_mid).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        drain()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    emitted = _two_wave_drain(
+        spark,
+        "funnel_stream_rows",
+        ev.select("user_id", "event_id", "ts", "event_type"),
+        F.lit("2024-01-15 00:00:00").cast("timestamp"),
+        lambda stream: funnel_stream(stream, steps),
+    )
 
     # progress is monotone, so per-user max emission = final step; the
     # per-step reach counts come from ONE aggregate melted with stack —
@@ -749,8 +788,7 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps zero-reach steps at count 0 (the oracle's COUNT(*) over an
     # empty per-step CTE)
     final = (
-        spark.read.parquet(outp)
-        .groupBy("user_id")
+        emitted.groupBy("user_id")
         .agg(F.max("step").alias("fstep"))
     )
     reach = final.agg(
@@ -781,10 +819,6 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(sessions_arm)
         .unionByName(ttc_arm)
     )
-
-
-# token_budget_mixture was consolidated into sampling_splits_suite
-# (its 'budget' arm).
 
 
 def _bpe_rules_sql(n_merges: int, min_cnt: int) -> str:
@@ -1161,19 +1195,11 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-aggregates the corpus; with it they all read a vocab-sized
     # cached table. Vocabulary is Heaps'-law sub-linear, so the
     # materialization is small at any corpus scale.
-    counts_plan = (
-        docs.select(F.explode(tokens("lower(text)")).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tok_stream = docs.select(
-        F.explode(tokens("lower(text)")).alias("token")
-    ).filter(F.col("token") != "")
+    tok_stream = docs.select(F.explode(corpus_tokens()).alias("token"))
     _MG_K = 64
     docs_path = _os.path.join(sf_dir, "documents.parquet")
 
-    def _mg_flags_for(counts):
+    def _mg_flags_for(counts, exact_hh):
         # the MG sketch run + its law evaluation is a build-once
         # verification artifact like the classifier's train_laws: every
         # fresh process still runs the full sketch pass it gates, repeat
@@ -1181,12 +1207,6 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         # docstring): superset (every exact heavy hitter survives the
         # merge), bounds (lo <= true <= lo + total decrement budget),
         # bounded per-partition summary size.
-        total_row = counts.agg(F.sum("n").alias("t"))
-        exact_hh = (
-            counts.crossJoin(F.broadcast(total_row))
-            .filter(F.col("n") * 25 > F.col("t"))
-            .select("token", "n")
-        )
         summaries = materialize(mg_summaries(tok_stream, "token", k=_MG_K))
         cand, budget = merged_heavy_hitters(summaries)
         missing = exact_hh.join(
@@ -1215,9 +1235,16 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _counts_chain():
-        counts = materialize(counts_plan)
-        return counts, build_once(
-            ("mg_laws",), (docs_path,), lambda: _mg_flags_for(counts)
+        counts = materialize(word_counts(docs))
+        # the EXACT frequent-token set: > 1/25 of the token stream (arm i)
+        total_row = counts.agg(F.sum("n").alias("t"))
+        exact_hh = (
+            counts.crossJoin(F.broadcast(total_row))
+            .filter(F.col("n") * 25 > F.col("t"))
+            .select("token", "n")
+        )
+        return counts, exact_hh, build_once(
+            ("mg_laws",), (docs_path,), lambda: _mg_flags_for(counts, exact_hh)
         )
 
     def _bpe_rules():
@@ -1229,7 +1256,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # four independent eager chains (memo.run_chains); steady builds
     # hit the memos and pay only the wordcount job
-    (counts, mg_flags), lm_wh, rules, classifier_laws = run_chains(
+    (counts, exact_hh, mg_flags), lm_wh, rules, classifier_laws = run_chains(
         counts=_counts_chain,
         lm=lambda: _lm_state_warehouse(spark, sf_dir, docs),
         bpe=_bpe_rules,
@@ -1342,12 +1369,10 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the piece count, and the count-weighted corpus token contribution
     # (n * len(pieces) — summing this column IS the corpus BPE token
     # count) are all value-gated against the oracle's fold chain.
-    # word_counts(docs) is the IDENTICAL aggregation the materialized
-    # wordcount above already holds (same lower+split tokenization,
-    # same empty filter, same groupBy-count — word_counts docstring),
-    # so the encode arm reads the checkpoint instead of re-running a
-    # corpus tokenize+agg pass inside every execution (guide §6;
-    # `counts` becomes the eighth consumer).
+    # The encode arm reads the materialized word_counts checkpoint
+    # train_bpe counts from instead of re-running a corpus
+    # tokenize+agg pass inside every execution (guide §6; `counts`
+    # becomes the eighth consumer).
     encoded = bpe_segment(
         counts.select(F.col("token").alias("word"), "n"), rules
     )
@@ -1390,12 +1415,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exceeds the decrement budget Σd_i ≤ n/(k+1)), bounds (lo ≤ true ≤
     # lo + Σd for every candidate), and per-partition size ≤ k. All law
     # inputs are bounded frames (candidates ≤ k x partitions).
-    total_row = counts.agg(F.sum("n").alias("t"))
-    exact_hh = (
-        counts.crossJoin(F.broadcast(total_row))
-        .filter(F.col("n") * 25 > F.col("t"))
-        .select("token", "n")
-    )
+    # (exact_hh resolved with the counts chain above)
     heavy_arm = exact_hh.select(
         F.lit("heavy").alias("tag"),
         F.lit(None).cast("bigint").alias("doc_id"),
@@ -1480,9 +1500,7 @@ def _classifier_train_laws(spark, sf_dir: str, docs) -> list[tuple[str, float]]:
     )
 
     def _build():
-        label = F.array_contains(
-            F.split(F.lower(F.col("text")), " "), "slow"
-        ).cast("double")
+        label = F.array_contains(corpus_tokens(), "slow").cast("double")
         d = docs.select("doc_id", "text", label.alias("label"))
         stats: dict = {}
         weights = train_quality_classifier(
@@ -1509,11 +1527,6 @@ def _classifier_train_laws(spark, sf_dir: str, docs) -> list[tuple[str, float]]:
     return build_once(
         ("train_laws",), (os.path.join(sf_dir, "documents.parquet"),), _build
     )
-
-
-# calendar_features was consolidated into p1_rename_project (its date-
-# part columns); json_roundtrip_extract into x6_checkpoint_date_slice
-# (its uid/etype round-trip columns) — both in plans/parity.py.
 
 
 @register(
@@ -1584,82 +1597,18 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("batch").alias("variant"), "user_id", "event_id", "ts", "value", "ema"
     )
 
-    import os
-
     from ..streaming.stateful import ewma_stream
 
-    cut_lo = F.lit("2024-01-25 00:00:00").cast("timestamp")
-    cut_mid = F.lit("2024-01-28 00:00:00").cast("timestamp")
-    sub = events.filter(F.col("ts") >= cut_lo).select(
-        "user_id", "event_id", "ts", "value"
-    )
-    root = scratch_warehouse(spark, "ewma_stream_rows").root
-    src = os.path.join(root, "_src")
-    outp = os.path.join(root, "_out")
-    ckpt = os.path.join(root, "_ckpt")
-
-    def drain() -> None:
-        q = (
-            ewma_stream(
-                spark.readStream.schema(sub.schema).parquet(src)
-            )
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # pin the drains' state-store partition count to the workload: the
-    # slice has ~10^2 users, so 32 (session) or 200 (a vanilla session)
-    # state partitions are pure task overhead per micro-batch. The knob
-    # is a deployment dial — at real key cardinality it goes UP; the
-    # checkpoint fixes it at the stream's first run, so both drains see
-    # the same value. Restored before returning: the lazy batch arm
-    # executes after this function exits and never sees the override.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # ONE partitioned write materializes both event-time waves
-        # (the two per-wave filter+coalesce writes each
-        # re-scanned events and paid a separate job); the wave files
-        # are then REVEALED to the file stream by driver-side renames
-        # between the drains, which preserves exactly the contract
-        # under test — wave 2's files do not exist under `src` until
-        # the first drain has committed its checkpoint. partitionBy
-        # keeps `_wave` out of the data files, so the streamed schema
-        # is unchanged; the rename prefixes keep the two waves' file
-        # names (identical per-partition task names from the single
-        # write job) from colliding.
-        staging = os.path.join(root, "_staging")
-        sub.withColumn(
-            "_wave", (F.col("ts") >= cut_mid).cast("int")
-        ).coalesce(1).write.partitionBy("_wave").parquet(staging)
-        os.makedirs(src, exist_ok=True)
-
-        def _reveal(wave: int) -> None:
-            # os.rename assumes a LOCAL filesystem (same assumption as
-            # the coalesce(1) above) — this row is a local-streaming
-            # contract test; an object-store deployment would reveal
-            # waves by writing to src directly, one wave per drain.
-            wdir = os.path.join(staging, f"_wave={wave}")
-            if os.path.isdir(wdir):
-                for f in os.listdir(wdir):
-                    if f.endswith(".parquet"):
-                        os.rename(
-                            os.path.join(wdir, f),
-                            os.path.join(src, f"w{wave}_{f}"),
-                        )
-
-        _reveal(0)
-        drain()
-        _reveal(1)
-        drain()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-    stream_arm = spark.read.parquet(outp).select(
+    sub = events.filter(
+        F.col("ts") >= F.lit("2024-01-25 00:00:00").cast("timestamp")
+    ).select("user_id", "event_id", "ts", "value")
+    stream_arm = _two_wave_drain(
+        spark,
+        "ewma_stream_rows",
+        sub,
+        F.lit("2024-01-28 00:00:00").cast("timestamp"),
+        ewma_stream,
+    ).select(
         F.lit("stream").alias("variant"),
         "user_id",
         "event_id",
@@ -1668,10 +1617,6 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_half_up(F.col("ema"), 6).alias("ema"),
     )
     return batch_arm.unionByName(stream_arm)
-
-
-# text_repetition_ratio was consolidated into text_metrics (its n_grams
-# and dup_ratio columns, NULL for sub-2-token docs).
 
 
 @register(
@@ -1888,11 +1833,6 @@ CAST(list_sum([CASE WHEN list_sum(list_transform(toks,
 """
 
 
-# dedup_simhash_fingerprints was consolidated into text_metrics (the
-# per-document 60-bit fingerprint rides as its `simhash` column);
-# the pairing/blocking stage keeps its own query below.
-
-
 @register(
     "dedup_simhash_pairs",
     oracle=f"""
@@ -2073,7 +2013,7 @@ def q_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_arm = embedding_dup_pairs_blocked(emb).select(
         F.lit("lsh").alias("variant"), "id_a", "id_b", "cos"
     )
-    sem_arm = semantic_dup_pairs(emb, threshold=0.4).select(
+    sem_arm = semantic_dup_pairs(emb).select(
         F.lit("semdedup").alias("variant"),
         F.col("doc_a").alias("id_a"),
         F.col("doc_b").alias("id_b"),
@@ -2234,10 +2174,9 @@ FROM (
     ),
     cdocs AS (
         SELECT n.doc_id,
-               regexp_replace(regexp_replace(n.text,
-                   '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}',
-                   '<EMAIL>', 'g'),
-                   '\\d{3}[-.]\\d{3,4}[-.]\\d{4}', '<PHONE>', 'g') AS text,
+               """
+    + _scrub_duckdb("n.text")
+    + """ AS text,
                n.source
         FROM ndocs n
         ANTI JOIN contam c ON n.doc_id = c.doc_id
@@ -2512,15 +2451,13 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     strat_arm = stratified_sample(
         docs,
         rates={"src0": 1.0, "src1": 0.5, "src2": 0.1},
-        default_rate=0.25,
     ).select(F.lit("stratified").alias("tag"), "doc_id", F.col("source").alias("label"))
     budget_arm = token_budget_sample(
         docs,
         budgets={"src0": 20_000, "src1": 5_000},
         n_tokens=token_count("text"),
-        default_budget=1_000,
     ).select(F.lit("budget").alias("tag"), "doc_id", F.col("source").alias("label"))
-    shard_arm = shuffle_shards(docs, n_shards=16, seed="ep0").select(
+    shard_arm = shuffle_shards(docs).select(
         F.lit("shard").alias("tag"),
         "doc_id",
         F.concat(
@@ -2669,10 +2606,6 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# snapshot_diff_docs (EXCEPT) was consolidated into set_ops_suite
-# (plans/tpch.py) as its 'except_new_docs' arm.
-
-
 # ---------------------------------------------------------------------------
 # As-of join
 # ---------------------------------------------------------------------------
@@ -2709,7 +2642,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lefts = events.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
-    return asof_join(lefts, marks, right_on="mark_ts")
+    return asof_join(lefts, marks)
 
 
 @register(
@@ -2749,10 +2682,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"
     )
-    matched = range_join(
-        purchases, windows, lo="window_lo", hi="window_hi",
-        by=("user_id",),
-    )
+    matched = range_join(purchases, windows)
     return matched.groupBy("user_id", "window_lo").agg(
         F.count(F.lit(1)).alias("n_events"),
         round_half_up(F.sum("value"), 2).alias("sum_value"),
@@ -2841,8 +2771,6 @@ def _ann_incremental_index(spark, sf_dir: str, emb):
             wh,
             emb.filter(F.col("vec_id") % 2 == 0),
             table="ann_idx",
-            centroid_stride=100,
-            refine_iters=0,
         )
         ingest_vectors(wh, emb.filter(F.col("vec_id") % 2 == 1), table="ann_idx")
         # delete wave: tombstone the ids-ending-in-3 slice (never
@@ -3307,10 +3235,8 @@ FROM range(1, {len(ANN_TRAINED_LAWS) + 1}) t(n)
 """,
 )
 def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole ANN family as one variant-tagged row (consolidated from
-    ann_topk_bruteforce + ann_topk_ivf_suite + ann_topk_lsh to free
-    registry slots for the warehouse-CDC and streaming-ingest rows;
-    every arm's semantics stay individually driver-gated under its tag):
+    """The whole ANN family as one variant-tagged row; every arm's
+    semantics stay individually driver-gated under its tag:
 
     - `brute`: exact top-10 cosine for 5 query vectors — corpus streams
       once against a broadcast query set, deterministic (cos, id)
@@ -3439,9 +3365,7 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _trunc(df):
         return df.select(
             "vec_id",
-            truncate_dims("embedding", 16, renormalize=False).alias(
-                "embedding"
-            ),
+            truncate_dims("embedding", 16).alias("embedding"),
         )
 
     mrl_arm = cosine_topk(_trunc(emb), _trunc(queries), k=10).withColumn(
@@ -3523,30 +3447,6 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUP_RATIO_SQL = sql_round(
     "1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams)", 4
 )
-
-# PII scrub (email/phone -> typed tags), shared by the Spark and DuckDB
-# sides of text_metrics; the pattern list is the seam — production plugs
-# a fuller ruleset into the same shape
-_EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-_PHONE_RE = r"\d{3}[-.]\d{3,4}[-.]\d{4}"
-_SCRUB_SQL = (
-    "regexp_replace(regexp_replace(text, "
-    f"'{_EMAIL_RE}', '<EMAIL>', 'g'), "
-    f"'{_PHONE_RE}', '<PHONE>', 'g')"
-)
-
-
-def _scrubbed(t: str) -> Column:
-    """E-mail and phone scrub of the SQL expression ``t``, one parse.
-    Backslashes in the regexes double for the SQL string literal; the
-    parsed pattern is byte-identical."""
-    email = "'" + _EMAIL_RE.replace("\\", "\\\\") + "'"
-    phone = "'" + _PHONE_RE.replace("\\", "\\\\") + "'"
-    return F.expr(
-        f"regexp_replace(regexp_replace({t}, {email}, '<EMAIL>'), "
-        f"{phone}, '<PHONE>')"
-    )
-
 
 # Multilingual profile-argmax replay for text_metrics' pred_lang_multi
 # column, generated FROM functions.text.LANG_PROFILES so both engines
@@ -3669,8 +3569,8 @@ SELECT doc_id,
                list_transform(string_split(text, ''), ch -> CAST(ascii(ch) AS BIGINT))),
            (a, b) -> (a * 31 + b) % 2147483647) AS fingerprint,
        {_SIMHASH_SQL} AS simhash,
-       {_SCRUB_SQL} AS scrubbed,
-       CAST(length(text) - length({_SCRUB_SQL}) AS BIGINT) AS delta_chars,
+       {_scrub_duckdb('text')} AS scrubbed,
+       CAST(length(text) - length({_scrub_duckdb('text')}) AS BIGINT) AS delta_chars,
        {_GOPHER_KEEP_SQL} AS gopher_keep,
        {_GOPHER_NFAIL_SQL} AS gopher_n_fail
 FROM (
@@ -3759,21 +3659,13 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         rolling_fingerprint("text").alias("fingerprint"),
         simhash60("split(text, ' ')").alias("simhash"),
-        _scrubbed("text").alias("scrubbed"),
-        (F.length(t) - F.length(_scrubbed("text"))).cast("long").alias(
+        pii_scrub("text").alias("scrubbed"),
+        (F.length(t) - F.length(pii_scrub("text"))).cast("long").alias(
             "delta_chars"
         ),
         F.col("keep").alias("gopher_keep"),
         n_fail_expr.cast("int").alias("gopher_n_fail"),
     )
-
-
-# vocab_topk was consolidated into tfidf_vocab_suite (its 'vocab' arm).
-
-
-# text_scrub was consolidated into text_metrics (its `scrubbed` /
-# `delta_chars` columns — same codegen'd regex pass over the same
-# balanced scan), freeing a registry slot for the scale rows.
 
 
 # Chunking parameters for the suite's `chunk` arm: stride 12 gives the
@@ -3853,10 +3745,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("chunk_text").alias("part"),
     )
     return pack.unionByName(chunk)
-
-
-# text_fingerprint was consolidated into text_metrics (its `fingerprint`
-# column — same poly-31 rolling hash).
 
 
 # ---------------------------------------------------------------------------
@@ -3989,7 +3877,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one definition of the payload triple (operators/multimodal.py);
     # column pruning drops the unused payload bytes from the scan
-    media = attach_binary_payload(d, passthrough=("source",))
+    media = attach_binary_payload(d)
     # frame sampling (the video modality's plumbing, driver-
     # gated): the Arrow-batched 1->4 fan-out, re-aggregated per doc —
     # frame 0's md5 and the tail frame's length gate the slicing

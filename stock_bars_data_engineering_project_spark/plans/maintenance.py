@@ -133,11 +133,9 @@ def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    state = rollup_increment(batches[0], distinct_col="event_id")
+    state = rollup_increment(batches[0])
     for b in batches[1:]:
-        state = merge_rollups(
-            state, rollup_increment(b, distinct_col="event_id")
-        )
+        state = merge_rollups(state, rollup_increment(b))
     batch_arm = _project(rollup_metrics(state), "batch")
 
     # stream arm: the SAME events delivered as two parquet file waves
@@ -151,11 +149,11 @@ def q_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(wh.root, "_ckpt")
     ev.filter(F.col("event_id") % 3 != 2).write.mode("append").parquet(src)
     rollup_maintenance_stream(
-        spark, src, ev.schema, wh, "roll", checkpoint_dir=ckpt, distinct_col="event_id",
+        spark, src, ev.schema, wh, "roll", checkpoint_dir=ckpt
     )
     ev.filter(F.col("event_id") % 3 == 2).write.mode("append").parquet(src)
     rollup_maintenance_stream(
-        spark, src, ev.schema, wh, "roll", checkpoint_dir=ckpt, distinct_col="event_id",
+        spark, src, ev.schema, wh, "roll", checkpoint_dir=ckpt
     )
     stream_arm = _project(
         rollup_metrics(read_rollup_state(wh, "roll")), "stream"
@@ -641,7 +639,6 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("k",),
         ("status", "price"),
         2,
-        close_missing=True,
     )
     scd2 = dim.select(
         F.lit("scd2").alias("variant"),

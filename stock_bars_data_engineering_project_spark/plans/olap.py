@@ -11,7 +11,7 @@ one sort, and the outer join shuffles both pre-aggregated (tiny) sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import event_micros, round_half_up, sql_round
@@ -45,6 +45,24 @@ def cube_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         round_half_up(F.sum("o_totalprice"), 2).alias("sum_price"),
     )
+
+
+def _metric_rows(
+    frame: DataFrame, tag: str, group_key: Column, metrics: tuple
+) -> DataFrame:
+    """Unpivot ``metrics`` of ``frame`` into the suite's long format:
+    one (tag, group_key, metric, value double) row per metric."""
+    return (
+        frame.select(
+            group_key.alias("group_key"),
+            *(F.col(m).cast("double").alias(m) for m in metrics),
+        )
+        .melt(["group_key"], list(metrics), "metric", "value")
+        .select(F.lit(tag).alias("tag"), "group_key", "metric", "value")
+    )
+
+
+_PSI_METRICS = ("psi", "n_ref", "n_cur", "n_bins")
 
 
 @register(
@@ -403,16 +421,8 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             round_half_up(F.max("o_totalprice"), 2).alias("max_price"),
         )
     )
-    seg_arm = seg.melt(
-        ids=["c_mktsegment"],
-        values=["p25", "p50", "p90", "max_price"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    ).select(
-        F.lit("percentiles").alias("tag"),
-        F.col("c_mktsegment").alias("group_key"),
-        "metric",
-        "value",
+    seg_arm = _metric_rows(
+        seg, "percentiles", F.col("c_mktsegment"), ("p25", "p50", "p90", "max_price")
     )
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
@@ -425,21 +435,13 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily.join(F.broadcast(market), "day")
         .groupBy("user_id")
         .agg(
-            F.count(F.lit(1)).cast("double").alias("n_days"),
+            F.count(F.lit(1)).alias("n_days"),
             round_half_up(F.corr("user_avg", "mkt_avg"), 3).alias("market_corr"),
         )
         .filter(F.col("n_days") >= 5)
     )
-    mkt_arm = mkt.melt(
-        ids=["user_id"],
-        values=["n_days", "market_corr"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    ).select(
-        F.lit("corr").alias("tag"),
-        F.col("user_id").cast("string").alias("group_key"),
-        "metric",
-        "value",
+    mkt_arm = _metric_rows(
+        mkt, "corr", F.col("user_id").cast("string"), ("n_days", "market_corr")
     )
     total = ev.agg(F.count(F.lit(1)).alias("total"))
     hist = (
@@ -448,20 +450,12 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(total))
         .select(
             "bucket",
-            F.col("n").cast("double").alias("n"),
+            "n",
             round_half_up(100.0 * F.col("n") / F.col("total"), 4).alias("pct"),
         )
     )
-    hist_arm = hist.melt(
-        ids=["bucket"],
-        values=["n", "pct"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    ).select(
-        F.lit("histogram").alias("tag"),
-        F.col("bucket").cast("string").alias("group_key"),
-        "metric",
-        "value",
+    hist_arm = _metric_rows(
+        hist, "histogram", F.col("bucket").cast("string"), ("n", "pct")
     )
     # Sketch arm: the 100 TB operating point replaces exact DISTINCT and
     # exact percentile with mergeable sketches (HLL++, t-digest) — a
@@ -475,7 +469,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned element's exact rank — see below) and hash-mismatch
     # against the oracle's literal 1.0 when it doesn't.
     sketch = ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").cast("double").alias("exact_distinct_users"),
+        F.count_distinct("user_id").alias("exact_distinct_users"),
         F.approx_count_distinct("user_id", rsd=0.01)
         .cast("double")
         .alias("_hll"),
@@ -552,16 +546,11 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0.0)
         .alias("p50_rank_within_tol"),
     )
-    sketch_arm = sketch.melt(
-        ids=["event_type"],
-        values=["exact_distinct_users", "hll_within_5pct", "p50_rank_within_tol"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    ).select(
-        F.lit("sketch").alias("tag"),
-        F.col("event_type").alias("group_key"),
-        "metric",
-        "value",
+    sketch_arm = _metric_rows(
+        sketch,
+        "sketch",
+        F.col("event_type"),
+        ("exact_distinct_users", "hll_within_5pct", "p50_rank_within_tol"),
     )
     # Theta-state retention (operators/sketches.py): day-over-day
     # retained/churned members computed ONLY from per-day sketch state.
@@ -576,21 +565,8 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ret = retention_day_over_day(
         member_day_sets(ev.filter(F.col("user_id").isNotNull()))
     )
-    ret_arm = ret.select(
-        "day",
-        F.col("active").cast("double").alias("active"),
-        F.col("retained").cast("double").alias("retained"),
-        F.col("churned").cast("double").alias("churned"),
-    ).melt(
-        ids=["day"],
-        values=["active", "retained", "churned"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    ).select(
-        F.lit("retention").alias("tag"),
-        F.col("day").cast("string").alias("group_key"),
-        "metric",
-        "value",
+    ret_arm = _metric_rows(
+        ret, "retention", F.col("day").cast("string"), ("active", "retained", "churned")
     )
     # (f) cohort retention triangle (operators/funnel.py
     # cohort_retention): users cohort by first active day; each
@@ -620,27 +596,11 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.drift import psi_drift
 
     day_idx = F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
-    psi_arm = (
-        psi_drift(ev, is_reference=day_idx % 2 == 0)
-        .select(
-            "event_type",
-            "psi",
-            F.col("n_ref").cast("double").alias("n_ref"),
-            F.col("n_cur").cast("double").alias("n_cur"),
-            F.col("n_bins").cast("double").alias("n_bins"),
-        )
-        .melt(
-            ids=["event_type"],
-            values=["psi", "n_ref", "n_cur", "n_bins"],
-            variableColumnName="metric",
-            valueColumnName="value",
-        )
-        .select(
-            F.lit("psi").alias("tag"),
-            F.col("event_type").alias("group_key"),
-            "metric",
-            "value",
-        )
+    psi_arm = _metric_rows(
+        psi_drift(ev, is_reference=day_idx % 2 == 0),
+        "psi",
+        F.col("event_type"),
+        _PSI_METRICS,
     )
     # (h) STREAMING drift: the monitoring loop a production
     # pipeline actually runs — a REAL readStream drain aggregates each
@@ -684,7 +644,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..memo import run_chains
     from ..operators.drift import mad_outliers
 
-    out_stats = mad_outliers(ev, keys=("event_type",))
+    out_stats = mad_outliers(ev)
     fence = out_stats.select(
         F.col("event_type").alias("_fet"), "median", "mad"
     )
@@ -723,32 +683,14 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur_o, "stats_outlier_stream", "complete"
         ),
     )
-    psi_stream_arm = (
-        psi_vs_reference(
-            spark.table("stats_psi_stream"),
-            ref_counts,
-            window_cols=("day_idx",),
-        )
-        .select(
-            F.concat(
-                F.col("event_type"),
-                F.lit("@d"),
-                F.col("day_idx").cast("string"),
-            ).alias("group_key"),
-            "psi",
-            F.col("n_ref").cast("double").alias("n_ref"),
-            F.col("n_cur").cast("double").alias("n_cur"),
-            F.col("n_bins").cast("double").alias("n_bins"),
-        )
-        .melt(
-            ids=["group_key"],
-            values=["psi", "n_ref", "n_cur", "n_bins"],
-            variableColumnName="metric",
-            valueColumnName="value",
-        )
-        .select(
-            F.lit("psi_stream").alias("tag"), "group_key", "metric", "value"
-        )
+    type_day_key = F.concat(
+        F.col("event_type"), F.lit("@d"), F.col("day_idx").cast("string")
+    )
+    psi_stream_arm = _metric_rows(
+        psi_vs_reference(spark.table("stats_psi_stream"), ref_counts),
+        "psi_stream",
+        type_day_key,
+        _PSI_METRICS,
     )
     # (i) robust outliers (operators/drift.mad_outliers):
     # per-type median/MAD fence — the row-level complement to the PSI
@@ -759,27 +701,11 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # suite's mean/stddev zscore is the fragile cousin this fence
     # replaces when the tail itself is what's being hunted.
     # (out_stats computed with the streaming arms above)
-    out_arm = (
-        out_stats
-        .select(
-            "event_type",
-            "median",
-            "mad",
-            F.col("n").cast("double").alias("n"),
-            F.col("n_outliers").cast("double").alias("n_outliers"),
-        )
-        .melt(
-            ids=["event_type"],
-            values=["median", "mad", "n", "n_outliers"],
-            variableColumnName="metric",
-            valueColumnName="value",
-        )
-        .select(
-            F.lit("outliers").alias("tag"),
-            F.col("event_type").cast("string").alias("group_key"),
-            "metric",
-            "value",
-        )
+    out_arm = _metric_rows(
+        out_stats,
+        "outliers",
+        F.col("event_type").cast("string"),
+        ("median", "mad", "n", "n_outliers"),
     )
     # (j) streaming outlier fence: the SAME frozen batch
     # median/MAD statistics broadcast into a stream-static join, with
@@ -792,29 +718,11 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argument as (i).
     # (stream built and drained with arm (h) above — one shared source
     # write, two concurrent availableNow drains)
-    out_stream_arm = (
-        spark.table("stats_outlier_stream")
-        .select(
-            F.concat(
-                F.col("event_type"),
-                F.lit("@d"),
-                F.col("day_idx").cast("string"),
-            ).alias("group_key"),
-            "n",
-            "n_outliers",
-        )
-        .melt(
-            ids=["group_key"],
-            values=["n", "n_outliers"],
-            variableColumnName="metric",
-            valueColumnName="value",
-        )
-        .select(
-            F.lit("outliers_stream").alias("tag"),
-            "group_key",
-            "metric",
-            "value",
-        )
+    out_stream_arm = _metric_rows(
+        spark.table("stats_outlier_stream"),
+        "outliers_stream",
+        type_day_key,
+        ("n", "n_outliers"),
     )
     # (k) k-anonymity + l-diversity audits
     # (operators/validation.k_anonymity / l_diversity): the
@@ -825,53 +733,19 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.validation import k_anonymity, l_diversity
 
     gov_docs = load_table(spark, sf_dir, "documents")
-    ldiv_arm = (
-        l_diversity(gov_docs, ("source",))
-        .select(
-            F.col("n_classes").cast("double").alias("l_n_classes"),
-            F.col("min_distinct_sensitive")
-            .cast("double")
-            .alias("min_distinct_sensitive"),
-            F.col("n_below_l").cast("double").alias("n_below_l"),
-        )
-        .melt(
-            ids=[],
-            values=["l_n_classes", "min_distinct_sensitive", "n_below_l"],
-            variableColumnName="metric",
-            valueColumnName="value",
-        )
-        .select(
-            F.lit("kanon").alias("tag"),
-            F.lit("documents:source->lang").alias("group_key"),
-            "metric",
-            "value",
-        )
+    ldiv_arm = _metric_rows(
+        l_diversity(gov_docs, ("source",)).withColumnRenamed(
+            "n_classes", "l_n_classes"
+        ),
+        "kanon",
+        F.lit("documents:source->lang"),
+        ("l_n_classes", "min_distinct_sensitive", "n_below_l"),
     )
-    kanon_arm = (
-        k_anonymity(gov_docs, ("source", "lang"))
-        .select(
-            F.col("n_classes").cast("double").alias("n_classes"),
-            F.col("min_class_size").cast("double").alias("min_class_size"),
-            F.col("n_below_k").cast("double").alias("n_below_k"),
-            F.col("n_rows_at_risk").cast("double").alias("n_rows_at_risk"),
-        )
-        .melt(
-            ids=[],
-            values=[
-                "n_classes",
-                "min_class_size",
-                "n_below_k",
-                "n_rows_at_risk",
-            ],
-            variableColumnName="metric",
-            valueColumnName="value",
-        )
-        .select(
-            F.lit("kanon").alias("tag"),
-            F.lit("documents:source+lang").alias("group_key"),
-            "metric",
-            "value",
-        )
+    kanon_arm = _metric_rows(
+        k_anonymity(gov_docs, ("source", "lang")),
+        "kanon",
+        F.lit("documents:source+lang"),
+        ("n_classes", "min_class_size", "n_below_k", "n_rows_at_risk"),
     )
     return (
         seg_arm.unionByName(mkt_arm)
@@ -1161,9 +1035,6 @@ def pivot_status_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("P_n"), F.lit(0)).alias("n_pending"),
         round_half_up(F.coalesce(F.col("O_val"), F.lit(0.0)), 2).alias("open_value"),
     )
-
-
-# corr_to_market was consolidated into stats_suite (its 'corr' arm).
 
 
 @register(

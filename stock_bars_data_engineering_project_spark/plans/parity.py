@@ -66,10 +66,8 @@ def flagship_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # W1/W2/W3 (lag, 5-row moving avg, 5-row moving stddev) are verified
-# through flagship_analysis, which computes all three in one plan —
-# their standalone query forms were consolidated into it so every
-# registered query fits the driver's checked window (the operators
-# live in operators/analysis.py).
+# through flagship_analysis, which computes all three in one plan (the
+# operators live in operators/analysis.py).
 
 # ---------------------------------------------------------------------------
 # J1: inner equi-join to a small dimension, different key names, drops
@@ -309,7 +307,7 @@ def a_scan_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
             not_null(docs, "documents", "text"),
             unique_key(orders, "orders", "o_orderkey"),
             accepted_values(orders, "orders", "o_orderstatus", ("O", "F", "P")),
-            value_range(lineitem, "lineitem", "l_quantity", lo=1, hi=50),
+            value_range(lineitem, "lineitem", "l_quantity", 1, 50),
             ref_integrity(lineitem, "l_orderkey", orders, "o_orderkey", "lineitem"),
         ]
     )
@@ -399,12 +397,6 @@ def s6_sql_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the DuckDB oracle."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_S6_SQL)
-
-
-
-
-# x6_checkpoint_date_slice was consolidated into fx_filter_scalar_suite
-# (its checkpoint_date / uid / etype columns — same expressions).
 
 
 # ---------------------------------------------------------------------------

@@ -230,13 +230,6 @@ def q_stream_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return first_seen.unionByName(spark.table("stream_wm_dedup"))
 
 
-# stream_tumbling_hourly was consolidated out of the registry: the
-# tumbling-agg semantics are driver-checked via win_windows_suite, and
-# the real readStream->memory-sink drain path keeps TWO driver-checked
-# queries (stream_stateful_dedup, stream_interval_join) plus the
-# stream-equals-batch pins in tests/test_streaming.py.
-
-
 @register(
     "stream_interval_join_suite",
     oracle="""

@@ -334,10 +334,6 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# intersect_purchase_view_users was consolidated into set_ops_suite
-# (its 'intersect_purchase_view' arm).
-
-
 @register(
     "q10_returned_items",
     oracle=f"""

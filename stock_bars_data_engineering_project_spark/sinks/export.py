@@ -13,12 +13,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def export_jsonl(df: DataFrame, path: str, n_shards: int | None = None) -> None:
-    """Write ``df`` as JSONL shards. ``n_shards`` repartitions to a
-    target shard count (round-robin — balanced shard sizes for even
-    consumer throughput); None keeps the upstream partitioning. Shards
-    are gzip-compressed, so they do not split on re-read: shard COUNT
-    is the parallelism knob."""
-    if n_shards is not None:
-        df = df.repartition(n_shards)
-    df.write.mode("overwrite").option("compression", "gzip").json(path)
+# JSONL shards export_jsonl writes
+N_SHARDS = 8
+
+
+def export_jsonl(df: DataFrame, path: str) -> None:
+    """Write ``df`` as ``N_SHARDS`` JSONL shards, repartitioned
+    round-robin (balanced shard sizes for even consumer throughput).
+    Shards are gzip-compressed, so they do not split on re-read: shard
+    COUNT is the parallelism knob."""
+    df.repartition(N_SHARDS).write.mode("overwrite").option(
+        "compression", "gzip"
+    ).json(path)

@@ -795,7 +795,7 @@ class ParquetWarehouse:
         self,
         table: str,
         from_version: str,
-        keys: tuple[str, ...] = (),
+        keys: tuple[str, ...],
     ) -> DataFrame:
         """Change data feed from ``from_version`` to the live snapshot:
         one row per changed key with ``_change_type`` ∈ insert / update /

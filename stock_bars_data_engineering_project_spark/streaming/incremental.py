@@ -44,11 +44,10 @@ def rollup_maintenance_stream(
     wh: ParquetWarehouse,
     table: str,
     checkpoint_dir: str = "",
-    distinct_col: str | None = None,
 ):
     """Maintain a mergeable per-``user_id`` rollup (operators/rollup.py,
-    optionally sketch-extended) under Structured Streaming as an EPOCH
-    LOG.
+    sketch-extended with distinct ``event_id``) under Structured
+    Streaming as an EPOCH LOG.
 
     Each micro-batch folds to a per-group increment tagged with its
     epoch id and lands via keyed merge into its own ``_epoch``
@@ -63,9 +62,7 @@ def rollup_maintenance_stream(
     from ..operators.rollup import rollup_increment
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
-        inc = rollup_increment(
-            batch, distinct_col=distinct_col
-        ).withColumn("_epoch", F.lit(int(epoch_id)))
+        inc = rollup_increment(batch).withColumn("_epoch", F.lit(int(epoch_id)))
         wh.merge(
             inc,
             table,

@@ -22,7 +22,7 @@ def test_asof_backward_inclusive_and_null(spark):
     )
     got = {
         r.event_id: (r.mark_ts, r.mark_value)
-        for r in asof_join(left, right, right_on="mark_ts").collect()
+        for r in asof_join(left, right).collect()
     }
     assert got[1] == (_dt(10), 100.0)  # inclusive: equal timestamps match
     assert got[2] == (_dt(11), 110.0)  # latest predecessor, not first

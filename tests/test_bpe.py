@@ -6,13 +6,14 @@ from __future__ import annotations
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.bpe import (
     EOW,
     bpe_segment,
     train_bpe,
-    word_counts,
 )
+from stock_bars_data_engineering_project_spark.operators.quality import word_counts
 
 CORPUS = [
     "low low low low low",
@@ -101,7 +102,7 @@ def test_word_counts_is_the_only_corpus_pass(spark):
     docs = spark.createDataFrame(
         [(1, "Aa aa AA"), (2, "bb")], "doc_id long, text string"
     )
-    wc = {r.word: r.n for r in word_counts(docs).collect()}
+    wc = {r.token: r.n for r in word_counts(docs).collect()}
     assert wc == {"aa": 3, "bb": 1}
 
 
@@ -125,7 +126,7 @@ def test_bpe_segment_round_trips_every_word(spark):
     outcome corrupts every downstream training example."""
     docs = spark.createDataFrame([(t,) for t in CORPUS], "text string")
     merges = train_bpe(docs, n_merges=8)
-    words = word_counts(docs).select("word")
+    words = word_counts(docs).select(F.col("token").alias("word"))
     out = bpe_segment(words, merges).collect()
     assert out, "no words"
     for r in out:

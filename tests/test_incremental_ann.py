@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from stock_bars_data_engineering_project_spark.operators import incremental_ann
 from stock_bars_data_engineering_project_spark.operators.incremental_ann import (
     ann_query,
     build_ann_index,
@@ -30,6 +31,14 @@ def emb(spark):
     return load_table(spark, SF, "embeddings").select("vec_id", "embedding")
 
 
+@pytest.fixture(autouse=True)
+def _small_quantizer(monkeypatch):
+    # more, refined centroids than the registered row's, so the small
+    # corpus spreads over many lists
+    monkeypatch.setattr(incremental_ann, "CENTROID_STRIDE", 40)
+    monkeypatch.setattr(incremental_ann, "REFINE_ITERS", 1)
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -42,7 +51,7 @@ def test_build_ingest_matches_oneshot(spark, emb, tmp_path):
     # trains on the full corpus's first half and the comparison ivf_topk
     # reuses the stored centroids — assignment is deterministic, so
     # one-shot vs build+ingest differ only in storage layout
-    build_ann_index(wh, first, "idx", centroid_stride=40, refine_iters=1)
+    build_ann_index(wh, first, "idx")
     ingest_vectors(wh, second, "idx")
     queries = emb.filter(F.col("vec_id") < 5)
     got = ann_query(wh, queries, "idx")
@@ -55,7 +64,7 @@ def test_ingest_idempotent(spark, emb, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
-    build_ann_index(wh, first, "idx", centroid_stride=40, refine_iters=1)
+    build_ann_index(wh, first, "idx")
     ingest_vectors(wh, second, "idx")
     before = _rows(wh.read("idx").select("vec_id", "cid"))
     ingest_vectors(wh, second, "idx")  # replay
@@ -72,8 +81,7 @@ def test_tombstone_delete_and_apply(spark, emb, tmp_path):
     layout preserved) with answers unchanged, after which the id may be
     re-ingested."""
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_ann_index(wh, emb.filter(F.col("vec_id") % 2 == 0), "idx",
-                    centroid_stride=40, refine_iters=1)
+    build_ann_index(wh, emb.filter(F.col("vec_id") % 2 == 0), "idx")
     ingest_vectors(wh, emb.filter(F.col("vec_id") % 2 == 1), "idx")
 
     dead_ids = [r.vec_id for r in
@@ -113,7 +121,7 @@ def test_probe_scan_partition_prunes(spark, emb, tmp_path):
     filter on the cid-partitioned index (files outside the probed lists
     are never opened)."""
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    build_ann_index(wh, emb, "idx", centroid_stride=40, refine_iters=1)
+    build_ann_index(wh, emb, "idx")
     probed = [r["cid"] for r in wh.read("idx").select("cid").distinct().limit(2).collect()]
     plan = (
         wh.read("idx")

@@ -106,7 +106,7 @@ def test_crash_window_duplicate_postings_heal(spark, tmp_path):
     odd = corpus.filter(F.col("doc_id") % 2 == 1)
     build_lexical_index(wh, even, "bm", BM25)
     # crash simulation: postings landed, membership did not
-    wh.append(BM25.postings(odd, 64, "doc_id", "text"), postings_table("bm"))
+    wh.append(BM25.postings(odd, 64), postings_table("bm"))
     # redelivery: anti-join sees no membership, ingests the whole batch
     assert ingest_docs(wh, odd, "bm", BM25) == odd.count()
 

@@ -14,6 +14,7 @@ from stock_bars_data_engineering_project_spark.operators.lm_state import (
 )
 from stock_bars_data_engineering_project_spark.operators.quality import (
     bigram_surprisal,
+    word_counts,
 )
 from stock_bars_data_engineering_project_spark.sinks.warehouse import (
     ParquetWarehouse,
@@ -115,7 +116,7 @@ def test_frozen_model_scoring_equals_self_model(spark, tmp_path, corpus):
     }
     own = {
         r.doc_id: r.score
-        for r in bigram_surprisal(corpus).collect()
+        for r in bigram_surprisal(corpus, word_counts(corpus)).collect()
     }
     assert set(frozen) == set(own)
     for doc_id, s in own.items():

@@ -51,7 +51,7 @@ def test_asof_join_matches_pandas_merge_asof(spark, events, marks):
     )
     got = {
         r.event_id: (r.mark_ts, r.mark_value)
-        for r in asof_join(left, right, right_on="mark_ts").collect()
+        for r in asof_join(left, right).collect()
     }
     lp = left.toPandas().sort_values("ts").reset_index(drop=True)
     rp = right.toPandas().sort_values("mark_ts").reset_index(drop=True)
@@ -257,7 +257,7 @@ def test_validation_checks_match_python_recompute(spark, rows, parent_keys):
     exp_failed = sum(1 for _, s in rows if s not in ("a", "b"))
     assert (r.failed, r.ok) == (exp_failed, int(exp_failed == 0))
 
-    r = value_range(df, "t", "k", lo=1, hi=4).collect()[0]
+    r = value_range(df, "t", "k", 1, 4).collect()[0]
     exp_failed = sum(1 for k, _ in rows if k is None or not (1 <= k <= 4))
     assert (r.failed, r.ok) == (exp_failed, int(exp_failed == 0))
 
@@ -421,7 +421,7 @@ _scd2_batches = st.lists(
 @given(_scd2_batches)
 def test_scd2_matches_sequential_reference(spark, batches):
     """SCD2 under ANY batch sequence (full-snapshot semantics,
-    close_missing=True) equals a sequential dict-based reference:
+    merge.CLOSE_MISSING) equals a sequential dict-based reference:
     version intervals, closure stamps, re-appearing keys, and the
     one-open-version invariant all follow."""
     from stock_bars_data_engineering_project_spark.operators.merge import (
@@ -465,7 +465,6 @@ def test_scd2_matches_sequential_reference(spark, batches):
             ("k",),
             ("v",),
             stamp,
-            close_missing=True,
         )
     got = sorted(
         (r.k, r.v, r.valid_from, r.valid_to, r.is_current)

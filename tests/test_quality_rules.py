@@ -6,6 +6,7 @@ from __future__ import annotations
 from stock_bars_data_engineering_project_spark.operators.quality import (
     GOPHER_STOPWORDS,
     gopher_panel,
+    word_counts,
 )
 
 RULES = (
@@ -130,7 +131,7 @@ def test_bigram_surprisal_hand_computed(spark):
     docs, bigram_surprisal = _bigram_docs(spark)
     out = {
         r.doc_id: (r.score, r.n_bigrams)
-        for r in bigram_surprisal(docs).collect()
+        for r in bigram_surprisal(docs, word_counts(docs)).collect()
     }
     p_ab, p_ba, p_bx = 3 / 4, 0.4 * 4 / 9, 0.4 * 1 / 9
     expect = {
@@ -157,7 +158,7 @@ def test_bigram_surprisal_no_pruning_never_backs_off(spark, monkeypatch):
     docs, bigram_surprisal = _bigram_docs(spark)
     out = {
         r.doc_id: r.score
-        for r in bigram_surprisal(docs).collect()
+        for r in bigram_surprisal(docs, word_counts(docs)).collect()
     }
     # (b,x): c2=1, c1(b)=4 -> p = 1/4 (seen), not 0.4*1/9 (backoff)
     assert abs(out[3] - (-math.log(1 / 4))) < 1e-12
@@ -187,11 +188,11 @@ def test_bigram_surprisal_reuses_supplied_unigram_counts(spark):
     )
     a = {
         r.doc_id: (r.score, r.n_bigrams)
-        for r in bigram_surprisal(docs).collect()
+        for r in bigram_surprisal(docs, word_counts(docs)).collect()
     }
     b = {
         r.doc_id: (r.score, r.n_bigrams)
-        for r in bigram_surprisal(docs, unigram_counts=counts).collect()
+        for r in bigram_surprisal(docs, counts).collect()
     }
     assert set(a) == set(b)
     for doc_id, (score, n) in a.items():
@@ -247,7 +248,7 @@ def test_bigram_surprisal_frozen_reference_model(spark, tmp_path):
 
     self_scores = {
         r.doc_id: round(r.score, 10)
-        for r in bigram_surprisal(docs).collect()
+        for r in bigram_surprisal(docs, word_counts(docs)).collect()
     }
     frozen_scores = {
         r.doc_id: round(r.score, 10)
@@ -339,7 +340,7 @@ def test_pmi_collocations_matches_python_replay(spark, monkeypatch):
     )
     got = {
         (r.prev, r.cur): (r.n2, r.pmi)
-        for r in pmi_collocations(docs).collect()
+        for r in pmi_collocations(docs, word_counts(docs)).collect()
     }
 
     toks = []

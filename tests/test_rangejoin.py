@@ -13,14 +13,15 @@ def _dt(h, m=0, s=0):
 
 def test_range_join_inclusive_and_multibucket(spark):
     left = spark.createDataFrame(
-        [(1, _dt(10)), (2, _dt(12, 30)), (3, _dt(13, 0)), (4, _dt(13, 0, 1))],
-        "event_id long, ts timestamp",
+        [(i, 7, t) for i, t in ((1, _dt(10)), (2, _dt(12, 30)), (3, _dt(13, 0)), (4, _dt(13, 0, 1)))],
+        "event_id long, user_id long, ts timestamp",
     )
     # one interval spanning 4 hourly buckets: [10:00, 13:00]
     right = spark.createDataFrame(
-        [(100, _dt(10), _dt(13))], "interval_id long, lo timestamp, hi timestamp"
+        [(100, 7, _dt(10), _dt(13))],
+        "interval_id long, user_id long, window_lo timestamp, window_hi timestamp",
     )
-    rows = range_join(left, right, lo="lo", hi="hi").collect()
+    rows = range_join(left, right).collect()
     got = sorted(r.event_id for r in rows)
     # 1: lo-inclusive; 2: interior; 3: hi-inclusive; 4: one second past hi
     assert got == [1, 2, 3]
@@ -33,9 +34,10 @@ def test_range_join_keyed(spark):
         [(1, 7, _dt(11)), (2, 8, _dt(11))], "event_id long, user_id long, ts timestamp"
     )
     right = spark.createDataFrame(
-        [(7, _dt(10), _dt(12))], "user_id long, lo timestamp, hi timestamp"
+        [(7, _dt(10), _dt(12))],
+        "user_id long, window_lo timestamp, window_hi timestamp",
     )
-    rows = range_join(left, right, by=("user_id",)).collect()
+    rows = range_join(left, right).collect()
     assert [r.event_id for r in rows] == [1]  # co-key respected
 
 

@@ -1,16 +1,18 @@
 """Static rules over the source tree: the warehouse's snapshot format
 stays inside ``sinks/``, the slow-tier manifest names only tests that
 exist, every top-level package function or class is named by the
-package or its entry points, every defaulted package parameter is set
-by some product caller to a value other than its default, column helpers
-take SQL text only (no ``Column | str`` twin), and driver-side frames
-are built only by ``session.local_frame``. All parse source with
-``ast``; no Spark session needed."""
+package or its entry points, every defaulted package parameter gets
+two or more distinct values from product callers, column helpers take
+SQL text only (no ``Column | str`` twin), driver-side frames are built
+only by ``session.local_frame``, and the corpus word model is spelled
+only in its home. All parse source with ``ast`` or read it as text; no
+Spark session needed."""
 
 from __future__ import annotations
 
 import ast
 import importlib.util
+import re
 import sys
 from collections import Counter, defaultdict
 from pathlib import Path
@@ -156,8 +158,8 @@ def test_every_top_level_definition_is_named():
     assert sorted(set(UNNAMED_ALLOWED) - unnamed) == []
 
 
-# A defaulted parameter that no product caller sets to a value other
-# than its default is an option nobody uses: inline its default. One may
+# A defaulted parameter that product callers give fewer than two
+# distinct values is an option nobody uses: inline the one value. One may
 # stay only with a reason in tools/reachability.py's KEEP_PARAMS table.
 
 
@@ -210,10 +212,11 @@ def _literal(node: ast.expr):
         return _UNKNOWN
 
 
-def _same_literal(value: ast.expr, default: ast.expr) -> bool:
-    """``value`` is a literal equal to the literal ``default`` (same type)."""
-    a, b = _literal(value), _literal(default)
-    return a is not _UNKNOWN and b is not _UNKNOWN and type(a) is type(b) and a == b
+def _value_key(node: ast.expr):
+    """A hashable key for a literal's type and value; ``_UNKNOWN`` for a
+    non-literal."""
+    v = _literal(node)
+    return _UNKNOWN if v is _UNKNOWN else (type(v).__name__, repr(v))
 
 
 class _Calls(ast.NodeVisitor):
@@ -277,11 +280,13 @@ class _Calls(ast.NodeVisitor):
 
 def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
     """``<module>:<qualname>(<param>)`` for every defaulted parameter of a
-    function (or ``@dataclass`` field) in ``sources`` that no call in
-    ``sources`` or ``roots`` sets: by keyword or by position to a
-    non-literal or to a literal other than the default, or through
-    ``**kwargs`` forwarding. Calls match by name, so a name two
-    functions share counts for both (the rule errs toward "set")."""
+    function (or ``@dataclass`` field) in ``sources`` that the calls in
+    ``sources`` and ``roots`` do not set. A parameter is set when those
+    calls give it two or more distinct literal values (a call that omits
+    it gives the default), or when one passes it a non-literal, fills it
+    through ``**kwargs`` forwarding or through a ``*args``. Calls match
+    by name, so a name two functions share counts for both (the rule
+    errs toward "set")."""
     trees = {m: ast.parse(text) for m, text in sources.items()}
     defs: list[tuple[str, str, ast.FunctionDef, bool]] = []
 
@@ -332,6 +337,8 @@ def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
         return out
 
     def is_set(name, index, default, records, method) -> bool:
+        omitted = _value_key(default)
+        values = set()
         for args, starred, kws, fwds, enclosing, bound in records:
             value = kws.get(name)
             if value is None and index is not None:
@@ -340,13 +347,15 @@ def unset_parameters(sources: dict[str, str], roots: list[str]) -> set[str]:
                     value = args[pos]
                 elif starred and pos >= len(args):
                     return True  # filled by a *args of unknown values
-            if value is not None and not _same_literal(value, default):
-                return True
             for v in fwds:
                 more = forwarded(v, enclosing, frozenset())
                 if more is None or name in more:
                     return True
-        return False
+            key = omitted if value is None else _value_key(value)
+            if key is _UNKNOWN and value is not None:
+                return True  # a non-literal value
+            values.add(key)
+        return len(values) >= 2
 
     return {
         f"{qual}({name})"
@@ -372,6 +381,8 @@ def test_unset_parameters_rule():
             "def same(x, k=10, mode='a'):\n    return k\n\n"
             "def two(x, k=10):\n    return k\n\n"
             "def expr(x, k=10):\n    return k\n\n"
+            "def one(x, k=10):\n    return k\n\n"
+            "def mixed(x, k=10):\n    return k\n\n"
             "@dataclass\n"
             "class Spec:\n"
             "    root: str\n"
@@ -385,28 +396,34 @@ def test_unset_parameters_rule():
     }
     roots = [
         "from a import aliased as other\n"
-        "by_keyword(1, flag=True)\nby_position(1, 2)\nC().run()\n"
-        "outer(1, deep=3)\nconnect('db://')\nother(1, opt=2)\n"
+        "by_keyword(1, flag=True)\nby_keyword(2)\n"
+        "by_position(1, 2)\nby_position(3)\nC().run()\nC().m(3)\n"
+        "outer(1, deep=3)\nconnect('db://')\nother(1, opt=2)\nother(3)\n"
         "same(1, k=10)\nsame(2, 10, 'a')\n"
         "two(1, k=10)\ntwo(2, k=20)\n"
         "expr(1, k=K)\n"
+        "one(1, k=3)\none(2, 3)\n"
+        "mixed(1, k=3)\nmixed(2)\n"
         "Spec('/r')\nConfig.load({})\n"
     ]
     unset = unset_parameters(sources, roots)
-    # keyword, positional, self-method, aliased and forwarded (deep)
-    # passes set their parameters; nobody fills `shallow` through **kw;
-    # a pass of the default literal (same.k, same.mode) sets nothing,
-    # two distinct literals (two.k) or a non-literal (expr.k) do; a
-    # dataclass field no root sets (tests are not roots) is unset, one
-    # filled through cls(**raw) is set
+    # keyword, positional, self-method and aliased passes next to a
+    # call that omits the parameter set it, and so does a forwarded
+    # (deep) pass; nobody fills `shallow` through **kw; a pass of the
+    # default literal (same.k, same.mode) sets nothing, nor does one
+    # non-default literal on every call (one.k); two distinct literals
+    # (two.k, and mixed.k's literal plus an omission) or a non-literal
+    # (expr.k) do; a dataclass field no root sets (tests are not roots)
+    # is unset, one filled through cls(**raw) is set
     assert unset == {
         "a.py:never(n)", "a.py:inner(shallow)", "a.py:connect(user)",
-        "a.py:same(k)", "a.py:same(mode)", "a.py:Spec.__init__(retries)",
+        "a.py:same(k)", "a.py:same(mode)", "a.py:one(k)",
+        "a.py:Spec.__init__(retries)",
     }
     allowed = {"a.py:connect(user)": "deployment setting: credential"}
     assert unset - set(allowed) == {
         "a.py:never(n)", "a.py:inner(shallow)", "a.py:same(k)",
-        "a.py:same(mode)", "a.py:Spec.__init__(retries)",
+        "a.py:same(mode)", "a.py:one(k)", "a.py:Spec.__init__(retries)",
     }
 
 
@@ -598,3 +615,30 @@ def test_unrun_blocks_rule(tmp_path):
     node = ast.parse(source).body[0]
     d = reachability.Def("mod.py", "f", "def", 1, node)
     assert reachability.unrun_blocks(d, lines) == [(4, 4), (16, 17)]
+
+
+# The corpus word model (lower-cased single-space tokens of ``text``,
+# empties dropped) lives in functions/text.py as ``corpus_tokens``; a
+# module that spells the tokenization itself can drift from it. DuckDB
+# oracle text (``string_split``) is the other engine's replay, not a
+# second Spark definition.
+_WORD_MODEL_HOME = "functions/text.py"
+_WORD_MODEL_SPELLING = re.compile(
+    r'tokens\(f?"lower\(|(?<!string_)split\(lower\(|F\.lower\(F\.col\("text"\)\)'
+)
+
+
+def corpus_token_spellings(sources: dict[str, str]) -> set[str]:
+    """``<module>:<line>`` of every spelling of the word model outside
+    its home."""
+    return {
+        f"{module}:{n}"
+        for module, text in sources.items()
+        if module != _WORD_MODEL_HOME
+        for n, line in enumerate(text.splitlines(), 1)
+        if _WORD_MODEL_SPELLING.search(line)
+    }
+
+
+def test_corpus_tokens_defined_once():
+    assert sorted(corpus_token_spellings(_package_sources())) == []

@@ -53,7 +53,11 @@ def test_fold_order_does_not_matter(spark, events):
     b2 = events.filter(F.col("event_id") % 2 == 1)
     ab = merge_rollups(rollup_increment(b1), rollup_increment(b2))
     ba = merge_rollups(rollup_increment(b2), rollup_increment(b1))
-    assert _collect(ab) == _collect(ba)
+    # the scalar state is order-free; the sketches' serialized bytes
+    # need not be, so they are compared through their projections
+    sketches = ("hll_state", "kll_state")
+    assert _collect(ab.drop(*sketches)) == _collect(ba.drop(*sketches))
+    assert _collect(rollup_metrics(ab)) == _collect(rollup_metrics(ba))
 
 
 def test_metrics_match_direct_ohlc(spark, events):
@@ -75,15 +79,15 @@ def test_metrics_match_direct_ohlc(spark, events):
 
 
 def test_sketch_extended_fold_equals_direct(spark, events):
-    """With distinct_col set, the state carries HLL/KLL sketch columns
+    """The state carries HLL/KLL sketch columns
     through the same fold; the projected estimates must equal a direct
     single-pass build (HLL union is register-identical; KLL groups here
     are below k=200, so no compaction and exact quantiles)."""
-    full = rollup_metrics(rollup_increment(events, distinct_col="event_id"))
+    full = rollup_metrics(rollup_increment(events))
     parts = [events.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    folded = rollup_increment(parts[0], distinct_col="event_id")
+    folded = rollup_increment(parts[0])
     for p in parts[1:]:
-        folded = merge_rollups(folded, rollup_increment(p, distinct_col="event_id"))
+        folded = merge_rollups(folded, rollup_increment(p))
     got = rollup_metrics(folded)
     assert _collect(got) == _collect(full)
     # hard sketch laws vs the scalar state: n exact, extrema exact,

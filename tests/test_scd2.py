@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from stock_bars_data_engineering_project_spark.operators import merge
 from stock_bars_data_engineering_project_spark.operators.merge import (
     scd2_init,
     scd2_merge,
@@ -34,6 +35,12 @@ def dim(spark):
     return scd2_init(b1, ("k",), 1)
 
 
+@pytest.fixture()
+def incremental(monkeypatch):
+    """Incremental-batch sources: a key the batch lacks stays open."""
+    monkeypatch.setattr(merge, "CLOSE_MISSING", False)
+
+
 def test_init_opens_every_row(dim):
     assert _rows(dim) == [
         (1, "A", 10.0, 1, None, True),
@@ -49,7 +56,7 @@ def test_merge_classifies_all_four_cases(spark, dim):
         [(1, "A", 10.0), (2, "B", 25.0), (4, "D", 40.0)], SCHEMA
     )
     out = scd2_merge(
-        dim, b2, ("k",), ("status", "price"), 2, close_missing=True
+        dim, b2, ("k",), ("status", "price"), 2
     )
     assert _rows(out) == [
         (1, "A", 10.0, 1, None, True),
@@ -65,15 +72,15 @@ def test_merge_same_snapshot_is_idempotent(spark, dim):
         [(1, "A", 10.0), (2, "B", 25.0), (4, "D", 40.0)], SCHEMA
     )
     once = scd2_merge(
-        dim, b2, ("k",), ("status", "price"), 2, close_missing=True
+        dim, b2, ("k",), ("status", "price"), 2
     )
     again = scd2_merge(
-        once, b2, ("k",), ("status", "price"), 3, close_missing=True
+        once, b2, ("k",), ("status", "price"), 3
     )
     assert _rows(again) == _rows(once)
 
 
-def test_incremental_batch_keeps_absent_keys_open(spark, dim):
+def test_incremental_batch_keeps_absent_keys_open(spark, dim, incremental):
     b2 = spark.createDataFrame([(2, "B", 25.0)], SCHEMA)
     out = scd2_merge(dim, b2, ("k",), ("status", "price"), 2)
     cur = {r.k for r in out.filter("is_current").collect()}
@@ -81,7 +88,7 @@ def test_incremental_batch_keeps_absent_keys_open(spark, dim):
     assert out.filter("is_current").count() == 3  # one open row per key
 
 
-def test_at_most_one_open_version_per_key_across_three_batches(spark, dim):
+def test_at_most_one_open_version_per_key_across_three_batches(spark, dim, incremental):
     state = dim
     for stamp, price in ((2, 21.0), (3, 22.0), (4, 23.0)):
         batch = spark.createDataFrame([(2, "B", price)], SCHEMA)
@@ -135,7 +142,7 @@ def test_guards_refuse_malformed_inputs(spark, dim):
         scd2_init(dim, ("k",), 2)
 
 
-def test_warehouse_snapshot_roundtrip(spark, tmp_path, dim):
+def test_warehouse_snapshot_roundtrip(spark, tmp_path, dim, incremental):
     """The dimension survives a warehouse write/read cycle and the next
     merge applies cleanly on the read-back frame."""
     from stock_bars_data_engineering_project_spark.sinks.warehouse import (

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.functions.scalars import event_micros
+from stock_bars_data_engineering_project_spark.operators import sessionize as sessionize_mod
 from stock_bars_data_engineering_project_spark.operators.sessionize import (
     session_stats,
     sessionize,
@@ -22,7 +23,7 @@ def _mk(spark, rows):
     ).withColumn("ts", F.to_timestamp("ts"))
 
 
-def test_sessionize_gap_boundary_matches_session_window(spark):
+def test_sessionize_gap_boundary_matches_session_window(spark, monkeypatch):
     """An inter-event gap EXACTLY equal to the timeout stays in the same
     session; one microsecond past it splits — the convention pinned to
     Spark's native session_window merge rule (adjacent windows merge),
@@ -36,9 +37,10 @@ def test_sessionize_gap_boundary_matches_session_window(spark):
             (1, 3, "2024-01-01 00:02:00.000001", "view"),  # +1 us: new
         ],
     )
+    monkeypatch.setattr(sessionize_mod, "GAP_MINUTES", 1)
     got = {
         r.event_id: r.session_id
-        for r in sessionize(ev, gap_minutes=1).collect()
+        for r in sessionize(ev).collect()
     }
     assert got == {1: 1, 2: 1, 3: 2}
 
@@ -58,7 +60,7 @@ def test_sessionize_matches_python_replay(spark):
     gap_us = 720 * 60 * 1_000_000
     got = {
         (r.user_id, r.event_id): r.session_id
-        for r in sessionize(ev, gap_minutes=720).collect()
+        for r in sessionize(ev).collect()
     }
 
     rows = sorted(
@@ -87,15 +89,16 @@ def test_session_stats_chain_and_duration(spark):
             (7, 3, "2024-01-02 09:00:00", "purchase"),
         ],
     )
-    out = {r.session_id: r for r in session_stats(ev, gap_minutes=60).collect()}
+    out = {r.session_id: r for r in session_stats(ev).collect()}
     assert out[1].seq == "view,click" and out[1].n_events == 2
     assert out[1].duration_us == 600 * 1_000_000
     assert out[2].seq == "purchase" and out[2].duration_us == 0
 
 
-def test_sessionize_guards(spark):
+def test_sessionize_guards(spark, monkeypatch):
     ev = load_table(spark, SF, "events")
-    with pytest.raises(ValueError, match="gap_minutes"):
-        sessionize(ev, gap_minutes=0)
     with pytest.raises(ValueError, match="session_id"):
         sessionize(ev.withColumn("session_id", F.lit(1)))
+    monkeypatch.setattr(sessionize_mod, "GAP_MINUTES", 0)
+    with pytest.raises(ValueError, match="gap_minutes"):
+        sessionize(ev)

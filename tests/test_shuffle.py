@@ -11,6 +11,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from stock_bars_data_engineering_project_spark.operators import sampling
 from stock_bars_data_engineering_project_spark.operators.sampling import (
     shuffle_shards,
 )
@@ -28,14 +29,26 @@ def _expected_order(ids, seed, n_shards=N_SHARDS):
     return [i for _, _, i in sorted(keyed)]
 
 
+@pytest.fixture()
+def shards(monkeypatch):
+    """shuffle_shards with its shard count and seed set for one call."""
+
+    def run(df, n_shards=1024, seed=""):
+        monkeypatch.setattr(sampling, "N_SHARDS", n_shards)
+        monkeypatch.setattr(sampling, "SHUFFLE_SEED", seed)
+        return shuffle_shards(df)
+
+    return run
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return load_table(spark, SF, "documents")
 
 
-def test_matches_reference_permutation(spark, docs):
+def test_matches_reference_permutation(spark, docs, shards):
     got = (
-        shuffle_shards(docs, n_shards=N_SHARDS, seed="ep0")
+        shards(docs, n_shards=N_SHARDS, seed="ep0")
         .orderBy("shard", "order_key")
         .select("doc_id")
         .collect()
@@ -44,25 +57,25 @@ def test_matches_reference_permutation(spark, docs):
     assert [r.doc_id for r in got] == _expected_order(ids, "ep0")
 
 
-def test_stable_across_partitionings(spark, docs):
-    a = shuffle_shards(docs, seed="s").select("doc_id", "shard", "order_key")
-    b = shuffle_shards(docs.repartition(13), seed="s").select(
+def test_stable_across_partitionings(spark, docs, shards):
+    a = shards(docs, seed="s").select("doc_id", "shard", "order_key")
+    b = shards(docs.repartition(13), seed="s").select(
         "doc_id", "shard", "order_key"
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_reseed_gives_independent_permutation(spark, docs):
+def test_reseed_gives_independent_permutation(spark, docs, shards):
     e0 = [
         r.doc_id
-        for r in shuffle_shards(docs, n_shards=N_SHARDS, seed="ep0")
+        for r in shards(docs, n_shards=N_SHARDS, seed="ep0")
         .orderBy("shard", "order_key")
         .select("doc_id")
         .collect()
     ]
     e1 = [
         r.doc_id
-        for r in shuffle_shards(docs, n_shards=N_SHARDS, seed="ep1")
+        for r in shards(docs, n_shards=N_SHARDS, seed="ep1")
         .orderBy("shard", "order_key")
         .select("doc_id")
         .collect()
@@ -71,11 +84,11 @@ def test_reseed_gives_independent_permutation(spark, docs):
     assert e0 != e1  # astronomically unlikely to collide if independent
 
 
-def test_shards_are_balanced(spark, docs):
+def test_shards_are_balanced(spark, docs, shards):
     n = docs.count()
     counts = [
         r["count"]
-        for r in shuffle_shards(docs, n_shards=N_SHARDS)
+        for r in shards(docs, n_shards=N_SHARDS)
         .groupBy("shard")
         .count()
         .collect()
@@ -87,10 +100,10 @@ def test_shards_are_balanced(spark, docs):
     assert all(abs(c - mean) < 5 * sigma for c in counts)
 
 
-def test_write_shuffled_streams_in_order(spark, docs, tmp_path):
+def test_write_shuffled_streams_in_order(spark, docs, tmp_path, shards):
     path = str(tmp_path / "shuffled")
     (
-        shuffle_shards(docs, n_shards=4, seed="ep0")
+        shards(docs, n_shards=4, seed="ep0")
         .repartition(4, "shard")
         .sortWithinPartitions("shard", "order_key")
         .write.partitionBy("shard")
@@ -104,14 +117,14 @@ def test_write_shuffled_streams_in_order(spark, docs, tmp_path):
     assert streamed == _expected_order(ids, "ep0", n_shards=4)
 
 
-def test_guards(spark, docs):
+def test_guards(spark, docs, shards):
     with pytest.raises(ValueError, match="n_shards"):
-        shuffle_shards(docs, n_shards=0)
+        shards(docs, n_shards=0)
     with pytest.raises(ValueError, match="order_key"):
-        shuffle_shards(docs.withColumn("order_key", F.lit(1)))
+        shards(docs.withColumn("order_key", F.lit(1)))
     null_df = spark.createDataFrame([(None,)], "doc_id long")
     with pytest.raises(Exception, match="NULL id"):
-        shuffle_shards(null_df).collect()
+        shards(null_df).collect()
 
 
 def test_shard_alone_still_raises_on_null_id(spark):

@@ -260,8 +260,8 @@ def test_pq_correct_with_noncontiguous_ids(spark, monkeypatch):
 
 
 def test_vector_storage_utilities(spark):
-    """unit_normalize_sql / truncate_dims / int8 quantization: exact Python
-    replay, error bound, zero-vector laws, loud short-vector guard."""
+    """truncate_dims / int8 quantization: exact Python replay, error
+    bound, zero-vector laws, loud short-vector guard."""
     import math
 
     import pytest
@@ -271,7 +271,6 @@ def test_vector_storage_utilities(spark):
         dequantize_int8,
         quantize_int8,
         truncate_dims,
-        unit_normalize_sql,
     )
 
     vecs = [
@@ -285,7 +284,6 @@ def test_vector_storage_utilities(spark):
         r.vec_id: r
         for r in df.select(
             "vec_id",
-            F.expr(unit_normalize_sql("embedding")).alias("u"),
             truncate_dims("embedding", 2).alias("t2"),
             quantize_int8("embedding").alias("qs"),
         )
@@ -294,16 +292,8 @@ def test_vector_storage_utilities(spark):
     }
     for vid, v in vecs:
         r = out[vid]
-        nrm = math.sqrt(sum(x * x for x in v))
-        if nrm > 0:
-            assert r.u == pytest.approx([x / nrm for x in v], abs=1e-15)
-            assert sum(x * x for x in r.u) == pytest.approx(1.0)
-        else:
-            assert r.u == v  # zero vector passes through, not NaNs
-        # truncate keeps the first 2 dims, renormalized (zero stays zero)
-        n2 = math.sqrt(sum(x * x for x in v[:2]))
-        want_t2 = [x / n2 for x in v[:2]] if n2 > 0 else v[:2]
-        assert r.t2 == pytest.approx(want_t2, abs=1e-15)
+        # truncate keeps the first 2 dims, as doubles
+        assert r.t2 == v[:2]
         # quantization: exact Python replay + error bound + round trip
         maxabs = max(abs(x) for x in v)
         scale = maxabs / 127.0

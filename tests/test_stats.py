@@ -54,13 +54,14 @@ def _budget_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, source string, n long")
 
 
-def test_token_budget_edges(spark):
+def test_token_budget_edges(spark, monkeypatch):
     """token_budget_sample edge cases: a zero budget
     takes nothing from a stratum, unlisted strata fall to
-    default_budget, and the document that CROSSES the budget boundary
+    DEFAULT_BUDGET, and the document that CROSSES the budget boundary
     is kept (budgets are floors)."""
     from pyspark.sql import functions as F
 
+    from stock_bars_data_engineering_project_spark.operators import sampling
     from stock_bars_data_engineering_project_spark.operators.sampling import (
         token_budget_sample,
     )
@@ -69,22 +70,22 @@ def test_token_budget_edges(spark):
     docs = _budget_docs(spark, rows)
 
     # zero budget for 'a', zero default for unlisted 'b' -> empty
-    none = token_budget_sample(
-        docs, budgets={"a": 0}, n_tokens=F.col("n"), default_budget=0
-    )
+    monkeypatch.setattr(sampling, "DEFAULT_BUDGET", 0)
+    none = token_budget_sample(docs, budgets={"a": 0}, n_tokens=F.col("n"))
     assert none.count() == 0
 
     # budget 100 with 40-token docs: 40+40 < 100 <= 40+40+40 -> the
     # crossing third doc is kept, the fourth is not
     some = token_budget_sample(
-        docs, budgets={"a": 100}, n_tokens=F.col("n"), default_budget=0
+        docs, budgets={"a": 100}, n_tokens=F.col("n")
     ).collect()
     assert len(some) == 3
     assert all(r.source == "a" for r in some)
 
-    # unlisted stratum takes from default_budget
+    # unlisted stratum takes from DEFAULT_BUDGET
+    monkeypatch.setattr(sampling, "DEFAULT_BUDGET", 100)
     dflt = token_budget_sample(
-        docs, budgets={"a": 0}, n_tokens=F.col("n"), default_budget=100
+        docs, budgets={"a": 0}, n_tokens=F.col("n")
     ).collect()
     assert len(dflt) == 3
     assert all(r.source == "b" for r in dflt)
@@ -108,14 +109,14 @@ def test_token_budget_membership_stable_under_growth(spark):
         r.doc_id
         for r in token_budget_sample(
             _budget_docs(spark, base_rows), budgets={"a": 200},
-            n_tokens=F.col("n"), default_budget=0,
+            n_tokens=F.col("n"),
         ).collect()
     }
     kept_grown = {
         r.doc_id
         for r in token_budget_sample(
             _budget_docs(spark, grown_rows), budgets={"a": 200},
-            n_tokens=F.col("n"), default_budget=0,
+            n_tokens=F.col("n"),
         ).collect()
     }
     # same budget, same doc size -> same kept count; old docs that stay
@@ -495,11 +496,11 @@ def test_psi_vs_reference_matches_python_replay(spark):
     ]
     ref = spark.createDataFrame(ref_rows, "event_type string, bucket long, n long")
     cur = spark.createDataFrame(
-        cur_rows, "event_type string, w long, bucket long, n long"
+        cur_rows, "event_type string, day_idx long, bucket long, n long"
     )
     got = {
-        (r.event_type, r.w): r
-        for r in psi_vs_reference(cur, ref, window_cols=("w",)).collect()
+        (r.event_type, r.day_idx): r
+        for r in psi_vs_reference(cur, ref).collect()
     }
 
     def replay(refc, curc):
@@ -587,10 +588,10 @@ def test_mad_outliers_matches_python_replay(spark):
         ("c", None), ("c", 7.0),           # NULLs never count
         (None, 1.0), (None, 50.0), (None, 1.2),  # NULL group survives
     ]
-    df = spark.createDataFrame(rows, ["grp", "value"])
+    df = spark.createDataFrame(rows, ["event_type", "value"])
     got = {
-        r.grp: (r.median, r.mad, r.n, r.n_outliers)
-        for r in mad_outliers(df, keys=("grp",)).collect()
+        r.event_type: (r.median, r.mad, r.n, r.n_outliers)
+        for r in mad_outliers(df).collect()
     }
 
     def _med(vs):
@@ -624,7 +625,8 @@ def test_mad_outliers_ungrouped_broadcast_scalar(spark):
     from stock_bars_data_engineering_project_spark.operators.drift import mad_outliers
 
     df = spark.createDataFrame(
-        [(float(v),) for v in [1, 2, 3, 4, 5, 1000]], ["value"]
+        [(None, float(v)) for v in [1, 2, 3, 4, 5, 1000]],
+        "event_type string, value double",
     )
     row = mad_outliers(df).collect()[0]
     assert row.n == 6 and row.n_outliers == 1 and row.median == 3.5
@@ -756,8 +758,8 @@ def test_mad_outliers_degenerate_mad_reports_null(spark):
         # healthy spread with one extreme value
         + [("ok", float(v)) for v in (1, 2, 3, 4, 5, 6, 7, 100)]
     )
-    df = spark.createDataFrame(rows, "grp string, value double")
-    got = {r.grp: r for r in mad_outliers(df, keys=("grp",)).collect()}
+    df = spark.createDataFrame(rows, "event_type string, value double")
+    got = {r.event_type: r for r in mad_outliers(df).collect()}
     assert got["const"].mad == 0.0
     assert got["const"].n_outliers is None
     assert got["const"].n == 8 and got["const"].median == 5.0

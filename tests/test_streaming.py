@@ -376,22 +376,22 @@ def test_rollup_maintenance_stream_epoch_log(spark, tmp_path):
     first.write.mode("append").parquet(src)
     rollup_maintenance_stream(
         spark, src, first.schema, wh, "roll",
-        checkpoint_dir=ckpt, distinct_col="event_id",
+        checkpoint_dir=ckpt,
     )
     second.write.mode("append").parquet(src)
     rollup_maintenance_stream(
         spark, src, first.schema, wh, "roll",
-        checkpoint_dir=ckpt, distinct_col="event_id",
+        checkpoint_dir=ckpt,
     )
 
-    want = _rows(rollup_metrics(rollup_increment(events, distinct_col="event_id")))
+    want = _rows(rollup_metrics(rollup_increment(events)))
     assert _rows(rollup_metrics(read_rollup_state(wh, "roll"))) == want
 
     # replayed epoch: re-apply the last batch's increment at its epoch id
     # (at-least-once delivery) -> rewrites the same partition, no change
     epochs = [r["_epoch"] for r in wh.read("roll").select("_epoch").distinct().collect()]
     last = max(epochs)
-    inc = rollup_increment(second, distinct_col="event_id")
+    inc = rollup_increment(second)
     wh.merge(
         inc.withColumn("_epoch", F.lit(last)),
         "roll",

@@ -187,8 +187,8 @@ def test_phash_dedup_pipeline(spark):
     )
 
     docs = spark.createDataFrame(
-        [(1, "same bytes"), (2, "same bytes"), (3, "different bytes")],
-        "doc_id long, text string",
+        [(1, "same bytes", "s"), (2, "same bytes", "s"), (3, "different bytes", "s")],
+        "doc_id long, text string, source string",
     )
     media = attach_binary_payload(docs)
     hashed = perceptual_hashes(media)

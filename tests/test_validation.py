@@ -52,11 +52,12 @@ def test_accepted_values_null_is_violation(spark):
 
 def test_value_range_bounds_and_guard(spark):
     df = spark.createDataFrame([(0.5,), (1.0,), (51.0,), (None,)], "q double")
-    r = _one(value_range(df, "t", "q", lo=1, hi=50))
+    r = _one(value_range(df, "t", "q", 1, 50))
     assert (r.failed, r.ok) == (3, 0)  # 0.5 low, 51 high, NULL unknown
-    r2 = _one(value_range(df, "t", "q", lo=0))
+    r2 = _one(value_range(df, "t", "q", 0, 100))
     assert (r2.failed, r2.ok) == (1, 0)  # only NULL violates
-    with pytest.raises(ValueError, match="lo/hi"):
+    # both bounds are required: a range check without one is a typo
+    with pytest.raises(TypeError):
         value_range(df, "t", "q")
 
 

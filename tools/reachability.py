@@ -76,9 +76,14 @@ _DRIVER = "deployment setting: the JDBC driver class"
 _JDBC_BOUNDS = "deployment setting: per-table JDBC partitioned-read bounds"
 
 # "<module path>:<qualname>(<parameter>)" -> why a defaulted parameter
-# stays although no product caller sets it to a value other than its
-# default (tests/test_repo_rules.py).
+# stays although product callers give it fewer than two distinct values
+# (tests/test_repo_rules.py).
 KEEP_PARAMS: dict[str, str] = {
+    "operators/incremental_ann.py:ann_query(table)": _TABLE,
+    "operators/incremental_ann.py:build_ann_index(table)": _TABLE,
+    "operators/incremental_ann.py:ingest_vectors(table)": _TABLE,
+    "operators/incremental_retrieval.py:bm25_query(table)": _TABLE,
+    "operators/incremental_trgm.py:trgm_query(table)": _TABLE,
     "operators/lm_state.py:ingest_lm_batch(uni_table)": _TABLE,
     "operators/lm_state.py:ingest_lm_batch(bi_table)": _TABLE,
     "operators/lm_state.py:lm_state(uni_table)": _TABLE,
@@ -101,6 +106,7 @@ KEEP_PARAMS: dict[str, str] = {
     "streaming/incremental.py:dedup_ingest_stream(corpus_table)": _TABLE,
     "streaming/incremental.py:dedup_ingest_stream(index_table)": _TABLE,
     "streaming/incremental.py:corpus_refresh_stream(table)": _TABLE,
+    "streaming/incremental.py:pca_ingest_stream(table)": _TABLE,
 }
 
 

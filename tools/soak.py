@@ -111,6 +111,7 @@ from stock_bars_data_engineering_project_spark.operators.quality import (  # noq
     bigram_surprisal,
     pmi_collocations,
     unigram_surprisal,
+    word_counts,
 )
 from stock_bars_data_engineering_project_spark.operators.graph import pagerank  # noqa: E402
 from stock_bars_data_engineering_project_spark.operators.trigram import (  # noqa: E402
@@ -279,7 +280,6 @@ def run(
         "asof_join": lambda: asof_join(
             events.select("event_id", "user_id", "ts", "value"),
             marks,
-            right_on="mark_ts",
         ),
         "tumbling_agg": lambda: tumbling_agg(events),
         "salted_topk": lambda: salted_topk(
@@ -310,7 +310,7 @@ def run(
         # count table — the join fan-in is token cardinality, which
         # grows sub-linearly (Heaps' law) while the scored side grows
         # linearly, so the curve should track the explode cost
-        "surprisal": lambda: unigram_surprisal(docs),
+        "surprisal": lambda: unigram_surprisal(docs, word_counts(docs)),
         # label propagation over the verified near-dup pair graph —
         # O(component diameter) rounds of join+agg on the (corpus-small)
         # edge set; the iterative rounds execute eagerly inside the
@@ -322,7 +322,7 @@ def run(
         # under min_count pruning while the scored side grows linearly,
         # so the curve should track the pair explode (the unigram
         # surprisal shape, one extra count shuffle)
-        "bigram_lm": lambda: bigram_surprisal(docs),
+        "bigram_lm": lambda: bigram_surprisal(docs, word_counts(docs)),
         # calendar gap-fill over per-user daily bars: replica day-shifts
         # grow spans (and with them the synthetic rows) linearly; the
         # per-key ffill window sorts calendar days, not ticks
@@ -417,7 +417,7 @@ def run(
         # pass; state size is O(groups), so the curve should track the
         # scan. HLL/KLL union cost is per-group-constant.
         "sketch_rollup": lambda: rollup_metrics(
-            rollup_increment(events, distinct_col="event_id")
+            rollup_increment(events)
         ),
         # per-day Theta member sets + day-over-day set intersection:
         # O(days) state rows however large the fact side grows (replica
@@ -500,11 +500,11 @@ def run(
         "ann_mrl": lambda: cosine_topk(
             emb.filter(F.col("vec_id") >= 25).select(
                 "vec_id",
-                truncate_dims("embedding", 16, renormalize=False).alias("embedding"),
+                truncate_dims("embedding", 16).alias("embedding"),
             ),
             emb.filter(F.col("vec_id") < 25).select(
                 "vec_id",
-                truncate_dims("embedding", 16, renormalize=False).alias("embedding"),
+                truncate_dims("embedding", 16).alias("embedding"),
             ),
             k=10,
         ),
@@ -565,15 +565,13 @@ def run(
         # median/MAD outlier fence: three partial-agg passes over the
         # fact table with broadcast group-stats joins — the curve
         # should track 3x the scan, no window over raw rows
-        "mad_outliers": lambda: mad_outliers(
-            events, keys=("event_type",)
-        ),
+        "mad_outliers": lambda: mad_outliers(events),
         # PMI collocations: bigram + unigram partial-agg wordcounts,
         # then joins on the min_count-PRUNED pair table — vocabulary
         # (and with it the join fan-in) grows sub-linearly under
         # replica token-suffixing, so the curve should track the pair
         # explode
-        "pmi": lambda: pmi_collocations(docs),
+        "pmi": lambda: pmi_collocations(docs, word_counts(docs)),
         # 3-round PageRank over the verified near-dup pair graph: the
         # LSH pair emission is the corpus-sized stage (same input as
         # dedup_clusters); each rank round is a join+agg on the
@@ -604,7 +602,7 @@ def run(
         # linearly at constant per-user history, so the user-hash
         # exchange and per-partition sorts grow linearly; the ordered
         # chain rides the same sort the labeling pays
-        "sessionize_stats": lambda: session_stats(events, gap_minutes=720),
+        "sessionize_stats": lambda: session_stats(events),
     }
     measured = {
         n: f for n, f in ops.items() if ops_filter is None or n in ops_filter
