@@ -1,7 +1,7 @@
 """Mid-plan materialization with a cluster-safe switch.
 
 Several operators materialize an intermediate frame to truncate
-lineage: iterative algorithms (dedup_clusters' label propagation,
+lineage: iterative algorithms (dedup_clusters' star rounds,
 bpe_train's merge rounds) re-join a frame every round and would
 otherwise replay the whole upstream DAG per iteration; snapshot
 read-modify-write paths (incremental band/gram-count state, the corpus
@@ -10,7 +10,7 @@ are about to supersede.
 
 ``localCheckpoint`` is the fast local default — but it stores blocks on
 executors WITHOUT lineage, so on a real cluster a lost executor kills
-the job mid-iteration (dedup_clusters' label propagation and every
+the job mid-iteration (dedup_clusters' star rounds and every
 other call site alike, which is why this lives in one module). The
 durable mode switches to reliable ``checkpoint()`` into the
 fault-tolerant checkpoint directory (HDFS/S3 on a cluster) so iteration

@@ -131,8 +131,8 @@ def train_bpe(df: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
     # leaves the logical plan intact, so each round would nest another
     # fold and analysis cost would grow quadratically with n_merges
     # (Catalyst stack overflow at real vocab sizes). Same per-iteration
-    # truncation as similarity.kmeans_refine / dedup's label
-    # propagation; same cluster-durability caveat and remedy as
+    # truncation as similarity.kmeans_refine / dedup_clusters' star
+    # rounds; same cluster-durability caveat and remedy as
     # dedup_clusters discusses.
     symtab = wc.select(
         "n", F.expr(_initial_symbols("token")).alias("syms")

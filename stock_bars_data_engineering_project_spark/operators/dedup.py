@@ -12,16 +12,19 @@ Scale shapes (the part that matters at 100 TB):
     once (a self-join would recompute it per side), and candidate pairs
     are then verified with exact Jaccard.
   * ngram_jaccard: inverted-index join on shingle, count-intersections
-    aggregate — the standard all-pairs-similarity shape (cf. Vernica et
-    al.), with an optional Chaudhuri-style prefix-filtered index (exact,
-    pinned equivalent) for postings-bound corpora; hot shingles are the
-    skew hazard -> drop ubiquitous shingles (document-frequency cap)
-    exactly as real pipelines do.
-  * simhash: 60-bit fingerprint per doc, pairs blocked on any matching
-    15-bit block (of 4) -> hamming <= k filter.
-  * embedding: brute-force pair cosine over a blocking-free cross join —
-    the correctness baseline; the LSH-bucketed variant in similarity.py
-    is the scale path.
+    aggregate with a lossless length prune ahead of it — the standard
+    all-pairs-similarity shape (cf. Vernica et al.); hot shingles are
+    the skew hazard.
+  * simhash: 60-bit fingerprint per doc, pairs blocked on a matching
+    (block, sub-block) key of a two-level pigeonhole split -> hamming
+    <= 3 filter, each pair emitted from one canonical bucket.
+  * embedding: hyperplane-LSH blocked pair cosine
+    (``embedding_dup_pairs_blocked``, the scale path), next to the
+    brute-force cross join that is its recall baseline.
+
+``dedup_clusters`` turns any of these pair sets into duplicate clusters
+(large-star/small-star connected components), and
+``canonical_selection`` picks each cluster's keeper and split.
 """
 
 from __future__ import annotations
@@ -490,9 +493,8 @@ def simhash_pairs(df: DataFrame) -> DataFrame:
     return simhash_pairs_from_fingerprints(fp)
 
 
-# Round budgets of the two connected-components loops: past them the
-# labels are not yet minimal, so the loops raise instead of answering.
-PROPAGATION_ROUNDS = 20
+# Round budget of the connected-components loop: past it the labels
+# are not yet minimal, so the loop raises instead of answering.
 STAR_ROUNDS = 30
 
 
@@ -503,97 +505,11 @@ def dedup_clusters(pairs: DataFrame) -> DataFrame:
     output alone can't answer "which copies do I drop" when dups chain
     (a~b, b~c but not a~c).
 
-    Iterative min-label propagation: each round every node takes the
-    min label in its closed neighborhood; converges in O(component
-    diameter) rounds — near-dup clusters are shallow (dups of a common
-    ancestor), so a handful of rounds suffices at any corpus size. Each
-    round is one shuffle join + one aggregate on the (tiny relative to
-    the corpus) pair graph, with a driver-side convergence check —
-    the standard Spark shape for iterative graph algorithms (cf.
-    GraphFrames' connected components / MapReduce min-label).
-
-    Input: pairs with columns doc_a, doc_b. Output: (doc_id, cluster_id)
-    for every doc that appears in some pair; singleton docs are their
-    own cluster by definition and need no row.
-
-    Each round materializes through ``materialize``, so the
-    ``spark.graft.durableCheckpoint`` session conf picks executor-local
-    blocks or a reliable ``checkpoint()`` for it as for every other
-    materializing operator.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .distinct()
-        # truncate lineage BEFORE iterating: `pairs` usually arrives as
-        # the un-materialized LSH pipeline (shingle -> 16-hash -> band ->
-        # verify), and every propagation round joins against edges — the
-        # loop checkpoints the labels, but without this the other join
-        # input re-runs the whole hashing DAG once per round
-    )
-    edges = materialize(edges)
-    labels = edges.select("src").distinct().select(
-        F.col("src").alias("node"), F.col("src").alias("label")
-    )
-    for _ in range(PROPAGATION_ROUNDS):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        # Materialize once (truncating lineage), then run the convergence
-        # check against the checkpointed data — checking before
-        # checkpointing would compute the round twice.
-        new_labels = materialize(new_labels)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Silent wrong answers are worse than failure: if a component's
-        # diameter exceeds the round budget the labels are not yet
-        # minimal and "keeper" semantics would split one cluster.
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {PROPAGATION_ROUNDS} "
-            "iterations (a longer duplicate chain exists); use "
-            "dedup_clusters_star"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
-def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    rounds — the scale-path twin of :func:`dedup_clusters` with the
-    SAME contract (every doc in some pair labeled with the smallest
-    reachable doc_id; equality with min-label propagation pinned in
-    tests/test_graph.py).
-
-    Why a twin: min-label propagation needs O(component diameter)
-    rounds with a full materialization each — fine for the shallow
-    star-shaped clusters near-dup graphs usually produce, quadratic
-    wall-clock on the long chains they sometimes produce (a template
-    that drifts one token per revision builds a path graph). The
-    alternating algorithm (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SOCC'14) contracts paths EXPONENTIALLY —
-    O(log n) rounds on any topology:
+    Alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SOCC'14), which
+    contract paths exponentially: O(log n) rounds on any topology, so
+    a template that drifts one token per revision (a path graph of
+    diameter n) costs O(log n) rounds, not O(n):
 
     - large-star: every node's strictly-larger neighbors re-wire to
       the minimum of its closed neighborhood (one groupBy-min + join
@@ -604,11 +520,20 @@ def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
 
     Both steps are one aggregate + one join over the (pair-graph-
     sized, corpus-small) edge set, shuffle-keyed on node id; the fixed
-    point is a forest of stars whose centers are the component minima,
-    read off as (doc_id, cluster_id). Per-round materialization is
-    shared with the propagation twin.
+    point is a forest of stars whose centers are the component minima.
+
+    Input: pairs with columns doc_a, doc_b. Output: (doc_id, cluster_id)
+    for every doc that appears in some non-self pair; singleton docs
+    are their own cluster by definition and need no row.
+
+    Each round materializes through ``materialize``, so the
+    ``spark.graft.durableCheckpoint`` session conf picks executor-local
+    blocks or a reliable ``checkpoint()`` for it as for every other
+    materializing operator.
     """
-    # (larger, smaller)-oriented edge list, one row per undirected edge
+    # (larger, smaller)-oriented edge list, one row per undirected edge;
+    # materialized BEFORE iterating: `pairs` usually arrives as the
+    # un-materialized LSH pipeline, which every round would re-run
     edges = (
         pairs.select(
             F.greatest("doc_a", "doc_b").alias("u"),
@@ -666,8 +591,11 @@ def dedup_clusters_star(pairs: DataFrame) -> DataFrame:
         if changed == 0:
             break
     else:
+        # Silent wrong answers are worse than failure: unconverged
+        # labels are not yet minimal and "keeper" semantics would
+        # split one cluster.
         raise RuntimeError(
-            f"dedup_clusters_star did not converge in {STAR_ROUNDS} "
+            f"dedup_clusters did not converge in {STAR_ROUNDS} "
             "alternating rounds"
         )
     # fixed point: a star forest of (child, root) edges, root = the

@@ -223,24 +223,20 @@ def mad_outliers(df: DataFrame) -> DataFrame:
         ).alias("mad"),
     )
     with_mad = _bjoin(df, _renamed(mad))
-    counted = with_mad.groupBy(*ks, "median", "mad").agg(
+    return with_mad.groupBy(*ks, "median", "mad").agg(
         F.count(vc).alias("n"),
-        F.sum(
-            F.when(
-                F.abs(vc - F.col("median"))
-                > F.lit(3.0) * 1.4826 * F.col("mad"),
-                1,
-            ).otherwise(0)
-        ).alias("n_outliers"),
+        mad_outlier_count().alias("n_outliers"),
     )
-    # MAD=0 degenerate guard (docstring): a zero-width fence flags
-    # everything off-median — report NULL, not a pathological count
-    return counted.select(
-        *ks,
-        "median",
-        "mad",
-        "n",
-        F.when(F.col("mad") == 0, F.lit(None).cast("long"))
-        .otherwise(F.col("n_outliers"))
-        .alias("n_outliers"),
+
+
+def mad_outlier_count() -> Column:
+    """Aggregate over rows carrying ``value``, ``median`` and ``mad``:
+    the number whose ``|value - median| > 3 * 1.4826 * mad`` (the
+    :func:`mad_outliers` fence), NULL when the group's MAD is 0 (a
+    zero-width fence flags everything off-median — the degenerate
+    guard of :func:`mad_outliers`' docstring)."""
+    fence = F.lit(3.0) * 1.4826 * F.col("mad")
+    off_fence = F.abs(F.col("value") - F.col("median")) > fence
+    return F.when(F.max("mad") == 0, F.lit(None).cast("long")).otherwise(
+        F.sum(F.when(off_fence, 1).otherwise(0))
     )

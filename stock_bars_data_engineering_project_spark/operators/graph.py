@@ -1,7 +1,7 @@
 """Iterative graph algorithms over pair/edge frames.
 
-The near-dup pipeline already runs one graph algorithm — min-label
-propagation for connected components (operators/dedup.dedup_clusters).
+The near-dup pipeline already runs one graph algorithm — large-star/
+small-star connected components (operators/dedup.dedup_clusters).
 This module adds PageRank over the same verified-pair graph: within a
 duplicate cluster, the highest-PageRank member is the most-connected
 copy (the one most other near-dups point at), a centrality signal
@@ -24,8 +24,7 @@ edge frame (pair-graph-sized — a small fraction of the corpus, the
 dedup_clusters bound) with the node count as a broadcast 1-row
 scalar; rounds materialize via the shared lineage-truncation switch
 (durable checkpoints on a real cluster, by session conf). Fixed ``n_iter`` keeps the
-oracle expressible as unrolled SQL rounds (the _lloyd_iter_sql / BPE
-discipline).
+oracle expressible as unrolled SQL rounds (the BPE discipline).
 """
 
 from __future__ import annotations

@@ -8,7 +8,8 @@ map-only assignment over the whole corpus for every arriving batch,
 and you certainly cannot re-train. The warehouse keeps two tables:
 
 - ``<table>__centroids`` — (cid, cv), the coarse quantizer, a few
-  hundred rows, trained ONCE (stride seed + Lloyd polish);
+  hundred rows, seeded ONCE per build (every ``CENTROID_STRIDE``-th
+  vector);
 - ``<table>`` — (vec_id, embedding, cid), the inverted lists,
   hive-partitioned by cid.
 
@@ -24,7 +25,7 @@ disk, not just 3/K of the rows.
 Drift contract: centroids are frozen between rebuilds, so heavy
 ingestion skews list occupancy and degrades recall gradually (the
 standard IVF operational trade); a rebuild (:func:`build_ann_index`
-over the stored vectors) retrains them.
+over the stored vectors) re-seeds them.
 
 Deletes and the layout-preserving tombstone fold are the shared index
 lifecycle (``operators/index_maint.py``, layout
@@ -38,10 +39,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import round_half_up
-from ..functions.vectors import cosine
+from ..functions.vectors import as_double, cosine
 from ..sinks.warehouse import ParquetWarehouse
 from .index_maint import not_deleted
-from .similarity import ivf_assign, kmeans_refine, l2sq
+from .similarity import ivf_assign, l2sq
 from .skew import salted_topk
 
 
@@ -49,10 +50,9 @@ def _centroids_table(table: str) -> str:
     return f"{table}__centroids"
 
 
-# quantizer training of build_ann_index: every CENTROID_STRIDE-th
-# vec_id seeds a centroid, then REFINE_ITERS Lloyd passes
+# the quantizer of build_ann_index: every CENTROID_STRIDE-th vec_id
+# is a centroid
 CENTROID_STRIDE = 100
-REFINE_ITERS = 0
 
 
 def build_ann_index(
@@ -60,14 +60,13 @@ def build_ann_index(
     corpus: DataFrame,
     table: str = "ann_index",
 ) -> None:
-    """Train the quantizer (deterministic stride seed + ``REFINE_ITERS``
-    Lloyd passes) and materialize the inverted lists, partitioned by
-    cid. One assignment pass over the corpus — the only time the full
-    corpus is ever assigned."""
-    seed = corpus.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
+    """Seed the quantizer (deterministic stride sample of the corpus,
+    stored as doubles) and materialize the inverted lists, partitioned
+    by cid. One assignment pass over the corpus — the only time the
+    full corpus is ever assigned."""
+    cent = corpus.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
+        F.col("vec_id").alias("cid"), as_double("embedding").alias("cv")
     )
-    cent = kmeans_refine(corpus, seed, REFINE_ITERS)
     # co-locate each inverted list before the hive-partitioned write:
     # without this, every one of the assignment's N shuffle partitions
     # writes its own sliver into every cid dir — N x K tiny files where

@@ -123,13 +123,15 @@ def ingest_batch(
     new_docs: DataFrame,
     corpus_table: str = "corpus_docs",
     index_table: str = "corpus_bands",
-    return_survivors: bool = False,
-) -> dict[str, int] | tuple[dict[str, int], DataFrame]:
+) -> tuple[dict[str, int], DataFrame]:
     """Dedup ``new_docs`` against themselves AND the stored corpus, then
-    commit survivors + their band keys. Returns per-stage counts; with
-    ``return_survivors`` also the batch's newly retained docs (the
-    delta a composed refresh pipeline feeds its downstream stages —
-    batch-sized, already materialized, so the caller re-runs nothing)."""
+    commit survivors + their band keys. Returns the per-stage counts and
+    the batch's newly retained docs (the delta a composed refresh
+    pipeline feeds its downstream stages — batch-sized, already
+    materialized, so the caller re-runs nothing).
+
+    ``corpus_table`` is written only here, always through ``_sharded``,
+    so a stored corpus carries the ``_shard`` and ``_h`` columns."""
     counts = {"batch_raw": new_docs.count()}
 
     batch = exact_dedup(new_docs)
@@ -142,15 +144,9 @@ def ingest_batch(
     if raw_corpus is not None:
         # exact cross-batch: same content hash as any retained doc. The
         # hash column was persisted at commit time, so this reads one
-        # skinny column — only the BATCH pays an md5 (older corpora
-        # without the column fall back to hashing in-plan)
-        stored_h = (
-            raw_corpus.select("_h")
-            if "_h" in raw_corpus.columns
-            else raw_corpus.select(F.md5("text").alias("_h"))
-        )
+        # skinny column — only the BATCH pays an md5
         batch = batch.join(
-            stored_h.distinct(),
+            raw_corpus.select("_h").distinct(),
             F.md5(batch["text"]) == F.col("_h"),
             "left_anti",
         )
@@ -170,7 +166,7 @@ def ingest_batch(
             spark, wh, f"{index_table}__sync",
             wh.latest_version(corpus_table),
         )
-        return (counts, survivors) if return_survivors else counts
+        return counts, survivors
     # Self-heal: the corpus and index commit as two warehouse
     # transactions; a crash between them leaves corpus docs unindexed
     # (invisible to every future near-dup check) — or, after a
@@ -247,18 +243,12 @@ def ingest_batch(
     counts["survivors"] = survivors.count()
 
     if counts["survivors"]:
-        if "_shard" in raw_corpus.columns:
-            wh.merge(
-                _sharded(survivors),
-                corpus_table,
-                keys=("_shard", "doc_id"),
-                partition_by=("_shard",),
-            )
-        else:
-            # older corpus without the shard column: keep the
-            # legacy unsharded merge — correctness identical, commit
-            # O(table) as it was before the shard landed
-            wh.merge(survivors, corpus_table, keys=("doc_id",))
+        wh.merge(
+            _sharded(survivors),
+            corpus_table,
+            keys=("_shard", "doc_id"),
+            partition_by=("_shard",),
+        )
         # reuse the already-computed band keys (checkpointed above) —
         # re-running band_index would pay the 16-seed hashing twice
         survivor_bands = new_bands.join(
@@ -270,7 +260,7 @@ def ingest_batch(
         _mark_synced(
             spark, wh, sync_table, wh.latest_version(corpus_table)
         )
-    return (counts, survivors) if return_survivors else counts
+    return counts, survivors
 
 
 def _mark_synced(

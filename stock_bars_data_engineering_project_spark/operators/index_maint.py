@@ -110,29 +110,22 @@ def _reject_nulls(df: DataFrame, col: str, message: str) -> DataFrame:
 
 
 def delete_ids(
-    wh: ParquetWarehouse, ids, table: str, layout: Layout
+    wh: ParquetWarehouse, ids: DataFrame, table: str, layout: Layout
 ) -> None:
-    """Tombstone ``ids`` (a 1-column DataFrame or an iterable of ints)
-    in the ``table`` index. Raises FileNotFoundError when the index was
-    never built, and on evaluation of a NULL id."""
+    """Tombstone ``ids`` (the first column of a DataFrame, whatever its
+    name) in the ``table`` index. Raises FileNotFoundError when the
+    index was never built, and on evaluation of a NULL id."""
     for t in layout.row_tables(table):
         if not wh.exists(t):
             raise FileNotFoundError(
                 f"no such table: {t} (build index {table!r} first)"
             )
-    if not isinstance(ids, DataFrame):
-        ids = local_frame(
-            wh.spark, [(int(i),) for i in ids], f"{layout.id_col} long"
-        )
     ids = _reject_nulls(
         ids.select(F.col(ids.columns[0]).alias(layout.id_col)),
         layout.id_col,
         f"{table} index: NULL {layout.id_col} tombstone",
     )
-    if wh.exists(deleted_table(table)):
-        wh.append(ids, deleted_table(table))
-    else:
-        wh.overwrite(ids, deleted_table(table))
+    wh.append(ids, deleted_table(table))
 
 
 def not_deleted(

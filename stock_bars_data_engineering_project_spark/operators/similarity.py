@@ -202,10 +202,8 @@ def ivf_assign(
 def kmeans_refine(
     corpus: DataFrame,
     centroids: DataFrame,
-    n_iters: int = 2,
-    exact_mean: bool = False,
-    stats: dict | None = None,
-) -> DataFrame:
+    n_iters: int,
+) -> tuple[DataFrame, list[float]]:
     """Lloyd's k-means refinement of an initial (cid, cv) centroid table
     — the iterative-algorithm shape expressed as pure DataFrame ops, no
     driver-side math: per iteration one map-only assignment
@@ -219,67 +217,33 @@ def kmeans_refine(
     pinned by test); intended to polish the deterministic stride seed
     that ivf_topk starts from.
 
-    ``exact_mean=True`` computes each centroid mean as an id-ordered
-    sequential fold instead of ``F.avg`` — identical values up to float
-    associativity, but with a DETERMINISTIC accumulation order that a
-    SQL oracle can replay bit-for-bit (``list(x ORDER BY id)`` prefix
-    fold). The default partial-aggregated ``avg`` is the scale path (it
-    map-side-combines; the ordered fold collects per-(cid,dim) lists).
-
-    ``stats`` (optional dict) receives ``inertia_in``: a list with the
-    inertia of the centroids ENTERING each iteration, measured on the
-    same pass — the winning d2 rides the assignment (``keep_dist``) and
-    its sum rides the mean shuffle as one extra partial-agg column, so
-    the training monitor costs zero extra corpus passes (the standalone
+    Returns the refined centroids and the inertia trail: the inertia of
+    the centroids ENTERING each iteration, measured on the same pass —
+    the winning d2 rides the assignment (``keep_dist``) and its sum
+    rides the mean shuffle as one extra partial-agg column, so the
+    training monitor costs zero extra corpus passes (the standalone
     ``kmeans_inertia`` probe pays a full assignment per call). The
-    (cid, dim)-grained mean table is materialized when stats are
-    requested — it is K x dim rows, so this is a metadata-sized cost —
-    and each row repeats its vector's d2 once per dimension, hence the
-    sum(sd2) / dim readback (within float-rescaling noise of the direct
-    sum; callers compare with relative tolerance)."""
+    (cid, dim)-grained mean table is materialized for the readback —
+    it is K x dim rows, a metadata-sized cost — and each row repeats
+    its vector's d2 once per dimension, hence the sum(sd2) / dim
+    readback (within float-rescaling noise of the direct sum; callers
+    compare with relative tolerance)."""
     cents = centroids.select("cid", as_double("cv").alias("cv"))
-    if stats is not None:
-        stats["inertia_in"] = []
+    inertia_in: list[float] = []
     for _ in range(n_iters):
-        assigned = ivf_assign(
-            corpus, cents, keep_dist=stats is not None
-        )
+        assigned = ivf_assign(corpus, cents, keep_dist=True)
         comp = assigned.select(
-            "vec_id",
-            "cid",
-            *([F.col("d2")] if stats is not None else []),
-            F.posexplode(as_double("embedding")).alias("pos", "x"),
+            "cid", "d2", F.posexplode(as_double("embedding")).alias("pos", "x")
         )
-        extra = [F.sum("d2").alias("sd2")] if stats is not None else []
-        if exact_mean:
-            mean = (
-                comp.groupBy("cid", "pos")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("vec_id"), F.col("x")))
-                    ).alias("vx"),
-                    *extra,
-                )
-                .select(
-                    "cid",
-                    "pos",
-                    (
-                        F.aggregate(
-                            F.col("vx"), F.lit(0.0), lambda a, s: a + s["x"]
-                        )
-                        / F.size("vx")
-                    ).alias("m"),
-                    *(["sd2"] if stats is not None else []),
-                )
+        mean = materialize(
+            comp.groupBy("cid", "pos").agg(
+                F.avg("x").alias("m"), F.sum("d2").alias("sd2")
             )
-        else:
-            mean = comp.groupBy("cid", "pos").agg(F.avg("x").alias("m"), *extra)
-        if stats is not None:
-            mean = materialize(mean)
-            tot = mean.agg(
-                F.sum("sd2").alias("s"), (F.max("pos") + 1).alias("dim")
-            ).first()
-            stats["inertia_in"].append(float(tot["s"]) / int(tot["dim"]))
+        )
+        tot = mean.agg(
+            F.sum("sd2").alias("s"), (F.max("pos") + 1).alias("dim")
+        ).first()
+        inertia_in.append(float(tot["s"]) / int(tot["dim"]))
         new = (
             mean.groupBy("cid")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
@@ -291,7 +255,7 @@ def kmeans_refine(
             .select("cid", F.coalesce(F.col("cv"), F.col("old")).alias("cv"))
             .transform(materialize)
         )
-    return cents
+    return cents, inertia_in
 
 
 def kmeans_inertia(corpus: DataFrame, centroids: DataFrame) -> float:

@@ -416,7 +416,6 @@ def refresh_corpus(
         batch,
         corpus_table=corpus_table,
         index_table=index_table,
-        return_survivors=True,
     )
     counts = dict(_counts)
 

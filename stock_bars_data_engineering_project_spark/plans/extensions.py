@@ -350,8 +350,9 @@ FROM ranked r JOIN pr_3 p ON r.doc_id = p.node
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters + the cluster-level dedup endgame: MinHash-LSH
-    verified pairs -> connected components by iterative min-label
-    propagation, then ``canonical_selection`` picks each cluster's
+    verified pairs -> connected components by large-star/small-star
+    rounds (``dedup_clusters``: O(log n) rounds on any topology), then
+    ``canonical_selection`` picks each cluster's
     KEEPER (best quality = longest n_chars, tie -> lowest doc_id) and
     assigns a leakage-safe train/val/test split hashed on cluster_id —
     every member of a cluster lands in the same split, so near-dup
@@ -365,25 +366,17 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank over the SAME verified pair graph — within-cluster
     connectivity centrality next to the keeper's quality argmax — with
     every round's rank 9dp-rounded before feeding the next, and the
-    oracle replaying the rounds as unrolled SQL (the BPE/k-means
-    discipline for iterative algorithms).
-
-    The components come from ``dedup_clusters_star`` — the
-    large-star/small-star alternating algorithm (O(log n) rounds on
-    any topology, vs min-label propagation's O(diameter)) — so the
-    scale-path implementation is the one the oracle's transitive
-    closure value-gates; star ≡ propagation equality and the
-    round-count win on a 200-node path graph are pinned in
-    tests/test_graph.py."""
+    oracle replaying the rounds as unrolled SQL (the BPE
+    discipline for iterative algorithms)."""
     from ..materialize import materialize
-    from ..operators.dedup import dedup_clusters_star
+    from ..operators.dedup import dedup_clusters
     from ..operators.graph import pagerank
 
     docs = load_table(spark, sf_dir, "documents")
     # the pair graph feeds BOTH the components iteration and PageRank —
     # materialized so the LSH pipeline runs once
     pairs = materialize(minhash_lsh_pairs(docs))
-    clusters = dedup_clusters_star(pairs)
+    clusters = dedup_clusters(pairs)
     base = canonical_selection(clusters, docs).withColumn(
         "keep", F.col("keep").cast("int")
     )
@@ -823,8 +816,8 @@ def q_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_rules_sql(n_merges: int, min_cnt: int) -> str:
     """Full BPE-training replay (operators/bpe.py train_bpe, sequential
-    batch_size=1 mode) as ``n_merges`` unrolled DuckDB rounds — the same
-    generate-per-iteration discipline as _lloyd_iter_sql. Each round:
+    batch_size=1 mode) as ``n_merges`` unrolled DuckDB rounds, one
+    generated CTE block per iteration. Each round:
     adjacent-pair counts over the current symbol table, argmax with the
     (cnt DESC, a, b) lexicographic tie-break, then the leftmost-first
     non-overlapping merge application as a carry fold. DuckDB 1.0's
@@ -935,11 +928,47 @@ def _lm_state_warehouse(spark, sf_dir: str, docs):
     )
 
 
+def _tfidf_top3(docs: DataFrame) -> DataFrame:
+    """The ``tfidf`` arm of ``tfidf_vocab_suite``: per-document top-3
+    terms of the corpus word model (``corpus_tokens``: lower-cased,
+    empty tokens dropped) by smoothed TF-IDF."""
+    toks = docs.select("doc_id", F.explode(corpus_tokens()).alias("token"))
+    tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
+    dfreq = toks.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
+    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
+    scored = (
+        tf.join(dfreq, "token")
+        .crossJoin(F.broadcast(n_docs))
+        .select(
+            "doc_id",
+            "token",
+            round_half_up(
+                F.col("tf") * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)), 6
+            ).alias("tfidf"),
+        )
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "token")
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= 3)
+        .select(
+            F.lit("tfidf").alias("tag"),
+            "doc_id",
+            F.col("token").alias("term"),
+            F.col("tfidf").alias("score"),
+            "rank",
+        )
+    )
+
+
 @register(
     "tfidf_vocab_suite",
     oracle=f"""
 WITH toks AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
+    SELECT doc_id,
+           unnest(list_filter(string_split(lower(text), ' '), t -> t != ''))
+               AS token
+    FROM documents
 ), tf AS (
     SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
 ), dfreq AS (
@@ -1136,8 +1165,9 @@ WHERE rank <= 30
 )
 def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term-statistics suite in one result: (a) per-document top-3 terms
-    by smoothed TF-IDF — term frequency, document frequency, and corpus
-    size as three partial-aggregable passes joined on the token, ranked
+    by smoothed TF-IDF (``_tfidf_top3``) — term frequency, document
+    frequency, and corpus size as three partial-aggregable passes
+    joined on the token, ranked
     per doc with a WindowGroupLimit (the df table is
     token-cardinality-sized, broadcastable at any corpus scale); (b) the
     corpus vocabulary top-100 by count (canonical explode + partial-agg
@@ -1155,33 +1185,7 @@ def q_tfidf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean — score AND feature count (as the rank column) both gated.
     Tagged UNION of the four arms."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = toks.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "token")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "token",
-            round_half_up(
-                F.col("tf") * F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)), 6
-            ).alias("tfidf"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "token")
-    tfidf_arm = (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 3)
-        .select(
-            F.lit("tfidf").alias("tag"),
-            "doc_id",
-            F.col("token").alias("term"),
-            F.col("tfidf").alias("score"),
-            "rank",
-        )
-    )
+    tfidf_arm = _tfidf_top3(docs)
     from ..materialize import materialize
     from ..operators.bpe import bpe_segment, train_bpe
     from ..operators.heavy import merged_heavy_hitters, mg_summaries
@@ -2707,11 +2711,9 @@ def _ann_trained_laws(spark, sf_dir: str, emb, queries, brute) -> list[float]:
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
         )
         # i0/i1 ride the two training iterations' own shuffles
-        # (kmeans_refine stats) — only the POST-training inertia needs a
-        # standalone assignment probe
-        s_train: dict = {}
-        c2 = kmeans_refine(emb, seed, n_iters=2, stats=s_train)
-        i0, i1 = s_train["inertia_in"]
+        # (kmeans_refine's inertia trail) — only the POST-training
+        # inertia needs a standalone assignment probe
+        c2, (i0, i1) = kmeans_refine(emb, seed, 2)
         i2 = kmeans_inertia(emb, c2)
         trained = materialize(ivf_topk(emb, queries, centroids=c2))
 
@@ -2952,78 +2954,6 @@ def _dot_fold(a: str, b: str) -> str:
         f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
         f"[{a}[i] * {b}[i] for i in range(1, len({a})+1)]), (x,y) -> x + y)"
     )
-
-
-def _lloyd_iter_sql(prev: str, out: str) -> str:
-    """One deterministic Lloyd iteration as DuckDB CTEs: argmin
-    assignment (ties to lowest cid), id-ordered prefix-fold mean per
-    (cid, dim), empty clusters keep the previous centroid — the exact
-    replay of operators.similarity.kmeans_refine(exact_mean=True)."""
-    return f"""
-assign_{out} AS (
-    SELECT vec_id, embedding, cid FROM (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_l2_fold('e.embedding', 'c.cv')}, c.cid) AS rn
-        FROM embeddings e CROSS JOIN {prev} c
-    ) WHERE rn = 1
-),
-comp_{out} AS (
-    SELECT vec_id, cid,
-           unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS x,
-           unnest(range(1, len(embedding) + 1)) AS pos
-    FROM assign_{out}
-),
-mean_{out} AS (
-    SELECT cid, pos,
-           list_reduce(list_prepend(CAST(0 AS DOUBLE), list(x ORDER BY vec_id)),
-                       (a, b) -> a + b) / COUNT(*) AS m
-    FROM comp_{out} GROUP BY cid, pos
-),
-newc_{out} AS (
-    SELECT cid, list(m ORDER BY pos) AS cv FROM mean_{out} GROUP BY cid
-),
-{out} AS (
-    SELECT p.cid, COALESCE(n.cv, p.cv) AS cv
-    FROM {prev} p LEFT JOIN newc_{out} n ON n.cid = p.cid
-)"""
-
-
-_IVF_TRAINED_SQL = f"""
-WITH seed AS (
-    SELECT vec_id AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-    FROM embeddings WHERE vec_id % 125 = 0
-),
-{_lloyd_iter_sql('seed', 'cent_1')},
-{_lloyd_iter_sql('cent_1', 'cent_2')},
-final_assign AS (
-    SELECT vec_id, embedding, cid FROM (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY {_l2_fold('e.embedding', 'c.cv')}, c.cid) AS rn
-        FROM embeddings e CROSS JOIN cent_2 c
-    ) WHERE rn = 1
-),
-probes AS (
-    SELECT query_id, q_vec, cid FROM (
-        SELECT q.vec_id AS query_id, q.embedding AS q_vec, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                   ORDER BY {_l2_fold('q.embedding', 'c.cv')}, c.cid) AS rn
-        FROM embeddings q CROSS JOIN cent_2 c WHERE q.vec_id < 5
-    ) WHERE rn <= 4
-),
-cand AS (
-    SELECT p.query_id, p.q_vec AS va, a.vec_id, a.embedding AS vb
-    FROM final_assign a JOIN probes p USING (cid)
-    WHERE a.vec_id != p.query_id
-)
-SELECT query_id, vec_id, cos, rank FROM (
-    SELECT query_id, vec_id, cos,
-           CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cos DESC, vec_id) AS INT) AS rank
-    FROM (SELECT query_id, vec_id, {sql_round(_COS_DOUBLE, 6)} AS cos FROM cand)
-) WHERE rank <= 10
-"""
 
 
 # Product quantization replay: stride-seeded codebooks (m=4 subspaces of
@@ -3309,13 +3239,12 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       half the unbiased-random expectation nprobe/n_lists (the same
       probed-fraction argument as the lsh arm's pytest floor — random
       near-orthogonal embeddings are ANN's adversarial case), and
-      exactly k dense-ranked rows per query. The bit-exact
-      ``exact_mean`` training replay (id-ordered fold means vs the full
-      two-iteration SQL Lloyd) stays pinned in
-      tests/test_similarity.py::test_kmeans_exact_mean_matches_sql_replay,
-      so the training loop's arithmetic remains cross-engine-gated —
-      just off the driver's hot path, which now checks the plan users
-      actually run. Laws are computed with bounded driver scalars
+      exactly k dense-ranked rows per query. The training arithmetic
+      itself (assignments, empty-cluster carry, means within 1e-9
+      relative, trained top-10 ids) is pinned against a numpy
+      two-iteration Lloyd replay in
+      tests/test_similarity.py::test_kmeans_matches_numpy_lloyd_replay.
+      Laws are computed with bounded driver scalars
       (3 inertia floats + 2 counts — the pca_project pattern) and
       memoized per process per (sf_dir, mtime): training is a
       build-once artifact, the flags carry no output rows, and every

@@ -642,7 +642,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run as independent chains (memo.run_chains). ``out_stats`` is
     # shared with arm (i) below.
     from ..memo import run_chains
-    from ..operators.drift import mad_outliers
+    from ..operators.drift import mad_outlier_count, mad_outliers
 
     out_stats = mad_outliers(ev)
     fence = out_stats.select(
@@ -662,20 +662,7 @@ def stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         day_idx_o.alias("day_idx"),
     ).agg(
         F.count(F.col("value")).cast("double").alias("n"),
-        # MAD=0 degenerate guard — matches mad_outliers' NULL contract
-        F.when(
-            F.max(F.col("mad")) == 0, F.lit(None).cast("double")
-        )
-        .otherwise(
-            F.sum(
-                F.when(
-                    F.abs(F.col("value") - F.col("median"))
-                    > F.lit(3.0) * 1.4826 * F.col("mad"),
-                    1,
-                ).otherwise(0)
-            ).cast("double")
-        )
-        .alias("n_outliers"),
+        mad_outlier_count().cast("double").alias("n_outliers"),
     )
     run_chains(
         psi=lambda: run_stream_to_memory(cur, "stats_psi_stream", "complete"),

@@ -233,9 +233,10 @@ def test_dedup_clusters_raises_when_unconverged(spark, monkeypatch):
     from stock_bars_data_engineering_project_spark.operators import dedup
     from stock_bars_data_engineering_project_spark.operators.dedup import dedup_clusters
 
-    # a 7-node chain has diameter 6 > a 2-round budget: silent wrong
-    # labels are forbidden — the operator must fail loudly instead
-    monkeypatch.setattr(dedup, "PROPAGATION_ROUNDS", 2)
+    # a 7-node chain is not a star after one alternating round, so a
+    # 1-round budget ends unconverged: silent wrong labels are
+    # forbidden — the operator must fail loudly instead
+    monkeypatch.setattr(dedup, "STAR_ROUNDS", 1)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 7)], "doc_a long, doc_b long"
     )

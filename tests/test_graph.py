@@ -1,6 +1,7 @@
-"""PageRank over pair graphs: pure-Python replay with the same
-per-round rounding, symmetry/self-loop handling, convergence sanity,
-guards."""
+"""Graph algorithms over pair graphs: PageRank against a pure-Python
+replay with the same per-round rounding (symmetry/self-loop handling,
+convergence sanity, guards), and connected components against a
+union-find."""
 
 from __future__ import annotations
 
@@ -63,13 +64,31 @@ def _labels(df):
     return sorted((r.doc_id, r.cluster_id) for r in df.collect())
 
 
-def test_star_cc_equals_propagation_on_corpus_pairs(spark):
-    """Large-star/small-star connected components (round 9) must label
-    the real near-dup pair graph identically to min-label
-    propagation — the same-driver-row gate's pytest twin."""
+def _union_find_labels(pairs) -> list[tuple[int, int]]:
+    """(node, component minimum) for every node of a non-self pair."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a != b:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return sorted((n, find(n)) for n in parent)
+
+
+def test_cc_matches_union_find_on_corpus_pairs(spark):
+    """Large-star/small-star connected components label the real
+    near-dup pair graph (MinHash-LSH pairs of the smallest corpus) with
+    each component's minimum, as a Python union-find does."""
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         dedup_clusters,
-        dedup_clusters_star,
         minhash_lsh_pairs,
     )
 
@@ -78,37 +97,27 @@ def test_star_cc_equals_propagation_on_corpus_pairs(spark):
         .select("doc_id", "text")
     )
     pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
-    assert pairs.count() > 0
-    assert _labels(dedup_clusters_star(pairs)) == _labels(dedup_clusters(pairs))
+    rows = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    assert rows
+    assert _labels(dedup_clusters(pairs)) == _union_find_labels(rows)
 
 
-def test_star_cc_round_count_win_on_path_graph(spark, monkeypatch):
-    """The algorithmic point of the twin: a 200-node path graph (the
-    drift-chain worst case) converges in O(log n) alternating rounds
-    where propagation needs O(diameter) rounds — and both agree that
-    the whole path is one cluster rooted at its minimum."""
+def test_star_cc_log_rounds_on_path_graph(spark, monkeypatch):
+    """A 200-node path graph (the drift-chain worst case, diameter 200)
+    converges within a 10-round budget: the alternating rounds contract
+    paths exponentially, and the whole path is one cluster rooted at
+    its minimum."""
     from stock_bars_data_engineering_project_spark.operators import dedup
     from stock_bars_data_engineering_project_spark.operators.dedup import (
         dedup_clusters,
-        dedup_clusters_star,
     )
 
     n = 200
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
-    # exponential contraction: converges within a 10-round budget
     monkeypatch.setattr(dedup, "STAR_ROUNDS", 10)
-    got = _labels(dedup_clusters_star(path))
-    assert got == [(i, 0) for i in range(n + 1)]
-    # propagation needs ~diameter rounds: it must refuse at a small
-    # budget (silent wrong answers are worse than failure) ...
-    monkeypatch.setattr(dedup, "PROPAGATION_ROUNDS", 10)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(path)
-    # ... and agree when given enough rounds
-    monkeypatch.setattr(dedup, "PROPAGATION_ROUNDS", 2 * n + 2)
-    assert _labels(dedup_clusters(path)) == got
+    assert _labels(dedup_clusters(path)) == [(i, 0) for i in range(n + 1)]
 
 
 def test_star_cc_shapes(spark):
@@ -116,7 +125,7 @@ def test_star_cc_shapes(spark):
     input pairs: labels are per-component minima, each node exactly
     once."""
     from stock_bars_data_engineering_project_spark.operators.dedup import (
-        dedup_clusters_star,
+        dedup_clusters,
     )
 
     pairs = spark.createDataFrame(
@@ -125,6 +134,6 @@ def test_star_cc_shapes(spark):
          (11, 10), (12, 11), (13, 12)],        # chain
         "doc_a long, doc_b long",
     )
-    got = _labels(dedup_clusters_star(pairs))
+    got = _labels(dedup_clusters(pairs))
     assert got == [(3, 3), (5, 3), (9, 3), (10, 10), (11, 10), (12, 10),
                    (13, 10), (20, 20), (21, 20)]

@@ -33,10 +33,9 @@ def emb(spark):
 
 @pytest.fixture(autouse=True)
 def _small_quantizer(monkeypatch):
-    # more, refined centroids than the registered row's, so the small
-    # corpus spreads over many lists
+    # more centroids than the registered row's, so the small corpus
+    # spreads over many lists
     monkeypatch.setattr(incremental_ann, "CENTROID_STRIDE", 40)
-    monkeypatch.setattr(incremental_ann, "REFINE_ITERS", 1)
 
 
 def _rows(df):
@@ -47,8 +46,8 @@ def test_build_ingest_matches_oneshot(spark, emb, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
-    # centroids must be trained on the SAME data for equality, so build
-    # trains on the full corpus's first half and the comparison ivf_topk
+    # centroids must come from the SAME data for equality, so build
+    # seeds them from the corpus's first half and the comparison ivf_topk
     # reuses the stored centroids — assignment is deterministic, so
     # one-shot vs build+ingest differ only in storage layout
     build_ann_index(wh, first, "idx")
@@ -87,8 +86,10 @@ def test_tombstone_delete_and_apply(spark, emb, tmp_path):
     dead_ids = [r.vec_id for r in
                 emb.filter(F.col("vec_id") % 10 == 3).limit(30).collect()]
     survivors = emb.filter(~F.col("vec_id").isin(dead_ids))
-    delete_ids(wh, dead_ids, "idx", IVF)
-    delete_ids(wh, dead_ids[:5], "idx", IVF)  # idempotent re-delete
+    dead = emb.filter(F.col("vec_id").isin(dead_ids)).select("vec_id")
+    delete_ids(wh, dead, "idx", IVF)
+    # idempotent re-delete
+    delete_ids(wh, dead.filter(F.col("vec_id").isin(dead_ids[:5])), "idx", IVF)
 
     queries = emb.filter(F.col("vec_id") < 5)
     cent = wh.read("idx__centroids")

@@ -31,7 +31,7 @@ def test_incremental_ingest_drops_cross_batch_dups(spark, tmp_path):
             (3, BASE_TEXT),  # exact dup of 1 within batch
         ],
     )
-    c1 = ingest_batch(spark, wh, batch1)
+    c1, _ = ingest_batch(spark, wh, batch1)
     assert c1["survivors"] == 2  # 1 and 2; 3 collapsed
 
     batch2 = _docs(
@@ -46,7 +46,7 @@ def test_incremental_ingest_drops_cross_batch_dups(spark, tmp_path):
             # 13 is a near-dup of 12 (within batch): keeper = 12
         ],
     )
-    c2 = ingest_batch(spark, wh, batch2)
+    c2, _ = ingest_batch(spark, wh, batch2)
     assert c2["batch_raw"] == 4
     assert c2["after_exact"] == 3  # 10 dropped via content hash
     assert c2["after_corpus_neardup"] == 2  # 11 dropped via band index
@@ -114,7 +114,7 @@ def test_index_self_heals_after_partial_commit(spark, tmp_path):
 
     # a near-dup of doc 2 arrives; without healing it would be ingested
     batch = _docs(spark, [(3, novel + " again tonight")])
-    counts = ingest_batch(spark, wh, batch)
+    counts, _ = ingest_batch(spark, wh, batch)
     assert counts["after_corpus_neardup"] == 0  # caught via healed index
     ids = {r.doc_id for r in wh.read("corpus_docs").select("doc_id").collect()}
     assert ids == {1, 2}
@@ -130,12 +130,12 @@ def test_ingest_recovers_from_missing_index_table(spark, tmp_path):
     happened. The next ingest must rebuild the index from the corpus and
     still drop near-dups against it — not raise."""
     wh = ParquetWarehouse(spark, str(tmp_path))
-    c1 = ingest_batch(spark, wh, _docs(spark, [(1, BASE_TEXT)]))
+    c1, _ = ingest_batch(spark, wh, _docs(spark, [(1, BASE_TEXT)]))
     assert c1["survivors"] == 1
     wh.drop("corpus_bands")  # simulate the crash-after-corpus-commit state
 
     near = BASE_TEXT.replace("quick", "swift")
-    c2 = ingest_batch(spark, wh, _docs(spark, [(2, near)]))
+    c2, _ = ingest_batch(spark, wh, _docs(spark, [(2, near)]))
     assert c2["survivors"] == 0  # near-dup of doc 1, caught via rebuilt index
     assert wh.exists("corpus_bands")
     assert wh.read("corpus_bands").select("doc_id").distinct().count() == 1
@@ -151,7 +151,7 @@ def test_sub_k_word_doc_does_not_churn_index_versions(spark, tmp_path):
     )  # doc 2: 1 word -> no shingles, unindexable
     v1 = wh.latest_version("corpus_bands")
     # a batch that adds nothing new to the index
-    c = ingest_batch(spark, wh, _docs(spark, [(3, BASE_TEXT)]))
+    c, _ = ingest_batch(spark, wh, _docs(spark, [(3, BASE_TEXT)]))
     assert c["survivors"] == 0
     assert wh.latest_version("corpus_bands") == v1
 

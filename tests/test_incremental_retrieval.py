@@ -152,8 +152,10 @@ def test_tombstone_delete_and_apply(spark, tmp_path):
 
     dead_ids = [r.doc_id for r in corpus.limit(40).collect()][:25]
     survivors = corpus.filter(~F.col("doc_id").isin(dead_ids))
-    delete_ids(wh, dead_ids, "bm", BUCKETED)
-    delete_ids(wh, dead_ids[:5], "bm", BUCKETED)  # idempotent re-delete
+    dead = corpus.filter(F.col("doc_id").isin(dead_ids)).select("doc_id")
+    delete_ids(wh, dead, "bm", BUCKETED)
+    # idempotent re-delete
+    delete_ids(wh, dead.filter(F.col("doc_id").isin(dead_ids[:5])), "bm", BUCKETED)
 
     want = _rows(bm25_topk(survivors, queries))
     assert _rows(bm25_query(wh, queries, table="bm")) == want

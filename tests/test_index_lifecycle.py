@@ -1,7 +1,7 @@
 """The shared tombstone path of the persisted indexes
 (operators/index_maint.py) on toy tables, for each of the three index
-families: the NULL-id guard, iterable ≡ DataFrame ids, the unbuilt-index
-refusal, and the layout-preserving apply_deletes."""
+families: the NULL-id guard, ids read from a frame's first column, the
+unbuilt-index refusal, and the layout-preserving apply_deletes."""
 
 from __future__ import annotations
 
@@ -90,12 +90,16 @@ def _ids(wh, table):
     return sorted(r[0] for r in wh.read(deleted_table(table)).collect())
 
 
+def _frame(wh, ids, col):
+    return wh.spark.createDataFrame([(i,) for i in ids], f"{col} long")
+
+
 def test_unbuilt_index_refuses_both_id_forms(family):
+    # both forms of the id column: the layout's name, or any other
     wh, _, layout = family
-    ids_df = wh.spark.createDataFrame([(1,)], f"{layout.id_col} long")
-    for ids in ([1], ids_df):
+    for col in (layout.id_col, "x"):
         with pytest.raises(FileNotFoundError, match="no such table"):
-            delete_ids(wh, ids, "never_built", layout)
+            delete_ids(wh, _frame(wh, [1], col), "never_built", layout)
     assert not wh.exists(deleted_table("never_built"))
 
 
@@ -108,26 +112,27 @@ def test_null_tombstone_raises(family):
     assert not wh.exists(deleted_table("ix"))
 
 
-def test_iterable_and_dataframe_ids_tombstone_alike(family):
+def test_first_column_ids_tombstone_alike(family):
     wh, build, layout = family
     build(wh, "ix")
     dead = deleted_table("ix")
-    delete_ids(wh, [2, 3], "ix", layout)
-    from_iterable = (wh.read(dead).schema, _ids(wh, "ix"))
+    delete_ids(wh, _frame(wh, [2, 3], layout.id_col), "ix", layout)
+    named = (wh.read(dead).schema, _ids(wh, "ix"))
     wh.drop(dead)
     # a DataFrame's first column is the id, whatever its name
-    delete_ids(wh, wh.spark.createDataFrame([(2,), (3,)], "x long"), "ix", layout)
-    assert (wh.read(dead).schema, _ids(wh, "ix")) == from_iterable
+    delete_ids(wh, _frame(wh, [2, 3], "x"), "ix", layout)
+    assert (wh.read(dead).schema, _ids(wh, "ix")) == named
     assert wh.read(dead).columns == [layout.id_col]
-    assert from_iterable[1] == [2, 3]
+    assert named[1] == [2, 3]
 
 
 def test_apply_deletes_drops_rows_keeps_layout(family):
     wh, build, layout = family
     row_tables = build(wh, "ix")
     layouts = {t: wh._layout(t, wh.latest_version(t)) for t in row_tables}
-    delete_ids(wh, [2, 3], "ix", layout)
-    delete_ids(wh, [3], "ix", layout)  # duplicate tombstones change nothing
+    delete_ids(wh, _frame(wh, [2, 3], "x"), "ix", layout)
+    # duplicate tombstones change nothing
+    delete_ids(wh, _frame(wh, [3], "x"), "ix", layout)
     apply_deletes(wh, "ix", layout)
     assert not wh.exists(deleted_table("ix"))
     for t in row_tables:

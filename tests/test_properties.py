@@ -116,41 +116,6 @@ def test_word_shingles_count_law(spark, words, k):
     assert all(len(s.split(" ")) == k for s in row.sh)
 
 
-_edges = st.lists(
-    st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda t: t[0] != t[1]),
-    min_size=1,
-    max_size=15,
-)
-
-
-@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-@given(_edges)
-def test_dedup_clusters_matches_union_find(spark, edges):
-    from stock_bars_data_engineering_project_spark.operators.dedup import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], "doc_a long, doc_b long"
-    )
-    got = {r.doc_id: r.cluster_id for r in dedup_clusters(pairs).collect()}
-
-    # independent model: classic union-find with min-relabel
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
-
-
 _series = st.lists(
     st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, width=64),
     min_size=1,
@@ -713,15 +678,14 @@ _edges = st.lists(
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_edges)
-def test_star_cc_matches_python_union_find(spark, edges):
+def test_dedup_clusters_matches_union_find(spark, edges):
     """Property: large-star/small-star connected components equal a
     Python union-find ground truth (min label per component, one row
     per node appearing in a non-self pair) on arbitrary random graphs
     — self-loops, duplicates, reversed pairs, disconnected pieces and
-    all. The random-topology safety net under the driver row's
-    switch to the star implementation (round 9)."""
+    all."""
     from stock_bars_data_engineering_project_spark.operators.dedup import (
-        dedup_clusters_star,
+        dedup_clusters,
     )
 
     pairs = spark.createDataFrame(
@@ -751,7 +715,7 @@ def test_star_cc_matches_python_union_find(spark, edges):
     want = sorted((n, find(n)) for n in nodes)
 
     got = sorted(
-        (r.doc_id, r.cluster_id) for r in dedup_clusters_star(pairs).collect()
+        (r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()
     )
     assert got == want
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.operators.similarity import cosine_topk, lsh_ann_topk
@@ -105,13 +106,15 @@ def test_kmeans_refine_never_increases_inertia(spark):
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     i0 = kmeans_inertia(emb, seed)
-    one = kmeans_refine(emb, seed, n_iters=1)
+    one, _ = kmeans_refine(emb, seed, 1)
     i1 = kmeans_inertia(emb, one)
-    two = kmeans_refine(emb, seed, n_iters=2)
+    two, trail = kmeans_refine(emb, seed, 2)
     i2 = kmeans_inertia(emb, two)
     assert i1 <= i0 * (1 + 1e-9)
     assert i2 <= i1 * (1 + 1e-9)
     assert i1 < i0  # the seed is strictly improvable on this data
+    # the trail read off the training passes equals the standalone probe
+    assert trail == pytest.approx([i0, i1], rel=1e-9)
 
 
 def test_trained_ivf_recall_at_least_matches_seed(spark):
@@ -127,7 +130,7 @@ def test_trained_ivf_recall_at_least_matches_seed(spark):
     seed = emb.filter(F.col("vec_id") % 125 == 0).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    trained = kmeans_refine(emb, seed, n_iters=2)
+    trained, _ = kmeans_refine(emb, seed, 2)
     got = {
         (r.query_id, r.vec_id)
         for r in ivf_topk(emb, q, centroids=trained).collect()
@@ -318,40 +321,112 @@ def test_vector_storage_utilities(spark):
         truncate_dims("embedding", 0)
 
 
-def test_kmeans_exact_mean_matches_sql_replay(spark):
-    """Bit-exact cross-engine gate for the training loop, moved here
-    from the driver row when ann_topk_suite's registered arm switched
-    to the scale-path avg mode: exact_mean (id-ordered fold means)
-    trained-IVF top-10 must equal DuckDB's full two-iteration Lloyd
-    replay (_IVF_TRAINED_SQL) — assignment, means, empty-cluster carry,
-    probe lists and ranking, every float."""
-    import duckdb
+def _lloyd_replay(E, C):
+    """One numpy Lloyd iteration: squared-L2 as the same left fold over
+    dimensions as ``l2sq`` (bit-identical distances), argmin with ties to
+    the first (lowest) cid, member means, empty clusters carried."""
+    import numpy as np
+
+    d2 = np.zeros((len(E), len(C)))
+    for j in range(E.shape[1]):
+        diff = C[None, :, j] - E[:, None, j]
+        d2 = d2 + diff * diff
+    assign = np.argmin(d2, axis=1)
+    new = C.copy()
+    for k in range(len(C)):
+        if (assign == k).any():
+            new[k] = E[assign == k].mean(axis=0)
+    return assign, new, float(d2.min(axis=1).sum())
+
+
+def test_kmeans_matches_numpy_lloyd_replay(spark):
+    """The product k-means (partial-aggregated ``avg`` means) against a
+    numpy two-iteration Lloyd replay: per-iteration assignments and the
+    empty-cluster carry match exactly, centroids agree within 1e-9
+    relative, the inertia trail matches, and the trained ``ivf_topk``
+    returns the replay's top-10 ids. A far-away extra seed attracts no
+    vector, so every iteration has an empty cluster to carry."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
 
     from stock_bars_data_engineering_project_spark.operators.similarity import (
+        ivf_assign,
         ivf_topk,
         kmeans_refine,
     )
-    from stock_bars_data_engineering_project_spark.plans.extensions import _IVF_TRAINED_SQL
 
-    emb = load_table(spark, SF, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    seed = emb.filter(F.col("vec_id") % 125 == 0).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    trained = kmeans_refine(emb, seed, n_iters=2, exact_mean=True)
-    got = {
-        (r.query_id, r.vec_id, r.cos, int(r.rank))
-        for r in ivf_topk(emb, q, centroids=trained).collect()
-    }
+    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    rows = sorted((r.vec_id, list(r.embedding)) for r in emb.collect())
+    ids = np.array([i for i, _ in rows])
+    E = np.array([v for _, v in rows], dtype=np.float64)
+    far = 10**6
+    seed_rows = [(int(i), E[n].tolist()) for n, i in enumerate(ids) if i % 25 == 0]
+    seed_rows.append((far, [1e3] * E.shape[1]))
+    cids = [c for c, _ in seed_rows]
+    seed = spark.createDataFrame(seed_rows, "cid long, cv array<double>")
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{SF}/embeddings.parquet'"
-    )
-    want = {
-        (r[0], r[1], r[2], r[3]) for r in con.execute(_IVF_TRAINED_SQL).fetchall()
+    C0 = np.array([v for _, v in seed_rows])
+    a1, C1, i0 = _lloyd_replay(E, C0)
+    a2, C2, i1 = _lloyd_replay(E, C1)
+
+    def cents(df):
+        return {r.cid: np.array(r.cv) for r in df.collect()}
+
+    def assignment(df):
+        return {r.vec_id: r.cid for r in df.collect()}
+
+    # iteration by iteration: c2 is one more pass over c1
+    c1, _ = kmeans_refine(emb, seed, 1)
+    c2, _ = kmeans_refine(emb, c1, 1)
+    got = {0: cents(seed), 1: cents(c1), 2: cents(c2)}
+    for it, (cent_in, a, want) in enumerate(((seed, a1, C1), (c1, a2, C2)), 1):
+        assert assignment(ivf_assign(emb, cent_in)) == {
+            int(i): cids[k] for i, k in zip(ids, a)
+        }
+        assert not (a == len(cids) - 1).any()  # the far seed stays empty
+        for k, cid in enumerate(cids):
+            if not (a == k).any():
+                assert np.array_equal(got[it][cid], got[it - 1][cid])
+            err = np.linalg.norm(got[it][cid] - want[k])
+            assert err <= 1e-9 * np.linalg.norm(want[k]), (it, cid, err)
+
+    # the two-iteration call: same centroids, inertia trail of its inputs
+    trained, trail = kmeans_refine(emb, seed, 2)
+    t2 = cents(trained)
+    for k, cid in enumerate(cids):
+        assert np.linalg.norm(t2[cid] - C2[k]) <= 1e-9 * np.linalg.norm(C2[k])
+    assert trail == pytest.approx([i0, i1], rel=1e-9)
+
+    # trained IVF: 4 of 21 lists probed, exact top-10 within them
+    nprobe = 4
+    a3 = _lloyd_replay(E, C2)[0]
+    want_top = set()
+    for q in range(5):
+        dq = np.zeros(len(C2))
+        for j in range(E.shape[1]):
+            diff = C2[:, j] - E[q, j]
+            dq = dq + diff * diff
+        probes = set(np.lexsort((cids, dq))[:nprobe])
+        cand = [n for n in range(len(E)) if a3[n] in probes and ids[n] != ids[q]]
+        cos = {
+            n: float(
+                Decimal(repr(float(E[q] @ E[n] / (
+                    np.sqrt(E[q] @ E[q]) * np.sqrt(E[n] @ E[n])
+                ))))
+                .quantize(Decimal("1e-10"), ROUND_HALF_UP)
+                .quantize(Decimal("1e-6"), ROUND_HALF_UP)
+            )
+            for n in cand
+        }
+        top = sorted(cand, key=lambda n: (-cos[n], ids[n]))[:10]
+        want_top |= {(int(ids[q]), int(ids[n])) for n in top}
+    queries = emb.filter(F.col("vec_id") < 5)
+    got_top = {
+        (r.query_id, r.vec_id)
+        for r in ivf_topk(emb, queries, nprobe=nprobe, centroids=trained).collect()
     }
-    assert got == want
+    assert got_top == want_top
 
 
 def test_int8_serving_recall_near_brute(spark):

@@ -128,6 +128,40 @@ def test_unigram_surprisal_known_values(spark, tmp_path):
     assert out[2] == pytest.approx(round(exp2, 4), abs=1e-9)
 
 
+def test_tfidf_terms_use_the_corpus_word_model(spark, tmp_path):
+    """The tfidf arm of tfidf_vocab_suite tokenizes like every other
+    arm (lower-cased, empty tokens dropped) on both engines: a double
+    space yields no empty term and "The the" counts as one term."""
+    import duckdb
+
+    from stock_bars_data_engineering_project_spark.plans.extensions import (
+        _tfidf_top3,
+    )
+    from stock_bars_data_engineering_project_spark.plans.registry import QUERIES
+
+    docs = spark.createDataFrame(
+        [(1, "The the  cat"), (2, "a dog")], "doc_id long, text string"
+    )
+    got = sorted(
+        (r.doc_id, r.term, r.rank) for r in _tfidf_top3(docs).collect()
+    )
+    assert got == [(1, "cat", 2), (1, "the", 1), (2, "a", 1), (2, "dog", 2)]
+
+    path = str(tmp_path / "documents.parquet")
+    docs.write.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+    oracle = sorted(
+        (r[0], r[1], r[2])
+        for r in con.execute(
+            "SELECT doc_id, term, rank FROM ("
+            + QUERIES["tfidf_vocab_suite"].oracle
+            + ") WHERE tag = 'tfidf'"
+        ).fetchall()
+    )
+    assert oracle == got
+
+
 def test_quality_scores_replay_and_contract(spark):
     """Hashed-classifier scores match a hashlib+math replay (the same
     arithmetic the DuckDB oracle runs), feature count is 2n-1, and

@@ -212,8 +212,9 @@ def test_persisted_index_tombstone_delete_and_apply(spark, tmp_path):
 
     # delete docs 1 (matches 'quick brown' + the 'ox' fallback) and 5
     # (the only true 'abcdef' match)
-    delete_ids(wh, [1, 5], "tg", BUCKETED)
-    delete_ids(wh, [1], "tg", BUCKETED)  # idempotent re-delete
+    delete_ids(wh, spark.createDataFrame([(1,), (5,)], "doc_id long"), "tg", BUCKETED)
+    # idempotent re-delete
+    delete_ids(wh, spark.createDataFrame([(1,)], "doc_id long"), "tg", BUCKETED)
     want = sorted(
         (pid, did)
         for pid, pat in PATTERNS

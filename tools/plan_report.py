@@ -71,7 +71,7 @@ def main() -> None:
         "ReusedExchange; `pushed` marks a non-empty PushedFilters on a",
         "parquet scan. Streaming-drain queries are excluded (they execute",
         "on call). Queries that EXECUTE during construction — iterative",
-        "label propagation (dedup_minhash_clusters), warehouse-writing",
+        "connected components (dedup_minhash_clusters), warehouse-writing",
         "rows (incremental_dedup_two_batch), driver-side model fits",
         "(pca_project's stats pass) — show only their RESULT plan here;",
         "their heavy lifting is audited via the operator plans they call",

@@ -90,8 +90,6 @@ KEEP_PARAMS: dict[str, str] = {
     "operators/lm_state.py:lm_state(bi_table)": _TABLE,
     "operators/similarity.py:ivf_topk(nprobe)": _REFERENCE
     + " (probing every list equals brute force; ann_query's probe count)",
-    "operators/similarity.py:kmeans_refine(exact_mean)": _REFERENCE
-    + " (the id-ordered fold DuckDB replays bit for bit)",
     "pipeline/corpus_pipeline.py:prepare_corpus(keeper)": _REFERENCE
     + " (refresh_corpus equals the one-shot with keeper='first')",
     "pipeline/corpus_pipeline.py:prepare_corpus(benchmark)": _REFERENCE

@@ -311,8 +311,8 @@ def run(
         # grows sub-linearly (Heaps' law) while the scored side grows
         # linearly, so the curve should track the explode cost
         "surprisal": lambda: unigram_surprisal(docs, word_counts(docs)),
-        # label propagation over the verified near-dup pair graph —
-        # O(component diameter) rounds of join+agg on the (corpus-small)
+        # large-star/small-star components over the verified near-dup
+        # pair graph — O(log n) rounds of join+agg on the (corpus-small)
         # edge set; the iterative rounds execute eagerly inside the
         # lambda (per-round checkpoints), so the timing covers them
         "dedup_clusters": lambda: dedup_clusters(minhash_lsh_pairs(docs)),
