@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the usable cores);
+prints ONE JSON line.
 
 Timing uses a ``noop``-format write so every column of the result is
 fully materialized through the physical plan (a ``count()`` would let
@@ -30,6 +31,8 @@ import json
 import os
 import sys
 import time
+
+from stock_bars_data_engineering_project_spark.session import local_cpus
 
 # Round-2 registry consolidation renamed/merged some headliners:
 #   q1_pricing_summary+rollup_pricing -> q1_pricing_rollup
@@ -75,7 +78,7 @@ METHODOLOGY = (
     "as a full-GC pause inside another's timing — the min-of-N + gc "
     "fence is what makes round-over-round steady deltas decision-grade "
     "on a long-lived "
-    f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}] JVM with a "
+    f"local[{local_cpus()}] JVM with a "
     "{driver_memory} driver heap"
 )
 
@@ -139,7 +142,7 @@ def bench_duckdb(sf_dir: str, names: list[str] = BENCH_QUERIES) -> dict[str, flo
 
     oracles = entrymod.oracle_sql()
     con = duckdb.connect()
-    con.sql(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.sql(f"SET threads TO {local_cpus()}")
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"
     ).split():
@@ -180,7 +183,7 @@ def main() -> None:
     from stock_bars_data_engineering_project_spark.session import get_spark
 
     sc = get_spark("bench").sparkContext
-    out["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    out["cpus"] = local_cpus()
     out["default_parallelism"] = sc.defaultParallelism
     if steady:
         out["value_steady"] = round(sum(steady_times.values()), 3)

@@ -70,9 +70,10 @@ def ingest_lm_batch(
     # Epoch partitions are content-addressed, so a present partition is
     # BY CONTRACT identical to what this batch would write (append-only
     # ids, docs immutable under their id). Present => skip; absent =>
-    # APPEND the one new partition (O(batch) manifest commit). The
-    # crash-heal is order-independent: redelivery recomputes the same
-    # epoch and appends only the missing table's partition.
+    # APPEND the one new partition (O(batch) write, prior files
+    # hardlinked). The crash-heal is order-independent: redelivery
+    # recomputes the same epoch and appends only the missing table's
+    # partition.
     for df, table in ((uni, uni_table), (bi, bi_table)):
         if not wh.has_partition(table, "_epoch", epoch):
             wh.append(

@@ -332,8 +332,8 @@ def _record_processed(
     (create on first use). Ids are terminally-handled doc_ids —
     published, gate-dropped, or benchmark-excluded — so the reconcile
     anti-join stays crash-window-sized (refresh_corpus docstring).
-    Empty batches append nothing — a no-op replay must not grow the
-    manifest chain by one empty member per redelivery."""
+    Empty batches append nothing — a no-op replay must not commit a
+    new version (relinking every prior file) per redelivery."""
     if not wh.exists(processed_t):
         wh.overwrite(ids, processed_t)
     elif ids.limit(1).count():

@@ -538,7 +538,7 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change-data-feed over the versioned parquet warehouse
     (sinks/warehouse.py changes()): a keyed table evolves through the
     full write surface — full-snapshot overwrite (v1), O(batch)
-    manifest append of new keys (v2), keyed merge revising every third
+    hardlinking append of new keys (v2), keyed merge revising every third
     key (v3), and an overwrite dropping every fifth key (v4, the
     delete path — snapshots make deletion an ordinary rewrite) — and
     ``changes(v1 -> latest)`` must classify exactly the keyed diff:
@@ -546,7 +546,7 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-image; keys inserted-then-deleted inside the interval emit
     nothing. The oracle recomputes both endpoint states directly from
     ``orders`` and full-outer-diffs them, so the entire
-    version-chain + manifest-read + diff-classification path is
+    version-chain + snapshot-read + diff-classification path is
     value-gated cross-engine (the reference's PostgreSQL store mutates
     in place and has no history at all — this is the surface that
     replaces it at 100 TB, where CDC is a pure metadata read over
@@ -561,17 +561,17 @@ def q_warehouse_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
       oracle's direct recomputation of state1, so restore is
       value-gated, not just pointer-checked. The CDC DataFrame above is
       version-pinned eagerly at ``changes()`` time (reads resolve
-      member dirs immediately), so the later pointer flip cannot
+      the version dir immediately), so the later pointer flip cannot
       retroactively change it.
     - `vacuum_law`: ``vacuum`` (keeps the last 2) with the pointer
-      parked on v1 — reference-aware retention must keep the restored-to version
+      parked on v1 — retention must keep the restored-to version
       (it is the pointer target, not among the newest two) and the
       table must still read back exactly state1's rows afterwards; the
       flag row collapses to the oracle's literal 1.0.
 
-    Intra-chain invariants (manifest append ≡ materialized append,
-    post-restore version allocation, vacuum member-reference safety)
-    stay pinned in tests/test_warehouse.py."""
+    Intra-chain invariants (an append shares the prior snapshot's
+    inodes, post-restore version allocation, kept versions read whole
+    after vacuum) stay pinned in tests/test_warehouse.py."""
     orders = load_table(spark, sf_dir, "orders")
     base = orders.select(
         F.col("o_orderkey").alias("k"),

@@ -1,6 +1,6 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the
+Local testing runs on ``local[N]`` (single JVM, N = ``local_cpus()``); the
 same settings are what we would ship as cluster defaults: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), Arrow enabled for
 the few Pandas-UDF operators, session timezone pinned to UTC so results
@@ -18,7 +18,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run
+    on: the ``local[N]`` width, the shuffle partition count and the
+    DuckDB thread count of a bench all follow it."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = local_cpus()
 
 
 def driver_memory() -> str:
@@ -36,9 +45,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",

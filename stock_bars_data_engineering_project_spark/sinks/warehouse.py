@@ -18,16 +18,19 @@ unaffected (snapshot isolation for free), and a crashed write leaves only
 an unreferenced directory. This is the same commit-protocol idea as
 Delta's _delta_log, reduced to a single pointer.
 
-APPEND is O(batch), not O(table): an appended version directory holds
-ONLY the new batch's files plus a ``_MANIFEST`` text file naming the
-member version directories (oldest first, itself last) whose combined
-contents ARE the snapshot — the same file-reference idea as a Delta
-add-file log. Reads union the members; ``vacuum`` keeps every member
-directory any retained version references; ``overwrite``/``merge``/
-``compact`` write full (manifest-free) snapshots, so a compaction
-naturally collapses a long append chain, and ``append`` itself
-materializes a full snapshot once the chain reaches
-``MANIFEST_LIMIT`` members (bounding read fan-in between compactions).
+Every version directory is self-contained: it holds every data file of
+its snapshot, so a read, a vacuum or a restore looks at one directory.
+APPEND is O(batch) in bytes, not O(table): it writes only the batch's
+files into the new version directory, then hardlinks every parquet file
+of the live snapshot into it (:meth:`_carry_over`, the same step merge
+and delete_where use for untouched partitions). Data files are
+immutable once written, so sharing inodes is safe, costs O(files)
+metadata, and survives ``vacuum`` (deleting an old version dir unlinks
+names, never a shared inode). At 100 TB on an object store this step is
+a file-reference manifest (Iceberg/Delta); hardlinks are its local-FS
+realization. One version dir holds one schema: a numeric-widening
+append rewrites the table in the wider types instead of linking files
+of the narrower ones beside it.
 
 Scale posture: snapshots can be hive-partitioned (``partition_by``), and
 ``merge`` prunes the rewrite to ONLY the partitions present in the
@@ -41,7 +44,7 @@ Layout rule (every write verb): a new table takes the caller's
 its live snapshot recorded (``_LAYOUT``) when ``partition_by`` is
 ``None`` or equal to it. A different layout is a full rewrite, so only
 ``overwrite`` accepts it; ``append`` and ``merge`` raise
-``ValueError`` — their batch members and pruned rewrites share the
+``ValueError`` — their batch writes and pruned rewrites share the
 live snapshot's files, which a second layout would make unreadable or
 silently drop. ``delete_where`` and ``compact`` always keep the
 recorded layout.
@@ -67,16 +70,12 @@ from ..memo import build_once
 from ..session import local_frame
 
 _POINTER = "_LATEST"
-_MANIFEST = "_MANIFEST"
 _LAYOUT = "_LAYOUT"
-# most members an append chain may reach before append writes a full
-# snapshot instead
-MANIFEST_LIMIT = 64
 # a contended writer lock is retried this many times, with exponential
 # backoff from the base delay (~3 s in total)
 LOCK_RETRIES = 5
 LOCK_RETRY_BASE_S = 0.1
-# snapshots vacuum keeps besides those the kept ones reference
+# newest snapshots vacuum keeps besides the live one
 VACUUM_KEEP_LAST = 2
 
 
@@ -140,14 +139,6 @@ def _colocated(df: DataFrame, partition_by: tuple[str, ...]) -> DataFrame:
     return df
 
 
-def _union(parts: list[DataFrame]) -> DataFrame:
-    """unionByName of snapshot-member reads, aligned by column name."""
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
-
-
 @dataclass
 class ParquetWarehouse:
     spark: SparkSession
@@ -188,7 +179,7 @@ class ParquetWarehouse:
 
     def has_partition(self, table: str, column: str, value) -> bool:
         """True iff the live snapshot holds the hive partition
-        ``column=value`` — a filesystem probe of its member dirs, no
+        ``column=value`` — a filesystem probe of its version dir, no
         Spark job. ``str(value)`` must be a literal dir name (nothing
         Spark would escape)."""
         v = self.latest_version(table)
@@ -196,10 +187,7 @@ class ParquetWarehouse:
         if column not in layout:
             return False
         seg = ["*"] * layout.index(column) + [glob.escape(f"{column}={value}")]
-        return any(
-            glob.glob(os.path.join(self.table_path(table), m, *seg))
-            for m in self._manifest_members(table, v)
-        )
+        return bool(glob.glob(os.path.join(self.table_path(table), v, *seg)))
 
     # -- snapshot machinery -------------------------------------------------
 
@@ -287,9 +275,8 @@ class ParquetWarehouse:
         # Allocate past the max ON-DISK version, not the _LATEST pointer:
         # after restore() the pointer points backwards, and pointer-based
         # allocation would re-issue an existing version number — the new
-        # write would then clobber a directory that later manifest
-        # snapshots reference as an immutable member, silently corrupting
-        # every version that shares it.
+        # write would then clobber a retained snapshot that a pinned
+        # reader or a later restore still expects to be immutable.
         on_disk = self.versions(table)
         n = int(on_disk[-1][1:]) + 1 if on_disk else 1
         return f"v{n:06d}"
@@ -310,7 +297,7 @@ class ParquetWarehouse:
         if os.path.exists(path):
             # snapshot dirs are immutable once written; an existing dir
             # here means version allocation went wrong — refuse rather
-            # than overwrite a directory other manifests may reference
+            # than overwrite a retained snapshot
             raise RuntimeError(
                 f"refusing to write snapshot {version} of {table!r}: "
                 f"{path} already exists (version allocation bug)"
@@ -326,16 +313,6 @@ class ParquetWarehouse:
                 f.write(",".join(partition_by))
         return version
 
-    def _has_data_files(self, table: str, version: str) -> bool:
-        """True iff the version dir holds at least one parquet data
-        file — a pure filesystem probe (no Spark job)."""
-        for dirpath, _dirnames, filenames in os.walk(
-            os.path.join(self.table_path(table), version)
-        ):
-            if any(f.endswith(".parquet") for f in filenames):
-                return True
-        return False
-
     def _layout(self, table: str, version: str) -> tuple[str, ...]:
         """Partition columns the snapshot was written with (() if
         unpartitioned) — read from the version's _LAYOUT record."""
@@ -348,31 +325,12 @@ class ParquetWarehouse:
         except FileNotFoundError:
             return ()
 
-    def _manifest_members(self, table: str, version: str) -> list[str]:
-        """Member version dirs of a snapshot — [version] itself when the
-        snapshot is a full (manifest-free) write."""
-        mf = os.path.join(self.table_path(table), version, _MANIFEST)
-        try:
-            with open(mf) as f:
-                return [line.strip() for line in f if line.strip()]
-        except FileNotFoundError:
-            return [version]
-
     # -- reads --------------------------------------------------------------
 
     def read(self, table: str, version: str | None = None) -> DataFrame:
-        """S5: full-table scan of the latest (or a pinned) snapshot.
-
-        A manifest snapshot reads as the unionByName of its member
-        directories (each member read whole, so hive-partition columns
-        survive), aligned by column name."""
+        """S5: full-table scan of the latest (or a pinned) snapshot."""
         v = self._version(table, version)
-        return _union([
-            _read_version_dir(
-                self.spark, os.path.join(self.table_path(table), m)
-            )
-            for m in self._manifest_members(table, v)
-        ])
+        return _read_version_dir(self.spark, os.path.join(self.table_path(table), v))
 
     # -- writes (K1/K2/K3/K4) ----------------------------------------------
 
@@ -382,25 +340,23 @@ class ParquetWarehouse:
         table: str,
         partition_by: tuple[str, ...] | None = None,
     ) -> None:
-        """K1: append insert (postgresql.py:70-73) — new snapshot = old ∪ batch,
-        committed as a MANIFEST snapshot: only the batch's files are
-        written (O(batch) I/O however large the table — the requirement
-        at 100 TB, where rewriting a table to add a day of data is the
-        difference between a pipeline and a joke), and the new version's
-        ``_MANIFEST`` names the prior snapshot's member dirs plus this
-        one. Readers of the committed version union the members;
-        snapshot isolation is unchanged (the pointer flip is still the
-        whole transaction, and member dirs are immutable).
+        """K1: append insert (postgresql.py:70-73) — new snapshot = old ∪ batch.
 
-        ``MANIFEST_LIMIT`` bounds the chain: when the member count would
-        exceed it, this append materializes a full snapshot instead
-        (the same collapse ``compact``/``overwrite`` perform), so read
-        fan-in stays bounded between compactions.
+        Only the batch's files are written (O(batch) I/O however large
+        the table — the requirement at 100 TB, where rewriting a table
+        to add a day of data is the difference between a pipeline and a
+        joke); every file of the live snapshot then carries into the new
+        version dir as a hardlink (:meth:`_carry_over`). Snapshot
+        isolation is unchanged: the pointer flip is still the whole
+        transaction, and a crash before it leaves an orphan dir that no
+        reader sees and ``vacuum`` reaps.
 
-        Schema drift refuses loudly — checked HERE, at write time,
-        because the manifest read aligns members with
-        allowMissingColumns and would otherwise mask a drifted append
-        forever.
+        Schema drift refuses loudly, at write time, where the writer can
+        still fix the batch. A numeric-widening batch (int into a bigint
+        table, or the reverse) cannot share a dir with the table's files
+        — a single-dir parquet read takes its schema from one footer and
+        mis-reads the others — so it rewrites the table as
+        ``existing ∪ batch`` in the wider types.
         """
         with self._write_lock(table):
             partition_by = self._resolve_layout(table, partition_by)
@@ -417,22 +373,19 @@ class ParquetWarehouse:
                     f"{sorted(set(df.columns) ^ prev_cols)} differ)"
                 )
             # TYPE drift too: a same-name INCOMPATIBLE type change
-            # passes the column-set check but detonates at READ time
-            # (the manifest union can't align string vs long),
-            # turning a bad write into a poisoned table. Checked
-            # here, where the writer can still fix the batch.
-            # Numeric-widening pairs are fine (the union resolves
-            # them), and hive partition columns are exempt — their
-            # read-back dtype is DIRNAME INFERENCE (a bigint bkt
-            # comes back int), not anything the writer controls.
+            # passes the column-set check but detonates at READ time,
+            # turning a bad write into a poisoned table. Numeric-widening
+            # pairs are fine (the union below resolves them), and hive
+            # partition columns are exempt — their read-back dtype is
+            # DIRNAME INFERENCE (a bigint bkt comes back int), not
+            # anything the writer controls.
             prev_types = dict(existing.dtypes)
-            mismatched = [
+            changed = [
                 (c, t, prev_types[c])
                 for c, t in df.dtypes
-                if c not in partition_by
-                and prev_types.get(c, t) != t
-                and not _types_compatible(t, prev_types[c])
+                if c not in partition_by and prev_types[c] != t
             ]
+            mismatched = [m for m in changed if not _types_compatible(m[1], m[2])]
             if mismatched:
                 raise ValueError(
                     f"append to {table!r}: type drift — "
@@ -442,25 +395,17 @@ class ParquetWarehouse:
                     )
                     + "; cast the batch to the table's types"
                 )
-            chain = self._manifest_members(table, prev)
-            if len(chain) + 1 > MANIFEST_LIMIT:
-                merged = existing.unionByName(df)
-                version = self._write_snapshot(merged, table, partition_by)
-                self._commit(table, version)
-                return
-            version = self._write_snapshot(df, table, partition_by)
-            members = [*chain, version]
-            if not self._has_data_files(table, version):
-                # empty batch: old ∪ ∅ = old. A PARTITIONED write of an
-                # empty frame emits no data files at all, and a member
-                # dir without parquet files poisons every later read
-                # (UNABLE_TO_INFER_SCHEMA on the union) — so commit the
-                # version with the prior members only and never list
-                # the file-less dir.
-                members = chain
-            mf = os.path.join(self.table_path(table), version, _MANIFEST)
-            with open(mf, "w") as f:
-                f.write("\n".join(members) + "\n")
+            if changed:
+                version = self._write_snapshot(
+                    existing.unionByName(df), table, partition_by
+                )
+            else:
+                # the table's column order, so whichever footer a read
+                # samples carries the same schema
+                version = self._write_snapshot(
+                    df.select(*existing.columns), table, partition_by
+                )
+                self._carry_over(table, prev, version, len(partition_by), set())
             self._commit(table, version)
 
     def overwrite(
@@ -530,20 +475,25 @@ class ParquetWarehouse:
                 return upsert_frames(target, src, keys, source_unique=True)
 
             target = self.read(table)
+
+            def data_types(df: DataFrame) -> dict[str, str]:
+                return {c: t for c, t in df.dtypes if c not in partition_by}
+
             if (
                 partition_by
                 and set(partition_by) <= set(src.columns)
                 and set(partition_by) <= set(keys)
-                and self._members_schema_consistent(table, prev)
+                and data_types(src) == data_types(target)
             ):
                 # The pruned rewrite is SOUND ONLY when (a) the partition
                 # columns are part of the merge key — otherwise a key
                 # whose partition value changed (id=1 moving from date
                 # D1 to D2) leaves its old row in an untouched partition
-                # the anti-join cannot evict; (b) no schema drift —
-                # linked files collapse into one dir, and a single-dir
-                # read does not name-align drifted schemas the way the
-                # manifest union does. Anything else takes the full
+                # the anti-join cannot evict; (b) the batch carries the
+                # table's data types — rewritten and linked files share
+                # one dir, and a single-dir read takes its schema from
+                # one footer, so an int file beside a bigint one makes
+                # the snapshot unreadable. Anything else takes the full
                 # rewrite. The touched values are batch-derived and
                 # bounded, so they collect to driver literals.
                 values = src.select(*partition_by).distinct()
@@ -566,7 +516,7 @@ class ParquetWarehouse:
         selects rows to DELETE; rows where it evaluates NULL are KEPT
         (SQL DELETE semantics — a NULL condition deletes nothing).
 
-        On a hive-partitioned, schema-consistent table the rewrite is
+        On a hive-partitioned table the rewrite is
         merge's physical partition-pruned rewrite
         (:meth:`_rewrite_partitions`): one pushdown-filtered scan finds
         the touched partition values (bounded driver metadata), only
@@ -579,8 +529,8 @@ class ParquetWarehouse:
         Returns the number of touched partitions (0 = nothing matched,
         in which case NO new version is committed — so replaying a
         delete is a no-op, the idempotence contract every mutation here
-        carries). Unpartitioned/drifted tables take the full-rewrite
-        fallback (correct, not pruned).
+        carries). Unpartitioned tables take the full-rewrite fallback
+        (correct, not pruned).
         """
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         hit = F.coalesce(pred.cast("boolean"), F.lit(False))
@@ -588,8 +538,8 @@ class ParquetWarehouse:
             prev = self._version(table)
             partition_by = self._layout(table, prev)
             target = self.read(table)
-            if partition_by and self._members_schema_consistent(table, prev):
-                # ONE pushdown-filtered scan per member finds both the
+            if partition_by:
+                # ONE pushdown-filtered scan finds both the
                 # touched partition VALUES (for the survivor rewrite)
                 # and the touched leaf DIR names (collected from
                 # _metadata.file_path — Spark-written names, no value
@@ -600,24 +550,21 @@ class ParquetWarehouse:
                 # hardlink the old files back in — a delete that
                 # empties a partition (the most common GDPR shape)
                 # silently resurrected.
-                tdir = self.table_path(table)
+                vdir = os.path.abspath(os.path.join(self.table_path(table), prev))
                 touched_vals: set[tuple] = set()
                 touched_rel: set[str] = set()
-                for m in self._manifest_members(table, prev):
-                    mdir = os.path.abspath(os.path.join(tdir, m))
-                    mdf = _read_version_dir(self.spark, mdir)
-                    for r in (
-                        mdf.filter(hit)
-                        .select(
-                            F.col("_metadata.file_path").alias("__fp"),
-                            *partition_by,
-                        )
-                        .distinct()
-                        .collect()
-                    ):
-                        touched_vals.add(tuple(r[c] for c in partition_by))
-                        leaf = os.path.dirname(_local_path(r["__fp"]))
-                        touched_rel.add(os.path.relpath(leaf, mdir))
+                for r in (
+                    target.filter(hit)
+                    .select(
+                        F.col("_metadata.file_path").alias("__fp"),
+                        *partition_by,
+                    )
+                    .distinct()
+                    .collect()
+                ):
+                    touched_vals.add(tuple(r[c] for c in partition_by))
+                    leaf = os.path.dirname(_local_path(r["__fp"]))
+                    touched_rel.add(os.path.relpath(leaf, vdir))
                 if not touched_vals:
                     return 0
                 values = target.filter(hit).select(*partition_by).distinct()
@@ -636,29 +583,6 @@ class ParquetWarehouse:
             )
             self._commit(table, version)
             return 1
-
-    def _members_schema_consistent(self, table: str, version: str) -> bool:
-        """True when every manifest member of a snapshot carries the
-        same column set and types. The hardlink carry-over collapses
-        member files into ONE directory, and a single-dir parquet read
-        does not align member schemas the way the manifest union does
-        (it samples one footer) — so a history with a type-widened
-        append must fall back to the full rewrite, which re-aligns it.
-        One driver footer read per member, members bounded by
-        MANIFEST_LIMIT; the overwhelmingly common single-member case is
-        free."""
-        members = self._manifest_members(table, version)
-        if len(members) <= 1:
-            return True
-        schemas = set()
-        for m in members:
-            df = _read_version_dir(
-                self.spark, os.path.join(self.table_path(table), m)
-            )
-            schemas.add(
-                tuple(sorted((f.name, str(f.dataType)) for f in df.schema))
-            )
-        return len(schemas) == 1
 
     def _partition_leaf_dirs(self, base: str, depth: int) -> dict[str, str]:
         """Hive partition leaf dirs exactly ``depth`` levels under
@@ -704,14 +628,7 @@ class ParquetWarehouse:
         ``rewrite(touched)`` is written co-located; every partition leaf
         dir it did not write — and that is not in ``exclude``, the
         touched dirs a rewrite may leave empty — carries into the new
-        snapshot by hardlinking its parquet files. Data files are
-        immutable once written (the snapshot contract), so sharing
-        inodes is safe, O(files) metadata, and vacuum-proof (deleting
-        the old version dir unlinks names, never shared inodes). At
-        100 TB on an object store this step is a file-reference
-        manifest (Iceberg/Delta); hardlinks are its exact local-FS
-        realization. Falls back to a physical copy per file where the
-        filesystem refuses links — still correct, just not free."""
+        snapshot (:meth:`_carry_over`)."""
         if len(parts) > 1000:
             touched = target.join(
                 F.broadcast(values), on=list(partition_by), how="left_semi"
@@ -721,49 +638,58 @@ class ParquetWarehouse:
         version = self._write_snapshot(
             _colocated(rewrite(touched), partition_by), table, partition_by
         )
-        tdir = self.table_path(table)
-        new_dir = os.path.join(tdir, version)
+        new_dir = os.path.join(self.table_path(table), version)
         depth = len(partition_by)
         rewritten = set(self._partition_leaf_dirs(new_dir, depth)) | set(exclude)
-        for member in self._manifest_members(table, prev):
-            mdir = os.path.join(tdir, member)
-            for rel, absd in self._partition_leaf_dirs(mdir, depth).items():
-                if rel in rewritten:
-                    continue
-                dest = os.path.join(new_dir, rel)
-                os.makedirs(dest, exist_ok=True)
-                for name in os.listdir(absd):
-                    if not name.endswith(".parquet") or name.startswith(
-                        ("_", ".")
-                    ):
-                        continue
-                    target_path = os.path.join(dest, name)
-                    if os.path.exists(target_path):
-                        continue  # same immutable file via another member
-                    try:
-                        os.link(os.path.join(absd, name), target_path)
-                    except OSError:
-                        shutil.copy2(os.path.join(absd, name), target_path)
+        self._carry_over(table, prev, version, depth, rewritten)
         return version
+
+    def _carry_over(
+        self, table: str, prev: str, version: str, depth: int, skip: set[str]
+    ) -> None:
+        """Hardlink the parquet files of snapshot ``prev`` into the
+        uncommitted ``version``, partition leaf dir by leaf dir
+        (``depth`` partition columns; 0 carries the root dir), except
+        the leaf dirs named in ``skip``. Data files are immutable once
+        written (the snapshot contract), so sharing inodes is safe,
+        O(files) metadata, and vacuum-proof. Falls back to a physical
+        copy per file where the filesystem refuses a link — still
+        correct, just not free — but never over an existing name: a
+        Spark write names its files uniquely, so a clash is a bug and
+        raises ``FileExistsError``."""
+        tdir = self.table_path(table)
+        new_dir = os.path.join(tdir, version)
+        leaves = self._partition_leaf_dirs(os.path.join(tdir, prev), depth)
+        for rel, src in leaves.items():
+            if rel in skip:
+                continue
+            dest = os.path.join(new_dir, rel)
+            os.makedirs(dest, exist_ok=True)
+            for name in os.listdir(src):
+                if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                    continue
+                try:
+                    os.link(os.path.join(src, name), os.path.join(dest, name))
+                except FileExistsError:
+                    raise
+                except OSError:
+                    shutil.copy2(os.path.join(src, name), os.path.join(dest, name))
 
     # -- table maintenance (beyond the reference; required at 100 TB) -------
 
     def data_files(self, table: str) -> list[str]:
-        """Data files of the live snapshot (manifest members included) —
-        the observable compaction metric."""
+        """Data files of the live snapshot — the observable compaction
+        metric."""
         v = self._version(table)
         out: list[str] = []
-        for member in self._manifest_members(table, v):
-            for dirpath, dirs, names in os.walk(
-                os.path.join(self.table_path(table), member)
-            ):
-                # prune metadata/hidden DIRS too (Spark's listing rule)
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                out.extend(
-                    os.path.join(dirpath, n)
-                    for n in names
-                    if n.endswith(".parquet") and not n.startswith(("_", "."))
-                )
+        for dirpath, dirs, names in os.walk(os.path.join(self.table_path(table), v)):
+            # prune metadata/hidden DIRS too (Spark's listing rule)
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            out.extend(
+                os.path.join(dirpath, n)
+                for n in names
+                if n.endswith(".parquet") and not n.startswith(("_", "."))
+            )
         return sorted(out)
 
     def compact(self, table: str) -> None:
@@ -875,16 +801,6 @@ class ParquetWarehouse:
                     f"cannot restore {table!r} to {version}: snapshot missing "
                     "(vacuumed or never written)"
                 )
-            missing = [
-                m
-                for m in self._manifest_members(table, version)
-                if not os.path.isdir(os.path.join(self.table_path(table), m))
-            ]
-            if missing:
-                raise FileNotFoundError(
-                    f"cannot restore {table!r} to {version}: manifest member "
-                    f"snapshot(s) {missing} vacuumed"
-                )
             self._commit(table, version)
 
     def versions(self, table: str) -> list[str]:
@@ -902,23 +818,18 @@ class ParquetWarehouse:
     def vacuum(self, table: str) -> None:
         """Drop snapshot directories older than the newest
         ``VACUUM_KEEP_LAST``, never touching the version the pointer
-        references NOR any member directory a retained manifest
-        snapshot references — a manifest append shares its
-        predecessors' files, so reference-unaware
-        deletion would corrupt the live table (the reason Delta VACUUM
-        consults the log before deleting). Bounds storage growth the
-        same way Delta VACUUM does; readers pinned to a vacuumed
-        version fail loudly on next read rather than seeing partial
-        data.
+        references. Every version dir is self-contained, and the files
+        a kept version shares with a dropped one are hardlinks whose
+        inodes outlive the dropped name, so deletion needs no reference
+        tracking. Bounds storage growth the same way Delta VACUUM does;
+        readers pinned to a vacuumed version fail loudly on next read
+        rather than seeing partial data. The orphan dir of a crashed
+        write is an old version like any other once newer ones exist.
         """
         current = self.latest_version(table)
         tdir = self.table_path(table)
         versions = self.versions(table)
         keep = set(versions[-VACUUM_KEEP_LAST:]) | ({current} if current else set())
-        referenced: set[str] = set()
-        for v in keep:
-            referenced.update(self._manifest_members(table, v))
-        keep |= referenced
         for v in versions:
             if v not in keep:
                 shutil.rmtree(os.path.join(tdir, v), ignore_errors=True)

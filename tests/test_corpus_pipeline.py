@@ -430,10 +430,9 @@ def test_first_refresh_heals_pre_refresh_stream_ingested_corpus(spark, tmp_path)
 
 def test_noop_replay_churns_no_versions(spark, tmp_path):
     """A replayed committed batch must not grow ANY state table: no new
-    __processed member, no __sync rewrite, no corpus/published version
-    (empty appends churned a version per
-    redelivery until the manifest-limit collapse paid an O(table)
-    rewrite)."""
+    __processed version, no __sync rewrite, no corpus/published version
+    (an empty append would commit a version per redelivery, each one
+    relinking every file of the table)."""
     from stock_bars_data_engineering_project_spark.pipeline.corpus_pipeline import (
         refresh_corpus,
     )

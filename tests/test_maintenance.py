@@ -3,6 +3,7 @@ snapshot isolation of the write verbs."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stock_bars_data_engineering_project_spark.sinks.warehouse import ParquetWarehouse
@@ -155,34 +156,40 @@ def test_merge_pruned_rewrite_links_untouched_partitions(spark, tmp_path, monkey
     assert wh.read("t").count() == 402
 
 
-def test_merge_on_drift_appended_history_falls_back_to_full(spark, tmp_path):
-    """A pruned merge must NOT hardlink manifest members of different
-    schemas into one directory (a single-dir parquet read samples one
-    footer and mis-reads the others): a history with a type-widened
-    append (int -> bigint) falls back to the full rewrite, which
-    re-aligns it."""
+@pytest.mark.parametrize("widened_by", ["append", "merge_batch"])
+def test_merge_on_drift_appended_history_falls_back_to_full(spark, tmp_path, widened_by):
+    """A pruned merge must NOT link files of different schemas into one
+    version dir (a single-dir parquet read takes its schema from one
+    footer and fails on the others). Two ways a bigint meets the
+    table's int ``score``: a widening append before the merge (which
+    rewrites the table as bigint), or the merge batch itself, touching
+    only the last partition — that merge must take the full rewrite,
+    or the int files it links beside its bigint ones leave a snapshot
+    no read can open."""
     wh = ParquetWarehouse(spark, str(tmp_path))
     wh.overwrite(
-        spark.createDataFrame([(i, i % 2, "a", i) for i in range(20)],
+        spark.createDataFrame([(i, i % 4, "a", i) for i in range(20)],
                               "id long, p int, val string, score int"),
         "t", partition_by=("p",),
     )
-    wh.append(
-        spark.createDataFrame([(100, 0, "b", 9)],
-                              "id long, p int, val string, score long"),
-        "t",
-    )
-    batch = spark.createDataFrame(
-        [(0, 0, "NEW", 5), (200, 1, "NEW", 7)],
-        "id long, p int, val string, score long",
-    )
+    if widened_by == "append":
+        wh.append(
+            spark.createDataFrame([(100, 0, "b", 9)],
+                                  "id long, p int, val string, score long"),
+            "t",
+        )
+        rows = [(0, 0, "NEW", 5), (200, 1, "NEW", 7)]
+    else:
+        rows = [(3, 3, "NEW", 5), (200, 3, "NEW", 7)]
+    batch = spark.createDataFrame(rows, "id long, p int, val string, score long")
     wh.merge(batch, "t", keys=("p", "id"), partition_by=("p",))
     got = {r.id: (r.val, r.score) for r in wh.read("t").collect()}
-    assert got[100] == ("b", 9)       # widened member's row survives
-    assert got[200] == ("NEW", 7)     # inserted row
-    assert got[0] == ("NEW", 5)       # updated row
-    assert got[1] == ("a", 1)         # untouched rows aligned, present
-    assert len(got) == 22
+    want = {i: ("a", i) for i in range(20)}
+    if widened_by == "append":
+        want[100] = ("b", 9)  # widened append's row survives
+    want.update({k: (v, sc) for k, _p, v, sc in rows})
+    assert got == want
+    assert dict(wh.read("t").dtypes)["score"] == "bigint"
 
 
 # -- DML DELETE -------------------------------------------------------------

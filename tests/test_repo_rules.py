@@ -41,7 +41,7 @@ def _private_warehouse_calls(tree: ast.Module) -> list[str]:
 
 
 def test_no_private_warehouse_names_outside_sinks():
-    sample = "wh._manifest_members(t, v)\nself.wh._layout(t, v)\nwh.read(t)\n"
+    sample = "wh._commit(t, v)\nself.wh._layout(t, v)\nwh.read(t)\n"
     assert len(_private_warehouse_calls(ast.parse(sample))) == 2
     found = {
         str(p.relative_to(PACKAGE)): hits

@@ -233,40 +233,45 @@ def test_restore_rolls_back_pointer(spark, wh):
         wh.restore("t", ver1)
 
 
-def test_append_is_o_batch_via_manifest(spark, wh):
-    """Appends write ONLY the batch (prior files are referenced, never
-    rewritten): the appended version's own directory holds just the new
-    rows, data_files spans the member dirs, and the read unions to the
-    full table."""
+def test_append_is_o_batch_via_hardlinks(spark, wh):
+    """Appends write ONLY the batch: every file of the prior snapshot
+    carries into the appended version dir as a hardlink (same inode,
+    zero data bytes moved), the batch's files are new, and the read is
+    the full table."""
     import os
 
     wh.overwrite(_df(spark, [("TSLA", "t1", 1.0), ("AAPL", "t1", 2.0)]), "t")
-    base_files = set(wh.data_files("t"))
+    base = {os.path.basename(f): os.stat(f).st_ino for f in wh.data_files("t")}
     wh.append(_df(spark, [("NVDA", "t2", 3.0)]), "t")
     wh.append(_df(spark, [("MSFT", "t3", 4.0)]), "t")
 
-    files = set(wh.data_files("t"))
-    # the original snapshot's physical files are still the live ones
-    assert base_files <= files
-    # each appended version dir holds only its batch
-    v3_files = [f for f in files if f"{os.sep}v000003{os.sep}" in f]
-    assert v3_files and all(f not in base_files for f in v3_files)
+    files = wh.data_files("t")
+    # the live snapshot is one self-contained dir
+    assert all(f"{os.sep}v000003{os.sep}" in f for f in files)
+    inodes = {os.path.basename(f): os.stat(f).st_ino for f in files}
+    v2 = os.path.join(wh.table_path("t"), "v000002")
+    v2_inodes = {
+        n: os.stat(os.path.join(v2, n)).st_ino
+        for n in os.listdir(v2)
+        if n.endswith(".parquet")
+    }
+    # each prior snapshot's files are the same inodes, not copies
+    assert {n: v2_inodes[n] for n in base} == base
+    assert {n: inodes[n] for n in v2_inodes} == v2_inodes
+    # and each append added only its batch's files
+    assert base.keys() < v2_inodes.keys() < inodes.keys()
 
     got = {r.stock for r in wh.read("t").collect()}
     assert got == {"TSLA", "AAPL", "NVDA", "MSFT"}
-    # members: base + two appends, in order
-    assert wh._manifest_members("t", "v000003") == [
-        "v000001", "v000002", "v000003",
-    ]
 
 
 def test_append_empty_partitioned_batch_is_noop_read(spark, wh):
     """Appending an EMPTY batch to a partitioned table must leave the
     table readable: a partitioned write of an empty frame emits no data
-    files, and a file-less member dir in the manifest poisons every
-    later read with UNABLE_TO_INFER_SCHEMA (the lm_state empty-epoch
-    regression). The commit still advances the version pointer; the
-    manifest just never lists the empty member."""
+    files, so the new version holds only the carried-over files (a
+    file-less version dir would fail every read with
+    UNABLE_TO_INFER_SCHEMA, the lm_state empty-epoch regression). The
+    commit still advances the version pointer."""
     wh.overwrite(
         _df(spark, [("TSLA", "t1", 1.0)]), "t", partition_by=("stock",)
     )
@@ -280,11 +285,12 @@ def test_append_empty_partitioned_batch_is_noop_read(spark, wh):
 
 
 def test_has_partition_probes_every_live_member(spark, wh):
-    """has_partition sees a partition in any manifest member of the
-    live snapshot, at any level of the layout, and nothing else."""
+    """has_partition sees a partition any write of the live snapshot
+    landed (an earlier append's carries over), at any level of the
+    layout, and nothing else."""
     assert not wh.has_partition("t", "stock", "TSLA")  # no table yet
     wh.append(_df(spark, [("TSLA", "t1", 1.0)]), "t", partition_by=("stock",))
-    wh.append(_df(spark, [("AAPL", "t2", 2.0)]), "t")  # second member
+    wh.append(_df(spark, [("AAPL", "t2", 2.0)]), "t")  # second write
     assert wh.has_partition("t", "stock", "TSLA")
     assert wh.has_partition("t", "stock", "AAPL")
     assert not wh.has_partition("t", "stock", "MSFT")
@@ -298,30 +304,18 @@ def test_has_partition_probes_every_live_member(spark, wh):
     assert not wh.has_partition("t", "stock", "TSLA")
 
 
-def test_vacuum_keeps_referenced_manifest_members(spark, wh, monkeypatch):
-    """vacuum must not delete a version dir that a retained manifest
-    snapshot references — and must still drop truly dead versions."""
+def test_vacuum_leaves_kept_versions_intact(spark, wh, monkeypatch):
+    """vacuum drops every version but the kept ones, and a kept version
+    still reads whole although the files it carried over from a dropped
+    version lost their original names."""
     monkeypatch.setattr(warehouse, "VACUUM_KEEP_LAST", 1)
     wh.overwrite(_df(spark, [("A", "t1", 1.0)]), "t")       # v1
     wh.overwrite(_df(spark, [("B", "t1", 1.0)]), "t")       # v2 (dead)
     wh.overwrite(_df(spark, [("C", "t1", 1.0)]), "t")       # v3
-    wh.append(_df(spark, [("D", "t2", 2.0)]), "t")          # v4 -> [v3, v4]
+    wh.append(_df(spark, [("D", "t2", 2.0)]), "t")          # v4 = v3's files + batch
     wh.vacuum("t")
-    # v3 survives because v4's manifest references it; v1/v2 are gone
-    assert wh.versions("t") == ["v000003", "v000004"]
+    assert wh.versions("t") == ["v000004"]
     assert {r.stock for r in wh.read("t").collect()} == {"C", "D"}
-
-
-def test_append_manifest_limit_materializes(spark, wh, monkeypatch):
-    """Exceeding MANIFEST_LIMIT collapses the chain into a full
-    snapshot (same as compact), keeping read fan-in bounded."""
-    monkeypatch.setattr(warehouse, "MANIFEST_LIMIT", 2)
-    wh.overwrite(_df(spark, [("A", "t1", 1.0)]), "t")
-    wh.append(_df(spark, [("B", "t2", 2.0)]), "t")
-    # chain is [v1, v2] == limit; next append must materialize
-    wh.append(_df(spark, [("C", "t3", 3.0)]), "t")
-    assert wh._manifest_members("t", "v000003") == ["v000003"]
-    assert {r.stock for r in wh.read("t").collect()} == {"A", "B", "C"}
 
 
 def test_append_schema_drift_contract(spark, wh):
@@ -334,50 +328,37 @@ def test_append_schema_drift_contract(spark, wh):
     assert {r.stock for r in wh.read("t").collect()} == {"A"}
 
 
-def test_compact_collapses_manifest_chain(spark, wh):
+def test_compact_after_append_keeps_rows(spark, wh):
     wh.overwrite(_df(spark, [("A", "t1", 1.0)]), "t")
     wh.append(_df(spark, [("B", "t2", 2.0)]), "t")
-    assert len(wh._manifest_members("t", "v000002")) == 2
+    assert len(wh.data_files("t")) > 1
     wh.compact("t")
-    latest = wh.latest_version("t")
-    assert wh._manifest_members("t", latest) == [latest]
+    assert len(wh.data_files("t")) == 1
     assert {r.stock for r in wh.read("t").collect()} == {"A", "B"}
 
 
-def test_restore_refuses_missing_snapshot_and_member(spark, wh):
-    import os
-    import shutil
-
+def test_restore_refuses_missing_snapshot(spark, wh):
     wh.overwrite(_df(spark, [("A", "t1", 1.0)]), "t")       # v1
-    wh.append(_df(spark, [("B", "t2", 2.0)]), "t")          # v2 -> [v1, v2]
+    wh.append(_df(spark, [("B", "t2", 2.0)]), "t")          # v2
     wh.overwrite(_df(spark, [("C", "t1", 1.0)]), "t")       # v3
     wh.overwrite(_df(spark, [("D", "t1", 1.0)]), "t")       # v4
     wh.vacuum("t")                                          # keeps v3, v4
-    # v2's own dir is gone -> the plain missing-snapshot refusal
     with pytest.raises(FileNotFoundError, match="snapshot missing"):
         wh.restore("t", "v000002")
-
-    # member branch: API-driven vacuum never strands a retained
-    # manifest, so simulate external dir loss (object-store lifecycle
-    # rule, manual rm) on a fresh table and pin the LOUD member error
-    wh.overwrite(_df(spark, [("A", "t1", 1.0)]), "u")       # v1
-    wh.append(_df(spark, [("B", "t2", 2.0)]), "u")          # v2 -> [v1, v2]
-    shutil.rmtree(os.path.join(wh.table_path("u"), "v000001"))
-    with pytest.raises(FileNotFoundError, match="member"):
-        wh.restore("u", "v000002")
+    assert {r.stock for r in wh.read("t").collect()} == {"D"}
 
 
-def test_manifest_append_preserves_hive_layout(spark, wh, monkeypatch):
+def test_append_preserves_hive_layout(spark, wh):
     """Partitioned tables: appends inherit the recorded hive layout —
-    batch members land partitioned even when the caller omits
-    partition_by, read() keeps the partition column through the member
-    union, and the limit-triggered materialization keeps the table
+    the batch lands partitioned even when the caller omits
+    partition_by, read() keeps the partition column, and a
+    type-widening append (which rewrites the table) keeps the table
     partitioned instead of silently flattening it."""
     import os
 
     # inference-neutral partition values: hive partition READS apply
     # Spark's standard partitionColumnTypeInference (a date-like string
-    # comes back as DATE) — generic Spark semantics, not manifest
+    # comes back as DATE) — generic Spark semantics, not warehouse
     # machinery, so the layout test stays out of its way
     df1 = spark.createDataFrame(
         [("A", "d1", 1.0), ("B", "d2", 2.0)],
@@ -391,25 +372,26 @@ def test_manifest_append_preserves_hive_layout(spark, wh, monkeypatch):
         ),
         "p",
     )
-    # the appended member dir is itself hive-partitioned
+    # the appended version dir is itself hive-partitioned, old and new
     v2 = os.path.join(wh.table_path("p"), "v000002")
-    assert any(d.startswith("dt=") for d in os.listdir(v2))
+    assert sorted(d for d in os.listdir(v2) if d.startswith("dt=")) == [
+        "dt=d1", "dt=d2", "dt=d3",
+    ]
     got = {(r.stock, r.dt) for r in wh.read("p").collect()}
     assert got == {("A", "d1"), ("B", "d2"), ("C", "d3")}
 
-    # limit-triggered materialization keeps the layout
-    monkeypatch.setattr(warehouse, "MANIFEST_LIMIT", 2)
+    # a float batch into the double column rewrites the table, same layout
     wh.append(
         spark.createDataFrame(
-            [("D", "d4", 4.0)], "stock string, dt string, close double"
+            [("D", "d4", 4.0)], "stock string, dt string, close float"
         ),
         "p",
     )
     latest = wh.latest_version("p")
-    assert wh._manifest_members("p", latest) == [latest]  # materialized
     vdir = os.path.join(wh.table_path("p"), latest)
     assert any(d.startswith("dt=") for d in os.listdir(vdir))
     assert wh._layout("p", latest) == ("dt",)
+    assert dict(wh.read("p").dtypes)["close"] == "double"
     assert {r.stock for r in wh.read("p").collect()} == {"A", "B", "C", "D"}
 
 
@@ -452,9 +434,8 @@ def test_append_and_merge_refuse_a_second_layout(spark, wh):
 def test_append_after_restore_does_not_clobber(spark, wh):
     """Version allocation after restore(): the next write must get a FRESH
     version number (max on-disk + 1), not pointer+1 — pointer-based
-    allocation would rewrite v000002's directory, which v000003's
-    manifest references as an immutable member, corrupting the pinned
-    v000003 read (and any later restore to it)."""
+    allocation would rewrite v000002's directory, a retained snapshot
+    that a pinned read or a later restore expects unchanged."""
     wh.append(_df(spark, [("A", "t", 1.0)]), "t")
     wh.append(_df(spark, [("B", "t", 2.0)]), "t")
     wh.append(_df(spark, [("C", "t", 3.0)]), "t")
@@ -463,7 +444,7 @@ def test_append_after_restore_does_not_clobber(spark, wh):
     wh.restore("t", v1)
     wh.append(_df(spark, [("Z", "t", 99.0)]), "t")
 
-    # v000003 (a manifest over v1..v3) is untouched by the post-restore write
+    # v000003 (rows of v1..v3) is untouched by the post-restore write
     assert {r.stock for r in wh.read("t", v3).collect()} == {"A", "B", "C"}
     # the live table is the restored v1 plus the new batch, nothing else
     assert {r.stock for r in wh.read("t").collect()} == {"A", "Z"}
@@ -475,8 +456,7 @@ def test_append_after_restore_does_not_clobber(spark, wh):
 def test_merge_compact_overwrite_inherit_layout(spark, wh):
     """merge()/append()/compact()/overwrite() default partition_by=None
     inherits the live snapshot's hive layout — upserting, appending or
-    collapsing a manifest chain must not silently flatten a partitioned
-    table. An explicit () on overwrite still flattens intentionally."""
+    compacting must not silently flatten a partitioned table. An explicit () on overwrite still flattens intentionally."""
     import os
 
     sch = "stock string, dt string, close double"
